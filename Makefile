@@ -7,6 +7,8 @@
 #   make oracles         # just the oracle sweep
 #   make test            # just pytest
 #   make bench           # just the headline bench JSON line
+#   make selftest        # perfbench self-test (not part of gate)
+#   make perfbench       # one untraced run per benchmark workload (not part of gate)
 
 SF ?= sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
@@ -18,7 +20,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench
+.PHONY: gate oracles test bench selftest perfbench
 
 oracles:
 	@mkdir -p $(OUT)
@@ -34,6 +36,17 @@ bench:
 	@mkdir -p $(OUT)
 	SPARK_GRAFT_SF_DIR=$(BENCH_SF) python bench.py 2>$(OUT)/bench.err | tee $(OUT)/bench.json
 	@python -c "import json; json.load(open('$(OUT)/bench.json'))"
+
+selftest:
+	python3 perfbench/selftest.py
+
+# fails unless each workload's last output line reports "correct": true
+perfbench:
+	@mkdir -p $(OUT)
+	for w in docs_build transcripts_build; do \
+	  python3 perfbench/run.py --workload $$w --seed 1 --seconds 5 --trace 0 | tee $(OUT)/perfbench_$$w.log; \
+	  tail -1 $(OUT)/perfbench_$$w.log | grep -q '"correct": true'; \
+	done
 
 gate: oracles test bench
 	@echo "gate complete: $(OUT)/oracles_$(SF).log $(OUT)/pytest.log $(OUT)/bench.json"

@@ -4,11 +4,13 @@ The reference's heart is one ``mapPartitions → map → flatMap`` over a
 per-JVM CoreNLP pipeline (ExtractTriples.scala:67-134). We split the
 concern in two:
 
-1. :func:`extract_triples_native` — a **pure DataFrame** annotator for
-   token-level gazetteer extraction: tokenize-with-offsets, broadcast
-   gazetteer join, windowed co-occurrence relations. 100% Catalyst
-   visible (pushdown, codegen, AQE); this is the 100 TB scale path and
-   the oracle-checkable path.
+1. :func:`extract_triples_native` — token-level gazetteer extraction:
+   an Arrow-batched ``mapInPandas`` mention scan (tokenize with offsets
+   and gazetteer membership inside the worker, no token shuffle), then
+   windowed co-occurrence relations as a DataFrame self-join over the
+   mention frame. :func:`extract_bag_fused` emits mentions, relations and
+   links from one Arrow stage instead; both are oracle-checked against
+   DuckDB.
 
 2. :func:`extract_triples_pattern` — an Arrow-batched ``mapInPandas``
    annotator reproducing the reference's CoreNLP *semantics* on its
@@ -40,19 +42,15 @@ from __future__ import annotations
 
 import re
 from collections.abc import Iterator
-from typing import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dstlr_spark.functions.text import (
     PUNCT_RE,
-    lemma_key,
-    lemma_token,
     lemma_token_py,
     max_sentence_tokens,
-    stable_mention_id,
 )
 from dstlr_spark.schemas import TRIPLE_DDL
 
@@ -67,37 +65,8 @@ def apply_sentence_guard(documents: DataFrame, threshold: int = DEFAULT_SENT_THR
 
 
 # --------------------------------------------------------------------------
-# Native mode: token gazetteer, pure DataFrame
+# Native mode: token gazetteer, Arrow mention scan
 # --------------------------------------------------------------------------
-
-def tokenize_with_offsets(documents: DataFrame) -> DataFrame:
-    """Explode ``contents`` into (doc_id, pos, token, begin, end).
-
-    Pure-DataFrame variant: ``begin`` via a per-doc running-sum window.
-    Correct and Catalyst-visible, but the window shuffles the ENTIRE
-    token stream (~20x the document bytes) — measured as the largest
-    stage of the pipeline. Kept for parity testing; the scale path is
-    the Arrow tokenizer inside :func:`extract_mentions_native`.
-    """
-    from pyspark.sql import Window
-
-    toks = documents.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("contents"), " ")).alias("pos", "token"),
-    )
-    w = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        toks.withColumn(
-            "begin",
-            F.coalesce(F.sum(F.length("token") + 1).over(w), F.lit(0)).cast("int"),
-        )
-        .withColumn("end", (F.col("begin") + F.length("token")).cast("int"))
-    )
-
 
 # translate-table twin of PUNCT_RE (same char class, C-speed strip)
 _PUNCT_TABLE = str.maketrans("", "", ".?,:;'\"!")
@@ -229,77 +198,16 @@ _MENTION_DDL = (
 )
 
 
-def _mention_scan_arrow_batches(gaz):
-    """``mapInArrow`` wrapper of the mention scanner: pyarrow
-    RecordBatches in/out, sharing the exact scan body with the
-    mapInPandas path (parity-pinned) — the zero-copy variant for callers
-    whose downstream is Arrow-native anyway."""
-    import pyarrow as pa
-
-    inner = _mention_scan_batches(gaz)
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.string()), ("mention_id", pa.string()),
-            ("entity_class", pa.string()), ("span", pa.string()),
-            ("begin", pa.int32()), ("end", pa.int32()),
-            ("pos", pa.int32()), ("key", pa.string()),
-        ]
-    )
-
-    def scan(batches):
-        def as_pandas():
-            for b in batches:
-                yield b.to_pandas()
-
-        for out in inner(as_pandas()):
-            yield pa.RecordBatch.from_pandas(
-                out, schema=out_schema, preserve_index=False
-            )
-
-    return scan
-
-
-def extract_mentions_native(
-    documents: DataFrame, gazetteer: DataFrame, impl: str = "arrow"
-) -> DataFrame:
+def extract_mentions_native(documents: DataFrame, gazetteer: DataFrame) -> DataFrame:
     """Token-level mention detection (X3).
 
     Returns (doc_id, mention_id, entity_class, span, begin, end, pos, key).
 
-    ``impl="arrow"`` (default, scale path): Arrow-batched mapInPandas
-    scanner — tokenize + offsets + gazetteer membership entirely inside
-    the worker, emitting only mention rows. No shuffle.
-
-    ``impl="arrow_stream"``: the same scanner through ``mapInArrow``
-    (pyarrow RecordBatch in/out) — §2.11's fourth vectorized-UDF API,
-    parity-pinned against the default.
-
-    ``impl="sql"`` (parity path): posexplode + window offsets +
-    broadcast gazetteer join — pure Catalyst, used to cross-check the
-    Arrow scanner (both are oracle-checked against DuckDB).
+    Arrow-batched mapInPandas scanner: tokenize + offsets + gazetteer
+    membership entirely inside the worker, emitting only mention rows.
+    No shuffle. The DuckDB oracles check its output independently.
     """
-    if impl == "sql":
-        toks = tokenize_with_offsets(documents).withColumn(
-            "key", lemma_token(F.regexp_replace(F.col("token"), PUNCT_RE, ""))
-        )
-        return (
-            toks.join(F.broadcast(gazetteer), toks["key"] == gazetteer["term"], "inner")
-            .select(
-                "doc_id",
-                stable_mention_id("doc_id", "key").alias("mention_id"),
-                "entity_class",
-                F.col("key").alias("span"),
-                "begin",
-                "end",
-                "pos",
-                "key",
-            )
-        )
     gaz = {r["term"]: r["entity_class"] for r in gazetteer.collect()}
-    if impl == "arrow_stream":
-        return documents.select("doc_id", "contents").mapInArrow(
-            _mention_scan_arrow_batches(_broadcast(documents, gaz)), _MENTION_DDL
-        )
     return documents.select("doc_id", "contents").mapInPandas(
         _mention_scan_batches(_broadcast(documents, gaz)), _MENTION_DDL
     )
@@ -492,58 +400,15 @@ def best_alias_entity(alias_dict: DataFrame) -> dict[str, str]:
     return {a: e for a, (_, e) in best.items()}
 
 
-def _fused_bag_arrow_batches(gaz, best_entity, window: int):
-    """``mapInArrow`` wrapper of the fused bag annotator: pyarrow
-    RecordBatches in/out, sharing the exact scan body with the
-    mapInPandas path (parity-pinned) — the API-symmetric twin of
-    :func:`_mention_scan_arrow_batches` for the full-bag path."""
-    import pyarrow as pa
-
-    inner = _fused_bag_batches(gaz, best_entity, window)
-    out_schema = pa.schema(
-        [
-            ("doc", pa.string()), ("subjectType", pa.string()),
-            ("subjectValue", pa.string()), ("relation", pa.string()),
-            ("objectType", pa.string()), ("objectValue", pa.string()),
-            (
-                "meta",
-                pa.struct(
-                    [
-                        ("entity_class", pa.string()), ("span", pa.string()),
-                        ("begin", pa.int32()), ("end", pa.int32()),
-                        ("normalized", pa.string()), ("confidence", pa.float64()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def scan(batches):
-        def as_pandas():
-            for b in batches:
-                yield b.to_pandas()
-
-        for out in inner(as_pandas()):
-            yield pa.RecordBatch.from_pandas(
-                out, schema=out_schema, preserve_index=False
-            )
-
-    return scan
-
-
 def extract_bag_fused(
     documents: DataFrame,
     gazetteer: DataFrame,
     alias_dict: DataFrame,
     cooccur_window: int = 8,
     sent_threshold: int = DEFAULT_SENT_THRESHOLD,
-    impl: str = "pandas",
 ) -> DataFrame:
-    """documents → full triple bag in one Arrow-batched stage (no
-    shuffles). ``impl="pandas"`` (default) runs ``mapInPandas``;
-    ``impl="arrow"`` runs the same scan body through ``mapInArrow``
-    (zero-copy RecordBatches for Arrow-native downstreams) — parity
-    between the two is test-pinned like the mention scanner's.
+    """documents → full triple bag in one Arrow-batched ``mapInPandas``
+    stage (no shuffles).
 
     Semantically identical to NativeKG's modular bag minus fact rows —
     parity is pinned by tests and the DuckDB oracle suite."""
@@ -551,12 +416,7 @@ def extract_bag_fused(
     gaz = {r["term"]: r["entity_class"] for r in gazetteer.collect()}
     best = best_alias_entity(alias_dict)
     gaz_b, best_b = _broadcast(documents, gaz), _broadcast(documents, best)
-    cols = docs.select("doc_id", "contents")
-    if impl == "arrow":
-        return cols.mapInArrow(
-            _fused_bag_arrow_batches(gaz_b, best_b, cooccur_window), TRIPLE_DDL
-        )
-    return cols.mapInPandas(
+    return docs.select("doc_id", "contents").mapInPandas(
         _fused_bag_batches(gaz_b, best_b, cooccur_window), TRIPLE_DDL
     )
 

@@ -3154,7 +3154,7 @@ def decode_features_np(media: DataFrame) -> DataFrame:
     Never materializes the pixel array through Arrow: at media scale
     the decoded plane is 12× the file bytes as an ``array<int>`` row,
     and shipping it out of the stage (not the decode) is the
-    bottleneck — `scripts/probe_round5.py` measures the gap. The
+    bottleneck — BENCH/BASELINE.md records the gap. The
     value-gated twin keeps emitting pixels so the DuckDB oracle can
     check them; this operator is the shape a curation pipeline runs.
     Same per-doc failure isolation (X2)."""

@@ -13,6 +13,8 @@ ExtractTriples.scala:137 → EnrichTriples.scala:46).
 
 from __future__ import annotations
 
+from functools import cached_property
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -25,8 +27,8 @@ from dstlr_spark.operators.extract import (
     relation_triples,
 )
 from dstlr_spark.functions.text import utf8_truncate_1024_gated
-from dstlr_spark.operators.graph import materialize_graph
 from dstlr_spark.operators.linking import resolve_aliases
+from dstlr_spark.plans.partitioning import fan_out
 
 _NULL_META = (
     "struct<entity_class:string,span:string,begin:int,end:int,"
@@ -46,44 +48,44 @@ class NativeKG:
         cooccur_window: int = 8,
         sent_threshold: int = DEFAULT_SENT_THRESHOLD,
         persist: bool = True,
-        n_partitions: int | None = None,
     ) -> None:
-        spark = documents.sparkSession
-        if n_partitions is None:
-            n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # Spread the CPU-heavy annotator evenly (the reference's
         # repartition-before-extraction, ExtractTriples.scala:63): the
         # Arrow scanner inherits input partitioning, and a parquet scan
-        # of few files would otherwise starve most cores. Conditional:
-        # callers that already fanned the corpus out (queries/doc_kg
-        # _documents) must not pay a second corpus exchange — the
-        # sentence-guard filter sits between the two Repartition nodes,
-        # so CollapseRepartition cannot merge them.
-        if documents._jdf.queryExecution().executedPlan().execute().getNumPartitions() < n_partitions:
-            documents = documents.repartition(n_partitions)
-        docs = apply_sentence_guard(documents, sent_threshold)
-        self.mentions = extract_mentions_native(docs, gazetteer)
-        if persist:
-            # Hash-partition the mention frame by doc_id BEFORE caching:
-            # the relation self-join then reads both sides co-partitioned
-            # (zero exchanges — guide §2.4), the chain's doc-keyed
-            # consumers inherit a skew-free spread, and the production
-            # analog is a doc_id-bucketed Iceberg stage table. Measured
-            # at sf1.0: relation_edges derivation 2.4 s -> 1.1-1.7 s and
-            # the chain's run-to-run spread tightened.
-            self.mentions = self.mentions.repartition("doc_id")
-            # DISK_ONLY, deliberately: building Spark's in-memory COLUMNAR
-            # cache was measured to anti-scale with task concurrency (the
-            # per-thread ColumnBuilder work serializes), while serialized
-            # disk blocks build at full parallelism and re-read from OS
-            # page cache at memory speed. On a real cluster this slot is
-            # an Iceberg stage table anyway.
-            self.mentions = self.mentions.persist(StorageLevel.DISK_ONLY)
+        # of few files would otherwise starve most cores. fan_out reads
+        # the planned partitioning without running a job and adds no
+        # exchange to a corpus its caller already spread.
+        documents = fan_out(documents)
+        self._docs = apply_sentence_guard(documents, sent_threshold)
+        self._gazetteer = gazetteer
         self._persist = persist
         self._filled = False
         self.aliases = aliases
         self.fact_triples = fact_triples
         self.cooccur_window = cooccur_window
+
+    @cached_property
+    def mentions(self) -> DataFrame:
+        """The mention frame, planned on first use: the scanner collects
+        the gazetteer into a broadcast dictionary (one Spark job), so
+        constructing a NativeKG stays pure plan building."""
+        m = extract_mentions_native(self._docs, self._gazetteer)
+        if not self._persist:
+            return m
+        # Hash-partition the mention frame by doc_id BEFORE caching:
+        # the relation self-join then reads both sides co-partitioned
+        # (zero exchanges — guide §2.4), the chain's doc-keyed
+        # consumers inherit a skew-free spread, and the production
+        # analog is a doc_id-bucketed Iceberg stage table. Measured
+        # at sf1.0: relation_edges derivation 2.4 s -> 1.1-1.7 s and
+        # the chain's run-to-run spread tightened.
+        # DISK_ONLY, deliberately: building Spark's in-memory COLUMNAR
+        # cache was measured to anti-scale with task concurrency (the
+        # per-thread ColumnBuilder work serializes), while serialized
+        # disk blocks build at full parallelism and re-read from OS
+        # page cache at memory speed. On a real cluster this slot is
+        # an Iceberg stage table anyway.
+        return m.repartition("doc_id").persist(StorageLevel.DISK_ONLY)
 
     def _ensure_persisted(self) -> None:
         """Re-establish the stage-table cache if a caller unpersisted it.
@@ -228,10 +230,6 @@ class NativeKG:
             "fact_edges": fact_edges,
             "entity_nodes": entity_nodes,
         }
-
-    def graph_via_bag(self) -> dict[str, DataFrame]:
-        """Reference-shape path (bag → split) — kept for parity testing."""
-        return materialize_graph(self.bag())
 
     def unpersist(self) -> None:
         self.mentions.unpersist()

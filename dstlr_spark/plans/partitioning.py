@@ -32,10 +32,19 @@ def fan_out(df: DataFrame, multiple: int = 1) -> DataFrame:
     partitions, unless it already is."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * multiple
-    # JVM-side partition probe: df.rdd.getNumPartitions() round-trips
-    # the plan through the Python RDD conversion (~0.1-1 s per fresh
-    # DataFrame); the executedPlan probe is a few ms and runs no job
-    n = df._jdf.queryExecution().executedPlan().execute().getNumPartitions()
+    # Job-free partition probe: the planned physical plan's output
+    # partitioning is fixed by its topmost exchange, so a frame that was
+    # already spread answers from the plan alone (executing its
+    # AQE-wrapped plan would run the shuffle stage just to read the
+    # count). The split count is the fallback only when the partitioning
+    # is unknown; for the projected scans fan_out is given, that means
+    # an exchange-free plan, which AQE does not wrap, so no job runs.
+    qe = df._jdf.queryExecution()
+    partitioning = qe.sparkPlan().outputPartitioning()
+    if partitioning.getClass().getSimpleName() == "UnknownPartitioning":
+        n = qe.executedPlan().execute().getNumPartitions()
+    else:
+        n = partitioning.numPartitions()
     if n >= target:
         return df
     return df.repartition(target)

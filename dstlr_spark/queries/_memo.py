@@ -2,8 +2,8 @@
 
 Expensive derived frames shared by several driver-contract queries
 (the dedup shingle posting list, the LSH band posting list, quantized
-embeddings) are materialized ONCE per (application, sf_dir) and reused
-by every consumer — the in-process analog of an Iceberg stage table
+embeddings, the document KG's ``NativeKG``) are materialized ONCE per
+(application, sf_dir) and reused by every consumer — the in-process analog of an Iceberg stage table
 that all downstream jobs read. Staging uses ``localCheckpoint`` so
 consumer plans read an ``ExistingRDD`` (no re-derivation, no lineage
 growth), which the plan tests in tests/test_plans.py pin.
@@ -17,21 +17,25 @@ new one (one live context per process).
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Any, Callable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-_CACHE: dict[tuple, DataFrame] = {}
+T = TypeVar("T")
+
+_CACHE: dict[tuple, Any] = {}
 
 
 def staged(
     spark: SparkSession,
     key: tuple,
-    build: Callable[[], DataFrame],
+    build: Callable[[], T],
     checkpoint: bool = True,
-) -> DataFrame:
-    """Return the memoized staged frame for ``key``, building (and
-    ``localCheckpoint``-ing, unless ``checkpoint=False``) on first use."""
+) -> T:
+    """Return the memoized staged value for ``key``, building (and
+    ``localCheckpoint``-ing, unless ``checkpoint=False``) on first use.
+    ``build`` returns a DataFrame, or any object holding session-bound
+    frames when ``checkpoint=False``."""
     app_id = spark.sparkContext.applicationId
     full = (app_id, *key)
     df = _CACHE.get(full)

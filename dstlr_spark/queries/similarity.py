@@ -660,12 +660,14 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     e = _emb(spark, sf_dir)
-    rows = e.select("vec_id", "q", "norm").collect()
-    if len(rows) > NEARDUP_EXACT_MAX_VECS:
+    # bound check BEFORE the collect: an oversize corpus must fail here,
+    # not after pulling every vector onto the driver
+    if e.limit(NEARDUP_EXACT_MAX_VECS + 1).count() > NEARDUP_EXACT_MAX_VECS:
         raise ValueError(
             f"exact near-dup mode is bounded at {NEARDUP_EXACT_MAX_VECS} "
             "vectors; use q_embedding_neardup_prod (LSH) at scale"
         )
+    rows = e.select("vec_id", "q", "norm").collect()
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     mat = np.array([r["q"] for r in rows], dtype=np.float64)
     sq = np.sqrt(np.array([r["norm"] for r in rows], dtype=np.float64))

@@ -80,7 +80,7 @@ def turn_triples_stream(
     expressions in one codegen stage, then an explode; no watermark,
     no state store, no shuffle. Gated via ``stream_turn_triples``
     (`queries/doc_kg.py::q_stream_turn_triples`); throughput/scaling
-    measured by `scripts/probe_streaming.py`."""
+    figures in BENCH/BASELINE.md."""
     from dstlr_spark.functions.text import PUNCT_RE, lemma_token
 
     gmap = F.create_map(

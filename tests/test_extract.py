@@ -221,37 +221,21 @@ def test_udf_factories_accept_broadcast_handles(spark):
     assert (pat["relation"] == "LINKS_TO").any()
 
 
-def test_mapinarrow_scanner_parity(spark):
-    """§2.11: the mapInArrow variant of the mention scanner is
-    row-identical to the mapInPandas default."""
-    from dstlr_spark.operators.extract import extract_mentions_native
-    from dstlr_spark.queries.doc_kg import _documents, _gazetteer
-
-    docs = _documents(spark, "/root/testdata/sf0.001").limit(100)
-    gaz = _gazetteer(spark)
-    a = sorted(map(tuple, extract_mentions_native(docs, gaz).collect()))
-    b = sorted(
-        map(tuple, extract_mentions_native(docs, gaz, impl="arrow_stream").collect())
-    )
-    assert a == b and len(a) > 0
-
-
-def test_mapinarrow_fused_bag_parity(spark):
-    """§2.11: the mapInArrow variant of the FUSED full-bag annotator is
-    row-identical to the mapInPandas default (API symmetry with the
-    mention scanner's arrow_stream path)."""
-    from dstlr_spark.operators.assembly import assemble_documents
+def test_fused_bag_matches_native_kg_bag(spark):
+    """The two scan bodies left after the variant cleanup — the fused
+    per-document bag and NativeKG's vectorized mention scan plus its
+    DataFrame relation/link operators — must emit the identical triple
+    bag, meta struct included."""
     from dstlr_spark.operators.extract import extract_bag_fused
-    from dstlr_spark.queries.doc_kg import COOCCUR_WINDOW, _aliases, _gazetteer
-    from dstlr_spark.sources.transcripts import derive_transcripts
-
-    docs = assemble_documents(
-        derive_transcripts(
-            spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .selectExpr("CAST(doc_id AS STRING) AS doc_id", "text")
-            .limit(100)
-        )
+    from dstlr_spark.plans.native_kg import NativeKG
+    from dstlr_spark.queries.doc_kg import (
+        COOCCUR_WINDOW,
+        _aliases,
+        _documents,
+        _gazetteer,
     )
+
+    docs = _documents(spark, "/root/testdata/sf0.001")
     gaz, ali = _gazetteer(spark), _aliases(spark)
 
     def rows(df):
@@ -262,11 +246,15 @@ def test_mapinarrow_fused_bag_parity(spark):
             for r in df.collect()
         )
 
-    a = rows(extract_bag_fused(docs, gaz, ali, COOCCUR_WINDOW, 10_000))
-    b = rows(
-        extract_bag_fused(docs, gaz, ali, COOCCUR_WINDOW, 10_000, impl="arrow")
+    fused = rows(extract_bag_fused(docs, gaz, ali, COOCCUR_WINDOW, 10_000))
+    kg = NativeKG(
+        docs, gaz, ali, cooccur_window=COOCCUR_WINDOW, sent_threshold=10_000
     )
-    assert a == b and len(a) > 0
+    try:
+        native = rows(kg.bag())
+    finally:
+        kg.unpersist()
+    assert fused == native and len(fused) > 0
 
 
 def test_fused_extraction_partitioning_invariance(spark):

@@ -8,12 +8,28 @@ extraction stage.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 
 def _plan(spark, df, mode="formatted") -> str:
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return df._jdf.queryExecution().explainString(jmode)
+
+
+def _exchange_nodes(plan: str) -> list[str]:
+    """Exchange-family operators of a formatted plan, one entry per
+    node, as ``"<node> <Arguments>"`` — e.g. ``"Exchange
+    RoundRobinPartitioning(4), REPARTITION_BY_NUM, [plan_id=7]"``."""
+    nodes = []
+    for section in re.split(r"\n\(\d+\) ", plan)[1:]:
+        head, _, body = section.partition("\n")
+        name = head.split(" ")[0]
+        if name in ("Exchange", "BroadcastExchange", "ReusedExchange"):
+            args = re.search(r"^Arguments: (.*)$", body, re.M)
+            nodes.append(f"{name} {args.group(1) if args else ''}".rstrip())
+    return nodes
 
 
 def test_filter_pushdown_reaches_parquet(spark):
@@ -64,13 +80,45 @@ def test_fused_extraction_has_no_exchange(spark):
     )
     plan = _plan(spark, bag)
     assert "hashpartitioning" not in plan and "rangepartitioning" not in plan
-    assert plan.count("Exchange") <= plan.count("RoundRobinPartitioning") * 2
+    # exact node types: one round-robin spread of the raw documents and
+    # no other exchange of any kind (shuffle, broadcast or reused)
+    nodes = _exchange_nodes(plan)
+    assert len(nodes) == 1, nodes
+    assert nodes[0].startswith("Exchange RoundRobinPartitioning"), nodes
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
     # the annotator output itself is never exchanged: the Python stage
     # must appear above the (only) exchange in the operator tree
     python_pos = max(plan.find("MapInPandas"), plan.find("ArrowEvalPython"))
     first_exchange = plan.find("Exchange")
     assert first_exchange == -1 or python_pos < first_exchange
+
+
+def test_fan_out_probe_runs_no_job(spark):
+    """fan_out reads the partition count from the planned physical plan:
+    a frame it already spread comes back unchanged and no Spark job
+    starts (executing the AQE plan just to count its splits ran two).
+    NativeKG, which probes through fan_out, is built job-free as well."""
+    from dstlr_spark.plans.native_kg import NativeKG
+    from dstlr_spark.plans.partitioning import fan_out
+    from dstlr_spark.queries.doc_kg import _aliases, _gazetteer
+
+    sc = spark.sparkContext
+    scan = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.col("text").alias("contents"),
+    )
+    a = fan_out(scan)
+    assert a is not scan  # single-row-group input: fan_out spread it
+    group = "test_fan_out_probe_runs_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        before = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert fan_out(a) is a
+        NativeKG(a, _gazetteer(spark), _aliases(spark))
+        after = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert after == before == 0
 
 
 def test_aqe_enabled_on_aggregates(spark):

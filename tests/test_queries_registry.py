@@ -43,21 +43,22 @@ def test_entry_smoke(spark):
 
 
 def test_kg_cache_keyed_by_application_and_evicts_stale(spark):
-    """_KG_CACHE must key on applicationId (id(spark) is reusable after
-    GC) and drop entries of other (stopped) applications on miss."""
-    from dstlr_spark.queries import doc_kg
+    """The document KG lives in the shared session memo (_memo._CACHE):
+    keyed on applicationId (id(spark) is reusable after GC), with
+    entries of other (stopped) applications dropped on miss."""
+    from dstlr_spark.queries import _memo, doc_kg
 
     sf = "/root/testdata/sf0.001"
     kg1 = doc_kg._kg(spark, sf)
     assert doc_kg._kg(spark, sf) is kg1  # memoized
     app = spark.sparkContext.applicationId
-    assert (app, sf) in doc_kg._KG_CACHE
+    assert _memo._CACHE[(app, "kg", sf)] is kg1
     # plant a stale entry from a "previous" application: a cache miss
     # for the live app must evict it
-    doc_kg._KG_CACHE[("dead-app", sf)] = kg1
+    _memo._CACHE[("dead-app", "kg", sf)] = kg1
     doc_kg._kg(spark, sf + "/../sf0.001")  # different key string, same app
-    assert ("dead-app", sf) not in doc_kg._KG_CACHE
-    assert (app, sf) in doc_kg._KG_CACHE
+    assert ("dead-app", "kg", sf) not in _memo._CACHE
+    assert (app, "kg", sf) in _memo._CACHE
 
 
 def test_memo_staged_memoizes_and_evicts(spark):

@@ -40,10 +40,17 @@ def _load(sf_dir: str):
 def test_exact_mode_refuses_oversize_corpus(spark, monkeypatch):
     """The exact GEMM mode broadcasts the full quantized matrix; above
     its guard it must refuse LOUDLY and point at the LSH operating
-    point, never silently attempt an over-broadcast."""
+    point, never silently attempt an over-broadcast — and it must refuse
+    BEFORE any collect pulls the oversize corpus onto the driver."""
     import dstlr_spark.queries.similarity as sim
 
+    def no_collect(self):
+        raise AssertionError("collect() reached before the bound check")
+
     monkeypatch.setattr(sim, "NEARDUP_EXACT_MAX_VECS", 10)
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is
+    # only its interface)
+    monkeypatch.setattr(type(spark.range(0)), "collect", no_collect)
     with pytest.raises(ValueError, match="neardup_prod"):
         sim.q_embedding_neardup(spark, "/root/testdata/sf0.001")
 
