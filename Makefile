@@ -9,6 +9,7 @@
 #   make bench           # just the headline bench JSON line
 #   make selftest        # perfbench self-test (not part of gate)
 #   make perfbench       # one untraced run per benchmark workload (not part of gate)
+#   make graph-parity    # graph-builder parity, plan and span-cap tests (not part of gate)
 
 SF ?= sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
@@ -20,7 +21,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench selftest perfbench
+.PHONY: gate oracles test bench selftest perfbench graph-parity
 
 oracles:
 	@mkdir -p $(OUT)
@@ -47,6 +48,10 @@ perfbench:
 	  python3 perfbench/run.py --workload $$w --seed 1 --seconds 5 --trace 0 | tee $(OUT)/perfbench_$$w.log; \
 	  tail -1 $(OUT)/perfbench_$$w.log | grep -q '"correct": true'; \
 	done
+
+# quick pre-check for a change to either graph builder
+graph-parity:
+	python -m pytest -q tests/test_graph_sql.py tests/test_plans.py tests/test_fuzz_text.py
 
 gate: oracles test bench
 	@echo "gate complete: $(OUT)/oracles_$(SF).log $(OUT)/pytest.log $(OUT)/bench.json"

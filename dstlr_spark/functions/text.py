@@ -162,15 +162,6 @@ def utf8_truncate_1024(s: pd.Series) -> pd.Series:
     )
 
 
-def utf8_truncate_1024_gated(col: Column | str) -> Column:
-    """C9 with a JVM fast path: a string of ≤256 characters can never
-    exceed 1024 UTF-8 bytes (≤4 bytes per code point), so >99.99% of
-    spans skip the Arrow round-trip entirely and stay inside whole-stage
-    codegen; only rare long spans pay the pandas UDF."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.length(c) <= 256, c).otherwise(utf8_truncate_1024(c))
-
-
 def max_sentence_tokens(contents: Column | str) -> Column:
     """Longest-sentence token count for the F3 cost guard
     (ExtractTriples.scala:66): sentences split on terminal punctuation +

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dstlr_spark.functions.text import reformat_sparql_date
+from dstlr_spark.schemas import META_SCHEMA
 
 ROUTED_PROPERTIES = ("P159", "P569", "P570")
 DATE_PROPERTIES = ("P569", "P570")
@@ -79,10 +80,5 @@ def enrich_triples(
         F.col("relation").alias("relation"),
         F.lit("Fact").alias("objectType"),
         value.alias("objectValue"),
-        F.lit(None)
-        .cast(
-            "struct<entity_class:string,span:string,begin:int,end:int,"
-            "normalized:string,confidence:double>"
-        )
-        .alias("meta"),
+        F.lit(None).cast(META_SCHEMA).alias("meta"),
     )

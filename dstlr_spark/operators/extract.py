@@ -52,7 +52,7 @@ from dstlr_spark.functions.text import (
     lemma_token_py,
     max_sentence_tokens,
 )
-from dstlr_spark.schemas import TRIPLE_DDL
+from dstlr_spark.schemas import TRIPLE_SCHEMA
 
 DEFAULT_SENT_THRESHOLD = 128  # package.scala:31
 
@@ -417,7 +417,7 @@ def extract_bag_fused(
     best = best_alias_entity(alias_dict)
     gaz_b, best_b = _broadcast(documents, gaz), _broadcast(documents, best)
     return docs.select("doc_id", "contents").mapInPandas(
-        _fused_bag_batches(gaz_b, best_b, cooccur_window), TRIPLE_DDL
+        _fused_bag_batches(gaz_b, best_b, cooccur_window), TRIPLE_SCHEMA
     )
 
 
@@ -705,7 +705,7 @@ def extract_triples_pattern(
         else None
     )
     return docs.select("doc_id", "contents").mapInPandas(
-        _extract_batches_factory(link_best), TRIPLE_DDL
+        _extract_batches_factory(link_best), TRIPLE_SCHEMA
     )
 
 

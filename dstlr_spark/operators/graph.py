@@ -42,37 +42,27 @@ def split_triples(triples: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def materialize_graph(triples: DataFrame) -> dict[str, DataFrame]:
-    """Triple bag → {mention_nodes, mentions_edges, links_to, relation_edges,
-    fact_edges, entity_nodes} DataFrames (keys deduped = MERGE semantics)."""
-    parts = split_triples(triples)
+def graph_tables(
+    mentions: DataFrame, links: DataFrame, relations: DataFrame, facts: DataFrame
+) -> dict[str, DataFrame]:
+    """The six graph tables, defined once for every builder.
 
-    mentions_edges = parts["mentions"].select(
-        F.col("subjectValue").alias("doc_id"),
-        F.col("objectValue").alias("mention_id"),
-        F.col("meta")["begin"].alias("begin"),
-        F.col("meta")["end"].alias("end"),
-    )
-
+    Inputs: ``mentions`` (doc_id, mention_id, entity_class, span,
+    normalized, begin, end), one row per occurrence; ``links``
+    (mention_id, entity_id), entity_id null when unresolved;
+    ``relations`` already in ``relation_edges`` shape; ``facts``
+    (entity_id, relation, value). Keys are deduped (MERGE semantics).
+    """
     # Mention node: id + class/span (first wins, as MERGE ON CREATE) +
     # accumulated sorted index list (A4).
     mention_nodes = (
-        parts["mentions"]
-        .groupBy(F.col("objectValue").alias("mention_id"))
+        mentions.groupBy("mention_id")
         .agg(
             F.min_by(
-                F.struct(
-                    F.col("meta")["entity_class"].alias("entity_class"),
-                    F.col("meta")["span"].alias("span"),
-                    F.col("meta")["normalized"].alias("normalized"),
-                ),
-                F.struct(F.col("doc"), F.col("meta")["begin"].alias("b")),
+                F.struct("entity_class", "span", "normalized"),
+                F.struct("doc_id", "begin"),
             ).alias("attrs"),
-            F.sort_array(
-                F.collect_list(
-                    span_index_label(F.col("meta")["begin"], F.col("meta")["end"])
-                )
-            ).alias("index"),
+            F.sort_array(F.collect_list(span_index_label("begin", "end"))).alias("index"),
         )
         .select(
             "mention_id",
@@ -85,48 +75,67 @@ def materialize_graph(triples: DataFrame) -> dict[str, DataFrame]:
             "index",
         )
     )
-
-    links_to = (
-        parts["links"]
-        .select(
-            F.col("subjectValue").alias("mention_id"),
-            F.col("objectValue").alias("entity_id"),
-        )
-        .dropDuplicates(["mention_id", "entity_id"])
+    links_to = links.where(F.col("entity_id").isNotNull()).dropDuplicates(
+        ["mention_id", "entity_id"]
     )
-
-    relation_edges = parts["relations"].select(
-        F.col("doc").alias("doc_id"),
-        F.col("subjectValue").alias("subject_mention_id"),
-        F.col("relation").alias("type"),
-        F.col("meta")["confidence"].alias("confidence"),
-        F.col("objectValue").alias("object_mention_id"),
-    )
-
-    fact_edges = (
-        parts["facts"]
-        .select(
-            F.col("subjectValue").alias("entity_id"),
-            F.col("relation"),
-            F.col("objectValue").alias("value"),
-        )
-        .dropDuplicates(["entity_id", "relation", "value"])
-    )
-
+    fact_edges = facts.dropDuplicates(["entity_id", "relation", "value"])
     entity_nodes = (
         links_to.select("entity_id")
         .unionByName(fact_edges.select("entity_id"))
         .distinct()
     )
-
     return {
         "mention_nodes": mention_nodes,
-        "mentions_edges": mentions_edges,
+        "mentions_edges": mentions.select("doc_id", "mention_id", "begin", "end"),
         "links_to": links_to,
-        "relation_edges": relation_edges,
+        "relation_edges": relations,
         "fact_edges": fact_edges,
         "entity_nodes": entity_nodes,
     }
+
+
+def triple_edges(
+    links: DataFrame, relations: DataFrame, facts: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """LINKS_TO, relation and Fact triples → the ``links``, ``relations``
+    and ``facts`` inputs of :func:`graph_tables`."""
+    return (
+        links.select(
+            F.col("subjectValue").alias("mention_id"),
+            F.col("objectValue").alias("entity_id"),
+        ),
+        relations.select(
+            F.col("doc").alias("doc_id"),
+            F.col("subjectValue").alias("subject_mention_id"),
+            F.col("relation").alias("type"),
+            F.col("meta")["confidence"].alias("confidence"),
+            F.col("objectValue").alias("object_mention_id"),
+        ),
+        facts.select(
+            F.col("subjectValue").alias("entity_id"),
+            "relation",
+            F.col("objectValue").alias("value"),
+        ),
+    )
+
+
+def materialize_graph(triples: DataFrame) -> dict[str, DataFrame]:
+    """Triple bag → {mention_nodes, mentions_edges, links_to, relation_edges,
+    fact_edges, entity_nodes} DataFrames via :func:`graph_tables`.
+
+    A MENTIONS row carries its document id in both ``doc`` and
+    ``subjectValue`` (every producer emits them equal), so one
+    ``doc_id`` column serves the edge and the mention-node tie-break."""
+    parts = split_triples(triples)
+    meta = F.col("meta")
+    mentions = parts["mentions"].select(
+        F.col("subjectValue").alias("doc_id"),
+        F.col("objectValue").alias("mention_id"),
+        *(meta[c].alias(c) for c in ("entity_class", "span", "normalized", "begin", "end")),
+    )
+    return graph_tables(
+        mentions, *triple_edges(parts["links"], parts["relations"], parts["facts"])
+    )
 
 
 def register_graph_views(spark, graph: dict[str, DataFrame], prefix: str = "") -> None:

@@ -17,11 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dstlr_spark.functions.text import lemma_key
-
-_NULL_META = (
-    "struct<entity_class:string,span:string,begin:int,end:int,"
-    "normalized:string,confidence:double>"
-)
+from dstlr_spark.schemas import META_SCHEMA
 
 
 def resolve_aliases(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
@@ -78,5 +74,5 @@ def link_mentions(mention_triples: DataFrame, alias_dict: DataFrame) -> DataFram
         F.lit("LINKS_TO").alias("relation"),
         F.lit("Entity").alias("objectType"),
         F.col("entity_id").alias("objectValue"),
-        F.lit(None).cast(_NULL_META).alias("meta"),
+        F.lit(None).cast(META_SCHEMA).alias("meta"),
     )

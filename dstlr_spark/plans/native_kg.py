@@ -26,14 +26,10 @@ from dstlr_spark.operators.extract import (
     mention_triples,
     relation_triples,
 )
-from dstlr_spark.functions.text import utf8_truncate_1024_gated
-from dstlr_spark.operators.linking import resolve_aliases
+from dstlr_spark.operators.graph import graph_tables, triple_edges
+from dstlr_spark.operators.linking import link_mentions
 from dstlr_spark.plans.partitioning import fan_out
-
-_NULL_META = (
-    "struct<entity_class:string,span:string,begin:int,end:int,"
-    "normalized:string,confidence:double>"
-)
+from dstlr_spark.schemas import TRIPLE_SCHEMA
 
 
 class NativeKG:
@@ -47,7 +43,6 @@ class NativeKG:
         fact_triples: DataFrame | None = None,
         cooccur_window: int = 8,
         sent_threshold: int = DEFAULT_SENT_THRESHOLD,
-        persist: bool = True,
     ) -> None:
         # Spread the CPU-heavy annotator evenly (the reference's
         # repartition-before-extraction, ExtractTriples.scala:63): the
@@ -58,7 +53,6 @@ class NativeKG:
         documents = fan_out(documents)
         self._docs = apply_sentence_guard(documents, sent_threshold)
         self._gazetteer = gazetteer
-        self._persist = persist
         self._filled = False
         self.aliases = aliases
         self.fact_triples = fact_triples
@@ -70,8 +64,6 @@ class NativeKG:
         the gazetteer into a broadcast dictionary (one Spark job), so
         constructing a NativeKG stays pure plan building."""
         m = extract_mentions_native(self._docs, self._gazetteer)
-        if not self._persist:
-            return m
         # Hash-partition the mention frame by doc_id BEFORE caching:
         # the relation self-join then reads both sides co-partitioned
         # (zero exchanges — guide §2.4), the chain's doc-keyed
@@ -98,8 +90,6 @@ class NativeKG:
         the frame from the parquet source exactly like the first build
         (nothing survives the unpersist), so this is plan hygiene, not
         result caching."""
-        if not self._persist:
-            return
         sl = self.mentions.storageLevel
         if not (sl.useMemory or sl.useDisk):
             self.mentions = self.mentions.persist(StorageLevel.DISK_ONLY)
@@ -121,22 +111,10 @@ class NativeKG:
         )
 
     def links_triples(self) -> DataFrame:
-        """LINKS_TO rows straight from the mention frame (same semantics as
-        operators.linking.link_mentions, minus the triple round-trip)."""
+        """LINKS_TO rows for the mention frame (Catalyst folds the
+        MENTIONS round-trip away: same plan as a hand-written projection)."""
         self._ensure_persisted()
-        dmen = self.mentions.select(
-            F.col("doc_id").alias("doc"), "mention_id", "span"
-        ).dropDuplicates(["doc", "mention_id"])
-        best = resolve_aliases(dmen, self.aliases)
-        return best.select(
-            "doc",
-            F.lit("Mention").alias("subjectType"),
-            F.col("mention_id").alias("subjectValue"),
-            F.lit("LINKS_TO").alias("relation"),
-            F.lit("Entity").alias("objectType"),
-            F.col("entity_id").alias("objectValue"),
-            F.lit(None).cast(_NULL_META).alias("meta"),
-        )
+        return link_mentions(mention_triples(self.mentions), self.aliases)
 
     def bag(self) -> DataFrame:
         out = self.extraction_triples().unionByName(self.links_triples())
@@ -147,89 +125,36 @@ class NativeKG:
     def graph(self) -> dict[str, DataFrame]:
         """Graph tables straight from the mention frame.
 
-        Equivalent to ``materialize_graph(self.bag())`` (covered by the
-        oracle suite) but skips the union-then-refilter round trip: each
-        table derives from the persisted mention frame in one hop, so
-        the whole graph build is 3 shuffles (mention-node agg, link agg,
-        relation self-join) instead of 4 filtered re-evaluations of the
-        union plan.
+        Row-identical to ``materialize_graph(self.bag())`` (pinned by
+        tests/test_graph_sql.py) and built by the same
+        :func:`~dstlr_spark.operators.graph.graph_tables`, but each input
+        derives from the persisted mention frame in one hop instead of
+        re-filtering the bag's union. The bag names its relations with
+        ``concat_ws`` inside the self-join, so a per-table relation
+        filter cannot be pushed below the join, and the self-join would
+        run again under every other table's filter. The whole build is
+        3 shuffles (mention-node agg, link agg, relation self-join).
         """
         self._ensure_persisted()
         m = self.mentions
-
-        mentions_edges = m.select(
-            "doc_id", "mention_id", "begin", "end"
+        facts = self.fact_triples
+        if facts is None:
+            facts = m.sparkSession.createDataFrame([], TRIPLE_SCHEMA)
+        mentions = m.select(
+            "doc_id",
+            "mention_id",
+            "entity_class",
+            "span",
+            F.lit(None).cast("string").alias("normalized"),
+            "begin",
+            "end",
         )
-        mention_nodes = (
-            m.groupBy("mention_id")
-            .agg(
-                F.min_by(
-                    F.struct(
-                        F.col("entity_class"),
-                        F.col("span"),
-                        F.lit(None).cast("string").alias("normalized"),
-                    ),
-                    F.struct(F.col("doc_id"), F.col("begin")),
-                ).alias("attrs"),
-                F.sort_array(
-                    F.collect_list(
-                        F.concat_ws(
-                            "-", F.col("begin").cast("string"), F.col("end").cast("string")
-                        )
-                    )
-                ).alias("index"),
-            )
-            .select(
-                "mention_id",
-                F.col("attrs")["entity_class"].alias("entity_class"),
-                # C9 parity with materialize_graph (1024-byte span cap)
-                utf8_truncate_1024_gated(F.col("attrs")["span"]).alias("span"),
-                F.col("attrs")["normalized"].alias("normalized"),
-                "index",
-            )
+        return graph_tables(
+            mentions,
+            *triple_edges(
+                self.links_triples(), relation_triples(m, self.cooccur_window), facts
+            ),
         )
-        dmen = m.select(F.col("doc_id").alias("doc"), "mention_id", "span").dropDuplicates(
-            ["doc", "mention_id"]
-        )
-        links_to = (
-            resolve_aliases(dmen, self.aliases)
-            .where(F.col("entity_id").isNotNull())
-            .select("mention_id", "entity_id")
-            .dropDuplicates(["mention_id", "entity_id"])
-        )
-        rels = relation_triples(m, self.cooccur_window)
-        relation_edges = rels.select(
-            F.col("doc").alias("doc_id"),
-            F.col("subjectValue").alias("subject_mention_id"),
-            F.col("relation").alias("type"),
-            F.col("meta")["confidence"].alias("confidence"),
-            F.col("objectValue").alias("object_mention_id"),
-        )
-        if self.fact_triples is not None:
-            fact_edges = (
-                self.fact_triples.select(
-                    F.col("subjectValue").alias("entity_id"),
-                    F.col("relation"),
-                    F.col("objectValue").alias("value"),
-                ).dropDuplicates(["entity_id", "relation", "value"])
-            )
-        else:
-            fact_edges = links_to.sparkSession.createDataFrame(
-                [], "entity_id string, relation string, value string"
-            )
-        entity_nodes = (
-            links_to.select("entity_id")
-            .unionByName(fact_edges.select("entity_id"))
-            .distinct()
-        )
-        return {
-            "mention_nodes": mention_nodes,
-            "mentions_edges": mentions_edges,
-            "links_to": links_to,
-            "relation_edges": relation_edges,
-            "fact_edges": fact_edges,
-            "entity_nodes": entity_nodes,
-        }
 
     def unpersist(self) -> None:
         self.mentions.unpersist()

@@ -19,7 +19,6 @@ from dstlr_spark.operators.extract import (
     DEFAULT_SENT_THRESHOLD,
     extract_triples_pattern,
 )
-from dstlr_spark.operators.graph import materialize_graph
 
 
 def build_triples(
@@ -41,10 +40,6 @@ def build_triples(
     base = extract_triples_pattern(docs, sent_threshold, alias_dict).persist()
     gt = enrich_triples(base, facts, property_relation)
     return base.unionByName(gt)
-
-
-def build_graph(triples: DataFrame) -> dict[str, DataFrame]:
-    return materialize_graph(triples)
 
 
 def observe_metrics(df: DataFrame, name: str = "metrics"):

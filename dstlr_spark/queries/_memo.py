@@ -2,7 +2,8 @@
 
 Expensive derived frames shared by several driver-contract queries
 (the dedup shingle posting list, the LSH band posting list, quantized
-embeddings, the document KG's ``NativeKG``) are materialized ONCE per
+embeddings, the document KG's ``NativeKG``, the streaming queries'
+staged source directories) are materialized ONCE per
 (application, sf_dir) and reused by every consumer — the in-process analog of an Iceberg stage table
 that all downstream jobs read. Staging uses ``localCheckpoint`` so
 consumer plans read an ``ExistingRDD`` (no re-derivation, no lineage

@@ -35,6 +35,7 @@ from dstlr_spark.plans.native_kg import NativeKG
 from dstlr_spark.queries.conv import _ENRICH_SQL
 from dstlr_spark.queries.sqlgen import values_cte
 from dstlr_spark.queries.streamgate import _SHRED_SQL
+from dstlr_spark.schemas import META_SCHEMA
 from dstlr_spark.sources.transcripts import derive_transcripts
 
 COOCCUR_WINDOW = 8
@@ -128,13 +129,7 @@ def _doc_fact_triples(spark: SparkSession) -> DataFrame:
         "doc string, subjectType string, subjectValue string, relation string, "
         "objectType string, objectValue string",
     )
-    return df.withColumn(
-        "meta",
-        F.lit(None).cast(
-            "struct<entity_class:string,span:string,begin:int,end:int,"
-            "normalized:string,confidence:double>"
-        ),
-    )
+    return df.withColumn("meta", F.lit(None).cast(META_SCHEMA))
 
 
 # --------------------------------------------------------------------------

@@ -349,10 +349,12 @@ def _l2_int(a, b):
     )
 
 
-def _nearest_centroid_udf(df: DataFrame, cents: DataFrame):
-    """pandas_udf mapping a quantized vector to its nearest centroid id
-    (exact integer squared-L2, ties to the smallest cid) over a
-    driver-collected, broadcast centroid matrix.
+def _nearest_centroid(df: DataFrame, cents: DataFrame, *cols: str) -> DataFrame:
+    """(vec_id, cell, *cols): each quantized vector of ``df`` assigned to
+    its nearest centroid id (exact integer squared-L2, ties to the
+    smallest cid) by a pandas_udf over a driver-collected, broadcast
+    centroid matrix. An empty centroid set assigns nothing: the result
+    is empty.
 
     Replaces the former ``crossJoin(broadcast(cents))`` + higher-order
     ``aggregate(zip_with(...))`` + ``groupBy(vec_id).min_by`` shape:
@@ -373,6 +375,10 @@ def _nearest_centroid_udf(df: DataFrame, cents: DataFrame):
     import numpy as np
 
     rows = sorted(cents.select("cid", "cq").collect(), key=lambda r: r[0])
+    if not rows:
+        return df.select(
+            "vec_id", F.lit(None).cast("long").alias("cell"), *cols
+        ).limit(0)
     cids = np.array([r[0] for r in rows], dtype=np.int64)
     ct = np.array([r[1] for r in rows], dtype=np.float64).T.copy()  # (64, K)
     c2 = (ct * ct).sum(axis=0)  # (K,)
@@ -391,7 +397,7 @@ def _nearest_centroid_udf(df: DataFrame, cents: DataFrame):
         s += c2_r[None, :]
         return pd.Series(cids_r[np.argmin(s, axis=1)])
 
-    return cell_of
+    return df.select("vec_id", cell_of(F.col("q")).alias("cell"), *cols)
 
 
 def _assigned_cells(e: DataFrame) -> DataFrame:
@@ -402,8 +408,7 @@ def _assigned_cells(e: DataFrame) -> DataFrame:
     cents = e.where(F.col("vec_id") % IVF_STRIDE == 0).select(
         F.col("vec_id").alias("cid"), F.col("q").alias("cq")
     )
-    cell_of = _nearest_centroid_udf(e, cents)
-    return e.select("vec_id", cell_of(F.col("q")).alias("cell"), "q", "norm")
+    return _nearest_centroid(e, cents, "q", "norm")
 
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -826,11 +831,10 @@ KMEANS_ITERS = 2
 
 def _assign_cells(e: DataFrame, cents: DataFrame) -> DataFrame:
     """Map-side vectorized argmin over a broadcast centroid matrix
-    (:func:`_nearest_centroid_udf`); ties break on smallest centroid
+    (:func:`_nearest_centroid`); ties break on smallest centroid
     id. Zero shuffles — the former crossJoin + groupBy materialized
     N·K array-pair rows per Lloyd round."""
-    cell_of = _nearest_centroid_udf(e, cents)
-    return e.select("vec_id", cell_of(F.col("q")).alias("cell"), "q")
+    return _nearest_centroid(e, cents, "q")
 
 
 def _update_centroids(assigned: DataFrame) -> DataFrame:

@@ -27,6 +27,8 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dstlr_spark.queries._memo import staged
+
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -37,44 +39,42 @@ SESSION_GAP_SEC = 1800
 _SINK_SEQ = itertools.count()
 
 
-_STREAM_DIRS: dict[str, str] = {}
-
-
-def _events_stream_dir(sf_dir: str) -> str:
+def _stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
     """The file-stream source lists a DIRECTORY; the sf tables are single
     read-only files. Stage a temp directory containing a symlink to the
-    events parquet once per sf_dir (a production deployment streams from
-    the table's real directory/Iceberg location — this shim exists only
-    for the single-file sandbox layout). When the table IS already a
-    directory of part files (any Spark-written table, e.g. the
-    replicated probe corpora), stream it directly — symlinking a
-    directory under a listing root would hide its files from the
-    non-recursive file source (the stream silently sees zero input)."""
-    d = _STREAM_DIRS.get(sf_dir)
-    if d is None:
+    table's parquet once per (application, sf_dir) (a production
+    deployment streams from the table's real directory/Iceberg location
+    — this shim exists only for the single-file sandbox layout). When
+    the table IS already a directory of part files (any Spark-written
+    table, e.g. the replicated probe corpora), stream it directly —
+    symlinking a directory under a listing root would hide its files
+    from the non-recursive file source (the stream silently sees zero
+    input)."""
+
+    def build() -> str:
         import os
         import shutil
         import tempfile
 
-        src = f"{sf_dir}/events.parquet"
+        src = f"{sf_dir}/{table}.parquet"
         if os.path.isdir(src):
-            _STREAM_DIRS[sf_dir] = src
             return src
-        d = tempfile.mkdtemp(prefix="dstlr_stream_events_")
-        dst = os.path.join(d, "events.parquet")
+        d = tempfile.mkdtemp(prefix=f"dstlr_stream_{table}_")
+        dst = os.path.join(d, f"{table}.parquet")
         try:
             os.symlink(src, dst)
         except OSError:
             shutil.copy(src, dst)
-        _STREAM_DIRS[sf_dir] = d
-    return d
+        return d
+
+    return staged(spark, ("stream_dir", table, sf_dir), build, checkpoint=False)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the sf events parquet (explicit schema —
     streaming sources never infer)."""
     return spark.readStream.schema(EVENTS_SCHEMA).parquet(
-        _events_stream_dir(sf_dir)
+        _stream_dir(spark, sf_dir, "events")
     )
 
 
@@ -199,29 +199,26 @@ def q_stream_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _transcripts_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the document-derived transcripts as a streamable parquet
-    directory once per sf_dir (a production deployment streams the real
+    directory once per (application, sf_dir) (a production deployment streams the real
     transcripts table's directory/Iceberg location; the sandbox derives
     it from ``documents`` exactly like the batch KG pipeline does)."""
-    key = f"transcripts::{sf_dir}"
-    d = _STREAM_DIRS.get(key)
-    if d is None:
+
+    def build() -> str:
         import tempfile
 
-        from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
+        from dstlr_spark.plans.partitioning import fan_out
         from dstlr_spark.sources.transcripts import derive_transcripts
 
         d = tempfile.mkdtemp(prefix="dstlr_stream_transcripts_")
-        from dstlr_spark.plans.partitioning import fan_out
-
         docs = fan_out(
             spark.read.parquet(f"{sf_dir}/documents.parquet").select(
                 F.col("doc_id").cast("string").alias("doc_id"), "text"
             )
         )
         derive_transcripts(docs).coalesce(4).write.mode("overwrite").parquet(d)
-        _STREAM_DIRS[key] = d
-    return d
+        return d
+
+    return staged(spark, ("transcripts_stream", sf_dir), build, checkpoint=False)
 
 
 def _transcripts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -238,29 +235,11 @@ DOCS_SCHEMA = (
 
 
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the sf documents parquet (same symlink
-    shim as the events stream, incl. the stream-the-directory-directly
-    branch for Spark-written tables)."""
-    key = f"documents::{sf_dir}"
-    d = _STREAM_DIRS.get(key)
-    if d is None:
-        import os
-        import shutil
-        import tempfile
-
-        src = f"{sf_dir}/documents.parquet"
-        if os.path.isdir(src):
-            _STREAM_DIRS[key] = src
-            d = src
-        else:
-            d = tempfile.mkdtemp(prefix="dstlr_stream_docs_")
-            dst = os.path.join(d, "documents.parquet")
-            try:
-                os.symlink(src, dst)
-            except OSError:
-                shutil.copy(src, dst)
-            _STREAM_DIRS[key] = d
-    return spark.readStream.schema(DOCS_SCHEMA).parquet(d)
+    """File-source stream over the sf documents parquet (the same
+    :func:`_stream_dir` shim as the events stream)."""
+    return spark.readStream.schema(DOCS_SCHEMA).parquet(
+        _stream_dir(spark, sf_dir, "documents")
+    )
 
 
 def q_stream_curate_decision(spark: SparkSession, sf_dir: str) -> DataFrame:

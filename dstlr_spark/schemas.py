@@ -55,14 +55,6 @@ TRIPLE_SCHEMA = T.StructType(
     ]
 )
 
-# DDL string form for mapInPandas
-TRIPLE_DDL = (
-    "doc string, subjectType string, subjectValue string, relation string, "
-    "objectType string, objectValue string, "
-    "meta struct<entity_class:string, span:string, begin:int, end:int, "
-    "normalized:string, confidence:double>"
-)
-
 # --- dimension tables (FIXTURES.md §2-4) ----------------------------------
 ALIAS_DICT_SCHEMA = T.StructType(
     [

@@ -19,7 +19,6 @@ from dstlr_spark.operators.extract import (
     DEFAULT_SENT_THRESHOLD,
     extract_triples_pattern,
 )
-from dstlr_spark.operators.linking import link_mentions
 from dstlr_spark.plans.ledger import run_with_ledger
 from dstlr_spark.session import get_spark
 from dstlr_spark.sources.io import read_table
@@ -65,10 +64,10 @@ def main() -> None:
 
     def pipeline(chunk):
         docs = salted_repartition(assemble_documents(chunk), args.partitions)
-        extracted = extract_triples_pattern(docs, args.sent_length_threshold)
-        # reference parity: the extract job emits LINKS_TO rows too
-        # (in-annotator Wikidict lookup, ExtractTriples.scala:105)
-        return extracted.unionByName(link_mentions(extracted, aliases))
+        # reference parity: the extract job emits LINKS_TO rows too,
+        # looked up inside the one annotator pass (in-annotator
+        # Wikidict lookup, ExtractTriples.scala:105)
+        return extract_triples_pattern(docs, args.sent_length_threshold, aliases)
 
     stats = run_with_ledger(
         transcripts, args.output, args.ledger, pipeline, n_buckets=args.n_buckets

@@ -55,27 +55,6 @@ def test_utf8_truncate_fuzz(spark):
             assert t == orig
 
 
-def test_utf8_truncate_gated_lockstep(spark):
-    """The gated (JVM fast-path) variant is value-identical to the pandas
-    UDF on short ASCII, boundary-length, and multibyte-long inputs."""
-    from dstlr_spark.functions.text import utf8_truncate_1024_gated
-
-    cases = [
-        "short",
-        "a" * 256,            # gate boundary: stays JVM-side
-        "a" * 257,            # just past the gate, still ≤1024 bytes
-        "a" * 2000,           # long ASCII → truncated to 1024
-        "日" * 600,            # 1800 bytes of 3-byte chars → code-point-safe cut
-        "",
-        None,
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "s string")
-    gated = [r["t"] for r in df.select(utf8_truncate_1024_gated("s").alias("t")).collect()]
-    plain = [r["t"] for r in df.select(utf8_truncate_1024("s").alias("t")).collect()]
-    assert gated == plain
-    assert gated[3] == "a" * 1024
-
-
 def test_lemma_rules_three_way_lockstep(spark):
     """C2 lemma rules: Python, Spark column, and DuckDB SQL must agree
     exactly — the oracle recomputes mention keys independently."""

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dstlr_spark.operators.graph import (
@@ -88,3 +89,62 @@ def test_fk_elision_equals_cypher_literal_plan(spark):
         )
         assert fast == literal, fn.__name__
         assert len(fast) > 0 or fn is missing_information, fn.__name__
+
+
+GRAPH_TABLES = (
+    "mention_nodes", "mentions_edges", "links_to",
+    "relation_edges", "fact_edges", "entity_nodes",
+)
+
+
+@pytest.fixture(scope="module")
+def doc_kg(spark):
+    from dstlr_spark.plans.native_kg import NativeKG
+    from dstlr_spark.queries.doc_kg import (
+        COOCCUR_WINDOW,
+        _aliases,
+        _doc_fact_triples,
+        _documents,
+        _gazetteer,
+    )
+
+    kg = NativeKG(
+        _documents(spark, "/root/testdata/sf0.001"),
+        _gazetteer(spark),
+        _aliases(spark),
+        _doc_fact_triples(spark),
+        cooccur_window=COOCCUR_WINDOW,
+        sent_threshold=10_000,
+    )
+    yield kg
+    kg.unpersist()
+
+
+def test_native_graph_matches_materialize_graph(doc_kg):
+    """Both builders go through graph_tables: NativeKG's one-hop
+    derivation from the mention frame and materialize_graph over the
+    same KG's triple bag must yield row-identical tables."""
+
+    def rows(df):
+        return sorted(map(repr, df.collect()))
+
+    native = doc_kg.graph()
+    via_bag = materialize_graph(doc_kg.bag())
+    for t in GRAPH_TABLES:
+        got = rows(native[t])
+        assert got == rows(via_bag[t]), t
+        assert len(got) > 0, t
+
+
+def test_native_graph_derives_from_mention_frame_in_one_hop(spark, doc_kg):
+    """The docs-path tables read the persisted mention frame directly:
+    no bag Union and no re-run extraction scan above the cache."""
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    graph = doc_kg.graph()
+    for t in ("mention_nodes", "mentions_edges", "links_to", "relation_edges"):
+        plan = graph[t]._jdf.queryExecution().explainString(jmode)
+        above, cached, _ = plan.partition("InMemoryRelation")
+        assert cached, t
+        assert "Union" not in above and "MapInPandas" not in above, t

@@ -171,9 +171,11 @@ def test_linking_is_single_aggregate_no_sort(spark):
         _gazetteer(spark),
         _aliases(spark),
         sent_threshold=10_000,
-        persist=False,
     )
-    plan = _plan(spark, kg.links_triples())
+    try:
+        plan = _plan(spark, kg.links_triples())
+    finally:
+        kg.unpersist()
     assert "Window" not in plan
     assert "BroadcastHashJoin" in plan  # alias dict broadcast, not shuffled
 

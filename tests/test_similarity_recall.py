@@ -225,6 +225,18 @@ def test_semantic_dedup_keep_min_id_and_cell_blocking(spark):
     assert witnesses.exceptAll(dropped).count() == 0
 
 
+def test_empty_centroid_set_assigns_nothing(spark):
+    """With no seeded centroid left (every vec_id % IVF_STRIDE == 0
+    vector filtered out), centroid assignment is an empty frame, not a
+    GEMM shape error inside the worker."""
+    import pyspark.sql.functions as F
+
+    from dstlr_spark.queries.similarity import IVF_STRIDE, _assigned_cells, _emb
+
+    e = _emb(spark, "/root/testdata/sf0.001").where(F.col("vec_id") % IVF_STRIDE != 0)
+    assert _assigned_cells(e).count() == 0
+
+
 def test_mrl_topk_recall_floor_on_iid_noise(spark):
     """Matryoshka two-stage ANN: on iid-noise embeddings (the
     adversarial case for prefix ranking) the measured recall@5 vs the
