@@ -10,6 +10,7 @@
 #   make selftest        # perfbench self-test (not part of gate)
 #   make perfbench       # one untraced run per benchmark workload (not part of gate)
 #   make graph-parity    # graph-builder parity, plan and span-cap tests (not part of gate)
+#   make canon-parity    # canonicalization tests + its four oracle queries (not part of gate)
 
 SF ?= sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
@@ -21,7 +22,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench selftest perfbench graph-parity
+.PHONY: gate oracles test bench selftest perfbench graph-parity canon-parity
 
 oracles:
 	@mkdir -p $(OUT)
@@ -52,6 +53,11 @@ perfbench:
 # quick pre-check for a change to either graph builder
 graph-parity:
 	python -m pytest -q tests/test_graph_sql.py tests/test_plans.py tests/test_fuzz_text.py
+
+# quick pre-check for a change to canonicalization or connected components
+canon-parity:
+	python -m pytest -q tests/test_canonicalize.py
+	python scripts/check_oracles.py /root/testdata/sf0.01 kg_canonical_clusters kg_canonical_triples dedup_neardup_clusters dedup_keep_list
 
 gate: oracles test bench
 	@echo "gate complete: $(OUT)/oracles_$(SF).log $(OUT)/pytest.log $(OUT)/bench.json"

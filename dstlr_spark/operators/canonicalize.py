@@ -11,16 +11,20 @@ where mentions are connected when they share an identity signal:
   2. same resolved link target (two spellings linking to one entity).
 
 Design for 10^12-turn scale:
-- Edges are built as **star edges** (member → group-min), one edge per
-  member instead of O(group²) pairs — a group of 10^6 mentions of
-  "Obama" yields 10^6 edges, not 10^12.
-- Components by iterative min-label propagation over the symmetric
-  edge set: each round is one shuffle (join) + one aggregate; lineage
-  is cut every round with ``localCheckpoint`` (on a cluster: a
-  checkpoint dir) so plans don't grow exponentially.
-- Convergence: label sets only ever decrease; for star-shaped inputs
-  with bridge vertices the diameter is small (≈ alternating-star
-  behavior); the loop stops when no label changes.
+- Signal 1 needs no edges. All mentions of one key are connected, so
+  the key group contracts to one vertex, its minimum mention id (the
+  *rep*); one pass maps every mention to its rep. The 10^6 mentions of
+  "Obama" are one vertex, and connected components runs over a graph
+  of keys, not mentions: its rounds shuffle vocabulary-sized data.
+  This is exact, because a component's minimum over a key group is
+  that group's rep.
+- Signal 2 is **star edges** over (rep, entity) pairs (member →
+  group-min), one edge per member instead of O(group²) pairs.
+- Components by iterative min-label propagation with pointer doubling
+  over the symmetric edge set: each round is a few joins and one
+  aggregate; lineage is cut every round with ``localCheckpoint`` (on a
+  cluster: a checkpoint dir) so plans don't grow exponentially. The
+  loop stops when no label changes.
 """
 
 from __future__ import annotations
@@ -55,15 +59,17 @@ def connected_components(
     rounds, and silently returning a partially merged clustering would
     present non-convergence as a valid result.
     """
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    sym = (
+        edges.select("src", "dst")
+        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .localCheckpoint()
     )
-    verts = sym.select(F.col("src").alias("id")).distinct()
+    verts = sym.select(F.col("src").alias("id"))
     if vertices is not None:
-        verts = verts.unionByName(vertices.select(F.col("id"))).distinct()
-
-    labels = verts.select("id", F.col("id").alias("component")).localCheckpoint()
-    sym = sym.localCheckpoint()
+        verts = verts.unionByName(vertices.select("id"))
+    labels = (
+        verts.distinct().select("id", F.col("id").alias("component")).localCheckpoint()
+    )
 
     changed = -1
     for _ in range(max_iter):
@@ -73,11 +79,13 @@ def connected_components(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("component").alias("nbr_min"))
         )
+        # ``prev`` rides along so the round's change count needs no join
         stepped = labels.join(nbr, "id", "left").select(
             "id",
             F.least(
                 F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
             ).alias("component"),
+            F.col("component").alias("prev"),
         )
         # pointer doubling: follow the label chain one hop
         # (component := label(component)) — min-label alone needs
@@ -88,7 +96,7 @@ def connected_components(
         chain = stepped.select(
             F.col("id").alias("component"), F.col("component").alias("root")
         )
-        new_labels = (
+        labels = (
             stepped.join(chain, "component", "left")
             .select(
                 "id",
@@ -96,16 +104,11 @@ def connected_components(
                     F.col("component"),
                     F.coalesce(F.col("root"), F.col("component")),
                 ).alias("component"),
+                "prev",
             )
             .localCheckpoint()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
+        changed = labels.where(F.col("component") != F.col("prev")).count()
         if changed == 0:
             break
     if changed != 0:
@@ -114,40 +117,51 @@ def connected_components(
             f"({changed} labels still changing); raise max_iter — the graph's "
             "diameter exceeds the round budget"
         )
-    return labels
-
-
-def coref_edges(mentions: DataFrame, links_to: DataFrame | None = None) -> DataFrame:
-    """Mention frame (+ optional links) → identity star edges.
-
-    ``mentions`` needs (mention_id, key); ``links_to`` (mention_id,
-    entity_id). Signal 1: shared lemma key. Signal 2: shared link target.
-    """
-    by_key = star_edges(
-        mentions.select("mention_id", "key").dropDuplicates(["mention_id"]),
-        "mention_id",
-        "key",
-    )
-    if links_to is None:
-        return by_key
-    by_entity = star_edges(
-        links_to.select("mention_id", "entity_id").where(
-            F.col("entity_id").isNotNull()
-        ),
-        "mention_id",
-        "entity_id",
-    )
-    return by_key.unionByName(by_entity).dropDuplicates(["src", "dst"])
+    return labels.select("id", "component")
 
 
 def canonicalize_mentions(
     mentions: DataFrame, links_to: DataFrame | None = None
 ) -> DataFrame:
     """→ (mention_id, canonical_id). Additive: never rewrites the
-    reference-shape per-doc ids (SURVEY.md §7 Stage 3 invariant)."""
-    edges = coref_edges(mentions, links_to)
-    verts = mentions.select(F.col("mention_id").alias("id")).distinct()
-    cc = connected_components(edges, verts)
-    return cc.select(
+    reference-shape per-doc ids (SURVEY.md §7 Stage 3 invariant).
+
+    ``mentions`` needs (mention_id, key) with non-null ids; a mention id
+    listed twice keeps one of its keys. ``links_to`` needs (mention_id,
+    entity_id). The output has one row per mention, plus one per linked
+    id missing from ``mentions`` whose entity links another id too.
+    """
+    m = mentions.select("mention_id", "key").dropDuplicates(["mention_id"])
+    key_min = (
+        m.where(F.col("key").isNotNull())
+        .groupBy("key")
+        .agg(F.min("mention_id").alias("rep"))
+    )
+    # each mention → its key group's minimum id; an unkeyed mention is
+    # its own group (a null key is no identity signal)
+    reps = (
+        m.join(key_min, "key", "left")
+        .select("mention_id", F.coalesce("rep", "mention_id").alias("rep"))
+        .localCheckpoint()
+    )
+    if links_to is None:
+        return reps.select("mention_id", F.col("rep").alias("canonical_id"))
+    pairs = (
+        links_to.where(F.col("entity_id").isNotNull())
+        .join(reps, "mention_id", "left")
+        .select(F.coalesce("rep", "mention_id").alias("rep"), "entity_id")
+    )
+    cc = connected_components(star_edges(pairs, "rep", "entity_id"))
+    keyed = reps.join(cc, reps["rep"] == cc["id"], "left").select(
+        "mention_id", F.coalesce("component", "rep").alias("canonical_id")
+    )
+    # graph vertices that are no mention's rep: links to unknown mentions
+    # (matched against the reps only, one per key, so the keyed mentions
+    # are not read again)
+    rep_ids = reps.where(F.col("mention_id") == F.col("rep")).select(
+        F.col("rep").alias("id")
+    )
+    orphans = cc.join(rep_ids, "id", "left_anti").select(
         F.col("id").alias("mention_id"), F.col("component").alias("canonical_id")
     )
+    return keyed.unionByName(orphans)

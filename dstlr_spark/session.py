@@ -16,10 +16,50 @@ chosen so the same code scales to 1000 executors:
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+#: the default driver heap is this or 65% of physical RAM, whichever is less
+MAX_DRIVER_MEM_MB = 48 * 1024
+#: spark.local.dir goes to RAM-backed /dev/shm only with this much free
+SHM_MIN_FREE_BYTES = 4 << 30
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """``min(48g, 65% of MemTotal)`` as a JVM size; 48g when ``meminfo``
+    cannot be read. A heap larger than the host lets the driver grow
+    until the machine, not the JVM, runs out of memory."""
+    try:
+        with open(meminfo) as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, total_kb * 65 // 100 // 1024)}m"
+
+
+def default_local_dir() -> str:
+    """``/dev/shm`` when it has ``SHM_MIN_FREE_BYTES`` free, else the temp
+    dir: shuffle files and DISK_ONLY blocks written to a full tmpfs fail
+    the job (ENOSPC) and take RAM from the heap."""
+    try:
+        st = os.statvfs("/dev/shm")
+    except OSError:
+        return tempfile.gettempdir()
+    free = st.f_bavail * st.f_frsize
+    if free >= SHM_MIN_FREE_BYTES:
+        return "/dev/shm/dstlr_spark_local"
+    log.warning(
+        "/dev/shm has %d MiB free (< %d MiB); spark.local.dir falls back to %s",
+        free >> 20, SHM_MIN_FREE_BYTES >> 20, tempfile.gettempdir(),
+    )
+    return tempfile.gettempdir()
 
 
 def get_spark(
@@ -58,14 +98,17 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         # Long sessions accumulate localCheckpoint blocks and broadcasts
         # whose cleanup waits on a driver GC (ContextCleaner is
         # reference-triggered); the default periodicGC.interval of 30min
         # never fires inside a bench/gate run, so storage fills and GC
         # stalls bleed into later queries (guide §5). Five minutes keeps
-        # the storage region bounded; the driver heap is sized for
-        # local[32] where the driver IS the executor.
+        # the storage region bounded; in local mode the driver IS the
+        # executor, so its heap is the whole engine's memory.
         .config("spark.cleaner.periodicGC.interval", "5min")
         # Shuffle files and DISK_ONLY cache blocks live in
         # spark.local.dir. The sandbox's /tmp is VM-backed ext4 measured
@@ -76,12 +119,7 @@ def get_spark(
         # (guide §2.1) — override with SPARK_GRAFT_LOCAL_DIR.
         .config(
             "spark.local.dir",
-            os.environ.get(
-                "SPARK_GRAFT_LOCAL_DIR",
-                "/dev/shm/dstlr_spark_local"
-                if os.path.isdir("/dev/shm")
-                else tempfile.gettempdir(),
-            ),
+            os.environ.get("SPARK_GRAFT_LOCAL_DIR") or default_local_dir(),
         )
     )
     for k, v in (extra_conf or {}).items():

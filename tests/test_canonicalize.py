@@ -4,10 +4,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from dstlr_spark.operators import canonicalize
 from dstlr_spark.operators.canonicalize import (
     canonicalize_mentions,
     connected_components,
-    coref_edges,
     star_edges,
 )
 
@@ -78,15 +78,112 @@ def test_canonicalize_preserves_reference_ids(spark):
     assert {r["mention_id"] for r in out.collect()} == {"a", "b"}
 
 
-def test_coref_edges_same_doc_and_cross_doc(spark):
+def test_lemma_key_same_doc_and_cross_doc(spark):
     """The lemma-key signal generalizes the reference's per-doc map (X5)
     across documents: same key in two docs → same cluster."""
     mentions = spark.createDataFrame(
         [("d1-apple", "apple"), ("d2-apple", "apple"), ("d1-paris", "paris")],
         "mention_id string, key string",
     )
-    e = coref_edges(mentions).collect()
-    assert {(r["src"], r["dst"]) for r in e} == {("d2-apple", "d1-apple")}
+    got = {
+        r["mention_id"]: r["canonical_id"]
+        for r in canonicalize_mentions(mentions).collect()
+    }
+    assert got == {
+        "d1-apple": "d1-apple", "d2-apple": "d1-apple", "d1-paris": "d1-paris"
+    }
+
+
+def _canonical_oracle(mentions, links):
+    """Mention-level definition, by union-find: mentions sharing a
+    non-null key are connected, ids linked to one non-null entity are
+    connected, a cluster is labelled by its minimum id. The output has
+    every mention plus each other linked id whose entity links another
+    id too."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    def union_groups(pairs):
+        first = {}
+        for member, group in pairs:
+            find(member)
+            if group is not None:
+                a, b = find(first.setdefault(group, member)), find(member)
+                parent[max(a, b)] = min(a, b)
+
+    union_groups(mentions)
+    union_groups(links)
+    ids = {m for m, _ in mentions}
+    by_entity = {}
+    for m, e in links:
+        if e is not None:
+            by_entity.setdefault(e, set()).add(m)
+    ids |= {m for members in by_entity.values() if len(members) > 1 for m in members}
+    return {m: find(m) for m in ids}
+
+
+def test_canonicalize_matches_mention_level_union_find(spark):
+    """Contracting each key group to its minimum id before connected
+    components must give the mention-level answer on inputs with null
+    and "" keys, duplicate mention rows, mentions linked to several
+    entities, null entities and links to ids that are not mentions."""
+    import random
+
+    for seed in range(1, 7):
+        rng = random.Random(seed)
+        n = rng.randrange(20, 60)
+        ids = [f"v{i:03d}" for i in range(n)]
+        keys = [None, ""] + [f"k{i}" for i in range(rng.randrange(3, 12))]
+        mention_ids = [v for v in ids if rng.random() < 0.85]
+        mentions = [(m, rng.choice(keys)) for m in mention_ids]
+        mentions += rng.sample(mentions, len(mentions) // 5)  # duplicate rows
+        entities = [None] + [f"Q{i}" for i in range(rng.randrange(2, 8))]
+        links = [
+            (rng.choice(ids), rng.choice(entities))
+            for _ in range(rng.randrange(n // 2, 2 * n))
+        ]
+        m_df = spark.createDataFrame(mentions, "mention_id string, key string")
+        l_df = spark.createDataFrame(links, "mention_id string, entity_id string")
+        for with_links in (True, False):
+            got = canonicalize_mentions(m_df, l_df if with_links else None).collect()
+            want = _canonical_oracle(mentions, links if with_links else [])
+            assert len(got) == len(want), f"seed {seed}, links={with_links}"
+            assert {r["mention_id"]: r["canonical_id"] for r in got} == want, (
+                f"seed {seed}, links={with_links}"
+            )
+
+
+def test_canonicalize_runs_components_over_keys(spark, monkeypatch):
+    """Components run over one vertex per lemma key, not per mention:
+    1,000 mentions of 5 keys give a graph of at most 5 vertices."""
+    seen = []
+    real = canonicalize.connected_components
+
+    def spy(edges, *args, **kwargs):
+        seen.append(edges)
+        return real(edges, *args, **kwargs)
+
+    monkeypatch.setattr(canonicalize, "connected_components", spy)
+    mentions = spark.createDataFrame(
+        [(f"m{i:04d}", f"k{i % 5}") for i in range(1000)],
+        "mention_id string, key string",
+    )
+    links = spark.createDataFrame(
+        [(f"m{i:04d}", f"Q{i % 3}") for i in range(0, 1000, 7)],
+        "mention_id string, entity_id string",
+    )
+    got = canonicalize_mentions(mentions, links).collect()
+    assert len(got) == 1000
+    assert {r["canonical_id"] for r in got} == {"m0000"}
+    (edges,) = seen
+    ends = edges.select("src").unionByName(edges.select(F.col("dst").alias("src")))
+    assert ends.distinct().count() <= 5
 
 
 def test_cc_raises_on_non_convergence(spark):
