@@ -11,6 +11,7 @@
 #   make perfbench       # one untraced run per benchmark workload (not part of gate)
 #   make graph-parity    # graph-builder parity, plan and span-cap tests (not part of gate)
 #   make canon-parity    # canonicalization tests + its four oracle queries (not part of gate)
+#   make extract-parity  # extraction tests + the four extraction oracle queries (not part of gate)
 
 SF ?= sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
@@ -22,7 +23,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench selftest perfbench graph-parity canon-parity
+.PHONY: gate oracles test bench selftest perfbench graph-parity canon-parity extract-parity
 
 oracles:
 	@mkdir -p $(OUT)
@@ -58,6 +59,11 @@ graph-parity:
 canon-parity:
 	python -m pytest -q tests/test_canonicalize.py
 	python scripts/check_oracles.py /root/testdata/sf0.01 kg_canonical_clusters kg_canonical_triples dedup_neardup_clusters dedup_keep_list
+
+# quick pre-check for a change to the extraction kernel or its three bodies
+extract-parity:
+	python -m pytest -q tests/test_extract.py tests/test_fuzz_text.py tests/test_golden.py
+	python scripts/check_oracles.py /root/testdata/sf0.01 kg_mentions kg_relations kg_links kg_triples_by_relation
 
 gate: oracles test bench
 	@echo "gate complete: $(OUT)/oracles_$(SF).log $(OUT)/pytest.log $(OUT)/bench.json"

@@ -4,13 +4,14 @@ The reference's heart is one ``mapPartitions → map → flatMap`` over a
 per-JVM CoreNLP pipeline (ExtractTriples.scala:67-134). We split the
 concern in two:
 
-1. :func:`extract_triples_native` — token-level gazetteer extraction:
+1. :func:`extract_mentions_native` — token-level gazetteer extraction:
    an Arrow-batched ``mapInPandas`` mention scan (tokenize with offsets
-   and gazetteer membership inside the worker, no token shuffle), then
-   windowed co-occurrence relations as a DataFrame self-join over the
-   mention frame. :func:`extract_bag_fused` emits mentions, relations and
-   links from one Arrow stage instead; both are oracle-checked against
-   DuckDB.
+   and gazetteer membership inside the worker, no token shuffle).
+   :func:`mention_triples` and :func:`relation_triples` turn the mention
+   frame into MENTIONS rows and windowed co-occurrence relations (a
+   DataFrame self-join), as ``NativeKG`` composes them.
+   :func:`extract_bag_fused` emits mentions, relations and links from
+   one Arrow stage instead; both are oracle-checked against DuckDB.
 
 2. :func:`extract_triples_pattern` — an Arrow-batched ``mapInPandas``
    annotator reproducing the reference's CoreNLP *semantics* on its
@@ -36,10 +37,15 @@ Shared semantics (both modes):
   dict is supplied (the fused path and ``extract_triples_pattern``'s
   ``alias_dict`` parameter), so the expensive annotator stage never
   runs twice.
+
+All three ``mapInPandas`` bodies share one kernel: one tokenizer
+(:func:`_gazetteer_hits`), one mention id (:func:`_stable_id_py`, via
+:func:`_mention_ids`) and one columnar triple emitter (:class:`_Triples`).
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 from collections.abc import Iterator
 
@@ -65,7 +71,7 @@ def apply_sentence_guard(documents: DataFrame, threshold: int = DEFAULT_SENT_THR
 
 
 # --------------------------------------------------------------------------
-# Native mode: token gazetteer, Arrow mention scan
+# Shared kernel: tokenizer, mention id, triple emitter (all three bodies)
 # --------------------------------------------------------------------------
 
 # translate-table twin of PUNCT_RE (same char class, C-speed strip)
@@ -110,92 +116,150 @@ def _broadcast(df: DataFrame, obj):
     return df.sparkSession.sparkContext.broadcast(obj)
 
 
+def _gazetteer_hits(contents: str, gaz, key_of) -> list[tuple[int, str, int, int]]:
+    """Split ``contents`` on single spaces, tracking char offsets, and
+    return ``(pos, key, begin, end)`` for every token whose
+    punctuation-stripped, LEMMATIZED (C2) key is a gazetteer term."""
+    hits = []
+    off = 0
+    for i, t in enumerate(contents.split(" ")):
+        k = key_of(t)
+        n = len(t)
+        if k in gaz:
+            hits.append((i, k, off, off + n))
+        off += n + 1
+    return hits
+
+
+def _stable_id_py(doc: str, key: str) -> str:
+    """Python twin of Spark's ``stable_mention_id``: ``md5(doc ‖ key)``."""
+    return hashlib.md5(f"{doc}\x1f{key}".encode()).hexdigest()
+
+
+def _mention_ids(doc: str, keys) -> dict[str, str]:
+    """One stable id per distinct lemma key of a document (X5), in
+    first-occurrence order; hashes once per key, not per occurrence."""
+    return {k: _stable_id_py(doc, k) for k in dict.fromkeys(keys)}
+
+
+def _frame(columns: dict[str, list]) -> pd.DataFrame:
+    """Lists-of-columns → batch frame. ``object`` dtype throughout: a
+    frame of empty lists would otherwise be float64, which Arrow rejects
+    for struct and string columns."""
+    return pd.DataFrame(columns, dtype=object)
+
+
+class _Triples:
+    """Columnar TripleRow accumulator — the one Python spelling of the
+    MENTIONS, relation and LINKS_TO row shapes.
+
+    Building per-row dicts dominates the worker profile;
+    lists-of-columns convert to Arrow an order of magnitude cheaper.
+    Each column keeps one bound ``append``. ``truncate`` rolls a failed
+    document back to the ``size`` mark taken before it."""
+
+    __slots__ = ("_cols", "_doc", "_st", "_sv", "_rel", "_ot", "_ov", "_meta")
+
+    def __init__(self) -> None:
+        self._cols = tuple([] for _ in TRIPLE_SCHEMA.names)
+        (self._doc, self._st, self._sv, self._rel, self._ot, self._ov,
+         self._meta) = (c.append for c in self._cols)
+
+    def mention(self, doc, mid, cls, span, begin, end, normalized=None) -> None:
+        self._doc(doc)
+        self._st("Document")
+        self._sv(doc)
+        self._rel("MENTIONS")
+        self._ot("Mention")
+        self._ov(mid)
+        self._meta({"entity_class": cls, "span": span, "begin": begin, "end": end,
+                    "normalized": normalized, "confidence": None})
+
+    def relation(self, doc, subj, rel, obj, confidence) -> None:
+        self._doc(doc)
+        self._st("Mention")
+        self._sv(subj)
+        self._rel(rel)
+        self._ot("Mention")
+        self._ov(obj)
+        self._meta({"entity_class": None, "span": None, "begin": None, "end": None,
+                    "normalized": None, "confidence": confidence})
+
+    def links(self, doc, ids: dict[str, str], best: dict[str, str]) -> None:
+        """One LINKS_TO per distinct key; null entity when unresolvable."""
+        for k, mid in ids.items():
+            self._doc(doc)
+            self._st("Mention")
+            self._sv(mid)
+            self._rel("LINKS_TO")
+            self._ot("Entity")
+            self._ov(best.get(k))
+            self._meta(None)
+
+    def size(self) -> int:
+        return len(self._cols[0])
+
+    def truncate(self, n: int) -> None:
+        for c in self._cols:
+            del c[n:]
+
+    def rows(self) -> list[dict]:
+        return [dict(zip(TRIPLE_SCHEMA.names, r)) for r in zip(*self._cols)]
+
+    def frame(self) -> pd.DataFrame:
+        return _frame(dict(zip(TRIPLE_SCHEMA.names, self._cols)))
+
+
+# --------------------------------------------------------------------------
+# Native mode: token gazetteer, Arrow mention scan
+# --------------------------------------------------------------------------
+
+_MENTION_DDL = (
+    "doc_id string, mention_id string, entity_class string, span string, "
+    "begin int, end int, pos int, key string"
+)
+_MENTION_COLUMNS = [f.split()[0] for f in _MENTION_DDL.split(", ")]
+
+
 def _mention_scan_batches(gaz: dict[str, str]):
     """Build the mapInPandas body for the Arrow mention scanner.
 
-    Per Arrow batch of (doc_id, contents): split on single spaces,
-    compute char offsets with a numpy segmented cumsum (O(tokens),
-    vectorized), keep only tokens whose punctuation-stripped, LEMMATIZED
-    (C2) key is a gazetteer term, and emit the mention frame directly. The token
-    stream never leaves the worker — no shuffle, no 20x exchange.
+    Per Arrow batch of (doc_id, contents): tokenize with offsets and keep
+    only gazetteer hits (:func:`_gazetteer_hits`), emitting the mention
+    frame directly. The token stream never leaves the worker — no
+    shuffle, no 20x exchange.
 
     ``gaz`` may be a plain dict (tests) or a ``sc.broadcast`` handle
     (production path): a 10^7-entry dictionary captured in the closure
     would be re-serialized into EVERY task binary, while a broadcast
     ships once per executor (see :func:`_bc_value`).
     """
-    import numpy as np
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz_d = _bc_value(gaz)
         key_of = _token_key_fn()
         for pdf in batches:
-            doc_ids: list[str] = []
-            toks: list[list[str]] = []
-            for d, c in zip(pdf["doc_id"], pdf["contents"]):
-                if c is None:
-                    continue
-                doc_ids.append(d)
-                toks.append(c.split(" "))
-            if not doc_ids:
-                yield pd.DataFrame(_EMPTY_MENTIONS)
-                continue
-            counts = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
-            flat = np.array([t for ts in toks for t in ts], dtype=object)
-            lens = np.fromiter((len(t) for t in flat), dtype=np.int64, count=len(flat))
-            # segmented cumsum: global cumsum of (len+1), reset per doc
-            csum = np.zeros(len(flat), dtype=np.int64)
-            np.cumsum(lens[:-1] + 1, out=csum[1:]) if len(flat) > 1 else None
-            doc_first = np.zeros(len(toks), dtype=np.int64)
-            np.cumsum(counts[:-1], out=doc_first[1:]) if len(toks) > 1 else None
-            begin = csum - np.repeat(csum[doc_first], counts)
-            pos = np.arange(len(flat)) - np.repeat(doc_first, counts)
-            docs_rep = np.repeat(np.array(doc_ids, dtype=object), counts)
-
-            keys = np.array([key_of(t) for t in flat], dtype=object)
-            hit = np.fromiter((k in gaz_d for k in keys), dtype=bool, count=len(flat))
-            if not hit.any():
-                yield pd.DataFrame(_EMPTY_MENTIONS)
-                continue
-            k, d, b, p = keys[hit], docs_rep[hit], begin[hit], pos[hit]
-            tl = lens[hit]
-            import hashlib
-
-            out = pd.DataFrame(
-                {
-                    "doc_id": d,
-                    "mention_id": [
-                        hashlib.md5(f"{dd}\x1f{kk}".encode()).hexdigest()
-                        for dd, kk in zip(d, k)
-                    ],
-                    "entity_class": [gaz_d[kk] for kk in k],
-                    "span": k,
-                    "begin": b.astype(np.int32),
-                    "end": (b + tl).astype(np.int32),
-                    "pos": p.astype(np.int32),
-                    "key": k,
-                }
+            cols = {n: [] for n in _MENTION_COLUMNS}
+            doc, mid, cls, span, begin, end, pos, key = (
+                cols[n].append for n in _MENTION_COLUMNS
             )
-            yield out
+            for doc_id, contents in zip(pdf["doc_id"], pdf["contents"]):
+                if contents is None:
+                    continue
+                hits = _gazetteer_hits(contents, gaz_d, key_of)
+                ids = _mention_ids(doc_id, [h[1] for h in hits])
+                for p, k, b, e in hits:
+                    doc(doc_id)
+                    mid(ids[k])
+                    cls(gaz_d[k])
+                    span(k)
+                    begin(b)
+                    end(e)
+                    pos(p)
+                    key(k)
+            yield _frame(cols)
 
     return scan
-
-
-_EMPTY_MENTIONS = {
-    "doc_id": pd.Series(dtype="object"),
-    "mention_id": pd.Series(dtype="object"),
-    "entity_class": pd.Series(dtype="object"),
-    "span": pd.Series(dtype="object"),
-    "begin": pd.Series(dtype="int32"),
-    "end": pd.Series(dtype="int32"),
-    "pos": pd.Series(dtype="int32"),
-    "key": pd.Series(dtype="object"),
-}
-
-_MENTION_DDL = (
-    "doc_id string, mention_id string, entity_class string, span string, "
-    "begin int, end int, pos int, key string"
-)
 
 
 def extract_mentions_native(documents: DataFrame, gazetteer: DataFrame) -> DataFrame:
@@ -279,24 +343,6 @@ def relation_triples(m: DataFrame, cooccur_window: int = 8) -> DataFrame:
     )
 
 
-def extract_triples_native(
-    documents: DataFrame,
-    gazetteer: DataFrame,
-    cooccur_window: int = 8,
-    sent_threshold: int = DEFAULT_SENT_THRESHOLD,
-) -> DataFrame:
-    """Full native extraction → reference-shape TripleRow bag.
-
-    NOTE: the returned plan references the mention frame twice (MENTIONS
-    rows + the relation self-join); callers fanning out to multiple
-    consumers should persist the mention frame once instead — see
-    :class:`dstlr_spark.plans.native_kg.NativeKG`.
-    """
-    docs = apply_sentence_guard(documents, sent_threshold)
-    m = extract_mentions_native(docs, gazetteer)
-    return mention_triples(m).unionByName(relation_triples(m, cooccur_window))
-
-
 # --------------------------------------------------------------------------
 # Fused single-pass extraction (the 100 TB path)
 # --------------------------------------------------------------------------
@@ -313,72 +359,36 @@ def _fused_bag_batches(gaz: dict[str, str], best_entity: dict[str, str], window:
     aggregate form in operators.linking). Both dictionaries may arrive
     as ``sc.broadcast`` handles (see :func:`_bc_value`).
     """
-    import hashlib
-
-    cols = ("doc", "subjectType", "subjectValue", "relation", "objectType",
-            "objectValue", "meta")
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz_d, best_d = _bc_value(gaz), _bc_value(best_entity)
         key_of = _token_key_fn()
         for pdf in batches:
-            # columnar accumulation: building millions of per-row dicts
-            # dominates the worker profile; lists-of-columns convert to
-            # Arrow an order of magnitude cheaper
-            c: dict[str, list] = {k: [] for k in cols}
-
-            def emit(doc, st, sv, rel, ot, ov, meta):
-                c["doc"].append(doc)
-                c["subjectType"].append(st)
-                c["subjectValue"].append(sv)
-                c["relation"].append(rel)
-                c["objectType"].append(ot)
-                c["objectValue"].append(ov)
-                c["meta"].append(meta)
-
+            out = _Triples()
             for doc_id, contents in zip(pdf["doc_id"], pdf["contents"]):
                 if contents is None:
                     continue
-                toks = contents.split(" ")
-                pos_l, key_l, beg_l = [], [], []
-                off = 0
-                for i, t in enumerate(toks):
-                    k = key_of(t)
-                    if k in gaz_d:
-                        pos_l.append(i)
-                        key_l.append(k)
-                        beg_l.append(off)
-                    off += len(t) + 1
-                if not pos_l:
+                hits = _gazetteer_hits(contents, gaz_d, key_of)
+                if not hits:
                     continue
-                ids = {}
-                for k in key_l:
-                    if k not in ids:
-                        ids[k] = hashlib.md5(f"{doc_id}\x1f{k}".encode()).hexdigest()
+                ids = _mention_ids(doc_id, [h[1] for h in hits])
                 # MENTIONS rows (one per occurrence, shared per-key id)
-                for p, k, b in zip(pos_l, key_l, beg_l):
-                    emit(doc_id, "Document", doc_id, "MENTIONS", "Mention", ids[k],
-                         dict(entity_class=gaz_d[k], span=k, begin=b,
-                              end=b + len(toks[p]), normalized=None, confidence=None))
+                for _, k, b, e in hits:
+                    out.mention(doc_id, ids[k], gaz_d[k], k, b, e)
                 # windowed co-occurrence relations (positions ascending)
-                for a in range(len(pos_l)):
-                    for b2 in range(a + 1, len(pos_l)):
-                        d = pos_l[b2] - pos_l[a]
+                for a in range(len(hits)):
+                    p0, k0 = hits[a][0], hits[a][1]
+                    for j in range(a + 1, len(hits)):
+                        p1, k1 = hits[j][0], hits[j][1]
+                        d = p1 - p0
                         if d > window:
                             break
-                        if key_l[a] == key_l[b2]:
+                        if k0 == k1:
                             continue
-                        emit(doc_id, "Mention", ids[key_l[a]],
-                             f"COOCCURS_{gaz_d[key_l[a]]}_{gaz_d[key_l[b2]]}",
-                             "Mention", ids[key_l[b2]],
-                             dict(entity_class=None, span=None, begin=None,
-                                  end=None, normalized=None,
-                                  confidence=1.0 / (1.0 + d)))
-                # LINKS_TO (one per distinct key; null when unresolvable)
-                for k, mid in ids.items():
-                    emit(doc_id, "Mention", mid, "LINKS_TO", "Entity",
-                         best_d.get(k), None)
-            yield pd.DataFrame(c) if c["doc"] else pd.DataFrame(_EMPTY_BATCH)
+                        out.relation(doc_id, ids[k0], f"COOCCURS_{gaz_d[k0]}_{gaz_d[k1]}",
+                                     ids[k1], 1.0 / (1.0 + d))
+                out.links(doc_id, ids, best_d)
+            yield out.frame()
 
     return scan
 
@@ -511,19 +521,13 @@ def _lemma_key_py(text: str) -> str:
     return " ".join(t for t in toks if t)
 
 
-def _stable_id_py(doc: str, key: str) -> str:
-    import hashlib
-
-    return hashlib.md5(f"{doc}\x1f{key}".encode()).hexdigest()
-
-
 class PatternAnnotator:
     """Deterministic stand-in for the reference's CoreNLP pipeline (X1).
 
     Instantiated lazily once per Python worker (module-global singleton
     — the analog of the reference's ``@transient lazy val`` per-JVM
     pipeline, ExtractTriples.scala:21-28). A production deployment
-    replaces ``annotate`` with a model-backed implementation; everything
+    replaces ``emit`` with a model-backed implementation; everything
     around it stays.
     """
 
@@ -538,7 +542,16 @@ class PatternAnnotator:
     def annotate(
         self, doc_id: str, contents: str, link_best: dict[str, str] | None = None
     ) -> list[dict]:
-        """One document → list of TripleRow dicts (X2-X9).
+        """One document → list of TripleRow dicts (X2-X9); see :meth:`emit`."""
+        out = _Triples()
+        self.emit(out, doc_id, contents, link_best)
+        return out.rows()
+
+    def emit(
+        self, out: _Triples, doc_id: str, contents: str,
+        link_best: dict[str, str] | None = None,
+    ) -> None:
+        """One document → its TripleRows, appended to ``out`` (X2-X9).
 
         With ``link_best`` (alias → arg-max entity id), one LINKS_TO row
         per distinct mention key is emitted in the SAME pass — the fused
@@ -548,9 +561,6 @@ class PatternAnnotator:
         (valid because the link score depends only on the surface form,
         and linkable gazetteer spans are punctuation-free, so span ≡
         lemma key for every resolvable mention)."""
-        triples: list[dict] = []
-        uuids: dict[str, str] = {}  # lemma key → id, per doc (X5)
-
         # --- mention pass (X3-X6): gazetteer phrases + SUTime-ish dates
         mentions = []  # (key, class, span, begin, end, normalized)
         for mt in self._gaz_re.finditer(contents):
@@ -576,16 +586,9 @@ class PatternAnnotator:
             key = _lemma_key_py(st.group(0))
             mentions.append((key, "SET", st.group(0), st.start(), st.end(), normalized))
 
+        uuids = _mention_ids(doc_id, [m[0] for m in mentions])  # key → id (X5)
         for key, cls, span, begin, end, normalized in mentions:
-            mid = uuids.setdefault(key, _stable_id_py(doc_id, key))
-            triples.append(
-                dict(
-                    doc=doc_id, subjectType="Document", subjectValue=doc_id,
-                    relation="MENTIONS", objectType="Mention", objectValue=mid,
-                    meta=dict(entity_class=cls, span=span, begin=begin, end=end,
-                              normalized=normalized, confidence=None),
-                )
-            )
+            out.mention(doc_id, uuids[key], cls, span, begin, end, normalized)
 
         # --- relation pass (X8): per sentence, cue between a subject-class
         # mention and an object-class mention; both endpoints must already
@@ -614,27 +617,11 @@ class PatternAnnotator:
                         # chars of separation halves the odds once
                         gap = (cue_lo - sm[4]) + (om[3] - cue_hi)
                         conf = 1.0 / (1.0 + gap / 10.0)
-                        triples.append(
-                            dict(
-                                doc=doc_id, subjectType="Mention",
-                                subjectValue=uuids[sm[0]], relation=rel,
-                                objectType="Mention", objectValue=uuids[om[0]],
-                                meta=dict(entity_class=None, span=None, begin=None,
-                                          end=None, normalized=None, confidence=conf),
-                            )
-                        )
+                        out.relation(doc_id, uuids[sm[0]], rel, uuids[om[0]], conf)
 
         # --- fused linking pass (X7): one LINKS_TO per distinct key
         if link_best is not None:
-            for key, mid in uuids.items():
-                triples.append(
-                    dict(
-                        doc=doc_id, subjectType="Mention", subjectValue=mid,
-                        relation="LINKS_TO", objectType="Entity",
-                        objectValue=link_best.get(key), meta=None,
-                    )
-                )
-        return triples
+            out.links(doc_id, uuids, link_best)
 
 
 _ANNOTATOR: PatternAnnotator | None = None
@@ -647,43 +634,32 @@ def _get_annotator() -> PatternAnnotator:
     return _ANNOTATOR
 
 
-_EMPTY_BATCH = {
-    "doc": pd.Series(dtype="object"),
-    "subjectType": pd.Series(dtype="object"),
-    "subjectValue": pd.Series(dtype="object"),
-    "relation": pd.Series(dtype="object"),
-    "objectType": pd.Series(dtype="object"),
-    "objectValue": pd.Series(dtype="object"),
-    "meta": pd.Series(dtype="object"),
-}
-
-
 def _extract_batches_factory(link_best=None):
     """mapInPandas body: document batches in, triple batches out (X9 fan-out).
 
     Per-document try/except mirrors the reference's failure isolation
     (ExtractTriples.scala:88,117-119): a failing document contributes 0
-    triples and never kills the job. ``link_best`` (plain dict or
-    ``sc.broadcast`` handle) enables the fused linking pass.
+    triples (its partial output is truncated away) and never kills the
+    job. ``link_best`` (plain dict or ``sc.broadcast`` handle) enables
+    the fused linking pass.
     """
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         annotator = _get_annotator()
         best = _bc_value(link_best)
         for pdf in batches:
-            out: list[dict] = []
+            out = _Triples()
             for doc_id, contents in zip(pdf["doc_id"], pdf["contents"]):
+                mark = out.size()
                 try:
-                    out.extend(annotator.annotate(doc_id, contents, best))
+                    annotator.emit(out, doc_id, contents, best)
                 except Exception:
-                    continue  # quarantine path: counted via observe upstream
-            yield pd.DataFrame(out) if out else pd.DataFrame(_EMPTY_BATCH)
+                    # quarantine path (counted via observe upstream): drop
+                    # whatever the failing document had already emitted
+                    out.truncate(mark)
+            yield out.frame()
 
     return extract
-
-
-# default body kept under the historical name (tests import it)
-_extract_batches = _extract_batches_factory()
 
 
 def extract_triples_pattern(

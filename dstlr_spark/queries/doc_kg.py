@@ -23,8 +23,9 @@ from dstlr_spark.operators.clean import (
     supporting_information,
 )
 from dstlr_spark.operators.extract import (
+    apply_sentence_guard,
     extract_mentions_native,
-    extract_triples_native,
+    relation_triples,
 )
 from dstlr_spark.functions.text import (
     PUNCT_RE,
@@ -159,11 +160,10 @@ def q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = extract_triples_native(
-        _documents(spark, sf_dir), _gazetteer(spark), COOCCUR_WINDOW,
-        sent_threshold=10_000,  # corpus has no sentence structure; guard off
-    )
-    return t.where(F.col("relation").startswith("COOCCURS")).select(
+    # corpus has no sentence structure; guard off
+    docs = apply_sentence_guard(_documents(spark, sf_dir), 10_000)
+    t = relation_triples(extract_mentions_native(docs, _gazetteer(spark)), COOCCUR_WINDOW)
+    return t.select(
         F.col("doc"),
         F.col("subjectValue").alias("subject_mention_id"),
         F.col("relation"),

@@ -13,8 +13,11 @@ from dstlr_spark.operators.extract import (
     PatternAnnotator,
     _lemma_key_py,
     apply_sentence_guard,
-    extract_triples_native,
+    extract_bag_fused,
+    extract_mentions_native,
     extract_triples_pattern,
+    mention_triples,
+    relation_triples,
     with_meta_map,
 )
 from dstlr_spark.schemas import DOCUMENT_SCHEMA
@@ -103,7 +106,9 @@ def test_lemma_key_python_spark_lockstep(spark):
 
 def test_annotator_failure_isolation(monkeypatch):
     """X2: a document that makes the annotator throw contributes 0 triples
-    and never kills the batch (ExtractTriples.scala:88,117-119).
+    and never kills the batch (ExtractTriples.scala:88,117-119) — even
+    when it throws after emitting part of its rows into the batch's
+    shared accumulator.
 
     Tested on the batch function directly (the Spark worker would import
     an unpatched module, so the monkeypatch must stay in-process).
@@ -112,21 +117,56 @@ def test_annotator_failure_isolation(monkeypatch):
 
     import dstlr_spark.operators.extract as ex
 
-    orig = PatternAnnotator.annotate
+    orig = PatternAnnotator.emit
 
-    def flaky(self, doc_id, contents, link_best=None):
+    def flaky(self, out, doc_id, contents, link_best=None):
+        orig(self, out, doc_id, contents, link_best)
         if doc_id == "boom":
+            assert out.size() > 0  # the partial rows are really there
             raise ValueError("synthetic failure")
-        return orig(self, doc_id, contents, link_best)
 
-    monkeypatch.setattr(PatternAnnotator, "annotate", flaky)
+    monkeypatch.setattr(PatternAnnotator, "emit", flaky)
     monkeypatch.setattr(ex, "_ANNOTATOR", None)
     pdf = pd.DataFrame(
-        {"doc_id": ["boom", "ok"],
-         "contents": ["Apple is based in Cupertino."] * 2}
+        {"doc_id": ["ok", "boom", "ok2"],
+         "contents": ["Apple is based in Cupertino."] * 3}
     )
-    out = pd.concat(list(ex._extract_batches(iter([pdf]))))
-    assert set(out["doc"]) == {"ok"}
+    out = pd.concat(list(ex._extract_batches_factory()(iter([pdf]))))
+    assert set(out["doc"]) == {"ok", "ok2"}
+    assert len(out) == 2 * len(PatternAnnotator().annotate("ok", pdf["contents"][0]))
+
+
+def test_all_miss_batches_are_empty_not_type_errors(spark):
+    """A partition whose documents hold no gazetteer term, no pattern
+    match, or no contents at all yields empty batches that Arrow still
+    accepts as the declared schema (string and struct columns included)
+    — through all three extraction bodies."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    import dstlr_spark.operators.extract as ex
+    from dstlr_spark.schemas import TRIPLE_SCHEMA
+
+    rows = [("m1", "nothing here to find"), ("m2", "plain words only"), ("m3", None)]
+    docs = spark.createDataFrame(rows, DOCUMENT_SCHEMA).coalesce(1)
+    gaz = spark.createDataFrame([("spark", "TOOL")], "term string, entity_class string")
+    ali = spark.createDataFrame([("spark", "Q1", 1.0)], "alias string, entity_id string, prior double")
+    assert extract_mentions_native(docs, gaz).count() == 0
+    assert extract_bag_fused(docs, gaz, ali).count() == 0
+    assert extract_triples_pattern(docs, alias_dict=ali).count() == 0
+
+    # the sentence guard drops the null row before the triple bodies see
+    # it in Spark, so feed the bodies the whole batch directly as well
+    batch = pd.DataFrame({"doc_id": [r[0] for r in rows], "contents": [r[1] for r in rows]})
+    bodies = [
+        ex._fused_bag_batches({"spark": "TOOL"}, {"spark": "Q1"}, 8),
+        ex._extract_batches_factory({"spark": "Q1"}),
+    ]
+    for body in bodies:
+        (frame,) = body(iter([batch]))
+        table = pa.Table.from_pandas(frame, schema=to_arrow_schema(TRIPLE_SCHEMA), preserve_index=False)
+        assert table.num_rows == 0
 
 
 def test_native_extraction_matches_manual(spark):
@@ -136,8 +176,8 @@ def test_native_extraction_matches_manual(spark):
     gaz = spark.createDataFrame(
         [("spark", "TOOL"), ("join", "OP"), ("scan", "OP")], "term string, entity_class string"
     )
-    t = extract_triples_native(docs, gaz, cooccur_window=2)
-    rows = t.collect()
+    m = extract_mentions_native(docs, gaz)
+    rows = mention_triples(m).unionByName(relation_triples(m, 2)).collect()
     mentions = [r for r in rows if r["relation"] == "MENTIONS"]
     rels = [r for r in rows if r["relation"].startswith("COOCCURS")]
     assert len(mentions) == 4  # spark x2, join, scan
