@@ -12,6 +12,7 @@
 #   make graph-parity    # graph-builder parity, plan and span-cap tests (not part of gate)
 #   make canon-parity    # canonicalization tests + its four oracle queries (not part of gate)
 #   make extract-parity  # extraction tests + the four extraction oracle queries (not part of gate)
+#   make media-parity    # codec reach guard + codec tests + the 11 mm_* oracle queries (not part of gate)
 
 SF ?= sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
@@ -23,7 +24,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench selftest perfbench graph-parity canon-parity extract-parity
+.PHONY: gate oracles test bench selftest perfbench graph-parity canon-parity extract-parity media-parity
 
 oracles:
 	@mkdir -p $(OUT)
@@ -64,6 +65,11 @@ canon-parity:
 extract-parity:
 	python -m pytest -q tests/test_extract.py tests/test_fuzz_text.py tests/test_golden.py
 	python scripts/check_oracles.py /root/testdata/sf0.01 kg_mentions kg_relations kg_links kg_triples_by_relation
+
+# quick pre-check for a change to a media codec or an mm_* query
+media-parity:
+	python -m pytest -q tests/test_media_reach.py tests/test_multimodal.py tests/test_jpeg.py tests/test_new_containers.py tests/test_tiff.py tests/test_webp.py tests/test_flac.py
+	python scripts/check_oracles.py /root/testdata/sf0.01 mm_media_meta mm_media_sniff mm_media_features mm_media_dedup mm_phash_groups mm_audio_vad mm_video_shots mm_frame_schedule mm_media_decode mm_audio_features mm_video_frames
 
 gate: oracles test bench
 	@echo "gate complete: $(OUT)/oracles_$(SF).log $(OUT)/pytest.log $(OUT)/bench.json"

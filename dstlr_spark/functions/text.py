@@ -18,12 +18,6 @@ from pyspark.sql import types as T
 PUNCT_RE = r"[.?,:;'\"!]"
 
 
-def normalize_relation_name(col: Column | str) -> Column:
-    """``per:city_of_birth`` → ``PER_CITY_OF_BIRTH``
-    (reference: replaceAll(":","_").toUpperCase, ExtractTriples.scala:222)."""
-    return F.upper(F.regexp_replace(F.col(col) if isinstance(col, str) else col, ":", "_"))
-
-
 # --- C2: lemma fallback -----------------------------------------------------
 # The reference keys mention identity on CoreNLP lemmas with a surface-form
 # fallback (``if (lemma == null) word else lemma``, ExtractTriples.scala:193).

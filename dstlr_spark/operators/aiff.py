@@ -11,19 +11,14 @@ flac`) — decode is bit-exact, no audio library.
 Decoder surface:
 - :func:`decode_aiff` — FORM/AIFF and FORM/AIFC chunk walk (big-endian
   sizes, word-aligned), COMM 80-bit extended-float rate, SSND
-  offset/blockSize, sample sizes 8 (signed, expanded ``<<8``), 16, 24
-  (sign-extended), 32; AIFC compression types ``NONE``/``twos`` (BE),
-  ``sowt`` (little-endian 16-bit), ``raw `` (offset-binary uint8),
-  ``ulaw``/``ULAW`` and ``alaw``/``ALAW`` (G.711 table expansions
-  shared with the WAV path), ``fl32``/``FL32``/``fl64``/``FL64``
-  (big-endian IEEE floats), and ``ima4`` (QuickTime IMA ADPCM —
-  34-byte packets of 64 samples, decoded per-packet from the 9-bit
-  predictor + step-index preamble with the WAV-shared IMA tables; see
-  :func:`_ima4_decode`). Remaining transform codecs (``MAC3``,
-  ``GSM ``, …) raise NotImplementedError.
-- :func:`decode_au` — ``.snd`` header walk; encodings 1 (µ-law),
-  2/3/4/5 (8/16/24/32-bit big-endian linear), 6/7 (BE floats),
-  27 (A-law). Compressed encodings (G.721/G.723) raise
+  offset/blockSize, 16-bit samples; AIFC compression types
+  ``NONE``/``twos`` (BE), ``sowt`` (little-endian 16-bit) and
+  ``fl32``/``FL32``/``fl64``/``FL64`` (big-endian IEEE floats). Other
+  sample widths and compression types (``raw ``, G.711, ``ima4``,
+  ``MAC3``, ``GSM ``, …) raise NotImplementedError.
+- :func:`decode_au` — ``.snd`` header walk; encodings 3 (16-bit
+  big-endian linear) and 6/7 (BE floats). Every other encoding
+  (µ-law, A-law, 8/24/32-bit linear, G.721/G.723) raises
   NotImplementedError.
 
 Both return ``(samples interleaved, sample_rate, n_channels)`` — the
@@ -33,9 +28,9 @@ container magic and every downstream feature/VAD reducer stays
 codec-blind.
 
 Encoders (:func:`encode_aiff`, :func:`encode_au`) are the
-deterministic FIXTURE side: they serialize planted samples so the gate
-corpus and tests can pin every decode path (including the 80-bit
-float rate round-trip at non-power-of-two rates like 44100).
+deterministic FIXTURE side: they serialize planted 16-bit samples for
+the gate corpus (including the 80-bit float rate round-trip at
+non-power-of-two rates like 44100).
 
 Scale shape: header walk + one ``frombuffer`` — map-only, vectorized;
 corpus parallelism is the 100 TB axis (one clip per row,
@@ -48,7 +43,7 @@ exactly those two exception types.
 
 Reference parity note: the reference engine has no audio surface;
 this extends the §2.12 multimodal mandate (SURVEY.md) the same way
-FLAC/ADPCM did.
+FLAC did.
 """
 
 from __future__ import annotations
@@ -109,91 +104,6 @@ def _unpack_f80(b: bytes) -> int:
     return int(rate)
 
 
-def _ima4_decode(data: bytes, n_channels: int):
-    """REAL AIFC ``ima4`` (QuickTime IMA ADPCM) decode → interleaved
-    int16.
-
-    Packet layout (Apple's fixed geometry): 34 bytes per channel per
-    packet — a 2-byte big-endian preamble whose top 9 bits are the
-    predictor (low 7 bits lost to the step index) and whose low 7 bits
-    are the IMA step index, then 32 data bytes = 64 nibbles, LOW
-    nibble first. Packets are channel-interleaved (ch0 packet, ch1
-    packet, …) and each decodes 64 sample frames with the SAME
-    step/index arithmetic as WAV IMA (tag 0x11) — the tables are
-    shared with :mod:`dstlr_spark.operators.multimodal`.
-
-    Each packet is decoded independently from its own preamble (the
-    seekability contract that lets QuickTime cut at any packet);
-    :func:`encode_aiff` masks its carried predictor to the preamble's
-    9-bit precision at every packet boundary, so encoder and decoder
-    states agree exactly and round-trips are deterministic.
-
-    Vectorized across (packet, channel) with one NumPy step per nibble
-    position — the same across-independent-units loop shape as the
-    WAV ADPCM decoders."""
-    import numpy as np
-
-    from dstlr_spark.operators.multimodal import (
-        _IMA_INDEX,
-        _IMA_STEP,
-        _ima_expand_vec,
-    )
-
-    ch = n_channels
-    if len(data) % (34 * ch):  # empty is legal: a zero-frame clip
-        raise ValueError("ima4 data not 34-byte-packet-aligned")
-    npk = len(data) // (34 * ch)
-    arr = np.frombuffer(data, np.uint8).reshape(npk, ch, 34)
-    pre = (arr[:, :, 0].astype(np.uint16) << 8) | arr[:, :, 1]
-    idx = (pre & 0x7F).astype(np.int32)
-    if (idx > 88).any():
-        raise ValueError("ima4 step index out of range (>88)")
-    pred = (pre & 0xFF80).view(np.int16).astype(np.int32)
-    byts = arr[:, :, 2:]
-    nibs = np.empty((npk, ch, 64), np.uint8)
-    nibs[:, :, 0::2] = byts & 0x0F
-    nibs[:, :, 1::2] = byts >> 4
-    out = np.empty((npk, 64, ch), np.int16)
-    step_tab = np.array(_IMA_STEP, np.int32)
-    idx_tab = np.array(_IMA_INDEX, np.int32)
-    for t in range(64):
-        n = nibs[:, :, t].astype(np.int32)
-        pred, idx = _ima_expand_vec(n, pred, idx, step_tab, idx_tab)
-        out[:, t, :] = pred
-    return out.reshape(-1)
-
-
-def _ima4_encode_packets(chan_samples, n_packets: int) -> bytes:
-    """Fixture-side ima4 packet stream for one clip: greedy IMA nibble
-    quantization, per-channel (predictor, index) state carried across
-    packets but masked to the preamble's 9-bit predictor precision at
-    every packet start — exactly what :func:`_ima4_decode` will
-    reconstruct, so the encoder's decode-side state IS the decoder's
-    state. ``chan_samples`` is (n_channels, n_packets*64) int32.
-    Quantize + state update delegate to the shared
-    :func:`dstlr_spark.operators.multimodal._ima_quantize_step`."""
-    from dstlr_spark.operators.multimodal import _ima_quantize_step
-
-    ch = len(chan_samples)
-    state = [(0, 0)] * ch  # (predictor, step index)
-    out = bytearray()
-    for p in range(n_packets):
-        for c in range(ch):
-            pred, idx = state[c]
-            pred &= ~0x7F  # preamble precision: the decoder sees this
-            out += bytes([((pred & 0xFF80) >> 8) & 0xFF, (pred & 0x80) | idx])
-            nibs = []
-            for t in range(64):
-                nib, pred, idx = _ima_quantize_step(
-                    int(chan_samples[c][p * 64 + t]), pred, idx
-                )
-                nibs.append(nib)
-            for lo, hi in zip(nibs[0::2], nibs[1::2]):
-                out.append(lo | (hi << 4))
-            state[c] = (pred, idx)
-    return bytes(out)
-
-
 def _pascal_even(name: bytes) -> bytes:
     """AIFC compressionName: count byte + chars, padded so the TOTAL
     (count byte included) is even."""
@@ -203,62 +113,26 @@ def _pascal_even(name: bytes) -> bytes:
     return out + (b"\x00" if len(out) & 1 else b"")
 
 
-def encode_aiff(
-    samples,
-    sample_rate: int,
-    n_channels: int = 1,
-    compression: str | None = None,
-    sample_size: int = 16,
-) -> bytes:
-    """Encode an int sample array (interleaved if multichannel) as
-    AIFF (``compression=None``) or AIFF-C (``"NONE"`` big-endian,
-    ``"sowt"`` little-endian 16-bit, ``"raw "`` offset-binary 8-bit).
-    Fixture-side determinism: chunk order is COMM (FVER first for
-    AIFC) then SSND; offset/blockSize zero."""
+def encode_aiff(samples, sample_rate: int, n_channels: int = 1,
+                compression: str | None = None) -> bytes:
+    """Encode an int16 sample array (interleaved if multichannel) as
+    AIFF (``compression=None``) or AIFF-C ``"sowt"`` (little-endian
+    16-bit). Fixture-side determinism: chunk order is COMM (FVER first
+    for AIFC) then SSND; offset/blockSize zero."""
     import numpy as np
 
     s = np.asarray(samples)
     if s.size % n_channels:
         raise ValueError("sample count not divisible by channel count")
     frames = s.size // n_channels
-    if compression is None or compression in ("NONE", "twos"):
-        if sample_size == 16:
-            data = s.astype(">i2").tobytes()
-        elif sample_size == 8:
-            data = s.astype(np.int8).tobytes()
-        elif sample_size == 32:
-            data = s.astype(">i4").tobytes()
-        elif sample_size == 24:
-            v = s.astype(np.int64) & 0xFFFFFF
-            tri = np.empty((s.size, 3), np.uint8)
-            tri[:, 0] = v >> 16
-            tri[:, 1] = (v >> 8) & 0xFF
-            tri[:, 2] = v & 0xFF
-            data = tri.tobytes()
-        else:
-            raise ValueError(f"unsupported fixture sample size {sample_size}")
+    if compression is None:
+        data = s.astype(">i2").tobytes()
     elif compression == "sowt":
-        if sample_size != 16:
-            raise ValueError("sowt fixtures are 16-bit")
         data = s.astype("<i2").tobytes()
-    elif compression == "raw ":
-        if sample_size != 8:
-            raise ValueError("raw  fixtures are 8-bit")
-        data = (s.astype(np.int16) + 128).astype(np.uint8).tobytes()
-    elif compression == "ima4":
-        if sample_size != 16:
-            raise ValueError("ima4 fixtures are 16-bit")
-        n_packets = -(-frames // 64)  # pad the tail packet
-        chans = np.zeros((n_channels, n_packets * 64), np.int32)
-        inter = s.astype(np.int32).reshape(frames, n_channels).T
-        chans[:, :frames] = inter
-        if frames:  # hold the last sample through the pad (no step jump)
-            chans[:, frames:] = inter[:, -1:]
-        data = _ima4_encode_packets(chans, n_packets)
     else:
         raise ValueError(f"unsupported fixture compression {compression!r}")
 
-    comm_body = struct.pack(">hIh", n_channels, frames, sample_size) + _pack_f80(
+    comm_body = struct.pack(">hIh", n_channels, frames, 16) + _pack_f80(
         sample_rate
     )
     chunks = b""
@@ -351,36 +225,18 @@ def decode_aiff(b: bytes):
     offset, _block = struct.unpack(">II", ssnd[:8])
     data = ssnd[8 + offset :]
 
-    if comp in (b"NONE", b"twos"):
-        s = _linear_from_be(data, bits)
-    elif comp == b"sowt":
+    if comp in (b"NONE", b"twos", b"sowt"):
         if bits != 16:
-            raise NotImplementedError("STUB: sowt at non-16-bit widths")
-        s = _linear_from_be(data, 16, little=True)
-    elif comp == b"raw ":
-        if bits != 8:
-            raise ValueError("AIFC raw  requires 8-bit samples")
-        u = np.frombuffer(data, np.uint8).astype(np.int16)
-        s = (u - 128) << 8
-    elif comp in (b"ulaw", b"ULAW"):
-        from dstlr_spark.operators.multimodal import _g711_ulaw_to_linear
-
-        s = _g711_ulaw_to_linear(np.frombuffer(data, np.uint8))
-    elif comp in (b"alaw", b"ALAW"):
-        from dstlr_spark.operators.multimodal import _g711_alaw_to_linear
-
-        s = _g711_alaw_to_linear(np.frombuffer(data, np.uint8))
+            raise NotImplementedError(f"STUB: {bits}-bit AIFF samples")
+        s = _linear_from_be(data, 16, little=comp == b"sowt")
     elif comp in (b"fl32", b"FL32"):
         s = np.frombuffer(data, ">f4").astype(np.float32, copy=False)
     elif comp in (b"fl64", b"FL64"):
         s = np.frombuffer(data, ">f8").astype(np.float64, copy=False)
-    elif comp == b"ima4":
-        s = _ima4_decode(data, n_channels)
     else:
         raise NotImplementedError(
-            f"STUB: AIFC compression {comp!r} is a transform codec "
-            "(MAC3/GSM/QDM2/…); NONE/twos/sowt/raw /G.711/fl32/fl64/"
-            "ima4 decode natively"
+            f"STUB: AIFC compression {comp!r} — NONE/twos/sowt/fl32/fl64 "
+            "decode natively"
         )
     want = frames * n_channels
     if s.size < want:
@@ -394,37 +250,13 @@ def decode_aiff(b: bytes):
 # Sun/NeXT AU
 # --------------------------------------------------------------------------
 
-#: AU encoding codes → (bits per sample, kind)
-_AU_LINEAR = {2: 8, 3: 16, 4: 24, 5: 32}
-
-
 def encode_au(samples, sample_rate: int, n_channels: int = 1,
-              encoding: int = 3, annotation: bytes = b"") -> bytes:
-    """Encode an int sample array as a Sun AU stream (big-endian
-    header + data). ``encoding`` 3 = 16-bit linear PCM (the fixture
-    default); 2/4/5 = 8/24/32-bit linear; 1 = µ-law (``samples`` are
-    then the RAW uint8 code bytes — the fixture side never needs a
-    lossy compressor, tests plant codes directly)."""
+              annotation: bytes = b"") -> bytes:
+    """Encode an int16 sample array as a Sun AU stream (big-endian
+    header + encoding 3, 16-bit linear PCM data)."""
     import numpy as np
 
-    s = np.asarray(samples)
-    if encoding == 3:
-        data = s.astype(">i2").tobytes()
-    elif encoding == 2:
-        data = s.astype(np.int8).tobytes()
-    elif encoding == 5:
-        data = s.astype(">i4").tobytes()
-    elif encoding == 4:
-        v = s.astype(np.int64) & 0xFFFFFF
-        tri = np.empty((s.size, 3), np.uint8)
-        tri[:, 0] = v >> 16
-        tri[:, 1] = (v >> 8) & 0xFF
-        tri[:, 2] = v & 0xFF
-        data = tri.tobytes()
-    elif encoding in (1, 27):
-        data = s.astype(np.uint8).tobytes()
-    else:
-        raise ValueError(f"unsupported fixture AU encoding {encoding}")
+    data = np.asarray(samples).astype(">i2").tobytes()
     if annotation and len(annotation) % 4:
         annotation += b"\x00" * (4 - len(annotation) % 4)
     hdr = struct.pack(
@@ -432,7 +264,7 @@ def encode_au(samples, sample_rate: int, n_channels: int = 1,
         b".snd",
         24 + len(annotation),
         len(data),
-        encoding,
+        3,
         sample_rate,
         n_channels,
     )
@@ -441,9 +273,8 @@ def encode_au(samples, sample_rate: int, n_channels: int = 1,
 
 def decode_au(b: bytes):
     """REAL Sun AU decode → (samples interleaved, sample_rate,
-    n_channels). Encodings: 1 µ-law, 2-5 linear 8/16/24/32 BE,
-    6/7 BE floats, 27 A-law; G.721/G.723 (23/24/25/26) raise
-    NotImplementedError."""
+    n_channels). Encodings: 3 (16-bit linear BE) and 6/7 (BE floats);
+    every other encoding raises NotImplementedError."""
     import numpy as np
 
     if len(b) < 24 or b[:4] != b".snd":
@@ -460,24 +291,8 @@ def decode_au(b: bytes):
         if data_size > len(data):
             raise ValueError("AU data truncated vs header size")
         data = data[:data_size]
-    if encoding == 1:
-        from dstlr_spark.operators.multimodal import _g711_ulaw_to_linear
-
-        return (
-            _g711_ulaw_to_linear(np.frombuffer(data, np.uint8)),
-            rate,
-            n_channels,
-        )
-    if encoding == 27:
-        from dstlr_spark.operators.multimodal import _g711_alaw_to_linear
-
-        return (
-            _g711_alaw_to_linear(np.frombuffer(data, np.uint8)),
-            rate,
-            n_channels,
-        )
-    if encoding in _AU_LINEAR:
-        return _linear_from_be(data, _AU_LINEAR[encoding]), rate, n_channels
+    if encoding == 3:
+        return _linear_from_be(data, 16), rate, n_channels
     if encoding == 6:
         return (np.frombuffer(data, ">f4").astype(np.float32, copy=False),
                 rate, n_channels)
@@ -485,7 +300,6 @@ def decode_au(b: bytes):
         return (np.frombuffer(data, ">f8").astype(np.float64, copy=False),
                 rate, n_channels)
     raise NotImplementedError(
-        f"STUB: AU encoding {encoding} is a compressed codec "
-        "(G.721/G.723/…); µ-law/A-law, linear 8-32, and floats decode "
-        "natively"
+        f"STUB: AU encoding {encoding} — 16-bit linear and floats "
+        "decode natively"
     )

@@ -13,16 +13,13 @@ the container-blind planted-value oracles through
 Decoder surface:
 - :func:`decode_caf` — ``caff`` file header, ``desc``/``data`` chunk
   walk; ``lpcm`` at 8/16/24/32-bit integer (big-endian, or little
-  via format flag bit 1) and 32/64-bit float (flag bit 0); ``ima4``
-  (the QuickTime 34-byte IMA packet stream, delegated to the shared
-  :func:`dstlr_spark.operators.aiff._ima4_decode`); the ``data``
-  chunk's leading 4-byte edit count skipped; remaining compressed
-  format ids (``aac ``, ``alac``…) raise NotImplementedError.
+  via format flag bit 1) and 32/64-bit float (flag bit 0); the
+  ``data`` chunk's leading 4-byte edit count skipped; compressed
+  format ids (``ima4``, ``aac ``, ``alac``…) raise NotImplementedError.
 - :func:`decode_w64` — RIFF/WAVE GUID walk (``riff``/``wave``/
   ``fmt ``/``data`` GUIDs matched on their leading fourcc), sizes
   include the header, chunks 8-byte aligned; the parsed fmt block
-  feeds the same format dispatch as WAV (PCM/float/G.711 via the
-  shared helpers).
+  feeds the same PCM/float format dispatch as WAV.
 
 Encoders are the deterministic fixture side. Contract: malformed →
 ValueError; unimplemented codecs → NotImplementedError; never
@@ -102,23 +99,10 @@ def decode_caf(b: bytes):
         raise ValueError(f"CAF sample rate {rate_f} invalid")
     if n_channels <= 0:
         raise ValueError(f"CAF channels={n_channels} invalid")
-    if fmt_id == b"ima4":
-        # same QuickTime 34-byte packet stream as AIFC ima4 (desc:
-        # mBytesPerPacket=34*ch, mFramesPerPacket=64, bits 0) —
-        # delegate to the shared packet decoder
-        if _bpp not in (0, 34 * n_channels) or _fpp not in (0, 64):
-            raise ValueError(
-                f"CAF ima4 packet geometry {_bpp}/{_fpp} invalid"
-            )
-        from dstlr_spark.operators.aiff import _ima4_decode
-
-        if len(data) < 4:
-            raise ValueError("CAF data chunk missing edit count")
-        return _ima4_decode(data[4:], n_channels), rate, n_channels
     if fmt_id != b"lpcm":
         raise NotImplementedError(
             f"STUB: CAF format {fmt_id!r} is a compressed codec "
-            "(aac/alac/…); lpcm and ima4 decode natively"
+            "(ima4/aac/alac/…); only lpcm decodes natively"
         )
     if len(data) < 4:
         raise ValueError("CAF data chunk missing edit count")
@@ -228,16 +212,7 @@ def decode_w64(b: bytes):
     elif audio_format == 3 and bits in (32, 64):
         return np.frombuffer(data, "<f4" if bits == 32 else "<f8"), rate, \
             n_channels
-    elif audio_format in (6, 7) and bits == 8:
-        from dstlr_spark.operators.multimodal import (
-            _g711_alaw_to_linear,
-            _g711_ulaw_to_linear,
-        )
-
-        table = _g711_alaw_to_linear if audio_format == 6 else \
-            _g711_ulaw_to_linear
-        return table(np.frombuffer(data, np.uint8)), rate, n_channels
     raise NotImplementedError(
-        f"STUB: W64 format={audio_format} bits={bits}; PCM/float/G.711 "
+        f"STUB: W64 format={audio_format} bits={bits}; PCM/float "
         "decode natively"
     )

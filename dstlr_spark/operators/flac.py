@@ -15,7 +15,8 @@ walk, frame sync + header CRC-8, UTF-8-style coded numbers, all four
 channel assignments, all subframe types (constant / verbatim / fixed
 0-4 / LPC to order 32 with quantized-coefficient shift), both residual
 coding methods (4-bit Rice, 5-bit Rice2) with partition orders and the
-raw-bits escape, wasted-bits shifts, and the frame CRC-16. Returns
+raw-bits escape, and the frame CRC-16 (wasted-bits shifts raise the
+STUB contract). Returns
 ``(samples interleaved int32 ndarray, sample_rate, n_channels)`` — the
 same contract as :func:`dstlr_spark.operators.multimodal.decode_wav`,
 so the audio operators dispatch on container magic and every
@@ -105,22 +106,6 @@ class _Bits:
         v >>= (last << 3) - end
         self.pos = end
         return v & ((1 << n) - 1)
-
-    def unary(self) -> int:
-        """Count 0-bits up to and excluding the terminating 1-bit."""
-        n = 0
-        while True:
-            if self.pos >= self.nbits:
-                raise ValueError("truncated FLAC stream (unary run)")
-            rem = 8 - (self.pos & 7)
-            chunk = self.b[self.pos >> 3] & ((1 << rem) - 1)
-            if chunk == 0:
-                n += rem
-                self.pos += rem
-            else:
-                z = rem - chunk.bit_length()
-                self.pos += z + 1
-                return n + z
 
 
 def _parse_streaminfo(data: bytes):
@@ -285,12 +270,8 @@ def _decode_subframe(br: _Bits, bs: int, bps: int):
     if br.read(1):
         raise ValueError("FLAC subframe pad bit set")
     t = br.read(6)
-    wasted = 0
     if br.read(1):
-        wasted = br.unary() + 1
-        bps -= wasted
-        if bps <= 0:
-            raise ValueError("FLAC wasted bits exceed sample size")
+        raise NotImplementedError("STUB: FLAC wasted-bits subframes")
     if t == 0:  # CONSTANT
         out = np.full(bs, _signed(br.read(bps), bps), np.int64)
     elif t == 1:  # VERBATIM
@@ -340,7 +321,7 @@ def _decode_subframe(br: _Bits, bs: int, bps: int):
             o[i] = v
     else:
         raise ValueError(f"reserved FLAC subframe type {t}")
-    return out << wasted
+    return out
 
 
 def _decode_frame(b: bytes, pos: int, si):
@@ -633,15 +614,12 @@ def encode_flac(
     stereo_mode: str = "indep",
     partition_order: int = 0,
     escape: bool = False,
-    wasted_bits: int = 0,
 ) -> bytes:
     """Deterministic FLAC fixture encoder. ``samples`` is interleaved;
     ``subframe`` picks the decode path under test (``constant`` /
     ``verbatim`` / ``fixed0``-``fixed4`` / ``lpc``), ``stereo_mode``
     one of ``indep``/``ls``/``rs``/``ms`` (2-channel only),
-    ``escape=True`` writes raw-bits partitions, ``wasted_bits`` shifts
-    samples down and flags the shift (caller passes pre-shiftABLE
-    samples, i.e. all divisible by 2**wasted_bits)."""
+    ``escape=True`` writes raw-bits partitions."""
     import numpy as np
 
     s = np.asarray(samples, np.int64).reshape(-1, n_channels)
@@ -704,43 +682,9 @@ def encode_flac(
                 (blk[:, 0] - blk[:, 1], bps + 1),
             ]
         for ch, ch_bps in chans:
-            if wasted_bits:
-                if (ch & ((1 << wasted_bits) - 1)).any():
-                    raise ValueError("samples not divisible for wasted_bits")
-                bw.write(0, 1)
-                # type bits written by _write_subframe need the flag
-                # AFTER them — write manually: reproduce its layout
-                # with the shifted samples and the wasted-bits field
-                subw = _BitW()
-                _write_subframe(
-                    subw, ch >> wasted_bits, ch_bps - wasted_bits,
-                    sub, partition_order, escape,
-                )
-                # splice: [pad(1) type(6)] + wasted flag/unary + rest.
-                # _write_subframe wrote pad+type+flag(0); rebuild:
-                bits = _bits_of(subw)
-                typ = bits[1:7]
-                rest = bits[8:]
-                for bit in typ:
-                    bw.write(bit, 1)
-                bw.write(1, 1)  # wasted-bits flag
-                bw.unary(wasted_bits - 1)
-                for bit in rest:
-                    bw.write(bit, 1)
-            else:
-                _write_subframe(bw, ch, ch_bps, sub, partition_order, escape)
+            _write_subframe(bw, ch, ch_bps, sub, partition_order, escape)
         bw.pad()
         frame = bytes(bw.out)
         bw.write(_crc16(frame), 16)
         out += bw.out
     return bytes(out)
-
-
-def _bits_of(bw: _BitW):
-    """Flatten a writer's content (whole bytes + residue) to a bit list."""
-    bits = []
-    for byte in bw.out:
-        bits.extend((byte >> (7 - i)) & 1 for i in range(8))
-    for i in range(bw.n - 1, -1, -1):
-        bits.append((bw.acc >> i) & 1)
-    return bits

@@ -1,108 +1,36 @@
-"""JPEG (ITU-T T.81) codec — pure NumPy + stdlib, no imaging library.
+"""Lossless JPEG (ITU-T T.81 Annex H) codec — pure Python + NumPy.
 
-Closes the last image-codec stub in :mod:`dstlr_spark.operators.
-multimodal.decode_rgb_bytes` (reference parity anchor: the reference
-pipeline treats media bytes as opaque payloads — SURVEY §2.12 makes
-decode a first-class curation operator). Decoder scope is the Huffman
-DCT family — effectively every JPEG on the web:
+The JPEG arm of :func:`dstlr_spark.operators.multimodal.
+decode_rgb_bytes` (reference parity anchor: the reference pipeline
+treats media bytes as opaque payloads — SURVEY §2.12 makes decode a
+first-class curation operator). Decoder scope is exactly what the
+``mm_media_decode`` corpus ships:
 
-- SOF0 (baseline) / SOF1 (extended sequential — identical decode
-  path) at 8- AND 12-BIT precision (12-bit: DC categories to 15, AC
-  to 14, level shift/clamp at 2^(P-1)/2^P, uint16 out), grayscale or
-  YCbCr, integer-ratio chroma subsampling (4:4:4, 4:2:2, 4:2:0,
-  4:1:1 …);
-- SOF2 PROGRESSIVE: spectral selection (DC scans, per-component AC
-  band scans with EOBn end-of-band runs spanning blocks) AND
-  successive approximation (Ah=0 scans at precision Al, then one-bit
-  refinement scans — newly-nonzero ±1«Al coefficients over
-  zero-HISTORY runs, correction bits for already-nonzero coefficients
-  consumed mid-walk, T.81 G.1.2.3);
-- SOF3 LOSSLESS (T.81 Annex H): Huffman-coded sample differences
-  (SSSS categories 0-16), all seven predictors, 2-16 bit precision
-  (8-bit → uint8, deeper → exact uint16), point transform, restart
-  resync — EXACT decode, so unlike the lossy modes it joins
-  planted-pixel equality oracles directly;
-- multi-segment DQT (8- and 16-bit precision) / DHT, DRI + RSTn
-  restart-marker resync (DC predictors AND EOB runs reset), 0xFF00
-  byte unstuffing;
-- dequant → de-zigzag → exact float IDCT batched as ONE broadcast
-  GEMM pair per component (no per-pixel, no per-block Python math) →
-  level shift → JFIF YCbCr→RGB.
+- SOF3 LOSSLESS: Huffman-coded sample differences (SSSS categories
+  0-16), all seven predictors, 2-16 bit precision (8-bit → uint8,
+  deeper → exact uint16), point transform, one interleaved scan of
+  1x1-sampled components (gray, gray + aux, RGB);
+- SOF11 LOSSLESS ARITHMETIC (the same prediction walk under the QM
+  coder, default conditioning) via :mod:`dstlr_spark.operators.
+  jpeg_arith`;
+- HIERARCHICAL (Annex J) lossless pyramids — DHP/EXP markers, SOF3
+  first frame, SOF7 differential frames — via :mod:`dstlr_spark.
+  operators.jpeg_hier` (dispatched on DHP below).
 
-- SOF9 SEQUENTIAL ARITHMETIC (QM coder, T.81 Annex D + F.1.4
-  conditioning, DAC parsing) and SOF10 PROGRESSIVE ARITHMETIC (the
-  SOF2 scan structure over the QM coder, T.81 G.2) via
-  :mod:`dstlr_spark.operators.jpeg_arith` — gated by exact pixel
-  equality with the Huffman twins (same quantized coefficients under
-  both entropy layers).
-
-- SOF11 LOSSLESS ARITHMETIC (the Annex-H prediction walk under the
-  QM coder) via :mod:`dstlr_spark.operators.jpeg_arith`, and
-  HIERARCHICAL (Annex J) lossless pyramids — DHP/EXP markers, SOF3
-  first frame, SOF7 differential frames — via
-  :mod:`dstlr_spark.operators.jpeg_hier` (dispatched on DHP below);
-  both exact, so both join the planted-pixel gate corpus.
-
-Sequential MULTI-SCAN files (any partition of the components
-across scans — fully non-interleaved real-block-grid scans or partial
-interleaves, T.81 A.2) decode through the shared coefficient stores
-and reconstruct once at EOI. 4-COMPONENT Adobe files decode through
-the APP14 transform byte: direct CMYK (transform 0 / unmarked) and
-YCCK (transform 2), both in the Adobe inverted-storage convention
-(RGB = round(c̃·k̃/maxv)); a 3-component transform 0 means the stored
-planes ARE RGB. Lossless Huffman multi-scan files (per-component-group Annex-H
-scans, per-scan predictors and point transforms) assemble at EOI.
-Hierarchical frames decode under BOTH entropy layers — lossless
-pyramids (SOF3+SOF7 Huffman, SOF11+SOF15 QM-arithmetic) exactly,
-sequential-DCT hierarchies (SOF0/1/9 + SOF5/SOF13 differentials,
-including the J.5 closing lossless frame), and PROGRESSIVE
-hierarchies (SOF2/SOF10 first frame + SOF6/SOF14 differentials) —
-every T.81 SOF process (0-15) now decodes in its legal context,
-closing the frame-type matrix. A MALFORMED stream (truncated entropy
-data, bad marker, invalid Huffman code, band-mixing scan headers,
-inconsistent dimensions) raises ``ValueError`` so the per-doc
-isolation wrapper in ``decode_image_np`` can skip it — the same
-exception contract every other decoder in this package pins
-(tests/test_multimodal.py, "exception contract").
-
-JPEG is lossy, so unlike BMP/PNG/GIF/PPM it cannot join the
-format-blind ``mm_media_decode`` gate corpus (the analytic oracle
-checks EXACT planted values; DCT quantization cannot reproduce an
-arbitrary planted array bit-for-bit). It is gated instead by the
-DC-exact analytic construction in tests/test_jpeg.py: constant 8×8
-blocks survive quantize→dequantize→IDCT EXACTLY (every AC is an exact
-float zero and the DC rounds to the planted integer), so those
-round-trips assert equality, not tolerance.
+All three are exact, so all three join the planted-pixel gate corpus.
+Everything else raises ``NotImplementedError("STUB: …")``: the DCT
+processes (SOF0/1/2/9/10, and DCT frames inside a hierarchy),
+subsampled, 4-component and multi-scan lossless frames, DAC
+conditioning and restart intervals. A MALFORMED stream (truncated
+entropy data, bad marker, invalid Huffman code, inconsistent
+dimensions) raises ``ValueError`` so the per-doc isolation wrapper in
+``decode_image_np`` can skip it — the exception contract every
+decoder in this package pins (tests/test_multimodal.py).
 """
 
 from __future__ import annotations
 
 import struct
-
-#: zigzag scan order: position k in the entropy-coded sequence lives at
-#: raster offset _ZIGZAG[k] of the 8×8 block (T.81 Figure A.6)
-_ZIGZAG = (
-    0, 1, 8, 16, 9, 2, 3, 10,
-    17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34,
-    27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36,
-    29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46,
-    53, 60, 61, 54, 47, 55, 62, 63,
-)
-
-
-def _dct_basis():
-    """The 8×8 DCT-II basis A with A[u, n] = c(u)/2 · cos((2n+1)uπ/16):
-    inverse transform is Aᵀ·F·A, forward is A·f·Aᵀ — both one GEMM."""
-    import numpy as np
-
-    u = np.arange(8).reshape(8, 1)
-    n = np.arange(8).reshape(1, 8)
-    a = 0.5 * np.cos((2 * n + 1) * u * np.pi / 16)
-    a[0] /= np.sqrt(2.0)
-    return a
 
 
 def _entropy_segments(b: bytes, pos: int):
@@ -238,34 +166,19 @@ def _extend(v: int, t: int) -> int:
 
 
 def decode_jpeg(b: bytes):
-    """Decode one baseline JPEG payload → (h, w, 3) uint8 RGB.
+    """Decode one lossless JPEG payload → (h, w, 3) RGB (uint8, or
+    exact uint16 above 8-bit precision).
 
     Grayscale decodes to replicated RGB (the :func:`decode_rgb_bytes`
-    contract every codec here shares); chroma planes upsample by
-    integer repetition then crop to the frame. See the module
-    docstring for scope and the exception contract.
+    contract every codec here shares). See the module docstring for
+    scope, the STUB modes and the exception contract.
     """
-    import numpy as np
-
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG stream (missing SOI)")
-    qtables: dict[int, object] = {}
-    htables: dict[tuple[int, int], dict] = {}
+    htables: dict[tuple[int, int], tuple] = {}
     frame = None  # (h, w, [(comp_id, H, V, tq), ...])
-    progressive = False
-    lossless = False
     arith = False
-    dac_dc: dict[int, tuple[int, int]] = {}  # table id → (L, U)
-    dac_ac: dict[int, int] = {}  # table id → Kx
     precision = 8
-    adobe_transform = None  # APP14 color-transform byte, if present
-    coefs = None  # progressive/multi-scan: per-comp coefficient stores
-    scans_done = 0
-    seq_multiscan = False  # sequential frame split across scans
-    ll_planes = None  # lossless multi-scan: per-comp plane store
-    ll_pts = None  # per-comp point transforms (applied at EOI)
-    coded_comps: set[int] = set()
-    restart_interval = 0
     pos = 2
     n = len(b)
     while True:
@@ -278,26 +191,7 @@ def decode_jpeg(b: bytes):
         if marker == 0xD8 or 0xD0 <= marker <= 0xD7:  # SOI / stray RST
             continue
         if marker == 0xD9:
-            if ll_planes is not None and scans_done:
-                if coded_comps != {c[0] for c in frame[2]}:
-                    raise ValueError(
-                        "JPEG multi-scan file is missing component scans"
-                    )
-                return _assemble_lossless(frame, ll_planes, ll_pts, precision)
-            if (progressive or seq_multiscan) and scans_done:
-                if seq_multiscan and coded_comps != {
-                    c[0] for c in frame[2]
-                }:
-                    raise ValueError(
-                        "JPEG multi-scan file is missing component scans"
-                    )
-                return _reconstruct(
-                    frame, coefs, qtables, precision,
-                    _color_transform(adobe_transform, len(frame[2])),
-                )
             raise ValueError("JPEG EOI before any scan")
-        if pos + 2 > n:
-            raise ValueError("JPEG truncated before SOS")
         if pos + 2 > n:
             raise ValueError("JPEG truncated segment length")
         seglen = struct.unpack(">H", b[pos : pos + 2])[0]
@@ -305,26 +199,7 @@ def decode_jpeg(b: bytes):
             raise ValueError("JPEG segment overruns stream")
         seg = b[pos + 2 : pos + seglen]
         pos += seglen
-        if marker == 0xDB:  # DQT (possibly several tables)
-            s = 0
-            while s < len(seg):
-                pq, tq = seg[s] >> 4, seg[s] & 15
-                s += 1
-                if pq not in (0, 1) or tq > 3:
-                    raise ValueError("JPEG DQT precision/id invalid")
-                width = 2 if pq else 1
-                if s + 64 * width > len(seg):
-                    raise ValueError("JPEG DQT truncated")
-                vals = (
-                    np.frombuffer(seg, ">u2", count=64, offset=s)
-                    if pq
-                    else np.frombuffer(seg, np.uint8, count=64, offset=s)
-                )
-                q = np.zeros(64, np.int32)
-                q[list(_ZIGZAG)] = vals  # de-zigzag to natural order
-                qtables[tq] = q.reshape(8, 8)
-                s += 64 * width
-        elif marker == 0xC4:  # DHT (possibly several tables)
+        if marker == 0xC4:  # DHT (possibly several tables)
             s = 0
             while s < len(seg):
                 tc, th = seg[s] >> 4, seg[s] & 15
@@ -338,25 +213,13 @@ def decode_jpeg(b: bytes):
                     raise ValueError("JPEG DHT truncated")
                 htables[(tc, th)] = _build_huffman(counts, seg[s : s + total])
                 s += total
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA, 0xCB):
-            # SOF0/1 baseline, SOF2 progressive, SOF3 lossless
-            # (predictive, Huffman), SOF9 sequential arithmetic (QM
-            # coder, jpeg_arith), SOF10 progressive arithmetic,
-            # SOF11 lossless arithmetic
+        elif marker in (0xC3, 0xCB):  # SOF3 lossless / SOF11 arithmetic
             if len(seg) < 6:
                 raise ValueError("JPEG SOF header truncated")
             prec = seg[0]
-            lossless = marker in (0xC3, 0xCB)
-            arith = marker in (0xC9, 0xCA, 0xCB)
-            if lossless:
-                if not 2 <= prec <= 16:
-                    raise ValueError(
-                        f"JPEG lossless precision {prec} out of range (2-16)"
-                    )
-            elif prec not in (8, 12):
-                raise NotImplementedError(
-                    f"STUB: JPEG {prec}-bit DCT precision — 8- and 12-bit "
-                    "decode"
+            if not 2 <= prec <= 16:
+                raise ValueError(
+                    f"JPEG lossless precision {prec} out of range (2-16)"
                 )
             h, w = struct.unpack(">HH", seg[1:5])
             ncomp = seg[5]
@@ -372,667 +235,158 @@ def decode_jpeg(b: bytes):
             for c in range(ncomp):
                 cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
                 comps.append((cid, hv >> 4, hv & 15, tq))
+            _check_lossless_frame(comps)
             frame = (h, w, comps)
             precision = prec
-            progressive = marker in (0xC2, 0xCA)
+            arith = marker == 0xCB
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA):
+            raise NotImplementedError(
+                f"STUB: JPEG SOF{marker - 0xC0} DCT frame — only lossless "
+                "(SOF3 / SOF11) and lossless hierarchical JPEG decode"
+            )
         elif marker == 0xDE:  # DHP: a hierarchical (Annex J) stream
             from dstlr_spark.operators.jpeg_hier import decode_jpeg_hier
 
             return decode_jpeg_hier(b)
         elif marker in (0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
-            # differential modes (sequential, progressive AND lossless)
-            # ARE implemented (jpeg_hier); without a leading DHP the
-            # stream is malformed, not unsupported
+            # differential frames belong to a hierarchy: without a
+            # leading DHP the stream is malformed, not unsupported
             raise ValueError(
                 "JPEG differential frame without a leading DHP"
             )
-        elif marker == 0xCC:  # DAC: arithmetic conditioning
-            s = 0
-            while s + 2 <= len(seg):
-                tc, tb = seg[s] >> 4, seg[s] & 15
-                cs = seg[s + 1]
-                s += 2
-                if tc == 0:
-                    ll, uu = cs & 15, cs >> 4
-                    if ll > uu or uu > 15:
-                        raise ValueError("JPEG DAC DC conditioning invalid")
-                    dac_dc[tb] = (ll, uu)
-                elif tc == 1:
-                    if not 1 <= cs <= 63:
-                        raise ValueError("JPEG DAC AC Kx out of range")
-                    dac_ac[tb] = cs
-                else:
-                    raise ValueError("JPEG DAC class invalid")
-        elif marker == 0xDD:  # DRI
+        elif marker == 0xCC:
+            raise NotImplementedError("STUB: JPEG arithmetic conditioning (DAC)")
+        elif marker == 0xDD:  # DRI: only a zero (restarts off) interval
             if len(seg) < 2:
                 raise ValueError("JPEG DRI truncated")
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xEE and seg[:5] == b"Adobe" and len(seg) >= 12:
-            # APP14: transform 0 = no transform (CMYK, or RGB when
-            # 3-component), 1 = YCbCr (the default anyway), 2 = YCCK
-            adobe_transform = seg[11]
+            if struct.unpack(">H", seg[:2])[0]:
+                raise NotImplementedError("STUB: JPEG restart intervals (DRI)")
         elif marker == 0xDA:  # SOS — entropy data follows the header
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
-            scan = []
-            if not seg:
-                raise ValueError("JPEG SOS header truncated")
-            ns = seg[0]
-            if len(seg) < 1 + 2 * ns + 3:
-                raise ValueError("JPEG SOS header truncated")
-            for c in range(ns):
-                cs, tdta = seg[1 + 2 * c : 3 + 2 * c]
-                scan.append((cs, tdta >> 4, tdta & 15))
-            ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
-            if lossless:
-                if ns != len(frame[2]):
-                    # multi-scan lossless file: decode each scan into
-                    # the shared plane store, assemble at EOI
-                    if not 1 <= ss <= 7:
-                        raise ValueError(
-                            f"JPEG lossless predictor {ss} invalid"
-                        )
-                    if se != 0 or (ahal >> 4) != 0:
-                        raise ValueError("JPEG lossless scan header invalid")
-                    if (ahal & 15) >= precision:
-                        raise ValueError("JPEG lossless point transform >= P")
-                    if ll_planes is None:
-                        ll_planes = [None] * len(frame[2])
-                        ll_pts = [0] * len(frame[2])
-                    if arith:
-                        from dstlr_spark.operators.jpeg_arith import (
-                            decode_lossless_scan_arith_into,
-                        )
-
-                        pos = decode_lossless_scan_arith_into(
-                            b, pos, frame, scan, precision, ss, ahal & 15,
-                            dac_dc, restart_interval, ll_planes, ll_pts,
-                        )
-                    else:
-                        pos = _decode_lossless_scan_into(
-                            b, pos, frame, scan, precision, ss, ahal & 15,
-                            htables, restart_interval, ll_planes, ll_pts,
-                        )
-                    coded_comps.update(cs for cs, _, _ in scan)
-                    scans_done += 1
-                    continue
-                if not 1 <= ss <= 7:
-                    raise ValueError(f"JPEG lossless predictor {ss} invalid")
-                if se != 0 or (ahal >> 4) != 0:
-                    raise ValueError("JPEG lossless scan header invalid")
-                if (ahal & 15) >= precision:
-                    raise ValueError("JPEG lossless point transform >= P")
-                if arith:
-                    from dstlr_spark.operators.jpeg_arith import (
-                        decode_lossless_scan_arith,
-                    )
-
-                    return decode_lossless_scan_arith(
-                        b, pos, frame, scan, precision, ss, ahal & 15,
-                        dac_dc, restart_interval,
-                    )
-                return _decode_lossless_scan(
-                    b, pos, frame, scan, precision, ss, ahal & 15,
-                    htables, restart_interval,
-                )
-            if arith and progressive:
-                from dstlr_spark.operators.jpeg_arith import (
-                    decode_progressive_scan_arith,
-                )
-
-                if coefs is None:
-                    coefs = _alloc_coefs(frame)
-                pos = decode_progressive_scan_arith(
-                    b, pos, frame, scan, ss, se, ahal >> 4, ahal & 15,
-                    dac_dc, dac_ac, coefs, restart_interval,
-                )
-                scans_done += 1
-                continue
+            scan, ss, pt = _lossless_sos(seg, frame, precision)
             if arith:
                 from dstlr_spark.operators.jpeg_arith import (
-                    decode_scan_arith,
-                    decode_seq_scan_arith_into,
+                    decode_lossless_scan_arith,
                 )
 
-                if ss != 0 or se != 63 or ahal != 0:
-                    raise ValueError("JPEG sequential scan header invalid")
-                if ns != len(frame[2]):
-                    # multi-scan sequential arithmetic: same EOI
-                    # assembly as the Huffman twin, QM entropy layer
-                    if coefs is None:
-                        coefs = _alloc_coefs(frame)
-                    pos = decode_seq_scan_arith_into(
-                        b, pos, frame, scan, dac_dc, dac_ac, coefs,
-                        restart_interval,
-                    )
-                    coded_comps.update(cs for cs, _, _ in scan)
-                    scans_done += 1
-                    seq_multiscan = True
-                    continue
-                return decode_scan_arith(
-                    b, pos, frame, scan, qtables, dac_dc, dac_ac,
-                    restart_interval, precision,
-                    _color_transform(adobe_transform, len(frame[2])),
+                return decode_lossless_scan_arith(
+                    b, pos, frame, scan, precision, ss, pt
                 )
-            if not progressive:
-                if ss != 0 or se != 63 or ahal != 0:
-                    raise ValueError("JPEG sequential scan header invalid")
-                if ns != len(frame[2]):
-                    # multi-scan sequential file (T.81 non-interleaved /
-                    # partially interleaved): decode into the shared
-                    # coefficient stores, reconstruct at EOI
-                    if coefs is None:
-                        coefs = _alloc_coefs(frame)
-                    pos = _decode_seq_scan_into(
-                        b, pos, frame, scan, htables, coefs,
-                        restart_interval, precision,
-                    )
-                    coded_comps.update(cs for cs, _, _ in scan)
-                    scans_done += 1
-                    seq_multiscan = True
-                    continue
-                return _decode_scan(
-                    b, pos, frame, scan, qtables, htables, restart_interval,
-                    precision,
-                    _color_transform(adobe_transform, len(frame[2])),
-                )
-            if coefs is None:
-                coefs = _alloc_coefs(frame)
-            pos = _decode_progressive_scan(
-                b, pos, frame, scan, ss, se, ahal >> 4, ahal & 15,
-                htables, coefs, restart_interval, precision,
+            return _decode_lossless_scan(
+                b, pos, frame, scan, precision, ss, pt, htables
             )
-            scans_done += 1
-        # APPn / COM / anything else: skip
+        # APPn / COM / DQT / anything else: skip
 
 
-def _cmyk_to_rgb(planes, maxv):
-    """Exact-plane CMYK (Adobe inverted storage) → RGB for the
-    lossless 4-component paths: RGB = round(c̃·k̃/maxv) channel-wise
-    on the reconstructed planes."""
-    import numpy as np
-
-    c, m, y2, k = (p.astype(np.float64) for p in planes)
-    rgb = np.stack(
-        [np.round(c * k / maxv), np.round(m * k / maxv),
-         np.round(y2 * k / maxv)],
-        axis=2,
-    )
-    return np.clip(rgb, 0, maxv).astype(planes[0].dtype)
-
-
-def _color_transform(adobe_transform, ncomp):
-    """Resolve the APP14 Adobe transform byte to the reconstruction
-    color path: 4-component frames are YCCK when the marker says 2
-    and direct CMYK otherwise (libjpeg's default for unmarked
-    4-component files); 3-component frames with an explicit
-    transform 0 are RGB stored directly (no YCbCr inverse)."""
-    if ncomp == 4:
-        return "ycck" if adobe_transform == 2 else "cmyk"
-    if ncomp == 3 and adobe_transform == 0:
-        return "rgb"
-    return None
-
-
-def _decode_scan(b, pos, frame, scan, qtables, htables, restart_interval,
-                 prec=8, transform=None):
-    import numpy as np
-
-    h, w, comps = frame
-    hmax, vmax = _sampling(comps)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = (w + mcu_w - 1) // mcu_w
-    mcus_y = (h + mcu_h - 1) // mcu_h
-    planes = []
-    tables = []
-    for (cid, ch_, cv, tq), (scid, td, ta) in zip(comps, scan):
-        if cid != scid:
-            raise ValueError("JPEG scan component order differs from frame")
-        if tq not in qtables:
-            raise ValueError(f"JPEG missing quant table {tq}")
-        if (0, td) not in htables or (1, ta) not in htables:
-            raise ValueError("JPEG missing Huffman table for scan")
-        # coefficient store: one row of 64 per block — the dequant,
-        # IDCT and block→plane scatter all batch over it afterwards
-        planes.append(
-            np.zeros((mcus_y * cv, mcus_x * ch_, 64), np.float64)
-        )
-        tables.append((htables[(0, td)], htables[(1, ta)], qtables[tq]))
-    segs, _end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    seg_i = 0
-    br = _BitReader(segs[0][0])
-    preds = [0] * len(comps)
-    nmcu = mcus_x * mcus_y
-    for m in range(nmcu):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            br = _BitReader(segs[seg_i][0])
-            preds = [0] * len(comps)
-        my, mx = divmod(m, mcus_x)
-        for ci, (cid, ch_, cv, tq) in enumerate(comps):
-            dc_t, ac_t, q = tables[ci]
-            for by in range(cv):
-                for bx in range(ch_):
-                    coef = [0.0] * 64  # plain list: scalar stores beat
-                    # per-element ndarray indexing (same finding as the
-                    # PNG Paeth loop in multimodal._unfilter)
-                    t = _huff_decode(br, dc_t)
-                    if t > (15 if prec == 12 else 11):
-                        raise ValueError("JPEG DC category out of range")
-                    preds[ci] += _extend(br.receive(t), t)
-                    coef[0] = preds[ci]
-                    k = 1
-                    while k < 64:
-                        rs = _huff_decode(br, ac_t)
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r == 15:  # ZRL: 16 zeros
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r
-                        if k > 63:
-                            raise ValueError("JPEG AC run past block end")
-                        coef[_ZIGZAG[k]] = _extend(br.receive(s), s)
-                        k += 1
-                    planes[ci][my * cv + by, mx * ch_ + bx] = coef
-    return _reconstruct(frame, planes, qtables, prec, transform)
-
-
-def _decode_seq_scan_into(b, pos, frame, scan, htables, coefs,
-                          restart_interval, prec=8, differential=False):
-    """One SEQUENTIAL Huffman scan over a SUBSET of the frame's
-    components (T.81 multi-scan files): the same per-block DC+AC code
-    as :func:`_decode_scan`, but written into the shared coefficient
-    stores with the PROGRESSIVE machinery's traversal — frame-global
-    MCU order with H×V blocks per scan component when the scan
-    interleaves several components, the component's REAL block grid
-    (no MCU pads) when ns == 1. Returns the offset of the terminating
-    marker; reconstruction happens once at EOI, so any partition of
-    components across scans decodes. ``differential`` switches the DC
-    prediction to zero for every block (T.81 F.1.1.5.1 — differential
-    hierarchical frames code each block's DC directly)."""
-    h, w, comps = frame
-    hmax, vmax = _sampling(comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    idxs = []
-    for cs, td, ta in scan:
-        match = [i for i, c in enumerate(comps) if c[0] == cs]
-        if not match:
-            raise ValueError(f"JPEG scan references unknown component {cs}")
-        if (0, td) not in htables or (1, ta) not in htables:
-            raise ValueError("JPEG missing Huffman table for scan")
-        idxs.append((match[0], htables[(0, td)], htables[(1, ta)]))
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    state = {"seg": 0, "br": _BitReader(segs[0][0]), "preds": [0] * len(idxs)}
-    dcmax = 15 if prec == 12 else 11
-
-    def _restart(unit: int) -> None:
-        if restart_interval and unit and unit % restart_interval == 0:
-            closing = segs[state["seg"]][1]
-            if closing is None or closing != (unit // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            state["seg"] += 1
-            if state["seg"] >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            state["br"] = _BitReader(segs[state["seg"]][0])
-            state["preds"] = [0] * len(idxs)
-
-    def _block(si: int, dc_t, ac_t, block) -> None:
-        br = state["br"]
-        t = _huff_decode(br, dc_t)
-        if t > dcmax + (1 if differential else 0):
-            raise ValueError("JPEG DC category out of range")
-        if differential:  # PRED = 0 in differential frames
-            block[0] = _extend(br.receive(t), t)
-        else:
-            state["preds"][si] += _extend(br.receive(t), t)
-            block[0] = state["preds"][si]
-        k = 1
-        while k < 64:
-            rs = _huff_decode(br, ac_t)
-            r, sz = rs >> 4, rs & 15
-            if sz == 0:
-                if r == 15:  # ZRL
-                    k += 16
-                    continue
-                break  # EOB
-            k += r
-            if k > 63:
-                raise ValueError("JPEG AC run past block end")
-            block[_ZIGZAG[k]] = _extend(br.receive(sz), sz)
-            k += 1
-
-    if len(idxs) > 1:  # partial interleave: MCU traversal, pads included
-        for m in range(mcus_x * mcus_y):
-            _restart(m)
-            my, mx = divmod(m, mcus_x)
-            for si, (ci, dc_t, ac_t) in enumerate(idxs):
-                _, ch_, cv, _ = comps[ci]
-                for by in range(cv):
-                    for bx in range(ch_):
-                        _block(si, dc_t, ac_t,
-                               coefs[ci][my * cv + by, mx * ch_ + bx])
-    else:  # non-interleaved: the component's real block grid
-        ci, dc_t, ac_t = idxs[0]
-        _, ch_, cv, _ = comps[ci]
-        cw = -(-w * ch_ // hmax)
-        chh = -(-h * cv // vmax)
-        bh_, bw_ = -(-chh // 8), -(-cw // 8)
-        for m in range(bh_ * bw_):
-            _restart(m)
-            row, col = divmod(m, bw_)
-            _block(0, dc_t, ac_t, coefs[ci][row, col])
-    return end
-
-
-def _ll_scan_layout(frame, scan_comp_idx):
-    """Sample-walk geometry for one lossless scan (T.81 A.2.3 applied
-    to sample grids): each component's own dimensions are
-    ``xi = ceil(X·Hi/Hmax)``, ``yi = ceil(Y·Vi/Vmax)``. A scan with
-    Ns > 1 walks MCUs of Hi×Vi samples per component over an MCU grid
-    of ``ceil(xi/Hi) × ceil(yi/Vi)`` (equal across the scan's
-    components by construction — validated), each plane edge-padded to
-    MCU multiples; a scan with Ns == 1 is non-interleaved: MCU = one
-    sample, raster over the UNPADDED (yi, xi) grid. Returns
-    ``(mcux, mcuy, [(yi, xi, hi, vi, ph, pw) per scan component])``
-    where (ph, pw) are the padded coding dims."""
-    h, w, comps = frame
-    if any(not 1 <= c[1] <= 4 or not 1 <= c[2] <= 4 for c in comps):
-        # corrupt SOF: factor 0 would divide by zero below; >4 is
-        # out of the T.81 range either way
-        raise ValueError("JPEG sampling factors out of range")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    geo = []
-    for i in scan_comp_idx:
-        _, hi, vi, _ = comps[i]
-        xi = -(-w * hi // hmax)
-        yi = -(-h * vi // vmax)
-        geo.append((yi, xi, hi, vi))
-    if len(scan_comp_idx) == 1:
-        yi, xi, hi, vi = geo[0]
-        return xi, yi, [(yi, xi, 1, 1, yi, xi)]
-    yi0, xi0, hi0, vi0 = geo[0]
-    mcux = -(-xi0 // hi0)
-    mcuy = -(-yi0 // vi0)
-    out = []
-    for yi, xi, hi, vi in geo:
-        if -(-xi // hi) != mcux or -(-yi // vi) != mcuy:
-            raise ValueError("JPEG lossless scan MCU grids disagree")
-        out.append((yi, xi, hi, vi, mcuy * vi, mcux * hi))
-    return mcux, mcuy, out
-
-
-def _decode_lossless_scan_sampled(
-    b, pos, frame, scan, prec, predictor, pt, htables, restart_interval,
-    planes_out, pts_out
-):
-    """Annex-H lossless scan decode generalized to arbitrary sampling
-    factors: the same per-plane difference walk as
-    :func:`_decode_lossless_scan`, but ordered by MCUs of Hi×Vi
-    samples per component (:func:`_ll_scan_layout`) with restart
-    intervals counted in MCUs. Prediction context is plane-local and
-    spans MCU boundaries (every Ra/Rb/Rc neighbor is decoded before
-    use under the MCU raster); after a restart each component's NEXT
-    sample predicts the default, mirroring the 1x1 path's convention
-    (and the encoder twin). Planes are decoded on the padded MCU grid
-    and stored CROPPED to (yi, xi); upsampling to frame resolution
-    happens at assembly (:func:`_assemble_lossless`)."""
-    h, w, comps = frame
-    by_id = {c[0]: i for i, c in enumerate(comps)}
-    sel = []
-    for cs, td, ta in scan:
-        if cs not in by_id:
-            raise ValueError(f"JPEG scan references unknown component {cs}")
-        if (0, td) not in htables:
-            raise ValueError("JPEG missing Huffman table for scan")
-        sel.append((by_id[cs], htables[(0, td)]))
-    mcux, mcuy, geo = _ll_scan_layout(frame, [ci for ci, _ in sel])
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    default = 1 << (prec - pt - 1)
-    planes = [[[0] * pw for _ in range(ph)] for *_, ph, pw in geo]
-    pending = [True] * len(sel)  # per-comp: next sample predicts default
-    seg_i = 0
-    br = _BitReader(segs[0][0])
-    for m in range(mcux * mcuy):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            br = _BitReader(segs[seg_i][0])
-            pending = [True] * len(sel)
-        mr, mc = divmod(m, mcux)
-        for si, (ci, tbl) in enumerate(sel):
-            yi, xi, hi, vi, ph, pw = geo[si]
-            p = planes[si]
-            base_r, base_c = mr * vi, mc * hi
-            for dv in range(vi):
-                r = base_r + dv
-                row = p[r]
-                above = p[r - 1] if r else None
-                for dh in range(hi):
-                    c = base_c + dh
-                    t = _huff_decode(br, tbl)
-                    if t > 16:
-                        raise ValueError("JPEG lossless SSSS > 16")
-                    d = 32768 if t == 16 else _extend(br.receive(t), t)
-                    if pending[si]:
-                        px = default
-                        pending[si] = False
-                    elif r == 0:
-                        px = row[c - 1]
-                    elif c == 0:
-                        px = above[0]
-                    else:
-                        ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                        if predictor == 1:
-                            px = ra
-                        elif predictor == 2:
-                            px = rb
-                        elif predictor == 3:
-                            px = rc_
-                        elif predictor == 4:
-                            px = ra + rb - rc_
-                        elif predictor == 5:
-                            px = ra + ((rb - rc_) >> 1)
-                        elif predictor == 6:
-                            px = rb + ((ra - rc_) >> 1)
-                        else:
-                            px = (ra + rb) >> 1
-                    row[c] = (px + d) & 0xFFFF
-    for si, (ci, _) in enumerate(sel):
-        yi, xi, *_ = geo[si]
-        planes_out[ci] = [r[:xi] for r in planes[si][:yi]]
-        pts_out[ci] = pt
-    return end
-
-
-def _assemble_lossless(frame, planes, pts, prec):
-    """Lossless output assembly shared by the single-scan and
-    EOI-multi-scan paths: apply each component's point-transform shift
-    (H.2.3), upsample subsampled components to frame resolution by
-    integer sample replication, crop to (h, w), and stack — grayscale
-    replicates to RGB, 4 components go through the Adobe CMYK
-    convention, 3 stack directly (lossless JPEG carries no implicit
-    color transform)."""
-    import numpy as np
-
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if any(hmax % c[1] or vmax % c[2] for c in comps):
+def _check_lossless_frame(comps) -> None:
+    """Lossless frame shapes outside the decoder's scope raise the
+    STUB contract: subsampled components and 4-component (CMYK)
+    frames."""
+    if any(c[1] != 1 or c[2] != 1 for c in comps):
         raise NotImplementedError(
-            "STUB: non-integer chroma upsampling ratios"
+            "STUB: lossless JPEG with sampling factors != 1x1"
         )
+    if len(comps) == 4:
+        raise NotImplementedError("STUB: 4-component (CMYK) lossless JPEG")
+
+
+def _lossless_sos(seg: bytes, frame, precision: int):
+    """Parse a lossless SOS header → (scan, predictor, point
+    transform), where scan is [(comp_id, Td, Ta), ...] and must code
+    every frame component in one interleaved scan."""
+    if not seg:
+        raise ValueError("JPEG SOS header truncated")
+    ns = seg[0]
+    if len(seg) < 1 + 2 * ns + 3:
+        raise ValueError("JPEG SOS header truncated")
+    if ns != len(frame[2]):
+        raise NotImplementedError(
+            "STUB: multi-scan (non-interleaved) lossless JPEG"
+        )
+    scan = []
+    for c in range(ns):
+        cs, tdta = seg[1 + 2 * c : 3 + 2 * c]
+        if cs != frame[2][c][0]:
+            raise ValueError("JPEG scan component order differs from frame")
+        scan.append((cs, tdta >> 4, tdta & 15))
+    ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
+    if not 1 <= ss <= 7:
+        raise ValueError(f"JPEG lossless predictor {ss} invalid")
+    if se != 0 or (ahal >> 4) != 0:
+        raise ValueError("JPEG lossless scan header invalid")
+    if (ahal & 15) >= precision:
+        raise ValueError("JPEG lossless point transform >= P")
+    return scan, ss, ahal & 15
+
+
+def _ll_predict(p, r, c, predictor, default, reset):
+    """Annex-H prediction (H.1.2.1 + the H.2.3 boundary rules): the
+    scan start predicts 2^(P−Pt−1), the rest of the first line
+    predicts Ra, the first column Rb. Shared by the Huffman and
+    arithmetic lossless walks and their encoders."""
+    if reset:
+        return default
+    if r == 0:
+        return p[0][c - 1]
+    if c == 0:
+        return p[r - 1][0]
+    row, above = p[r], p[r - 1]
+    ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
+    if predictor == 1:
+        return ra
+    if predictor == 2:
+        return rb
+    if predictor == 3:
+        return rc_
+    if predictor == 4:
+        return ra + rb - rc_
+    if predictor == 5:
+        return ra + ((rb - rc_) >> 1)
+    if predictor == 6:
+        return rb + ((ra - rc_) >> 1)
+    return (ra + rb) >> 1
+
+
+def _ll_to_rgb(planes, prec: int, pt: int = 0):
+    """Reconstructed lossless planes → (h, w, 3) RGB: undo the point
+    transform, mask to P bits, replicate gray (a 2-component frame's
+    second plane is color-undefined and dropped)."""
+    import numpy as np
+
     mask = (1 << prec) - 1
     dtype = np.uint8 if prec <= 8 else np.uint16
-    out = []
-    for (cid, hi, vi, _), p, pt in zip(comps, planes, pts):
-        a = ((np.array(p, np.int64) << pt) & mask).astype(dtype)
-        if vi != vmax:
-            a = np.repeat(a, vmax // vi, axis=0)
-        if hi != hmax:
-            a = np.repeat(a, hmax // hi, axis=1)
-        out.append(a[:h, :w])
-    if len(out) in (1, 2):  # 2-comp: gray + aux dropped
+    out = ((np.array(planes, np.int64) << pt) & mask).astype(dtype)
+    if len(out) in (1, 2):
         return np.repeat(out[0][..., None], 3, axis=2)
-    if len(out) == 4:
-        return _cmyk_to_rgb(out, mask)
-    return np.stack(out, axis=2)
+    return np.stack([out[0], out[1], out[2]], axis=2)
 
 
-def _decode_lossless_scan_into(
-    b, pos, frame, scan, prec, predictor, pt, htables, restart_interval,
-    planes_out, pts_out
-):
-    """One lossless scan over a SUBSET of the frame's components
-    (multi-scan lossless files): the Annex-H difference walk of
-    :func:`_decode_lossless_scan` restricted to the scan's components
-    — interleaved one sample per scan component when ns > 1, a plain
-    raster walk when ns == 1 — writing raw (pre-point-transform)
-    planes into ``planes_out`` and recording each component's Pt in
-    ``pts_out`` (T.81 allows per-scan point transforms). Returns the
-    offset of the terminating marker; output assembly happens at EOI.
-    Frames with sampling factors != 1x1 route through the generalized
-    MCU walk (:func:`_decode_lossless_scan_sampled`)."""
-    h, w, comps = frame
-    if any(c[1] != 1 or c[2] != 1 for c in comps):
-        return _decode_lossless_scan_sampled(
-            b, pos, frame, scan, prec, predictor, pt, htables,
-            restart_interval, planes_out, pts_out,
-        )
-    by_id = {c[0]: i for i, c in enumerate(comps)}
-    sel = []
-    for cs, td, ta in scan:
-        if cs not in by_id:
-            raise ValueError(f"JPEG scan references unknown component {cs}")
-        if (0, td) not in htables:
-            raise ValueError("JPEG missing Huffman table for scan")
-        sel.append((by_id[cs], htables[(0, td)]))
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    default = 1 << (prec - pt - 1)
-    planes = [[[0] * w for _ in range(h)] for _ in sel]
-    seg_i = 0
-    br = _BitReader(segs[0][0])
-    reset = True
-    for m in range(h * w):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            br = _BitReader(segs[seg_i][0])
-            reset = True
-        r, c = divmod(m, w)
-        for si, (ci, tbl) in enumerate(sel):
-            t = _huff_decode(br, tbl)
-            if t > 16:
-                raise ValueError("JPEG lossless SSSS > 16")
-            d = 32768 if t == 16 else _extend(br.receive(t), t)
-            p = planes[si]
-            if reset:
-                px = default
-            elif r == 0:
-                px = p[0][c - 1]
-            elif c == 0:
-                px = p[r - 1][0]
-            else:
-                row, above = p[r], p[r - 1]
-                ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                if predictor == 1:
-                    px = ra
-                elif predictor == 2:
-                    px = rb
-                elif predictor == 3:
-                    px = rc_
-                elif predictor == 4:
-                    px = ra + rb - rc_
-                elif predictor == 5:
-                    px = ra + ((rb - rc_) >> 1)
-                elif predictor == 6:
-                    px = rb + ((ra - rc_) >> 1)
-                else:
-                    px = (ra + rb) >> 1
-            p[r][c] = (px + d) & 0xFFFF
-        reset = False
-    for si, (ci, _) in enumerate(sel):
-        planes_out[ci] = planes[si]
-        pts_out[ci] = pt
-    return end
-
-
-def _decode_lossless_scan(
-    b, pos, frame, scan, prec, predictor, pt, htables, restart_interval
-):
+def _decode_lossless_scan(b, pos, frame, scan, prec, predictor, pt, htables):
     """SOF3 lossless scan (T.81 Annex H): one Huffman-coded difference
     category (SSSS 0-16, DC-class table; SSSS=16 means +32768 with no
     magnitude bits) per sample per component, interleaved one sample
     per component per MCU, reconstructed through the selected
-    predictor (H.1.2.1) with modulo-2^16 arithmetic. Boundary rules:
-    the first sample of the scan and of each restart interval predicts
-    2^(P-Pt-1); the rest of the first line predicts Ra; the first
-    column predicts Rb. The decoder output is shifted left by the
-    point transform Pt (H.2.3). Exact by construction — this is the
-    one JPEG mode that CAN join planted-pixel equality oracles."""
-    import numpy as np
-
+    predictor (:func:`_ll_predict`) with modulo-2^16 arithmetic. The
+    decoder output is shifted left by the point transform Pt (H.2.3).
+    Exact by construction — this is the one JPEG mode that CAN join
+    planted-pixel equality oracles."""
     h, w, comps = frame
-    if any(c[1] != 1 or c[2] != 1 for c in comps):
-        planes_out = [None] * len(comps)
-        pts_out = [0] * len(comps)
-        _decode_lossless_scan_sampled(
-            b, pos, frame, scan, prec, predictor, pt, htables,
-            restart_interval, planes_out, pts_out,
-        )
-        return _assemble_lossless(frame, planes_out, pts_out, prec)
     tables = []
-    for (cid, ch_, cv, tq), (scid, td, ta) in zip(comps, scan):
-        if cid != scid:
-            raise ValueError("JPEG scan component order differs from frame")
+    for _cid, td, _ta in scan:
         if (0, td) not in htables:
             raise ValueError("JPEG missing Huffman table for scan")
         tables.append(htables[(0, td)])
     segs, _end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
+    if len(segs) > 1:
         raise ValueError("JPEG RST marker without a DRI segment")
     default = 1 << (prec - pt - 1)
     nc = len(comps)
     # plain nested lists: scalar loads/stores beat per-element ndarray
-    # indexing (same finding as the baseline coefficient loop)
+    # indexing
     planes = [[[0] * w for _ in range(h)] for _ in range(nc)]
-    seg_i = 0
     br = _BitReader(segs[0][0])
-    reset = True  # prediction reset pending (scan start / after RSTn)
     for m in range(h * w):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            br = _BitReader(segs[seg_i][0])
-            reset = True
         r, c = divmod(m, w)
         for ci in range(nc):
             t = _huff_decode(br, tables[ci])
@@ -1040,353 +394,19 @@ def _decode_lossless_scan(
                 raise ValueError("JPEG lossless SSSS > 16")
             d = 32768 if t == 16 else _extend(br.receive(t), t)
             p = planes[ci]
-            if reset:
-                px = default
-            elif r == 0:
-                px = p[0][c - 1]  # first line: Ra
-            elif c == 0:
-                px = p[r - 1][0]  # line start: Rb
-            else:
-                row, above = p[r], p[r - 1]
-                ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                if predictor == 1:
-                    px = ra
-                elif predictor == 2:
-                    px = rb
-                elif predictor == 3:
-                    px = rc_
-                elif predictor == 4:
-                    px = ra + rb - rc_
-                elif predictor == 5:
-                    px = ra + ((rb - rc_) >> 1)
-                elif predictor == 6:
-                    px = rb + ((ra - rc_) >> 1)
-                else:
-                    px = (ra + rb) >> 1
+            px = _ll_predict(p, r, c, predictor, default, m == 0)
             p[r][c] = (px + d) & 0xFFFF
-        reset = False
-    mask = (1 << prec) - 1
-    dtype = np.uint8 if prec <= 8 else np.uint16
-    out = np.array(planes, np.int64)
-    out = ((out << pt) & mask).astype(dtype)
-    if nc in (1, 2):  # 2-comp: gray + aux dropped (color-undefined)
-        return np.repeat(out[0][..., None], 3, axis=2)
-    if nc == 4:
-        return _cmyk_to_rgb(list(out), mask)
-    return np.stack([out[0], out[1], out[2]], axis=2)
-
-
-def _sampling(comps):
-    hs = [c[1] for c in comps]
-    vs = [c[2] for c in comps]
-    hmax, vmax = max(hs), max(vs)
-    if min(hs) < 1 or min(vs) < 1 or hmax > 4 or vmax > 4:
-        raise ValueError("JPEG sampling factors out of range")
-    if any(hmax % f for f in hs) or any(vmax % f for f in vs):
-        raise NotImplementedError(
-            "STUB: non-integer chroma upsampling ratios"
-        )
-    return hmax, vmax
-
-
-def _alloc_coefs(frame):
-    """Per-component raw coefficient stores at MCU-padded block
-    granularity — (block_rows, block_cols, 64) float64, accumulated
-    across progressive scans (the baseline path fills the same shape
-    in its single scan)."""
-    import numpy as np
-
-    h, w, comps = frame
-    hmax, vmax = _sampling(comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    return [
-        np.zeros((mcus_y * cv, mcus_x * ch_, 64), np.float64)
-        for (cid, ch_, cv, tq) in comps
-    ]
-
-
-def _reconstruct(frame, coefs, qtables, prec=8, transform=None):
-    """Shared finish: batched dequant + IDCT (one broadcast GEMM pair
-    per component — never per block), block→plane transpose-reshape
-    scatter, integer-ratio chroma upsample, crop, level shift, color
-    transform. ``prec`` generalizes the level shift / chroma center
-    to 2^(P-1) and the clamp to [0, 2^P), per T.81 A.3.1 — 12-bit
-    frames return uint16. ``transform`` (from
-    :func:`_color_transform`) selects the color path: None = JFIF
-    YCbCr→RGB (3-comp default), "rgb" = components stored as RGB
-    directly (Adobe transform 0), "cmyk"/"ycck" = 4-component Adobe
-    conventions — values are stored INVERTED (x̃ = maxv − ink), so
-    RGB = round(c̃·k̃/maxv) channel-wise, with YCCK first undoing the
-    YCbCr transform on the CMY channels."""
-    import numpy as np
-
-    h, w, comps = frame
-    hmax, vmax = _sampling(comps)
-    basis = _dct_basis()
-    center = float(1 << (prec - 1))
-    maxv = (1 << prec) - 1
-    dtype = np.uint8 if prec <= 8 else np.uint16
-    out = []
-    for ci, (cid, ch_, cv, tq) in enumerate(comps):
-        if tq not in qtables:
-            raise ValueError(f"JPEG missing quant table {tq}")
-        nbr, nbc = coefs[ci].shape[:2]
-        blk = coefs[ci].reshape(-1, 8, 8) * qtables[tq]
-        px = basis.T @ blk @ basis + center
-        p = (
-            px.reshape(nbr, nbc, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(nbr * 8, nbc * 8)
-        )
-        if ch_ != hmax or cv != vmax:
-            p = np.repeat(np.repeat(p, vmax // cv, axis=0), hmax // ch_, axis=1)
-        out.append(p[:h, :w])
-    if len(out) in (1, 2):
-        # 2-comp is T.81-legal but color-undefined (even libjpeg
-        # calls it JCS_UNKNOWN): component 0 is treated as luma and
-        # the auxiliary plane dropped — the PNG gray+alpha convention
-        # decode_png already uses
-        g = np.clip(np.round(out[0]), 0, maxv).astype(dtype)
-        return np.repeat(g[..., None], 3, axis=2)
-    if len(out) == 4:
-        c, m, y2, k = out
-        if transform == "ycck":
-            yy, cb, cr = c, m, y2
-            c = yy + 1.402 * (cr - center)
-            m = yy - 0.344136 * (cb - center) - 0.714136 * (cr - center)
-            y2 = yy + 1.772 * (cb - center)
-        c = np.clip(np.round(c), 0, maxv)
-        m = np.clip(np.round(m), 0, maxv)
-        y2 = np.clip(np.round(y2), 0, maxv)
-        k = np.clip(np.round(k), 0, maxv)
-        rgb = np.stack(
-            [np.round(c * k / maxv), np.round(m * k / maxv),
-             np.round(y2 * k / maxv)],
-            axis=2,
-        )
-        return np.clip(rgb, 0, maxv).astype(dtype)
-    if transform == "rgb":
-        rgb = np.stack(out, axis=2)
-        return np.clip(np.round(rgb), 0, maxv).astype(dtype)
-    y, cb, cr = out
-    r = y + 1.402 * (cr - center)
-    g = y - 0.344136 * (cb - center) - 0.714136 * (cr - center)
-    bl = y + 1.772 * (cb - center)
-    rgb = np.stack([r, g, bl], axis=2)
-    return np.clip(np.round(rgb), 0, maxv).astype(dtype)
-
-
-def _decode_progressive_scan(b, pos, frame, scan, ss, se, ah, al,
-                             htables, coefs, restart_interval, prec=8,
-                             differential=False):
-    """Decode ONE progressive scan (T.81 G.2) into the shared raw
-    coefficient stores, returning the offset of the marker that ended
-    it. Spectral selection: a scan carries either the DC coefficient
-    (Ss=Se=0, optionally interleaved over several components) or one
-    AC band [Ss, Se] of a SINGLE component. Successive approximation:
-    Ah=0 scans deliver coefficients at precision Al (values << Al);
-    Ah>0 scans refine exactly bit Al — newly-nonzero ±1<<Al
-    coefficients ride (run, 1) symbols whose runs count ZERO-HISTORY
-    positions only, while already-nonzero coefficients consume one
-    correction bit each as the decoder walks past them (G.1.2.3).
-    EOBn symbols start end-of-band runs spanning whole blocks; during
-    a refinement EOB run the rest of the band still pays correction
-    bits. Restart markers reset DC predictors AND the EOB run.
-    ``differential`` (progressive frames inside a T.81 Annex-J
-    hierarchy, SOF6) switches the DC-first pass to PRED = 0 per block
-    (F.1.1.5.1: each block's point-transformed DC is coded directly);
-    DC refinement and every AC pass are unchanged — OR-ing the
-    correction bit at position Al is exact for two's-complement
-    negatives, so differential DC values refine correctly."""
-    h, w, comps = frame
-    hmax, vmax = _sampling(comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    idxs = []
-    for cs, td, ta in scan:
-        match = [i for i, c in enumerate(comps) if c[0] == cs]
-        if not match:
-            raise ValueError(f"JPEG scan references unknown component {cs}")
-        idxs.append((match[0], td, ta))
-    dc_scan = ss == 0
-    if dc_scan and se != 0:
-        raise ValueError("JPEG progressive scan mixes DC and AC bands")
-    if not dc_scan and (len(idxs) != 1 or not 1 <= ss <= se <= 63):
-        raise ValueError("JPEG progressive AC scan header invalid")
-    if al > 13 or ah > 13 or (ah and ah != al + 1):
-        raise ValueError("JPEG successive-approximation bits invalid")
-
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    state = {"seg": 0, "br": _BitReader(segs[0][0]),
-             "preds": [0] * len(idxs), "eobrun": 0}
-
-    def _restart(unit: int) -> None:
-        if restart_interval and unit and unit % restart_interval == 0:
-            closing = segs[state["seg"]][1]
-            if closing is None or closing != (unit // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            state["seg"] += 1
-            if state["seg"] >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            state["br"] = _BitReader(segs[state["seg"]][0])
-            state["preds"] = [0] * len(idxs)
-            state["eobrun"] = 0
-
-    def _comp_blocks(ci: int) -> tuple[int, int]:
-        """REAL block grid of one component (non-interleaved scans
-        traverse this, not the MCU-padded store)."""
-        _, ch_, cv, _ = comps[ci]
-        cw = -(-w * ch_ // hmax)
-        chh = -(-h * cv // vmax)
-        return -(-chh // 8), -(-cw // 8)
-
-    if dc_scan:
-        tbls = []
-        for ci, td, ta in idxs:
-            if ah == 0 and (0, td) not in htables:
-                raise ValueError("JPEG missing DC Huffman table for scan")
-            tbls.append(htables.get((0, td)))
-
-        dcmax = (15 if prec == 12 else 11) + (1 if differential else 0)
-
-        def _dc_one(block, si: int) -> None:
-            br = state["br"]
-            if ah == 0:
-                t = _huff_decode(br, tbls[si])
-                if t > dcmax:
-                    raise ValueError("JPEG DC category out of range")
-                if differential:  # PRED = 0 in differential frames
-                    block[0] = _extend(br.receive(t), t) << al
-                else:
-                    state["preds"][si] += _extend(br.receive(t), t)
-                    block[0] = state["preds"][si] << al
-            elif br.receive(1):
-                block[0] = int(block[0]) | (1 << al)
-
-        if len(idxs) > 1:  # interleaved: MCU traversal, pads included
-            for m in range(mcus_x * mcus_y):
-                _restart(m)
-                my, mx = divmod(m, mcus_x)
-                for si, (ci, td, ta) in enumerate(idxs):
-                    _, ch_, cv, _ = comps[ci]
-                    for by in range(cv):
-                        for bx in range(ch_):
-                            _dc_one(
-                                coefs[ci][my * cv + by, mx * ch_ + bx], si
-                            )
-        else:
-            ci = idxs[0][0]
-            bh_, bw_ = _comp_blocks(ci)
-            for m in range(bh_ * bw_):
-                _restart(m)
-                row, col = divmod(m, bw_)
-                _dc_one(coefs[ci][row, col], 0)
-        return end
-
-    ci, td, ta = idxs[0]
-    if (1, ta) not in htables:
-        raise ValueError("JPEG missing AC Huffman table for scan")
-    act = htables[(1, ta)]
-    bh_, bw_ = _comp_blocks(ci)
-    arr = coefs[ci]
-    zz = _ZIGZAG
-    p1, m1 = 1 << al, -(1 << al)
-    for m in range(bh_ * bw_):
-        _restart(m)
-        br = state["br"]
-        row, col = divmod(m, bw_)
-        blk = arr[row, col]
-        if ah == 0:  # first pass for this band
-            if state["eobrun"]:
-                state["eobrun"] -= 1
-                continue
-            k = ss
-            while k <= se:
-                rs = _huff_decode(br, act)
-                r, s = rs >> 4, rs & 15
-                if s == 0:
-                    if r == 15:  # ZRL
-                        k += 16
-                        continue
-                    state["eobrun"] = (1 << r) - 1 + (
-                        br.receive(r) if r else 0
-                    )
-                    break
-                k += r
-                if k > se:
-                    raise ValueError("JPEG AC run past band end")
-                blk[zz[k]] = _extend(br.receive(s), s) << al
-                k += 1
-            continue
-        # refinement pass (G.1.2.3 / the libjpeg AC_refine walk)
-        k = ss
-        if state["eobrun"] == 0:
-            while k <= se:
-                rs = _huff_decode(br, act)
-                r, s = rs >> 4, rs & 15
-                newval = 0
-                if s == 0:
-                    if r < 15:
-                        state["eobrun"] = (1 << r) + (
-                            br.receive(r) if r else 0
-                        )
-                        break  # rest of band pays corrections below
-                    # r == 15: advance over 16 zero-HISTORY positions
-                else:
-                    if s != 1:
-                        raise ValueError("JPEG AC refinement size != 1")
-                    newval = p1 if br.receive(1) else m1
-                while k <= se:
-                    z = zz[k]
-                    v = int(blk[z])
-                    if v:
-                        if br.receive(1) and (v & p1) == 0:
-                            blk[z] = v + (p1 if v >= 0 else m1)
-                    else:
-                        if r == 0:
-                            break
-                        r -= 1
-                    k += 1
-                if newval:
-                    if k > se:
-                        raise ValueError("JPEG refinement past band end")
-                    blk[zz[k]] = newval
-                k += 1
-        if state["eobrun"]:
-            while k <= se:
-                z = zz[k]
-                v = int(blk[z])
-                if v and br.receive(1) and (v & p1) == 0:
-                    blk[z] = v + (p1 if v >= 0 else m1)
-                k += 1
-            state["eobrun"] -= 1
-    return end
+    return _ll_to_rgb(planes, prec, pt)
 
 
 # --------------------------------------------------------------------------
 # Encoder — fixture-side twin (tests only, like encode_bmp/encode_png)
 # --------------------------------------------------------------------------
 
-#: fixture Huffman tables: every symbol at code length 8, canonical
-#: order — trivially valid (Kraft: 162/256 < 1), and the decoder builds
-#: from DHT so it exercises the same path real Annex-K tables take.
-_DC_SYMBOLS = bytes(range(12))
-_AC_SYMBOLS = bytes(
-    [16 * r + s for r in range(16) for s in range(1, 11)] + [0x00, 0xF0]
-)
-# 12-bit DCT (T.81 Table F.1/F.2 limits): DC difference categories
-# reach 15, AC magnitude categories 14 — 226 symbols still fit a
-# single all-8-bit-codes canonical table (226 < 256)
-_DC12_SYMBOLS = bytes(range(16))
-_AC12_SYMBOLS = bytes(
-    [16 * r + s for r in range(16) for s in range(1, 15)] + [0x00, 0xF0]
-)
-
-
 def _fixed_table(symbols: bytes):
+    """Fixture Huffman table: every symbol at code length 8, canonical
+    order — trivially valid, and the decoder builds it from DHT like
+    any real table."""
     counts = bytearray(16)
     counts[7] = len(symbols)  # all codes 8 bits long
     enc = {sym: (8, i) for i, sym in enumerate(symbols)}
@@ -1420,541 +440,34 @@ class _BitWriter:
             self.n = 0
 
 
-def _category(v: int) -> int:
-    return abs(v).bit_length()
-
-
-def _encode_block(bw, coef_zz, pred, dc_enc, ac_enc) -> int:
-    """Entropy-encode one zigzag-ordered quantized block; returns the
-    new DC predictor."""
-    dc = int(coef_zz[0])
-    diff = dc - pred
-    t = _category(diff)
-    bw.write(dc_enc[t][1], dc_enc[t][0])
-    if t:
-        bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-    run = 0
-    last_nz = 0
-    for k in range(63, 0, -1):
-        if coef_zz[k]:
-            last_nz = k
-            break
-    for k in range(1, last_nz + 1):
-        v = int(coef_zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            bw.write(ac_enc[0xF0][1], ac_enc[0xF0][0])  # ZRL
-            run -= 16
-        s = _category(v)
-        bw.write(ac_enc[16 * run + s][1], ac_enc[16 * run + s][0])
-        bw.write(v if v > 0 else v + (1 << s) - 1, s)
-        run = 0
-    if last_nz < 63:
-        bw.write(ac_enc[0x00][1], ac_enc[0x00][0])  # EOB
-    return dc
-
-
-def _quantize_blocks(img, quant, subsample, prec=8):
-    """Shared encoder front half: color transform + subsample + MCU
-    edge-pad + batched forward DCT + quantize. Returns (h, w, comps,
-    [per-comp (block_rows, block_cols, 64) int64 arrays, ZIGZAG
-    order]) — both the baseline and the progressive emitters walk
-    these. ``prec`` moves the level shift / chroma center to 2^(P-1)
-    and the chroma clamp to 2^P - 1 (12-bit extended sequential)."""
-    import numpy as np
-
-    center = float(1 << (prec - 1))
-    maxv = float((1 << prec) - 1)
-    arr = np.asarray(img, np.float64)
-    gray = arr.ndim == 2
-    if gray:
-        comps = [(1, 1, 1, 0)]
-        planes = [arr - center]
-    elif arr.ndim == 3 and arr.shape[2] == 2:
-        # two full-resolution components stored directly (T.81 allows
-        # 2-component frames; color is undefined, so no transform)
-        if subsample != "444":
-            raise ValueError("2-component JPEG supports 4:4:4 only")
-        comps = [(1, 1, 1, 0), (2, 1, 1, 0)]
-        planes = [arr[..., i] - center for i in range(2)]
-    elif arr.ndim == 3 and arr.shape[2] == 4:
-        # CMYK/YCCK: four full-resolution components in the STORED
-        # domain (the caller pre-applies the YCCK transform) — no
-        # subsampling, no color math here
-        if subsample != "444":
-            raise ValueError("4-component JPEG supports 4:4:4 only")
-        comps = [(i + 1, 1, 1, 0) for i in range(4)]
-        planes = [arr[..., i] - center for i in range(4)]
-    else:
-        r, g, bch = arr[..., 0], arr[..., 1], arr[..., 2]
-        y = np.round(0.299 * r + 0.587 * g + 0.114 * bch)
-        cb = np.round(-0.168736 * r - 0.331264 * g + 0.5 * bch + center)
-        cr = np.round(0.5 * r - 0.418688 * g - 0.081312 * bch + center)
-        cb = np.clip(cb, 0, maxv)
-        cr = np.clip(cr, 0, maxv)
-        if subsample == "444":
-            comps = [(1, 1, 1, 0), (2, 1, 1, 0), (3, 1, 1, 0)]
-            planes = [y - center, cb - center, cr - center]
-        elif subsample == "420":
-            comps = [(1, 2, 2, 0), (2, 1, 1, 0), (3, 1, 1, 0)]
-
-            def _avg2(p):
-                hh = (p.shape[0] + 1) & ~1
-                ww = (p.shape[1] + 1) & ~1
-                q = np.zeros((hh, ww), np.float64)
-                q[: p.shape[0], : p.shape[1]] = p
-                if p.shape[0] < hh:
-                    q[p.shape[0] :, : p.shape[1]] = p[-1:]
-                if p.shape[1] < ww:
-                    q[:, p.shape[1] :] = q[:, p.shape[1] - 1 : p.shape[1]]
-                return np.round(
-                    (q[0::2, 0::2] + q[0::2, 1::2] + q[1::2, 0::2]
-                     + q[1::2, 1::2]) / 4.0
-                )
-
-            planes = [y - center, _avg2(cb) - center, _avg2(cr) - center]
-        else:
-            raise ValueError(f"unsupported subsample {subsample!r}")
-    h, w = arr.shape[:2]
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    basis = _dct_basis()
-    zz = list(_ZIGZAG)
-    blocks = []
-    for (cid, ch_, cv, tq), p in zip(comps, planes):
-        ph, pw = mcus_y * cv * 8, mcus_x * ch_ * 8
-        q = np.zeros((ph, pw), np.float64)
-        q[: p.shape[0], : p.shape[1]] = p
-        if p.shape[0] < ph:
-            q[p.shape[0] :, : p.shape[1]] = p[-1:, :]
-        if p.shape[1] < pw:
-            q[:, p.shape[1] :] = q[:, p.shape[1] - 1 : p.shape[1]]
-        nbr, nbc = ph // 8, pw // 8
-        blk = (
-            q.reshape(nbr, 8, nbc, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-        )
-        f = basis @ blk @ basis.T  # batched forward DCT
-        qz = np.round(f / quant).astype(np.int64).reshape(nbr, nbc, 64)
-        blocks.append(qz[..., zz])
-    return h, w, comps, blocks
-
-
-def _emit_headers(h, w, comps, quant, sof_marker, restart_interval, prec=8):
-    """SOI + DQT + SOF + the two fixed Huffman tables (+ DRI)."""
-    import numpy as np
-
-    dc_counts, dc_syms, _ = _fixed_table(
-        _DC12_SYMBOLS if prec == 12 else _DC_SYMBOLS
-    )
-    ac_counts, ac_syms, _ = _fixed_table(
-        _AC12_SYMBOLS if prec == 12 else _AC_SYMBOLS
-    )
-    out = bytearray(b"\xff\xd8")
-    qzz = np.asarray(quant).reshape(-1)[list(_ZIGZAG)].astype(np.uint8)
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 1 + 64) + b"\x00" + qzz.tobytes()
-    sof = struct.pack(">BHHB", prec, h, w, len(comps))
-    for cid, ch_, cv, tq in comps:
-        sof += bytes([cid, (ch_ << 4) | cv, tq])
-    out += bytes([0xFF, sof_marker]) + struct.pack(">H", 2 + len(sof)) + sof
-    for tc, counts, syms in ((0, dc_counts, dc_syms), (1, ac_counts, ac_syms)):
-        body = bytes([tc << 4]) + counts + syms
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    return out
-
-
-def _emit_sos(comps_sel, ss, se, ah, al) -> bytes:
+def _emit_sos(comps_sel, predictor) -> bytes:
+    """Lossless SOS: every component on table 0, Se = Ah = Al = 0."""
     sos = bytes([len(comps_sel)])
     for cid in comps_sel:
-        sos += bytes([cid, 0x00])  # DC table 0, AC table 0
-    sos += bytes([ss, se, (ah << 4) | al])
+        sos += bytes([cid, 0x00])
+    sos += bytes([predictor, 0, 0])
     return b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
 
 
-def encode_jpeg(img, quant=None, subsample="444", restart_interval=0) -> bytes:
-    """Encode an (h, w) grayscale or (h, w, 3) RGB uint8 array as a
-    REAL baseline JPEG (SOF0) — the fixture-side twin of
-    :func:`decode_jpeg`, pure NumPy forward DCT + the fixed-length-8
-    canonical Huffman tables above. A uint16 input (values < 4096)
-    encodes as 12-BIT EXTENDED SEQUENTIAL (SOF1) with the widened
-    DC/AC category tables. ``quant`` is an (8, 8) natural-
-    order table (default all ones — maximum fidelity, which makes
-    constant-block images round-trip EXACTLY); ``subsample`` is
-    ``"444"`` or ``"420"`` (RGB only; 4:2:0 averages each 2×2 chroma
-    neighborhood); ``restart_interval`` > 0 emits DRI + RSTn markers.
-    """
+def _ll_planes(img):
+    """Encoder front half shared by the lossless encoders: (precision,
+    h, w, component ids, per-component nested-list planes)."""
     import numpy as np
 
     arr = np.asarray(img)
-    prec = 12 if arr.dtype == np.uint16 else 8
-    if prec == 12 and arr.max(initial=0) > 4095:
-        raise ValueError("12-bit JPEG samples must be < 4096")
-    if quant is None:
-        quant = np.ones((8, 8), np.int32)
-    quant = np.asarray(quant, np.int32)
-    h, w, comps, blocks = _quantize_blocks(img, quant, subsample, prec)
-    _, _, dc_enc = _fixed_table(_DC12_SYMBOLS if prec == 12 else _DC_SYMBOLS)
-    _, _, ac_enc = _fixed_table(_AC12_SYMBOLS if prec == 12 else _AC_SYMBOLS)
-    out = _emit_headers(
-        h, w, comps, quant, 0xC1 if prec == 12 else 0xC0, restart_interval,
-        prec,
-    )
-    out += _emit_sos([c[0] for c in comps], 0, 63, 0, 0)
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    bw = _BitWriter()
-    preds = [0] * len(comps)
-    for m in range(mcus_x * mcus_y):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.flush()
-            out += bw.out
-            bw = _BitWriter()
-            out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-            preds = [0] * len(comps)
-        my, mx = divmod(m, mcus_x)
-        for ci, (cid, ch_, cv, tq) in enumerate(comps):
-            for by in range(cv):
-                for bx in range(ch_):
-                    qz = blocks[ci][my * cv + by, mx * ch_ + bx]
-                    preds[ci] = _encode_block(bw, qz, preds[ci], dc_enc, ac_enc)
-    bw.flush()
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
+    prec = 16 if arr.dtype == np.uint16 else 8
+    a = arr.astype(np.int64)
+    planes = [a.tolist()] if a.ndim == 2 else [
+        a[..., i].tolist() for i in range(a.shape[2])
+    ]
+    return prec, arr.shape[0], arr.shape[1], list(range(1, len(planes) + 1)), planes
 
 
-def encode_jpeg_cmyk(
-    cmyk, quant=None, restart_interval=0, ycck=False
-) -> bytes:
-    """Encode an (h, w, 4) STORED-domain CMYK array (Adobe inverted
-    convention: x̃ = maxv − ink) as a 4-component sequential JPEG with
-    the APP14 Adobe marker — transform 0 (direct CMYK) or, with
-    ``ycck=True``, transform 2 (the forward YCbCr transform applied
-    to the C̃M̃Ỹ channels, K̃ untouched). The fixture-side twin of the
-    4-component branch in :func:`_reconstruct`: decode returns
-    RGB = round(c̃·k̃/maxv) channel-wise. uint16 input (< 4096)
-    encodes at 12-bit precision."""
-    import numpy as np
-
-    arr = np.asarray(cmyk)
-    if arr.ndim != 3 or arr.shape[2] != 4:
-        raise ValueError("encode_jpeg_cmyk needs an (h, w, 4) array")
-    prec = 12 if arr.dtype == np.uint16 else 8
-    if prec == 12 and arr.max(initial=0) > 4095:
-        raise ValueError("12-bit JPEG samples must be < 4096")
-    center = float(1 << (prec - 1))
-    maxv = float((1 << prec) - 1)
-    stored = arr.astype(np.float64)
-    if ycck:
-        c, m, y2, k = (stored[..., i] for i in range(4))
-        yy = np.round(0.299 * c + 0.587 * m + 0.114 * y2)
-        cb = np.clip(np.round(-0.168736 * c - 0.331264 * m + 0.5 * y2
-                              + center), 0, maxv)
-        cr = np.clip(np.round(0.5 * c - 0.418688 * m - 0.081312 * y2
-                              + center), 0, maxv)
-        stored = np.stack([yy, cb, cr, k], axis=2)
-    if quant is None:
-        quant = np.ones((8, 8), np.int32)
-    quant = np.asarray(quant, np.int32)
-    h, w, comps, blocks = _quantize_blocks(stored, quant, "444", prec)
-    _, _, dc_enc = _fixed_table(_DC12_SYMBOLS if prec == 12 else _DC_SYMBOLS)
-    _, _, ac_enc = _fixed_table(_AC12_SYMBOLS if prec == 12 else _AC_SYMBOLS)
-    headers = _emit_headers(
-        h, w, comps, quant, 0xC1 if prec == 12 else 0xC0, restart_interval,
-        prec,
-    )
-    app14 = (
-        b"Adobe" + struct.pack(">H", 0x65)
-        + struct.pack(">HH", 0, 0) + bytes([2 if ycck else 0])
-    )
-    out = bytearray(headers[:2])
-    out += b"\xff\xee" + struct.pack(">H", 2 + len(app14)) + app14
-    out += headers[2:]
-    out += _emit_sos([c[0] for c in comps], 0, 63, 0, 0)
-    mcus_x = (w + 7) // 8
-    mcus_y = (h + 7) // 8
-    bw = _BitWriter()
-    preds = [0] * 4
-    for m in range(mcus_x * mcus_y):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.flush()
-            out += bw.out
-            bw = _BitWriter()
-            out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-            preds = [0] * 4
-        my, mx = divmod(m, mcus_x)
-        for ci in range(4):
-            preds[ci] = _encode_block(
-                bw, blocks[ci][my, mx], preds[ci], dc_enc, ac_enc
-            )
-    bw.flush()
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_multiscan(
-    img, quant=None, subsample="444", restart_interval=0, groups=None
-) -> bytes:
-    """Encode a sequential MULTI-SCAN JPEG of the SAME quantized
-    coefficients :func:`encode_jpeg` would emit, so
-    ``decode(multiscan) == decode(interleaved)`` exactly — the
-    fixture-side twin of :func:`_decode_seq_scan_into`. ``groups``
-    partitions component ids across scans (default: one scan per
-    component, fully non-interleaved). A singleton scan codes the
-    component's REAL block grid in raster order (no MCU pads); a
-    multi-component scan codes the frame-global MCU traversal
-    restricted to its components (pads included), per T.81 A.2.
-    uint16 input (< 4096) emits 12-bit SOF1, like encode_jpeg."""
-    import numpy as np
-
-    arr = np.asarray(img)
-    prec = 12 if arr.dtype == np.uint16 else 8
-    if prec == 12 and arr.max(initial=0) > 4095:
-        raise ValueError("12-bit JPEG samples must be < 4096")
-    if quant is None:
-        quant = np.ones((8, 8), np.int32)
-    quant = np.asarray(quant, np.int32)
-    h, w, comps, blocks = _quantize_blocks(img, quant, subsample, prec)
-    _, _, dc_enc = _fixed_table(_DC12_SYMBOLS if prec == 12 else _DC_SYMBOLS)
-    _, _, ac_enc = _fixed_table(_AC12_SYMBOLS if prec == 12 else _AC_SYMBOLS)
-    out = _emit_headers(
-        h, w, comps, quant, 0xC1 if prec == 12 else 0xC0, restart_interval,
-        prec,
-    )
-    if groups is None:
-        groups = [(c[0],) for c in comps]
-    seen = [cid for g in groups for cid in g]
-    if sorted(seen) != sorted(c[0] for c in comps):
-        raise ValueError("groups must partition the frame's component ids")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    by_id = {c[0]: i for i, c in enumerate(comps)}
-    for g in groups:
-        out += _emit_sos(list(g), 0, 63, 0, 0)
-        bw = _BitWriter()
-        preds = [0] * len(g)
-        chunks = bytearray()
-
-        def _rst(m):
-            nonlocal bw, preds
-            if restart_interval and m and m % restart_interval == 0:
-                bw.flush()
-                chunks.extend(bw.out)
-                bw = _BitWriter()
-                chunks.extend(
-                    bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                )
-                preds = [0] * len(g)
-
-        if len(g) > 1:  # partial interleave: MCU traversal, pads included
-            for m in range(mcus_x * mcus_y):
-                _rst(m)
-                my, mx = divmod(m, mcus_x)
-                for si, cid in enumerate(g):
-                    ci = by_id[cid]
-                    _, ch_, cv, _ = comps[ci]
-                    for byy in range(cv):
-                        for bxx in range(ch_):
-                            preds[si] = _encode_block(
-                                bw,
-                                blocks[ci][my * cv + byy, mx * ch_ + bxx],
-                                preds[si], dc_enc, ac_enc,
-                            )
-        else:  # non-interleaved: the real block grid only
-            ci = by_id[g[0]]
-            _, ch_, cv, _ = comps[ci]
-            cw = -(-w * ch_ // hmax)
-            chh = -(-h * cv // vmax)
-            bh_, bw_grid = -(-chh // 8), -(-cw // 8)
-            for m in range(bh_ * bw_grid):
-                _rst(m)
-                row, col = divmod(m, bw_grid)
-                preds[0] = _encode_block(
-                    bw, blocks[ci][row, col], preds[0], dc_enc, ac_enc
-                )
-        bw.flush()
-        chunks.extend(bw.out)
-        out += bytes(chunks)
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_progressive(
-    img,
-    quant=None,
-    subsample="444",
-    dc_al=1,
-    ac_al=1,
-    bands=((1, 5), (6, 63)),
-    restart_interval=0,
-) -> bytes:
-    """Encode a REAL progressive JPEG (SOF2) of the SAME quantized
-    coefficients :func:`encode_jpeg` would emit — so
-    ``decode(progressive) == decode(baseline)`` exactly, which is what
-    the round-trip tests assert. Scan script: interleaved DC first at
-    precision ``dc_al`` then raw-bit DC refinements down to 0; per
-    component and spectral band in ``bands``, an AC-first scan at
-    precision ``ac_al`` then AC refinement scans (newly-nonzero
-    coefficients as (run, 1) symbols over zero-HISTORY runs,
-    correction bits for already-nonzero coefficients buffered and
-    flushed after the next emitted symbol — T.81 G.1.2.3).
-    ``restart_interval`` > 0 emits DRI + RSTn in every scan."""
-    import numpy as np
-
-    if quant is None:
-        quant = np.ones((8, 8), np.int32)
-    quant = np.asarray(quant, np.int32)
-    arr = np.asarray(img)
-    prec = 12 if arr.dtype == np.uint16 else 8
-    if prec == 12 and arr.max(initial=0) > 4095:
-        raise ValueError("12-bit JPEG samples must be < 4096")
-    h, w, comps, blocks = _quantize_blocks(img, quant, subsample, prec)
-    _, _, dc_enc = _fixed_table(_DC12_SYMBOLS if prec == 12 else _DC_SYMBOLS)
-    _, _, ac_enc = _fixed_table(_AC12_SYMBOLS if prec == 12 else _AC_SYMBOLS)
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    out = _emit_headers(h, w, comps, quant, 0xC2, restart_interval, prec)
-
-    def comp_grid(ci):
-        _, ch_, cv, _ = comps[ci]
-        cw = -(-w * ch_ // hmax)
-        chh = -(-h * cv // vmax)
-        return -(-chh // 8), -(-cw // 8)
-
-    def run_scan(units, emit_unit, reset):
-        """Emit one scan's entropy data with restart handling."""
-        nonlocal out
-        bw = _BitWriter()
-        for m in range(units):
-            if restart_interval and m and m % restart_interval == 0:
-                bw.flush()
-                out += bw.out
-                bw = _BitWriter()
-                out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                reset()
-            emit_unit(bw, m)
-        bw.flush()
-        out += bw.out
-
-    # ---- DC scans (interleaved over all components) ----
-    preds = [0] * len(comps)
-
-    def dc_first(bw, m):
-        my, mx = divmod(m, mcus_x)
-        for ci, (cid, ch_, cv, tq) in enumerate(comps):
-            for by in range(cv):
-                for bx in range(ch_):
-                    d = int(blocks[ci][my * cv + by, mx * ch_ + bx, 0]) >> dc_al
-                    diff = d - preds[ci]
-                    preds[ci] = d
-                    t = _category(diff)
-                    bw.write(dc_enc[t][1], dc_enc[t][0])
-                    if t:
-                        bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-
-    def dc_reset():
-        nonlocal preds
-        preds = [0] * len(comps)
-
-    out += _emit_sos([c[0] for c in comps], 0, 0, 0, dc_al)
-    run_scan(mcus_x * mcus_y, dc_first, dc_reset)
-
-    for al in range(dc_al - 1, -1, -1):
-
-        def dc_refine(bw, m, al=al):
-            my, mx = divmod(m, mcus_x)
-            for ci, (cid, ch_, cv, tq) in enumerate(comps):
-                for by in range(cv):
-                    for bx in range(ch_):
-                        d = int(blocks[ci][my * cv + by, mx * ch_ + bx, 0])
-                        bw.write((d >> al) & 1, 1)
-
-        out += _emit_sos([c[0] for c in comps], 0, 0, al + 1, al)
-        run_scan(mcus_x * mcus_y, dc_refine, lambda: None)
-
-    # ---- AC scans (single component, one spectral band each) ----
-    for ci, (cid, ch_, cv, tq) in enumerate(comps):
-        bh_, bw_ = comp_grid(ci)
-        for ss, se in bands:
-            if not 1 <= ss <= se <= 63:
-                raise ValueError(f"invalid spectral band ({ss}, {se})")
-
-            def ac_first(bw, m, ci=ci, bw_=bw_, ss=ss, se=se):
-                row, col = divmod(m, bw_)
-                blk = blocks[ci][row, col]
-                r = 0
-                for k in range(ss, se + 1):
-                    v = int(blk[k])
-                    t = abs(v) >> ac_al  # point transform: magnitude
-                    # shift, truncation toward zero (T.81 G.1.2.2)
-                    if t == 0:
-                        r += 1
-                        continue
-                    while r > 15:
-                        bw.write(ac_enc[0xF0][1], ac_enc[0xF0][0])
-                        r -= 16
-                    s = t.bit_length()
-                    bw.write(ac_enc[16 * r + s][1], ac_enc[16 * r + s][0])
-                    bw.write(t if v > 0 else t + (1 << s) - 1 - 2 * t, s)
-                    r = 0
-                if r:
-                    bw.write(ac_enc[0x00][1], ac_enc[0x00][0])  # EOB
-
-            out += _emit_sos([cid], ss, se, 0, ac_al)
-            run_scan(bh_ * bw_, ac_first, lambda: None)
-
-        for al in range(ac_al - 1, -1, -1):
-            for ss, se in bands:
-
-                def ac_refine(bw, m, ci=ci, bw_=bw_, ss=ss, se=se, al=al):
-                    row, col = divmod(m, bw_)
-                    blk = blocks[ci][row, col]
-                    r = 0
-                    pending: list[int] = []
-                    for k in range(ss, se + 1):
-                        v = int(blk[k])
-                        t = abs(v) >> al
-                        if t == 0:
-                            r += 1
-                            continue
-                        while r > 15:  # flush ZRL + buffered corrections
-                            bw.write(ac_enc[0xF0][1], ac_enc[0xF0][0])
-                            r -= 16
-                            for bit in pending:
-                                bw.write(bit, 1)
-                            pending = []
-                        if t > 1:  # already nonzero: one correction bit
-                            pending.append(t & 1)
-                            continue
-                        bw.write(ac_enc[16 * r + 1][1], ac_enc[16 * r + 1][0])
-                        bw.write(1 if v > 0 else 0, 1)  # sign of the new coef
-                        for bit in pending:
-                            bw.write(bit, 1)
-                        pending = []
-                        r = 0
-                    if r or pending:
-                        bw.write(ac_enc[0x00][1], ac_enc[0x00][0])  # EOB run 1
-                        for bit in pending:
-                            bw.write(bit, 1)
-
-                out += _emit_sos([cid], ss, se, al + 1, al)
-                run_scan(bh_ * bw_, ac_refine, lambda: None)
-
-    out += b"\xff\xd9"
-    return bytes(out)
+def _sof(marker: int, prec: int, h: int, w: int, comp_ids) -> bytes:
+    sof = struct.pack(">BHHB", prec, h, w, len(comp_ids))
+    for cid in comp_ids:
+        sof += bytes([cid, 0x11, 0])  # 1x1 sampling; Tq unused
+    return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(sof)) + sof
 
 
 #: SSSS difference-category alphabet for lossless scans (T.81 H.1.2.2):
@@ -1962,312 +475,40 @@ def encode_jpeg_progressive(
 _LL_SYMBOLS = bytes(range(17))
 
 
-def _ll_subsample_channels(arr, pt, sampling):
-    """Shared fixture-encoder front half for subsampled lossless
-    (Huffman SOF3 and the arithmetic SOF11 twin): validate the
-    per-channel (H, V) factors, shift by the point transform, and
-    box-mean-downsample (integer floor, edge-replicated pad) each
-    channel to its ``(yi, xi)`` grid. Returns ``(downs, comps)`` —
-    per-channel int64 arrays and the SOF component tuples."""
-    import numpy as np
-
-    h, w = arr.shape[:2]
-    gray = arr.ndim == 2
-    nchan = 1 if gray else arr.shape[2]
-    if len(sampling) != nchan:
-        raise ValueError("sampling must list one (H, V) pair per channel")
-    hs = [s[0] for s in sampling]
-    vs = [s[1] for s in sampling]
-    if min(hs) < 1 or min(vs) < 1 or max(hs) > 4 or max(vs) > 4:
-        raise ValueError("JPEG sampling factors out of range")
-    hmax, vmax = max(hs), max(vs)
-    if any(hmax % f for f in hs) or any(vmax % f for f in vs):
-        raise ValueError("only integer subsampling ratios supported")
-    shifted = np.asarray(arr).astype(np.int64) >> pt
-    chans = [shifted] if gray else [shifted[..., i] for i in range(nchan)]
-    downs = []
-    for ch, (hi, vi) in zip(chans, sampling):
-        fy, fx = vmax // vi, hmax // hi
-        yi, xi = -(-h * vi // vmax), -(-w * hi // hmax)
-        if fy == 1 and fx == 1:
-            downs.append(ch)
-            continue
-        q = np.empty((yi * fy, xi * fx), np.int64)
-        q[:h, :w] = ch
-        q[h:, :w] = ch[-1:, :]
-        q[:, w:] = q[:, w - 1 : w]
-        downs.append(q.reshape(yi, fy, xi, fx).sum(axis=(1, 3)) // (fy * fx))
-    comps = [
-        (i + 1, hi, vi, 0) for i, (hi, vi) in enumerate(sampling)
-    ]
-    return downs, comps
+def _ll_diff_huffman(bw: _BitWriter, ll_enc, d: int) -> None:
+    """Huffman-code one modulo-2^16 sample difference (SSSS + bits)."""
+    if d == -32768:  # ≡ +32768 mod 2^16: SSSS=16, no bits
+        bw.write(ll_enc[16][1], ll_enc[16][0])
+        return
+    t = abs(d).bit_length()
+    bw.write(ll_enc[t][1], ll_enc[t][0])
+    if t:
+        bw.write(d if d > 0 else d + (1 << t) - 1, t)
 
 
-def _ll_pad_plane(down, yi, xi, ph, pw):
-    """Edge-replicate one downsampled (yi, xi) plane to the padded MCU
-    coding grid (ph, pw); returns nested lists for the scalar walk."""
-    import numpy as np
-
-    q = np.empty((ph, pw), np.int64)
-    q[:yi, :xi] = down
-    q[yi:, :xi] = down[-1:, :]
-    q[:, xi:] = q[:, xi - 1 : xi]
-    return q.tolist()
-
-
-def _encode_lossless_sampled(
-    arr, prec, predictor, pt, restart_interval, groups, sampling
-) -> bytes:
-    """Fixture-side twin of :func:`_decode_lossless_scan_sampled`:
-    SOF3 encode with per-component sampling factors. Each subsampled
-    component is box-averaged (integer floor mean over the
-    ``(Vmax/Vi, Hmax/Hi)`` block, edge-replicated pad) down to its
-    ``(yi, xi)`` grid — a deterministic reduction, so the round-trip
-    identity is ``decode(encode(img, sampling)) ==
-    replicate(boxmean(img))`` exactly. Scans walk MCUs of Hi×Vi
-    samples per component (Ns == 1 scans walk the unpadded raster),
-    restart intervals count MCUs, and prediction mirrors the decoder's
-    convention (per-component default after scan start / restart)."""
-    downs, comps = _ll_subsample_channels(arr, pt, sampling)
-    h, w = arr.shape[:2]
-    comp_ids = [c[0] for c in comps]
-    nchan = len(comp_ids)
-    ll_counts, ll_syms, ll_enc = _fixed_table(_LL_SYMBOLS)
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", prec, h, w, nchan)
-    for cid, hi, vi, _ in comps:
-        sof += bytes([cid, (hi << 4) | vi, 0])
-    out += b"\xff\xc3" + struct.pack(">H", 2 + len(sof)) + sof
-    body = bytes([0x00]) + ll_counts + ll_syms
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    if groups is None:
-        groups = [tuple(comp_ids)]
-    elif sorted(cid for g in groups for cid in g) != sorted(comp_ids):
-        raise ValueError("groups must partition the component ids")
-    default = 1 << (prec - pt - 1)
-    frame = (h, w, comps)
-    for g in groups:
-        out += _emit_sos(list(g), predictor, 0, 0, pt)
-        idx = [comp_ids.index(cid) for cid in g]
-        mcux, mcuy, geo = _ll_scan_layout(frame, idx)
-        planes = [
-            _ll_pad_plane(downs[ci], yi, xi, ph, pw)
-            for ci, (yi, xi, hi, vi, ph, pw) in zip(idx, geo)
-        ]
-        pending = [True] * len(idx)
-        bw = _BitWriter()
-        for m in range(mcux * mcuy):
-            if restart_interval and m and m % restart_interval == 0:
-                bw.flush()
-                out += bw.out
-                bw = _BitWriter()
-                out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                pending = [True] * len(idx)
-            mr, mc = divmod(m, mcux)
-            for si, p in enumerate(planes):
-                yi, xi, hi, vi, ph, pw = geo[si]
-                base_r, base_c = mr * vi, mc * hi
-                for dv in range(vi):
-                    r = base_r + dv
-                    row = p[r]
-                    above = p[r - 1] if r else None
-                    for dh in range(hi):
-                        c = base_c + dh
-                        if pending[si]:
-                            px = default
-                            pending[si] = False
-                        elif r == 0:
-                            px = row[c - 1]
-                        elif c == 0:
-                            px = above[0]
-                        else:
-                            ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                            if predictor == 1:
-                                px = ra
-                            elif predictor == 2:
-                                px = rb
-                            elif predictor == 3:
-                                px = rc_
-                            elif predictor == 4:
-                                px = ra + rb - rc_
-                            elif predictor == 5:
-                                px = ra + ((rb - rc_) >> 1)
-                            elif predictor == 6:
-                                px = rb + ((ra - rc_) >> 1)
-                            else:
-                                px = (ra + rb) >> 1
-                        d = ((row[c] - px + 32768) & 0xFFFF) - 32768
-                        if d == -32768:
-                            bw.write(ll_enc[16][1], ll_enc[16][0])
-                        else:
-                            t = _category(d)
-                            bw.write(ll_enc[t][1], ll_enc[t][0])
-                            if t:
-                                bw.write(d if d > 0 else d + (1 << t) - 1, t)
-        bw.flush()
-        out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_lossless(
-    img, predictor=4, point_transform=0, restart_interval=0, groups=None,
-    sampling=None
-) -> bytes:
+def encode_jpeg_lossless(img, predictor=4) -> bytes:
     """Encode an (h, w) grayscale or (h, w, 3) RGB array as a REAL
     lossless JPEG (SOF3, T.81 Annex H) — the fixture-side twin of
     :func:`_decode_lossless_scan`. uint8 input encodes at 8-bit
     precision, uint16 at 16-bit. ``predictor`` selects H.1.2.1 rule
-    1-7; ``point_transform`` (Pt) shifts samples right by Pt before
-    prediction, so the round-trip identity is
-    ``decode(encode(img, Pt)) == (img >> Pt) << Pt`` — exact equality,
-    bit-for-bit, when Pt is 0. ``restart_interval`` > 0 emits DRI +
-    RSTn every that-many samples with full prediction reset.
-    ``sampling`` (a list of per-channel (H, V) pairs) routes to the
-    subsampled encoder (:func:`_encode_lossless_sampled`), where the
-    identity becomes exact equality against the deterministic
-    box-mean downsample of each channel."""
-    import numpy as np
-
-    arr = np.asarray(img)
-    prec = 16 if arr.dtype == np.uint16 else 8
-    if not 0 <= point_transform < prec:
-        raise ValueError(f"point transform {point_transform} out of range")
+    1-7; the round trip is exact, bit for bit."""
     if not 1 <= predictor <= 7:
         raise ValueError(f"predictor {predictor} out of range")
-    if sampling is not None and any(tuple(s) != (1, 1) for s in sampling):
-        return _encode_lossless_sampled(
-            arr, prec, predictor, point_transform, restart_interval,
-            groups, [tuple(s) for s in sampling],
-        )
-    gray = arr.ndim == 2
-    nchan = 1 if gray else arr.shape[2]
-    shifted = (arr.astype(np.int64) >> point_transform)
-    planes = (
-        [shifted.tolist()]
-        if gray
-        else [shifted[..., i].tolist() for i in range(nchan)]
-    )
-    h, w = arr.shape[:2]
-    comp_ids = list(range(1, nchan + 1))
+    prec, h, w, comp_ids, planes = _ll_planes(img)
     ll_counts, ll_syms, ll_enc = _fixed_table(_LL_SYMBOLS)
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", prec, h, w, len(comp_ids))
-    for cid in comp_ids:
-        sof += bytes([cid, 0x11, 0])  # 1x1 sampling; Tq unused in SOF3
-    out += b"\xff\xc3" + struct.pack(">H", 2 + len(sof)) + sof
+    out = bytearray(b"\xff\xd8") + _sof(0xC3, prec, h, w, comp_ids)
     body = bytes([0x00]) + ll_counts + ll_syms  # DC-class table 0
     out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    if groups is not None:
-        # multi-scan lossless: one scan per component group, each a
-        # fresh Annex-H difference walk over its own planes
-        if sorted(cid for g in groups for cid in g) != sorted(comp_ids):
-            raise ValueError("groups must partition the component ids")
-        default = 1 << (prec - point_transform - 1)
-        for g in groups:
-            out += _emit_sos(list(g), predictor, 0, 0, point_transform)
-            gplanes = [planes[comp_ids.index(cid)] for cid in g]
-            bw = _BitWriter()
-            reset = True
-            for m in range(h * w):
-                if restart_interval and m and m % restart_interval == 0:
-                    bw.flush()
-                    out += bw.out
-                    bw = _BitWriter()
-                    out += bytes(
-                        [0xFF, 0xD0 + (m // restart_interval - 1) % 8]
-                    )
-                    reset = True
-                r, c = divmod(m, w)
-                for p in gplanes:
-                    if reset:
-                        px = default
-                    elif r == 0:
-                        px = p[0][c - 1]
-                    elif c == 0:
-                        px = p[r - 1][0]
-                    else:
-                        row, above = p[r], p[r - 1]
-                        ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                        if predictor == 1:
-                            px = ra
-                        elif predictor == 2:
-                            px = rb
-                        elif predictor == 3:
-                            px = rc_
-                        elif predictor == 4:
-                            px = ra + rb - rc_
-                        elif predictor == 5:
-                            px = ra + ((rb - rc_) >> 1)
-                        elif predictor == 6:
-                            px = rb + ((ra - rc_) >> 1)
-                        else:
-                            px = (ra + rb) >> 1
-                    d = ((p[r][c] - px + 32768) & 0xFFFF) - 32768
-                    if d == -32768:
-                        bw.write(ll_enc[16][1], ll_enc[16][0])
-                    else:
-                        t = _category(d)
-                        bw.write(ll_enc[t][1], ll_enc[t][0])
-                        if t:
-                            bw.write(d if d > 0 else d + (1 << t) - 1, t)
-                reset = False
-            bw.flush()
-            out += bw.out
-        out += b"\xff\xd9"
-        return bytes(out)
-    out += _emit_sos(comp_ids, predictor, 0, 0, point_transform)
-    default = 1 << (prec - point_transform - 1)
+    out += _emit_sos(comp_ids, predictor)
+    default = 1 << (prec - 1)
     bw = _BitWriter()
-    reset = True
     for m in range(h * w):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.flush()
-            out += bw.out
-            bw = _BitWriter()
-            out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-            reset = True
         r, c = divmod(m, w)
         for p in planes:
-            # prediction over the previously-coded samples; lossless ⇒
-            # reconstructed == source, so the source plane IS the
-            # prediction context (the decoder mirrors this exactly)
-            if reset:
-                px = default
-            elif r == 0:
-                px = p[0][c - 1]
-            elif c == 0:
-                px = p[r - 1][0]
-            else:
-                row, above = p[r], p[r - 1]
-                ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                if predictor == 1:
-                    px = ra
-                elif predictor == 2:
-                    px = rb
-                elif predictor == 3:
-                    px = rc_
-                elif predictor == 4:
-                    px = ra + rb - rc_
-                elif predictor == 5:
-                    px = ra + ((rb - rc_) >> 1)
-                elif predictor == 6:
-                    px = rb + ((ra - rc_) >> 1)
-                else:
-                    px = (ra + rb) >> 1
-            d = ((p[r][c] - px + 32768) & 0xFFFF) - 32768
-            if d == -32768:  # ≡ +32768 mod 2^16: SSSS=16, no bits
-                bw.write(ll_enc[16][1], ll_enc[16][0])
-            else:
-                t = _category(d)
-                bw.write(ll_enc[t][1], ll_enc[t][0])
-                if t:
-                    bw.write(d if d > 0 else d + (1 << t) - 1, t)
-        reset = False
+            # lossless ⇒ reconstructed == source, so the source plane
+            # IS the prediction context (the decoder mirrors this)
+            px = _ll_predict(p, r, c, predictor, default, m == 0)
+            _ll_diff_huffman(bw, ll_enc, ((p[r][c] - px + 32768) & 0xFFFF) - 32768)
     bw.flush()
     out += bw.out
     out += b"\xff\xd9"

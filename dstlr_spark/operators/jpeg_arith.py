@@ -1,10 +1,7 @@
-"""Arithmetic-coded JPEG (SOF9 + SOF10): QM coder + T.81 statistics.
+"""Lossless arithmetic-coded JPEG (SOF11): the QM coder + T.81 H.1.2.
 
-Sequential DCT with arithmetic entropy coding (SOF9), plus
-PROGRESSIVE arithmetic (SOF10: the SOF2 spectral-selection /
-successive-approximation scan structure over the same QM coder and
-statistical models — see :func:`decode_progressive_scan_arith`).
-Both directions live here:
+The SOF3 prediction walk of :mod:`dstlr_spark.operators.jpeg` with
+the entropy layer swapped for the QM coder. Both directions live here:
 
 - :class:`_ArithDecoder` / :class:`_ArithEncoder` — the QM binary
   arithmetic coder (T.81 Annex D): 16-bit probability interval with
@@ -12,31 +9,25 @@ Both directions live here:
   estimation over the 113-state table, byte output with carry
   propagation over stacked 0xFF bytes (3 spacer bits, D.1.6) and the
   most-trailing-zeros flush (D.1.8), 0xFF00 byte stuffing.
-- DC/AC statistical models (T.81 F.1.4.4.1/F.1.4.4.2): DC difference
-  conditioning on the previous diff's (sign, magnitude) class with
-  L/U bounds; AC coefficients keyed 3 bins per zigzag index (EOB
-  decision, zero-run, first magnitude) with the low/high-spectrum
-  split at Kx; sign of AC via the fixed ~0.5 bin (state 113);
-  magnitude categories and bit patterns over the X/M context runs.
-  Default conditioning (L=0, U=1, Kx=5) when no DAC marker appears;
-  DAC (0xFFCC) is parsed and honored.
+- the lossless statistical model (T.81 H.1.2): each sample difference
+  conditioned on the 5×5 classification of its left and upper
+  neighbors' gradient categories, magnitude categories and bit
+  patterns over the X/M context runs, under the default conditioning
+  (L=0, U=1). A DAC segment raises the STUB contract (jpeg.py).
 
 The state-transition table is T.81 Table D.3 as reproduced in public
 QM-coder implementations. CONFORMANCE CAVEAT (honest): this sandbox
 has no external JPEG codec, so cross-implementation interop cannot be
 executed here; what IS machine-checked is (a) coder round-trip over
 arbitrary decision sequences and adversarial context schedules, and
-(b) end-to-end pixel EQUALITY between an SOF9 encode and the SOF0
-Huffman encode of the same image — both entropy layers sit above the
-identical quantized coefficients, so their decodes must agree bit for
-bit (tests/test_jpeg.py). Reference anchor for the operator surface:
-the multimodal decode family in operators/multimodal.py; the
-reference engine itself (src/main/scala/io/dstlr) has no media path —
-this is §2.12 mandate surface.
+(b) end-to-end pixel EQUALITY between the SOF11 and SOF3 decodes of
+the same image (tests/test_jpeg.py). The reference engine itself
+(src/main/scala/io/dstlr) has no media path — this is §2.12 mandate
+surface.
 
 Scale shape: pure codec layer — runs inside the Arrow-batched
-``decode_image_np`` / ``decode_features_np`` stages, map-only,
-per-document; nothing here shuffles.
+``decode_image_np`` stage, map-only, per-document; nothing here
+shuffles.
 """
 
 from __future__ import annotations
@@ -86,17 +77,6 @@ _QE = (
     (0x5597, 109, 110, 0), (0x504F, 107, 111, 0), (0x5A10, 111, 110, 1),
     (0x5522, 109, 112, 0), (0x59EB, 111, 112, 1), (0x5A1D, 113, 113, 0),
 )
-
-#: default conditioning when the stream carries no DAC segment
-#: (T.81 F.1.4.4.1.4 / F.1.4.4.2.1)
-DEFAULT_DC_L = 0
-DEFAULT_DC_U = 1
-DEFAULT_AC_KX = 5
-
-_DC_STAT_BINS = 64
-_AC_STAT_BINS = 256
-_FIXED = 113  # the non-adaptive AC-sign bin
-
 
 class _ArithDecoder:
     """QM decoder over one pre-unstuffed entropy segment. Bytes past
@@ -285,874 +265,6 @@ class _ArithEncoder:
 
 
 # --------------------------------------------------------------------------
-# statistical models (T.81 F.1.4.4.1 DC / F.1.4.4.2 AC)
-# --------------------------------------------------------------------------
-
-
-def _decode_dc_diff(dec, stats, ctx, lo_half, hi_half):
-    """One DC difference off the decoder. ``ctx`` is the conditioning
-    offset (0/4/8/12/16) from the PREVIOUS diff; returns (diff,
-    next_ctx)."""
-    s0 = ctx
-    if dec.decode(stats, s0) == 0:
-        return 0, 0
-    sign = dec.decode(stats, s0 + 1)
-    st = s0 + 2 + sign
-    m = dec.decode(stats, st)
-    if m:
-        st = 20  # X1
-        while dec.decode(stats, st):
-            m <<= 1
-            if m == 0x8000:
-                raise ValueError("JPEG arithmetic DC magnitude overflow")
-            st += 1
-    if m < lo_half:
-        nxt = 0
-    elif m > hi_half:
-        nxt = 12 + sign * 4
-    else:
-        nxt = 4 + sign * 4
-    v = m
-    st += 14
-    while m > 1:
-        m >>= 1
-        if dec.decode(stats, st):
-            v |= m
-    v += 1
-    return (-v if sign else v), nxt
-
-
-def _encode_dc_diff(enc, stats, ctx, diff, lo_half, hi_half):
-    s0 = ctx
-    if diff == 0:
-        enc.encode(stats, s0, 0)
-        return 0
-    enc.encode(stats, s0, 1)
-    sign = 1 if diff < 0 else 0
-    v = -diff if sign else diff
-    enc.encode(stats, s0 + 1, sign)
-    st = s0 + 2 + sign
-    m = 0
-    v -= 1
-    if v:
-        enc.encode(stats, st, 1)
-        m = 1
-        v2 = v
-        st = 20
-        while v2 > 1:
-            v2 >>= 1
-            enc.encode(stats, st, 1)
-            m <<= 1
-            st += 1
-    enc.encode(stats, st, 0)
-    if m < lo_half:
-        nxt = 0
-    elif m > hi_half:
-        nxt = 12 + sign * 4
-    else:
-        nxt = 4 + sign * 4
-    st += 14
-    mm = m
-    while mm > 1:
-        mm >>= 1
-        enc.encode(stats, st, 1 if (mm & v) else 0)
-    return nxt
-
-
-def _decode_ac_block(dec, stats, fixed, kx, coef, zigzag,
-                     band_lo=1, band_hi=63, al=0):
-    """AC coefficients of one spectral band into ``coef`` (natural
-    order). Sequential scans use the full band (1, 63) at shift 0;
-    progressive AC-first scans (T.81 G.2 / the jdarith decode walk)
-    pass their (Ss, Se) band and deliver values at precision
-    ``al`` — decoded magnitudes land ``<< al``. The statistics-bin
-    key stays 3·(k−1) on the ABSOLUTE zigzag index, so band splits
-    share no adaptive state across k."""
-    k = band_lo
-    while k <= band_hi:
-        st = 3 * (k - 1)
-        if dec.decode(stats, st):
-            return  # EOB
-        while dec.decode(stats, st + 1) == 0:
-            st += 3
-            k += 1
-            if k > band_hi:
-                raise ValueError("JPEG arithmetic AC run past block end")
-        sign = dec.decode(fixed, 0)
-        st += 2
-        m = dec.decode(stats, st)
-        if m and dec.decode(stats, st):
-            m = 2
-            st = 189 if k <= kx else 217
-            while dec.decode(stats, st):
-                m <<= 1
-                if m == 0x8000:
-                    raise ValueError(
-                        "JPEG arithmetic AC magnitude overflow"
-                    )
-                st += 1
-        v = m
-        st += 14
-        while m > 1:
-            m >>= 1
-            if dec.decode(stats, st):
-                v |= m
-        v += 1
-        coef[zigzag[k]] = (-v if sign else v) << al
-        k += 1
-
-
-def _encode_ac_block(enc, stats, fixed, kx, vals_zz,
-                     band_lo=1, band_hi=63, al=0):
-    """``vals_zz``: the block in ZIGZAG order; codes the (band_lo,
-    band_hi) band at point transform ``al`` (magnitude shift,
-    truncation toward zero — T.81 G.1.2.2)."""
-    ke = band_hi
-    while ke >= band_lo and (abs(int(vals_zz[ke])) >> al) == 0:
-        ke -= 1
-    k = band_lo
-    while k <= ke:
-        st = 3 * (k - 1)
-        enc.encode(stats, st, 0)  # not EOB yet
-        while (abs(int(vals_zz[k])) >> al) == 0:
-            enc.encode(stats, st + 1, 0)
-            st += 3
-            k += 1
-        enc.encode(stats, st + 1, 1)
-        raw = int(vals_zz[k])
-        v = abs(raw) >> al
-        sign = 1 if raw < 0 else 0
-        enc.encode(fixed, 0, sign)
-        st += 2
-        m = 0
-        v -= 1
-        if v:
-            enc.encode(stats, st, 1)
-            m = 1
-            v2 = v
-            if v2 > 1:
-                enc.encode(stats, st, 1)
-                m = 2
-                st = 189 if k <= kx else 217
-                while v2 > 3:
-                    v2 >>= 1
-                    enc.encode(stats, st, 1)
-                    m <<= 1
-                    st += 1
-        enc.encode(stats, st, 0)
-        st += 14
-        mm = m
-        while mm > 1:
-            mm >>= 1
-            enc.encode(stats, st, 1 if (mm & v) else 0)
-        k += 1
-    if k <= band_hi:
-        enc.encode(stats, 3 * (k - 1), 1)  # EOB
-
-
-def _decode_ac_refine(dec, stats, fixed, coef, zigzag, band_lo, band_hi, al):
-    """AC successive-approximation refinement of one block's band
-    (T.81 G.2 / the jdarith AC_refine walk): already-nonzero
-    coefficients pay one adaptive correction decision each (bin
-    st+2); zero-HISTORY positions walk st+1 decisions until a newly
-    nonzero ±1<<al coefficient whose sign rides the fixed bin; the
-    EOB decision (bin st) is consulted only past kex, the last
-    position nonzero BEFORE this scan."""
-    p1 = 1 << al
-    kex = band_hi
-    while kex > 0 and int(coef[zigzag[kex]]) == 0:
-        kex -= 1
-    k = band_lo
-    while k <= band_hi:
-        st = 3 * (k - 1)
-        if k > kex and dec.decode(stats, st):
-            return  # EOB
-        while True:
-            z = zigzag[k]
-            v = int(coef[z])
-            if v:  # previously nonzero: one correction decision
-                if dec.decode(stats, st + 2):
-                    coef[z] = v + (p1 if v > 0 else -p1)
-                break
-            if dec.decode(stats, st + 1):  # newly nonzero
-                coef[z] = -p1 if dec.decode(fixed, 0) else p1
-                break
-            st += 3
-            k += 1
-            if k > band_hi:
-                raise ValueError(
-                    "JPEG arithmetic AC refinement past band end"
-                )
-        k += 1
-
-
-def _encode_ac_refine(enc, stats, fixed, vals_zz, band_lo, band_hi, al):
-    """Refinement twin of :func:`_decode_ac_refine`; ``vals_zz`` is
-    the FULL-precision block in zigzag order (history = values at
-    precision al+1, this scan delivers bit ``al``)."""
-    ah = al + 1
-    ke = band_hi
-    while ke >= band_lo and (abs(int(vals_zz[ke])) >> al) == 0:
-        ke -= 1
-    kex = ke
-    while kex > 0 and (abs(int(vals_zz[kex])) >> ah) == 0:
-        kex -= 1
-    k = band_lo
-    while k <= ke:
-        st = 3 * (k - 1)
-        if k > kex:
-            enc.encode(stats, st, 0)  # band continues past history EOB
-        while True:
-            raw = int(vals_zz[k])
-            t = abs(raw) >> al
-            if t:
-                if t >> 1:  # previously nonzero: correction bit
-                    enc.encode(stats, st + 2, t & 1)
-                else:  # newly nonzero at this precision
-                    enc.encode(stats, st + 1, 1)
-                    enc.encode(fixed, 0, 1 if raw < 0 else 0)
-                break
-            enc.encode(stats, st + 1, 0)
-            st += 3
-            k += 1
-        k += 1
-    if k <= band_hi:
-        enc.encode(stats, 3 * (k - 1), 1)  # EOB
-
-
-# --------------------------------------------------------------------------
-# scan-level walkers (the SOF9 twins of jpeg._decode_scan / encode_jpeg)
-# --------------------------------------------------------------------------
-
-
-def decode_scan_arith(b, pos, frame, scan, qtables, dc_cond, ac_cond,
-                      restart_interval, prec=8, transform=None):
-    """Sequential arithmetic scan → decoded RGB via jpeg._reconstruct.
-    Same MCU walk as the Huffman twin; entropy layer swapped for the
-    QM coder with per-restart state reset (coder, statistics areas,
-    DC predictors AND conditioning contexts)."""
-    import numpy as np
-
-    from dstlr_spark.operators.jpeg import (
-        _ZIGZAG,
-        _entropy_segments,
-        _reconstruct,
-        _sampling,
-    )
-
-    h, w, comps = frame
-    hmax, vmax = _sampling(comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = []
-    conds = []
-    for (cid, ch_, cv, tq), (scid, td, ta) in zip(comps, scan):
-        if cid != scid:
-            raise ValueError("JPEG scan component order differs from frame")
-        if tq not in qtables:
-            raise ValueError(f"JPEG missing quant table {tq}")
-        planes.append(np.zeros((mcus_y * cv, mcus_x * ch_, 64), np.float64))
-        ll, uu = dc_cond.get(td, (DEFAULT_DC_L, DEFAULT_DC_U))
-        conds.append((td, ta, (1 << ll) >> 1, (1 << uu) >> 1,
-                      ac_cond.get(ta, DEFAULT_AC_KX)))
-    segs, _end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    zz = list(_ZIGZAG)
-
-    def fresh_state():
-        return (
-            {td: bytearray(_DC_STAT_BINS) for td, *_ in conds},
-            {ta: bytearray(_AC_STAT_BINS) for _, ta, *_ in conds},
-            bytearray([_FIXED]),
-            [0] * len(comps),  # dc conditioning contexts
-            [0] * len(comps),  # dc predictors
-        )
-
-    seg_i = 0
-    dec = _ArithDecoder(segs[0][0])
-    dc_stats, ac_stats, fixed, dc_ctx, preds = fresh_state()
-    nmcu = mcus_x * mcus_y
-    for m in range(nmcu):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            dec = _ArithDecoder(segs[seg_i][0])
-            dc_stats, ac_stats, fixed, dc_ctx, preds = fresh_state()
-        my, mx = divmod(m, mcus_x)
-        for ci, (cid, ch_, cv, tq) in enumerate(comps):
-            td, ta, lo, hi, kx = conds[ci]
-            dstat, astat = dc_stats[td], ac_stats[ta]
-            for by in range(cv):
-                for bx in range(ch_):
-                    coef = [0.0] * 64
-                    diff, dc_ctx[ci] = _decode_dc_diff(
-                        dec, dstat, dc_ctx[ci], lo, hi
-                    )
-                    preds[ci] += diff
-                    coef[0] = preds[ci]
-                    _decode_ac_block(dec, astat, fixed, kx, coef, zz)
-                    planes[ci][my * cv + by, mx * ch_ + bx] = coef
-    return _reconstruct(frame, planes, qtables, prec, transform)
-
-
-def decode_seq_scan_arith_into(b, pos, frame, scan, dc_cond, ac_cond,
-                               coefs, restart_interval, differential=False):
-    """Sequential-arithmetic scan over a SUBSET of the frame's
-    components (multi-scan SOF9 files): the per-block DC/AC QM models
-    of :func:`decode_scan_arith` with the progressive machinery's
-    traversal — frame-global MCU order restricted to the scan's
-    components when ns > 1, the component's REAL block grid when
-    ns == 1 — written into the shared coefficient stores. Every scan
-    is an independent QM stream with fresh statistics. Returns the
-    offset of the terminating marker; dequant + IDCT happen once at
-    EOI in jpeg.decode_jpeg. ``differential`` zeroes the DC
-    prediction for every block (T.81 F.1.1.5.1 — differential
-    hierarchical frames code each block's DC directly; the
-    conditioning context still chains on the previous coded
-    value)."""
-    from dstlr_spark.operators.jpeg import (
-        _ZIGZAG,
-        _entropy_segments,
-        _sampling,
-    )
-
-    h, w, comps = frame
-    hmax, vmax = _sampling(comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    by_id = {c[0]: i for i, c in enumerate(comps)}
-    sel = []
-    for cs, td, ta in scan:
-        if cs not in by_id:
-            raise ValueError(f"JPEG scan references unknown component {cs}")
-        ll, uu = dc_cond.get(td, (DEFAULT_DC_L, DEFAULT_DC_U))
-        sel.append((by_id[cs], td, ta, (1 << ll) >> 1, (1 << uu) >> 1,
-                    ac_cond.get(ta, DEFAULT_AC_KX)))
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    zz = list(_ZIGZAG)
-
-    def fresh_state():
-        return (
-            {td: bytearray(_DC_STAT_BINS) for _, td, *_ in sel},
-            {ta: bytearray(_AC_STAT_BINS) for _, _, ta, *_ in sel},
-            bytearray([_FIXED]),
-            [0] * len(sel),
-            [0] * len(sel),
-        )
-
-    seg_i = 0
-    dec = _ArithDecoder(segs[0][0])
-    dc_stats, ac_stats, fixed, dc_ctx, preds = fresh_state()
-
-    def _restart(unit):
-        nonlocal seg_i, dec, dc_stats, ac_stats, fixed, dc_ctx, preds
-        if restart_interval and unit and unit % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (unit // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            dec = _ArithDecoder(segs[seg_i][0])
-            dc_stats, ac_stats, fixed, dc_ctx, preds = fresh_state()
-
-    def _block(si, row, col):
-        ci, td, ta, lo, hi, kx = sel[si]
-        coef = [0.0] * 64
-        diff, dc_ctx[si] = _decode_dc_diff(
-            dec, dc_stats[td], dc_ctx[si], lo, hi
-        )
-        if differential:  # PRED = 0 in differential frames
-            coef[0] = diff
-        else:
-            preds[si] += diff
-            coef[0] = preds[si]
-        _decode_ac_block(dec, ac_stats[ta], fixed, kx, coef, zz)
-        coefs[ci][row, col] = coef
-
-    if len(sel) > 1:  # partial interleave: MCU traversal, pads included
-        for m in range(mcus_x * mcus_y):
-            _restart(m)
-            my, mx = divmod(m, mcus_x)
-            for si, (ci, *_rest) in enumerate(sel):
-                _, ch_, cv, _ = comps[ci]
-                for by in range(cv):
-                    for bx in range(ch_):
-                        _block(si, my * cv + by, mx * ch_ + bx)
-    else:  # non-interleaved: the component's real block grid
-        ci = sel[0][0]
-        _, ch_, cv, _ = comps[ci]
-        cw = -(-w * ch_ // hmax)
-        chh = -(-h * cv // vmax)
-        bh_, bw_ = -(-chh // 8), -(-cw // 8)
-        for m in range(bh_ * bw_):
-            _restart(m)
-            row, col = divmod(m, bw_)
-            _block(0, row, col)
-    return end
-
-
-def encode_jpeg_arith(img, quant=None, subsample="444",
-                      restart_interval=0, dc_cond=None,
-                      ac_kx=None, groups=None) -> bytes:
-    """Encode an (h, w) grayscale or (h, w, 3) RGB uint8 array as a
-    REAL arithmetic-coded JPEG (SOF9) — identical front half to
-    jpeg.encode_jpeg (:func:`jpeg._quantize_blocks`: color transform,
-    subsample, forward DCT, quantize), entropy layer swapped for the
-    QM coder above. Because both entropy layers carry the IDENTICAL
-    quantized coefficients, ``decode(encode_jpeg_arith(x)) ==
-    decode(encode_jpeg(x))`` holds bit for bit — the equality gate in
-    tests/test_jpeg.py. With default conditioning (L=0, U=1, Kx=5) no
-    DAC segment is emitted; passing ``dc_cond=(L, U)`` or ``ac_kx``
-    emits the DAC marker and conditions both statistical models on it
-    — which is what lets the decoder's DAC parse be value-gated."""
-    import numpy as np
-
-    from dstlr_spark.operators.jpeg import (
-        _ZIGZAG,
-        _emit_sos,
-        _quantize_blocks,
-    )
-
-    if quant is None:
-        quant = np.ones((8, 8), np.int32)
-    quant = np.asarray(quant, np.int32)
-    arr = np.asarray(img)
-    prec = 12 if arr.dtype == np.uint16 else 8
-    if prec == 12 and arr.max(initial=0) > 4095:
-        raise ValueError("12-bit JPEG samples must be < 4096")
-    h, w, comps, blocks = _quantize_blocks(img, quant, subsample, prec)
-    out = bytearray(b"\xff\xd8")
-    qzz = np.asarray(quant).reshape(-1)[list(_ZIGZAG)].astype(np.uint8)
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 1 + 64) + b"\x00" + qzz.tobytes()
-    sof = struct.pack(">BHHB", prec, h, w, len(comps))
-    for cid, ch_, cv, tq in comps:
-        sof += bytes([cid, (ch_ << 4) | cv, tq])
-    out += b"\xff\xc9" + struct.pack(">H", 2 + len(sof)) + sof
-    ll, uu = dc_cond if dc_cond is not None else (DEFAULT_DC_L, DEFAULT_DC_U)
-    kx = ac_kx if ac_kx is not None else DEFAULT_AC_KX
-    if not 0 <= ll <= uu <= 15:
-        raise ValueError(f"DC conditioning ({ll}, {uu}) invalid")
-    if not 1 <= kx <= 63:
-        raise ValueError(f"AC Kx {kx} out of range")
-    if dc_cond is not None or ac_kx is not None:
-        body = bytes([0x00, (uu << 4) | ll, 0x10, kx])
-        out += b"\xff\xcc" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += _emit_sos([c[0] for c in comps], 0, 63, 0, 0)
-
-    lo, hi = (1 << ll) >> 1, (1 << uu) >> 1
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-
-    def fresh():
-        return (
-            _ArithEncoder(),
-            bytearray(_DC_STAT_BINS),
-            bytearray(_AC_STAT_BINS),
-            bytearray([_FIXED]),
-            [0] * len(comps),
-            [0] * len(comps),
-        )
-
-    if groups is not None:
-        # multi-scan arithmetic: one scan (fresh QM stream + fresh
-        # statistics) per component group — the fixture twin of
-        # decode_seq_scan_arith_into
-        if sorted(cid for g in groups for cid in g) != sorted(
-            c[0] for c in comps
-        ):
-            raise ValueError("groups must partition the component ids")
-        by_id = {c[0]: i for i, c in enumerate(comps)}
-        # the interleaved SOS emitted above belongs to the single-scan
-        # path; rebuild the tail from the group scans instead
-        out = out[: len(out) - len(_emit_sos([c[0] for c in comps],
-                                             0, 63, 0, 0))]
-        for g in groups:
-            out += _emit_sos(list(g), 0, 63, 0, 0)
-            enc, dstat, astat, fixed, dc_ctx, preds = fresh()
-            dc_ctx, preds = [0] * len(g), [0] * len(g)
-
-            def emit_block(si, ci, row, col):
-                qz = blocks[ci][row, col].tolist()
-                diff = qz[0] - preds[si]
-                preds[si] = qz[0]
-                dc_ctx[si] = _encode_dc_diff(
-                    enc, dstat, dc_ctx[si], diff, lo, hi
-                )
-                _encode_ac_block(enc, astat, fixed, kx, qz)
-
-            if len(g) > 1:
-                for m in range(mcus_x * mcus_y):
-                    if restart_interval and m and m % restart_interval == 0:
-                        out += enc.finish()
-                        out += bytes(
-                            [0xFF, 0xD0 + (m // restart_interval - 1) % 8]
-                        )
-                        enc, dstat, astat, fixed, _, _ = fresh()
-                        dc_ctx, preds = [0] * len(g), [0] * len(g)
-                    my, mx = divmod(m, mcus_x)
-                    for si, cid in enumerate(g):
-                        ci = by_id[cid]
-                        _, ch_, cv, _ = comps[ci]
-                        for by in range(cv):
-                            for bx in range(ch_):
-                                emit_block(si, ci, my * cv + by,
-                                           mx * ch_ + bx)
-            else:
-                ci = by_id[g[0]]
-                _, ch_, cv, _ = comps[ci]
-                cw = -(-w * ch_ // hmax)
-                chh = -(-h * cv // vmax)
-                bh_, bw_grid = -(-chh // 8), -(-cw // 8)
-                for m in range(bh_ * bw_grid):
-                    if restart_interval and m and m % restart_interval == 0:
-                        out += enc.finish()
-                        out += bytes(
-                            [0xFF, 0xD0 + (m // restart_interval - 1) % 8]
-                        )
-                        enc, dstat, astat, fixed, _, _ = fresh()
-                        dc_ctx, preds = [0], [0]
-                    row, col = divmod(m, bw_grid)
-                    emit_block(0, ci, row, col)
-            out += enc.finish()
-        out += b"\xff\xd9"
-        return bytes(out)
-    enc, dstat, astat, fixed, dc_ctx, preds = fresh()
-    for m in range(mcus_x * mcus_y):
-        if restart_interval and m and m % restart_interval == 0:
-            out += enc.finish()
-            out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-            enc, dstat, astat, fixed, dc_ctx, preds = fresh()
-        my, mx = divmod(m, mcus_x)
-        for ci, (cid, ch_, cv, tq) in enumerate(comps):
-            for by in range(cv):
-                for bx in range(ch_):
-                    qz = blocks[ci][my * cv + by, mx * ch_ + bx].tolist()
-                    diff = qz[0] - preds[ci]
-                    preds[ci] = qz[0]
-                    dc_ctx[ci] = _encode_dc_diff(
-                        enc, dstat, dc_ctx[ci], diff, lo, hi
-                    )
-                    _encode_ac_block(enc, astat, fixed, kx, qz)
-    out += enc.finish()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# --------------------------------------------------------------------------
-# Progressive arithmetic (SOF10): the SOF2 scan structure over the QM coder
-# --------------------------------------------------------------------------
-
-
-def decode_progressive_scan_arith(b, pos, frame, scan, ss, se, ah, al,
-                                  dc_cond, ac_cond, coefs,
-                                  restart_interval, differential=False):
-    """Decode ONE progressive-arithmetic scan (T.81 G.2, marker
-    SOF10 = 0xCA) into the shared raw coefficient stores, returning
-    the offset of the marker that ended it — the arithmetic twin of
-    ``jpeg._decode_progressive_scan``. Scan grammar is identical to
-    SOF2 (spectral selection + successive approximation); the entropy
-    layer differs: every scan is an independent QM stream with FRESH
-    statistics areas (per jdarith start_pass semantics), DC scans use
-    the F.1.4.4.1 difference model on the point-transformed domain,
-    DC refinement is one fixed-bin raw decision per block, AC-first
-    is the sequential AC model restricted to the (Ss, Se) band, and
-    AC refinement is the st/st+1/st+2 walk of
-    :func:`_decode_ac_refine`. There are no EOBn run symbols in
-    arithmetic coding — the per-block EOB decision replaces them.
-    Restart markers reset the coder, all statistics, DC predictors
-    AND conditioning contexts. ``differential`` (progressive frames
-    inside an Annex-J hierarchy, SOF14) switches the DC-first pass to
-    PRED = 0 per block — the F.1.4.4.1 "difference" IS the
-    point-transformed DC value, and its conditioning context chains
-    on the previous coded value exactly as the sequential
-    differential path does; refinement and AC passes are unchanged."""
-    from dstlr_spark.operators.jpeg import (
-        _ZIGZAG,
-        _entropy_segments,
-        _sampling,
-    )
-
-    h, w, comps = frame
-    hmax, vmax = _sampling(comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    idxs = []
-    for cs, td, ta in scan:
-        match = [i for i, c in enumerate(comps) if c[0] == cs]
-        if not match:
-            raise ValueError(f"JPEG scan references unknown component {cs}")
-        idxs.append((match[0], td, ta))
-    dc_scan = ss == 0
-    if dc_scan and se != 0:
-        raise ValueError("JPEG progressive scan mixes DC and AC bands")
-    if not dc_scan and (len(idxs) != 1 or not 1 <= ss <= se <= 63):
-        raise ValueError("JPEG progressive AC scan header invalid")
-    if al > 13 or ah > 13 or (ah and ah != al + 1):
-        raise ValueError("JPEG successive-approximation bits invalid")
-
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    zz = list(_ZIGZAG)
-
-    def _comp_blocks(ci):
-        _, ch_, cv, _ = comps[ci]
-        cw = -(-w * ch_ // hmax)
-        chh = -(-h * cv // vmax)
-        return -(-chh // 8), -(-cw // 8)
-
-    state = {"seg": 0}
-
-    def _fresh():
-        dec = _ArithDecoder(segs[state["seg"]][0])
-        dstats = {td: bytearray(_DC_STAT_BINS) for _, td, _ in idxs}
-        astats = {ta: bytearray(_AC_STAT_BINS) for _, _, ta in idxs}
-        fixed = bytearray([_FIXED])
-        return dec, dstats, astats, fixed, [0] * len(idxs), [0] * len(idxs)
-
-    def _restart(unit, cur):
-        if restart_interval and unit and unit % restart_interval == 0:
-            closing = segs[state["seg"]][1]
-            if closing is None or closing != (
-                unit // restart_interval - 1
-            ) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            state["seg"] += 1
-            if state["seg"] >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            return _fresh()
-        return cur
-
-    cur = _fresh()
-
-    if dc_scan:
-        conds = []
-        for _, td, _ in idxs:
-            ll, uu = dc_cond.get(td, (DEFAULT_DC_L, DEFAULT_DC_U))
-            conds.append(((1 << ll) >> 1, (1 << uu) >> 1))
-
-        def _dc_one(block, si, cur):
-            dec, dstats, _, fixed, ctxs, preds = cur
-            if ah == 0:
-                lo, hi = conds[si]
-                diff, ctxs[si] = _decode_dc_diff(
-                    dec, dstats[idxs[si][1]], ctxs[si], lo, hi
-                )
-                if differential:  # PRED = 0 in differential frames
-                    block[0] = diff << al
-                else:
-                    preds[si] += diff
-                    block[0] = preds[si] << al
-            elif dec.decode(fixed, 0):
-                block[0] = int(block[0]) | (1 << al)
-
-        if len(idxs) > 1:  # interleaved MCU traversal, pads included
-            for m in range(mcus_x * mcus_y):
-                cur = _restart(m, cur)
-                my, mx = divmod(m, mcus_x)
-                for si, (ci, td, ta) in enumerate(idxs):
-                    _, ch_, cv, _ = comps[ci]
-                    for by in range(cv):
-                        for bx in range(ch_):
-                            _dc_one(
-                                coefs[ci][my * cv + by, mx * ch_ + bx],
-                                si, cur,
-                            )
-        else:
-            ci = idxs[0][0]
-            bh_, bw_ = _comp_blocks(ci)
-            for m in range(bh_ * bw_):
-                cur = _restart(m, cur)
-                row, col = divmod(m, bw_)
-                _dc_one(coefs[ci][row, col], 0, cur)
-        return end
-
-    ci, td, ta = idxs[0]
-    kx = ac_cond.get(ta, DEFAULT_AC_KX)
-    bh_, bw_ = _comp_blocks(ci)
-    arr = coefs[ci]
-    for m in range(bh_ * bw_):
-        cur = _restart(m, cur)
-        dec, _, astats, fixed, _, _ = cur
-        row, col = divmod(m, bw_)
-        blk = arr[row, col]
-        if ah == 0:
-            _decode_ac_block(dec, astats[ta], fixed, kx, blk, zz, ss, se, al)
-        else:
-            _decode_ac_refine(dec, astats[ta], fixed, blk, zz, ss, se, al)
-    return end
-
-
-def encode_jpeg_progressive_arith(
-    img,
-    quant=None,
-    subsample="444",
-    dc_al=1,
-    ac_al=1,
-    bands=((1, 5), (6, 63)),
-    restart_interval=0,
-    dc_cond=None,
-    ac_kx=None,
-) -> bytes:
-    """Encode a REAL progressive-arithmetic JPEG (SOF10) carrying the
-    SAME quantized coefficients ``jpeg.encode_jpeg`` emits, with the
-    SAME scan script as ``jpeg.encode_jpeg_progressive`` — so
-    ``decode(SOF10) == decode(SOF0) == decode(SOF2)`` bit for bit
-    (the equality gate in tests/test_jpeg.py). Scan script:
-    interleaved DC first at precision ``dc_al`` then fixed-bin DC
-    refinements down to 0; per component and spectral band in
-    ``bands``, an AC-first scan at precision ``ac_al`` then AC
-    refinement scans. Every scan is an independent QM stream with
-    fresh statistics; ``restart_interval`` > 0 emits DRI + RSTn in
-    every scan with full state reset."""
-    import numpy as np
-
-    from dstlr_spark.operators.jpeg import (
-        _ZIGZAG,
-        _emit_sos,
-        _quantize_blocks,
-    )
-
-    if quant is None:
-        quant = np.ones((8, 8), np.int32)
-    quant = np.asarray(quant, np.int32)
-    arr = np.asarray(img)
-    prec = 12 if arr.dtype == np.uint16 else 8
-    if prec == 12 and arr.max(initial=0) > 4095:
-        raise ValueError("12-bit JPEG samples must be < 4096")
-    h, w, comps, blocks = _quantize_blocks(img, quant, subsample, prec)
-    out = bytearray(b"\xff\xd8")
-    qzz = np.asarray(quant).reshape(-1)[list(_ZIGZAG)].astype(np.uint8)
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 1 + 64) + b"\x00" + qzz.tobytes()
-    sof = struct.pack(">BHHB", prec, h, w, len(comps))
-    for cid, ch_, cv, tq in comps:
-        sof += bytes([cid, (ch_ << 4) | cv, tq])
-    out += b"\xff\xca" + struct.pack(">H", 2 + len(sof)) + sof
-    ll, uu = dc_cond if dc_cond is not None else (DEFAULT_DC_L, DEFAULT_DC_U)
-    kx = ac_kx if ac_kx is not None else DEFAULT_AC_KX
-    if not 0 <= ll <= uu <= 15:
-        raise ValueError(f"DC conditioning ({ll}, {uu}) invalid")
-    if not 1 <= kx <= 63:
-        raise ValueError(f"AC Kx {kx} out of range")
-    if dc_cond is not None or ac_kx is not None:
-        body = bytes([0x00, (uu << 4) | ll, 0x10, kx])
-        out += b"\xff\xcc" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    lo, hi = (1 << ll) >> 1, (1 << uu) >> 1
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-
-    def comp_grid(ci):
-        _, ch_, cv, _ = comps[ci]
-        cw = -(-w * ch_ // hmax)
-        chh = -(-h * cv // vmax)
-        return -(-chh // 8), -(-cw // 8)
-
-    def run_scan(units, emit_unit, fresh):
-        nonlocal out
-        cur = fresh()
-        for m in range(units):
-            if restart_interval and m and m % restart_interval == 0:
-                out += cur[0].finish()
-                out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                cur = fresh()
-            emit_unit(cur, m)
-        out += cur[0].finish()
-
-    # ---- DC scans (interleaved over all components) ----
-    def dc_fresh():
-        return (_ArithEncoder(), bytearray(_DC_STAT_BINS),
-                [0] * len(comps), [0] * len(comps))
-
-    def dc_first(cur, m):
-        enc, dstat, ctxs, preds = cur
-        my, mx = divmod(m, mcus_x)
-        for ci, (cid, ch_, cv, tq) in enumerate(comps):
-            for by in range(cv):
-                for bx in range(ch_):
-                    d = int(blocks[ci][my * cv + by, mx * ch_ + bx, 0]) >> dc_al
-                    diff = d - preds[ci]
-                    preds[ci] = d
-                    ctxs[ci] = _encode_dc_diff(
-                        enc, dstat, ctxs[ci], diff, lo, hi
-                    )
-
-    out += _emit_sos([c[0] for c in comps], 0, 0, 0, dc_al)
-    run_scan(mcus_x * mcus_y, dc_first, dc_fresh)
-
-    def fixed_fresh():
-        return (_ArithEncoder(), bytearray([_FIXED]))
-
-    for al in range(dc_al - 1, -1, -1):
-
-        def dc_refine(cur, m, al=al):
-            enc, fixed = cur
-            my, mx = divmod(m, mcus_x)
-            for ci, (cid, ch_, cv, tq) in enumerate(comps):
-                for by in range(cv):
-                    for bx in range(ch_):
-                        d = int(blocks[ci][my * cv + by, mx * ch_ + bx, 0])
-                        enc.encode(fixed, 0, (d >> al) & 1)
-
-        out += _emit_sos([c[0] for c in comps], 0, 0, al + 1, al)
-        run_scan(mcus_x * mcus_y, dc_refine, fixed_fresh)
-
-    # ---- AC scans (single component, one spectral band each) ----
-    def ac_fresh():
-        return (_ArithEncoder(), bytearray(_AC_STAT_BINS),
-                bytearray([_FIXED]))
-
-    for ci, (cid, ch_, cv, tq) in enumerate(comps):
-        bh_, bw_ = comp_grid(ci)
-        for ss, se in bands:
-            if not 1 <= ss <= se <= 63:
-                raise ValueError(f"invalid spectral band ({ss}, {se})")
-
-            def ac_first(cur, m, ci=ci, bw_=bw_, ss=ss, se=se):
-                enc, astat, fixed = cur
-                row, col = divmod(m, bw_)
-                _encode_ac_block(
-                    enc, astat, fixed, kx,
-                    blocks[ci][row, col].tolist(), ss, se, ac_al,
-                )
-
-            out += _emit_sos([cid], ss, se, 0, ac_al)
-            run_scan(bh_ * bw_, ac_first, ac_fresh)
-
-        for al in range(ac_al - 1, -1, -1):
-            for ss, se in bands:
-
-                def ac_refine(cur, m, ci=ci, bw_=bw_, ss=ss, se=se, al=al):
-                    enc, astat, fixed = cur
-                    row, col = divmod(m, bw_)
-                    _encode_ac_refine(
-                        enc, astat, fixed,
-                        blocks[ci][row, col].tolist(), ss, se, al,
-                    )
-
-                out += _emit_sos([cid], ss, se, al + 1, al)
-                run_scan(bh_ * bw_, ac_refine, ac_fresh)
-
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# --------------------------------------------------------------------------
 # Lossless arithmetic (SOF11): Annex-H prediction over the QM coder
 # --------------------------------------------------------------------------
 
@@ -1165,22 +277,7 @@ _LL_STAT_BINS = 158
 _LL_X_BASE = (100, 129)
 
 
-def _ll_category(d: int, lo: int, hi: int) -> int:
-    """Classify one coded difference for conditioning (the DC model's
-    F.1.4.4.1.4 rule applied to a gradient): 0 = zero/near-zero
-    (magnitude base m < lo), 1/2 = small +/−, 3/4 = large +/−."""
-    if d == 0:
-        return 0
-    sz = (d if d > 0 else -d) - 1
-    m = 0 if sz == 0 else 1 << (sz.bit_length() - 1)
-    if m < lo:
-        return 0
-    if m <= hi:
-        return 1 if d > 0 else 2
-    return 3 if d > 0 else 4
-
-
-def _decode_ll_diff(dec, stats, cat_a, cat_b, lo, hi):
+def _decode_ll_diff(dec, stats, cat_a, cat_b):
     """One lossless difference off the decoder, conditioned on the
     (left, above) gradient categories; returns (diff, category)."""
     s0 = 4 * (cat_b * 5 + cat_a)
@@ -1196,12 +293,8 @@ def _decode_ll_diff(dec, stats, cat_a, cat_b, lo, hi):
             if m == 0x8000:
                 raise ValueError("JPEG arithmetic lossless magnitude overflow")
             st += 1
-    if m < lo:
-        cat = 0
-    elif m <= hi:
-        cat = 1 + sign
-    else:
-        cat = 3 + sign
+    # default conditioning (L=0, U=1): magnitude class m ≤ 1 is small
+    cat = (1 if m <= 1 else 3) + sign
     v = m
     st += 14
     while m > 1:
@@ -1212,7 +305,7 @@ def _decode_ll_diff(dec, stats, cat_a, cat_b, lo, hi):
     return (-v if sign else v), cat
 
 
-def _encode_ll_diff(enc, stats, cat_a, cat_b, diff, lo, hi):
+def _encode_ll_diff(enc, stats, cat_a, cat_b, diff):
     """Twin of :func:`_decode_ll_diff`; returns the coded diff's
     category for the caller's gradient bookkeeping."""
     s0 = 4 * (cat_b * 5 + cat_a)
@@ -1237,12 +330,8 @@ def _encode_ll_diff(enc, stats, cat_a, cat_b, diff, lo, hi):
             m <<= 1
             st += 1
     enc.encode(stats, st, 0)
-    if m < lo:
-        cat = 0
-    elif m <= hi:
-        cat = 1 + sign
-    else:
-        cat = 3 + sign
+    # default conditioning (L=0, U=1): magnitude class m ≤ 1 is small
+    cat = (1 if m <= 1 else 3) + sign
     st += 14
     mm = m
     while mm > 1:
@@ -1251,496 +340,85 @@ def _encode_ll_diff(enc, stats, cat_a, cat_b, diff, lo, hi):
     return cat
 
 
-def _ll_predict(p, r, c, predictor, default, reset):
-    """Shared Annex-H prediction (H.1.2.1 + the H.2.3 boundary rules
-    the SOF3 path pins): scan/restart start predicts 2^(P−Pt−1), the
-    rest of the first line predicts Ra, the first column Rb."""
-    if reset:
-        return default
-    if r == 0:
-        return p[0][c - 1]
-    if c == 0:
-        return p[r - 1][0]
-    row, above = p[r], p[r - 1]
-    ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-    if predictor == 1:
-        return ra
-    if predictor == 2:
-        return rb
-    if predictor == 3:
-        return rc_
-    if predictor == 4:
-        return ra + rb - rc_
-    if predictor == 5:
-        return ra + ((rb - rc_) >> 1)
-    if predictor == 6:
-        return rb + ((ra - rc_) >> 1)
-    return (ra + rb) >> 1
-
-
-def decode_lossless_scan_arith_sampled(
-    b, pos, frame, scan, prec, predictor, pt, dc_cond, restart_interval,
-    planes_out, pts_out
-):
-    """SOF11 lossless-arithmetic scan generalized to sampling factors
-    != 1x1: the MCU sample walk of ``jpeg._decode_lossless_scan_sampled``
-    with the QM entropy layer and the H.1.2 gradient conditioning kept
-    PLANE-SPATIAL — Da/Db are the difference categories at (r, c−1) /
-    (r−1, c) of the component's own grid, held in per-plane category
-    stores that zero at each restart (the walk-order-independent form
-    of 'gradients do not cross restart boundaries'; for 1x1 frames it
-    degenerates to the rolling row buffers of the flat path). Planes
-    store CROPPED to (yi, xi); upsampling happens at assembly."""
-    from dstlr_spark.operators.jpeg import _entropy_segments, _ll_scan_layout
-
-    h, w, comps = frame
-    by_id = {c[0]: i for i, c in enumerate(comps)}
-    sel = []
-    for cs, td, ta in scan:
-        if cs not in by_id:
-            raise ValueError(f"JPEG scan references unknown component {cs}")
-        ll, uu = dc_cond.get(td, (DEFAULT_DC_L, DEFAULT_DC_U))
-        sel.append((by_id[cs], td, (1 << ll) >> 1, (1 << uu) >> 1))
-    mcux, mcuy, geo = _ll_scan_layout(frame, [ci for ci, *_ in sel])
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    default = 1 << (prec - pt - 1)
-    planes = [[[0] * pw for _ in range(ph)] for *_, ph, pw in geo]
-
-    def fresh(seg_i):
-        return (
-            _ArithDecoder(segs[seg_i][0]),
-            {td: bytearray(_LL_STAT_BINS) for _, td, _, _ in sel},
-            [[[0] * pw for _ in range(ph)] for *_, ph, pw in geo],
-            [True] * len(sel),
-        )
-
-    seg_i = 0
-    dec, stats, cats, pending = fresh(0)
-    for m in range(mcux * mcuy):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            dec, stats, cats, pending = fresh(seg_i)
-        mr, mc = divmod(m, mcux)
-        for si, (ci, td, lo, hi) in enumerate(sel):
-            yi, xi, fh, fv, ph, pw = geo[si]
-            p, cat_p, st = planes[si], cats[si], stats[td]
-            base_r, base_c = mr * fv, mc * fh
-            for dv in range(fv):
-                r = base_r + dv
-                row, crow = p[r], cat_p[r]
-                for dh in range(fh):
-                    c = base_c + dh
-                    ca = crow[c - 1] if c else 0
-                    cb = cat_p[r - 1][c] if r else 0
-                    d, cat = _decode_ll_diff(dec, st, ca, cb, lo, hi)
-                    px = _ll_predict(p, r, c, predictor, default, pending[si])
-                    pending[si] = False
-                    row[c] = (px + d) & 0xFFFF
-                    crow[c] = cat
-    for si, (ci, *_rest) in enumerate(sel):
-        yi, xi, *_ = geo[si]
-        planes_out[ci] = [r[:xi] for r in planes[si][:yi]]
-        pts_out[ci] = pt
-    return end
-
-
-def decode_lossless_scan_arith(
-    b, pos, frame, scan, prec, predictor, pt, dc_cond, restart_interval
-):
+def decode_lossless_scan_arith(b, pos, frame, scan, prec, predictor, pt):
     """SOF11 lossless-arithmetic scan: the SOF3 prediction walk
-    (identical predictors, modulo-2^16 arithmetic, boundary and
-    restart rules — see ``jpeg._decode_lossless_scan``) with the
-    entropy layer swapped for the QM coder under the T.81 H.1.2
-    statistical model: each difference rides the F.1.4.4.1 decision
-    tree conditioned on the 5×5 classification of the two neighbor
-    gradients Da (left) and Db (above), with the magnitude-run bins
-    split on Db-large. Conditioning thresholds come from the DC
-    (Tc=0) DAC table, as in sequential mode. Gradients outside the
-    scan or before the last restart classify as zero. Exact by
-    construction, so round-trip equality — not tolerance — is the
-    gate."""
-    import numpy as np
-
-    from dstlr_spark.operators.jpeg import _entropy_segments
+    (identical predictors, modulo-2^16 arithmetic and boundary rules
+    — see ``jpeg._decode_lossless_scan``) with the entropy layer
+    swapped for the QM coder under the T.81 H.1.2 statistical model:
+    each difference rides the F.1.4.4.1 decision tree conditioned on
+    the 5×5 classification of the two neighbor gradients Da (left) and
+    Db (above), with the magnitude-run bins split on Db-large, under
+    the default conditioning (L=0, U=1). Gradients outside the scan
+    classify as zero. Exact by construction, so round-trip equality —
+    not tolerance — is the gate."""
+    from dstlr_spark.operators.jpeg import (
+        _entropy_segments,
+        _ll_predict,
+        _ll_to_rgb,
+    )
 
     h, w, comps = frame
-    if any(c[1] != 1 or c[2] != 1 for c in comps):
-        from dstlr_spark.operators.jpeg import _assemble_lossless
-
-        planes_out = [None] * len(comps)
-        pts_out = [0] * len(comps)
-        decode_lossless_scan_arith_sampled(
-            b, pos, frame, scan, prec, predictor, pt, dc_cond,
-            restart_interval, planes_out, pts_out,
-        )
-        return _assemble_lossless(frame, planes_out, pts_out, prec)
-    conds = []
-    for (cid, ch_, cv, tq), (scid, td, ta) in zip(comps, scan):
-        if cid != scid:
-            raise ValueError("JPEG scan component order differs from frame")
-        ll, uu = dc_cond.get(td, (DEFAULT_DC_L, DEFAULT_DC_U))
-        conds.append((td, (1 << ll) >> 1, (1 << uu) >> 1))
     segs, _end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
+    if len(segs) > 1:
         raise ValueError("JPEG RST marker without a DRI segment")
     default = 1 << (prec - pt - 1)
     nc = len(comps)
     planes = [[[0] * w for _ in range(h)] for _ in range(nc)]
-
-    def fresh(seg_i):
-        return (
-            _ArithDecoder(segs[seg_i][0]),
-            {td: bytearray(_LL_STAT_BINS) for td, _, _ in conds},
-            [[0] * w for _ in range(nc)],  # per-column Db categories
-            [0] * nc,  # Da category (left neighbor, current row)
-        )
-
-    seg_i = 0
-    dec, stats, cat_above, cat_left = fresh(0)
-    reset = True
-    last_reset_m = 0
+    dec = _ArithDecoder(segs[0][0])
+    stats = {td: bytearray(_LL_STAT_BINS) for _, td, _ in scan}
+    cat_above = [[0] * w for _ in range(nc)]  # per-column Db categories
     for m in range(h * w):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            dec, stats, cat_above, cat_left = fresh(seg_i)
-            reset = True
-            last_reset_m = m
         r, c = divmod(m, w)
         if c == 0:
-            cat_left = [0] * nc
+            cat_left = [0] * nc  # Da category (left neighbor, this row)
         for ci in range(nc):
-            td, lo, hi = conds[ci]
-            # Db from the sample above only if it was coded AFTER the
-            # last restart (gradients do not cross restart boundaries)
-            cb = cat_above[ci][c] if m - last_reset_m >= w else 0
-            d, cat = _decode_ll_diff(
-                dec, stats[td], cat_left[ci], cb, lo, hi
-            )
+            cb = cat_above[ci][c]
+            d, cat = _decode_ll_diff(dec, stats[scan[ci][1]], cat_left[ci], cb)
             p = planes[ci]
-            px = _ll_predict(p, r, c, predictor, default, reset)
+            px = _ll_predict(p, r, c, predictor, default, m == 0)
             p[r][c] = (px + d) & 0xFFFF
             cat_above[ci][c] = cat
             cat_left[ci] = cat
-        reset = False
-    mask = (1 << prec) - 1
-    dtype = np.uint8 if prec <= 8 else np.uint16
-    out = np.array(planes, np.int64)
-    out = ((out << pt) & mask).astype(dtype)
-    if nc == 1:
-        return np.repeat(out[0][..., None], 3, axis=2)
-    if nc == 4:
-        from dstlr_spark.operators.jpeg import _cmyk_to_rgb
-
-        return _cmyk_to_rgb(list(out), mask)
-    return np.stack([out[0], out[1], out[2]], axis=2)
+    return _ll_to_rgb(planes, prec, pt)
 
 
-def decode_lossless_scan_arith_into(
-    b, pos, frame, scan, prec, predictor, pt, dc_cond, restart_interval,
-    planes_out, pts_out
-):
-    """SOF11 lossless-arithmetic scan over a SUBSET of the frame's
-    components (multi-scan files): the walk of
-    :func:`decode_lossless_scan_arith` restricted to the scan's
-    components, writing raw planes into ``planes_out`` and the scan's
-    Pt into ``pts_out`` — the arithmetic twin of
-    ``jpeg._decode_lossless_scan_into``, with per-scan fresh QM
-    statistics. Returns the offset of the terminating marker; output
-    assembly happens at EOI in jpeg.decode_jpeg."""
-    from dstlr_spark.operators.jpeg import _entropy_segments
-
-    h, w, comps = frame
-    if any(c[1] != 1 or c[2] != 1 for c in comps):
-        return decode_lossless_scan_arith_sampled(
-            b, pos, frame, scan, prec, predictor, pt, dc_cond,
-            restart_interval, planes_out, pts_out,
-        )
-    by_id = {c[0]: i for i, c in enumerate(comps)}
-    sel = []
-    for cs, td, ta in scan:
-        if cs not in by_id:
-            raise ValueError(f"JPEG scan references unknown component {cs}")
-        ll, uu = dc_cond.get(td, (DEFAULT_DC_L, DEFAULT_DC_U))
-        sel.append((by_id[cs], td, (1 << ll) >> 1, (1 << uu) >> 1))
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    default = 1 << (prec - pt - 1)
-    nsel = len(sel)
-    planes = [[[0] * w for _ in range(h)] for _ in range(nsel)]
-
-    def fresh(seg_i):
-        return (
-            _ArithDecoder(segs[seg_i][0]),
-            {td: bytearray(_LL_STAT_BINS) for _, td, _, _ in sel},
-            [[0] * w for _ in range(nsel)],
-            [0] * nsel,
-        )
-
-    seg_i = 0
-    dec, stats, cat_above, cat_left = fresh(0)
-    reset = True
-    last_reset_m = 0
-    for m in range(h * w):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            dec, stats, cat_above, cat_left = fresh(seg_i)
-            reset = True
-            last_reset_m = m
-        r, c = divmod(m, w)
-        if c == 0:
-            cat_left = [0] * nsel
-        for si, (ci, td, lo, hi) in enumerate(sel):
-            cb = cat_above[si][c] if m - last_reset_m >= w else 0
-            d, cat = _decode_ll_diff(
-                dec, stats[td], cat_left[si], cb, lo, hi
-            )
-            p = planes[si]
-            px = _ll_predict(p, r, c, predictor, default, reset)
-            p[r][c] = (px + d) & 0xFFFF
-            cat_above[si][c] = cat
-            cat_left[si] = cat
-        reset = False
-    for si, (ci, *_rest) in enumerate(sel):
-        planes_out[ci] = planes[si]
-        pts_out[ci] = pt
-    return end
-
-
-def _encode_lossless_arith_sampled(
-    arr, prec, predictor, pt, restart_interval, dc_cond, groups, sampling
-) -> bytes:
-    """Fixture-side twin of :func:`decode_lossless_scan_arith_sampled`:
-    SOF11 encode with per-component sampling factors, sharing the
-    Huffman twin's deterministic box-mean downsample
-    (``jpeg._ll_subsample_channels``) so both entropy layers code
-    IDENTICAL sample planes — the cross-layer equality gate extends to
-    subsampled frames unchanged."""
-    from dstlr_spark.operators.jpeg import (
-        _emit_sos,
-        _ll_pad_plane,
-        _ll_scan_layout,
-        _ll_subsample_channels,
-    )
-
-    downs, comps = _ll_subsample_channels(arr, pt, sampling)
-    h, w = arr.shape[:2]
-    comp_ids = [c[0] for c in comps]
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", prec, h, w, len(comp_ids))
-    for cid, fh, fv, _ in comps:
-        sof += bytes([cid, (fh << 4) | fv, 0])
-    out += b"\xff\xcb" + struct.pack(">H", 2 + len(sof)) + sof
-    ll, uu = dc_cond if dc_cond is not None else (DEFAULT_DC_L, DEFAULT_DC_U)
-    if not 0 <= ll <= uu <= 15:
-        raise ValueError(f"DC conditioning ({ll}, {uu}) invalid")
-    if dc_cond is not None:
-        body = bytes([0x00, (uu << 4) | ll])
-        out += b"\xff\xcc" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    lo, hi = (1 << ll) >> 1, (1 << uu) >> 1
-    default = 1 << (prec - pt - 1)
-    if groups is None:
-        groups = [tuple(comp_ids)]
-    elif sorted(cid for g in groups for cid in g) != sorted(comp_ids):
-        raise ValueError("groups must partition the component ids")
-    frame = (h, w, comps)
-    for g in groups:
-        out += _emit_sos(list(g), predictor, 0, 0, pt)
-        idx = [comp_ids.index(cid) for cid in g]
-        mcux, mcuy, geo = _ll_scan_layout(frame, idx)
-        planes = [
-            _ll_pad_plane(downs[ci], yi, xi, ph, pw)
-            for ci, (yi, xi, fh, fv, ph, pw) in zip(idx, geo)
-        ]
-
-        def fresh():
-            return (
-                _ArithEncoder(),
-                bytearray(_LL_STAT_BINS),
-                [[[0] * pw for _ in range(ph)] for *_, ph, pw in geo],
-                [True] * len(idx),
-            )
-
-        enc, stats, cats, pending = fresh()
-        for m in range(mcux * mcuy):
-            if restart_interval and m and m % restart_interval == 0:
-                out += enc.finish()
-                out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                enc, stats, cats, pending = fresh()
-            mr, mc = divmod(m, mcux)
-            for si, p in enumerate(planes):
-                yi, xi, fh, fv, ph, pw = geo[si]
-                cat_p = cats[si]
-                base_r, base_c = mr * fv, mc * fh
-                for dv in range(fv):
-                    r = base_r + dv
-                    row, crow = p[r], cat_p[r]
-                    for dh in range(fh):
-                        c = base_c + dh
-                        px = _ll_predict(
-                            p, r, c, predictor, default, pending[si]
-                        )
-                        pending[si] = False
-                        d = ((row[c] - px + 32768) & 0xFFFF) - 32768
-                        if d == -32768:
-                            d = 32768
-                        ca = crow[c - 1] if c else 0
-                        cb = cat_p[r - 1][c] if r else 0
-                        crow[c] = _encode_ll_diff(
-                            enc, stats, ca, cb, d, lo, hi
-                        )
-        out += enc.finish()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_lossless_arith(
-    img, predictor=4, point_transform=0, restart_interval=0, dc_cond=None,
-    groups=None, sampling=None
-) -> bytes:
+def encode_jpeg_lossless_arith(img, predictor=4) -> bytes:
     """Encode a REAL lossless-arithmetic JPEG (SOF11) — the
     fixture-side twin of :func:`decode_lossless_scan_arith`, sharing
     ``jpeg.encode_jpeg_lossless``'s prediction semantics exactly, so
-    ``decode(encode_jpeg_lossless_arith(x, Pt)) == (x >> Pt) << Pt``
-    bit for bit (and equals the SOF3 decode of the same image).
-    uint8 input encodes at 8-bit precision, uint16 at 16-bit."""
-    import numpy as np
+    the round trip is exact bit for bit (and equals the SOF3 decode of
+    the same image). uint8 input encodes at 8-bit precision, uint16 at
+    16-bit. Every component shares statistics table 0; gradient
+    categories are tracked exactly as the decoder twin does."""
+    from dstlr_spark.operators.jpeg import (
+        _emit_sos,
+        _ll_planes,
+        _ll_predict,
+        _sof,
+    )
 
-    from dstlr_spark.operators.jpeg import _emit_sos
-
-    arr = np.asarray(img)
-    prec = 16 if arr.dtype == np.uint16 else 8
-    if not 0 <= point_transform < prec:
-        raise ValueError(f"point transform {point_transform} out of range")
     if not 1 <= predictor <= 7:
         raise ValueError(f"predictor {predictor} out of range")
-    if sampling is not None and any(tuple(s) != (1, 1) for s in sampling):
-        return _encode_lossless_arith_sampled(
-            arr, prec, predictor, point_transform, restart_interval,
-            dc_cond, groups, [tuple(s) for s in sampling],
-        )
-    gray = arr.ndim == 2
-    nchan = 1 if gray else arr.shape[2]
-    shifted = arr.astype(np.int64) >> point_transform
-    planes = (
-        [shifted.tolist()]
-        if gray
-        else [shifted[..., i].tolist() for i in range(nchan)]
-    )
-    h, w = arr.shape[:2]
-    comp_ids = list(range(1, nchan + 1))
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", prec, h, w, len(comp_ids))
-    for cid in comp_ids:
-        sof += bytes([cid, 0x11, 0])  # 1x1 sampling; Tq unused in SOF11
-    out += b"\xff\xcb" + struct.pack(">H", 2 + len(sof)) + sof
-    ll, uu = dc_cond if dc_cond is not None else (DEFAULT_DC_L, DEFAULT_DC_U)
-    if not 0 <= ll <= uu <= 15:
-        raise ValueError(f"DC conditioning ({ll}, {uu}) invalid")
-    if dc_cond is not None:
-        body = bytes([0x00, (uu << 4) | ll])
-        out += b"\xff\xcc" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    lo, hi = (1 << ll) >> 1, (1 << uu) >> 1
-    default = 1 << (prec - point_transform - 1)
-    if groups is not None:
-        # multi-scan lossless arithmetic: one scan (fresh QM stream +
-        # fresh statistics) per component group
-        if sorted(cid for g in groups for cid in g) != sorted(comp_ids):
-            raise ValueError("groups must partition the component ids")
-        for g in groups:
-            out += _emit_sos(list(g), predictor, 0, 0, point_transform)
-            gplanes = [planes[comp_ids.index(cid)] for cid in g]
-            ng = len(g)
-            enc = _ArithEncoder()
-            stats = bytearray(_LL_STAT_BINS)
-            cat_above = [[0] * w for _ in range(ng)]
-            cat_left = [0] * ng
-            reset = True
-            last_reset_m = 0
-            for m in range(h * w):
-                if restart_interval and m and m % restart_interval == 0:
-                    out += enc.finish()
-                    out += bytes(
-                        [0xFF, 0xD0 + (m // restart_interval - 1) % 8]
-                    )
-                    enc = _ArithEncoder()
-                    stats = bytearray(_LL_STAT_BINS)
-                    cat_above = [[0] * w for _ in range(ng)]
-                    cat_left = [0] * ng
-                    reset = True
-                    last_reset_m = m
-                r, c = divmod(m, w)
-                if c == 0:
-                    cat_left = [0] * ng
-                for si, p in enumerate(gplanes):
-                    px = _ll_predict(p, r, c, predictor, default, reset)
-                    d = ((p[r][c] - px + 32768) & 0xFFFF) - 32768
-                    if d == -32768:
-                        d = 32768
-                    cb = cat_above[si][c] if m - last_reset_m >= w else 0
-                    cat = _encode_ll_diff(enc, stats, cat_left[si], cb, d,
-                                          lo, hi)
-                    cat_above[si][c] = cat
-                    cat_left[si] = cat
-                reset = False
-            out += enc.finish()
-        out += b"\xff\xd9"
-        return bytes(out)
-    out += _emit_sos(comp_ids, predictor, 0, 0, point_transform)
+    prec, h, w, comp_ids, planes = _ll_planes(img)
+    out = bytearray(b"\xff\xd8") + _sof(0xCB, prec, h, w, comp_ids)
+    out += _emit_sos(comp_ids, predictor)
+    default = 1 << (prec - 1)
     nc = len(planes)
-
-    def fresh():
-        return (
-            _ArithEncoder(),
-            bytearray(_LL_STAT_BINS),
-            [[0] * w for _ in range(nc)],
-            [0] * nc,
-        )
-
-    enc, stats, cat_above, cat_left = fresh()
-    reset = True
-    last_reset_m = 0
+    enc = _ArithEncoder()
+    stats = bytearray(_LL_STAT_BINS)
+    cat_above = [[0] * w for _ in range(nc)]
     for m in range(h * w):
-        if restart_interval and m and m % restart_interval == 0:
-            out += enc.finish()
-            out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-            enc, stats, cat_above, cat_left = fresh()
-            reset = True
-            last_reset_m = m
         r, c = divmod(m, w)
         if c == 0:
             cat_left = [0] * nc
         for ci, p in enumerate(planes):
-            px = _ll_predict(p, r, c, predictor, default, reset)
+            px = _ll_predict(p, r, c, predictor, default, m == 0)
             d = ((p[r][c] - px + 32768) & 0xFFFF) - 32768
             if d == -32768:
                 d = 32768  # ≡ +32768 mod 2^16 (the SOF3 SSSS=16 case)
-            cb = cat_above[ci][c] if m - last_reset_m >= w else 0
-            cat = _encode_ll_diff(enc, stats, cat_left[ci], cb, d, lo, hi)
+            cat = _encode_ll_diff(enc, stats, cat_left[ci], cat_above[ci][c], d)
             cat_above[ci][c] = cat
             cat_left[ci] = cat
-        reset = False
     out += enc.finish()
     out += b"\xff\xd9"
     return bytes(out)

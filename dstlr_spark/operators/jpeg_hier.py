@@ -1,48 +1,24 @@
-"""Hierarchical JPEG (T.81 Annex J): DHP-led multi-frame pyramids.
+"""Hierarchical JPEG (T.81 Annex J): DHP-led lossless pyramids.
 
-The last JPEG family in the decode gate: a hierarchical stream opens
-with DHP (0xDE, a SOF-shaped header carrying the FULL-resolution
-dimensions), then a pyramid of frames — the first non-differential
-(here SOF3, lossless Huffman: the only mode whose reconstruction is
-exact by construction and can therefore join the planted-pixel
-equality oracle), each later frame differential (SOF7), optionally
-preceded by EXP (0xDF) which doubles the reference horizontally
-and/or vertically through the NORMATIVE J.1.1.2 bilinear filter
-(out[2i] = in[i]; out[2i+1] = (in[i] + in[i+1] + 1) >> 1, edge
-replicated). A differential scan codes per-sample differences with
-the Annex-H SSSS machinery, but the prediction is ALWAYS the
-(expanded) reference sample — the scan header's predictor field must
-be 0 — and reconstruction is (ref + diff) mod 2^16 (J.2.2).
+A hierarchical stream opens with DHP (0xDE, a SOF-shaped header
+carrying the FULL-resolution dimensions), then a pyramid of frames —
+the first non-differential (SOF3, lossless Huffman: exact by
+construction, so it joins the planted-pixel equality oracle), each
+later frame differential (SOF7), optionally preceded by EXP (0xDF)
+which doubles the reference horizontally and/or vertically through
+the NORMATIVE J.1.1.2 bilinear filter (out[2i] = in[i]; out[2i+1] =
+(in[i] + in[i+1] + 1) >> 1, edge replicated). A differential scan
+codes per-sample differences with the Annex-H SSSS machinery, but the
+prediction is ALWAYS the (expanded) reference sample — the scan
+header's predictor field must be 0 — and reconstruction is (ref +
+diff) mod 2^16 (J.2.2).
 
-Scope, under BOTH entropy layers (Huffman and the QM coder of
-:mod:`jpeg_arith`, DAC honored):
-
-- LOSSLESS hierarchies — SOF3/SOF11 first frame + SOF7/SOF15
-  differentials — grayscale, RGB, or CMYK (Adobe inverted storage,
-  converted at EOI by the shared closed-form), 2-16 bit precision.
-  Exact by construction: these join the planted-pixel value gate.
-- SEQUENTIAL-DCT hierarchies — SOF0/SOF1/SOF9 first frame +
-  SOF5/SOF13 differentials (T.81 J.2: FDCT of the difference image,
-  NO level shift, per-block DC coded directly with PRED=0 per
-  F.1.1.5.1; reconstruction ref + IDCT, clipped) — including multi-
-  scan frames (scans land in per-frame coefficient stores, the frame
-  reconstructs at its closing marker) and T.81 J.5's closing lossless
-  differential frame, which makes the whole DCT hierarchy exact in
-  the stored domain (the family's value-equality gate). 3-component
-  DCT hierarchies are YCbCr, inverted at EOI.
-
-- PROGRESSIVE hierarchies — SOF2/SOF10 first frame + SOF6/SOF14
-  differentials: each frame's scans (spectral selection + successive
-  approximation, T.81 G.2) land in the same per-frame coefficient
-  stores via the shared progressive machinery of :mod:`jpeg` /
-  :mod:`jpeg_arith`, with PRED=0 DC in differential frames
-  (F.1.1.5.1); the frame reconstructs at its closing marker exactly
-  like the sequential-DCT case. This closes the T.81 frame-type
-  matrix: every SOF process (0-15) decodes in its legal context.
-
-All support 1x1 sampling, restart intervals, and any number of
-pyramid levels. Malformed input always raises ValueError (the pinned
-decoder exception contract).
+Scope: grayscale or RGB, 2-16 bit precision, 1x1 sampling, any number
+of pyramid levels. DCT and arithmetic-coded frames inside a
+hierarchy, 4-component frames, multi-scan frames, point transforms,
+DAC and restart intervals raise ``NotImplementedError("STUB: …")``;
+malformed input always raises ValueError (the pinned decoder
+exception contract).
 
 Reference parity anchor: the reference pipeline treats media as
 opaque bytes (SURVEY.md §2.12 mandate surface); this codec exists so
@@ -56,25 +32,23 @@ import struct
 
 from dstlr_spark.operators.jpeg import (
     _LL_SYMBOLS,
-    _ZIGZAG,
     _BitReader,
     _BitWriter,
     _build_huffman,
-    _category,
-    _decode_progressive_scan,
-    _decode_seq_scan_into,
+    _check_lossless_frame,
+    _emit_sos,
     _entropy_segments,
     _extend,
     _fixed_table,
     _huff_decode,
+    _ll_diff_huffman,
+    _ll_planes,
+    _ll_predict,
+    _ll_to_rgb,
+    _sof,
 )
 
 __all__ = ["decode_jpeg_hier", "encode_jpeg_hier"]
-
-#: progressive frames inside a hierarchy (SOF2/SOF10 non-differential,
-#: SOF6/SOF14 differential) — scans route through the shared
-#: progressive machinery of :mod:`jpeg` / :mod:`jpeg_arith`
-_PROG_SOFS = (0xC2, 0xC6, 0xCA, 0xCE)
 
 
 def _parse_sofish(seg: bytes, what: str):
@@ -99,11 +73,8 @@ def _parse_sofish(seg: bytes, what: str):
     comps = []
     for c in range(ncomp):
         cid, hv, tq = seg[6 + 3 * c : 9 + 3 * c]
-        if (hv >> 4) != 1 or (hv & 15) != 1:
-            raise NotImplementedError(
-                "STUB: hierarchical lossless with sampling factors != 1x1"
-            )
-        comps.append((cid, 1, 1, tq))
+        comps.append((cid, hv >> 4, hv & 15, tq))
+    _check_lossless_frame(comps)
     return prec, h, w, comps
 
 
@@ -154,37 +125,22 @@ def _expand_planes(planes, out_h: int, out_w: int, eh: int, ev: int):
     return out
 
 
-def _decode_hier_scan(
-    b, pos, h, w, tables, prec, predictor, restart_interval, ref
-):
+def _decode_hier_scan(b, pos, h, w, tables, prec, predictor, ref):
     """One hierarchical scan: the Annex-H sample walk (interleaved one
-    sample per component per MCU, SSSS difference categories, restart
-    resets) with the prediction source switched by frame kind — the
-    H.1.2.1 spatial predictors for the non-differential first frame
-    (``ref is None``), the co-located reference sample for
-    differential frames (J.2.2: reconstruction (ref + diff) mod 2^16).
-    Returns (planes, end_pos) so the marker walk can continue past the
-    entropy data — the multi-frame need the single-frame decoder in
-    :mod:`dstlr_spark.operators.jpeg` never had."""
+    sample per component per MCU, SSSS difference categories) with
+    the prediction source switched by frame kind — the H.1.2.1
+    spatial predictors for the non-differential first frame (``ref is
+    None``), the co-located reference sample for differential frames
+    (J.2.2: reconstruction (ref + diff) mod 2^16). Returns (planes,
+    end_pos) so the marker walk can continue past the entropy data."""
     segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
+    if len(segs) > 1:
         raise ValueError("JPEG RST marker without a DRI segment")
     nc = len(tables)
     default = 1 << (prec - 1)
     planes = [[[0] * w for _ in range(h)] for _ in range(nc)]
-    seg_i = 0
     br = _BitReader(segs[0][0])
-    reset = True
     for m in range(h * w):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            br = _BitReader(segs[seg_i][0])
-            reset = True
         r, c = divmod(m, w)
         for ci in range(nc):
             t = _huff_decode(br, tables[ci])
@@ -194,31 +150,9 @@ def _decode_hier_scan(
             p = planes[ci]
             if ref is not None:
                 px = ref[ci][r][c]
-            elif reset:
-                px = default
-            elif r == 0:
-                px = p[0][c - 1]
-            elif c == 0:
-                px = p[r - 1][0]
             else:
-                row, above = p[r], p[r - 1]
-                ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                if predictor == 1:
-                    px = ra
-                elif predictor == 2:
-                    px = rb
-                elif predictor == 3:
-                    px = rc_
-                elif predictor == 4:
-                    px = ra + rb - rc_
-                elif predictor == 5:
-                    px = ra + ((rb - rc_) >> 1)
-                elif predictor == 6:
-                    px = rb + ((ra - rc_) >> 1)
-                else:
-                    px = (ra + rb) >> 1
+                px = _ll_predict(p, r, c, predictor, default, m == 0)
             p[r][c] = (px + d) & 0xFFFF
-        reset = False
     mask = (1 << prec) - 1
     if mask != 0xFFFF:
         for p in planes:
@@ -226,195 +160,23 @@ def _decode_hier_scan(
                 row = p[r]
                 p[r] = [v & mask for v in row]
     return planes, end
-
-
-def _decode_hier_scan_arith(
-    b, pos, h, w, tds, prec, predictor, restart_interval, ref, dac_dc
-):
-    """The arithmetic twin of :func:`_decode_hier_scan`: the same
-    interleaved sample walk with the entropy layer swapped for the QM
-    coder under the H.1.2 gradient-conditioned lossless model of
-    :mod:`jpeg_arith` (statistics shared per DC-conditioning table id,
-    Da/Db categories from the previously coded diffs, restart resets
-    coder + statistics + gradient history). Prediction switches on
-    frame kind exactly as in the Huffman walk: spatial H.1.2.1
-    predictors for the first frame, the co-located reference sample
-    for differential frames, reconstruction (ref + diff) mod 2^16."""
-    from dstlr_spark.operators.jpeg import _entropy_segments
-    from dstlr_spark.operators.jpeg_arith import (
-        DEFAULT_DC_L,
-        DEFAULT_DC_U,
-        _ArithDecoder,
-        _decode_ll_diff,
-        _LL_STAT_BINS,
-    )
-
-    segs, end = _entropy_segments(b, pos)
-    if len(segs) > 1 and not restart_interval:
-        raise ValueError("JPEG RST marker without a DRI segment")
-    nc = len(tds)
-    conds = []
-    for td in tds:
-        ll, uu = dac_dc.get(td, (DEFAULT_DC_L, DEFAULT_DC_U))
-        conds.append((td, (1 << ll) >> 1, (1 << uu) >> 1))
-    default = 1 << (prec - 1)
-    planes = [[[0] * w for _ in range(h)] for _ in range(nc)]
-
-    def fresh(seg_i):
-        return (
-            _ArithDecoder(segs[seg_i][0]),
-            {td: bytearray(_LL_STAT_BINS) for td, _, _ in conds},
-            [[0] * w for _ in range(nc)],  # Db categories per column
-            [0] * nc,  # Da category (left neighbor, current row)
-        )
-
-    seg_i = 0
-    dec, stats, cat_above, cat_left = fresh(0)
-    reset = True
-    last_reset_m = 0
-    for m in range(h * w):
-        if restart_interval and m and m % restart_interval == 0:
-            closing = segs[seg_i][1]
-            if closing is None or closing != (m // restart_interval - 1) % 8:
-                raise ValueError("JPEG restart marker missing/out of sequence")
-            seg_i += 1
-            if seg_i >= len(segs):
-                raise ValueError("JPEG truncated at restart boundary")
-            dec, stats, cat_above, cat_left = fresh(seg_i)
-            reset = True
-            last_reset_m = m
-        r, c = divmod(m, w)
-        if c == 0:
-            cat_left = [0] * nc
-        for ci in range(nc):
-            td, lo, hi = conds[ci]
-            # Db only if the sample above was coded after the last
-            # restart (gradients do not cross restart boundaries)
-            cb = cat_above[ci][c] if m - last_reset_m >= w else 0
-            d, cat = _decode_ll_diff(dec, stats[td], cat_left[ci], cb, lo, hi)
-            p = planes[ci]
-            if ref is not None:
-                px = ref[ci][r][c]
-            elif reset:
-                px = default
-            elif r == 0:
-                px = p[0][c - 1]
-            elif c == 0:
-                px = p[r - 1][0]
-            else:
-                row, above = p[r], p[r - 1]
-                ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                if predictor == 1:
-                    px = ra
-                elif predictor == 2:
-                    px = rb
-                elif predictor == 3:
-                    px = rc_
-                elif predictor == 4:
-                    px = ra + rb - rc_
-                elif predictor == 5:
-                    px = ra + ((rb - rc_) >> 1)
-                elif predictor == 6:
-                    px = rb + ((ra - rc_) >> 1)
-                else:
-                    px = (ra + rb) >> 1
-            p[r][c] = (px + d) & 0xFFFF
-            cat_above[ci][c] = cat
-            cat_left[ci] = cat
-        reset = False
-    mask = (1 << prec) - 1
-    if mask != 0xFFFF:
-        for p in planes:
-            for r in range(h):
-                row = p[r]
-                p[r] = [v & mask for v in row]
-    return planes, end
-
-
-def _idct_planes(comps, h, w, coefs, qtables, center):
-    """Dequant + batched IDCT of per-component coefficient stores →
-    float64 sample planes cropped to (h, w). ``center`` is the level
-    shift: 2^(P-1) for non-differential DCT frames, 0.0 for
-    differential ones (T.81 J.2 — no shift on difference data). The
-    arithmetic is EXPRESSION-IDENTICAL to ``jpeg._reconstruct`` so the
-    encoder's decode simulation lands bit-equal floats."""
-    import numpy as np
-
-    from dstlr_spark.operators.jpeg import _dct_basis
-
-    basis = _dct_basis()
-    out = []
-    for (cid, _, _, tq), cf in zip(comps, coefs):
-        if tq not in qtables:
-            raise ValueError(f"JPEG missing quant table {tq}")
-        nbr, nbc = cf.shape[:2]
-        blk = cf.reshape(-1, 8, 8) * qtables[tq]
-        px = basis.T @ blk @ basis + center
-        p = (
-            px.reshape(nbr, nbc, 8, 8)
-            .transpose(0, 2, 1, 3)
-            .reshape(nbr * 8, nbc * 8)
-        )
-        out.append(p[:h, :w])
-    return out
 
 
 def decode_jpeg_hier(b: bytes):
-    """Decode a hierarchical (DHP-led) JPEG → (h, w, 3) uint8/uint16
-    RGB at the full DHP resolution. Grayscale replicates to RGB (the
-    shared ``decode_rgb_bytes`` contract). Entered from
+    """Decode a hierarchical (DHP-led) lossless JPEG → (h, w, 3)
+    uint8/uint16 RGB at the full DHP resolution. Grayscale replicates
+    to RGB (the shared ``decode_rgb_bytes`` contract). Entered from
     :func:`dstlr_spark.operators.jpeg.decode_jpeg` when the marker
-    walk meets DHP. Lossless frames (SOF3/7/11/15) reconstruct scan
-    by scan; DCT frames (SOF0/1/9 first, SOF5/13 differential) decode
-    their scans into per-frame coefficient stores and reconstruct
-    once at the frame's end (dequant + IDCT + level shift or
-    reference add + clip to [0, 2^P-1]), so sequential multi-scan DCT
-    frames inside a hierarchy assemble too. A 3-component hierarchy
-    is YCbCr once any DCT frame appears (inverted at EOI), RGB when
-    purely lossless — mirroring the non-hierarchical conventions."""
-    import numpy as np
-
+    walk meets DHP; frames reconstruct scan by scan."""
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG stream (missing SOI)")
     htables: dict[tuple[int, int], object] = {}
-    qtables: dict[int, object] = {}
-    dac_dc: dict[int, tuple[int, int]] = {}
-    dac_ac: dict[int, int] = {}
     dhp = None  # (prec, full_h, full_w, comps)
-    frame = None  # (h, w, comps, differential, arith, dct, prog)
+    frame = None  # (h, w, comps, differential)
     ref = None  # reconstructed planes of the latest frame
     pending_exp = None  # (eh, ev) from an EXP marker awaiting a frame
-    dct_cur = None  # pending DCT frame: {"coefs": [...], "scans": n}
-    color_dct = False  # any DCT frame → 3-comp planes are YCbCr
-    restart_interval = 0
     pos = 2
     n = len(b)
-
-    def _finalize_dct():
-        """Reconstruct a pending DCT frame (its scans are all in):
-        dequant + IDCT, then level-shift (first frame) or reference
-        add (differential), clip to sample range — the result becomes
-        the new reference pyramid level."""
-        nonlocal ref, frame, dct_cur
-        if dct_cur is None:
-            return
-        if dct_cur["scans"] == 0:
-            raise ValueError("JPEG DCT hierarchical frame with no scan")
-        fh, fw, fcomps, differential = frame[:4]
-        prec = dhp[0]
-        center = 0.0 if differential else float(1 << (prec - 1))
-        vals = _idct_planes(fcomps, fh, fw, dct_cur["coefs"], qtables, center)
-        maxv = (1 << prec) - 1
-        if differential:
-            vals = [
-                np.array(base, np.float64) + v for base, v in zip(ref, vals)
-            ]
-        ref = [
-            np.clip(np.round(v), 0, maxv).astype(np.int64).tolist()
-            for v in vals
-        ]
-        dct_cur = None
-        frame = None
     while True:
         if pos + 2 > n:
             raise ValueError("JPEG truncated before EOI")
@@ -425,7 +187,6 @@ def decode_jpeg_hier(b: bytes):
         if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
             continue
         if marker == 0xD9:  # EOI: the pyramid must have reached DHP dims
-            _finalize_dct()
             if dhp is None or ref is None:
                 raise ValueError("JPEG hierarchical EOI before any frame")
             prec, fh, fw, _ = dhp
@@ -433,25 +194,7 @@ def decode_jpeg_hier(b: bytes):
                 raise ValueError(
                     "JPEG hierarchical final frame does not reach DHP dims"
                 )
-            mask = (1 << prec) - 1
-            dtype = np.uint8 if prec <= 8 else np.uint16
-            out = (np.array(ref, np.int64) & mask).astype(dtype)
-            if len(ref) in (1, 2):  # 2-comp: gray + aux dropped
-                return np.repeat(out[0][..., None], 3, axis=2)
-            if len(ref) == 4:
-                from dstlr_spark.operators.jpeg import _cmyk_to_rgb
-
-                return _cmyk_to_rgb(list(out), mask)
-            if color_dct:
-                # DCT hierarchy: stored planes are YCbCr (JFIF inverse)
-                center = float(1 << (prec - 1))
-                y, cb, cr = (p.astype(np.float64) for p in out)
-                r = y + 1.402 * (cr - center)
-                g = y - 0.344136 * (cb - center) - 0.714136 * (cr - center)
-                bl = y + 1.772 * (cb - center)
-                rgb = np.stack([r, g, bl], axis=2)
-                return np.clip(np.round(rgb), 0, mask).astype(dtype)
-            return np.stack([out[0], out[1], out[2]], axis=2)
+            return _ll_to_rgb(ref, prec)
         if pos + 2 > n:
             raise ValueError("JPEG truncated segment length")
         seglen = struct.unpack(">H", b[pos : pos + 2])[0]
@@ -464,7 +207,6 @@ def decode_jpeg_hier(b: bytes):
                 raise ValueError("JPEG duplicate DHP")
             dhp = _parse_sofish(seg, "DHP")
         elif marker == 0xDF:  # EXP: reference expansion request
-            _finalize_dct()
             if len(seg) < 1:
                 raise ValueError("JPEG EXP truncated")
             eh, ev = seg[0] >> 4, seg[0] & 15
@@ -473,25 +215,6 @@ def decode_jpeg_hier(b: bytes):
             if ref is None:
                 raise ValueError("JPEG EXP before any reference frame")
             pending_exp = (eh, ev)
-        elif marker == 0xDB:  # DQT (possibly several tables; persist)
-            s = 0
-            while s < len(seg):
-                pq, tq = seg[s] >> 4, seg[s] & 15
-                s += 1
-                if pq not in (0, 1) or tq > 3:
-                    raise ValueError("JPEG DQT precision/id invalid")
-                width = 2 if pq else 1
-                if s + 64 * width > len(seg):
-                    raise ValueError("JPEG DQT truncated")
-                vals = (
-                    np.frombuffer(seg, ">u2", count=64, offset=s)
-                    if pq
-                    else np.frombuffer(seg, np.uint8, count=64, offset=s)
-                )
-                q = np.zeros(64, np.int32)
-                q[list(_ZIGZAG)] = vals  # de-zigzag to natural order
-                qtables[tq] = q.reshape(8, 8)
-                s += 64 * width
         elif marker == 0xC4:  # DHT — tables persist across frames
             s = 0
             while s < len(seg):
@@ -506,35 +229,20 @@ def decode_jpeg_hier(b: bytes):
                     raise ValueError("JPEG DHT truncated")
                 htables[(tc, th)] = _build_huffman(counts, seg[s : s + total])
                 s += total
-        elif marker == 0xCC:  # DAC: arithmetic conditioning (persists)
-            s = 0
-            while s + 2 <= len(seg):
-                tc, tb = seg[s] >> 4, seg[s] & 15
-                cs = seg[s + 1]
-                s += 2
-                if tc == 0:
-                    ll, uu = cs & 15, cs >> 4
-                    if ll > uu or uu > 15:
-                        raise ValueError("JPEG DAC DC conditioning invalid")
-                    dac_dc[tb] = (ll, uu)
-                elif tc == 1:
-                    if not 1 <= cs <= 63:
-                        raise ValueError("JPEG DAC AC Kx out of range")
-                    dac_ac[tb] = cs
-                else:
-                    raise ValueError("JPEG DAC class invalid")
-        elif marker == 0xDD:  # DRI
+        elif marker == 0xCC:
+            raise NotImplementedError("STUB: JPEG arithmetic conditioning (DAC)")
+        elif marker == 0xDD:  # DRI: only a zero (restarts off) interval
             if len(seg) < 2:
                 raise ValueError("JPEG DRI truncated")
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker in (0xC3, 0xC7, 0xCB, 0xCF,  # lossless frames
-                        0xC0, 0xC1, 0xC9, 0xC5, 0xCD,  # sequential DCT
-                        0xC2, 0xC6, 0xCA, 0xCE):  # progressive DCT
-            # non-differential (SOF3/SOF11 lossless, SOF0/SOF1/SOF9
-            # sequential DCT, SOF2/SOF10 progressive DCT) or
-            # differential (SOF7/SOF15 lossless, SOF5/SOF13 sequential,
-            # SOF6/SOF14 progressive), each under its entropy layer
-            _finalize_dct()
+            if struct.unpack(">H", seg[:2])[0]:
+                raise NotImplementedError("STUB: JPEG restart intervals (DRI)")
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC5, 0xC6, 0xC9, 0xCA, 0xCB,
+                        0xCD, 0xCE, 0xCF):
+            raise NotImplementedError(
+                f"STUB: JPEG SOF{marker - 0xC0} frame inside a hierarchy — "
+                "only lossless Huffman pyramids (SOF3 + SOF7) decode"
+            )
+        elif marker in (0xC3, 0xC7):  # SOF3 first / SOF7 differential
             if dhp is None:
                 raise ValueError(
                     "JPEG hierarchical frame before DHP (a bare SOF3 stream "
@@ -547,117 +255,33 @@ def decode_jpeg_hier(b: bytes):
                 raise ValueError("JPEG frame component count differs from DHP")
             if h > dhp[1] or w > dhp[2]:
                 raise ValueError("JPEG frame exceeds DHP dimensions")
-            differential = marker in (0xC7, 0xCF, 0xC5, 0xCD, 0xC6, 0xCE)
-            prog = marker in _PROG_SOFS
-            dct = prog or marker in (0xC0, 0xC1, 0xC9, 0xC5, 0xCD)
+            differential = marker == 0xC7
             if differential and ref is None:
                 raise ValueError("JPEG differential frame before a reference")
             if not differential and ref is not None:
                 raise ValueError("JPEG second non-differential frame")
-            arith = marker in (0xCB, 0xCF, 0xC9, 0xCD, 0xCA, 0xCE)
-            frame = (h, w, comps, differential, arith, dct, prog)
-            if dct:
-                if prec not in (8, 12):
-                    raise ValueError(
-                        f"JPEG DCT frame precision {prec} invalid"
-                    )
-                color_dct = True
-                if differential:
-                    if pending_exp is not None:
-                        ref = _expand_planes(ref, h, w, *pending_exp)
-                        pending_exp = None
-                    if len(ref[0]) != h or len(ref[0][0]) != w:
-                        raise ValueError(
-                            "JPEG differential frame dims differ from "
-                            "reference"
-                        )
-                mx = (w + 7) // 8
-                my = (h + 7) // 8
-                dct_cur = {
-                    "coefs": [
-                        np.zeros((my * cv, mx * ch_, 64), np.float64)
-                        for (_cid, ch_, cv, _tq) in comps
-                    ],
-                    "scans": 0,
-                }
+            frame = (h, w, comps, differential)
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("JPEG SOS before a hierarchical frame")
-            h, w, comps, differential, arith, dct, prog = frame
+            h, w, comps, differential = frame
             ns = seg[0] if seg else 0
             if len(seg) < 1 + 2 * ns + 3:
                 raise ValueError("JPEG SOS header truncated")
-            if dct:
-                # DCT scan into the pending frame's stores — sequential
-                # (any partition of components across scans) or
-                # progressive (spectral selection + successive
-                # approximation, T.81 G.2, with PRED=0 DC in
-                # differential frames); the frame reconstructs at the
-                # next frame-level marker
-                scan = []
-                for c in range(ns):
-                    cs, tdta = seg[1 + 2 * c : 3 + 2 * c]
-                    scan.append((cs, tdta >> 4, tdta & 15))
-                ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
-                fr = (h, w, comps)
-                if prog:
-                    if arith:
-                        from dstlr_spark.operators.jpeg_arith import (
-                            decode_progressive_scan_arith,
-                        )
-
-                        pos = decode_progressive_scan_arith(
-                            b, pos, fr, scan, ss, se, ahal >> 4, ahal & 15,
-                            dac_dc, dac_ac, dct_cur["coefs"],
-                            restart_interval, differential=differential,
-                        )
-                    else:
-                        pos = _decode_progressive_scan(
-                            b, pos, fr, scan, ss, se, ahal >> 4, ahal & 15,
-                            htables, dct_cur["coefs"], restart_interval,
-                            prec=dhp[0], differential=differential,
-                        )
-                    dct_cur["scans"] += 1
-                    continue
-                if ss != 0 or se != 63 or ahal != 0:
-                    raise ValueError(
-                        "JPEG sequential DCT scan header invalid"
-                    )
-                if arith:
-                    from dstlr_spark.operators.jpeg_arith import (
-                        decode_seq_scan_arith_into,
-                    )
-
-                    pos = decode_seq_scan_arith_into(
-                        b, pos, fr, scan, dac_dc, dac_ac,
-                        dct_cur["coefs"], restart_interval,
-                        differential=differential,
-                    )
-                else:
-                    pos = _decode_seq_scan_into(
-                        b, pos, fr, scan, htables, dct_cur["coefs"],
-                        restart_interval, prec=dhp[0],
-                        differential=differential,
-                    )
-                dct_cur["scans"] += 1
-                continue
             if ns != len(comps):
                 raise NotImplementedError(
                     "STUB: hierarchical lossless multi-scan (non-interleaved)"
                 )
             tables = []
-            tds = []
             for c in range(ns):
                 cs, tdta = seg[1 + 2 * c : 3 + 2 * c]
                 if cs != comps[c][0]:
                     raise ValueError(
                         "JPEG scan component order differs from frame"
                     )
-                tds.append(tdta >> 4)
-                if not arith:
-                    if (0, tdta >> 4) not in htables:
-                        raise ValueError("JPEG missing Huffman table for scan")
-                    tables.append(htables[(0, tdta >> 4)])
+                if (0, tdta >> 4) not in htables:
+                    raise ValueError("JPEG missing Huffman table for scan")
+                tables.append(htables[(0, tdta >> 4)])
             ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
             if se != 0 or (ahal >> 4) != 0:
                 raise ValueError("JPEG lossless scan header invalid")
@@ -665,7 +289,6 @@ def decode_jpeg_hier(b: bytes):
                 raise NotImplementedError(
                     "STUB: point transform inside a hierarchy"
                 )
-            prec = dhp[0]
             if differential:
                 if ss != 0:
                     raise ValueError(
@@ -683,15 +306,9 @@ def decode_jpeg_hier(b: bytes):
                 if not 1 <= ss <= 7:
                     raise ValueError(f"JPEG lossless predictor {ss} invalid")
                 scan_ref = None
-            if arith:
-                ref, pos = _decode_hier_scan_arith(
-                    b, pos, h, w, tds, prec, ss, restart_interval,
-                    scan_ref, dac_dc,
-                )
-            else:
-                ref, pos = _decode_hier_scan(
-                    b, pos, h, w, tables, prec, ss, restart_interval, scan_ref
-                )
+            ref, pos = _decode_hier_scan(
+                b, pos, h, w, tables, dhp[0], ss, scan_ref
+            )
             frame = None
         # APPn / COM / DQT / anything else: skip
 
@@ -699,10 +316,7 @@ def decode_jpeg_hier(b: bytes):
 _EXP_BOTH = b"\xff\xdf\x00\x03\x11"  # EXP segment: Eh=1, Ev=1
 
 
-def encode_jpeg_hier(
-    img, levels: int = 2, predictor: int = 4, restart_interval: int = 0,
-    arith: bool = False, dc_cond=None
-) -> bytes:
+def encode_jpeg_hier(img, levels: int = 2, predictor: int = 4) -> bytes:
     """Encode an (h, w) grayscale or (h, w, 3) RGB array as a REAL
     hierarchical JPEG (T.81 Annex J): DHP, then a ``levels``-deep
     lossless pyramid — the smallest level as a non-differential SOF3
@@ -713,721 +327,56 @@ def encode_jpeg_hier(
     by decimation (``a[::2, ::2]``) — Annex J leaves the downsampling
     filter to the encoder precisely because the differential frames
     correct it exactly. uint8 encodes at 8-bit precision, uint16 at
-    16-bit; ``restart_interval`` > 0 emits DRI + RSTn every
-    that-many samples in every frame. ``arith=True`` swaps the entropy
-    layer for the QM coder (SOF11 first frame + SOF15 differentials,
-    the H.1.2 lossless statistical model of :mod:`jpeg_arith`) —
-    same pyramid, same diffs, still exact; ``dc_cond=(L, U)`` emits a
-    DAC segment and conditions the model on it."""
+    16-bit."""
     import numpy as np
 
     arr = np.asarray(img)
-    prec = 16 if arr.dtype == np.uint16 else 8
     if not 1 <= predictor <= 7:
         raise ValueError(f"predictor {predictor} out of range")
     if levels < 1:
         raise ValueError("levels must be >= 1")
-    gray = arr.ndim == 2
     h, w = arr.shape[:2]
     if levels > 1 and (1 << (levels - 1)) > max(h, w):
         raise ValueError(f"{levels} levels exceed image dimensions {w}x{h}")
     pyramid = [arr]
     for _ in range(levels - 1):
         pyramid.append(pyramid[-1][::2, ::2])
-    comp_ids = [1] if gray else list(range(1, arr.shape[2] + 1))
-    nc = len(comp_ids)
-
-    def plane_lists(a):
-        a = a.astype(np.int64)
-        return [a.tolist()] if gray else [a[..., i].tolist() for i in range(nc)]
-
-    def sofish(marker, a):
-        body = struct.pack(">BHHB", prec, a.shape[0], a.shape[1], nc)
-        for cid in comp_ids:
-            body += bytes([cid, 0x11, 0])
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(body)) + body
-
-    def sos(ss):
-        body = bytes([nc])
-        for cid in comp_ids:
-            body += bytes([cid, 0x00])  # DC-class table 0
-        body += bytes([ss, 0, 0])
-        return b"\xff\xda" + struct.pack(">H", 2 + len(body)) + body
-
-    def code_scan(planes, ref, fh, fw):
-        # the Annex-H sample walk again, from the encoder side: spatial
-        # prediction when ref is None, reference prediction otherwise
-        default = 1 << (prec - 1)
-        chunks = bytearray()
-        bw = _BitWriter()
-        reset = True
-        for m in range(fh * fw):
-            if restart_interval and m and m % restart_interval == 0:
-                bw.flush()
-                chunks += bw.out
-                bw = _BitWriter()
-                chunks += bytes(
-                    [0xFF, 0xD0 + (m // restart_interval - 1) % 8]
-                )
-                reset = True
-            r, c = divmod(m, fw)
-            for ci, p in enumerate(planes):
-                if ref is not None:
-                    px = ref[ci][r][c]
-                elif reset:
-                    px = default
-                elif r == 0:
-                    px = p[0][c - 1]
-                elif c == 0:
-                    px = p[r - 1][0]
-                else:
-                    row, above = p[r], p[r - 1]
-                    ra, rb, rc_ = row[c - 1], above[c], above[c - 1]
-                    if predictor == 1:
-                        px = ra
-                    elif predictor == 2:
-                        px = rb
-                    elif predictor == 3:
-                        px = rc_
-                    elif predictor == 4:
-                        px = ra + rb - rc_
-                    elif predictor == 5:
-                        px = ra + ((rb - rc_) >> 1)
-                    elif predictor == 6:
-                        px = rb + ((ra - rc_) >> 1)
-                    else:
-                        px = (ra + rb) >> 1
-                d = ((p[r][c] - px + 32768) & 0xFFFF) - 32768
-                if d == -32768:  # ≡ +32768 mod 2^16: SSSS=16, no bits
-                    bw.write(ll_enc[16][1], ll_enc[16][0])
-                else:
-                    t = _category(d)
-                    bw.write(ll_enc[t][1], ll_enc[t][0])
-                    if t:
-                        bw.write(d if d > 0 else d + (1 << t) - 1, t)
-            reset = False
-        bw.flush()
-        chunks += bw.out
-        return bytes(chunks)
-
-    def code_scan_arith(planes, ref, fh, fw):
-        # the same sample walk under the QM coder: shared statistics
-        # (every scan component selects DC-conditioning table 0),
-        # gradient categories tracked exactly as the decoder twin does
-        from dstlr_spark.operators.jpeg_arith import (
-            _LL_STAT_BINS,
-            _ArithEncoder,
-            _encode_ll_diff,
-            _ll_predict,
-        )
-
-        default = 1 << (prec - 1)
-        chunks = bytearray()
-
-        def fresh():
-            return (
-                _ArithEncoder(),
-                bytearray(_LL_STAT_BINS),
-                [[0] * fw for _ in range(nc)],
-                [0] * nc,
-            )
-
-        enc, stats, cat_above, cat_left = fresh()
-        reset = True
-        last_reset_m = 0
-        for m in range(fh * fw):
-            if restart_interval and m and m % restart_interval == 0:
-                chunks += enc.finish()
-                chunks += bytes(
-                    [0xFF, 0xD0 + (m // restart_interval - 1) % 8]
-                )
-                enc, stats, cat_above, cat_left = fresh()
-                reset = True
-                last_reset_m = m
-            r, c = divmod(m, fw)
-            if c == 0:
-                cat_left = [0] * nc
-            for ci, p in enumerate(planes):
-                if ref is not None:
-                    px = ref[ci][r][c]
-                else:
-                    px = _ll_predict(p, r, c, predictor, default, reset)
-                d = ((p[r][c] - px + 32768) & 0xFFFF) - 32768
-                if d == -32768:  # ≡ +32768 mod 2^16
-                    d = 32768
-                cb = cat_above[ci][c] if m - last_reset_m >= fw else 0
-                cat = _encode_ll_diff(enc, stats, cat_left[ci], cb, d, lo, hi)
-                cat_above[ci][c] = cat
-                cat_left[ci] = cat
-            reset = False
-        chunks += enc.finish()
-        return bytes(chunks)
-
-    if dc_cond is not None and not arith:
-        raise ValueError("dc_cond is an arithmetic-coding parameter")
-    ll, uu = dc_cond if dc_cond is not None else (0, 1)
-    if not 0 <= ll <= uu <= 15:
-        raise ValueError(f"DC conditioning ({ll}, {uu}) invalid")
-    lo, hi = (1 << ll) >> 1, (1 << uu) >> 1
-    first_sof, diff_sof = (0xCB, 0xCF) if arith else (0xC3, 0xC7)
-    scan = code_scan_arith if arith else code_scan
     ll_counts, ll_syms, ll_enc = _fixed_table(_LL_SYMBOLS)
+
+    def frame(marker, a, ss, ref):
+        # the Annex-H sample walk from the encoder side: spatial
+        # prediction when ref is None, reference prediction otherwise
+        prec, fh, fw, comp_ids, planes = _ll_planes(a)
+        out = _sof(marker, prec, fh, fw, comp_ids) + _emit_sos(comp_ids, ss)
+        default = 1 << (prec - 1)
+        bw = _BitWriter()
+        for m in range(fh * fw):
+            r, c = divmod(m, fw)
+            for ci, p in enumerate(planes):
+                if ref is not None:
+                    px = ref[ci][r][c]
+                else:
+                    px = _ll_predict(p, r, c, predictor, default, m == 0)
+                d = ((p[r][c] - px + 32768) & 0xFFFF) - 32768
+                _ll_diff_huffman(bw, ll_enc, d)
+        bw.flush()
+        return out + bytes(bw.out), planes
+
     out = bytearray(b"\xff\xd8")
-    out += sofish(0xDE, arr)  # DHP at full resolution
-    if arith:
-        if dc_cond is not None:
-            body = bytes([0x00, (uu << 4) | ll])
-            out += b"\xff\xcc" + struct.pack(">H", 2 + len(body)) + body
-    else:
-        body = bytes([0x00]) + ll_counts + ll_syms
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    # frame 1: non-differential (SOF3 / SOF11) at the smallest level
-    top = pyramid[-1]
-    out += sofish(first_sof, top) + sos(predictor)
-    out += scan(plane_lists(top), None, top.shape[0], top.shape[1])
-    ref_planes = plane_lists(top)
-    # remaining levels: EXP + differential (SOF7 / SOF15) against the
-    # expansion
+    prec, _, _, comp_ids, _ = _ll_planes(arr[:1, :1])  # of the full image
+    out += _sof(0xDE, prec, h, w, comp_ids)  # DHP at full resolution
+    body = bytes([0x00]) + ll_counts + ll_syms
+    out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
+    # frame 1: non-differential SOF3 at the smallest level
+    data, ref_planes = frame(0xC3, pyramid[-1], predictor, None)
+    out += data
+    # remaining levels: EXP + differential SOF7 against the expansion
     for level in range(levels - 2, -1, -1):
         target = pyramid[level]
         th, tw = target.shape[:2]
         out += _EXP_BOTH
         ref_planes = _expand_planes(ref_planes, th, tw, 1, 1)
-        out += sofish(diff_sof, target) + sos(0)
-        out += scan(plane_lists(target), ref_planes, th, tw)
-        ref_planes = plane_lists(target)
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_hier_dct(
-    img, levels: int = 2, quant=None, arith: bool = False,
-    restart_interval: int = 0, final_lossless: bool = False,
-    progressive: bool = False, dc_al: int = 1, ac_al: int = 1,
-    bands=((1, 5), (6, 63)),
-) -> bytes:
-    """Encode an (h, w) grayscale or (h, w, 3) RGB uint8 array as a
-    DCT-mode hierarchical JPEG (T.81 Annex J): DHP, then a
-    ``levels``-deep pyramid — the smallest level as a non-differential
-    sequential DCT frame (SOF0 Huffman / SOF9 arithmetic), each later
-    level as EXP + a DIFFERENTIAL sequential DCT frame (SOF5 / SOF13)
-    whose coefficients are the FDCT of (target − expanded reference)
-    with NO level shift and per-block DC coded directly (PRED = 0,
-    T.81 F.1.1.5.1). The encoder simulates the decoder after every
-    frame (same ``_idct_planes`` expression, same round/clip), so the
-    reference pyramid it diffs against is EXACTLY what the decoder
-    reconstructs. ``final_lossless=True`` appends T.81 J.5's closing
-    move: one lossless differential frame (SOF7 / SOF15) coding
-    (stored − reference) mod 2^16, which makes the WHOLE hierarchy
-    exact in the stored (YCbCr/gray) domain — the value-equality gate
-    for the DCT hierarchy. RGB inputs are forward-transformed to
-    rounded YCbCr once; the decoder inverts at EOI. 8-bit only, 1x1
-    sampling; ``restart_interval`` > 0 emits DRI + RSTn in every
-    frame (MCU units in DCT frames, sample units in the lossless
-    closer).
-
-    ``progressive=True`` swaps the frame markers for their progressive
-    twins (SOF2/SOF10 first frame, SOF6/SOF14 differentials) and emits
-    each frame as a full progressive scan script — interleaved DC
-    first at precision ``dc_al`` then raw/fixed-bin DC refinements
-    down to 0; per component and spectral band in ``bands``, an
-    AC-first scan at precision ``ac_al`` then AC refinements — over
-    the SAME quantized coefficient blocks the sequential emitter
-    writes. In differential frames the DC-first pass codes each
-    block's point-transformed DC directly (PRED = 0, F.1.1.5.1).
-    Because the scan script delivers every coefficient bit, the
-    decoder's stores end bit-identical to the sequential case:
-    decode(progressive hierarchy) == decode(sequential hierarchy)
-    exactly, and the J.5 closer's exactness carries over unchanged —
-    the family's value gates."""
-    import numpy as np
-
-    from dstlr_spark.operators.jpeg import (
-        _AC12_SYMBOLS,
-        _DC12_SYMBOLS,
-        _emit_sos,
-        _encode_block,
-    )
-
-    arr = np.asarray(img)
-    if arr.dtype != np.uint8:
-        raise ValueError("DCT hierarchical encode supports uint8 only")
-    if levels < 1:
-        raise ValueError("levels must be >= 1")
-    if progressive and not (0 <= dc_al <= 13 and 0 <= ac_al <= 13):
-        raise ValueError("successive-approximation precision out of range")
-    if quant is None:
-        quant = np.ones((8, 8), np.int32)
-    quant = np.asarray(quant, np.int32)
-    gray = arr.ndim == 2
-    h, w = arr.shape[:2]
-    if levels > 1 and (1 << (levels - 1)) > max(h, w):
-        raise ValueError(f"{levels} levels exceed image dimensions {w}x{h}")
-    prec = 8
-    center = float(1 << (prec - 1))
-    maxv = (1 << prec) - 1
-    if gray:
-        stored = [arr.astype(np.int64)]
-    else:
-        r, g, bch = (arr[..., i].astype(np.float64) for i in range(3))
-        y = np.round(0.299 * r + 0.587 * g + 0.114 * bch)
-        cb = np.round(-0.168736 * r - 0.331264 * g + 0.5 * bch + center)
-        cr = np.round(0.5 * r - 0.418688 * g - 0.081312 * bch + center)
-        stored = [
-            np.clip(p, 0, maxv).astype(np.int64) for p in (y, cb, cr)
-        ]
-    nc = len(stored)
-    comp_ids = list(range(1, nc + 1))
-    comps = [(cid, 1, 1, 0) for cid in comp_ids]
-    pyramid = [stored]
-    for _ in range(levels - 1):
-        pyramid.append([p[::2, ::2] for p in pyramid[-1]])
-    zz = list(_ZIGZAG)
-
-    def sofish(marker, fh, fw):
-        body = struct.pack(">BHHB", prec, fh, fw, nc)
-        for cid in comp_ids:
-            body += bytes([cid, 0x11, 0])
-        return bytes([0xFF, marker]) + struct.pack(">H", 2 + len(body)) + body
-
-    def fdct_quant(plane):
-        """Pad to 8x8 blocks (edge replication), batched FDCT,
-        quantize → (nbr, nbc, 64) int64 blocks in ZIGZAG order."""
-        from dstlr_spark.operators.jpeg import _dct_basis
-
-        ph_, pw_ = plane.shape
-        nbr, nbc = -(-ph_ // 8), -(-pw_ // 8)
-        q = np.zeros((nbr * 8, nbc * 8), np.float64)
-        q[:ph_, :pw_] = plane
-        if ph_ < nbr * 8:
-            q[ph_:, :pw_] = plane[-1:, :]
-        if pw_ < nbc * 8:
-            q[:, pw_:] = q[:, pw_ - 1 : pw_]
-        basis = _dct_basis()
-        blk = q.reshape(nbr, 8, nbc, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-        f = basis @ blk @ basis.T
-        qz = np.round(f / quant).astype(np.int64).reshape(nbr, nbc, 64)
-        return qz[..., zz]
-
-    def simulate(blocks_zz, fh, fw, cval, base=None):
-        """What the decoder reconstructs from these blocks: de-zigzag,
-        dequant + IDCT via the SHARED ``_idct_planes``, add the
-        reference for differential frames, round + clip."""
-        coefs = []
-        for bzz in blocks_zz:
-            nat = np.zeros(bzz.shape, np.float64)
-            nat[..., zz] = bzz
-            coefs.append(nat)
-        vals = _idct_planes(comps, fh, fw, coefs, {0: quant}, cval)
-        if base is not None:
-            vals = [np.asarray(p, np.float64) + v
-                    for p, v in zip(base, vals)]
-        return [
-            np.clip(np.round(v), 0, maxv).astype(np.int64) for v in vals
-        ]
-
-    def emit_dct_scan(blocks_zz, fh, fw, differential):
-        nonlocal out
-        out += _emit_sos(comp_ids, 0, 63, 0, 0)
-        nbr, nbc = -(-fh // 8), -(-fw // 8)
-        if arith:
-            from dstlr_spark.operators.jpeg_arith import (
-                _AC_STAT_BINS,
-                _DC_STAT_BINS,
-                _FIXED,
-                DEFAULT_AC_KX,
-                _ArithEncoder,
-                _encode_ac_block,
-                _encode_dc_diff,
-            )
-
-            def fresh():
-                return (_ArithEncoder(), bytearray(_DC_STAT_BINS),
-                        bytearray(_AC_STAT_BINS), bytearray([_FIXED]),
-                        [0] * nc, [0] * nc)
-
-            enc, dstat, astat, fixed, ctxs, preds = fresh()
-            for m in range(nbr * nbc):
-                if restart_interval and m and m % restart_interval == 0:
-                    out += enc.finish()
-                    out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                    enc, dstat, astat, fixed, ctxs, preds = fresh()
-                row, col = divmod(m, nbc)
-                for ci in range(nc):
-                    qb = blocks_zz[ci][row, col].tolist()
-                    if differential:  # PRED = 0
-                        diff = qb[0]
-                    else:
-                        diff = qb[0] - preds[ci]
-                        preds[ci] = qb[0]
-                    ctxs[ci] = _encode_dc_diff(
-                        enc, dstat, ctxs[ci], diff, 0, 1
-                    )
-                    _encode_ac_block(enc, astat, fixed, DEFAULT_AC_KX, qb)
-            out += enc.finish()
-        else:
-            _, _, dc_enc = _fixed_table(_DC12_SYMBOLS)
-            _, _, ac_enc = _fixed_table(_AC12_SYMBOLS)
-            bw = _BitWriter()
-            preds = [0] * nc
-            for m in range(nbr * nbc):
-                if restart_interval and m and m % restart_interval == 0:
-                    bw.flush()
-                    out += bw.out
-                    bw = _BitWriter()
-                    out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                    preds = [0] * nc
-                row, col = divmod(m, nbc)
-                for ci in range(nc):
-                    qb = blocks_zz[ci][row, col].tolist()
-                    pred = 0 if differential else preds[ci]
-                    newdc = _encode_block(bw, qb, pred, dc_enc, ac_enc)
-                    if not differential:
-                        preds[ci] = newdc
-            bw.flush()
-            out += bw.out
-
-    def emit_prog_scans(blocks_zz, fh, fw, differential):
-        """The progressive twin of :func:`emit_dct_scan`: one DC-first
-        scan (interleaved, Al=dc_al), DC refinements down to bit 0,
-        then per component × spectral band an AC-first scan (Al=ac_al)
-        and AC refinements — every coefficient bit of the SAME blocks,
-        so the decoder's stores end bit-identical to the sequential
-        path. Each arithmetic scan is an independent QM stream with
-        fresh statistics; restarts reset everything (G.2)."""
-        nonlocal out
-        nbr, nbc = -(-fh // 8), -(-fw // 8)
-        for ss, se in bands:
-            if not 1 <= ss <= se <= 63:
-                raise ValueError(f"invalid spectral band ({ss}, {se})")
-
-        def run_scan(units, emit_unit, fresh):
-            """One scan's entropy data with restart handling, under
-            either entropy layer (``fresh`` rebuilds per-segment
-            state; Huffman state carries a _BitWriter first)."""
-            nonlocal out
-            cur = fresh()
-            for m in range(units):
-                if restart_interval and m and m % restart_interval == 0:
-                    if arith:
-                        out += cur[0].finish()
-                    else:
-                        cur[0].flush()
-                        out += cur[0].out
-                    out += bytes(
-                        [0xFF, 0xD0 + (m // restart_interval - 1) % 8]
-                    )
-                    cur = fresh()
-                emit_unit(cur, m)
-            if arith:
-                out += cur[0].finish()
-            else:
-                cur[0].flush()
-                out += cur[0].out
-
-        if arith:
-            from dstlr_spark.operators.jpeg_arith import (
-                _AC_STAT_BINS,
-                _DC_STAT_BINS,
-                _FIXED,
-                DEFAULT_AC_KX,
-                _ArithEncoder,
-                _encode_ac_block,
-                _encode_ac_refine,
-                _encode_dc_diff,
-            )
-
-            def dc_fresh():
-                return (_ArithEncoder(), bytearray(_DC_STAT_BINS),
-                        [0] * nc, [0] * nc)
-
-            def dc_first(cur, m):
-                enc, dstat, ctxs, preds = cur
-                row, col = divmod(m, nbc)
-                for ci in range(nc):
-                    d = int(blocks_zz[ci][row, col, 0]) >> dc_al
-                    if differential:  # PRED = 0
-                        diff = d
-                    else:
-                        diff = d - preds[ci]
-                        preds[ci] = d
-                    ctxs[ci] = _encode_dc_diff(
-                        enc, dstat, ctxs[ci], diff, 0, 1
-                    )
-
-            def fixed_fresh():
-                return (_ArithEncoder(), bytearray([_FIXED]))
-
-            def ac_fresh():
-                return (_ArithEncoder(), bytearray(_AC_STAT_BINS),
-                        bytearray([_FIXED]))
-
-            out += _emit_sos(comp_ids, 0, 0, 0, dc_al)
-            run_scan(nbr * nbc, dc_first, dc_fresh)
-            for al in range(dc_al - 1, -1, -1):
-
-                def dc_refine(cur, m, al=al):
-                    enc, fixed = cur
-                    row, col = divmod(m, nbc)
-                    for ci in range(nc):
-                        d = int(blocks_zz[ci][row, col, 0])
-                        enc.encode(fixed, 0, (d >> al) & 1)
-
-                out += _emit_sos(comp_ids, 0, 0, al + 1, al)
-                run_scan(nbr * nbc, dc_refine, fixed_fresh)
-            for ci in range(nc):
-                for ss, se in bands:
-
-                    def ac_first(cur, m, ci=ci, ss=ss, se=se):
-                        enc, astat, fixed = cur
-                        row, col = divmod(m, nbc)
-                        _encode_ac_block(
-                            enc, astat, fixed, DEFAULT_AC_KX,
-                            blocks_zz[ci][row, col].tolist(), ss, se, ac_al,
-                        )
-
-                    out += _emit_sos([comp_ids[ci]], ss, se, 0, ac_al)
-                    run_scan(nbr * nbc, ac_first, ac_fresh)
-                for al in range(ac_al - 1, -1, -1):
-                    for ss, se in bands:
-
-                        def ac_refine(cur, m, ci=ci, ss=ss, se=se, al=al):
-                            enc, astat, fixed = cur
-                            row, col = divmod(m, nbc)
-                            _encode_ac_refine(
-                                enc, astat, fixed,
-                                blocks_zz[ci][row, col].tolist(), ss, se, al,
-                            )
-
-                        out += _emit_sos([comp_ids[ci]], ss, se, al + 1, al)
-                        run_scan(nbr * nbc, ac_refine, ac_fresh)
-            return
-
-        _, _, dc_enc = _fixed_table(_DC12_SYMBOLS)
-        _, _, ac_enc = _fixed_table(_AC12_SYMBOLS)
-
-        def bw_fresh():
-            return (_BitWriter(), [0] * nc)
-
-        def dc_first_h(cur, m):
-            bw, preds = cur
-            row, col = divmod(m, nbc)
-            for ci in range(nc):
-                d = int(blocks_zz[ci][row, col, 0]) >> dc_al
-                if differential:  # PRED = 0
-                    diff = d
-                else:
-                    diff = d - preds[ci]
-                    preds[ci] = d
-                t = _category(diff)
-                bw.write(dc_enc[t][1], dc_enc[t][0])
-                if t:
-                    bw.write(diff if diff > 0 else diff + (1 << t) - 1, t)
-
-        out += _emit_sos(comp_ids, 0, 0, 0, dc_al)
-        run_scan(nbr * nbc, dc_first_h, bw_fresh)
-        for al in range(dc_al - 1, -1, -1):
-
-            def dc_refine_h(cur, m, al=al):
-                bw = cur[0]
-                row, col = divmod(m, nbc)
-                for ci in range(nc):
-                    bw.write((int(blocks_zz[ci][row, col, 0]) >> al) & 1, 1)
-
-            out += _emit_sos(comp_ids, 0, 0, al + 1, al)
-            run_scan(nbr * nbc, dc_refine_h, bw_fresh)
-        for ci in range(nc):
-            for ss, se in bands:
-
-                def ac_first_h(cur, m, ci=ci, ss=ss, se=se):
-                    bw = cur[0]
-                    row, col = divmod(m, nbc)
-                    blk = blocks_zz[ci][row, col]
-                    r = 0
-                    for k in range(ss, se + 1):
-                        v = int(blk[k])
-                        t = abs(v) >> ac_al  # G.1.2.2 magnitude shift
-                        if t == 0:
-                            r += 1
-                            continue
-                        while r > 15:
-                            bw.write(ac_enc[0xF0][1], ac_enc[0xF0][0])
-                            r -= 16
-                        s = t.bit_length()
-                        bw.write(ac_enc[16 * r + s][1], ac_enc[16 * r + s][0])
-                        bw.write(t if v > 0 else t + (1 << s) - 1 - 2 * t, s)
-                        r = 0
-                    if r:
-                        bw.write(ac_enc[0x00][1], ac_enc[0x00][0])  # EOB
-
-                out += _emit_sos([comp_ids[ci]], ss, se, 0, ac_al)
-                run_scan(nbr * nbc, ac_first_h, bw_fresh)
-            for al in range(ac_al - 1, -1, -1):
-                for ss, se in bands:
-
-                    def ac_refine_h(cur, m, ci=ci, ss=ss, se=se, al=al):
-                        bw = cur[0]
-                        row, col = divmod(m, nbc)
-                        blk = blocks_zz[ci][row, col]
-                        r = 0
-                        pending: list[int] = []
-                        for k in range(ss, se + 1):
-                            v = int(blk[k])
-                            t = abs(v) >> al
-                            if t == 0:
-                                r += 1
-                                continue
-                            while r > 15:  # ZRL + buffered corrections
-                                bw.write(ac_enc[0xF0][1], ac_enc[0xF0][0])
-                                r -= 16
-                                for bit in pending:
-                                    bw.write(bit, 1)
-                                pending = []
-                            if t > 1:  # already nonzero: correction bit
-                                pending.append(t & 1)
-                                continue
-                            bw.write(
-                                ac_enc[16 * r + 1][1], ac_enc[16 * r + 1][0]
-                            )
-                            bw.write(1 if v > 0 else 0, 1)
-                            for bit in pending:
-                                bw.write(bit, 1)
-                            pending = []
-                            r = 0
-                        if r or pending:
-                            bw.write(ac_enc[0x00][1], ac_enc[0x00][0])
-                            for bit in pending:
-                                bw.write(bit, 1)
-
-                    out += _emit_sos([comp_ids[ci]], ss, se, al + 1, al)
-                    run_scan(nbr * nbc, ac_refine_h, bw_fresh)
-
-    def emit_lossless_diff_scan(targets, refs, fh, fw):
-        """The J.5 closing frame's scan: per-sample (target − ref)
-        mod 2^16 under the frame's entropy layer (SSSS via the
-        class-0/table-1 DHT for Huffman, the H.1.2 model for QM)."""
-        nonlocal out
-        sos = bytes([nc])
-        for cid in comp_ids:
-            sos += bytes([cid, 0x00 if arith else 0x10])
-        sos += bytes([0, 0, 0])  # predictor 0 (differential), Pt 0
-        out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-        if arith:
-            from dstlr_spark.operators.jpeg_arith import (
-                _LL_STAT_BINS,
-                _ArithEncoder,
-                _encode_ll_diff,
-            )
-
-            def fresh():
-                return (_ArithEncoder(), bytearray(_LL_STAT_BINS),
-                        [[0] * fw for _ in range(nc)], [0] * nc)
-
-            enc, stats, cat_above, cat_left = fresh()
-            last_reset_m = 0
-            for m in range(fh * fw):
-                if restart_interval and m and m % restart_interval == 0:
-                    out += enc.finish()
-                    out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                    enc, stats, cat_above, cat_left = fresh()
-                    last_reset_m = m
-                r, c = divmod(m, fw)
-                if c == 0:
-                    cat_left = [0] * nc
-                for ci in range(nc):
-                    d = ((int(targets[ci][r][c]) - int(refs[ci][r][c])
-                          + 32768) & 0xFFFF) - 32768
-                    if d == -32768:
-                        d = 32768
-                    cb = cat_above[ci][c] if m - last_reset_m >= fw else 0
-                    cat = _encode_ll_diff(
-                        enc, stats, cat_left[ci], cb, d, 0, 1
-                    )
-                    cat_above[ci][c] = cat
-                    cat_left[ci] = cat
-            out += enc.finish()
-        else:
-            _, _, ll_enc = _fixed_table(_LL_SYMBOLS)
-            bw = _BitWriter()
-            for m in range(fh * fw):
-                if restart_interval and m and m % restart_interval == 0:
-                    bw.flush()
-                    out += bw.out
-                    bw = _BitWriter()
-                    out += bytes([0xFF, 0xD0 + (m // restart_interval - 1) % 8])
-                r, c = divmod(m, fw)
-                for ci in range(nc):
-                    d = ((int(targets[ci][r][c]) - int(refs[ci][r][c])
-                          + 32768) & 0xFFFF) - 32768
-                    if d == -32768:  # ≡ +32768 mod 2^16: SSSS=16, no bits
-                        bw.write(ll_enc[16][1], ll_enc[16][0])
-                    else:
-                        t = _category(d)
-                        bw.write(ll_enc[t][1], ll_enc[t][0])
-                        if t:
-                            bw.write(d if d > 0 else d + (1 << t) - 1, t)
-            bw.flush()
-            out += bw.out
-
-    out = bytearray(b"\xff\xd8")
-    out += sofish(0xDE, h, w)  # DHP at full resolution
-    qzz = quant.reshape(-1)[zz].astype(np.uint8)
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 1 + 64) + b"\x00" + qzz.tobytes()
-    if not arith:
-        dc_counts, dc_syms, _ = _fixed_table(_DC12_SYMBOLS)
-        ac_counts, ac_syms, _ = _fixed_table(_AC12_SYMBOLS)
-        body = bytes([0x00]) + dc_counts + dc_syms
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-        body = bytes([0x10]) + ac_counts + ac_syms
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-        if final_lossless:
-            ll_counts, ll_syms, _ = _fixed_table(_LL_SYMBOLS)
-            body = bytes([0x01]) + ll_counts + ll_syms
-            out += b"\xff\xc4" + struct.pack(">H", 2 + len(body)) + body
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-
-    # frame 1: non-differential DCT at the smallest level
-    top = pyramid[-1]
-    th, tw = top[0].shape
-    blocks = [fdct_quant(p.astype(np.float64) - center) for p in top]
-    if progressive:
-        out += sofish(0xCA if arith else 0xC2, th, tw)
-        emit_prog_scans(blocks, th, tw, differential=False)
-    else:
-        out += sofish(0xC9 if arith else 0xC0, th, tw)
-        emit_dct_scan(blocks, th, tw, differential=False)
-    ref = simulate(blocks, th, tw, center)
-    # remaining levels: EXP + differential DCT
-    for level in range(levels - 2, -1, -1):
-        target = pyramid[level]
-        th, tw = target[0].shape
-        out += _EXP_BOTH
-        ref = [
-            np.array(p, np.int64)
-            for p in _expand_planes([p.tolist() for p in ref], th, tw, 1, 1)
-        ]
-        diffs = [
-            t.astype(np.float64) - p.astype(np.float64)
-            for t, p in zip(target, ref)
-        ]
-        blocks = [fdct_quant(d) for d in diffs]
-        if progressive:
-            out += sofish(0xCE if arith else 0xC6, th, tw)
-            emit_prog_scans(blocks, th, tw, differential=True)
-        else:
-            out += sofish(0xCD if arith else 0xC5, th, tw)
-            emit_dct_scan(blocks, th, tw, differential=True)
-        ref = simulate(blocks, th, tw, 0.0, base=ref)
-    if final_lossless:
-        # T.81 J.5: one lossless differential frame closes the gap to
-        # the stored planes exactly — same dims, no EXP
-        out += sofish(0xCF if arith else 0xC7, h, w)
-        emit_lossless_diff_scan(
-            [p.tolist() for p in pyramid[0]],
-            [p.tolist() for p in ref], h, w,
-        )
+        data, ref_planes = frame(0xC7, target, 0, ref_planes)
+        out += data
     out += b"\xff\xd9"
     return bytes(out)

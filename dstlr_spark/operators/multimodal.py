@@ -5,27 +5,20 @@ image/audio/video travel as ``binary`` columns with typed metadata
 structs; decode / feature-extract / resize / frame-sample run as
 Arrow-batched ``mapInPandas`` UDFs.
 
-Pixel decode is REAL for uncompressed BMP (1-32 bpp incl. palettes),
-binary PPM (P6, maxval ≤ 65535),
-PNG (stdlib ``zlib`` inflate + NumPy unfilter of all five scanline
-filters; 8/16-bit gray/RGB/RGBA + 8-bit palette, sequential AND
-Adam7-interlaced — :func:`decode_png`), and GIF89a (pure-Python
-variable-width LZW, sequential and 4-pass interlaced —
-:func:`decode_gif`), with nearest-neighbor resize
-(:func:`resize_nearest`) on top; all value-gated end-to-end by the
-``mm_media_decode`` driver query over a NINE-VARIANT planted-pixel
-corpus (BMP / PNG / GIF / Adam7 PNG / paletted PNG / interlaced GIF /
-16-bit PNG / lossless JPEG / lossless-arithmetic JPEG). 16-bit samples decode to exact uint16 — the operator
-contract is ``array<int>``, never narrowed. PNG covers EVERY
-spec-valid (color, depth) combination — sub-byte bit-packed 1/2/4
-gray and palette, plus gray+alpha, included — and JPEG decodes
-natively too, baseline AND progressive (pure-NumPy Huffman + IDCT,
-:mod:`dstlr_spark.operators.jpeg`). Only arithmetic-coded JPEG and
-lossy audio/video codecs (MP3/AAC, H.26x) still raise a
-clearly-marked ``NotImplementedError``.
-Everything Spark-side is real and tested either way: the binary
-schema, the header PARSERS (PNG IHDR / WAV fmt are pure byte-struct
-reads), the batch shapes, and the partitioning.
+Pixel decode is REAL, pure NumPy + stdlib, for exactly the image
+modes the ``mm_media_decode`` driver query value-gates over its
+TWENTY-TWO-VARIANT planted-pixel corpus (:func:`synth_media_mixed`):
+BMP (uncompressed, RLE8, bitfields, embedded PNG/JPEG), PNG (8/16-bit,
+sequential and Adam7, paletted), GIF (sequential and interlaced),
+lossless / lossless-arithmetic / hierarchical-lossless JPEG, TIFF
+(none/LZW/JPEG strips), TGA, PCX, QOI, WebP-lossless and ICO — plus
+PPM/PGM. Audio decodes integer/float PCM in WAV, RF64, W64, FLAC,
+AIFF, AU and CAF; video decodes Y4M and AVI. 16-bit samples decode to
+exact uint16 — the operator contract is ``array<int>``, never
+narrowed. Every other mode — DCT JPEG, sub-byte PNG, animated GIF,
+G.711/ADPCM audio, TIFF PackBits, VP8L LZ77 and transforms, inter-frame
+video — raises a clearly-marked ``NotImplementedError("STUB: …")``,
+which the batch operators isolate as a null row per document.
 
 Fixture: :func:`synth_media` builds deterministic fake PNGs from the
 documents table with a REAL IHDR header (magic + length + 'IHDR' +
@@ -171,59 +164,6 @@ def media_metadata(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_parse_header_batches, _MEDIA_META_DDL)
 
 
-def decode_image(media: DataFrame, fake: bool = False) -> DataFrame:
-    """Pixel decode → (doc_id, width, height, pixels array<int>).
-
-    Real decode needs an imaging library (not in this container):
-    - Pillow importable → real decode;
-    - ``fake=True``  → deterministic stand-in (pixels = first 16 payload
-      bytes) exercising the full Spark plumbing;
-    - otherwise → NotImplementedError, clearly marked (STUB).
-    """
-    try:
-        import PIL.Image  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-
-    if not have_pil and not fake:
-        raise NotImplementedError(
-            "STUB: arbitrary-container pixel decode requires Pillow (not in "
-            "this container); BMP/PPM/PNG/GIF/JPEG decode natively via "
-            "decode_image_np; pass fake=True for the plumbing test"
-        )
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                if have_pil and not fake:
-                    import io
-
-                    import PIL.Image
-
-                    img = PIL.Image.open(io.BytesIO(b))
-                    out.append(
-                        dict(doc_id=doc_id, width=img.width, height=img.height,
-                             pixels=list(img.tobytes()[:16]))
-                    )
-                else:
-                    w, h = (
-                        struct.unpack(">II", b[16:24]) if len(b) >= 24 else (None, None)
-                    )
-                    out.append(
-                        dict(doc_id=doc_id, width=w, height=h,
-                             pixels=[int(x) for x in b[:16]])
-                    )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        body, "doc_id string, width int, height int, pixels array<int>"
-    )
-
-
 def extract_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
     """Feature extraction: byte-value histogram per payload → fixed-width
     ``array<int>`` feature vector. Unlike pixel decode this needs no
@@ -248,57 +188,6 @@ def extract_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
 
     return media.mapInPandas(
         body, "doc_id string, features array<int>, n_bytes int"
-    )
-
-
-def resize_image(media: DataFrame, max_side: int = 64, fake: bool = False) -> DataFrame:
-    """Resize → (doc_id, width, height, thumb binary).
-
-    STUB without an imaging library (same gating contract as
-    :func:`decode_image`); ``fake=True`` exercises the plumbing with a
-    deterministic byte-stride 'thumbnail' of the payload.
-    """
-    try:
-        import PIL.Image  # noqa: F401
-
-        have_pil = True
-    except ImportError:
-        have_pil = False
-    if not have_pil and not fake:
-        raise NotImplementedError(
-            "STUB: arbitrary-container resize requires Pillow (not in this "
-            "container); BMP/PPM/PNG/GIF/JPEG resize natively via "
-            "resize_image_np; pass fake=True for the plumbing test"
-        )
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                if have_pil and not fake:
-                    import io
-
-                    import PIL.Image
-
-                    img = PIL.Image.open(io.BytesIO(b))
-                    img.thumbnail((max_side, max_side))
-                    out = io.BytesIO()
-                    img.save(out, format="PNG")
-                    rows.append(dict(doc_id=doc_id, width=img.width,
-                                     height=img.height, thumb=out.getvalue()))
-                else:
-                    w, h = (
-                        struct.unpack(">II", b[16:24]) if len(b) >= 24 else (0, 0)
-                    )
-                    scale = max(1, -(-max(w, h) // max_side)) if w and h else 1
-                    rows.append(dict(doc_id=doc_id, width=(w // scale) or None,
-                                     height=(h // scale) or None,
-                                     thumb=b[::scale][:max_side]))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        body, "doc_id string, width int, height int, thumb binary"
     )
 
 
@@ -330,10 +219,9 @@ def frame_sample(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
 # bytes) and binary PPM (P6) decode with frombuffer + stride reshapes.
 # PNG joins them because its codec IS the stdlib: zlib inflate + the
 # five scanline filters (decode_png) — including Adam7 interlace and
-# paletted color — and GIF via pure-Python LZW (decode_gif). This
-# retires the round-4 "decode is a stub" finding: the
-# NotImplementedError path below remains ONLY for codecs that truly
-# need an imaging library (JPEG DCT).
+# paletted color — and GIF via pure-Python LZW (decode_gif). The
+# NotImplementedError path below is the STUB contract for every mode
+# the gate corpus does not ship.
 
 #: planted-pixel formula for synthetic BMPs: channel c∈{0=R,1=G,2=B} at
 #: (x, y) carries (3x + 7y + 11c + 13) % 251 — position- and
@@ -604,33 +492,14 @@ def decode_rgb_bytes(b: bytes):
     - GIF first frame, sequential or 4-pass interlaced (pure-Python
       variable-width LZW + palette mapping — :func:`decode_gif`).
 
-    - JPEG, baseline AND progressive (SOF0/SOF1/SOF2, gray or YCbCr,
-      integer-ratio subsampling, restart markers, spectral selection +
-      successive approximation) via the pure-NumPy Huffman + IDCT
-      codec in :mod:`dstlr_spark.operators.jpeg`; being lossy it is
-      gated by the DC-exact analytic tests there, not the format-blind
-      planted-value oracle;
-    - LOSSLESS JPEG (SOF3, all seven predictors, 2-16 bit precision,
-      point transform, restarts) via the same module — exact, so it
-      DOES join the planted-pixel equality tests; 16-bit → uint16;
-    - ARITHMETIC JPEG, sequential AND progressive (SOF9/SOF10: QM
-      coder + DAC conditioning, :mod:`dstlr_spark.operators.
-      jpeg_arith`) — gated by exact equality with the Huffman twins'
-      decode.
+    - LOSSLESS JPEG (SOF3, all seven predictors, 2-16 bit
+      precision), LOSSLESS-ARITHMETIC JPEG (SOF11) and HIERARCHICAL
+      lossless JPEG (DHP/EXP + SOF3/SOF7) via
+      :mod:`dstlr_spark.operators.jpeg` — exact, so they join the
+      planted-pixel gate; 16-bit → uint16.
 
-    LOSSLESS-ARITHMETIC JPEG (SOF11 — the Annex-H walk under the QM
-    coder) and HIERARCHICAL JPEG (Annex J lossless pyramids: DHP/EXP +
-    SOF3/SOF7, :mod:`dstlr_spark.operators.jpeg_hier`) also decode
-    exactly and join the planted-pixel gate — under BOTH entropy
-    layers (SOF3+SOF7 Huffman and SOF11+SOF15 QM-arithmetic
-    pyramids), and DCT hierarchies decode too — sequential (SOF0/1/9
-    first frame + SOF5/SOF13 differentials) AND progressive
-    (SOF2/SOF10 + SOF6/SOF14), with the J.5 lossless closer. Every
-    T.81 SOF process (0-15) decodes in its legal context: DCT and
-    lossless at every supported precision under BOTH entropy layers,
-    interleaved or multi-scan, in gray/YCbCr/RGB/CMYK/YCCK
-    (hierarchical pyramids included) — no JPEG frame-type stubs
-    remain.
+    DCT JPEG (every lossy T.81 process) and the other modes listed in
+    the module docstring raise the STUB contract.
     """
     import numpy as np
 
@@ -822,11 +691,11 @@ def decode_rgb_bytes(b: bytes):
         return decode_png(b)
     if b[:6] in (b"GIF87a", b"GIF89a"):
         return decode_gif(b)
-    if b[:2] == b"\xff\xd8":  # JPEG (baseline + progressive) — NumPy DCT
+    if b[:2] == b"\xff\xd8":  # JPEG (lossless processes)
         from dstlr_spark.operators.jpeg import decode_jpeg
 
         return decode_jpeg(b)
-    if b[:4] in (b"II*\x00", b"MM\x00*"):  # TIFF — strips/PackBits/LZW
+    if b[:4] in (b"II*\x00", b"MM\x00*"):  # TIFF — strips/LZW/JPEG
         from dstlr_spark.operators.tiff import decode_tiff
 
         return decode_tiff(b)
@@ -1006,47 +875,10 @@ def encode_png(rgb, row_filters=None, interlace=False) -> bytes:
     )
 
 
-def _pack_subbyte(samples, depth: int):
-    """Pack (rows, width) uint8 samples into bit-packed PNG scanline
-    bytes (rows, ceil(width·depth/8)), MSB-first per spec §7.2 —
-    the encode-side inverse of :func:`_unpack_subbyte`."""
-    import numpy as np
-
-    rows, wid = samples.shape
-    per = 8 // depth
-    stride = (wid * depth + 7) // 8
-    padded = np.zeros((rows, stride * per), np.uint8)
-    padded[:, :wid] = samples & ((1 << depth) - 1)
-    out = np.zeros((rows, stride), np.uint8)
-    for j in range(per):
-        out = (out << depth) | padded[:, j::per][:, :stride]
-    return out
-
-
-def _png_subbyte_stream(samples, depth, interlace, row_filters) -> bytes:
-    """(h, w) sub-byte samples → pre-zlib scanline stream (each
-    scanline packed THEN filtered with 1-byte lookback, per spec;
-    Adam7 packs each pass's scanlines independently)."""
-    if not interlace:
-        return _filter_scanlines(_pack_subbyte(samples, depth), 1, row_filters)
-    out = []
-    for x0, y0, dx, dy in _ADAM7:
-        sub = samples[y0::dy, x0::dx]
-        if sub.size:
-            out.append(
-                _filter_scanlines(_pack_subbyte(sub, depth), 1, row_filters)
-            )
-    return b"".join(out)
-
-
-def encode_png_pal(
-    indices, palette, row_filters=None, interlace=False, depth=8
-) -> bytes:
+def encode_png_pal(indices, palette, row_filters=None, interlace=False) -> bytes:
     """Encode an (h, w) uint8 index array + (n≤256, 3) palette as a
-    REAL paletted PNG (color type 3, PLTE chunk), optionally
-    Adam7-interlaced — stdlib ``zlib`` only. ``depth`` of 1/2/4 emits
-    bit-packed scanlines (indices must fit the depth); 8 is the
-    byte-per-index layout."""
+    REAL 8-bit paletted PNG (color type 3, PLTE chunk), optionally
+    Adam7-interlaced — stdlib ``zlib`` only."""
     import zlib
 
     import numpy as np
@@ -1056,65 +888,12 @@ def encode_png_pal(
     pal = np.asarray(palette, np.uint8)
     if idx.max(initial=0) >= len(pal):
         raise ValueError("palette index out of range")
-    if depth not in (1, 2, 4, 8):
-        raise ValueError(f"paletted PNG depth {depth} invalid per spec")
-    if depth < 8:
-        if idx.max(initial=0) >= (1 << depth):
-            raise ValueError(f"palette index does not fit depth {depth}")
-        stream = _png_subbyte_stream(idx, depth, interlace, row_filters)
-    else:
-        stream = _png_pixel_stream(idx[..., None], 1, interlace, row_filters)
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 1 if interlace else 0)
+    stream = _png_pixel_stream(idx[..., None], 1, interlace, row_filters)
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 1 if interlace else 0)
     return (
         bytes.fromhex(PNG_MAGIC)
         + _png_chunk(b"IHDR", ihdr)
         + _png_chunk(b"PLTE", pal.tobytes())
-        + _png_chunk(b"IDAT", zlib.compress(stream))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def encode_png_gray(
-    samples, depth=8, row_filters=None, interlace=False, alpha=None
-) -> bytes:
-    """Encode an (h, w) grayscale array as a REAL PNG: color type 0
-    (depths 1/2/4/8/16 — sub-byte bit-packed per spec) or, with an
-    ``alpha`` plane, color type 4 (gray+alpha, depths 8/16). uint16
-    input at depth 16 carries exact big-endian samples."""
-    import zlib
-
-    import numpy as np
-
-    arr = np.asarray(samples)
-    h, w = arr.shape
-    if alpha is not None:
-        if depth not in (8, 16):
-            raise ValueError("gray+alpha supports depths 8/16 only per spec")
-        plane = np.stack([arr, np.asarray(alpha)], axis=2)
-        dt = ">u2" if depth == 16 else np.uint8
-        bpp = 2 * (depth // 8)
-        raw = plane.astype(dt).view(np.uint8).reshape(h, w, bpp)
-        stream = _png_pixel_stream(raw, bpp, interlace, row_filters)
-        color = 4
-    elif depth < 8:
-        if depth not in (1, 2, 4):
-            raise ValueError(f"gray PNG depth {depth} invalid per spec")
-        if arr.max(initial=0) >= (1 << depth):
-            raise ValueError(f"gray sample does not fit depth {depth}")
-        stream = _png_subbyte_stream(
-            arr.astype(np.uint8), depth, interlace, row_filters
-        )
-        color = 0
-    else:
-        dt = ">u2" if depth == 16 else np.uint8
-        raw = arr.astype(dt).view(np.uint8).reshape(h, w, depth // 8)
-        stream = _png_pixel_stream(raw, depth // 8, interlace, row_filters)
-        color = 0
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0,
-                       1 if interlace else 0)
-    return (
-        bytes.fromhex(PNG_MAGIC)
-        + _png_chunk(b"IHDR", ihdr)
         + _png_chunk(b"IDAT", zlib.compress(stream))
         + _png_chunk(b"IEND", b"")
     )
@@ -1183,16 +962,14 @@ def decode_png(b: bytes):
     independently, then scatters into the (x0::dx, y0::dy) grid), then
     palette map / grayscale expand / alpha drop to RGB.
 
-    Supported: EVERY spec-valid (color, depth) combination of Table
-    11.1 — gray (0) at 1/2/4/8/16, RGB (2) at 8/16, palette (3) at
-    1/2/4/8 via PLTE, gray+alpha (4) at 8/16, RGBA (6) at 8/16;
-    interlace 0 and 1 (Adam7). Sub-byte depths unpack the bit-packed
-    scanlines MSB-first (filter lookback floors at 1 byte per spec)
-    and gray expands by exact left-bit replication. Depth 16 returns
-    EXACT uint16 samples (filter lookback widens to channels·2 bytes
-    per spec; big-endian). A corrupt stream (bad CRC / truncated IDAT /
-    missing PLTE / spec-invalid depth-color combo) raises ValueError
-    so the per-doc isolation wrapper can skip it."""
+    Supported: every spec-valid (color, depth) combination of Table
+    11.1 at 8 or 16 bits — gray (0), RGB (2), palette (3, 8-bit) via
+    PLTE, gray+alpha (4), RGBA (6); interlace 0 and 1 (Adam7). Depth
+    16 returns EXACT uint16 samples (filter lookback widens to
+    channels·2 bytes per spec; big-endian). Sub-byte (1/2/4-bit)
+    depths raise the STUB contract. A corrupt stream (bad CRC /
+    truncated IDAT / missing PLTE / spec-invalid depth-color combo)
+    raises ValueError so the per-doc isolation wrapper can skip it."""
     import zlib
 
     import numpy as np
@@ -1241,41 +1018,30 @@ def decode_png(b: bytes):
         raise ValueError(
             f"PNG interlace={interlace} compression={comp} invalid per spec"
         )
+    if depth < 8:
+        raise NotImplementedError("STUB: sub-byte (1/2/4-bit) PNG")
     ch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
-    subbyte = depth < 8  # only colors 0 and 3, always single-channel
-    # filter lookback is in BYTES per pixel, floored at 1 (spec §9.2)
-    bpp = 1 if subbyte else ch * (depth // 8)
-
-    def _rowbytes(pw: int) -> int:
-        return (pw * depth + 7) // 8 if subbyte else pw * bpp
+    bpp = ch * (depth // 8)  # filter lookback in BYTES per pixel
 
     try:
         raw = zlib.decompress(b"".join(idat))
     except zlib.error as e:
         raise ValueError(f"PNG IDAT inflate failed: {e}") from e
     if interlace == 0:
-        out, end = _unfilter(raw, 0, h, _rowbytes(w), bpp)
+        out, end = _unfilter(raw, 0, h, w * bpp, bpp)
         if end != len(raw):
             raise ValueError("PNG pixel data length mismatch")
-        px = (
-            _unpack_subbyte(out, w, depth)[..., None]
-            if subbyte
-            else out.reshape(h, w, bpp)
-        )
+        px = out.reshape(h, w, bpp)
     else:  # Adam7: 7 independently-filtered sub-images
-        px = np.zeros((h, w, 1 if subbyte else bpp), np.uint8)
+        px = np.zeros((h, w, bpp), np.uint8)
         rpos = 0
         for x0, y0, dx, dy in _ADAM7:
             pw = (w - x0 + dx - 1) // dx
             ph = (h - y0 + dy - 1) // dy
             if pw <= 0 or ph <= 0:
                 continue
-            sub, rpos = _unfilter(raw, rpos, ph, _rowbytes(pw), bpp)
-            px[y0::dy, x0::dx] = (
-                _unpack_subbyte(sub, pw, depth)[..., None]
-                if subbyte
-                else sub.reshape(ph, pw, bpp)
-            )
+            sub, rpos = _unfilter(raw, rpos, ph, pw * bpp, bpp)
+            px[y0::dy, x0::dx] = sub.reshape(ph, pw, bpp)
         if rpos != len(raw):
             raise ValueError("PNG pixel data length mismatch")
     if depth == 16:  # exact sample values, never narrowed
@@ -1288,11 +1054,6 @@ def decode_png(b: bytes):
         if idx.max(initial=0) >= len(plte):
             raise ValueError("PNG palette index beyond PLTE")
         return plte[idx].copy()
-    if color == 0 and subbyte:
-        # gray expansion per spec §12.5: left-bit-replicate == multiply
-        # by 255/(2^d−1), which is exact (255, 85, 17 for d = 1, 2, 4)
-        gray = px * np.uint8(255 // ((1 << depth) - 1))
-        return np.repeat(gray, 3, axis=2).copy()
     if color == 4:  # gray + alpha: straight alpha drop, then expand
         return np.repeat(px[..., :1], 3, axis=2).copy()
     if ch == 1:
@@ -1300,23 +1061,6 @@ def decode_png(b: bytes):
     if ch == 4:
         return px[..., :3].copy()  # straight alpha drop
     return px.copy()
-
-
-def _unpack_subbyte(rows, width: int, depth: int):
-    """Unpack bit-packed PNG scanline bytes → samples: (rows, stride)
-    uint8 → (rows, width) uint8, samples MSB-first within each byte
-    (spec §7.2), trailing pad bits of each scanline dropped."""
-    import numpy as np
-
-    bits = np.unpackbits(np.ascontiguousarray(rows), axis=1)
-    if depth == 1:
-        samples = bits
-    else:  # regroup consecutive `depth` bits into one sample
-        n = bits.shape[1] // depth
-        samples = np.zeros((rows.shape[0], n), np.uint8)
-        for k in range(depth):
-            samples = (samples << 1) | bits[:, k::depth][:, :n]
-    return samples[:, :width]
 
 
 # --------------------------------------------------------------------------
@@ -1482,50 +1226,34 @@ def encode_gif(indices, palette, interlace=False) -> bytes:
     return head + gct + desc + bytes(blocks) + b";"
 
 
-def _gif_header(b: bytes):
-    """Shared GIF front half: magic + logical-screen descriptor +
-    global color table. Returns (screen_w, screen_h, bg_index,
-    gct-or-None, offset of the first block)."""
+def decode_gif(b: bytes):
+    """REAL GIF decode → (h, w, 3) uint8 RGB, pure Python LZW +
+    NumPy palette mapping: logical screen descriptor, global/local
+    color tables, extension-block skipping, sub-block reassembly,
+    variable-width LZW with clear/EOI and table growth to 12 bits,
+    and 4-pass interlace row reordering when the descriptor flags it.
+    First image frame only, RAW at the frame's own dims. A malformed
+    stream raises ValueError."""
     import numpy as np
 
     if b[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF stream")
     if len(b) < 13:
         raise ValueError("truncated GIF header")
-    sw, sh = struct.unpack("<HH", b[6:10])
-    flags, bg_idx = b[10], b[11]
+    flags = b[10]
     pos = 13
     gct = None
     if flags & 0x80:
         n = 2 << (flags & 7)
         gct = np.frombuffer(b, np.uint8, n * 3, pos).reshape(n, 3)
         pos += n * 3
-    return sw, sh, bg_idx, gct, pos
-
-
-def _gif_frames_iter(b: bytes, pos: int, gct):
-    """Shared GIF frame walk: yields one (left, top, idx (h, w)
-    de-interlaced, palette, gce) tuple per image descriptor — gce is
-    the preceding Graphic Control Extension's (disposal,
-    transparent_idx-or-None, delay) or None. Handles extension
-    skipping, local color tables, LZW sub-block reassembly, and the
-    palette bound check; both the single-frame and the animated
-    decoder layer on this. A malformed stream raises ValueError."""
-    import numpy as np
-
-    gce = None
     while pos < len(b):
         block = b[pos]
         if block == 0x21:  # extension: label + sub-blocks
             if pos + 2 > len(b):
                 raise ValueError("truncated GIF extension")
-            if b[pos + 1] == 0xF9:  # graphic control
-                if pos + 7 > len(b) or b[pos + 2] != 4:
-                    raise ValueError("GIF graphic control block malformed")
-                gflags = b[pos + 3]
-                delay = struct.unpack("<H", b[pos + 4 : pos + 6])[0]
-                tidx = b[pos + 6] if gflags & 1 else None
-                gce = ((gflags >> 2) & 7, tidx, delay)
+            if b[pos + 1] == 0xF9 and (pos + 7 > len(b) or b[pos + 2] != 4):
+                raise ValueError("GIF graphic control block malformed")
             pos += 2
             while pos < len(b) and b[pos]:
                 pos += 1 + b[pos]
@@ -1533,7 +1261,7 @@ def _gif_frames_iter(b: bytes, pos: int, gct):
         elif block == 0x2C:  # image descriptor
             if pos + 10 > len(b):
                 raise ValueError("truncated GIF image descriptor")
-            left, top, w, h, iflags = struct.unpack(
+            _left, _top, w, h, iflags = struct.unpack(
                 "<HHHHB", b[pos + 1 : pos + 10]
             )
             if not w or not h:
@@ -1557,7 +1285,6 @@ def _gif_frames_iter(b: bytes, pos: int, gct):
                 ln = b[pos]
                 lzw += b[pos + 1 : pos + 1 + ln]
                 pos += 1 + ln
-            pos += 1  # block terminator
             idx = _lzw_decode(bytes(lzw), min_code, w * h)
             if idx.max(initial=0) >= len(pal):
                 raise ValueError("GIF index beyond palette")
@@ -1566,131 +1293,12 @@ def _gif_frames_iter(b: bytes, pos: int, gct):
                 inv = np.empty(h, np.int64)
                 inv[_gif_interlace_rows(h)] = np.arange(h)
                 idx = idx[inv]
-            yield left, top, idx, pal, gce
-            gce = None
+            return pal[idx].copy()
         elif block == 0x3B:  # trailer
-            return
+            break
         else:
             raise ValueError(f"unknown GIF block 0x{block:02x}")
-
-
-def decode_gif(b: bytes):
-    """REAL GIF decode → (h, w, 3) uint8 RGB, pure Python LZW +
-    NumPy palette mapping: logical screen descriptor, global/local
-    color tables, extension-block skipping, sub-block reassembly,
-    variable-width LZW with clear/EOI and table growth to 12 bits,
-    and 4-pass interlace row reordering when the descriptor flags it.
-    First image frame only, RAW at the frame's own dims (the
-    animated compositor is :func:`decode_gif_frames`, layered on the
-    same walk). A malformed stream raises ValueError."""
-    _sw, _sh, _bg, gct, pos = _gif_header(b)
-    for _left, _top, idx, pal, _gce in _gif_frames_iter(b, pos, gct):
-        return pal[idx].copy()
     raise ValueError("GIF contains no image frame")
-
-
-def encode_gif_anim(
-    frames, palette, delays=None, disposals=None, rects=None,
-    transparent_idx=None, interlace=False,
-) -> bytes:
-    """Deterministic animated-GIF89a fixture encoder: a list of index
-    arrays (each its own size) + one global (≤256, 3) palette →
-    multi-frame stream with a Graphic Control Extension per frame
-    (disposal method, centisecond delay, optional transparent index)
-    and per-frame image descriptors at ``rects`` offsets (default
-    (0, 0)). The logical screen is sized to cover every frame rect;
-    the background color index is 0."""
-    import numpy as np
-
-    frames = [np.asarray(f, np.uint8) for f in frames]
-    if not frames:
-        raise ValueError("animated GIF needs at least one frame")
-    rects = rects or [(0, 0)] * len(frames)
-    delays = delays or [4] * len(frames)
-    disposals = disposals or [0] * len(frames)
-    if not len(rects) == len(delays) == len(disposals) == len(frames):
-        # zip would silently drop trailing frames otherwise — a
-        # fixture that quietly tests fewer frames than intended
-        raise ValueError("rects/delays/disposals must match frame count")
-    sw = max(l + f.shape[1] for f, (l, _t) in zip(frames, rects))
-    sh = max(t + f.shape[0] for f, (_l, t) in zip(frames, rects))
-    pal = np.zeros((256, 3), np.uint8)
-    pal[: len(palette)] = palette
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", sw, sh, 0xF7, 0, 0)  # 256-entry GCT
-    out += pal.tobytes()
-    for f, (left, top), delay, disp in zip(frames, rects, delays, disposals):
-        flags = (disp & 7) << 2
-        tidx = 0
-        if transparent_idx is not None:
-            flags |= 1
-            tidx = transparent_idx
-        out += bytes([0x21, 0xF9, 4, flags]) + struct.pack("<H", delay)
-        out += bytes([tidx, 0])
-        h, w = f.shape
-        iflags = 0x40 if interlace else 0
-        out += bytes([0x2C]) + struct.pack("<HHHHB", left, top, w, h, iflags)
-        rows = f[_gif_interlace_rows(h)] if interlace else f
-        out += bytes([8])  # LZW minimum code size
-        data = _lzw_encode(rows.reshape(-1), 8)
-        for i in range(0, len(data), 255):
-            chunk = data[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def decode_gif_frames(b: bytes):
-    """REAL animated-GIF decode → (frame stack (n, H, W, 3) uint8,
-    centisecond delays list) with GIF89a compositing semantics over
-    the LOGICAL SCREEN: the canvas initializes to the background
-    color (GCT entry of header byte 11; zeros without a GCT), each
-    image descriptor draws its rect at (left, top) — skipping
-    transparent pixels when the preceding Graphic Control Extension
-    flags a transparent index, so underlying content shows through —
-    and after each emitted frame the GCE disposal method applies
-    (0/1 leave, 2 restore the rect to background, 3 restore the rect
-    to its pre-draw content). Local palettes, interlaced frames, and
-    the block walk itself are SHARED with :func:`decode_gif`
-    (:func:`_gif_frames_iter`), which keeps its raw-first-frame
-    contract. A frame rect outside the logical screen or a truncated
-    GCE raises ValueError."""
-    import numpy as np
-
-    sw, sh, bg_idx, gct, pos = _gif_header(b)
-    if not sw or not sh:
-        raise ValueError(f"GIF logical screen {sw}x{sh} invalid")
-    bg = (
-        gct[bg_idx].copy()
-        if gct is not None and bg_idx < len(gct)
-        else np.zeros(3, np.uint8)
-    )
-    canvas = np.empty((sh, sw, 3), np.uint8)
-    canvas[:] = bg
-    frames, delays = [], []
-    for left, top, idx, pal, gce in _gif_frames_iter(b, pos, gct):
-        h, w = idx.shape
-        if left + w > sw or top + h > sh:
-            raise ValueError("GIF frame rect outside the logical screen")
-        disposal, tidx, delay = gce or (0, None, 0)
-        region = canvas[top : top + h, left : left + w]
-        prev = region.copy() if disposal == 3 else None
-        rgb = pal[idx]
-        if tidx is not None:
-            mask = idx != tidx
-            region[mask] = rgb[mask]
-        else:
-            region[:] = rgb
-        frames.append(canvas.copy())
-        delays.append(delay)
-        if disposal == 2:
-            region[:] = bg
-        elif disposal == 3:
-            region[:] = prev
-    if not frames:
-        raise ValueError("GIF contains no image frame")
-    return np.stack(frames), delays
 
 
 # --------------------------------------------------------------------------
@@ -1716,224 +1324,6 @@ def encode_wav(samples, sample_rate: int, n_channels: int = 1) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def _g711_ulaw_to_linear(u):
-    """Vectorized ITU G.711 µ-law expansion (the classic Sun
-    ulaw2linear): uint8 codes → int16 linear samples. Pure table
-    math — exact, no codec state."""
-    import numpy as np
-
-    u = (~np.asarray(u, np.uint8)).astype(np.int32)
-    t = ((u & 0x0F) << 3) + 0x84
-    t <<= (u & 0x70) >> 4
-    return np.where(u & 0x80, 0x84 - t, t - 0x84).astype(np.int16)
-
-
-def _g711_alaw_to_linear(a):
-    """Vectorized ITU G.711 A-law expansion (alaw2linear): uint8
-    codes → int16 linear samples."""
-    import numpy as np
-
-    a = (np.asarray(a, np.uint8) ^ 0x55).astype(np.int32)
-    seg = (a & 0x70) >> 4
-    t = (a & 0x0F) << 4
-    t = np.where(seg == 0, t + 8, (t + 0x108) << np.maximum(seg - 1, 0))
-    return np.where(a & 0x80, t, -t).astype(np.int16)
-
-
-# IMA ADPCM (tag 0x11): the 89-entry step-size table and the 16-entry
-# index-adjustment table from the IMA Digital Audio Pack reference
-# algorithm — integer-exact, shared by encoder and decoder.
-_IMA_STEP = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34,
-    37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143,
-    157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494,
-    544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552,
-    1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428,
-    4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487,
-    12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086,
-    29794, 32767,
-]
-_IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8]
-
-# MS ADPCM (tag 2): the 16-entry delta-adaptation table and the seven
-# standard predictor-coefficient pairs from the WAVE format spec.
-_MS_ADAPT = [
-    230, 230, 230, 230, 307, 409, 512, 614,
-    768, 614, 512, 409, 307, 230, 230, 230,
-]
-_MS_COEFS = [
-    (256, 0), (512, -256), (0, 0), (192, 64),
-    (240, 0), (460, -208), (392, -232),
-]
-
-
-def _ima_expand_vec(n, pred, idx, step_tab, idx_tab):
-    """One IMA expansion step over PARALLEL state arrays: nibble array
-    ``n`` + state arrays ``(pred, idx)`` → updated ``(pred, idx)``.
-    The single source of the IMA step/clip arithmetic for every
-    vectorized decoder (WAV tag 0x11 blocks, AIFC/CAF ima4 packets) —
-    shared so the codecs can never desynchronize."""
-    import numpy as np
-
-    step = step_tab[idx]
-    diff = (
-        (step >> 3)
-        + np.where(n & 4, step, 0)
-        + np.where(n & 2, step >> 1, 0)
-        + np.where(n & 1, step >> 2, 0)
-    )
-    pred = np.clip(pred + np.where(n & 8, -diff, diff), -32768, 32767)
-    idx = np.clip(idx + idx_tab[n], 0, 88)
-    return pred, idx
-
-
-def _ima_quantize_step(sample: int, pred: int, idx: int):
-    """Scalar greedy IMA quantize + decode-side state update →
-    ``(nibble, new_pred, new_idx)``. Shared by every IMA fixture
-    encoder (WAV tag 0x11, AIFC/CAF ima4) for the same
-    never-desynchronize reason as :func:`_ima_expand_vec`."""
-    step = _IMA_STEP[idx]
-    diff = sample - pred
-    n = 0
-    if diff < 0:
-        n, diff = 8, -diff
-    if diff >= step:
-        n |= 4
-        diff -= step
-    if diff >= step >> 1:
-        n |= 2
-        diff -= step >> 1
-    if diff >= step >> 2:
-        n |= 1
-    d = step >> 3
-    if n & 4:
-        d += step
-    if n & 2:
-        d += step >> 1
-    if n & 1:
-        d += step >> 2
-    pred = max(-32768, min(32767, pred + (-d if n & 8 else d)))
-    idx = max(0, min(88, idx + _IMA_INDEX[n]))
-    return n, pred, idx
-
-
-def _div256_trunc(x):
-    """Signed C ``/ 256``: truncation toward zero (NOT ``>> 8``,
-    which floors — off by 1 on negative non-multiples)."""
-    import numpy as np
-
-    return np.where(x >= 0, x >> 8, -((-x) >> 8))
-
-
-def _ima_adpcm_decode(data, n_channels, block_align, n_samples=None):
-    """Vectorized IMA-ADPCM (WAV tag 0x11) decode → interleaved int16.
-
-    Blocks are independent (each carries its own predictor + step
-    index), so the decode vectorizes across (block, channel) with one
-    NumPy step per nibble position — the same across-independent-units
-    loop shape as the JPEG IDCT batches. Per channel each block is a
-    4-byte header (int16 predictor = the block's FIRST output sample,
-    uint8 step index, reserved) followed by 4-byte nibble words
-    channel-interleaved; low nibble first within each byte."""
-    import numpy as np
-
-    ch, ba = n_channels, block_align
-    if ba < 4 * ch + 4 * ch or (ba - 4 * ch) % (4 * ch):
-        raise ValueError(f"IMA ADPCM block_align {ba} invalid for {ch}ch")
-    if len(data) == 0 or len(data) % ba:
-        raise ValueError("IMA ADPCM data not block-aligned")
-    nb = len(data) // ba
-    arr = np.frombuffer(data, np.uint8).reshape(nb, ba)
-    hdr = arr[:, : 4 * ch].reshape(nb, ch, 4)
-    pred = (
-        (hdr[:, :, 0].astype(np.uint16) | (hdr[:, :, 1].astype(np.uint16) << 8))
-        .astype(np.int16)
-        .astype(np.int32)
-    )
-    idx = hdr[:, :, 2].astype(np.int32)
-    if (idx > 88).any():
-        raise ValueError("IMA ADPCM step index out of range (>88)")
-    byts = (
-        arr[:, 4 * ch :]
-        .reshape(nb, -1, ch, 4)
-        .transpose(0, 2, 1, 3)
-        .reshape(nb, ch, -1)
-    )
-    nibs = np.empty((nb, ch, byts.shape[2] * 2), np.uint8)
-    nibs[:, :, 0::2] = byts & 0x0F
-    nibs[:, :, 1::2] = byts >> 4
-    spb = nibs.shape[2] + 1
-    out = np.empty((nb, spb, ch), np.int16)
-    out[:, 0, :] = pred
-    step_tab = np.array(_IMA_STEP, np.int32)
-    idx_tab = np.array(_IMA_INDEX, np.int32)
-    for t in range(nibs.shape[2]):
-        n = nibs[:, :, t].astype(np.int32)
-        pred, idx = _ima_expand_vec(n, pred, idx, step_tab, idx_tab)
-        out[:, t + 1, :] = pred
-    flat = out.reshape(-1)
-    if n_samples is not None:
-        flat = flat[: n_samples * ch]
-    return flat
-
-
-def _ms_adpcm_decode(data, n_channels, block_align, coefs, n_samples=None):
-    """Vectorized MS-ADPCM (WAV tag 2) decode → interleaved int16.
-
-    Per block: one predictor-index byte per channel, then int16
-    initial-delta / sample1 / sample2 per channel, then 4-bit codes
-    HIGH nibble first, channel-interleaved per nibble. sample2 and
-    sample1 are the block's first two output samples. Vectorized
-    across blocks; the arithmetic follows the WAVE spec's reference C
-    exactly — ``/ 256`` there is SIGNED C division, i.e. truncation
-    toward zero, NOT an arithmetic shift (they differ by 1 on
-    negative non-multiples, and the error would feed the s1/s2
-    history), hence :func:`_div256_trunc`; delta floor 16."""
-    import numpy as np
-
-    ch, ba = n_channels, block_align
-    if ba < 7 * ch + ch or (ba - 7 * ch) % ch:
-        raise ValueError(f"MS ADPCM block_align {ba} invalid for {ch}ch")
-    if len(data) == 0 or len(data) % ba:
-        raise ValueError("MS ADPCM data not block-aligned")
-    nb = len(data) // ba
-    arr = np.frombuffer(data, np.uint8).reshape(nb, ba)
-    pidx = arr[:, :ch].astype(np.int64)
-    if (pidx >= len(coefs)).any():
-        raise ValueError("MS ADPCM predictor index out of range")
-
-    def i16(off):
-        lo = arr[:, off : off + 2 * ch : 2].astype(np.uint16)
-        hi = arr[:, off + 1 : off + 2 * ch : 2].astype(np.uint16)
-        return (lo | (hi << 8)).astype(np.int16).astype(np.int64)
-
-    delta, s1, s2 = i16(ch), i16(3 * ch), i16(5 * ch)
-    c1 = np.array([c[0] for c in coefs], np.int64)[pidx]
-    c2 = np.array([c[1] for c in coefs], np.int64)[pidx]
-    body = arr[:, 7 * ch :]
-    nibs = np.empty((nb, body.shape[1] * 2), np.uint8)
-    nibs[:, 0::2] = body >> 4
-    nibs[:, 1::2] = body & 0x0F
-    nch = nibs.reshape(nb, -1, ch)
-    out = np.empty((nb, nch.shape[1] + 2, ch), np.int16)
-    out[:, 0, :] = s2
-    out[:, 1, :] = s1
-    adapt = np.array(_MS_ADAPT, np.int64)
-    for t in range(nch.shape[1]):
-        n = nch[:, t, :].astype(np.int64)
-        signed = np.where(n >= 8, n - 16, n)
-        pred = np.clip(
-            _div256_trunc(s1 * c1 + s2 * c2) + signed * delta, -32768, 32767
-        )
-        s2, s1 = s1, pred
-        delta = np.maximum(_div256_trunc(adapt[n] * delta), 16)
-        out[:, t + 2, :] = pred
-    flat = out.reshape(-1)
-    if n_samples is not None:
-        flat = flat[: n_samples * ch]
-    return flat
-
-
 def decode_wav(b: bytes):
     """REAL WAV decode → (samples ndarray interleaved, sample_rate,
     n_channels) — RIFF chunk walk with word-aligned skipping, stdlib
@@ -1942,20 +1332,17 @@ def decode_wav(b: bytes):
     Supported: integer PCM (format tag 1) at 8 bits (offset-binary,
     expanded to full-scale int16 via ``(x-128)<<8``), 16 bits (int16),
     24 bits (sign-extended to int32), and 32 bits (int32); IEEE float
-    (tag 3) at 32/64 bits; G.711 A-law/µ-law (tags 6/7 — pure table
-    expansions to int16); MS ADPCM (tag 2) and IMA ADPCM (tag 0x11) —
-    both integer-exact block codecs decoded block-parallel, with the
-    ``fact`` chunk trimming trailing block-padding samples; and
-    WAVE_FORMAT_EXTENSIBLE (tag 0xFFFE — the real tag read from the
-    SubFormat GUID). True transform codecs (MP3-in-RIFF, WMA, …)
-    raise NotImplementedError; a malformed container raises
-    ValueError."""
+    (tag 3) at 32/64 bits; and WAVE_FORMAT_EXTENSIBLE (tag 0xFFFE —
+    the real tag read from the SubFormat GUID). Every other format —
+    G.711 A-law/µ-law, MS/IMA ADPCM, transform codecs (MP3-in-RIFF,
+    WMA, …) — raises NotImplementedError; a malformed container
+    raises ValueError."""
     import numpy as np
 
     rf64 = b[:4] in (b"RF64", b"BW64")
     if (b[:4] != b"RIFF" and not rf64) or b[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE stream")
-    pos, fmt, fmt_chunk, data, fact = 12, None, None, None, None
+    pos, fmt, fmt_chunk, data = 12, None, None, None
     ds64_data_size = None
     while pos + 8 <= len(b):
         tag, ln = struct.unpack("<4sI", b[pos : pos + 8])
@@ -1978,12 +1365,6 @@ def decode_wav(b: bytes):
             fmt_chunk = chunk
         elif tag == b"data":
             data = chunk
-        elif tag == b"fact" and ln >= 4:
-            # dwSampleLength: frames per channel actually encoded —
-            # trims the final ADPCM block's padding samples. A zero
-            # here is a streaming-encoder placeholder ("backfill
-            # later"), not "no samples" — treat it as absent
-            fact = struct.unpack("<I", chunk[:4])[0] or None
         pos += 8 + ln + (ln & 1)  # chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
@@ -1994,8 +1375,7 @@ def decode_wav(b: bytes):
         # every duration/per-channel reducer downstream, escaping the
         # (NotImplementedError, ValueError) per-doc isolation
         raise ValueError(f"WAV rate={rate} channels={n_channels} invalid")
-    extensible = audio_format == 0xFFFE
-    if extensible:
+    if audio_format == 0xFFFE:
         # WAVE_FORMAT_EXTENSIBLE: the real tag is the first word of
         # the SubFormat GUID (fmt = 16 base + cbSize + 2 valid-bits +
         # 4 channel-mask + 16 GUID)
@@ -2023,189 +1403,16 @@ def decode_wav(b: bytes):
             return np.frombuffer(data, "<f4"), rate, n_channels
         if bits == 64:
             return np.frombuffer(data, "<f8"), rate, n_channels
-    elif audio_format == 6 and bits == 8:  # G.711 A-law
-        return (
-            _g711_alaw_to_linear(np.frombuffer(data, np.uint8)),
-            rate,
-            n_channels,
-        )
-    elif audio_format == 7 and bits == 8:  # G.711 µ-law
-        return (
-            _g711_ulaw_to_linear(np.frombuffer(data, np.uint8)),
-            rate,
-            n_channels,
-        )
-    elif audio_format == 2 and bits == 4:  # MS ADPCM
-        # fmt extension: cbSize, wSamplesPerBlock, wNumCoef, then
-        # (coef1, coef2) int16 pairs. An EXTENSIBLE-wrapped fmt has a
-        # different extension layout (valid-bits/channel-mask/GUID,
-        # no coef table) — misreading it as the tag-2 layout would
-        # decode with garbage coefficients, so extensible falls back
-        # to the seven standard pairs, like an extension-less fmt
-        coefs = _MS_COEFS
-        if not extensible and fmt_chunk is not None and len(fmt_chunk) >= 22:
-            n_coef = struct.unpack("<H", fmt_chunk[20:22])[0]
-            if 0 < n_coef and len(fmt_chunk) >= 22 + 4 * n_coef:
-                coefs = [
-                    struct.unpack("<hh", fmt_chunk[22 + 4 * i : 26 + 4 * i])
-                    for i in range(n_coef)
-                ]
-        return (
-            _ms_adpcm_decode(data, n_channels, block_align, coefs, fact),
-            rate,
-            n_channels,
-        )
-    elif audio_format == 0x11 and bits == 4:  # IMA ADPCM
-        return (
-            _ima_adpcm_decode(data, n_channels, block_align, fact),
-            rate,
-            n_channels,
-        )
     raise NotImplementedError(
-        f"STUB: WAV format={audio_format} bits={bits} needs a transform "
-        "codec (MP3/WMA/…); integer/float PCM, G.711 A-law/µ-law, and "
-        "MS/IMA ADPCM decode natively"
+        f"STUB: WAV format={audio_format} bits={bits} — only integer and "
+        "float PCM decode (G.711, ADPCM and transform codecs do not)"
     )
-
-
-def encode_wav_ima(samples, sample_rate: int, n_channels: int = 1,
-                   block_align: int | None = None) -> bytes:
-    """Deterministic IMA-ADPCM fixture encoder → full RIFF/WAVE
-    (fmt-with-extension + fact + data). Greedy reference quantizer
-    with predictor/step state carried across blocks (each block
-    header consumes the block's first sample, per the WAV IMA
-    layout); the final block pads by repeating the last frame, and
-    the fact chunk records the true frame count so decode trims the
-    padding. Scalar per-sample loop — fixture-scale only."""
-    import numpy as np
-
-    ch = n_channels
-    s = np.asarray(samples, np.int16).astype(np.int32)
-    if s.size == 0 or s.size % ch:
-        raise ValueError("sample count not channel-aligned")
-    frames = s.size // ch
-    s = s.reshape(frames, ch)
-    ba = block_align if block_align is not None else 4 * ch * 8
-    if ba < 8 * ch or (ba - 4 * ch) % (4 * ch):
-        raise ValueError(f"block_align {ba} invalid for {ch}ch")
-    spb = (ba - 4 * ch) // ch * 2 + 1
-    pred, idx = [0] * ch, [0] * ch
-    blocks, pos = [], 0
-    while pos < frames:
-        blk = s[pos : pos + spb]
-        hdr = b""
-        nibs = [[] for _ in range(ch)]
-        for c in range(ch):
-            pred[c] = int(blk[0, c])
-            hdr += struct.pack("<hBB", pred[c], idx[c], 0)
-        for t in range(1, spb):
-            f = blk[min(t, len(blk) - 1)]
-            for c in range(ch):
-                n, pred[c], idx[c] = _ima_quantize_step(
-                    int(f[c]), pred[c], idx[c]
-                )
-                nibs[c].append(n)
-        packed = [
-            bytes(nibs[c][i] | (nibs[c][i + 1] << 4)
-                  for i in range(0, len(nibs[c]), 2))
-            for c in range(ch)
-        ]
-        body = bytearray()
-        for w in range(len(packed[0]) // 4):
-            for c in range(ch):
-                body += packed[c][4 * w : 4 * w + 4]
-        blocks.append(hdr + bytes(body))
-        pos += spb
-    data = b"".join(blocks)
-    fmt = struct.pack(
-        "<HHIIHHHH", 0x11, ch, sample_rate,
-        sample_rate * ba // spb, ba, 4, 2, spb,
-    )
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, frames)
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def encode_wav_ms(samples, sample_rate: int, n_channels: int = 1,
-                  block_align: int | None = None) -> bytes:
-    """Deterministic MS-ADPCM fixture encoder → full RIFF/WAVE
-    (fmt + coef extension + fact + data). Predictor pair fixed at
-    index 0 (coef1=256, coef2=0); initial delta per block derived
-    from the block's mean first difference (floor 16); nibbles chosen
-    by rounding the prediction error to the nearest delta multiple,
-    state then updated with the decoder's exact arithmetic. Scalar
-    loop — fixture-scale only."""
-    import numpy as np
-
-    ch = n_channels
-    s = np.asarray(samples, np.int16).astype(np.int64)
-    if s.size == 0 or s.size % ch:
-        raise ValueError("sample count not channel-aligned")
-    frames = s.size // ch
-    s = s.reshape(frames, ch)
-    ba = block_align if block_align is not None else 7 * ch + 32 * ch
-    if ba < 8 * ch or (ba - 7 * ch) % ch:
-        raise ValueError(f"block_align {ba} invalid for {ch}ch")
-    spb = (ba - 7 * ch) * 2 // ch + 2
-    c1, c2 = _MS_COEFS[0]
-    blocks, pos = [], 0
-    while pos < frames:
-        blk = s[pos : pos + spb]
-        pad = np.vstack([blk] + [blk[-1:]] * (spb - len(blk)))
-        s2 = [int(pad[0, c]) for c in range(ch)]
-        s1 = [int(pad[1, c]) for c in range(ch)]
-        delta = [
-            max(16, int(np.mean(np.abs(np.diff(pad[:, c])))) >> 2)
-            for c in range(ch)
-        ]
-        hdr = bytes([0] * ch)
-        for part in (delta, s1, s2):
-            for c in range(ch):
-                hdr += struct.pack("<h", part[c])
-        nibs = []
-
-        def trunc256(x: int) -> int:  # signed C /256, like the decoder
-            return x >> 8 if x >= 0 else -((-x) >> 8)
-
-        for t in range(2, spb):
-            for c in range(ch):
-                predicted = trunc256(s1[c] * c1 + s2[c] * c2)
-                err = int(pad[t, c]) - predicted
-                half = delta[c] >> 1
-                n = (err + half if err >= 0 else err - half) // delta[c]
-                n = max(-8, min(7, n))
-                recon = max(-32768, min(32767, predicted + n * delta[c]))
-                s2[c], s1[c] = s1[c], recon
-                delta[c] = max(16, trunc256(_MS_ADAPT[n & 0xF] * delta[c]))
-                nibs.append(n & 0xF)
-        body = bytes(nibs[i] << 4 | nibs[i + 1] for i in range(0, len(nibs), 2))
-        blocks.append(hdr + body)
-        pos += spb
-    data = b"".join(blocks)
-    fmt = struct.pack(
-        "<HHIIHHHHH", 2, ch, sample_rate, sample_rate * ba // spb,
-        ba, 4, 4 + 4 * len(_MS_COEFS), spb, len(_MS_COEFS),
-    ) + b"".join(struct.pack("<hh", a, b) for a, b in _MS_COEFS)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, frames)
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def decode_audio(b: bytes):
     """Container-dispatched audio decode → (interleaved samples,
     sample_rate, n_channels): RIFF/WAVE streams via
-    :func:`decode_wav` (PCM / float / G.711 / MS+IMA ADPCM /
-    EXTENSIBLE), FLAC via :func:`dstlr_spark.operators.flac.
+    :func:`decode_wav` (integer / float PCM, EXTENSIBLE), FLAC via :func:`dstlr_spark.operators.flac.
     decode_flac` (lossless predictive decode — integer-exact, so it
     sits under the same planted-value oracles). Both audio operators
     dispatch through this, so a FLAC clip rides the identical
@@ -2247,7 +1454,7 @@ def audio_features_np(media: DataFrame) -> DataFrame:
     an analytic oracle can reproduce them bit-for-bit. Arrow-batched
     mapInPandas; per-doc failure isolation (X2) — an undecodable clip
     yields a null-feature row. Map-only: no shuffle, features are the
-    only bytes that leave the stage (the decode_features_np shape)."""
+    only bytes that leave the stage."""
 
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -2312,9 +1519,9 @@ def synth_media_wav(documents: DataFrame) -> DataFrame:
     features oracle is container-BLIND (it derives everything from
     n_chars), so all nine codec paths must reproduce identical
     decoded samples — the same lockstep-free gate growth the image
-    corpus uses for BI_JPEG/BI_PNG. Deterministic in n_chars only —
-    same oracle contract as :func:`synth_media_bmp`. Same F1/F2 null
-    guard."""
+    corpus uses for BI_JPEG/BI_PNG. Deterministic in n_chars only, so
+    the DuckDB oracle re-derives every feature without parsing a
+    byte. Same F1/F2 null guard."""
 
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -2549,33 +1756,30 @@ def decode_video_luma(b: bytes):
     """Container-dispatched video decode → luma frame stack
     (n, h, w): YUV4MPEG2 streams return their Y planes
     (:func:`decode_y4m` — uint8, or exact uint16 for wide-sample
-    tags); animated GIFs composite through :func:`decode_gif_frames`;
-    AVI DIB/MJPEG frame stacks decode through
-    :func:`dstlr_spark.operators.avi.decode_avi_frames` — RGB paths
-    reduce to integer BT.601 luma (:func:`_bt601_luma`). All three
-    containers ride the same sampling/shot machinery."""
+    tags); AVI DIB/MJPEG frame stacks decode through
+    :func:`dstlr_spark.operators.avi.decode_avi_frames` and reduce to
+    integer BT.601 luma (:func:`_bt601_luma`). Both containers ride
+    the same sampling/shot machinery; anything else (animated GIF,
+    inter-frame codecs) raises the STUB contract."""
     import numpy as np
 
     if b[:9] == b"YUV4MPEG2":
         return decode_y4m(b)[0]
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        rgb, _delays = decode_gif_frames(b)
-        return _bt601_luma(rgb)
     if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
         from dstlr_spark.operators.avi import decode_avi_frames
 
         return _bt601_luma(decode_avi_frames(b)[0])
     raise NotImplementedError(
-        "STUB: unrecognized video container — Y4M, animated GIF, and "
-        "AVI (DIB/MJPEG) decode natively; inter-frame codecs (H.26x, "
-        "VP9, AV1) need a video library this container doesn't ship"
+        "STUB: unrecognized video container — Y4M and AVI (DIB/MJPEG) "
+        "decode natively; animated GIF and inter-frame codecs (H.26x, "
+        "VP9, AV1) do not"
     )
 
 
 def video_frame_features_np(media: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL frame sampling + per-frame features: decode the video
-    payload (Y4M luma planes, or animated-GIF composites reduced to
-    BT.601 luma — :func:`decode_video_luma`) and emit one row per
+    payload (Y4M luma planes, or AVI frames reduced to BT.601 luma —
+    :func:`decode_video_luma`) and emit one row per
     SAMPLED frame (indices 0, k, 2k, …) —
     (doc_id, frame_idx, width, height, y_sum, y_min, y_max), all exact
     integers. This replaces the byte-stride stand-in with a real GOP
@@ -2776,8 +1980,8 @@ def synth_media_y4m(documents: DataFrame) -> DataFrame:
     whose frames are LOSSLESS JPEG (SOF3) streams — also exact. The
     frame-features oracle is container-BLIND (it derives everything
     from n_chars), so all three paths must reproduce identical luma
-    stacks. Deterministic in n_chars only (the
-    :func:`synth_media_bmp` oracle contract); same F1/F2 null guard."""
+    stacks. Deterministic in n_chars only, so the oracle needs no
+    decode; same F1/F2 null guard."""
 
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -2948,36 +2152,6 @@ def resize_nearest(rgb, max_side: int):
     return rgb[np.ix_(ys, xs)]
 
 
-def synth_media_bmp(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, text, n_chars) → (doc_id, payload binary) where
-    payload is a REAL uncompressed 24-bit BMP of the planted-pixel
-    image: width = n_chars % 7 + 2, height = (n_chars·3) % 7 + 2 (2..8
-    px — the gate exercises decode arithmetic, not IO volume), pixels
-    from :data:`PLANT_MOD`'s formula. Deterministic in n_chars only, so
-    the DuckDB oracle re-derives dimensions AND every pixel without
-    parsing a byte. Same F1/F2 null guard as :func:`synth_media`."""
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = int(n_chars) % 7 + 2
-                h = (int(n_chars) * 3) % 7 + 2
-                rows.append(
-                    dict(doc_id=doc_id, payload=encode_bmp(_planted_rgb(w, h)))
-                )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {"doc_id": pd.Series(dtype="object"),
-                 "payload": pd.Series(dtype="object")}
-            )
-
-    return (
-        documents.where(F.col("text").isNotNull() & F.col("n_chars").isNotNull())
-        .select(F.col("doc_id").cast("string").alias("doc_id"), "n_chars")
-        .mapInPandas(body, "doc_id string, payload binary")
-    )
-
-
 def palettize_rgb(rgb):
     """(h, w, 3) uint8 RGB → (index array, (256, 3) palette) for GIF
     encoding. Requires ≤256 distinct colors (the planted gate images
@@ -3001,9 +2175,12 @@ def _encode_gif_rgb(rgb, interlace=False) -> bytes:
 
 
 def synth_media_mixed(documents: DataFrame) -> DataFrame:
-    """Seventeen-variant twin of :func:`synth_media_bmp`: the SAME
-    planted image per document (dims and pixels are functions of
-    n_chars alone), serialized per (n_chars DIV 7) MOD 17 — DIV 7
+    """documents(doc_id, text, n_chars) → (doc_id, payload binary): the
+    SAME planted image per document — width = n_chars % 7 + 2, height
+    = (n_chars·3) % 7 + 2 (2..8 px: the gate exercises decode
+    arithmetic, not IO volume), pixels from :data:`PLANT_MOD`'s
+    formula — serialized per (n_chars DIV 7) MOD 22 into one of
+    twenty-two variants — DIV 7
     first so the codec choice is independent of the (n_chars MOD
     7)-derived dims
     and every codec sees every image shape — uncompressed 24-bit BMP;
@@ -3035,8 +2212,8 @@ def synth_media_mixed(documents: DataFrame) -> DataFrame:
     RLE bottom-up truecolor TGA (no front magic — dispatched on the
     TGA 2.0 footer signature, exact); 24-bit 3-plane PCX (scanline
     RLE, exact); QOI (running 64-slot index + diff/luma/run ops,
-    exact); WebP-lossless (VP8L — canonical prefix codes, LZ77
-    runs, subtract-green transform + 4-bit color cache, exact); and
+    exact); WebP-lossless (VP8L — canonical prefix codes,
+    subtract-green transform + 4-bit color cache, exact); and
     ICO (doubled-height DIB entry behind a 1×1 decoy — largest-entry
     selection + BMP delegation, exact). A decoder is correct iff
     EVERY variant reproduces the identical planted values — which is
@@ -3144,62 +2321,6 @@ def decode_image_np(media: DataFrame) -> DataFrame:
 
     return media.mapInPandas(
         body, "doc_id string, width int, height int, pixels array<int>"
-    )
-
-
-def decode_features_np(media: DataFrame) -> DataFrame:
-    """The 100 TB form of :func:`decode_image_np`: decode AND reduce
-    INSIDE the Arrow stage — (doc_id, payload) → (doc_id, width,
-    height, pixel_sum, px_first_r, px_last_b, mean_r, mean_g, mean_b).
-    Never materializes the pixel array through Arrow: at media scale
-    the decoded plane is 12× the file bytes as an ``array<int>`` row,
-    and shipping it out of the stage (not the decode) is the
-    bottleneck — BENCH/BASELINE.md records the gap. The
-    value-gated twin keeps emitting pixels so the DuckDB oracle can
-    check them; this operator is the shape a curation pipeline runs.
-    Same per-doc failure isolation (X2)."""
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    rgb = decode_rgb_bytes(bytes(payload))
-                    flat = rgb.reshape(-1)
-                    means = rgb.reshape(-1, 3).mean(axis=0, dtype=np.float64)
-                    rows.append(
-                        dict(
-                            doc_id=doc_id,
-                            width=rgb.shape[1],
-                            height=rgb.shape[0],
-                            pixel_sum=int(flat.sum(dtype=np.int64)),
-                            px_first_r=int(flat[0]),
-                            px_last_b=int(flat[-1]),
-                            mean_r=float(means[0]),
-                            mean_g=float(means[1]),
-                            mean_b=float(means[2]),
-                        )
-                    )
-                except (NotImplementedError, ValueError):
-                    rows.append(
-                        dict(doc_id=doc_id, width=None, height=None,
-                             pixel_sum=None, px_first_r=None, px_last_b=None,
-                             mean_r=None, mean_g=None, mean_b=None)
-                    )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {c: pd.Series(dtype="object")
-                 for c in ["doc_id", "width", "height", "pixel_sum",
-                           "px_first_r", "px_last_b", "mean_r", "mean_g",
-                           "mean_b"]}
-            )
-
-    return media.mapInPandas(
-        body,
-        "doc_id string, width int, height int, pixel_sum long, "
-        "px_first_r int, px_last_b int, mean_r double, mean_g double, "
-        "mean_b double",
     )
 
 
@@ -3337,7 +2458,7 @@ def audio_normalize_np(media: DataFrame,
     emit per-clip proof features — output sample count, exact checksum
     (sum), sum of squares, and peak — all integers. Arrow-batched
     mapInPandas with per-doc failure isolation (X2); map-only, samples
-    never leave the stage (the decode_features_np shape)."""
+    never leave the stage."""
 
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

@@ -1,24 +1,21 @@
 """Truevision TGA decode/encode — pure struct/NumPy, zero deps.
 
 TGA stores uncompressed or RLE-packed scanlines of 8-bit gray,
-colormapped, 15/16-bit A1R5G5B5, 24-bit BGR, or 32-bit BGRA pixels
-under an 18-byte little-endian header — every path integer-exact, so
-it joins the engine's format-BLIND planted-pixel oracle corpus the
-way BMP/PNG/GIF/TIFF do (:func:`dstlr_spark.operators.multimodal.
+24-bit BGR, or 32-bit BGRA pixels under an 18-byte little-endian
+header — every path integer-exact, so it joins the engine's
+format-BLIND planted-pixel oracle corpus the way BMP/PNG/GIF/TIFF do (:func:`dstlr_spark.operators.multimodal.
 decode_rgb_bytes` dispatch).
 
 TGA has NO front magic; dispatch keys on the TGA 2.0 footer signature
 (``TRUEVISION-XFILE.\\0`` in the trailing 26 bytes) — spec-true, and
-the fixture encoder always writes it. 5-bit channels expand with the
-same ``(v<<3)|(v>>2)`` replication the BMP 16-bpp path uses, so the
-two containers agree on every 15-bit color.
+the fixture encoder always writes it.
 
-Decoder surface (:func:`decode_tga`): image types 1/2/3 and their
-RLE-8/9/10/11 twins; 8/15/16/24/32-bit pixels; colormaps at
-15/16/24/32-bit entries with a nonzero first-entry offset; both
+Decoder surface (:func:`decode_tga`): image types 2/3 and their
+RLE-10/11 twins; 8-bit gray and 24/32-bit truecolor pixels; both
 vertical origins (descriptor bit 5) and the rare right-to-left bit 4;
-the image-ID field skipped by length. Interleaved (legacy bits 6-7)
-layouts raise NotImplementedError.
+the image-ID field and any colormap skipped by length. Colormapped
+images (types 1/9), 15/16-bit pixels and interleaved (legacy bits
+6-7) layouts raise NotImplementedError.
 
 Contract: malformed input raises ValueError; real-but-unimplemented
 layouts raise NotImplementedError; never struct.error/IndexError.
@@ -29,11 +26,6 @@ from __future__ import annotations
 import struct
 
 TGA_FOOTER_SIG = b"TRUEVISION-XFILE.\x00"
-
-
-def _expand5(v):
-    """5-bit channel → 8-bit by bit replication (BMP X1R5G5B5 rule)."""
-    return ((v << 3) | (v >> 2)).astype("uint8")
 
 
 def _rle_expand(data: bytes, n_pixels: int, bpp_bytes: int):
@@ -83,32 +75,10 @@ def _pixels_to_rgb(flat, w: int, h: int, depth: int):
     if depth == 32:
         bgra = flat.reshape(h, w, 4)
         return bgra[..., 2::-1].copy()
-    if depth in (15, 16):
-        v = flat.reshape(h, w, 2).astype(np.uint16)
-        px = v[..., 0] | (v[..., 1] << 8)
-        return np.stack(
-            [
-                _expand5((px >> 10) & 0x1F),
-                _expand5((px >> 5) & 0x1F),
-                _expand5(px & 0x1F),
-            ],
-            axis=-1,
-        )
     if depth == 8:
         g = flat.reshape(h, w)
         return np.repeat(g[..., None], 3, axis=-1)
     raise NotImplementedError(f"STUB: TGA pixel depth {depth}")
-
-
-def _colormap_to_rgb(cm: bytes, n: int, entry_bits: int):
-    """Colormap bytes → (n, 3) uint8 RGB lookup table."""
-    import numpy as np
-
-    ebytes = (entry_bits + 7) // 8
-    arr = np.frombuffer(cm, np.uint8)
-    if arr.size < n * ebytes:
-        raise ValueError("truncated TGA colormap")
-    return _pixels_to_rgb(arr[: n * ebytes], n, 1, entry_bits).reshape(n, 3)
 
 
 def decode_tga(b: bytes):
@@ -124,7 +94,7 @@ def decode_tga(b: bytes):
         id_len,
         cm_type,
         img_type,
-        cm_first,
+        _cm_first,
         cm_len,
         cm_bits,
         _x0,
@@ -145,16 +115,11 @@ def decode_tga(b: bytes):
         raise ValueError(f"TGA dims {w}x{h} invalid")
     rle = img_type >= 9
     kind = img_type - 8 if rle else img_type
-    if kind not in (1, 2, 3):
+    if kind not in (2, 3):
         raise NotImplementedError(f"STUB: TGA image type {img_type}")
-    if kind == 1 and cm_type != 1:
-        raise ValueError("colormapped TGA without a colormap")
     pos = 18 + id_len
-    palette = None
-    if cm_type == 1:
-        ebytes = (cm_bits + 7) // 8
-        palette = _colormap_to_rgb(b[pos : pos + cm_len * ebytes], cm_len, cm_bits)
-        pos += cm_len * ebytes
+    if cm_type == 1:  # a colormap a truecolor image does not use
+        pos += cm_len * ((cm_bits + 7) // 8)
     bpp_bytes = (depth + 7) // 8
     n_px = w * h
     if rle:
@@ -165,14 +130,7 @@ def decode_tga(b: bytes):
             raise ValueError("truncated TGA pixel data")
         flat = raw
 
-    if kind == 1:
-        if depth != 8:
-            raise NotImplementedError(f"STUB: TGA colormap index depth {depth}")
-        idx = flat.reshape(h, w).astype(np.int32) - cm_first
-        if (idx < 0).any() or (idx >= palette.shape[0]).any():
-            raise ValueError("TGA colormap index out of range")
-        rgb = palette[idx]
-    elif kind == 3:
+    if kind == 3:
         if depth != 8:
             raise NotImplementedError(f"STUB: TGA grayscale depth {depth}")
         rgb = _pixels_to_rgb(flat, w, h, 8)
@@ -186,46 +144,25 @@ def decode_tga(b: bytes):
     return np.ascontiguousarray(rgb)
 
 
-def encode_tga(
-    rgb,
-    rle: bool = False,
-    top_down: bool = True,
-    palette=None,
-    indices=None,
-    depth: int = 24,
-) -> bytes:
-    """FIXTURE-side TGA encoder. Truecolor from ``rgb`` at ``depth``
-    24/32; colormapped when ``palette``/``indices`` given (type 1);
-    RLE uses maximal same-pixel runs (type 9/10). Always writes the
-    TGA 2.0 footer (the dispatch magic)."""
+def encode_tga(rgb, rle: bool = False, top_down: bool = True,
+               depth: int = 24) -> bytes:
+    """FIXTURE-side TGA encoder: truecolor (type 2) from ``rgb`` at
+    ``depth`` 24/32; RLE uses maximal same-pixel runs (type 10).
+    Always writes the TGA 2.0 footer (the dispatch magic)."""
     import numpy as np
 
-    if palette is not None:
-        idx = np.asarray(indices, np.uint8)
-        if not top_down:
-            idx = idx[::-1]
-        h, w = idx.shape
-        img_type, d = 1, 8
-        flat = idx.reshape(-1, 1)
-        pal = np.asarray(palette, np.uint8)
-        cm = pal[:, ::-1]  # BGR entries at 24-bit
-        cm_blob = cm.astype(np.uint8).tobytes()
-        cm_fields = (1, 0, pal.shape[0], 24)
+    arr = np.asarray(rgb, np.uint8)
+    if not top_down:
+        arr = arr[::-1]
+    h, w = arr.shape[:2]
+    img_type, d = 2, depth
+    if depth == 24:
+        flat = arr[..., ::-1].reshape(-1, 3)
+    elif depth == 32:
+        a = np.full((h, w, 1), 255, np.uint8)
+        flat = np.concatenate([arr[..., ::-1], a], axis=-1).reshape(-1, 4)
     else:
-        arr = np.asarray(rgb, np.uint8)
-        if not top_down:
-            arr = arr[::-1]
-        h, w = arr.shape[:2]
-        img_type, d = 2, depth
-        if depth == 24:
-            flat = arr[..., ::-1].reshape(-1, 3)
-        elif depth == 32:
-            a = np.full((h, w, 1), 255, np.uint8)
-            flat = np.concatenate([arr[..., ::-1], a], axis=-1).reshape(-1, 4)
-        else:
-            raise ValueError(f"unsupported fixture TGA depth {depth}")
-        cm_blob = b""
-        cm_fields = (0, 0, 0, 0)
+        raise ValueError(f"unsupported fixture TGA depth {depth}")
     if rle:
         img_type += 8
         body = bytearray()
@@ -257,19 +194,7 @@ def encode_tga(
     if d == 32:
         desc |= 8  # alpha channel bits
     hdr = struct.pack(
-        "<BBBHHBHHHHBB",
-        0,
-        cm_fields[0],
-        img_type,
-        cm_fields[1],
-        cm_fields[2],
-        cm_fields[3],
-        0,
-        0,
-        w,
-        h,
-        d,
-        desc,
+        "<BBBHHBHHHHBB", 0, 0, img_type, 0, 0, 0, 0, 0, w, h, d, desc
     )
     footer = struct.pack("<II", 0, 0) + TGA_FOOTER_SIG
-    return hdr + cm_blob + data + footer
+    return hdr + data + footer

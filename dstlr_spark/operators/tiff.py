@@ -1,8 +1,8 @@
 """TIFF decode/encode — pure Python/NumPy, zero dependencies.
 
 Baseline TIFF 6.0: both byte orders (``II``/``MM``), first-IFD image,
-chunky strips with RowsPerStrip assembly, Compression 1 (none),
-32773 (PackBits RLE) and 5 (TIFF-LZW — MSB-first codes with the
+chunky strips with RowsPerStrip assembly, Compression 1 (none)
+and 5 (TIFF-LZW — MSB-first codes with the
 spec's EARLY-CHANGE width switch, which is exactly one code earlier
 than GIF's), Predictor 2 (horizontal differencing, per-component
 modulo add), and the four photometrics that need no color science:
@@ -36,7 +36,7 @@ post-predictor offset ``x + 2^(bits-1) mod 2^bits``. Out of scope
 signed samples, and the float predictor 3.
 
 Encoder (:func:`encode_tiff`) is the deterministic fixture side —
-real PackBits and real LZW (early change included) so decode paths
+real LZW (early change included) so decode paths
 are pinned by round-trips, plus hand-stream tests for the conventions
 an encoder of our own could mask.
 
@@ -44,59 +44,13 @@ Contract: malformed input raises ValueError; unsupported-but-real
 layouts raise NotImplementedError; never struct.error/IndexError
 (the Arrow per-doc isolation wrappers catch exactly those two).
 
-Reference semantics: TIFF 6.0 spec §§ 7 (strips), 9 (PackBits),
+Reference semantics: TIFF 6.0 spec §§ 7 (strips),
 13 (LZW), 14 (differencing predictor).
 """
 
 from __future__ import annotations
 
 import struct
-
-
-def _packbits_decode(data: bytes, expect: int) -> bytes:
-    out = bytearray()
-    pos, n = 0, len(data)
-    while pos < n and len(out) < expect:
-        h = data[pos]
-        pos += 1
-        if h < 128:  # literal run of h+1 bytes
-            lit = data[pos : pos + h + 1]
-            if len(lit) != h + 1:
-                raise ValueError("truncated PackBits literal")
-            out += lit
-            pos += h + 1
-        elif h > 128:  # repeat next byte 257-h times
-            if pos >= n:
-                raise ValueError("truncated PackBits run")
-            out += bytes([data[pos]]) * (257 - h)
-            pos += 1
-        # h == 128: no-op per spec
-    if len(out) < expect:
-        raise ValueError("PackBits strip shorter than expected")
-    return bytes(out[:expect])
-
-
-def _packbits_encode(data: bytes) -> bytes:
-    out = bytearray()
-    i, n = 0, len(data)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and data[i + run] == data[i]:
-            run += 1
-        if run >= 2:
-            out += bytes([257 - run, data[i]])
-            i += run
-        else:
-            j = i + 1
-            while (
-                j < n
-                and j - i < 128
-                and not (j + 1 < n and data[j] == data[j + 1])
-            ):
-                j += 1
-            out += bytes([j - i - 1]) + data[i:j]
-            i = j
-    return bytes(out)
 
 
 def _lzw_decode(data: bytes, expect: int) -> bytes:
@@ -274,11 +228,11 @@ def decode_tiff(b: bytes):
     if planar not in (1, 2):
         raise ValueError(f"TIFF PlanarConfiguration {planar} invalid")
     tiled = 322 in tags or 324 in tags
-    if comp not in (1, 5, 32773, 7):
+    if comp not in (1, 5, 7):
         raise NotImplementedError(
-            f"STUB: TIFF compression {comp} (CCITT and the broken "
-            "old-style JPEG-in-TIFF tag 6 stay stubs); none/LZW/"
-            "PackBits/new-style-JPEG decode natively"
+            f"STUB: TIFF compression {comp} (PackBits, CCITT and the "
+            "broken old-style JPEG-in-TIFF tag 6 stay stubs); none/LZW/"
+            "new-style-JPEG decode natively"
         )
     if predictor == 3:
         raise NotImplementedError(
@@ -431,8 +385,6 @@ def decode_tiff(b: bytes):
             if len(seg) < expect:
                 raise ValueError("TIFF segment shorter than expected")
             return seg[:expect]
-        if comp == 32773:
-            return _packbits_decode(seg, expect)
         return _lzw_decode(seg, expect)
 
     def unpack_rows(raw, nrows, width_px, seg_row_bytes):
@@ -650,7 +602,7 @@ def encode_tiff(
     tile: tuple | None = None,
 ) -> bytes:
     """Deterministic TIFF fixture encoder: (h, w, 3) uint8 RGB (or
-    uint16 for 16-bit), chunky, multi-strip, Compression 1/5/32773/7
+    uint16 for 16-bit), chunky, multi-strip, Compression 1/5/7
     (new-style JPEG strips — SOF3 lossless, so decode stays exact;
     ``jpeg_tables=True`` splits the DHT segments into the shared tag
     347, single-strip), optional horizontal-differencing predictor,
@@ -724,11 +676,9 @@ def encode_tiff(
         def comp_seg(raw):
             if compression == 1:
                 return raw
-            if compression == 32773:
-                return _packbits_encode(raw)
             if compression == 5:
                 return _lzw_encode(raw)
-            raise ValueError("fixture encodes compression 1/5/32773/7")
+            raise ValueError("fixture encodes compression 1/5/7")
 
         px3 = a if photometric in (2, 5) else a[..., :1]  # (h, w, spp)
         if tile is not None:

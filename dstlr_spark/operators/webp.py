@@ -1,30 +1,26 @@
 """WebP-lossless (VP8L) decode/encode — pure Python/NumPy, zero deps.
 
-VP8L (RFC 9649 §4) is the last widely-deployed LOSSLESS image format
-missing from the dispatch: an LSB-first bitstream of canonical prefix
-codes (DEFLATE-style, derived from code lengths — formula-derived,
-not arbitrary assignments, so it satisfies the same
-cross-validation bar as the canonical JPEG/FLAC code builders here),
-LZ77 backward references over the flat ARGB pixel array, an optional
-color cache, and four reversible transforms (predictor / color /
-subtract-green / color-indexing with pixel bundling). Every step is
-integer-exact, so the decoder joins the format-BLIND planted-pixel
-oracle corpus (:func:`dstlr_spark.operators.multimodal.
-decode_rgb_bytes` dispatches on ``RIFF…WEBPVP8L``).
+VP8L (RFC 9649 §4): an LSB-first bitstream of canonical prefix codes
+(DEFLATE-style, derived from code lengths — formula-derived, not
+arbitrary assignments, so it satisfies the same cross-validation bar
+as the canonical JPEG/FLAC code builders here) over the flat ARGB
+pixel array, an optional color cache and the subtract-green
+transform. Every step is integer-exact, so the decoder joins the
+format-BLIND planted-pixel oracle corpus
+(:func:`dstlr_spark.operators.multimodal.decode_rgb_bytes` dispatches
+on ``RIFF…WEBPVP8L``).
 
 Decoder surface (:func:`decode_webp`): simple and normal prefix
 codes (code-length codes with 16/17/18 repeats and the max-symbol
-cap), meta prefix codes (entropy image), color cache (1-11 bits),
-all length/distance codes incl. the 120-entry 2-D distance map, all
-14 predictor modes with the flat-array edge rules, the color
-transform (signed ``>> 5`` cross-channel deltas), subtract-green,
-and color-indexing with 1/2/4/8-per-byte pixel bundling. Lossy VP8
-frames and the extended VP8X container raise NotImplementedError.
+cap), meta prefix codes (entropy image), color cache (1-11 bits) and
+subtract-green. LZ77 backward references, the predictor / color /
+color-indexing transforms, lossy VP8 frames and the extended VP8X
+container raise NotImplementedError.
 
 Encoder (:func:`encode_webp`) is the deterministic FIXTURE side:
-real histogram→Huffman code-length headers, distance-1 run LZ77,
-optional subtract-green / palette transforms and color cache, so
-round-trips exercise the decode paths the gate corpus rides.
+real histogram→Huffman code-length headers, literals and color-cache
+hits, optional subtract-green, so round-trips exercise the decode
+paths the gate corpus rides.
 
 Contract: malformed input raises ValueError; real-but-unimplemented
 features NotImplementedError; never struct.error/IndexError.
@@ -38,28 +34,9 @@ from __future__ import annotations
 
 import struct
 
-# RFC 9649 §4.2.2: code-length-code read order, and the 120-entry
-# (dx, dy) distance map for 2-D-local backward references.
+# RFC 9649 §4.2.2: code-length-code read order.
 _CLC_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12,
               13, 14, 15)
-
-_DIST_MAP = (
-    (0, 1), (1, 0), (1, 1), (-1, 1), (0, 2), (2, 0), (1, 2), (-1, 2),
-    (2, 1), (-2, 1), (2, 2), (-2, 2), (0, 3), (3, 0), (1, 3), (-1, 3),
-    (3, 1), (-3, 1), (2, 3), (-2, 3), (3, 2), (-3, 2), (0, 4), (4, 0),
-    (1, 4), (-1, 4), (4, 1), (-4, 1), (3, 3), (-3, 3), (2, 4), (-2, 4),
-    (4, 2), (-4, 2), (0, 5), (3, 4), (-3, 4), (4, 3), (-4, 3), (5, 0),
-    (1, 5), (-1, 5), (5, 1), (-5, 1), (2, 5), (-2, 5), (5, 2), (-5, 2),
-    (4, 4), (-4, 4), (3, 5), (-3, 5), (5, 3), (-5, 3), (0, 6), (6, 0),
-    (1, 6), (-1, 6), (6, 1), (-6, 1), (2, 6), (-2, 6), (6, 2), (-6, 2),
-    (4, 5), (-4, 5), (5, 4), (-5, 4), (3, 6), (-3, 6), (6, 3), (-6, 3),
-    (0, 7), (7, 0), (1, 7), (-1, 7), (5, 5), (-5, 5), (7, 1), (-7, 1),
-    (4, 6), (-4, 6), (6, 4), (-6, 4), (2, 7), (-2, 7), (7, 2), (-7, 2),
-    (3, 7), (-3, 7), (7, 3), (-7, 3), (5, 6), (-5, 6), (6, 5), (-6, 5),
-    (8, 0), (4, 7), (-4, 7), (7, 4), (-7, 4), (8, 1), (8, 2), (6, 6),
-    (-6, 6), (8, 3), (5, 7), (-5, 7), (7, 5), (-7, 5), (8, 4), (6, 7),
-    (-6, 7), (7, 6), (-7, 6), (8, 5), (7, 7), (-7, 7), (8, 6), (8, 7),
-)
 
 
 class _BitReader:
@@ -205,15 +182,6 @@ def _read_prefix_code(br: _BitReader, alphabet: int) -> _PrefixCode:
     return _PrefixCode(lengths)
 
 
-def _lz77_value(code: int, br: _BitReader) -> int:
-    """Length/distance prefix symbol → value (RFC 9649 §4.2.2)."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + br.read(extra) + 1
-
-
 def _read_groups(br: _BitReader, n_groups: int, cache_size: int):
     groups = []
     for _ in range(n_groups):
@@ -285,23 +253,8 @@ def _decode_image(br: _BitReader, w: int, h: int, allow_meta: bool):
             out[i] = argb
             cache_insert(argb)
             i += 1
-        elif g < 280:  # backward reference
-            length = _lz77_value(g - 256, br)
-            dist_code = _lz77_value(gcodes[4].read(br), br)
-            if dist_code > 120:
-                dist = dist_code - 120
-            else:
-                dx, dy = _DIST_MAP[dist_code - 1]
-                dist = dx + dy * w
-                if dist < 1:
-                    dist = 1
-            if dist > i or i + length > n_px:
-                raise ValueError("VP8L backward reference out of range")
-            for _ in range(length):
-                argb = out[i - dist]
-                out[i] = argb
-                cache_insert(argb)
-                i += 1
+        elif g < 280:
+            raise NotImplementedError("STUB: VP8L LZ77 backward references")
         else:  # color-cache hit
             idx = g - 280
             if idx >= cache_size:
@@ -311,135 +264,6 @@ def _decode_image(br: _BitReader, w: int, h: int, allow_meta: bool):
     return out
 
 
-def _avg2(a, b):
-    return (((a ^ b) & 0xFEFEFEFE) >> 1) + (a & b)
-
-
-def _select(l, t, tl):  # noqa: E741
-    p_alpha = ((l >> 24) & 0xFF) + ((t >> 24) & 0xFF) - ((tl >> 24) & 0xFF)
-    p_red = ((l >> 16) & 0xFF) + ((t >> 16) & 0xFF) - ((tl >> 16) & 0xFF)
-    p_green = ((l >> 8) & 0xFF) + ((t >> 8) & 0xFF) - ((tl >> 8) & 0xFF)
-    p_blue = (l & 0xFF) + (t & 0xFF) - (tl & 0xFF)
-    pl = (
-        abs(p_alpha - ((l >> 24) & 0xFF)) + abs(p_red - ((l >> 16) & 0xFF))
-        + abs(p_green - ((l >> 8) & 0xFF)) + abs(p_blue - (l & 0xFF))
-    )
-    pt = (
-        abs(p_alpha - ((t >> 24) & 0xFF)) + abs(p_red - ((t >> 16) & 0xFF))
-        + abs(p_green - ((t >> 8) & 0xFF)) + abs(p_blue - (t & 0xFF))
-    )
-    return l if pl < pt else t
-
-
-def _clamp(v):
-    return 0 if v < 0 else (255 if v > 255 else v)
-
-
-def _cas_full(l, t, tl):  # noqa: E741
-    out = 0
-    for sh in (24, 16, 8, 0):
-        v = ((l >> sh) & 0xFF) + ((t >> sh) & 0xFF) - ((tl >> sh) & 0xFF)
-        out |= _clamp(v) << sh
-    return out
-
-
-def _cas_half(avg, tl):
-    out = 0
-    for sh in (24, 16, 8, 0):
-        a = (avg >> sh) & 0xFF
-        b = (tl >> sh) & 0xFF
-        d = a - b
-        # C integer division truncates toward zero; Python // floors —
-        # they differ on negative odd deltas
-        half = d // 2 if d >= 0 else -((-d) // 2)
-        out |= _clamp(a + half) << sh
-    return out
-
-
-def _add_px(p, q):
-    """Per-channel mod-256 add of two packed ARGB values."""
-    out = 0
-    for sh in (24, 16, 8, 0):
-        out |= ((((p >> sh) & 0xFF) + ((q >> sh) & 0xFF)) & 0xFF) << sh
-    return out
-
-
-def _apply_predictor(px, w, h, pred_img, bits):
-    pw = (w + (1 << bits) - 1) >> bits
-    for i in range(w * h):
-        x, y = i % w, i // w
-        if i == 0:
-            pred = 0xFF000000
-        elif y == 0:
-            pred = px[i - 1]
-        elif x == 0:
-            pred = px[i - w]
-        else:
-            mode = (pred_img[(y >> bits) * pw + (x >> bits)] >> 8) & 0xFF
-            l = px[i - 1]  # noqa: E741
-            t = px[i - w]
-            tl = px[i - w - 1]
-            tr = px[i - w + 1]  # flat-array rule: x=w-1 wraps to row start
-            if mode == 0:
-                pred = 0xFF000000
-            elif mode == 1:
-                pred = l
-            elif mode == 2:
-                pred = t
-            elif mode == 3:
-                pred = tr
-            elif mode == 4:
-                pred = tl
-            elif mode == 5:
-                pred = _avg2(_avg2(l, tr), t)
-            elif mode == 6:
-                pred = _avg2(l, tl)
-            elif mode == 7:
-                pred = _avg2(l, t)
-            elif mode == 8:
-                pred = _avg2(tl, t)
-            elif mode == 9:
-                pred = _avg2(t, tr)
-            elif mode == 10:
-                pred = _avg2(_avg2(l, tl), _avg2(t, tr))
-            elif mode == 11:
-                pred = _select(l, t, tl)
-            elif mode == 12:
-                pred = _cas_full(l, t, tl)
-            elif mode == 13:
-                pred = _cas_half(_avg2(l, t), tl)
-            else:
-                raise ValueError(f"VP8L predictor mode {mode} invalid")
-        px[i] = _add_px(px[i], pred)
-    return px
-
-
-def _ct_delta(t, c):
-    """ColorTransformDelta: signed int8 multiply, arithmetic >> 5."""
-    t = t - 256 if t > 127 else t
-    c = c - 256 if c > 127 else c
-    return (t * c) >> 5
-
-
-def _apply_color_transform(px, w, h, ct_img, bits):
-    pw = (w + (1 << bits) - 1) >> bits
-    for i in range(w * h):
-        x, y = i % w, i // w
-        cte = ct_img[(y >> bits) * pw + (x >> bits)]
-        g2r = (cte) & 0xFF           # blue channel of the element
-        g2b = (cte >> 8) & 0xFF      # green channel
-        r2b = (cte >> 16) & 0xFF     # red channel
-        v = px[i]
-        a = (v >> 24) & 0xFF
-        r = (v >> 16) & 0xFF
-        g = (v >> 8) & 0xFF
-        b = v & 0xFF
-        r = (r + _ct_delta(g2r, g)) & 0xFF
-        b = (b + _ct_delta(g2b, g) + _ct_delta(r2b, r)) & 0xFF
-        px[i] = (a << 24) | (r << 16) | (g << 8) | b
-    return px
-
-
 def _apply_subtract_green(px):
     for i, v in enumerate(px):
         g = (v >> 8) & 0xFF
@@ -447,25 +271,6 @@ def _apply_subtract_green(px):
         b = ((v & 0xFF) + g) & 0xFF
         px[i] = (v & 0xFF00FF00) | (r << 16) | b
     return px
-
-
-def _apply_color_indexing(px, w, h, palette, packed_w, xbits):
-    out = [0] * (w * h)
-    n = len(palette)
-    for i in range(w * h):
-        x, y = i % w, i // w
-        packed = px[y * packed_w + (x >> xbits)]
-        idx = ((packed >> 8) & 0xFF)
-        if xbits:
-            per = 8 >> xbits  # bits per pixel within the green byte
-            shift = (x & ((1 << xbits) - 1)) * per
-            idx = (idx >> shift) & ((1 << per) - 1)
-        if idx >= n:
-            # spec: out-of-palette indices decode as black-ish zero;
-            # libwebp clamps — we reject, the stricter contract
-            raise ValueError("VP8L palette index out of range")
-        out[i] = palette[idx]
-    return out
 
 
 def decode_webp(b: bytes):
@@ -503,61 +308,23 @@ def decode_webp(b: bytes):
     if w * h > 1 << 26:
         raise ValueError(f"VP8L dims {w}x{h} out of range")
 
-    transforms = []
     seen = set()
-    cur_w = w
-    xbits = 0
-    palette = None
+    sub_green = False
     while br.read_bit():
         ttype = br.read(2)
         if ttype in seen:
             raise ValueError("VP8L transform repeated")
         seen.add(ttype)
-        if ttype == 0:  # predictor
-            bits = 2 + br.read(3)
-            pw = (cur_w + (1 << bits) - 1) >> bits
-            ph = (h + (1 << bits) - 1) >> bits
-            transforms.append(("pred", bits, _decode_image(br, pw, ph, False)))
-        elif ttype == 1:  # color transform
-            bits = 2 + br.read(3)
-            pw = (cur_w + (1 << bits) - 1) >> bits
-            ph = (h + (1 << bits) - 1) >> bits
-            transforms.append(("color", bits, _decode_image(br, pw, ph, False)))
-        elif ttype == 2:
-            transforms.append(("sub_green",))
-        else:  # color indexing
-            n_colors = br.read(8) + 1
-            raw = _decode_image(br, n_colors, 1, False)
-            palette = []
-            prev = 0
-            for v in raw:
-                prev = _add_px(prev, v)
-                palette.append(prev)
-            if n_colors <= 2:
-                xbits = 3
-            elif n_colors <= 4:
-                xbits = 2
-            elif n_colors <= 16:
-                xbits = 1
-            else:
-                xbits = 0
-            packed_w = (cur_w + (1 << xbits) - 1) >> xbits
-            transforms.append(("index", palette, cur_w, packed_w, xbits))
-            cur_w = packed_w
+        if ttype != 2:
+            raise NotImplementedError(
+                f"STUB: VP8L {('predictor', 'color', '', 'color-indexing')[ttype]}"
+                " transform; only subtract-green decodes"
+            )
+        sub_green = True
 
-    px = _decode_image(br, cur_w, h, True)
-
-    for t in reversed(transforms):
-        if t[0] == "index":
-            _, palette, full_w, packed_w, xbits = t
-            px = _apply_color_indexing(px, full_w, h, palette, packed_w, xbits)
-            cur_w = full_w
-        elif t[0] == "sub_green":
-            px = _apply_subtract_green(px)
-        elif t[0] == "color":
-            px = _apply_color_transform(px, cur_w, h, t[2], t[1])
-        else:
-            px = _apply_predictor(px, cur_w, h, t[2], t[1])
+    px = _decode_image(br, w, h, True)
+    if sub_green:
+        px = _apply_subtract_green(px)
 
     arr = np.asarray(px, np.uint32).reshape(h, w)
     rgb = np.stack(
@@ -698,93 +465,10 @@ def _write_prefix_code(bw: _BitWriter, lengths):
         bw.write_code(code, cl)
 
 
-def _len_to_prefix(v: int):
-    """Length/distance value → (prefix code, extra bits, extra val) —
-    the exact inverse of :func:`_lz77_value`: for v ≥ 5, with
-    u = v − 1, extra = bitlen(u) − 2 and code = 2·extra + (u >> extra)
-    (u >> extra ∈ {2, 3} carries the parity bit)."""
-    if v <= 4:
-        return v - 1, 0, 0
-    u = v - 1
-    extra = u.bit_length() - 2
-    code = 2 * extra + (u >> extra)
-    return code, extra, u & ((1 << extra) - 1)
-
-
-def _sub_px(p, q):
-    """Per-channel mod-256 subtract of two packed ARGB values."""
-    out = 0
-    for sh in (24, 16, 8, 0):
-        out |= ((((p >> sh) & 0xFF) - ((q >> sh) & 0xFF)) & 0xFF) << sh
-    return out
-
-
-def _forward_predictor(px, w, h, modes, bits):
-    """Forward predictor transform (fixture side): residual[i] =
-    pixel[i] − predict(original neighbors) mod 256 — the exact inverse
-    of :func:`_apply_predictor` (which reconstructs originals
-    progressively, so predictions here come from the ORIGINAL image)."""
-    pw = (w + (1 << bits) - 1) >> bits
-    out = [0] * (w * h)
-    for i in range(w * h):
-        x, y = i % w, i // w
-        if i == 0:
-            pred = 0xFF000000
-        elif y == 0:
-            pred = px[i - 1]
-        elif x == 0:
-            pred = px[i - w]
-        else:
-            mode = (modes[(y >> bits) * pw + (x >> bits)] >> 8) & 0xFF
-            l = px[i - 1]  # noqa: E741
-            t = px[i - w]
-            tl = px[i - w - 1]
-            tr = px[i - w + 1]
-            pred = {
-                0: 0xFF000000, 1: l, 2: t, 3: tr, 4: tl,
-                5: _avg2(_avg2(l, tr), t), 6: _avg2(l, tl),
-                7: _avg2(l, t), 8: _avg2(tl, t), 9: _avg2(t, tr),
-                10: _avg2(_avg2(l, tl), _avg2(t, tr)),
-                11: _select(l, t, tl), 12: _cas_full(l, t, tl),
-                13: _cas_half(_avg2(l, t), tl),
-            }[mode]
-        out[i] = _sub_px(px[i], pred)
-    return out
-
-
-def _forward_color(px, w, h, ctes, bits):
-    """Forward color transform (fixture side): the exact inverse of
-    :func:`_apply_color_transform` (the red_to_blue term uses the
-    ORIGINAL red, which is what the decoder reconstructs first)."""
-    pw = (w + (1 << bits) - 1) >> bits
-    out = [0] * (w * h)
-    for i in range(w * h):
-        x, y = i % w, i // w
-        cte = ctes[(y >> bits) * pw + (x >> bits)]
-        g2r = cte & 0xFF
-        g2b = (cte >> 8) & 0xFF
-        r2b = (cte >> 16) & 0xFF
-        v = px[i]
-        a = (v >> 24) & 0xFF
-        r = (v >> 16) & 0xFF
-        g = (v >> 8) & 0xFF
-        b = v & 0xFF
-        r_res = (r - _ct_delta(g2r, g)) & 0xFF
-        b_res = (b - _ct_delta(g2b, g) - _ct_delta(r2b, r)) & 0xFF
-        out[i] = (a << 24) | (r_res << 16) | (g << 8) | b_res
-    return out
-
-
-def encode_webp(rgb, subtract_green: bool = False, palette: bool = False,
-                cache_bits: int = 0, use_runs: bool = True,
-                predictor=None, color_transform=None) -> bytes:
+def encode_webp(rgb, subtract_green: bool = False, cache_bits: int = 0) -> bytes:
     """FIXTURE-side VP8L encoder: histogram Huffman codes, optional
-    subtract-green / color-indexing / predictor / color transforms,
-    optional color cache, and distance-1 run LZ77 (plain distance
-    codes). ``predictor`` / ``color_transform`` are (size_bits,
-    [sub-image values]) pairs — mode in the green channel for the
-    predictor, (r2b, g2b, g2r) in the red/green/blue channels for the
-    color transform."""
+    subtract-green transform and color cache; literals and cache hits
+    only (no LZ77)."""
     import numpy as np
 
     arr = np.asarray(rgb, np.uint8)
@@ -801,66 +485,7 @@ def encode_webp(rgb, subtract_green: bool = False, palette: bool = False,
     bw.write(h - 1, 14)
     bw.write(0, 1)  # no alpha
     bw.write(0, 3)  # version
-
-    if predictor is not None:
-        bits, modes = predictor
-        px = _forward_predictor(argb.tolist(), w, h, modes, bits)
-        bw.write(1, 1)
-        bw.write(0, 2)  # predictor transform
-        bw.write(bits - 2, 3)
-        _encode_image(bw, modes, 0, False, top_level=False)
-        bw.write(0, 1)  # no more transforms
-        _encode_image(bw, px, cache_bits, use_runs)
-        return _wrap_riff(bw)
-    if color_transform is not None:
-        bits, ctes = color_transform
-        px = _forward_color(argb.tolist(), w, h, ctes, bits)
-        bw.write(1, 1)
-        bw.write(1, 2)  # color transform
-        bw.write(bits - 2, 3)
-        _encode_image(bw, ctes, 0, False, top_level=False)
-        bw.write(0, 1)
-        _encode_image(bw, px, cache_bits, use_runs)
-        return _wrap_riff(bw)
-
-    if palette:
-        colors = []
-        index_of = {}
-        for v in argb.tolist():
-            if v not in index_of:
-                index_of[v] = len(colors)
-                colors.append(v)
-        if len(colors) > 256:
-            raise ValueError("palette fixture needs ≤256 colors")
-        n = len(colors)
-        bw.write(1, 1)
-        bw.write(3, 2)  # color-indexing transform
-        bw.write(n - 1, 8)
-        deltas = []
-        prev = 0
-        for c in colors:
-            deltas.append(_sub_px(c, prev))
-            prev = c
-        _encode_image(bw, deltas, 0, False, top_level=False)
-        if n <= 2:
-            xbits = 3
-        elif n <= 4:
-            xbits = 2
-        elif n <= 16:
-            xbits = 1
-        else:
-            xbits = 0
-        packed_w = (w + (1 << xbits) - 1) >> xbits
-        idx = np.asarray([index_of[v] for v in argb.tolist()], np.uint32)
-        idx = idx.reshape(h, w)
-        packed = np.zeros((h, packed_w), np.uint32)
-        per = 8 >> xbits if xbits else 8
-        for x in range(w):
-            shift = (x & ((1 << xbits) - 1)) * per if xbits else 0
-            packed[:, x >> xbits] |= idx[:, x] << shift
-        argb = ((0xFF << 24) | (packed << 8)).reshape(-1)
-        w = packed_w
-    elif subtract_green:
+    if subtract_green:
         bw.write(1, 1)
         bw.write(2, 2)
         g = (argb >> 8) & 0xFF
@@ -869,7 +494,7 @@ def encode_webp(rgb, subtract_green: bool = False, palette: bool = False,
         argb = (argb & np.uint32(0xFF00FF00)) | (r << np.uint32(16)) | b
     bw.write(0, 1)  # no more transforms
 
-    _encode_image(bw, argb.tolist(), cache_bits, use_runs)
+    _encode_image(bw, argb.tolist(), cache_bits)
     return _wrap_riff(bw)
 
 
@@ -881,12 +506,11 @@ def _wrap_riff(bw: _BitWriter) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
 
 
-def _encode_image(bw: _BitWriter, px, cache_bits: int, use_runs: bool,
-                  top_level: bool = True):
-    """Serialize a flat ARGB list as one spatially-coded image (single
-    prefix-code group, optional cache, distance-1 runs)."""
-    # RFC 9649 §4.3 order: color-cache-info first, then (top level
-    # only) the meta-prefix bit
+def _encode_image(bw: _BitWriter, px, cache_bits: int):
+    """Serialize a flat ARGB list as the top-level spatially-coded
+    image (single prefix-code group, optional cache)."""
+    # RFC 9649 §4.3 order: color-cache-info first, then the
+    # meta-prefix bit
     if cache_bits:
         bw.write(1, 1)
         bw.write(cache_bits, 4)
@@ -894,57 +518,33 @@ def _encode_image(bw: _BitWriter, px, cache_bits: int, use_runs: bool,
     else:
         bw.write(0, 1)
         cache_size = 0
-    if top_level:
-        bw.write(0, 1)  # no meta prefix codes
+    bw.write(0, 1)  # no meta prefix codes
     cache = [None] * cache_size
 
-    # tokenize: (kind, payload) with kinds lit / run / cache
+    # tokenize: (kind, payload) with kinds lit / cache
     tokens = []
-    i, n = 0, len(px)
-    while i < n:
-        if use_runs and i and px[i] == px[i - 1]:
-            j = i
-            while j < n and px[j] == px[i - 1]:
-                j += 1
-            tokens.append(("run", j - i))
-            for k in range(i, j):
-                if cache_size:
-                    key = ((0x1E35A7BD * px[k]) & 0xFFFFFFFF) >> (
-                        32 - cache_bits
-                    )
-                    cache[key] = px[k]
-            i = j
-            continue
-        v = px[i]
+    for v in px:
         if cache_size:
             key = ((0x1E35A7BD * v) & 0xFFFFFFFF) >> (32 - cache_bits)
             if cache[key] == v:
                 tokens.append(("cache", key))
-                i += 1
                 continue
             cache[key] = v
         tokens.append(("lit", v))
-        i += 1
 
     gfreq = [0] * (256 + 24 + cache_size)
     rfreq = [0] * 256
     bfreq = [0] * 256
     afreq = [0] * 256
-    dfreq = [0] * 40
     for kind, val in tokens:
         if kind == "lit":
             gfreq[(val >> 8) & 0xFF] += 1
             rfreq[(val >> 16) & 0xFF] += 1
             bfreq[val & 0xFF] += 1
             afreq[(val >> 24) & 0xFF] += 1
-        elif kind == "cache":
-            gfreq[280 + val] += 1
         else:
-            code, _, _ = _len_to_prefix(min(val, 4096))
-            gfreq[256 + code] += 1
-            dcode, _, _ = _len_to_prefix(1 + 120)  # plain distance 1
-            dfreq[dcode] += 1
-    for f in (rfreq, bfreq, afreq, dfreq):
+            gfreq[280 + val] += 1
+    for f in (rfreq, bfreq, afreq):
         if not any(f):
             f[0] = 1  # unused channel still needs a valid code
     if not any(gfreq):
@@ -954,14 +554,13 @@ def _encode_image(bw: _BitWriter, px, cache_bits: int, use_runs: bool,
     rlen = _huffman_lengths(rfreq)
     blen = _huffman_lengths(bfreq)
     alen = _huffman_lengths(afreq)
-    dlen = _huffman_lengths(dfreq)
+    dlen = _huffman_lengths([1] + [0] * 39)  # no distances are coded
     for lengths in (glen, rlen, blen, alen, dlen):
         _write_prefix_code(bw, lengths)
     gc = _canon_from_lengths(glen)
     rc = _canon_from_lengths(rlen)
     bc = _canon_from_lengths(blen)
     ac = _canon_from_lengths(alen)
-    dc = _canon_from_lengths(dlen)
 
     def emit(codes, sym):
         if len(codes) == 1:
@@ -975,16 +574,5 @@ def _encode_image(bw: _BitWriter, px, cache_bits: int, use_runs: bool,
             emit(rc, (val >> 16) & 0xFF)
             emit(bc, val & 0xFF)
             emit(ac, (val >> 24) & 0xFF)
-        elif kind == "cache":
-            emit(gc, 280 + val)
         else:
-            rem = val
-            while rem:
-                chunk = min(rem, 4096)
-                code, extra, ev = _len_to_prefix(chunk)
-                emit(gc, 256 + code)
-                bw.write(ev, extra)
-                dcode, dextra, dev = _len_to_prefix(121)
-                emit(dc, dcode)
-                bw.write(dev, dextra)
-                rem -= chunk
+            emit(gc, 280 + val)

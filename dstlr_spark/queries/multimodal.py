@@ -131,8 +131,10 @@ def q_phash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     phash_np`) without touching a byte — format-blind, so all twenty-two
     codec paths (lossless/lossless-arithmetic/hierarchical JPEG,
     RLE8/bitfields BMP, embedded BI_JPEG/BI_PNG BMP, LZW/MM TIFF,
-    JPEG-in-TIFF, TGA, PCX, QOI, VP8L, and ICO included — exact decodes) must land the
-    identical 16-bit key.
+    JPEG-in-TIFF, TGA, PCX, QOI, VP8L, and ICO included — exact
+    decodes) must land the identical 16-bit key. A payload in a mode
+    the decoders stub (DCT JPEG, animated GIF, …) would hash to a null
+    key and drop out of the groups, never join a wrong one.
 
     Scale shape: map-only decode+hash (only (doc_id, key) leaves the
     stage) then ONE hash aggregate on the key — the `dedup_exact`
@@ -218,8 +220,8 @@ def q_frame_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL pixel decode + resize under the value gate (retires the
-    round-4 stub finding): synth the planted position/channel-dependent
+    """REAL pixel decode + resize under the value gate: synth the
+    planted position/channel-dependent
     image per document as a TWENTY-TWO-VARIANT corpus keyed on
     (n_chars DIV 7) MOD 22 (DIV 7 first so the codec choice is
     independent of the MOD-7-derived dims — see synth_media_mixed) —
@@ -245,8 +247,8 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     RLE bottom-up truecolor TGA (footer-dispatched, exact); 24-bit
     3-plane PCX (scanline RLE, exact); and QOI (all six ops of the
     running-index/diff/luma/run stream, exact); and WebP-lossless
-    (VP8L: canonical prefix codes + LZ77 runs under the
-    subtract-green transform and a 4-bit color cache, exact); and ICO
+    (VP8L: canonical prefix codes under the subtract-green transform
+    and a 4-bit color cache, exact); and ICO
     (a doubled-height DIB entry behind a 1×1 decoy — largest-entry
     selection + headerless-DIB rebuild delegated to the BMP decoder,
     exact) — decode
@@ -260,7 +262,10 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical planted array for the hash to match — independent
     derivations of the BMP, PNG (sequential + Adam7, truecolor +
     paletted), GIF (sequential + interlaced), and lossless-JPEG
-    (T.81 Annex H) specs in one gate.
+    (T.81 Annex H) specs in one gate. The decoders implement exactly
+    these modes; every other one (DCT JPEG, sub-byte PNG, PackBits
+    TIFF, VP8L LZ77 and transforms, …) raises the STUB contract, which
+    decode_image_np turns into a null-dimension row.
 
     Scale shape: two map-only Arrow-batched decode passes + one
     doc-keyed equi-join — no corpus shuffle beyond the join; payloads
@@ -308,8 +313,8 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives EVERY feature from range() arithmetic without touching
     a byte — two independent derivations of the PCM WAV spec.
 
-    Scale shape: one map-only Arrow-batched decode+reduce pass (the
-    decode_features_np shape — samples never leave the stage)."""
+    Scale shape: one map-only Arrow-batched decode+reduce pass
+    (samples never leave the stage)."""
     from dstlr_spark.operators.multimodal import (
         audio_features_np,
         synth_media_wav,

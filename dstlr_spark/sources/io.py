@@ -91,8 +91,3 @@ def write_text_sink(df: DataFrame, location: str, mode: str = "overwrite") -> No
     CleanTriples.scala:65; JSON lines are its structured analog and stay
     a parallel write: one file per partition, no coalesce(1))."""
     df.write.mode(mode).json(location)
-
-
-def read_text_sink(spark: SparkSession, location: str) -> DataFrame:
-    """Read a :func:`write_text_sink` output back (schema inferred)."""
-    return spark.read.json(location)

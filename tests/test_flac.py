@@ -53,8 +53,8 @@ def test_roundtrip_stereo_decorrelation_modes():
 
 
 def test_roundtrip_partitions_escape_wasted_bits():
-    """Rice partition orders, the raw-bits escape partitions, and
-    wasted-bits shifted subframes all decode exactly."""
+    """Rice partition orders and the raw-bits escape partitions decode
+    exactly; wasted-bits subframes raise the STUB contract."""
     s = _planted(512)
     for po in (0, 1, 2, 4):
         b = encode_flac(s, 8000, subframe="fixed2", blocksize=256,
@@ -62,13 +62,16 @@ def test_roundtrip_partitions_escape_wasted_bits():
         assert (decode_flac(b)[0] == s).all(), po
     b = encode_flac(s, 8000, subframe="fixed1", blocksize=256, escape=True)
     assert (decode_flac(b)[0] == s).all()
-    w = s[:256] & ~7
-    b = encode_flac(w, 8000, subframe="fixed2", wasted_bits=3)
-    assert (decode_flac(b)[0] == w).all()
-    # wasted bits on verbatim and lpc too
-    for sub in ("verbatim", "lpc"):
-        b = encode_flac(w, 8000, subframe=sub, wasted_bits=3)
-        assert (decode_flac(b)[0] == w).all(), sub
+    # a wasted-bits flag in any subframe header raises the STUB
+    # contract: set it in the first subframe (byte-aligned right after
+    # the frame header's CRC-8; the frame follows fLaC + STREAMINFO)
+    for sub in ("fixed2", "verbatim", "lpc"):
+        b = bytearray(encode_flac(s[:256], 8000, subframe=sub))
+        k = next(k for k in range(4, 16) if _crc8(bytes(b[42 : 42 + k])) == b[42 + k])
+        assert b[42 + k + 1] & 1 == 0
+        b[42 + k + 1] |= 1
+        with pytest.raises(NotImplementedError, match="STUB"):
+            decode_flac(bytes(b))
 
 
 def test_bit_depths_and_rates():
