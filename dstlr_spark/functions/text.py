@@ -110,22 +110,6 @@ def lemma_key(col: Column | str) -> Column:
     return F.array_join(nonempty, " ")
 
 
-def stable_mention_id(doc: Column | str, key: Column | str) -> Column:
-    """Deterministic per-document mention id (SURVEY.md X5/C11).
-
-    The reference assigns ``UUID.randomUUID()`` per new lemma key within a
-    document (ExtractTriples.scala:73,102) — nondeterministic and
-    non-resumable. We use a content-addressed surrogate
-    ``md5(doc ‖ 0x1f ‖ lemma_key)``: same identity semantics (one id per
-    distinct key per doc), reproducible across retries and resume. md5 is
-    chosen over sha1 because the DuckDB correctness oracle must reproduce
-    ids bit-for-bit and DuckDB ships md5 but not sha1.
-    """
-    d = F.col(doc) if isinstance(doc, str) else doc
-    k = F.col(key) if isinstance(key, str) else key
-    return F.md5(F.concat_ws("\x1f", d, k))
-
-
 def reformat_sparql_date(col: Column | str) -> Column:
     """``yyyy-MM-dd'T'HH:mm:ss'Z'`` → ``yyyy-MM-dd`` (C6,
     EnrichTriples.scala:57-58,67). Non-date values pass through unchanged."""
@@ -176,14 +160,6 @@ def url_escape_entity(col: Column | str) -> Column:
     dictionary is name-keyed, so the engine itself never needs it."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_replace(F.regexp_replace(c, '"', "%22"), "`", "%60")
-
-
-def uri_suffix(col: Column | str) -> Column:
-    """C8 (EnrichTriples.scala:136): extract the id after the last ``/``
-    of a URI (``…/prop/direct/P159`` → ``P159``); a string with no ``/``
-    passes through whole, exactly like ``substring(lastIndexOf('/')+1)``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring_index(c, "/", -1)
 
 
 def strip_html(col: Column | str) -> Column:

@@ -56,96 +56,6 @@ def assemble_documents(transcripts: DataFrame, sep: str = " ") -> DataFrame:
     )
 
 
-def assemble_documents_twophase(
-    transcripts: DataFrame, sep: str = " ", chunk: int = 1024
-) -> DataFrame:
-    """Skew-proof assembly: two bounded, order-preserving phases.
-
-    The single-phase ``assemble_documents`` collects ALL of a
-    conversation's turns into one aggregation buffer — at 10^12-turn
-    scale a pathological 10^6-turn conversation pins one reducer task
-    (the long-conversation skew the north rule calls out). Here:
-
-      phase 1: groupBy (conv_id, turn_idx DIV chunk) — every buffer is
-               ≤ ``chunk`` turns regardless of conversation length;
-      phase 2: groupBy conv_id over the ≤ n/chunk pre-concatenated
-               chunk strings.
-
-    Both phases are hash aggregates with bounded state; ordering is
-    preserved by sorting on (chunk_idx / turn_idx) INSIDE each
-    aggregate, never globally. This is the salting strategy of SURVEY
-    §2.8/P1 realized as a two-level combine instead of a random salt —
-    deterministic, and the salt key (the chunk index) is meaningful.
-    Parity with the single-phase operator is pinned by tests.
-    """
-    filtered = transcripts.where(
-        F.col("conv_id").isNotNull()
-        & (F.col("conv_id") != "")
-        & F.col("text").isNotNull()
-        & (F.col("text") != "")
-    )
-    phase1 = (
-        filtered.groupBy(
-            F.col("conv_id"),
-            (F.col("turn_idx").cast("long") / chunk).cast("long").alias("chunk_idx"),
-        )
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("turn_idx"), F.col("text")))
-                    ),
-                    lambda t: t["text"],
-                ),
-                sep,
-            ).alias("chunk_text")
-        )
-    )
-    return (
-        phase1.groupBy(F.col("conv_id").alias("doc_id"))
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("chunk_idx"), F.col("chunk_text")))
-                    ),
-                    lambda t: t["chunk_text"],
-                ),
-                sep,
-            ).alias("contents")
-        )
-    )
-
-
-def assemble_documents_grouped(transcripts: DataFrame, sep: str = " ") -> DataFrame:
-    """Grouped-map (``applyInPandas``) variant of :func:`assemble_documents`
-    (SURVEY.md §2.11): per-conversation pandas DataFrame in, one document
-    row out. Semantics identical to the native aggregate (pinned by a
-    parity test); this is the slot a custom Python assembly policy
-    (e.g. role-aware templating of turns) plugs into — the native
-    ``array_sort`` + ``array_join`` path stays the default because it is
-    whole-stage-codegen'd and needs no Python workers.
-    """
-    import pandas as pd
-
-    filtered = transcripts.where(
-        F.col("conv_id").isNotNull()
-        & (F.col("conv_id") != "")
-        & F.col("text").isNotNull()
-        & (F.col("text") != "")
-    ).select("conv_id", "turn_idx", "text")
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["turn_idx", "text"], kind="mergesort")
-        return pd.DataFrame(
-            {"doc_id": [pdf["conv_id"].iloc[0]], "contents": [sep.join(pdf["text"])]}
-        )
-
-    return filtered.groupBy("conv_id").applyInPandas(
-        assemble, "doc_id string, contents string"
-    )
-
-
 def salted_repartition(df: DataFrame, n: int, key: str = "doc_id", salt_buckets: int = 8) -> DataFrame:
     """Salted repartition before the CPU-heavy extraction stage.
 
@@ -164,7 +74,7 @@ def salted_repartition(df: DataFrame, n: int, key: str = "doc_id", salt_buckets:
     ledger's resume-equals-one-shot guarantee. Content hashing keeps
     retries byte-identical.
     """
-    # xxhash64 rejects MapType columns (e.g. a TripleRow meta map) — hash
+    # xxhash64 rejects MapType columns — hash
     # only hashable column types; the salt stays content-derived as long
     # as at least one non-map column exists (all realistic inputs do)
     cols = [

@@ -132,7 +132,11 @@ def _gazetteer_hits(contents: str, gaz, key_of) -> list[tuple[int, str, int, int
 
 
 def _stable_id_py(doc: str, key: str) -> str:
-    """Python twin of Spark's ``stable_mention_id``: ``md5(doc ‖ key)``."""
+    """Deterministic per-document mention id (SURVEY.md X5/C11):
+    ``md5(doc ‖ 0x1f ‖ lemma_key)`` replaces the reference's
+    ``UUID.randomUUID()``, so ids survive retries and resume. md5, not
+    sha1, because the DuckDB oracles must reproduce it and DuckDB has no
+    sha1."""
     return hashlib.md5(f"{doc}\x1f{key}".encode()).hexdigest()
 
 
@@ -682,29 +686,4 @@ def extract_triples_pattern(
     )
     return docs.select("doc_id", "contents").mapInPandas(
         _extract_batches_factory(link_best), TRIPLE_SCHEMA
-    )
-
-
-def with_meta_map(triples: DataFrame) -> DataFrame:
-    """Reference-shape compatibility view: typed meta struct →
-    ``map<string,string>`` exactly as the reference stores it
-    (package.scala:11; stringified ints/doubles, SURVEY.md §1.5)."""
-    m = F.col("meta")
-    entries = [
-        ("class", m["entity_class"]),
-        ("span", m["span"]),
-        ("begin", m["begin"].cast("string")),
-        ("end", m["end"].cast("string")),
-        ("normalized", m["normalized"]),
-        ("confidence", m["confidence"].cast("string")),
-    ]
-    pairs = F.array(
-        *[
-            F.when(v.isNotNull(), F.struct(F.lit(k).alias("key"), v.alias("value")))
-            for k, v in entries
-        ]
-    )
-    return triples.withColumn(
-        "meta_map",
-        F.map_from_entries(F.filter(pairs, lambda e: e.isNotNull())),
     )

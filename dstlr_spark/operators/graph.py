@@ -138,27 +138,6 @@ def materialize_graph(triples: DataFrame) -> dict[str, DataFrame]:
     )
 
 
-def register_graph_views(spark, graph: dict[str, DataFrame], prefix: str = "") -> None:
-    """Expose the graph tables as temp views so the Cypher-analog queries
-    can also be written in plain ``spark.sql`` (dual API surface)."""
-    for name, df in graph.items():
-        df.createOrReplaceTempView(f"{prefix}{name}")
-
-
-SUPPORTING_SQL = """
-SELECT r.doc_id, r.subject_mention_id, r.type AS relation,
-       r.object_mention_id, o.span AS object_span,
-       l.entity_id, f.value AS fact_value, r.confidence
-FROM relation_edges r
-JOIN (SELECT DISTINCT doc_id, mention_id FROM mentions_edges) d
-  ON d.doc_id = r.doc_id AND d.mention_id = r.subject_mention_id
-JOIN mention_nodes o ON o.mention_id = r.object_mention_id
-JOIN links_to l ON l.mention_id = r.subject_mention_id
-JOIN fact_edges f ON f.entity_id = l.entity_id AND f.relation = r.type
-WHERE o.span = f.value
-"""
-
-
 def validate_fk(graph: dict[str, DataFrame]) -> dict[str, int]:
     """J4: orphan-edge checks via left anti joins — the rebuild's analog of
     Neo4j MATCH failing silently (LoadTriples.scala:199,210-211,221)."""

@@ -98,23 +98,22 @@ def invalidate_buckets(
     """Drop the ledger rows of ``buckets`` so the next
     :func:`run_with_ledger` re-runs them (data dirs are overwritten by
     the re-run's dynamic partition overwrite — no pre-delete needed).
-    Rewrite-then-swap keeps the ledger readable throughout."""
+
+    Two jobs: the kept rows are collected to the driver (one row per
+    ledgered bucket, so at most ``n_buckets``) and written back with one
+    overwrite. The ledger is not readable while the overwrite runs; a
+    crash inside it leaves no ledger, so the next run redoes every
+    bucket — conservative, never a skipped one."""
     if not buckets:
         return
-    import shutil
-    import tempfile
-
-    kept = read_ledger(spark, ledger_dir).where(
-        ~F.col("bucket").isin(list(buckets))
+    kept = (
+        read_ledger(spark, ledger_dir)
+        .where(~F.col("bucket").isin(list(buckets)))
+        .collect()
     )
-    tmp = tempfile.mkdtemp(prefix="ledger_rewrite_")
-    kept.write.mode("overwrite").parquet(tmp)
-    rewritten = spark.read.schema(LEDGER_SCHEMA).parquet(tmp).collect()
-    shutil.rmtree(ledger_dir, ignore_errors=True)
-    spark.createDataFrame(rewritten, LEDGER_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(ledger_dir)
-    shutil.rmtree(tmp, ignore_errors=True)
+    spark.createDataFrame(kept, LEDGER_SCHEMA).write.mode("overwrite").parquet(
+        ledger_dir
+    )
 
 
 def run_with_ledger(

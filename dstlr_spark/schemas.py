@@ -2,9 +2,7 @@
 
 The universal triple row is a typed upgrade of the reference's
 ``TripleRow`` (package.scala:11): the opaque ``Map[String,String]`` meta
-bag becomes a typed struct so Catalyst can prune/filter it; a
-map-shaped compatibility view is provided by
-:func:`dstlr_spark.operators.extract.with_meta_map`.
+bag becomes a typed struct so Catalyst can prune/filter it.
 """
 
 from __future__ import annotations

@@ -15,8 +15,7 @@ sorted by (ts, event_id) within each micro-batch and the carried state
 assumes batches arrive in event-time order — true for the drained
 file-source gate and for an ingest whose upstream preserves per-key
 order (Kafka per-partition). An out-of-order production feed needs the
-event-time-timer form (transformWithStateInPandas with timers) —
-the same caveat documented on `conversation_progress_tws`.
+event-time-timer form (transformWithStateInPandas with timers).
 """
 
 from __future__ import annotations

@@ -1,19 +1,19 @@
-"""Streaming ingest of transcripts: the continuous-arrival variant.
+"""Streaming operators over transcript turns: the continuous-arrival
+variant.
 
 The reference is batch-only (SURVEY.md §2.9); at 10^12-turn scale new
-transcript turns arrive continuously, so the engine also exposes the
-pipeline's front half as Structured Streaming:
+transcript turns arrive continuously, so the engine also exposes
+incremental operators over a turn stream. Each one is reached through a
+``stream_*`` registry query (``queries/streamgate.py``,
+``queries/doc_kg.py``), which drains it over a file-source stream:
 
-- :func:`stream_transcripts`    — file-source stream with the pinned schema
 - :func:`mention_rate_stream`   — watermarked tumbling-window mention counts
   (the streaming twin of the batch ``events_hourly`` / mention stats)
-- :func:`conversation_sessions_stream` — stateful per-conversation
-  aggregation with ``applyInPandasWithState`` (turn counts + last role,
-  emitted when a conversation goes quiet) — the custom-stateful-operator
-  slot for anything batch ``groupBy`` can't express incrementally.
-- :func:`write_triples_stream`  — ``foreachBatch`` sink running the batch
-  extraction pipeline per micro-batch and appending to the triples table
-  with the epoch id as the idempotency key (exactly-once effective).
+- :func:`turn_triples_stream`   — stateless turn-local co-occurrence triples
+- :func:`dedup_turns_stream`    — watermark-bounded exact dedup of
+  re-delivered turns
+- :func:`sft_pairs_stream`      — ``applyInPandasWithState`` (prompt,
+  response) pairs with one row of state per conversation
 
 Full document assembly needs a conversation-complete signal, so the
 batch path stays the source of truth for final triples; streaming
@@ -22,18 +22,8 @@ covers monitoring and incremental pre-extraction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from dstlr_spark.schemas import TRANSCRIPT_SCHEMA
-
-
-def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
 
 
 def mention_rate_stream(
@@ -135,30 +125,6 @@ def turn_triples_stream(
     )
 
 
-def conversation_sessions_stream(transcripts: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Per-conversation session aggregation via ``session_window``:
-    a conversation 'session' closes after ``gap`` of turn silence —
-    the streaming analog of the batch sessionization query."""
-    return (
-        transcripts.where(F.col("conv_id").isNotNull() & F.col("ts").isNotNull())
-        .withWatermark("ts", gap)
-        .groupBy(F.session_window("ts", gap).alias("win"), "conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.min("turn_idx").alias("first_turn"),
-            F.max("turn_idx").alias("last_turn"),
-        )
-        .select(
-            "conv_id",
-            F.col("win")["start"].alias("session_start"),
-            F.col("win")["end"].alias("session_end"),
-            "n_turns",
-            "first_turn",
-            "last_turn",
-        )
-    )
-
-
 def dedup_turns_stream(transcripts: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming exact dedup: drop re-delivered turns (same conv_id,
     turn_idx, text-hash) within the watermark horizon — the streaming
@@ -253,176 +219,4 @@ def sft_pairs_stream(turns: DataFrame) -> DataFrame:
         .applyInPandasWithState(
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
-    )
-
-
-def conversation_progress_stream(transcripts: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: tracks
-    per-conversation running state (turn count, max turn_idx, char sum)
-    across micro-batches and emits one updated row per conversation per
-    batch — the slot for stateful logic that ``groupBy`` can't express
-    incrementally (e.g. conversation-completeness heuristics deciding
-    when a conversation is ready for extraction).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = "conv_id string, n_turns long, max_turn int, n_chars long"
-    state_schema = "n_turns long, max_turn int, n_chars long"
-
-    def update(key, pdfs, state):
-        n_turns, max_turn, n_chars = (
-            state.get if state.exists else (0, -1, 0)
-        )
-        for pdf in pdfs:
-            n_turns += len(pdf)
-            if len(pdf):
-                max_turn = max(max_turn, int(pdf["turn_idx"].max()))
-                n_chars += int(pdf["text"].str.len().sum())
-        state.update((n_turns, max_turn, n_chars))
-        import pandas as pd
-
-        yield pd.DataFrame(
-            {"conv_id": [key[0]], "n_turns": [n_turns],
-             "max_turn": [max_turn], "n_chars": [n_chars]}
-        )
-
-    return (
-        transcripts.where(F.col("conv_id").isNotNull() & F.col("text").isNotNull())
-        .select("conv_id", "turn_idx", "text")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-def conversation_progress_tws(transcripts: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` twin of
-    :func:`conversation_progress_stream`: identical per-conversation
-    running state, expressed as a ``StatefulProcessor`` with a named
-    ``ValueState`` — the successor API (multiple named states, timers,
-    TTL, initial-state bootstrap) the applyInPandasWithState operator
-    migrates to.
-
-    ENVIRONMENT-GATED: the TWS driver worker needs working
-    ``google.protobuf`` bindings (absent in this container — the
-    operator raises ImportError up front rather than crashing the
-    stream mid-query; the applyInPandasWithState twin above is the
-    portable path and carries the parity test). Requires the RocksDB
-    state-store provider (set
-    ``spark.sql.streaming.stateStore.providerClass``)."""
-    from google.protobuf import descriptor  # noqa: F401 — runtime gate
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Progress(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState(
-                "progress", "n_turns long, max_turn int, n_chars long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n_turns, max_turn, n_chars = self._state.get()
-            else:
-                n_turns, max_turn, n_chars = 0, -1, 0
-            for pdf in rows:
-                n_turns += len(pdf)
-                if len(pdf):
-                    max_turn = max(max_turn, int(pdf["turn_idx"].max()))
-                    n_chars += int(pdf["text"].str.len().sum())
-            self._state.update((n_turns, max_turn, n_chars))
-            yield pd.DataFrame(
-                {"conv_id": [key[0]], "n_turns": [n_turns],
-                 "max_turn": [max_turn], "n_chars": [n_chars]}
-            )
-
-        def close(self) -> None:
-            pass  # required StatefulProcessor override; no resources held
-
-    return (
-        transcripts.where(F.col("conv_id").isNotNull() & F.col("text").isNotNull())
-        .select("conv_id", "turn_idx", "text")
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            statefulProcessor=Progress(),
-            outputStructType="conv_id string, n_turns long, max_turn int, n_chars long",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def reply_latency_stream(
-    transcripts: DataFrame,
-    max_delay: str = "10 minutes",
-    watermark: str = "20 minutes",
-) -> DataFrame:
-    """Stream-stream inner join with an event-time range condition: each
-    'tool' turn joined to the same conversation's 'assistant' turns that
-    arrive within ``max_delay`` — tool-call reply latency, continuously.
-
-    Both sides are watermarked and the join condition carries the time
-    bound, so Spark can expire join state (without the bound the state
-    store grows forever at 10^12-turn scale). The batch twin is a plain
-    range join (see operators/rangejoin.py); parity pinned by test.
-    """
-    tool = (
-        transcripts.where((F.col("role") == "tool") & F.col("ts").isNotNull())
-        .select(
-            F.col("conv_id"),
-            F.col("turn_idx").alias("tool_idx"),
-            F.col("ts").alias("tool_ts"),
-        )
-        .withWatermark("tool_ts", watermark)
-    )
-    asst = (
-        transcripts.where((F.col("role") == "assistant") & F.col("ts").isNotNull())
-        .select(
-            F.col("conv_id").alias("conv_id_r"),
-            F.col("turn_idx").alias("reply_idx"),
-            F.col("ts").alias("reply_ts"),
-        )
-        .withWatermark("reply_ts", watermark)
-    )
-    joined = tool.join(
-        asst,
-        (F.col("conv_id") == F.col("conv_id_r"))
-        & (F.col("reply_ts") >= F.col("tool_ts"))
-        & (F.col("reply_ts") <= F.col("tool_ts") + F.expr(f"INTERVAL {max_delay}"))
-        & (F.col("reply_idx") > F.col("tool_idx")),
-    )
-    return joined.select(
-        "conv_id",
-        "tool_idx",
-        "reply_idx",
-        (
-            F.col("reply_ts").cast("timestamp").cast("long")
-            - F.col("tool_ts").cast("timestamp").cast("long")
-        ).alias("latency_sec"),
-    )
-
-
-def write_triples_stream(
-    transcripts: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    pipeline_fn,
-):
-    """foreachBatch sink: run the batch extraction pipeline per
-    micro-batch, writing each epoch to its own subdirectory — an
-    idempotent commit (epoch re-delivery overwrites, never duplicates),
-    mirroring the batch ledger's bucket semantics."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        triples = pipeline_fn(batch_df)
-        triples.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-
-    return (
-        transcripts.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
     )

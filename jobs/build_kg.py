@@ -73,9 +73,12 @@ def main() -> None:
         )
         bag = bag.unionByName(enrich_triples(bag, facts, mapping))
 
-    graph = materialize_graph(bag)
-    for name, df in graph.items():
+    tables = materialize_graph(bag)
+    for name, df in tables.items():
         df.write.mode("overwrite").parquet(f"{args.output}/graph/{name}")
+    # check and canonicalize what was written: the lazy frames would
+    # re-plan the graph from the bag for every consumer
+    graph = {name: spark.read.parquet(f"{args.output}/graph/{name}") for name in tables}
     print(f"fk orphans: {validate_fk(graph)}")
 
     # cross-document canonical ids (north rule) — additive table
@@ -85,8 +88,7 @@ def main() -> None:
         F.col("objectValue").alias("mention_id"),
         lemma_key(F.col("meta")["span"]).alias("key"),  # X4 identity key
     ).dropDuplicates(["mention_id"])
-    links = graph["links_to"]
-    canonicalize_mentions(mentions, links).write.mode("overwrite").parquet(
+    canonicalize_mentions(mentions, graph["links_to"]).write.mode("overwrite").parquet(
         f"{args.output}/graph/canonical_ids"
     )
     print("build_kg done")

@@ -4,11 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dstlr_spark.operators.assembly import (
-    assemble_documents,
-    assemble_documents_grouped,
-    assemble_documents_twophase,
-)
+from dstlr_spark.operators.assembly import assemble_documents
 from dstlr_spark.schemas import TRANSCRIPT_SCHEMA
 from dstlr_spark.sources.transcripts import derive_transcripts, generate_transcripts
 
@@ -57,34 +53,6 @@ def test_derive_assemble_roundtrip(spark):
         .count()
     )
     assert diff == 0
-
-
-def test_grouped_map_assembly_parity(spark):
-    """applyInPandas variant ≡ native aggregate variant (SURVEY §2.11)."""
-    tr = generate_transcripts(spark, n_convs=8)
-    a = sorted(map(tuple, assemble_documents(tr).collect()))
-    b = sorted(map(tuple, assemble_documents_grouped(tr).collect()))
-    assert a == b
-
-
-def test_twophase_assembly_parity(spark):
-    """Skew-proof two-phase assembly ≡ single-phase, including a
-    conversation far longer than the chunk size (ordering across
-    chunk boundaries)."""
-    rows = [("big", i, "user", f"t{i}", None, None) for i in range(537)]
-    rows += [("small", 1, "user", "b", None, None), ("small", 0, "user", "a", None, None)]
-    tr = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
-    one = dict(map(tuple, assemble_documents(tr).collect()))
-    two = dict(map(tuple, assemble_documents_twophase(tr, chunk=64).collect()))
-    assert one == two
-    assert two["big"].startswith("t0 t1 ") and two["big"].endswith(" t536")
-    assert two["small"] == "a b"
-
-    # and on the seeded corpus with Zipf-length conversations
-    corpus = generate_transcripts(spark, n_convs=10)
-    a = dict(map(tuple, assemble_documents(corpus).collect()))
-    b = dict(map(tuple, assemble_documents_twophase(corpus, chunk=16).collect()))
-    assert a == b
 
 
 def test_generated_corpus_deterministic(spark):

@@ -18,7 +18,6 @@ from dstlr_spark.operators.extract import (
     extract_triples_pattern,
     mention_triples,
     relation_triples,
-    with_meta_map,
 )
 from dstlr_spark.schemas import DOCUMENT_SCHEMA
 from dstlr_spark.sources.transcripts import SMOKE_SENTENCES
@@ -193,20 +192,6 @@ def test_native_extraction_matches_manual(spark):
     assert len(rels) == 3
     confs = sorted(r["meta"]["confidence"] for r in rels)
     assert confs == [1.0 / 3.0, 0.5, 0.5]
-
-
-def test_meta_map_compat_view(spark):
-    docs = _smoke_docs(spark)
-    t = with_meta_map(extract_triples_pattern(docs))
-    row = t.where(
-        (F.col("relation") == "MENTIONS") & (F.col("doc") == "smoke-0")
-        & (F.col("meta")["entity_class"] == "DATE")
-    ).first()
-    m = row["meta_map"]
-    assert m["class"] == "DATE"
-    assert m["normalized"] == "1961-08-04"
-    assert m["begin"] == "25" and m["end"] == "41"  # stringified, reference shape
-    assert "confidence" not in m  # null entries omitted, as the reference's MMap
 
 
 def test_pattern_fused_linking_parity(spark):

@@ -8,8 +8,8 @@ import random
 
 from pyspark.sql import functions as F
 
-from dstlr_spark.functions.text import lemma_key, stable_mention_id, utf8_truncate_1024
-from dstlr_spark.operators.extract import _lemma_key_py, _stable_id_py
+from dstlr_spark.functions.text import lemma_key, utf8_truncate_1024
+from dstlr_spark.operators.extract import _lemma_key_py
 
 _ALPHABET = (
     list("abcXYZ019 ") + list(".?,:;'\"!") + list("日本語áéßø€") + ["  ", "\t"]
@@ -32,15 +32,6 @@ def test_lemma_key_fuzz(spark):
     want = [_lemma_key_py(s) for s in samples]
     mismatches = [(s, g, w) for s, g, w in zip(samples, got, want) if g != w]
     assert not mismatches, mismatches[:3]
-
-
-def test_stable_id_fuzz(spark):
-    samples = _random_strings(200, seed=99)
-    df = spark.createDataFrame([(f"d{i}", s) for i, s in enumerate(samples)],
-                               "d string, s string")
-    got = [r["m"] for r in df.select(stable_mention_id("d", "s").alias("m")).collect()]
-    want = [_stable_id_py(f"d{i}", s) for i, s in enumerate(samples)]
-    assert got == want
 
 
 def test_utf8_truncate_fuzz(spark):

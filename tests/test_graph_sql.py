@@ -1,39 +1,17 @@
-"""Graph SQL surface + C9 span cap at materialize time."""
+"""Graph tables: C9 span cap at materialize time, builder parity."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from dstlr_spark.operators.graph import (
-    SUPPORTING_SQL,
-    materialize_graph,
-    register_graph_views,
-)
+from dstlr_spark.operators.graph import materialize_graph
 from dstlr_spark.operators.clean import supporting_information
 from dstlr_spark.plans.pipeline import build_triples
 from dstlr_spark.operators.extract import extract_triples_pattern
 from dstlr_spark.schemas import DOCUMENT_SCHEMA
 from dstlr_spark.sources.fixtures import alias_dict, facts, property_relation
 from dstlr_spark.sources.transcripts import generate_transcripts
-
-
-def test_sql_surface_matches_dataframe_api(spark):
-    """spark.sql over registered graph views ≡ the DataFrame join chain."""
-    tr = generate_transcripts(spark, n_convs=5)
-    g = materialize_graph(
-        build_triples(tr, alias_dict(spark), facts(spark), property_relation(spark))
-    )
-    register_graph_views(spark, g)
-    via_sql = sorted(
-        (r["doc_id"], r["entity_id"], r["object_span"])
-        for r in spark.sql(SUPPORTING_SQL).collect()
-    )
-    via_df = sorted(
-        (r["doc_id"], r["entity_id"], r["object_span"])
-        for r in supporting_information(g).collect()
-    )
-    assert via_sql == via_df and len(via_sql) > 0
 
 
 def test_span_capped_at_1024_bytes(spark):

@@ -122,10 +122,10 @@ def test_utf8_truncate_1024(spark):
 
 
 def test_url_escape_and_uri_suffix_lockstep(spark):
-    """C7/C8 lockstep vs the reference's Java semantics
-    (EnrichTriples.scala:104,136): replaceAll on " and `, and
-    substring(lastIndexOf('/')+1)."""
-    from dstlr_spark.functions.text import uri_suffix, url_escape_entity
+    """C7 lockstep vs the reference's Java semantics
+    (EnrichTriples.scala:104): replaceAll on " and `. (C8's URI-suffix
+    helper is gone: the fact tables already carry property ids.)"""
+    from dstlr_spark.functions.text import url_escape_entity
 
     cases = [
         'Good "Tech" Inc',
@@ -138,18 +138,6 @@ def test_url_escape_and_uri_suffix_lockstep(spark):
     df = spark.createDataFrame([(c,) for c in cases], "s string")
     got = [r["e"] for r in df.select(url_escape_entity("s").alias("e")).collect()]
     assert got == expected
-
-    uris = [
-        "http://www.wikidata.org/prop/direct/P159",
-        "https://en.wikipedia.org/wiki/Sunnyvale,_California",
-        "no-slash-at-all",
-        "trailing/slash/",
-    ]
-    # java: uri.substring(uri.lastIndexOf('/') + 1) — no '/' → whole string
-    exp = [u[u.rfind("/") + 1 :] for u in uris]
-    df2 = spark.createDataFrame([(u,) for u in uris], "u string")
-    got2 = [r["s"] for r in df2.select(uri_suffix("u").alias("s")).collect()]
-    assert got2 == exp
 
 
 def test_inflected_alias_entries_resolve(spark):

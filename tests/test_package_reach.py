@@ -1,0 +1,209 @@
+"""Reach guard for the package: every top-level function and class in
+``dstlr_spark/`` must be reachable from what the project runs, not only
+from tests.
+
+The pass is static and name-based (pure AST, no Spark). Roots are every
+module-level statement of the package (the registries' ``QUERIES`` /
+``ORACLES`` dicts among them), every line of ``jobs/``, ``scripts/``,
+``perfbench/``, ``bench.py``, ``bench_extra.py`` and
+``__spark_entry__.py``, and the ``TEST_REFERENCES`` below. A reached
+name reaches the body of every package definition with that name;
+docstrings and import statements are not references (an alias
+``from m import a as b`` maps a use of ``b`` to ``a``). The 14 codec
+modules are left to ``test_media_reach.py``, which traces them.
+
+A helper that only a test calls fails here: delete it, route a job or a
+registry query through it, or, when it is a test's oracle or reader, add
+``TEST_REFERENCES["<module>.<name>"] = "tests/<file>::<test>"``. The entry
+must name a test that imports and uses it, and the name must not be
+reached otherwise.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PACKAGE = ROOT / "dstlr_spark"
+
+#: package definitions kept only as a test's reference implementation or
+#: reader, each with the test that uses it
+TEST_REFERENCES = {
+    "operators.asof.asof_join_pandas": "tests/test_asof.py::test_asof_strategies_agree",
+    "plans.pipeline.build_triples": "tests/test_golden.py::test_smoke_corpus_precision_recall",
+    "queries.curation.hll_estimate": (
+        "tests/test_curation_queries.py::test_hll_registers_estimate_tracks_exact_distinct"
+    ),
+    "queries.curation.cms_estimate": "tests/test_curation_queries.py::test_cms_estimate_bounds",
+    "plans.pipeline.observe_metrics": "tests/test_metrics.py::test_observe_counts_triples_and_docs",
+}
+
+ROOT_FILES = ("bench.py", "bench_extra.py", "__spark_entry__.py")
+ROOT_DIRS = ("jobs", "scripts", "perfbench")
+
+
+def _codec_modules() -> set[str]:
+    tree = ast.parse((ROOT / "tests/test_media_reach.py").read_text())
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "CODEC_MODULES" for t in node.targets
+        ):
+            return set(ast.literal_eval(node.value))
+    raise AssertionError("CODEC_MODULES not found in test_media_reach.py")
+
+
+def _module_name(path: Path) -> str:
+    return ".".join(path.relative_to(PACKAGE).with_suffix("").parts)
+
+
+def _is_docstring(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Expr)
+        and isinstance(node.value, ast.Constant)
+        and isinstance(node.value.value, str)
+    )
+
+
+class _Refs(ast.NodeVisitor):
+    """Names a piece of code refers to; docstrings are skipped, and an
+    import binds a name without referring to it."""
+
+    def __init__(self, aliases: dict[str, str]):
+        self.aliases = aliases
+        self.names: set[str] = set()
+
+    def _add(self, name: str) -> None:
+        self.names.add(name)
+        self.names.add(self.aliases.get(name, name))
+
+    def visit_Name(self, node: ast.Name) -> None:
+        self._add(node.id)
+
+    def visit_Attribute(self, node: ast.Attribute) -> None:
+        self._add(node.attr)
+        self.generic_visit(node)
+
+    def _body(self, body: list[ast.stmt]) -> None:
+        for i, stmt in enumerate(body):
+            if not (i == 0 and _is_docstring(stmt)):
+                self.visit(stmt)
+
+    def visit_FunctionDef(self, node) -> None:
+        for d in node.decorator_list:
+            self.visit(d)
+        self.visit(node.args)
+        if node.returns is not None:
+            self.visit(node.returns)
+        self._body(node.body)
+
+    visit_AsyncFunctionDef = visit_FunctionDef
+
+    def visit_ClassDef(self, node: ast.ClassDef) -> None:
+        for d in [*node.decorator_list, *node.bases, *node.keywords]:
+            self.visit(d)
+        self._body(node.body)
+
+
+def _refs(nodes, aliases) -> set[str]:
+    v = _Refs(aliases)
+    for n in nodes:
+        v.visit(n)
+    return v.names
+
+
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), filename=str(path))
+
+
+def _reach(roots: set[str] | frozenset = frozenset()):
+    """(definitions, reached names): definitions maps a qualified
+    ``module.name`` to its node; names reached from the project's roots
+    plus ``roots``."""
+    trees = {_module_name(p): _parse(p) for p in sorted(PACKAGE.rglob("*.py"))}
+    outside = [ROOT / f for f in ROOT_FILES] + [
+        p for d in ROOT_DIRS for p in sorted((ROOT / d).rglob("*.py"))
+    ]
+    outside_trees = [_parse(p) for p in outside]
+
+    aliases = {}
+    for tree in [*trees.values(), *outside_trees]:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    if a.asname:
+                        aliases[a.asname] = a.name
+
+    defs: dict[str, ast.AST] = {}
+    by_name: dict[str, list[ast.AST]] = {}
+    frontier = set(roots)
+    for mod, tree in trees.items():
+        for i, node in enumerate(tree.body):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[f"{mod}.{node.name}"] = node
+                by_name.setdefault(node.name, []).append(node)
+                # decorators, defaults and bases run at import time
+                eager = [*node.decorator_list, *getattr(node, "bases", [])]
+                if hasattr(node, "args"):
+                    eager += node.args.defaults + node.args.kw_defaults
+                frontier |= _refs([n for n in eager if n is not None], aliases)
+            elif not (i == 0 and _is_docstring(node)):
+                frontier |= _refs([node], aliases)
+    for tree in outside_trees:
+        frontier |= _refs([tree], aliases)
+
+    reached: set[str] = set()
+    while frontier:
+        name = frontier.pop()
+        if name in reached:
+            continue
+        reached.add(name)
+        for node in by_name.get(name, ()):
+            frontier |= _refs([node], aliases) - reached
+    return defs, reached
+
+
+def _unreached(defs, reached) -> list[str]:
+    codecs = {f"operators.{m}" for m in _codec_modules()}
+    return sorted(
+        q for q in defs
+        if q.rsplit(".", 1)[0] not in codecs and q.rsplit(".", 1)[1] not in reached
+    )
+
+
+def test_every_package_definition_is_reached():
+    names = {q.rsplit(".", 1)[1] for q in TEST_REFERENCES}
+    defs, reached = _reach(names)
+    missed = [q for q in _unreached(defs, reached) if q not in TEST_REFERENCES]
+    assert missed == [], (
+        f"{len(missed)} package definitions only tests reach: delete them, route "
+        "a job or registry query through them, or name the test they serve in "
+        "TEST_REFERENCES:\n  " + "\n  ".join(missed)
+    )
+
+
+def test_test_references_are_live():
+    defs, reached = _reach()
+    unreached = set(_unreached(defs, reached))
+    for qual, where in TEST_REFERENCES.items():
+        mod, name = qual.rsplit(".", 1)
+        assert qual in defs, f"{qual}: no such package definition"
+        assert qual in unreached, (
+            f"{qual} is reached without its test; drop its TEST_REFERENCES entry"
+        )
+        file, test = where.split("::")
+        tree = _parse(ROOT / file)
+        fn = next(
+            (n for n in tree.body
+             if isinstance(n, ast.FunctionDef) and n.name == test),
+            None,
+        )
+        assert fn is not None, f"{qual}: {where} does not exist"
+        imported = {
+            a.asname or a.name
+            for n in [*tree.body, *ast.walk(fn)]
+            if isinstance(n, ast.ImportFrom) and n.module == f"dstlr_spark.{mod}"
+            for a in n.names if a.name == name
+        }
+        used = {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+        assert imported & used, f"{qual}: {where} does not import and use it"

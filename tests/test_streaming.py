@@ -1,22 +1,25 @@
-"""Structured Streaming: windowed mention rates, session windows,
-foreachBatch triple sink (SURVEY.md §2.9 — engine addition; the
-reference is batch-only)."""
+"""Structured Streaming: windowed mention rates, watermarked dedup,
+checkpoint resume and the registry's stream gates (SURVEY.md §2.9 —
+engine addition; the reference is batch-only)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dstlr_spark.operators.assembly import assemble_documents
-from dstlr_spark.operators.extract import extract_triples_pattern
+from dstlr_spark.schemas import TRANSCRIPT_SCHEMA
 from dstlr_spark.sources.transcripts import generate_transcripts
 from dstlr_spark.streaming.transcripts_stream import (
-    conversation_progress_stream,
-    conversation_sessions_stream,
     dedup_turns_stream,
     mention_rate_stream,
-    stream_transcripts,
-    write_triples_stream,
 )
+
+
+def stream_transcripts(spark, input_dir):
+    return (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 8)
+        .parquet(input_dir)
+    )
 
 
 def _write_input(spark, tmp_path, n_convs=8):
@@ -52,17 +55,6 @@ def test_mention_rate_stream(spark, tmp_path):
     assert all(r["window_start"] is not None for r in got)
 
 
-def test_session_window_stream(spark, tmp_path):
-    path = _write_input(spark, tmp_path)
-    stream = stream_transcripts(spark, path)
-    sessions = conversation_sessions_stream(stream, gap="30 minutes")
-    _run_to_memory(sessions, "sessions")
-    got = spark.sql("SELECT * FROM sessions").collect()
-    assert len(got) > 0
-    by_conv = {r["conv_id"]: r for r in got if r["conv_id"] == "smoke-0"}
-    assert by_conv["smoke-0"]["n_turns"] == 1
-
-
 def test_streaming_dedup_drops_redelivered_turns(spark, tmp_path):
     """Exactly-once-style dedup: duplicated input rows survive once."""
     path = str(tmp_path / "in")
@@ -78,152 +70,6 @@ def test_streaming_dedup_drops_redelivered_turns(spark, tmp_path):
         F.col("conv_id").isNotNull() & F.col("ts").isNotNull()
     ).select("conv_id", "turn_idx").distinct().count()
     assert got["n"] == got["d"] == want
-
-
-def test_stateful_progress_stream(spark, tmp_path):
-    """applyInPandasWithState: per-conversation running state survives
-    across micro-batches and matches the batch ground truth."""
-    path = _write_input(spark, tmp_path)
-    progress = conversation_progress_stream(stream_transcripts(spark, path))
-    _run_to_memory(progress, "progress", mode="update")
-    # per conversation, the row with the highest n_turns = final state
-    # (earlier micro-batches emit running partials)
-    got = {}
-    for r in spark.sql("SELECT * FROM progress").collect():
-        cur = got.get(r["conv_id"])
-        cand = (r["n_turns"], r["max_turn"], r["n_chars"])
-        if cur is None or cand[0] > cur[0]:
-            got[r["conv_id"]] = cand
-    batch = (
-        spark.read.parquet(path)
-        .where(F.col("conv_id").isNotNull() & F.col("text").isNotNull())
-        .groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("turn_idx").alias("m"),
-            F.sum(F.length("text")).alias("c"),
-        )
-        .collect()
-    )
-    for r in batch:
-        assert got[r["conv_id"]] == (r["n"], r["m"], r["c"])
-
-
-def test_foreachbatch_triple_sink(spark, tmp_path):
-    path = _write_input(spark, tmp_path)
-    out = str(tmp_path / "triples")
-    ckpt = str(tmp_path / "ckpt")
-
-    def pipeline(batch_df):
-        return extract_triples_pattern(assemble_documents(batch_df))
-
-    stream = stream_transcripts(spark, path)
-    q = write_triples_stream(stream, out, ckpt, pipeline).start()
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(f"{out}/epoch=*")
-    assert got.count() > 0
-    # streamed extraction over complete conversations matches batch
-    # (maxFilesPerTrigger may split files; with one input file per write
-    # the conversations stay whole per micro-batch)
-    batch = pipeline(spark.read.parquet(path))
-    assert got.count() == batch.count()
-
-
-def test_reply_latency_stream_stream_join(spark, tmp_path):
-    """Stream-stream watermarked interval join == the equivalent batch
-    range join, row for row."""
-    from dstlr_spark.streaming.transcripts_stream import reply_latency_stream
-
-    path = _write_input(spark, tmp_path, n_convs=12)
-    stream = stream_transcripts(spark, path)
-    joined = reply_latency_stream(stream, max_delay="10 minutes", watermark="0 seconds")
-    _run_to_memory(joined, "latency", mode="append")
-    got = sorted(
-        (r["conv_id"], r["tool_idx"], r["reply_idx"], r["latency_sec"])
-        for r in spark.sql("SELECT * FROM latency").collect()
-    )
-
-    batch = spark.read.parquet(path)
-    tool = batch.where(F.col("role") == "tool").select(
-        "conv_id", F.col("turn_idx").alias("tool_idx"), F.col("ts").alias("tool_ts")
-    )
-    asst = batch.where(F.col("role") == "assistant").select(
-        F.col("conv_id").alias("c2"),
-        F.col("turn_idx").alias("reply_idx"),
-        F.col("ts").alias("reply_ts"),
-    )
-    want = sorted(
-        (r["conv_id"], r["tool_idx"], r["reply_idx"], r["latency_sec"])
-        for r in tool.join(
-            asst,
-            (F.col("conv_id") == F.col("c2"))
-            & (F.col("reply_ts") >= F.col("tool_ts"))
-            & (F.col("reply_ts") <= F.col("tool_ts") + F.expr("INTERVAL 10 minutes"))
-            & (F.col("reply_idx") > F.col("tool_idx")),
-        )
-        .select(
-            "conv_id", "tool_idx", "reply_idx",
-            (
-                F.col("reply_ts").cast("timestamp").cast("long")
-                - F.col("tool_ts").cast("timestamp").cast("long")
-            ).alias("latency_sec"),
-        )
-        .collect()
-    )
-    assert got == want and len(got) > 0
-    assert all(0 <= lat <= 600 for *_ , lat in got)
-
-
-def test_tws_progress_stream_parity_or_env_gate(spark, tmp_path):
-    """transformWithStateInPandas twin: full parity with the
-    applyInPandasWithState operator where the TWS runtime works;
-    in this container (broken google.protobuf) the operator must
-    refuse up front with ImportError, not crash the stream mid-query."""
-    from dstlr_spark.streaming.transcripts_stream import (
-        conversation_progress_tws,
-        stream_transcripts,
-    )
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        have_protobuf = True
-    except ImportError:
-        have_protobuf = False
-
-    path = _write_input(spark, tmp_path)
-    if not have_protobuf:
-        import pytest
-
-        with pytest.raises(ImportError):
-            conversation_progress_tws(stream_transcripts(spark, path))
-        return
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    progress = conversation_progress_tws(stream_transcripts(spark, path))
-    _run_to_memory(progress, "tws_progress", mode="update")
-    got = {}
-    for r in spark.sql("SELECT * FROM tws_progress").collect():
-        cur = got.get(r["conv_id"])
-        cand = (r["n_turns"], r["max_turn"], r["n_chars"])
-        if cur is None or cand[0] > cur[0]:
-            got[r["conv_id"]] = cand
-    batch = (
-        spark.read.parquet(path)
-        .where(F.col("conv_id").isNotNull() & F.col("text").isNotNull())
-        .groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("turn_idx").alias("m"),
-            F.sum(F.length("text")).alias("c"),
-        )
-        .collect()
-    )
-    for r in batch:
-        assert got[r["conv_id"]] == (r["n"], r["m"], r["c"])
 
 
 def test_checkpoint_resume_is_exactly_once(spark, tmp_path):

@@ -1,10 +1,8 @@
-"""S3 HTML-strip parity (ExtractTriples.scala:147-161): the WaPo JSONL
-source keeps sanitized_html paragraphs, strips markup like jsoup's
-``.text()``, and concatenates with a single space."""
+"""S3 HTML-strip parity (ExtractTriples.scala:147-161): ``strip_html``
+strips markup like jsoup's ``.text()`` (the reference's WaPo JSONL
+source, shipped disabled)."""
 
 from __future__ import annotations
-
-import json
 
 
 def test_strip_html_matches_jsoup_text_semantics(spark):
@@ -26,64 +24,3 @@ def test_strip_html_matches_jsoup_text_semantics(spark):
     rows = df.select(strip_html("raw").alias("got"), "expected").collect()
     for r in rows:
         assert r["got"] == r["expected"], (r["got"], r["expected"])
-
-
-def test_wapo_documents_filters_strips_and_concats(spark):
-    from dstlr_spark.sources.wapo import WAPO_SCHEMA, wapo_documents
-
-    contents = [
-        {"type": "sanitized_html", "subtype": "paragraph",
-         "content": "<p>First &amp; foremost.</p>"},
-        {"type": "image", "subtype": "paragraph", "content": "<img/>"},
-        {"type": "sanitized_html", "subtype": "caption",
-         "content": "drop me"},
-        None,
-        {"type": "sanitized_html", "subtype": "paragraph",
-         "content": "Second <i>para</i>."},
-        {"type": "sanitized_html", "subtype": "paragraph", "content": None},
-    ]
-    raw = spark.createDataFrame([("w1", contents), ("w2", None)], WAPO_SCHEMA)
-    got = {r["doc_id"]: r["text"] for r in wapo_documents(raw).collect()}
-    # null-content paragraph contributes an empty block → the joining
-    # space collapses away nothing (array_join drops nothing, but the
-    # block is empty so a trailing space appears) — assert exact output
-    assert got["w1"] == "First & foremost. Second para. "
-    assert got["w2"] == ""
-
-
-def test_read_wapo_jsonl_end_to_end_feeds_the_pipeline(spark, tmp_path):
-    """JSONL file → documents → shred/assemble round-trip: the stripped
-    text enters the same per-turn-equality pipeline as every source."""
-    from dstlr_spark.operators.assembly import assemble_documents
-    from dstlr_spark.sources.transcripts import derive_transcripts
-    from dstlr_spark.sources.wapo import read_wapo_jsonl
-
-    lines = [
-        {"id": "doc-1", "published": "ignored", "contents": [
-            {"type": "sanitized_html", "subtype": "paragraph",
-             "content": "<p>Barack Obama was born on August 4th, 1961.</p>"},
-            {"type": "sanitized_html", "subtype": "paragraph",
-             "content": "Apple is <b>based</b> in Cupertino."},
-        ]},
-        {"id": "doc-2", "contents": [
-            {"type": "sanitized_html", "subtype": "paragraph",
-             "content": "Isetan is a company based in&nbsp;Paris."},
-        ]},
-    ]
-    p = tmp_path / "wapo.jsonl"
-    p.write_text("\n".join(json.dumps(x) for x in lines))
-
-    docs = read_wapo_jsonl(spark, str(p))
-    got = {r["doc_id"]: r["text"] for r in docs.collect()}
-    assert got["doc-1"] == (
-        "Barack Obama was born on August 4th, 1961. "
-        "Apple is based in Cupertino."
-    )
-    assert got["doc-2"] == "Isetan is a company based in Paris."
-
-    # per-turn equality invariant holds over the stripped text
-    back = {
-        r["doc_id"]: r["contents"]
-        for r in assemble_documents(derive_transcripts(docs)).collect()
-    }
-    assert back == got
