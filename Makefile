@@ -9,9 +9,9 @@
 #   make bench           # just the headline bench JSON line
 #   make selftest        # perfbench self-test (not part of gate)
 #   make perfbench       # one untraced run per benchmark workload (not part of gate)
-#   make graph-parity    # graph-builder parity, plan and span-cap tests (not part of gate)
+#   make graph-parity    # graph-builder parity, plan and exact span-cap fuzz tests (not part of gate)
 #   make canon-parity    # canonicalization tests + its four oracle queries (not part of gate)
-#   make extract-parity  # extraction tests + the four extraction oracle queries (not part of gate)
+#   make extract-parity  # extraction, linking and plan tests + the four extraction oracle queries (not part of gate)
 #   make media-parity    # codec reach guard + codec tests + the 11 mm_* oracle queries (not part of gate)
 
 SF ?= sf0.01
@@ -63,7 +63,7 @@ canon-parity:
 
 # quick pre-check for a change to the extraction kernel or its three bodies
 extract-parity:
-	python -m pytest -q tests/test_extract.py tests/test_fuzz_text.py tests/test_golden.py
+	python -m pytest -q tests/test_extract.py tests/test_fuzz_text.py tests/test_golden.py tests/test_linking_enrich.py tests/test_plans.py
 	python scripts/check_oracles.py /root/testdata/sf0.01 kg_mentions kg_relations kg_links kg_triples_by_relation
 
 # quick pre-check for a change to a media codec or an mm_* query

@@ -1,17 +1,13 @@
 """Scalar text functions (SURVEY.md §2.7 C1-C12).
 
 Every function here returns a Column built from pyspark.sql.functions —
-JVM-side, whole-stage-codegen'd, no Python in the hot path. The lone
-unavoidable Python step (UTF-8 byte truncation, C9) is an Arrow-batched
-pandas UDF.
+JVM-side, whole-stage-codegen'd, no Python in the hot path.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 #: POS-tag-punctuation class the reference drops from lemma keys
 #: (ExtractTriples.scala:192). We apply it to surface tokens.
@@ -125,18 +121,34 @@ def span_index_label(begin: Column | str, end: Column | str) -> Column:
     return F.concat_ws("-", b.cast("string"), e.cast("string"))
 
 
-@F.pandas_udf(T.StringType())
-def utf8_truncate_1024(s: pd.Series) -> pd.Series:
+def utf8_truncate_1024(col: Column | str) -> Column:
     """Cap a string at 1024 UTF-8 **bytes** (C9, LoadTriples.scala:16-17,55-59).
 
     The reference byte-slices and can split a multi-byte code point; we
-    decode with errors='ignore' so the result is always valid UTF-8 —
-    a documented, deliberate divergence (SURVEY.md C9).
+    drop the split code point, so the result is always valid UTF-8 and
+    equals ``s.encode()[:1024].decode("utf-8", "ignore")`` — a
+    documented, deliberate divergence (SURVEY.md C9). The cut is made on
+    the bytes: the code point the cut splits starts at a lead byte in
+    position 1024, a 3- or 4-byte lead byte in position 1023, or a
+    4-byte lead byte in position 1022 (continuation bytes after it).
+    Spans that already fit short-circuit in the ``CASE``.
     """
-    return s.map(
-        lambda x: x
-        if x is None or len(x.encode("utf-8")) <= 1024
-        else x.encode("utf-8")[:1024].decode("utf-8", "ignore")
+    c = F.col(col) if isinstance(col, str) else col
+    b = c.cast("binary")
+
+    def byte(i: int) -> Column:  # one-byte binary; compares unsigned
+        return F.substring(b, i, 1)
+
+    split = (
+        F.when(byte(1024) >= F.lit(b"\xc0"), 1)
+        .when(byte(1024) < F.lit(b"\x80"), 0)
+        .when(byte(1023) >= F.lit(b"\xe0"), 2)
+        .when(byte(1023) >= F.lit(b"\xc0"), 0)
+        .when(byte(1022) >= F.lit(b"\xf0"), 3)
+        .otherwise(0)
+    )
+    return F.when(F.octet_length(c) <= 1024, c).otherwise(
+        F.substring(b, F.lit(1), F.lit(1024) - split).cast("string")
     )
 
 

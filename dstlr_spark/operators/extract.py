@@ -31,12 +31,14 @@ Shared semantics (both modes):
 - mention identity: one id per distinct lemma key per document
   (X5) — content-addressed ``md5(doc ‖ key)`` instead of the
   reference's nondeterministic ``UUID.randomUUID``.
-- every mention occurrence emits a MENTIONS row; LINKS_TO rows come
-  either from the linking operator (broadcast alias join) or — the
-  single-pass shape — from inside the annotator itself when an alias
-  dict is supplied (the fused path and ``extract_triples_pattern``'s
-  ``alias_dict`` parameter), so the expensive annotator stage never
-  runs twice.
+- every mention occurrence emits a MENTIONS row; every link is resolved
+  inside the scan or annotator itself against one arg-max dictionary
+  (:func:`best_alias_entity`): the mention scan tags each row with its
+  ``entity_id`` when given aliases (``NativeKG``), the fused bag and
+  ``extract_triples_pattern``'s ``alias_dict`` parameter emit LINKS_TO
+  rows, so the expensive annotator stage never runs twice. The modular
+  broadcast-join operator (``operators.linking``) is the reference the
+  tests compare them against.
 
 All three ``mapInPandas`` bodies share one kernel: one tokenizer
 (:func:`_gazetteer_hits`), one mention id (:func:`_stable_id_py`, via
@@ -225,25 +227,30 @@ _MENTION_DDL = (
 _MENTION_COLUMNS = [f.split()[0] for f in _MENTION_DDL.split(", ")]
 
 
-def _mention_scan_batches(gaz: dict[str, str]):
+def _mention_scan_batches(gaz: dict[str, str], best_entity: dict[str, str] | None = None):
     """Build the mapInPandas body for the Arrow mention scanner.
 
     Per Arrow batch of (doc_id, contents): tokenize with offsets and keep
     only gazetteer hits (:func:`_gazetteer_hits`), emitting the mention
     frame directly. The token stream never leaves the worker — no
-    shuffle, no 20x exchange.
+    shuffle, no 20x exchange. With ``best_entity`` (alias key → arg-max
+    entity id, :func:`best_alias_entity`) each row also carries its
+    resolved ``entity_id`` (null when unresolvable), the same
+    ``best_entity.get(key)`` the fused bag's LINKS_TO rows use.
 
-    ``gaz`` may be a plain dict (tests) or a ``sc.broadcast`` handle
-    (production path): a 10^7-entry dictionary captured in the closure
-    would be re-serialized into EVERY task binary, while a broadcast
-    ships once per executor (see :func:`_bc_value`).
+    Both dictionaries may be plain dicts (tests) or ``sc.broadcast``
+    handles (production path): a 10^7-entry dictionary captured in the
+    closure would be re-serialized into EVERY task binary, while a
+    broadcast ships once per executor (see :func:`_bc_value`).
     """
+    names = _MENTION_COLUMNS + (["entity_id"] if best_entity is not None else [])
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz_d = _bc_value(gaz)
+        best_d = _bc_value(best_entity)
         key_of = _token_key_fn()
         for pdf in batches:
-            cols = {n: [] for n in _MENTION_COLUMNS}
+            cols = {n: [] for n in names}
             doc, mid, cls, span, begin, end, pos, key = (
                 cols[n].append for n in _MENTION_COLUMNS
             )
@@ -261,23 +268,38 @@ def _mention_scan_batches(gaz: dict[str, str]):
                     end(e)
                     pos(p)
                     key(k)
+                if best_d is not None:
+                    cols["entity_id"].extend(best_d.get(h[1]) for h in hits)
             yield _frame(cols)
 
     return scan
 
 
-def extract_mentions_native(documents: DataFrame, gazetteer: DataFrame) -> DataFrame:
+def extract_mentions_native(
+    documents: DataFrame, gazetteer: DataFrame, aliases: DataFrame | None = None
+) -> DataFrame:
     """Token-level mention detection (X3).
 
-    Returns (doc_id, mention_id, entity_class, span, begin, end, pos, key).
+    Returns (doc_id, mention_id, entity_class, span, begin, end, pos,
+    key), plus ``entity_id`` when ``aliases`` is given: each mention's
+    link (X7), resolved inside the scan against the alias dictionary
+    reduced by :func:`best_alias_entity` — the reference's in-annotator
+    ``mention.entity()`` (ExtractTriples.scala:105,216-218).
 
     Arrow-batched mapInPandas scanner: tokenize + offsets + gazetteer
     membership entirely inside the worker, emitting only mention rows.
     No shuffle. The DuckDB oracles check its output independently.
     """
-    gaz = {r["term"]: r["entity_class"] for r in gazetteer.collect()}
+    gaz = _broadcast(
+        documents, {r["term"]: r["entity_class"] for r in gazetteer.collect()}
+    )
+    ddl = _MENTION_DDL
+    best = None
+    if aliases is not None:
+        best = _broadcast(documents, best_alias_entity(aliases))
+        ddl += ", entity_id string"
     return documents.select("doc_id", "contents").mapInPandas(
-        _mention_scan_batches(_broadcast(documents, gaz)), _MENTION_DDL
+        _mention_scan_batches(gaz, best), ddl
     )
 
 
@@ -400,10 +422,12 @@ def _fused_bag_batches(gaz: dict[str, str], best_entity: dict[str, str], window:
 def best_alias_entity(alias_dict: DataFrame) -> dict[str, str]:
     """Reduce the alias dimension to its deterministic arg-max
     (max prior, ties → smallest entity_id) — driver-side, broadcastable.
-    Keys are LEMMA-normalized (C2) like the mention keys they are probed
-    with, so inflected dictionary entries are not silently dead — in
-    lockstep with :func:`~dstlr_spark.operators.linking.resolve_aliases`,
-    which lemma-normalizes both join sides."""
+    Keys are the alias's single-space tokens, each LEMMA-normalized (C2)
+    like the mention keys they are probed with, so inflected dictionary
+    entries are not silently dead. The DuckDB ``kg_links`` oracle keys
+    its alias side the same way. One dictionary serves every linking
+    path: the mention scan (``NativeKG``), the fused bag and the
+    pattern annotator."""
     best: dict[str, tuple[float, str]] = {}
     for r in alias_dict.collect():
         key = " ".join(lemma_token_py(t) for t in r["alias"].split(" "))
@@ -519,9 +543,14 @@ RELATION_PATTERNS: list[tuple[str, str, str, str]] = [
 ]
 
 
+#: Java's ``\s`` (what Spark's ``split(c, "\\s+")`` splits on); Python's
+#: Unicode ``\s`` would also split on e.g. U+00A0, U+001C and U+0085
+_JAVA_SPACE_RE = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
 def _lemma_key_py(text: str) -> str:
     """Python twin of functions.text.lemma_key (kept in lockstep by tests)."""
-    toks = [lemma_token_py(re.sub(PUNCT_RE, "", t)) for t in re.split(r"\s+", text)]
+    toks = [lemma_token_py(re.sub(PUNCT_RE, "", t)) for t in _JAVA_SPACE_RE.split(text)]
     return " ".join(t for t in toks if t)
 
 

@@ -1,10 +1,14 @@
 """Entity linking: mention → entity id via broadcast alias dictionary.
 
-Replaces the reference's in-annotator Wikidict lookup
-(``mention.entity()``, ExtractTriples.scala:105,216-218) and the
-per-entity SPARQL id resolution (EnrichTriples.scala:53,99-123) with a
-single broadcast equi-join plus arg-max scoring (SURVEY.md J2): no
-network RPC inside tasks, no per-row Python.
+The modular form of linking (SURVEY.md J2): the reference's
+in-annotator Wikidict lookup (``mention.entity()``,
+ExtractTriples.scala:105,216-218) and per-entity SPARQL id resolution
+(EnrichTriples.scala:53,99-123) as one broadcast equi-join plus arg-max
+scoring over a triple bag. The pipelines resolve links inside their
+scans instead (``NativeKG``'s mention scan, the fused bag and the
+pattern annotator, all through
+:func:`~dstlr_spark.operators.extract.best_alias_entity`); tests compare
+them against this operator.
 
 Scale: the alias dictionary is a dimension (≤10^7 rows in practice) —
 broadcast; candidate scoring is a ``min_by`` hash aggregate (partial +

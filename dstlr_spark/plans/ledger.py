@@ -49,8 +49,16 @@ def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir)
 
 
+def _ledger_rows(spark: SparkSession, ledger_dir: str, *cols: str) -> list:
+    """The ledger's rows (one per committed bucket); an absent ledger is
+    no rows, answered without a Spark job."""
+    if not Path(ledger_dir).exists():
+        return []
+    return read_ledger(spark, ledger_dir).select(*cols).collect()
+
+
 def completed_buckets(spark: SparkSession, ledger_dir: str) -> set[int]:
-    return {r["bucket"] for r in read_ledger(spark, ledger_dir).select("bucket").collect()}
+    return {r["bucket"] for r in _ledger_rows(spark, ledger_dir, "bucket")}
 
 
 def stale_buckets(
@@ -69,9 +77,9 @@ def stale_buckets(
     spark = transcripts.sparkSession
     recorded = {
         r["bucket"]: (r["n_input_rows"], r["input_fingerprint"])
-        for r in read_ledger(spark, ledger_dir)
-        .select("bucket", "n_input_rows", "input_fingerprint")
-        .collect()
+        for r in _ledger_rows(
+            spark, ledger_dir, "bucket", "n_input_rows", "input_fingerprint"
+        )
     }
     if not recorded:
         return set()

@@ -27,9 +27,8 @@ from dstlr_spark.operators.extract import (
     relation_triples,
 )
 from dstlr_spark.operators.graph import graph_tables, triple_edges
-from dstlr_spark.operators.linking import link_mentions
 from dstlr_spark.plans.partitioning import fan_out
-from dstlr_spark.schemas import TRIPLE_SCHEMA
+from dstlr_spark.schemas import META_SCHEMA, TRIPLE_SCHEMA
 
 
 class NativeKG:
@@ -61,9 +60,13 @@ class NativeKG:
     @cached_property
     def mentions(self) -> DataFrame:
         """The mention frame, planned on first use: the scanner collects
-        the gazetteer into a broadcast dictionary (one Spark job), so
-        constructing a NativeKG stays pure plan building."""
-        m = extract_mentions_native(self._docs, self._gazetteer)
+        the gazetteer and the alias dictionary into broadcast
+        dictionaries (one Spark job each), so constructing a NativeKG
+        stays pure plan building. Each row carries its resolved
+        ``entity_id``: linking happens inside the scan, as the
+        reference's annotator resolves ``mention.entity()``
+        (ExtractTriples.scala:105,216-218)."""
+        m = extract_mentions_native(self._docs, self._gazetteer, self.aliases)
         # Hash-partition the mention frame by doc_id BEFORE caching:
         # the relation self-join then reads both sides co-partitioned
         # (zero exchanges — guide §2.4), the chain's doc-keyed
@@ -111,10 +114,23 @@ class NativeKG:
         )
 
     def links_triples(self) -> DataFrame:
-        """LINKS_TO rows for the mention frame (Catalyst folds the
-        MENTIONS round-trip away: same plan as a hand-written projection)."""
+        """One LINKS_TO row per distinct (doc, mention) — entity id null
+        when unresolvable, as ``operators.linking.link_mentions`` emits
+        them — projected from the entity the scan resolved. A mention id
+        stands for one key of one document and the entity is a function
+        of the key, so the distinct (doc, mention, entity) rows are the
+        distinct mentions: a key-only hash aggregate, with no exchange
+        because the cache is hash-partitioned by ``doc_id``."""
         self._ensure_persisted()
-        return link_mentions(mention_triples(self.mentions), self.aliases)
+        return self.mentions.select("doc_id", "mention_id", "entity_id").distinct().select(
+            F.col("doc_id").alias("doc"),
+            F.lit("Mention").alias("subjectType"),
+            F.col("mention_id").alias("subjectValue"),
+            F.lit("LINKS_TO").alias("relation"),
+            F.lit("Entity").alias("objectType"),
+            F.col("entity_id").alias("objectValue"),
+            F.lit(None).cast(META_SCHEMA).alias("meta"),
+        )
 
     def bag(self) -> DataFrame:
         out = self.extraction_triples().unionByName(self.links_triples())
@@ -132,8 +148,12 @@ class NativeKG:
         re-filtering the bag's union. The bag names its relations with
         ``concat_ws`` inside the self-join, so a per-table relation
         filter cannot be pushed below the join, and the self-join would
-        run again under every other table's filter. The whole build is
-        3 shuffles (mention-node agg, link agg, relation self-join).
+        run again under every other table's filter. Links are the
+        entities the scan resolved (:meth:`links_triples`), so no alias
+        join runs and ``links_to`` / ``entity_nodes`` are projections
+        of the cache. The shuffles left are keyed by mention or entity
+        id: the mention-node aggregate, the link and fact dedupes and
+        ``entity_nodes``' distinct.
         """
         self._ensure_persisted()
         m = self.mentions

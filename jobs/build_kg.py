@@ -8,12 +8,16 @@ spark-submit --py-files dist/dstlr_spark.zip jobs/build_kg.py \
 
 Composes the four reference-shaped jobs (extract → enrich → load →
 canonicalize) with the resumable ledger in front; re-running resumes
-from the last completed bucket.
+from the last completed bucket. ``graph/_COMPLETE`` marks a graph whose
+tables and canonical ids were all written: a re-run that processed no
+bucket and finds it skips the graph, FK check and canonicalize steps,
+and a run that crashed mid-graph left no marker, so it rebuilds.
 """
 
 from __future__ import annotations
 
 import argparse
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -64,6 +68,14 @@ def main() -> None:
     )
     print(f"extract: {stats}")
 
+    graph_dir = f"{args.output}/graph"
+    marker = Path(graph_dir) / "_COMPLETE"
+    if stats["processed"] == 0 and marker.exists():
+        print("graph: up to date")
+        spark.stop()
+        return
+    marker.unlink(missing_ok=True)
+
     bag = read_output(spark, f"{args.output}/triples").drop("bucket")
 
     if args.facts and args.mapping:
@@ -75,10 +87,10 @@ def main() -> None:
 
     tables = materialize_graph(bag)
     for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{args.output}/graph/{name}")
+        df.write.mode("overwrite").parquet(f"{graph_dir}/{name}")
     # check and canonicalize what was written: the lazy frames would
     # re-plan the graph from the bag for every consumer
-    graph = {name: spark.read.parquet(f"{args.output}/graph/{name}") for name in tables}
+    graph = {name: spark.read.parquet(f"{graph_dir}/{name}") for name in tables}
     print(f"fk orphans: {validate_fk(graph)}")
 
     # cross-document canonical ids (north rule) — additive table
@@ -89,8 +101,9 @@ def main() -> None:
         lemma_key(F.col("meta")["span"]).alias("key"),  # X4 identity key
     ).dropDuplicates(["mention_id"])
     canonicalize_mentions(mentions, graph["links_to"]).write.mode("overwrite").parquet(
-        f"{args.output}/graph/canonical_ids"
+        f"{graph_dir}/canonical_ids"
     )
+    marker.touch()
     print("build_kg done")
     spark.stop()
 

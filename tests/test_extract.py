@@ -261,7 +261,17 @@ def test_fused_bag_matches_native_kg_bag(spark):
     )
 
     docs = _documents(spark, "/root/testdata/sf0.001")
-    gaz, ali = _gazetteer(spark), _aliases(spark)
+    gaz = _gazetteer(spark)
+    # a punctuated and a leading-space alias key to no mention (their
+    # single-space lemma keys keep the "." and the empty token); a
+    # lemma-keyed join that strips and re-splits them would link
+    # "spark"/"join" mentions to these higher-prior entities
+    ali = _aliases(spark).unionByName(
+        spark.createDataFrame(
+            [("spark.", "E-spark-dot", 5.0), (" join", "E-join-space", 5.0)],
+            "alias string, entity_id string, prior double",
+        )
+    )
 
     def rows(df):
         return sorted(

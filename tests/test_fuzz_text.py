@@ -11,8 +11,11 @@ from pyspark.sql import functions as F
 from dstlr_spark.functions.text import lemma_key, utf8_truncate_1024
 from dstlr_spark.operators.extract import _lemma_key_py
 
+# U+00A0, U+001C and U+0085 are whitespace to Python's ``\s`` but not
+# to Java's, which is what Spark's split uses
 _ALPHABET = (
     list("abcXYZ019 ") + list(".?,:;'\"!") + list("日本語áéßø€") + ["  ", "\t"]
+    + ["\xa0", "\x1c", "\x85"]
 )
 
 
@@ -34,16 +37,24 @@ def test_lemma_key_fuzz(spark):
     assert not mismatches, mismatches[:3]
 
 
+def _utf8_cap_py(s):
+    """The C9 spec: the first 1024 UTF-8 bytes, minus a split code point."""
+    return None if s is None else s.encode("utf-8")[:1024].decode("utf-8", "ignore")
+
+
 def test_utf8_truncate_fuzz(spark):
     samples = [s * 80 for s in _random_strings(100, seed=7)]  # force long strings
+    # cut inside (and just after) a 2-, 3- and 4-byte code point: the
+    # ASCII pad shifts where byte 1024 falls within the repeated char
+    for wide in ("é", "日", "😀"):
+        for pad in range(4):
+            samples.append("a" * pad + wide * 600)
+            samples.append("a" * (1024 - pad) + wide)
+    samples += [None, "", "a" * 1024, "a" * 1025]
     df = spark.createDataFrame([(s,) for s in samples], "s string")
     got = [r["t"] for r in df.select(utf8_truncate_1024("s").alias("t")).collect()]
-    for orig, t in zip(samples, got):
-        b = t.encode("utf-8")
-        assert len(b) <= 1024
-        assert orig.startswith(t)  # truncation is a prefix, never mangled
-        if len(orig.encode("utf-8")) <= 1024:
-            assert t == orig
+    bad = [(s, g) for s, g in zip(samples, got) if g != _utf8_cap_py(s)]
+    assert not bad, bad[:3]
 
 
 def test_lemma_rules_three_way_lockstep(spark):

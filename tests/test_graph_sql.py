@@ -126,3 +126,22 @@ def test_native_graph_derives_from_mention_frame_in_one_hop(spark, doc_kg):
         above, cached, _ = plan.partition("InMemoryRelation")
         assert cached, t
         assert "Union" not in above and "MapInPandas" not in above, t
+
+
+def test_graph_plans_run_no_python_udf(spark, doc_kg):
+    """The span cap is a JVM expression: no graph table of either builder
+    crosses a scalar Python UDF boundary (the annotators' ``MapInPandas``
+    scans are the only Python left, below the tables)."""
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    docs = spark.createDataFrame([("d1", "Apple is based in Cupertino.")], DOCUMENT_SCHEMA)
+    builders = {
+        "native": doc_kg.graph(),
+        "via_bag": materialize_graph(doc_kg.bag()),
+        "pattern": materialize_graph(extract_triples_pattern(docs, alias_dict=alias_dict(spark))),
+    }
+    for b, graph in builders.items():
+        for t in GRAPH_TABLES:
+            plan = graph[t]._jdf.queryExecution().explainString(jmode)
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (b, t)

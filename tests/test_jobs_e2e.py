@@ -1,6 +1,7 @@
 """The one-command job, run as spark-submit runs it: jobs/build_kg.py
 over a transcript table must write the same graph the in-process
-pipeline builds, canonicalize every mention, and resume to a no-op."""
+pipeline builds, canonicalize every mention, and resume to a no-op that
+leaves the written graph untouched."""
 
 from __future__ import annotations
 
@@ -10,6 +11,14 @@ import sys
 
 def _rows(df):
     return sorted(map(repr, df.collect()))
+
+
+def _files(graph_dir, tables):
+    """{table: {(file, mtime_ns)}} of the written graph tables."""
+    return {
+        t: {(p.name, p.stat().st_mtime_ns) for p in (graph_dir / t).iterdir()}
+        for t in tables
+    }
 
 
 def test_build_kg_job_matches_pipeline(spark, tmp_path, monkeypatch, capsys):
@@ -56,6 +65,23 @@ def test_build_kg_job_matches_pipeline(spark, tmp_path, monkeypatch, capsys):
     }
     assert mention_ids and mention_ids <= canonical
 
+    graph_dir = out / "graph"
+    assert (graph_dir / "_COMPLETE").exists()
+    tables = [*want, "canonical_ids"]
+    written = _files(graph_dir, tables)
+    assert all(written[t] for t in tables)
+
+    # a resume with nothing new leaves the graph as it is
     runpy.run_path("jobs/build_kg.py", run_name="__main__")
     second = capsys.readouterr().out
     assert "'processed': 0" in second, second
+    assert _files(graph_dir, tables) == written
+
+    # without the marker (a crash mid-graph) the tables are rebuilt
+    (graph_dir / "_COMPLETE").unlink()
+    runpy.run_path("jobs/build_kg.py", run_name="__main__")
+    third = capsys.readouterr().out
+    assert "'processed': 0" in third, third
+    rebuilt = _files(graph_dir, tables)
+    assert all(rebuilt[t] != written[t] for t in tables)
+    assert (graph_dir / "_COMPLETE").exists()

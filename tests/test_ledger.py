@@ -12,6 +12,7 @@ from dstlr_spark.plans.ledger import (
     read_ledger,
     read_output,
     run_with_ledger,
+    stale_buckets,
 )
 from dstlr_spark.sources.transcripts import generate_transcripts
 
@@ -173,3 +174,23 @@ def test_lineage_recheck_reruns_changed_bucket(spark, tmp_path):
         read_output(spark, fresh_out)
     )
     assert stale_buckets(tr2, led, n_buckets=N_BUCKETS) == set()
+
+
+def test_absent_ledger_runs_no_job(spark, tmp_path):
+    """A first run has no ledger yet: the resume bookkeeping answers
+    "nothing done, nothing stale" without starting a Spark job (an empty
+    ``createDataFrame`` collect was a Python-task job of its own)."""
+    sc = spark.sparkContext
+    missing = str(tmp_path / "no_ledger")
+    tr = spark.createDataFrame(
+        [("c1", 0, "hi")], "conv_id string, turn_idx int, text string"
+    )
+    group = "test_absent_ledger_runs_no_job"
+    sc.setJobGroup(group, group)
+    try:
+        assert completed_buckets(spark, missing) == set()
+        assert stale_buckets(tr, missing, n_buckets=N_BUCKETS) == set()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []

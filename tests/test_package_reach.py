@@ -37,6 +37,10 @@ TEST_REFERENCES = {
     ),
     "queries.curation.cms_estimate": "tests/test_curation_queries.py::test_cms_estimate_bounds",
     "plans.pipeline.observe_metrics": "tests/test_metrics.py::test_observe_counts_triples_and_docs",
+    "operators.linking.link_mentions": "tests/test_linking_enrich.py::test_linking_argmax_and_nulls",
+    "operators.linking.resolve_aliases": (
+        "tests/test_linking_enrich.py::test_inflected_alias_entries_resolve"
+    ),
 }
 
 ROOT_FILES = ("bench.py", "bench_extra.py", "__spark_entry__.py")

@@ -162,7 +162,9 @@ def test_embedding_neardup_has_no_cartesian(spark):
 
 
 def test_linking_is_single_aggregate_no_sort(spark):
-    """Arg-max linking uses min_by hash aggregation — no window sort."""
+    """NativeKG's links are a projection of its cached mention frame:
+    the scan already resolved each mention's entity, so above the cache
+    there is no alias join, no window sort and no lemma-key lambda."""
     from dstlr_spark.plans.native_kg import NativeKG
     from dstlr_spark.queries.doc_kg import _aliases, _documents, _gazetteer
 
@@ -176,8 +178,11 @@ def test_linking_is_single_aggregate_no_sort(spark):
         plan = _plan(spark, kg.links_triples())
     finally:
         kg.unpersist()
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan  # alias dict broadcast, not shuffled
+    above, cached, _ = plan.partition("InMemoryRelation")
+    assert cached
+    assert "Join" not in above and "Window" not in above
+    assert "lambdafunction" not in above
+    assert "Exchange" not in above  # the cache is doc_id-partitioned
 
 
 def test_minhash_pairs_stages_posting_list_once(spark):
