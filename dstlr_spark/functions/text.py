@@ -55,18 +55,24 @@ def lemma_token_py(tok: str) -> str:
 
 
 def lemma_token(t: Column) -> Column:
-    """Spark-column implementation of the C2 lemma rules."""
+    """Spark-column implementation of the C2 lemma rules. Java's ``$``
+    also matches before a final line terminator (U+0085, U+2028, …), so
+    every rule is anchored at the true end, ``\\z``."""
     irr = F.element_at(
         F.create_map(*[F.lit(x) for kv in LEMMA_IRREGULARS.items() for x in kv]), t
     )
+
+    def rx(pattern: str) -> str:
+        return pattern.replace("$", r"\z")
+
     return (
         F.when(t != F.lower(t), t)
         .when(irr.isNotNull(), irr)
-        .when((F.length(t) >= 6) & t.rlike(_IES_RE), F.regexp_replace(t, "ies$", "y"))
-        .when(t.rlike(_SIBILANT_ES_RE), F.regexp_replace(t, "es$", ""))
+        .when((F.length(t) >= 6) & t.rlike(rx(_IES_RE)), F.regexp_replace(t, rx("ies$"), "y"))
+        .when(t.rlike(rx(_SIBILANT_ES_RE)), F.regexp_replace(t, rx("es$"), ""))
         .when(
-            (F.length(t) >= 4) & t.rlike(_PLAIN_S_RE) & ~t.rlike(_S_EXCL_RE),
-            F.regexp_replace(t, "s$", ""),
+            (F.length(t) >= 4) & t.rlike(rx(_PLAIN_S_RE)) & ~t.rlike(rx(_S_EXCL_RE)),
+            F.regexp_replace(t, rx("s$"), ""),
         )
         .otherwise(t)
     )

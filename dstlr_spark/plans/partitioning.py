@@ -27,11 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, multiple: int = 1) -> DataFrame:
-    """Spread ``df`` across at least ``defaultParallelism * multiple``
-    partitions, unless it already is."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * multiple
+def fan_out(df: DataFrame) -> DataFrame:
+    """Spread ``df`` across at least ``defaultParallelism`` partitions,
+    unless it already is."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     # Job-free partition probe: the planned physical plan's output
     # partitioning is fixed by its topmost exchange, so a frame that was
     # already spread answers from the plan alone (executing its

@@ -24,6 +24,7 @@ from dstlr_spark.operators.clean import (
 )
 from dstlr_spark.operators.extract import (
     apply_sentence_guard,
+    best_alias_entity,
     extract_mentions_native,
     relation_triples,
 )
@@ -196,11 +197,10 @@ def _kg(spark: SparkSession, sf_dir: str) -> NativeKG:
 
 
 def q_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    links = _kg(spark, sf_dir).links_triples()
-    return links.select(
-        "doc",
-        F.col("subjectValue").alias("mention_id"),
-        F.col("objectValue").alias("entity_id"),
+    return (
+        _kg(spark, sf_dir)
+        .mentions.select(F.col("doc_id").alias("doc"), "mention_id", "entity_id")
+        .distinct()
     )
 
 
@@ -303,16 +303,12 @@ def _mention_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     `kg_canonical_clusters` and `kg_canonical_triples` consume."""
     from dstlr_spark.operators.canonicalize import canonicalize_mentions
 
-    kg = _kg(spark, sf_dir)
-    links = (
-        kg.links_triples()
-        .where(F.col("objectValue").isNotNull())
-        .select(F.col("subjectValue").alias("mention_id"),
-                F.col("objectValue").alias("entity_id"))
-    )
+    m = _kg(spark, sf_dir).mentions
     return canonicalize_mentions(
-        kg.mentions.select("mention_id", "key").dropDuplicates(["mention_id"]),
-        links,
+        m.select("mention_id", "key").dropDuplicates(["mention_id"]),
+        m.where(F.col("entity_id").isNotNull())
+        .select("mention_id", "entity_id")
+        .distinct(),
     )
 
 
@@ -330,19 +326,31 @@ def q_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed) and one hash aggregate on the canonical key. The CC
     fixpoint itself is the already-audited star-edge pointer-doubling
     operator; everything after it is a single shuffle."""
-    kg = _kg(spark, sf_dir)
+    return _canonical_relations(spark, sf_dir).groupBy("subj", "relation", "obj").agg(
+        F.countDistinct("doc").cast("long").alias("n_docs"),
+        F.count(F.lit(1)).cast("long").alias("n_triples"),
+    )
+
+
+def _canonical_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ER-apply rows (doc, subj, relation, obj, conf): every
+    co-occurrence relation with both endpoint mentions rewritten to
+    their canonical ids, intra-cluster self-loops dropped — shared by
+    `kg_canonical_triples` and `kg_provenance_bundle`."""
     cc = _mention_canonical(spark, sf_dir)
     rels = (
-        kg.extraction_triples()
+        _kg(spark, sf_dir)
+        .extraction_triples()
         .where(F.col("relation").startswith("COOCCURS"))
         .select(
             "doc",
             F.col("subjectValue").alias("sm"),
             "relation",
             F.col("objectValue").alias("om"),
+            F.col("meta")["confidence"].alias("conf"),
         )
     )
-    j = (
+    return (
         rels.join(
             cc.select(F.col("mention_id").alias("sm"),
                       F.col("canonical_id").alias("subj")),
@@ -355,29 +363,24 @@ def q_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("subj") != F.col("obj"))
     )
-    return j.groupBy("subj", "relation", "obj").agg(
-        F.countDistinct("doc").cast("long").alias("n_docs"),
-        F.count(F.lit(1)).cast("long").alias("n_triples"),
-    )
 
 
 COMENTION_MAX_ENTITIES = 1_000  # per-doc entity cap for co-mention edges
 
 
 def _ent_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (doc, entity_id) links — the co-mention family's shared
-    input, staged ONCE per (session, sf_dir) via :mod:`_memo` (the
-    `_turn_spans` / `_linked_entity_pairs` pattern): ~20 graph queries
-    consume this frame, so a gate run materializes the links extraction
-    once instead of once per consumer."""
+    """Distinct (doc, entity_id) over the linked mention rows — the
+    co-mention family's shared input, staged ONCE per (session, sf_dir)
+    via :mod:`_memo` (the `_turn_spans` / `_linked_entity_pairs`
+    pattern): ~20 graph queries consume this frame, so a gate run
+    scans the mention cache once instead of once per consumer."""
     from dstlr_spark.queries._memo import staged
 
     def build() -> DataFrame:
         return (
             _kg(spark, sf_dir)
-            .links_triples()
-            .where(F.col("objectValue").isNotNull())
-            .select("doc", F.col("objectValue").alias("entity_id"))
+            .mentions.where(F.col("entity_id").isNotNull())
+            .select(F.col("doc_id").alias("doc"), "entity_id")
             .dropDuplicates(["doc", "entity_id"])
         )
 
@@ -396,33 +399,60 @@ def skipped_comention_docs(ent_docs: DataFrame, cap: int = COMENTION_MAX_ENTITIE
 
 
 def _comention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTINCT undirected co-mention edge set (src, dst) — staged
-    once per (session, sf_dir): eight graph-analytics queries re-derive
-    exactly this frame (`_comention_und(...).select("src",
-    "dst").distinct()`), so a gate run pays the doc-level pair join
-    once. Doc-weighted consumers (PMI, co-mention counts) still derive
-    from the staged `_ent_docs` directly — they need the per-doc rows
-    this frame deliberately collapses."""
+    """The DISTINCT undirected co-mention edge set (src, dst) — the
+    keys of `kg_entity_comention`'s pair counts, staged once per
+    (session, sf_dir) so the graph-analytics queries read one
+    checkpoint instead of re-running the doc-level pair join."""
     from dstlr_spark.queries._memo import staged
 
     def build() -> DataFrame:
-        return (
-            _comention_und(_ent_docs(spark, sf_dir))
-            .select("src", "dst")
-            .distinct()
+        return q_entity_comention(spark, sf_dir).select(
+            F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
         )
 
     return staged(spark, ("kg_comention_edges", sf_dir), build)
 
 
-def _comention_und(ent_docs: DataFrame, cap: int = COMENTION_MAX_ENTITIES) -> DataFrame:
-    """Distinct undirected co-mention edges (src < dst) over docs at or
-    below the per-doc entity cap — O(Σ min(doc_entities, cap)²)."""
-    kept = ent_docs.join(
+def _comention_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-mention adjacency (src, dst, degree): `_comention_edges`
+    symmetrized, each row carrying its ``src``'s degree (distinct
+    neighbors) — staged once per (session, sf_dir) for every query
+    that needs both edge directions or vertex degrees (adjacency
+    export, degree histogram, clustering, assortativity, hub audit,
+    PageRank, label propagation)."""
+    from dstlr_spark.queries._memo import staged
+
+    def build() -> DataFrame:
+        e = _comention_edges(spark, sf_dir)
+        return e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).withColumn("degree", F.count(F.lit(1)).over(Window.partitionBy("src")))
+
+    return staged(spark, ("kg_comention_adj", sf_dir), build)
+
+
+def _comention_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(entity_id, degree) per co-mention vertex with ≥ 1 edge."""
+    return (
+        _comention_adj(spark, sf_dir)
+        .select(F.col("src").alias("entity_id"), "degree")
+        .distinct()
+    )
+
+
+def _capped_ent_docs(ent_docs: DataFrame, cap: int = COMENTION_MAX_ENTITIES) -> DataFrame:
+    """``ent_docs`` minus the docs :func:`skipped_comention_docs` excludes."""
+    return ent_docs.join(
         F.broadcast(skipped_comention_docs(ent_docs, cap).select("doc")),
         "doc",
         "left_anti",
     )
+
+
+def _comention_und(ent_docs: DataFrame, cap: int = COMENTION_MAX_ENTITIES) -> DataFrame:
+    """Distinct undirected co-mention edges (src < dst) over docs at or
+    below the per-doc entity cap — O(Σ min(doc_entities, cap)²)."""
+    kept = _capped_ent_docs(ent_docs, cap)
     a = kept.alias("a")
     b = kept.alias("b")
     return (
@@ -443,16 +473,12 @@ def q_entity_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the co-mention graph: (degree,
     n_entities) — the graph-stats table a KG release ships first (hub
     detection, power-law sanity). Degree = distinct neighbors = edge
-    incidences over the distinct undirected edge set; two hash
-    aggregates over the edge frame, output bounded by max degree."""
-    edges = (
-        _comention_edges(spark, sf_dir)
+    incidences over the distinct undirected edge set, read off the
+    staged adjacency; one hash aggregate, output bounded by max
+    degree."""
+    return _comention_degrees(spark, sf_dir).groupBy("degree").agg(
+        F.count(F.lit(1)).alias("n_entities")
     )
-    ends = edges.select(F.col("src").alias("e")).unionByName(
-        edges.select(F.col("dst").alias("e"))
-    )
-    deg = ends.groupBy("e").agg(F.count(F.lit(1)).alias("degree"))
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_entities"))
 
 
 #: tokens of context kept on each side of a mention occurrence
@@ -503,29 +529,22 @@ def q_adjacency_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     Neo4j loader's per-node relationship groups,
     LoadTriples.scala:118-141, as a flat file instead of Cypher).
 
-    Scale shape: distinct undirected edges (already capped + audited),
-    symmetrized by a union, then ONE hash aggregate per vertex;
-    neighbor lists are degree-bounded — the same rows a graph store
-    would hold. A production run caps the list with slice() for
-    super-hubs; exact here because the oracle must hash-match."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    return sym.groupBy(F.col("src").alias("entity_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree"),
-        F.array_join(F.sort_array(F.collect_set("dst")), ",").alias(
-            "neighbors"
-        ),
+    Scale shape: the staged symmetrized adjacency (already capped +
+    audited), then ONE hash aggregate per vertex; neighbor lists are
+    degree-bounded — the same rows a graph store would hold. A
+    production run caps the list with slice() for super-hubs; exact
+    here because the oracle must hash-match."""
+    return (
+        _comention_adj(spark, sf_dir)
+        .groupBy(F.col("src").alias("entity_id"), "degree")
+        .agg(F.array_join(F.sort_array(F.collect_set("dst")), ",").alias("neighbors"))
     )
 
 
 def q_entity_comention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity co-mention graph: edges between entities linked within the
     same document, weighted by document count — the KG-analytics
-    aggregate layered on the links table (demo.md-style graph queries
+    aggregate layered on the linked mention rows (demo.md-style graph queries
     generalized to entity granularity). Per-doc entity cap + audit:
     see :func:`skipped_comention_docs`."""
     return (
@@ -613,35 +632,28 @@ def q_mention_turn_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _linked_mention_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every linked mention OCCURRENCE attributed to its turn:
     (conv_id, entity_id, pos, role, ts_s) — shared by the timeline,
-    bursts, salience, and role-profile queries. Occurrences come from
-    the persisted mention frame (one row per token hit); the link side
-    is per distinct (doc, mention) with a non-null resolved entity.
-    Staged once per (session, sf_dir) like :func:`_turn_spans` below
-    it: four gate queries consume the links-resolve + containment join,
-    so a sweep pays the corpus-sized joins once (on a cluster this is
-    an Iceberg stage table)."""
+    bursts, salience, and role-profile queries. Occurrences are the
+    persisted mention rows (one per token hit) whose scan-resolved
+    ``entity_id`` is non-null, so the only join is the turn
+    containment. Staged once per (session, sf_dir) like
+    :func:`_turn_spans`: four gate queries consume it, so a sweep pays
+    the corpus-sized join once (on a cluster this is an Iceberg stage
+    table)."""
     from dstlr_spark.queries._memo import staged
 
     def build() -> DataFrame:
-        kg = _kg(spark, sf_dir)
-        links = (
-            kg.links_triples()
-            .where(F.col("objectValue").isNotNull())
+        occ = (
+            _kg(spark, sf_dir)
+            .mentions.where(F.col("entity_id").isNotNull())
             .select(
-                F.col("doc").alias("conv_id"),
-                F.col("subjectValue").alias("mention_id"),
-                F.col("objectValue").alias("entity_id"),
+                F.col("doc_id").alias("conv_id"),
+                "entity_id",
+                F.col("pos").cast("long").alias("pos"),
+                F.col("begin").cast("long").alias("b"),
             )
         )
-        occ = kg.mentions.select(
-            F.col("doc_id").alias("conv_id"),
-            "mention_id",
-            F.col("pos").cast("long").alias("pos"),
-            F.col("begin").cast("long").alias("b"),
-        )
         return (
-            occ.join(links, ["conv_id", "mention_id"])
-            .join(_turn_spans(spark, sf_dir), "conv_id")
+            occ.join(_turn_spans(spark, sf_dir), "conv_id")
             .where(
                 (F.col("b") >= F.col("start"))
                 & (F.col("b") < F.col("start") + F.col("ln"))
@@ -1009,11 +1021,11 @@ def bucketed_window_pairs(a: DataFrame, bm: DataFrame, window: int) -> DataFrame
 def _linked_entity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-occurrence pairs whose BOTH endpoints resolve to KB
     entities, with the subject occurrence's document offset:
-    (conv_id, subj_entity, a_cls, b_cls, b) — shared by the whole
-    temporal / ER / novelty family (~15 gate queries), so it is STAGED
-    once per (session, sf_dir) via :mod:`queries._memo` exactly like
-    ``_turn_spans`` (on a cluster: an Iceberg stage table all
-    downstream jobs read).
+    (conv_id, subj_entity, obj_entity, a_cls, b_cls, a_pos, b_pos, b)
+    — shared by the whole temporal / ER / novelty family (~15 gate
+    queries), so it is STAGED once per (session, sf_dir) via
+    :mod:`queries._memo` exactly like ``_turn_spans`` (on a cluster: an
+    Iceberg stage table all downstream jobs read).
 
     The pair join is position-BUCKETED (the
     :mod:`operators.rangejoin` shape): a naive ``join(bm, "conv_id")``
@@ -1026,16 +1038,15 @@ def _linked_entity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_pos in bucket k, b_pos ≤ a_pos+W lands in k or k+1, never
     further), scan work per conversation drops to O(mentions · W),
     and the band predicate runs as a residual on bucket-collision
-    pairs only. Both link resolutions stay equi-joins against the
-    distinct-mention link table."""
+    pairs only. Both sides are the linked mention rows (scan-resolved
+    ``entity_id`` non-null), so no link join follows the pair join."""
     from dstlr_spark.queries._memo import staged
 
     def build() -> DataFrame:
-        kg = _kg(spark, sf_dir)
-        m = kg.mentions
+        m = _kg(spark, sf_dir).mentions.where(F.col("entity_id").isNotNull())
         a = m.select(
             F.col("doc_id").alias("conv_id"),
-            F.col("mention_id").alias("a_mid"),
+            F.col("entity_id").alias("subj_entity"),
             F.col("entity_class").alias("a_cls"),
             F.col("pos").alias("a_pos"),
             F.col("key").alias("a_key"),
@@ -1043,34 +1054,14 @@ def _linked_entity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bm = m.select(
             F.col("doc_id").alias("conv_id"),
-            F.col("mention_id").alias("b_mid"),
+            F.col("entity_id").alias("obj_entity"),
             F.col("entity_class").alias("b_cls"),
             F.col("pos").alias("b_pos"),
             F.col("key").alias("b_key"),
         )
-        pairs = bucketed_window_pairs(a, bm, COOCCUR_WINDOW).where(
+        return bucketed_window_pairs(a, bm, COOCCUR_WINDOW).where(
             F.col("a_key") != F.col("b_key")
         )
-        links = (
-            kg.links_triples()
-            .where(F.col("objectValue").isNotNull())
-            .select(
-                F.col("doc").alias("conv_id"),
-                F.col("subjectValue").alias("mention_id"),
-                F.col("objectValue").alias("entity_id"),
-            )
-        )
-        subj = links.select(
-            "conv_id",
-            F.col("mention_id").alias("a_mid"),
-            F.col("entity_id").alias("subj_entity"),
-        )
-        obj = links.select(
-            "conv_id",
-            F.col("mention_id").alias("b_mid"),
-            F.col("entity_id").alias("obj_entity"),
-        )
-        return pairs.join(subj, ["conv_id", "a_mid"]).join(obj, ["conv_id", "b_mid"])
 
     return staged(spark, ("kg_linked_entity_pairs", sf_dir), build)
 
@@ -1085,11 +1076,10 @@ def q_triple_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the co-occurrence pair join is the SAME per-document
     window-bounded self-join as relation extraction (≤ W partners per
-    occurrence, conversation-bounded); both link resolutions are
-    equi-joins against the distinct-mention link table; the turn
-    attribution is conversation-bounded; the final rollup is one hash
-    aggregate on the entity-pair key with map-side partials. Nothing
-    here is corpus-quadratic."""
+    occurrence, conversation-bounded) over the linked mention rows; the
+    turn attribution is conversation-bounded; the final rollup is one
+    hash aggregate on the entity-pair key with map-side partials.
+    Nothing here is corpus-quadratic."""
     return (
         _linked_entity_pairs(spark, sf_dir)
         .join(_turn_spans(spark, sf_dir), "conv_id")
@@ -1236,28 +1226,13 @@ def q_comention_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle hashes identically; negative values mean
     anti-association.
 
-    Scale shape: pair counts are the co-mention aggregate (already
+    Scale shape: pair counts are `kg_entity_comention` (already
     capped per doc + audited); marginals are one vertex-sized hash agg
     joined twice onto the pair frame (vertex ≪ edge scale, AQE
     broadcasts when it fits); N is a 1-row scalar broadcast (audited
     under _ALLOWED_SCALAR_BROADCAST). No windows, no driver loops."""
-    ed = _ent_docs(spark, sf_dir)
-    kept = ed.join(
-        F.broadcast(skipped_comention_docs(ed).select("doc")), "doc", "left_anti"
-    ).localCheckpoint()  # consumed 3× (pairs, marginals, N): cut lineage once
-    a, b = kept.alias("a"), kept.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.doc") == F.col("b.doc"))
-            & (F.col("a.entity_id") < F.col("b.entity_id")),
-        )
-        .groupBy(
-            F.col("a.entity_id").alias("entity_a"),
-            F.col("b.entity_id").alias("entity_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
+    pairs = q_entity_comention(spark, sf_dir)
+    kept = _capped_ent_docs(_ent_docs(spark, sf_dir))
     marg = kept.groupBy("entity_id").agg(F.count(F.lit(1)).cast("long").alias("c"))
     n_docs_total = kept.select("doc").distinct().agg(
         F.count(F.lit(1)).cast("long").alias("n_total")
@@ -1315,34 +1290,13 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     conflation; reference parity: the graph-analytics layer the Neo4j
     store exposes, README.md:136-183, computed engine-side).
 
-    Scale shape: the same canonical-order triangle enumeration as
-    ``kg_entity_triangles`` (two edge-scale equi-joins on a capped edge
-    list) plus one vertex-sized degree aggregate and a vertex-sized
-    left join — no new shuffle class; deg<2 vertices report 0 ppm."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-        # already localCheckpoint'd by the staging layer — do not re-copy
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy(F.col("src").alias("entity_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
-    e1 = edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
-    e2 = edges.select(F.col("src").alias("y"), F.col("dst").alias("z"))
-    e3 = edges.select(F.col("src").alias("x"), F.col("dst").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"])
-    corners = (
-        tri.select(F.col("x").alias("entity_id"))
-        .unionByName(tri.select(F.col("y").alias("entity_id")))
-        .unionByName(tri.select(F.col("z").alias("entity_id")))
-    )
-    tcnt = corners.groupBy("entity_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_triangles")
-    )
+    Scale shape: the triangle counts are ``kg_entity_triangles`` (two
+    edge-scale equi-joins on a capped edge list), the degrees come off
+    the staged adjacency, and one vertex-sized left join combines them
+    — no new shuffle class; deg<2 vertices report 0 ppm."""
     return (
-        deg.join(tcnt, "entity_id", "left")
+        _comention_degrees(spark, sf_dir)
+        .join(q_entity_triangles(spark, sf_dir), "entity_id", "left")
         .select(
             "entity_id",
             "degree",
@@ -1442,28 +1396,20 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact inputs (terms < 2^53 up to ~10^8-edge graphs; past that,
     switch the moment sums to DECIMAL(38,0) — same plan shape).
 
-    Scale shape: one vertex-sized degree aggregate, one edge-scale
-    join to attach endpoint degrees (co-partitioned on the edge key),
-    one global single-row aggregate with map-side partials."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-        # already localCheckpoint'd by the staging layer — do not re-copy
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).cast("long").alias("d")
-    )
-    paired = (
-        sym.join(deg.select(F.col("id").alias("src"), F.col("d").alias("dx")), "src")
-        .join(deg.select(F.col("id").alias("dst"), F.col("d").alias("dy")), "dst")
+    Scale shape: the staged adjacency carries each row's source
+    degree; one edge-scale join attaches the target degree, then one
+    global single-row aggregate with map-side partials."""
+    paired = _comention_adj(spark, sf_dir).join(
+        _comention_degrees(spark, sf_dir).select(
+            F.col("entity_id").alias("dst"), F.col("degree").alias("dy")
+        ),
+        "dst",
     )
     agg = paired.agg(
         F.count(F.lit(1)).cast("long").alias("m2"),
-        F.sum(F.col("dx") * F.col("dy")).cast("long").alias("sum_xy"),
-        F.sum("dx").cast("long").alias("sum_x"),
-        F.sum(F.col("dx") * F.col("dx")).cast("long").alias("sum_xx"),
+        F.sum(F.col("degree") * F.col("dy")).cast("long").alias("sum_xy"),
+        F.sum("degree").cast("long").alias("sum_x"),
+        F.sum(F.col("degree") * F.col("degree")).cast("long").alias("sum_xx"),
     )
     num = F.col("m2") * F.col("sum_xy") - F.col("sum_x") * F.col("sum_x")
     den = F.col("m2") * F.col("sum_xx") - F.col("sum_x") * F.col("sum_x")
@@ -1538,26 +1484,15 @@ def q_community_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _alias_winners(spark: SparkSession) -> DataFrame:
-    """(key, entity_id): the linker's deterministic per-key argmax over
-    the alias dictionary (prior DESC, entity ASC — exactly the batch
-    links' ROW_NUMBER rule), alias text lemma-normalized the same way
-    both link join sides are (J2). Dictionary-sized: the broadcast
-    stand-in for joining the corpus-scale link table when only the
-    winning entity per key is needed."""
-    a = _aliases(spark).select(
-        F.array_join(
-            F.transform(F.split("alias", " "), lemma_token), " "
-        ).alias("key"),
-        "entity_id",
-        "prior",
-    )
-    w = Window.partitionBy("key").orderBy(
-        F.col("prior").desc(), F.col("entity_id").asc()
-    )
-    return (
-        a.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("key", "entity_id")
+    """(key, entity_id): the linker's per-key arg-max over the alias
+    dictionary — :func:`best_alias_entity`, the same dictionary the
+    mention scan resolves every ``entity_id`` with, as a local frame.
+    Dictionary-sized: the broadcast stand-in for joining the
+    corpus-scale mention rows when only the winning entity per key is
+    needed."""
+    return spark.createDataFrame(
+        list(best_alias_entity(_aliases(spark)).items()),
+        "key string, entity_id string",
     )
 
 
@@ -1728,17 +1663,9 @@ def q_distance_hub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped operator must ship (the ``dedup_lsh_skipped_buckets``
     pattern: cap loudly, never silently).
 
-    Scale shape: one hash aggregate on the symmetrized edge list —
-    vertex-sized output."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-    )
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    return sym.groupBy(F.col("src").alias("entity_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree"),
-    ).select(
+    Scale shape: the degrees of the staged adjacency — vertex-sized
+    output."""
+    return _comention_degrees(spark, sf_dir).select(
         "entity_id",
         "degree",
         F.when(F.col("degree") > DIST_HUB_DEGREE_CAP, F.lit(1))
@@ -2252,42 +2179,28 @@ def q_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     this table is the go/no-go gate before trusting block-local
     entity resolution at scale.
 
-    Scale shape: one equi-join of the persisted mention frame against
-    the distinct-mention link table (the same join every provenance
-    query pays), two hash aggregates keyed on the block, and one
-    block-partitioned window over per-entity counts (entity
-    cardinality per block is dictionary-scale)."""
-    kg = _kg(spark, sf_dir)
-    occ = kg.mentions.select(
-        F.col("doc_id").alias("conv_id"), "mention_id", "key"
-    )
-    links = kg.links_triples().select(
-        F.col("doc").alias("conv_id"),
-        F.col("subjectValue").alias("mention_id"),
-        F.col("objectValue").alias("entity_id"),
-    )
-    j = occ.join(links, ["conv_id", "mention_id"], "left")
-    base = j.groupBy(F.col("key").alias("block_key")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_occurrences"),
-        F.sum(F.when(F.col("entity_id").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_linked"),
-        F.countDistinct("entity_id").cast("long").alias("n_entities"),
-    )
+    Scale shape: one scan of the persisted mention frame (each row
+    carries its scan-resolved ``entity_id``, null when unlinked), one
+    hash aggregate on (block, entity), and one block-partitioned window
+    over those counts that totals the block and picks its top linked
+    entity (entity cardinality per block is dictionary-scale)."""
     ec = (
-        j.where(F.col("entity_id").isNotNull())
-        .groupBy(F.col("key").alias("block_key"), "entity_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        _kg(spark, sf_dir)
+        .mentions.groupBy(F.col("key").alias("block_key"), "entity_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    w = Window.partitionBy("block_key").orderBy(
-        F.col("cnt").desc(), F.col("entity_id").asc()
-    )
-    top = (
-        ec.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("block_key", F.col("entity_id").alias("top_entity"), "cnt")
-    )
-    return base.join(top, "block_key", "left").select(
+    blk = Window.partitionBy("block_key")
+    linked = F.col("entity_id").isNotNull()
+    top_first = blk.orderBy(~linked, F.col("cnt").desc(), F.col("entity_id").asc())
+    return ec.select(
+        "block_key",
+        F.sum("cnt").over(blk).alias("n_occurrences"),
+        F.sum(F.when(linked, F.col("cnt")).otherwise(0)).over(blk).alias("n_linked"),
+        F.count("entity_id").over(blk).alias("n_entities"),
+        F.col("entity_id").alias("top_entity"),
+        "cnt",
+        F.row_number().over(top_first).alias("rn"),
+    ).where(F.col("rn") == 1).select(
         "block_key",
         "n_occurrences",
         "n_linked",
@@ -2949,32 +2862,7 @@ def q_provenance_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
     by per-triple evidence, and a production run would cap it with
     slice() — kept exact here because the corpus' evidence lists are
     small and the oracle must hash-match."""
-    kg = _kg(spark, sf_dir)
-    cc = _mention_canonical(spark, sf_dir)
-    rels = (
-        kg.extraction_triples()
-        .where(F.col("relation").startswith("COOCCURS"))
-        .select(
-            "doc",
-            F.col("subjectValue").alias("sm"),
-            "relation",
-            F.col("objectValue").alias("om"),
-            F.col("meta")["confidence"].alias("conf"),
-        )
-    )
-    j = (
-        rels.join(
-            cc.select(F.col("mention_id").alias("sm"),
-                      F.col("canonical_id").alias("subj")),
-            "sm",
-        )
-        .join(
-            cc.select(F.col("mention_id").alias("om"),
-                      F.col("canonical_id").alias("obj")),
-            "om",
-        )
-        .where(F.col("subj") != F.col("obj"))
-    )
+    j = _canonical_relations(spark, sf_dir)
     return j.groupBy("subj", "relation", "obj").agg(
         F.countDistinct("doc").cast("long").alias("n_docs"),
         F.count(F.lit(1)).cast("long").alias("n_obs"),
@@ -3064,21 +2952,14 @@ def q_nil_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME id — the standard NIL-clustering step that turns an
     entity-linking gap list into KB growth.
 
-    Scale shape: the null-link frame is per distinct (doc, mention);
-    occurrences join back on the (doc, mention) equi-key (both
-    conversation-bounded); the rollup is one hash aggregate on the
-    lemma key. The exact distinct-doc count per key is the only
+    Scale shape: a filter of the persisted mention frame on a null
+    scan-resolved ``entity_id``, then one hash aggregate on the lemma
+    key. The exact distinct-doc count per key is the only
     heavyweight — at true corpus scale swap for approx_count_distinct
     (kept exact here because the oracle must hash-match)."""
-    kg = _kg(spark, sf_dir)
-    nil = (
-        kg.links_triples()
-        .where(F.col("objectValue").isNull())
-        .select(F.col("doc").alias("doc_id"), F.col("subjectValue").alias("mention_id"))
-    )
-    occ = kg.mentions.select("doc_id", "mention_id", "key")
     return (
-        occ.join(nil, ["doc_id", "mention_id"])
+        _kg(spark, sf_dir)
+        .mentions.where(F.col("entity_id").isNull())
         .groupBy("key")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_occurrences"),
@@ -3158,21 +3039,17 @@ def q_entity_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       rₖ₊₁(v) = (0.15·SCALE DIV N) + (85 · Σ_{u→v} (rₖ(u) DIV deg(u))) DIV 100
     All divisions are floor divisions of non-negative ints, so Spark DIV
     and DuckDB // agree bit-for-bit; the oracle unrolls PAGERANK_ITERS
-    rounds in CTEs. Per round: ranks ⨝ deg FIRST (both vertex-sized,
-    same key — the cheap join) to form per-source contributions, then
-    ONE edge-scale join + aggregate — the standard Pregel-free
-    DataFrame PageRank with exactly one shuffle of the edge frame per
-    round (the round-3 shape joined edges twice per round); lineage cut
+    rounds in CTEs. Per round: ONE edge-scale join of the staged
+    adjacency (each row carries its source degree) with the ranks,
+    then one aggregate — the standard Pregel-free DataFrame PageRank
+    with exactly one shuffle of the edge frame per round; lineage cut
     per round with localCheckpoint (a checkpoint dir on a cluster).
     """
     # both upstream frames come from the per-session staging layer
-    # (_ent_docs → verts, _comention_edges → edges): one
+    # (_ent_docs → verts, _comention_adj → edges): one
     # materialization each per (session, sf_dir), re-read every round
     ed = _ent_docs(spark, sf_dir)
-    und = _comention_edges(spark, sf_dir)
-    edges = und.unionByName(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    adj = _comention_adj(spark, sf_dir)
     # verts include entities seen ONLY in capped docs: isolated vertices
     # keep the teleport rank rather than vanishing
     verts = ed.select(F.col("entity_id").alias("id")).distinct().localCheckpoint()
@@ -3181,20 +3058,14 @@ def q_entity_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         return verts.select(
             F.col("id").alias("entity_id"), F.lit(0).cast("long").alias("rank_ppb")
         )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-
     teleport = (15 * _PR_SCALE // 100) // n  # exact ints only — no float 0.15
     ranks = verts.select("id", F.lit(_PR_SCALE // n).cast("long").alias("rank_ppb"))
     for _ in range(PAGERANK_ITERS):
-        # vertex-sized pre-join: per-source contribution rank/deg —
-        # isolated vertices (no deg row) contribute nothing, as before
-        per_src = ranks.join(deg, ranks["id"] == deg["src"]).select(
-            "src", F.expr("rank_ppb DIV deg").alias("c")
-        )
+        # isolated vertices (no adjacency row) contribute nothing
         contrib = (
-            edges.join(per_src, "src")
+            adj.join(ranks.withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
+            .agg(F.sum(F.expr("rank_ppb DIV degree")).alias("s"))
         )
         ranks = (
             verts.join(contrib, verts["id"] == contrib["dst"], "left")
@@ -3329,10 +3200,7 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     community partition both report is ONE computation, not two that
     could drift."""
     ed = _ent_docs(spark, sf_dir)
-    und = _comention_edges(spark, sf_dir)
-    edges = und.unionByName(
-        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    edges = _comention_adj(spark, sf_dir)
     verts = ed.select(F.col("entity_id").alias("id")).distinct().localCheckpoint()
     labels = verts.select("id", F.col("id").alias("label"))
     for _ in range(LABELPROP_ITERS):
@@ -3380,12 +3248,11 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_entity_mention_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity mention statistics over the linked graph (A4 analog)."""
-    g = _graph(spark, sf_dir)
-    men = g["mentions_edges"].select("doc_id", "mention_id")
-    links = g["links_to"]
+    """Per-entity mention statistics over the linked mention rows (A4
+    analog): occurrences and distinct docs per resolved entity."""
     return (
-        men.join(links, "mention_id", "inner")
+        _kg(spark, sf_dir)
+        .mentions.where(F.col("entity_id").isNotNull())
         .groupBy("entity_id")
         .agg(
             F.count(F.lit(1)).alias("n_mentions"),

@@ -11,11 +11,13 @@ from pyspark.sql import functions as F
 from dstlr_spark.functions.text import lemma_key, utf8_truncate_1024
 from dstlr_spark.operators.extract import _lemma_key_py
 
-# U+00A0, U+001C and U+0085 are whitespace to Python's ``\s`` but not
-# to Java's, which is what Spark's split uses
+# U+00A0, U+001C, U+0085, U+2028 and U+2029 are whitespace to Python's
+# ``\s`` but not to Java's, which is what Spark's split uses; the last
+# three are also Java line terminators, which a regex ``$`` matches
+# before. ``s``, ``e`` and ``i`` let the lemma suffix rules fire.
 _ALPHABET = (
-    list("abcXYZ019 ") + list(".?,:;'\"!") + list("日本語áéßø€") + ["  ", "\t"]
-    + ["\xa0", "\x1c", "\x85"]
+    list("abcseiXYZ019 ") + list(".?,:;'\"!") + list("日本語áéßø€") + ["  ", "\t"]
+    + ["\xa0", "\x1c", "\x85", "\u2028", "\u2029"]
 )
 
 
@@ -30,6 +32,7 @@ def _random_strings(n=500, seed=1234):
 
 def test_lemma_key_fuzz(spark):
     samples = [s for s in _random_strings() if s.strip()]
+    samples += ["boxes\x85", "companies\u2028", "tables\u2029"]
     df = spark.createDataFrame([(s,) for s in samples], "s string")
     got = [r["k"] for r in df.select(lemma_key("s").alias("k")).collect()]
     want = [_lemma_key_py(s) for s in samples]

@@ -414,6 +414,73 @@ def test_linked_entity_pairs_staged_and_bucketed(spark):
     assert _linked_entity_pairs(spark, sf) is pairs
 
 
+def _mention_scans_and_mention_joins(plan: str) -> tuple[int, bool]:
+    """(number of mention-cache scans, whether any join is keyed on
+    mention_id) in a formatted plan."""
+    scans = len(re.findall(r"^\(\d+\) InMemoryTableScan", plan, re.M))
+    return scans, bool(re.search(r"keys \[\d+\]: \[[^\]]*mention_id", plan))
+
+
+def test_link_consumers_read_entity_off_mention_rows(spark, monkeypatch):
+    """Every mention row carries its scan-resolved entity_id, so the
+    NIL, blocking and turn-attribution builders scan the mention cache
+    once and never join a link frame back on mention_id. The staged
+    builder is planned from its build function (the memo layer is
+    bypassed for its key), not from the checkpoint it returns."""
+    from dstlr_spark.queries import _memo
+    from dstlr_spark.queries.doc_kg import (
+        _linked_mention_turns,
+        q_blocking_quality,
+        q_nil_entities,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    staged = _memo.staged
+
+    def unstaged(spark, key, build, checkpoint=True):
+        if key[0] == "kg_linked_mention_turns":
+            return build()
+        return staged(spark, key, build, checkpoint)
+
+    monkeypatch.setattr(_memo, "staged", unstaged)
+    for build in (q_nil_entities, q_blocking_quality, _linked_mention_turns):
+        plan = _plan(spark, build(spark, sf))
+        assert _mention_scans_and_mention_joins(plan) == (1, False), build.__name__
+
+
+def test_alias_winners_plans_no_window(spark):
+    """The alias winners are best_alias_entity's arg-max dictionary as
+    a local frame — no second, window-based arg-max spelling."""
+    from dstlr_spark.queries.doc_kg import _alias_winners
+
+    assert "Window" not in _plan(spark, _alias_winners(spark))
+
+
+def test_comention_adjacency_staged_once(spark):
+    """One staged symmetrized co-mention adjacency per session: the
+    degree and adjacency consumers read its checkpoint and none of
+    them unions the edge list with its reverse again."""
+    from dstlr_spark.queries import _memo
+    from dstlr_spark.queries.doc_kg import (
+        _comention_adj,
+        q_adjacency_list,
+        q_degree_assortativity,
+        q_distance_hub_audit,
+        q_entity_degree_hist,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _memo._CACHE if k[:2] == (app, "kg_comention_adj")]:
+        del _memo._CACHE[k]
+    adj = _comention_adj(spark, sf)
+    assert _comention_adj(spark, sf) is adj
+    for q in (q_adjacency_list, q_degree_assortativity, q_distance_hub_audit,
+              q_entity_degree_hist):
+        plan = _plan(spark, q(spark, sf))
+        assert "ExistingRDD" in plan and "Union" not in plan, q.__name__
+
+
 def test_bucketed_window_pairs_plans_as_equi_join(spark):
     """The pair join's build shape: the _bkt position bucket must be
     part of the join EQUI-key (hash or sort-merge join on conv_id +
