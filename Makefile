@@ -9,6 +9,7 @@
 #   make bench           # just the headline bench JSON line
 #   make selftest        # perfbench self-test (not part of gate)
 #   make perfbench       # one untraced run per benchmark workload (not part of gate)
+#   make perfbench-trace # one traced seed-31 run per workload: correct, failed and its job counts (not part of gate)
 #   make graph-parity    # graph-builder parity, plan and exact span-cap fuzz tests (not part of gate)
 #   make canon-parity    # canonicalization tests + its four oracle queries (not part of gate)
 #   make extract-parity  # extraction, linking and plan tests + the four extraction oracle queries (not part of gate)
@@ -25,7 +26,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench selftest perfbench graph-parity canon-parity extract-parity media-parity kg-parity
+.PHONY: gate oracles test bench selftest perfbench perfbench-trace graph-parity canon-parity extract-parity media-parity kg-parity
 
 oracles:
 	@mkdir -p $(OUT)
@@ -51,6 +52,19 @@ perfbench:
 	for w in docs_build transcripts_build; do \
 	  python3 perfbench/run.py --workload $$w --seed 1 --seconds 5 --trace 0 | tee $(OUT)/perfbench_$$w.log; \
 	  tail -1 $(OUT)/perfbench_$$w.log | grep -q '"correct": true'; \
+	done
+
+# per-layer job counts of one traced seed-31 run of each workload; fails
+# unless the run reports "correct": true
+perfbench-trace:
+	@mkdir -p $(OUT)
+	for w in docs_build transcripts_build; do \
+	  python3 perfbench/run.py --workload $$w --seed 31 --seconds 1 --trace 1 > $(OUT)/perfbench_trace_$$w.log; \
+	  tail -1 $(OUT)/perfbench_trace_$$w.log | python3 -c 'import json, sys; \
+	    d = json.load(sys.stdin); \
+	    jobs = [k + "=" + format(v["value"], "g") for k, v in d["metrics"].items() if k.endswith("jobs")]; \
+	    print(sys.argv[1], "correct", d["correct"], "failed", d["failed"], *jobs); \
+	    sys.exit(not d["correct"])' $$w; \
 	done
 
 # quick pre-check for a change to either graph builder

@@ -24,12 +24,13 @@ Design for 10^12-turn scale:
   over the symmetric edge set: each round is a few joins and one
   aggregate; lineage is cut every round with ``localCheckpoint`` (on a
   cluster: a checkpoint dir) so plans don't grow exponentially. The
-  loop stops when no label changes.
+  checkpoint job also counts the round's changed labels, and the loop
+  stops when none changed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -96,6 +97,9 @@ def connected_components(
         chain = stepped.select(
             F.col("id").alias("component"), F.col("component").alias("root")
         )
+        # the round's change count is observed on the checkpoint job
+        # that materializes the labels, not counted by a job of its own
+        moved = Observation()
         labels = (
             stepped.join(chain, "component", "left")
             .select(
@@ -106,9 +110,12 @@ def connected_components(
                 ).alias("component"),
                 "prev",
             )
+            .observe(
+                moved, F.count_if(F.col("component") != F.col("prev")).alias("n")
+            )
             .localCheckpoint()
         )
-        changed = labels.where(F.col("component") != F.col("prev")).count()
+        changed = moved.get["n"]
         if changed == 0:
             break
     if changed != 0:

@@ -222,20 +222,20 @@ class _Triples:
 
 _MENTION_DDL = (
     "doc_id string, mention_id string, entity_class string, span string, "
-    "begin int, end int, pos int, key string"
+    "begin int, end int, pos int, key string, entity_id string"
 )
 _MENTION_COLUMNS = [f.split()[0] for f in _MENTION_DDL.split(", ")]
 
 
-def _mention_scan_batches(gaz: dict[str, str], best_entity: dict[str, str] | None = None):
+def _mention_scan_batches(gaz: dict[str, str], best_entity: dict[str, str]):
     """Build the mapInPandas body for the Arrow mention scanner.
 
     Per Arrow batch of (doc_id, contents): tokenize with offsets and keep
     only gazetteer hits (:func:`_gazetteer_hits`), emitting the mention
     frame directly. The token stream never leaves the worker — no
-    shuffle, no 20x exchange. With ``best_entity`` (alias key → arg-max
-    entity id, :func:`best_alias_entity`) each row also carries its
-    resolved ``entity_id`` (null when unresolvable), the same
+    shuffle, no 20x exchange. Each row also carries its resolved
+    ``entity_id`` from ``best_entity`` (alias key → arg-max entity id,
+    :func:`best_alias_entity`; null when unresolvable), the same
     ``best_entity.get(key)`` the fused bag's LINKS_TO rows use.
 
     Both dictionaries may be plain dicts (tests) or ``sc.broadcast``
@@ -243,15 +243,13 @@ def _mention_scan_batches(gaz: dict[str, str], best_entity: dict[str, str] | Non
     closure would be re-serialized into EVERY task binary, while a
     broadcast ships once per executor (see :func:`_bc_value`).
     """
-    names = _MENTION_COLUMNS + (["entity_id"] if best_entity is not None else [])
-
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz_d = _bc_value(gaz)
         best_d = _bc_value(best_entity)
         key_of = _token_key_fn()
         for pdf in batches:
-            cols = {n: [] for n in names}
-            doc, mid, cls, span, begin, end, pos, key = (
+            cols = {n: [] for n in _MENTION_COLUMNS}
+            doc, mid, cls, span, begin, end, pos, key, ent = (
                 cols[n].append for n in _MENTION_COLUMNS
             )
             for doc_id, contents in zip(pdf["doc_id"], pdf["contents"]):
@@ -268,22 +266,21 @@ def _mention_scan_batches(gaz: dict[str, str], best_entity: dict[str, str] | Non
                     end(e)
                     pos(p)
                     key(k)
-                if best_d is not None:
-                    cols["entity_id"].extend(best_d.get(h[1]) for h in hits)
+                    ent(best_d.get(k))
             yield _frame(cols)
 
     return scan
 
 
 def extract_mentions_native(
-    documents: DataFrame, gazetteer: DataFrame, aliases: DataFrame | None = None
+    documents: DataFrame, gazetteer: DataFrame, aliases: DataFrame
 ) -> DataFrame:
     """Token-level mention detection (X3).
 
     Returns (doc_id, mention_id, entity_class, span, begin, end, pos,
-    key), plus ``entity_id`` when ``aliases`` is given: each mention's
-    link (X7), resolved inside the scan against the alias dictionary
-    reduced by :func:`best_alias_entity` — the reference's in-annotator
+    key, entity_id): ``entity_id`` is each mention's link (X7), resolved
+    inside the scan against the alias dictionary reduced by
+    :func:`best_alias_entity` — the reference's in-annotator
     ``mention.entity()`` (ExtractTriples.scala:105,216-218).
 
     Arrow-batched mapInPandas scanner: tokenize + offsets + gazetteer
@@ -293,13 +290,9 @@ def extract_mentions_native(
     gaz = _broadcast(
         documents, {r["term"]: r["entity_class"] for r in gazetteer.collect()}
     )
-    ddl = _MENTION_DDL
-    best = None
-    if aliases is not None:
-        best = _broadcast(documents, best_alias_entity(aliases))
-        ddl += ", entity_id string"
+    best = _broadcast(documents, best_alias_entity(aliases))
     return documents.select("doc_id", "contents").mapInPandas(
-        _mention_scan_batches(gaz, best), ddl
+        _mention_scan_batches(gaz, best), _MENTION_DDL
     )
 
 

@@ -14,10 +14,15 @@ Design (SURVEY.md §2.9):
   ``out_dir/bucket=<b>`` with overwrite semantics (idempotent: a
   re-run of a half-written bucket replaces it).
 - AFTER the data commit, one ledger row is appended:
-  (bucket, n_input_rows, n_triples, wall_sec, finished_ts). The
-  data-then-ledger order makes the ledger a conservative watermark —
-  a crash between the two re-runs one bucket, never skips one.
-- Resume = anti-join pending buckets against the ledger.
+  (bucket, n_input_rows, input_fingerprint, n_triples, wall_sec,
+  finished_ts). The data-then-ledger order makes the ledger a
+  conservative watermark — a crash between the two re-runs one bucket,
+  never skips one.
+- Resume = the ledger read once per run into a ``{bucket: row}`` dict;
+  the pending buckets are the ones missing from it. The triple counts
+  are observed on the write that commits them (the reference likewise
+  counts its output with accumulators on the job that does the work,
+  ExtractTriples.scala:46-48,140), so the output is never read back.
 
 At cluster scale ``n_buckets`` is sized so one bucket ≈ one
 comfortable job (e.g. 4096 buckets over 10^12 turns); Iceberg snapshot
@@ -26,11 +31,12 @@ commits replace the directory-overwrite semantics.
 
 from __future__ import annotations
 
+import shutil
 import time
 from pathlib import Path
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 
 LEDGER_SCHEMA = (
@@ -49,79 +55,31 @@ def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_dir)
 
 
-def _ledger_rows(spark: SparkSession, ledger_dir: str, *cols: str) -> list:
-    """The ledger's rows (one per committed bucket); an absent ledger is
-    no rows, answered without a Spark job."""
+def _committed(spark: SparkSession, ledger_dir: str) -> dict[int, Row]:
+    """The ledger as ``{bucket: row}`` (at most ``n_buckets`` rows); an
+    absent ledger is ``{}``, answered without a Spark job."""
     if not Path(ledger_dir).exists():
-        return []
-    return read_ledger(spark, ledger_dir).select(*cols).collect()
+        return {}
+    return {r["bucket"]: r for r in read_ledger(spark, ledger_dir).collect()}
 
 
-def completed_buckets(spark: SparkSession, ledger_dir: str) -> set[int]:
-    return {r["bucket"] for r in _ledger_rows(spark, ledger_dir, "bucket")}
-
-
-def stale_buckets(
-    transcripts: DataFrame,
-    ledger_dir: str,
-    key: str = "conv_id",
-    n_buckets: int = 16,
-) -> set[int]:
-    """Ledgered buckets whose CURRENT input no longer matches the
-    fingerprint recorded at commit time — the lineage check the north
-    rule's 'per-partition lineage' exists for: upstream data changed
-    (backfill, compaction rewrite, late-arriving turns) after a bucket
-    was committed, so its output is silently stale even though the
-    ledger says done. One grouped aggregate over the input; compare is
-    driver-side over n_buckets rows."""
-    spark = transcripts.sparkSession
-    recorded = {
-        r["bucket"]: (r["n_input_rows"], r["input_fingerprint"])
-        for r in _ledger_rows(
-            spark, ledger_dir, "bucket", "n_input_rows", "input_fingerprint"
-        )
-    }
-    if not recorded:
-        return set()
-    current = {
+def _fingerprints(
+    df: DataFrame, key: str, n_buckets: int
+) -> dict[int, tuple[int, int]]:
+    """Per-bucket lineage of ``df``: ``{bucket: (n_rows, fingerprint)}``,
+    the fingerprint an order-independent xor-fold of the rows' content
+    hashes — exact under any partitioning or order, so a bucket whose
+    input changed upstream (backfill, compaction rewrite, late turns)
+    after its commit is detectable. One grouped aggregate."""
+    return {
         r["_bucket"]: (r["n"], r["fp"])
-        for r in transcripts.withColumn("_bucket", bucket_expr(key, n_buckets))
-        .groupBy("_bucket")
+        for r in df.groupBy(bucket_expr(key, n_buckets).alias("_bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.expr(f"bit_xor(xxhash64({key}, turn_idx, text))").alias("fp"),
         )
         .collect()
     }
-    return {
-        b
-        for b, rec in recorded.items()
-        if current.get(b, (0, None)) != rec
-    }
-
-
-def invalidate_buckets(
-    spark: SparkSession, ledger_dir: str, buckets: set[int]
-) -> None:
-    """Drop the ledger rows of ``buckets`` so the next
-    :func:`run_with_ledger` re-runs them (data dirs are overwritten by
-    the re-run's dynamic partition overwrite — no pre-delete needed).
-
-    Two jobs: the kept rows are collected to the driver (one row per
-    ledgered bucket, so at most ``n_buckets``) and written back with one
-    overwrite. The ledger is not readable while the overwrite runs; a
-    crash inside it leaves no ledger, so the next run redoes every
-    bucket — conservative, never a skipped one."""
-    if not buckets:
-        return
-    kept = (
-        read_ledger(spark, ledger_dir)
-        .where(~F.col("bucket").isin(list(buckets)))
-        .collect()
-    )
-    spark.createDataFrame(kept, LEDGER_SCHEMA).write.mode("overwrite").parquet(
-        ledger_dir
-    )
 
 
 def run_with_ledger(
@@ -137,11 +95,12 @@ def run_with_ledger(
     """Process every pending bucket; returns {processed, skipped} counts.
 
     ``pipeline_fn`` maps a transcript chunk to its triple DataFrame.
-    Safe to call repeatedly / after a crash: completed buckets are
-    skipped, partial buckets are overwritten. With
-    ``recheck_lineage=True`` committed buckets whose input fingerprint
-    no longer matches (:func:`stale_buckets` — upstream backfill /
-    rewrite) are invalidated and re-run first.
+    Safe to call repeatedly / after a crash: the ledger is read once,
+    committed buckets are skipped and partial buckets are overwritten.
+    With ``recheck_lineage=True`` the committed rows are compared with
+    one fingerprint aggregate over ``transcripts``; buckets whose input
+    changed are dropped from the ledger (the kept rows are written
+    back, nothing is read again) and re-run first.
 
     Pending buckets run in GROUPS of ``group_size``: one job per group,
     not one per bucket — at the documented 4,096-bucket scale per-bucket
@@ -149,89 +108,71 @@ def run_with_ledger(
     driver loop O(n_buckets / group_size) while the ledger keeps
     per-bucket rows (resume granularity is unchanged). Within a group
     the triples write is ONE dynamic-partition-overwrite job
-    (``bucket=<b>`` dirs, only the group's partitions replaced), input
+    (``bucket=<b>`` dirs, only the group's partitions replaced) whose
+    per-bucket triple counts are observed on the write itself, input
     lineage is ONE grouped aggregate, and the group's ledger rows are
     appended strictly AFTER the data commit — a crash inside a group
     re-runs that whole group, never skips a bucket (the conservative-
     watermark rule, now at group granularity).
     """
     spark = transcripts.sparkSession
-    if recheck_lineage:
-        stale = stale_buckets(transcripts, ledger_dir, key, n_buckets)
-        invalidate_buckets(spark, ledger_dir, stale)
-        for b in stale:
-            # a bucket whose input vanished entirely emits no rows on the
-            # re-run, so dynamic overwrite would leave its old dir behind
-            import shutil
-
-            shutil.rmtree(Path(out_dir) / f"bucket={b}", ignore_errors=True)
-    done = completed_buckets(spark, ledger_dir)
+    committed = _committed(spark, ledger_dir)
+    if recheck_lineage and committed:
+        current = _fingerprints(transcripts, key, n_buckets)
+        stale = [
+            b
+            for b, r in committed.items()
+            if current.get(b, (0, None)) != (r["n_input_rows"], r["input_fingerprint"])
+        ]
+        if stale:
+            for b in stale:
+                del committed[b]
+            # the kept rows are already collected, so the overwrite reads
+            # nothing it replaces; a crash inside it leaves no ledger and
+            # the next run redoes every bucket — never a skipped one
+            spark.createDataFrame(list(committed.values()), LEDGER_SCHEMA).write.mode(
+                "overwrite"
+            ).parquet(ledger_dir)
+            for b in stale:
+                # a bucket whose input vanished entirely emits no rows on
+                # the re-run, so dynamic overwrite would leave its old dir
+                shutil.rmtree(Path(out_dir) / f"bucket={b}", ignore_errors=True)
     processed = 0
-    bucketed = transcripts.withColumn("_bucket", bucket_expr(key, n_buckets))
-    pending = [b for b in range(n_buckets) if b not in done]
+    pending = [b for b in range(n_buckets) if b not in committed]
 
     for g in range(0, len(pending), group_size):
         group = pending[g : g + group_size]
         t0 = time.perf_counter()
-        chunk = bucketed.where(F.col("_bucket").isin(group))
-        # lineage: per-bucket row count + order-independent xor-fold
-        # content hash of the bucket's input — a resume after upstream
-        # data changed is detectable by comparing fingerprints, and
-        # xor-folding is exact under any partitioning/order (north rule:
-        # per-partition lineage). One grouped aggregate for the group.
-        stats = {
-            r["_bucket"]: (r["n"], r["fp"])
-            for r in chunk.groupBy("_bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr(f"bit_xor(xxhash64({key}, turn_idx, text))").alias("fp"),
-            )
-            .collect()
-        }
-        triples = pipeline_fn(chunk.drop("_bucket"))
+        chunk = transcripts.where(bucket_expr(key, n_buckets).isin(group))
+        stats = _fingerprints(chunk, key, n_buckets)
         # the triple's bucket is re-derived from its provenance key (doc
         # = conv_id by construction), so one partitioned write commits
-        # every bucket of the group in a single job
+        # every bucket of the group in a single job, and the same job
+        # counts each bucket's triples (0 for a bucket that wrote none)
+        written = Observation()
+        counts = [F.count_if(F.col("bucket") == b).alias(str(b)) for b in group]
         (
-            triples.withColumn("bucket", bucket_expr("doc", n_buckets))
+            pipeline_fn(chunk)
+            .withColumn("bucket", bucket_expr("doc", n_buckets))
+            .observe(written, *counts)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(out_dir)
         )
-        # per-bucket triple counts from the just-committed footers — a
-        # metadata-only count, not a second compute pass (whole-dir read
-        # + filter: a bucket whose pipeline emitted zero triples has no
-        # partition dir, so explicit per-bucket paths would error)
-        has_partitions = any(Path(out_dir).glob("bucket=*"))
-        written = {
-            r["bucket"]: r["n"]
-            for r in spark.read.option("basePath", out_dir)
-            .parquet(f"{out_dir}/bucket=*")
-            .where(F.col("bucket").isin(group))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        } if stats and has_partitions else {}
+        n_triples = written.get
         wall = time.perf_counter() - t0
         # ledger commit strictly after the data commit (watermark rule);
         # one append of the whole group's rows, still one row per bucket
         rows = [
-            (
-                b,
-                stats.get(b, (0, None))[0],
-                stats.get(b, (0, None))[1],
-                written.get(b, 0),
-                wall / max(len(group), 1),
-                None,
-            )
+            (b, *stats.get(b, (0, None)), n_triples[str(b)], wall / len(group), None)
             for b in group
         ]
         spark.createDataFrame(rows, LEDGER_SCHEMA).withColumn(
             "finished_ts", F.current_timestamp()
         ).write.mode("append").parquet(ledger_dir)
         processed += len(group)
-    return {"processed": processed, "skipped": len(done)}
+    return {"processed": processed, "skipped": len(committed)}
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -22,12 +22,7 @@ from dstlr_spark.operators.clean import (
     missing_information,
     supporting_information,
 )
-from dstlr_spark.operators.extract import (
-    apply_sentence_guard,
-    best_alias_entity,
-    extract_mentions_native,
-    relation_triples,
-)
+from dstlr_spark.operators.extract import best_alias_entity, relation_triples
 from dstlr_spark.functions.text import (
     PUNCT_RE,
     lemma_token,
@@ -149,8 +144,7 @@ def q_assembly_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    m = extract_mentions_native(_documents(spark, sf_dir), _gazetteer(spark))
-    return m.select(
+    return _kg(spark, sf_dir).mentions.select(
         F.col("doc_id").alias("doc"),
         "mention_id",
         "entity_class",
@@ -161,9 +155,8 @@ def q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # corpus has no sentence structure; guard off
-    docs = apply_sentence_guard(_documents(spark, sf_dir), 10_000)
-    t = relation_triples(extract_mentions_native(docs, _gazetteer(spark)), COOCCUR_WINDOW)
+    # corpus has no sentence structure; the staged frame's guard is off
+    t = relation_triples(_kg(spark, sf_dir).mentions, COOCCUR_WINDOW)
     return t.select(
         F.col("doc"),
         F.col("subjectValue").alias("subject_mention_id"),
@@ -699,11 +692,13 @@ def q_alias_ambiguity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the dictionary side is dimension-scale (windows
     partition by alias key); the only corpus-sized input is one
-    key-grouped count over the persisted mention frame."""
-    from dstlr_spark.functions.text import lemma_key
-
+    key-grouped count over the persisted mention frame. Aliases are
+    keyed as the linker keys them (:func:`best_alias_entity`): each
+    single-space token lemmatized, nothing stripped."""
     al = _aliases(spark).select(
-        lemma_key(F.col("alias")).alias("key"), "entity_id", "prior"
+        F.array_join(F.transform(F.split("alias", " "), lemma_token), " ").alias("key"),
+        "entity_id",
+        "prior",
     )
     # DISTINCT candidate entities per key: two surface forms of the
     # same entity may lemma-collapse to one key (e.g. 'query' and

@@ -32,6 +32,30 @@ def test_cc_chain_through_bridges(spark):
     assert len(got) == 21
 
 
+def test_cc_rounds_count_on_the_checkpoint(spark, monkeypatch):
+    """Each round's change count comes from the checkpoint job that
+    materializes the round's labels: a multi-round graph converges
+    without a single ``DataFrame.count`` job."""
+    chain = spark.createDataFrame(
+        [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(8)], "src string, dst string"
+    )
+    # the session's concrete DataFrame class (PySpark's classic one
+    # overrides the abstract ``pyspark.sql.DataFrame.count``)
+    frame_cls = type(chain)
+    calls = []
+    real_count = frame_cls.count
+
+    def counting(self):
+        calls.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(frame_cls, "count", counting)
+    labels = connected_components(chain)
+    monkeypatch.setattr(frame_cls, "count", real_count)
+    assert calls == []
+    assert set(_cc_map(labels).values()) == {"v00"}
+
+
 def test_cc_isolated_vertices(spark):
     edges = spark.createDataFrame([("a", "b")], "src string, dst string")
     verts = spark.createDataFrame([("a",), ("b",), ("solo",)], "id string")

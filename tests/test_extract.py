@@ -151,7 +151,7 @@ def test_all_miss_batches_are_empty_not_type_errors(spark):
     docs = spark.createDataFrame(rows, DOCUMENT_SCHEMA).coalesce(1)
     gaz = spark.createDataFrame([("spark", "TOOL")], "term string, entity_class string")
     ali = spark.createDataFrame([("spark", "Q1", 1.0)], "alias string, entity_id string, prior double")
-    assert extract_mentions_native(docs, gaz).count() == 0
+    assert extract_mentions_native(docs, gaz, ali).count() == 0
     assert extract_bag_fused(docs, gaz, ali).count() == 0
     assert extract_triples_pattern(docs, alias_dict=ali).count() == 0
 
@@ -175,7 +175,8 @@ def test_native_extraction_matches_manual(spark):
     gaz = spark.createDataFrame(
         [("spark", "TOOL"), ("join", "OP"), ("scan", "OP")], "term string, entity_class string"
     )
-    m = extract_mentions_native(docs, gaz)
+    ali = spark.createDataFrame([("spark", "Q1", 1.0)], "alias string, entity_id string, prior double")
+    m = extract_mentions_native(docs, gaz, ali)
     rows = mention_triples(m).unionByName(relation_triples(m, 2)).collect()
     mentions = [r for r in rows if r["relation"] == "MENTIONS"]
     rels = [r for r in rows if r["relation"].startswith("COOCCURS")]
@@ -234,8 +235,11 @@ def test_udf_factories_accept_broadcast_handles(spark):
         {"doc_id": ["d1"], "contents": ["Apple is based in Cupertino."]}
     )
 
-    mentions = pd.concat(list(_mention_scan_batches(gaz_bc)([batch])))
+    mentions = pd.concat(list(_mention_scan_batches(gaz_bc, best_bc)([batch])))
     assert set(mentions["span"]) == {"Apple", "Cupertino"}
+    assert dict(zip(mentions["span"], mentions["entity_id"])) == {
+        "Apple": "Q312", "Cupertino": None
+    }
 
     bag = pd.concat(list(_fused_bag_batches(gaz_bc, best_bc, 8)([batch])))
     assert (bag["relation"] == "LINKS_TO").any()

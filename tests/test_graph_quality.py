@@ -175,6 +175,53 @@ def test_alias_winners_lockstep_with_batch_links(spark):
             assert r.linked == r.entity_id
 
 
+def test_alias_ambiguity_keys_aliases_like_the_linker(spark, monkeypatch):
+    """The ambiguity report keys each alias as the linker does (each
+    single-space token lemmatized, no punctuation stripped): a
+    punctuated, padded or capitalized alias is a candidate only for the
+    key `best_alias_entity` resolves it under, and the reported winner
+    is the linker's."""
+    from collections import defaultdict
+
+    from dstlr_spark.functions.text import lemma_token_py
+    from dstlr_spark.operators.extract import best_alias_entity
+    from dstlr_spark.queries import doc_kg
+
+    aliases = [
+        ("spark", "E-spark", 0.9),
+        ("spark.", "E-spark-dot", 0.6),
+        ("spark.", "E-spark-film", 0.4),
+        ("join", "E-join", 0.9),
+        (" join", "E-join", 0.5),
+        (" join", "E-join-pad", 0.7),
+        ("Tables!", "E-table", 0.5),
+        ("Tables!", "E-table-furniture", 0.3),
+        ("tables", "E-table-lower", 0.8),
+    ]
+    frame = spark.createDataFrame(
+        aliases, "alias string, entity_id string, prior double"
+    )
+
+    class _StubKG:
+        mentions = spark.createDataFrame([("spark.",), ("join",)], "key string")
+
+    monkeypatch.setattr(doc_kg, "_aliases", lambda _spark: frame)
+    monkeypatch.setattr(doc_kg, "_kg", lambda _spark, _sf: _StubKG)
+    got = {r.alias_key: r for r in doc_kg.q_alias_ambiguity(spark, SF).collect()}
+
+    candidates = defaultdict(set)
+    for alias, entity, _ in aliases:
+        candidates[" ".join(lemma_token_py(t) for t in alias.split(" "))].add(entity)
+    winners = best_alias_entity(frame)
+    multi = {k for k, es in candidates.items() if len(es) > 1}
+    assert multi == {"spark.", " join", "Tables!"}
+    assert set(got) == multi
+    assert {k: r.best_entity for k, r in got.items()} == {k: winners[k] for k in multi}
+    assert {k: r.n_mentions for k, r in got.items()} == {
+        "spark.": 1, " join": 0, "Tables!": 0
+    }
+
+
 def test_entity_distances_exact_on_path_graph(spark):
     """Path A-B-C-D: six unordered pairs with hops 1/1/1/2/2/3; a
     tighter horizon drops only the 3-hop pair."""

@@ -17,6 +17,7 @@ from dstlr_spark.operators.extract import extract_mentions_native
 from dstlr_spark.queries.doc_kg import (
     CONTEXT_TOKENS,
     COOCCUR_WINDOW,
+    _aliases,
     _comention_und,
     _documents,
     _ent_docs,
@@ -35,7 +36,7 @@ def test_mention_contexts_cover_every_occurrence(spark):
     builder drops nothing and fabricates nothing."""
     n_ctx = q_mention_contexts(spark, SF).count()
     n_occ = extract_mentions_native(
-        _documents(spark, SF), _gazetteer(spark)
+        _documents(spark, SF), _gazetteer(spark), _aliases(spark)
     ).count()
     assert n_ctx == n_occ > 0
 

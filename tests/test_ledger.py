@@ -7,12 +7,12 @@ from pyspark.sql import functions as F
 
 from dstlr_spark.operators.assembly import assemble_documents
 from dstlr_spark.operators.extract import extract_triples_pattern
+from dstlr_spark.plans import ledger as ledger_mod
 from dstlr_spark.plans.ledger import (
-    completed_buckets,
+    bucket_expr,
     read_ledger,
     read_output,
     run_with_ledger,
-    stale_buckets,
 )
 from dstlr_spark.sources.transcripts import generate_transcripts
 
@@ -46,6 +46,12 @@ def test_one_shot_run_and_metrics(spark, tmp_path):
     assert all(r["input_fingerprint"] is not None for r in nonempty)
     # metrics lineage: ledger triple counts equal actual bucket outputs
     assert sum(r["n_triples"] for r in ledger) == read_output(spark, out).count()
+    # ... bucket by bucket: the counts observed on the write
+    written = read_output(spark, out).groupBy("bucket").count().collect()
+    per_bucket = {r["bucket"]: r["count"] for r in written}
+    assert {r["bucket"]: r["n_triples"] for r in ledger} == {
+        b: per_bucket.get(b, 0) for b in range(N_BUCKETS)
+    }
 
     # result equals the unledgered pipeline
     direct = _pipeline(tr)
@@ -69,7 +75,7 @@ def test_crash_resume_equals_one_shot(spark, tmp_path):
 
     with pytest.raises(RuntimeError):
         run_with_ledger(tr, out, led, flaky, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
-    assert len(completed_buckets(spark, led)) == 2
+    assert read_ledger(spark, led).count() == 2
 
     stats = run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
     assert stats == {"processed": N_BUCKETS - 2, "skipped": 2}
@@ -108,7 +114,7 @@ def test_bucketing_keeps_conversations_whole(spark, tmp_path):
 def test_zero_triple_bucket_still_gets_ledger_row(spark, tmp_path):
     """A bucket whose input produces no triples (or no input at all)
     must still commit its ledger row — otherwise resume re-runs it
-    forever — and must not break the group's footer count read-back."""
+    forever — with the 0 triples its write observed."""
     tr = generate_transcripts(spark, n_convs=3)  # sparse: some buckets empty
     out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
 
@@ -124,72 +130,132 @@ def test_zero_triple_bucket_still_gets_ledger_row(spark, tmp_path):
     assert all(r["n_triples"] == 0 for r in ledger)
 
 
-def test_lineage_recheck_reruns_changed_bucket(spark, tmp_path):
-    """Upstream data changes after a bucket commits → stale_buckets
-    flags exactly that bucket, recheck_lineage re-runs it, and the
-    output equals a fresh run over the new input."""
-    from dstlr_spark.plans.ledger import bucket_expr, stale_buckets
+def _lineage(spark, led):
+    return {
+        r["bucket"]: (r["n_input_rows"], r["input_fingerprint"], r["n_triples"])
+        for r in read_ledger(spark, led).collect()
+    }
 
-    tr = generate_transcripts(spark, n_convs=12)
-    out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
-    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
-    assert stale_buckets(tr, led, n_buckets=N_BUCKETS) == set()
 
-    # backfill: one smoke conversation's text is rewritten upstream
-    changed_conv = "smoke-1"
+def _backfill(tr, conv="smoke-1"):
+    """One conversation's text rewritten upstream → (new input, its bucket)."""
     tr2 = tr.withColumn(
         "text",
         F.when(
-            F.col("conv_id") == changed_conv,
+            F.col("conv_id") == conv,
             F.lit("Good Technology is a company based in Sunnyvale."),
         ).otherwise(F.col("text")),
     )
-    changed_bucket = (
-        tr2.where(F.col("conv_id") == changed_conv)
+    bucket = (
+        tr2.where(F.col("conv_id") == conv)
         .select(bucket_expr("conv_id", N_BUCKETS).alias("b"))
         .first()["b"]
     )
-    stale = stale_buckets(tr2, led, n_buckets=N_BUCKETS)
-    assert changed_bucket in stale
-    # only buckets sharing the changed bucket can be stale
-    assert stale == {changed_bucket}
+    return tr2, bucket
+
+
+def test_lineage_recheck_reruns_changed_bucket(spark, tmp_path):
+    """Upstream data changes after a bucket commits → recheck_lineage
+    re-runs exactly that bucket, the other ledger rows stay as they
+    were, and the output and ledger equal a fresh run over the new
+    input."""
+    tr = generate_transcripts(spark, n_convs=12)
+    out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
+    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    # an unchanged input re-runs nothing
+    assert run_with_ledger(
+        tr, out, led, _pipeline,
+        n_buckets=N_BUCKETS, group_size=GROUP_SIZE, recheck_lineage=True,
+    ) == {"processed": 0, "skipped": N_BUCKETS}
+    before = {r["bucket"]: r for r in read_ledger(spark, led).collect()}
+
+    tr2, changed_bucket = _backfill(tr)
 
     # plain rerun skips everything (the blind-spot this feature closes)
     assert run_with_ledger(
         tr2, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE
     )["processed"] == 0
 
+    ran = []
+
+    def recording(chunk):
+        ran.append(
+            {r["b"] for r in chunk.select(bucket_expr("conv_id", N_BUCKETS).alias("b"))
+             .distinct().collect()}
+        )
+        return _pipeline(chunk)
+
     stats = run_with_ledger(
-        tr2, out, led, _pipeline,
+        tr2, out, led, recording,
         n_buckets=N_BUCKETS, group_size=GROUP_SIZE, recheck_lineage=True,
     )
-    assert stats["processed"] == 1 and stats["skipped"] == N_BUCKETS - 1
+    assert stats == {"processed": 1, "skipped": N_BUCKETS - 1}
+    assert ran == [{changed_bucket}]
+    after = {r["bucket"]: r for r in read_ledger(spark, led).collect()}
+    assert set(after) == set(range(N_BUCKETS))
+    # the untouched buckets keep their committed rows, timestamps included
+    assert {b: r for b, r in after.items() if b != changed_bucket} == {
+        b: r for b, r in before.items() if b != changed_bucket
+    }
+    assert after[changed_bucket]["input_fingerprint"] != (
+        before[changed_bucket]["input_fingerprint"]
+    )
 
-    fresh_out = str(tmp_path / "fresh")
+    fresh_out, fresh_led = str(tmp_path / "fresh"), str(tmp_path / "fresh_ledger")
     run_with_ledger(
-        tr2, fresh_out, str(tmp_path / "fresh_ledger"), _pipeline,
+        tr2, fresh_out, fresh_led, _pipeline,
         n_buckets=N_BUCKETS, group_size=GROUP_SIZE,
     )
     assert _triple_set(read_output(spark, out)) == _triple_set(
         read_output(spark, fresh_out)
     )
-    assert stale_buckets(tr2, led, n_buckets=N_BUCKETS) == set()
+    assert _lineage(spark, led) == _lineage(spark, fresh_led)
+
+
+def test_recheck_reads_ledger_once_and_never_reads_output(spark, tmp_path, monkeypatch):
+    """The bookkeeping of a run reads the ledger once — the lineage
+    recheck, the invalidation and the resume all work off that one read
+    — and counts triples on the write, so the output is never read
+    back."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    tr = generate_transcripts(spark, n_convs=12)
+    out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
+    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    tr2, _ = _backfill(tr)
+
+    reads, paths = [], []
+    real_read_ledger, real_parquet = ledger_mod.read_ledger, DataFrameReader.parquet
+
+    def counting_read_ledger(*args, **kwargs):
+        reads.append(args)
+        return real_read_ledger(*args, **kwargs)
+
+    def recording_parquet(self, *ps, **kwargs):
+        paths.extend(ps)
+        return real_parquet(self, *ps, **kwargs)
+
+    monkeypatch.setattr(ledger_mod, "read_ledger", counting_read_ledger)
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    stats = run_with_ledger(
+        tr2, out, led, _pipeline,
+        n_buckets=N_BUCKETS, group_size=GROUP_SIZE, recheck_lineage=True,
+    )
+    assert stats["processed"] == 1
+    assert len(reads) == 1
+    assert paths and not [p for p in paths if str(p).startswith(out)]
 
 
 def test_absent_ledger_runs_no_job(spark, tmp_path):
     """A first run has no ledger yet: the resume bookkeeping answers
-    "nothing done, nothing stale" without starting a Spark job (an empty
+    "nothing committed" without starting a Spark job (an empty
     ``createDataFrame`` collect was a Python-task job of its own)."""
     sc = spark.sparkContext
     missing = str(tmp_path / "no_ledger")
-    tr = spark.createDataFrame(
-        [("c1", 0, "hi")], "conv_id string, turn_idx int, text string"
-    )
     group = "test_absent_ledger_runs_no_job"
     sc.setJobGroup(group, group)
     try:
-        assert completed_buckets(spark, missing) == set()
-        assert stale_buckets(tr, missing, n_buckets=N_BUCKETS) == set()
+        assert ledger_mod._committed(spark, missing) == {}
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -448,6 +448,34 @@ def test_link_consumers_read_entity_off_mention_rows(spark, monkeypatch):
         assert _mention_scans_and_mention_joins(plan) == (1, False), build.__name__
 
 
+def _outside_caches(plan: str) -> list[str]:
+    """The node lines of a formatted plan's tree that are not inside a
+    cached relation's subtree (an ``InMemoryRelation`` node's children
+    are the plan that filled the cache, not work of this query)."""
+    tree = plan.split("\n\n", 1)[0].splitlines()[1:]
+    kept, cache_depth = [], None
+    for line in tree:
+        depth = re.search(r"[A-Za-z]", line).start()
+        if cache_depth is not None and depth > cache_depth:
+            continue
+        cache_depth = depth if "InMemoryRelation" in line else None
+        kept.append(line)
+    return kept
+
+
+def test_mention_queries_project_the_staged_mentions(spark):
+    """kg_mentions and kg_relations read the session's staged NativeKG
+    mention frame: every scan of theirs is the mention cache, and no
+    Arrow mention scan of their own is planned."""
+    from dstlr_spark.queries.doc_kg import q_mentions, q_relations
+
+    sf = "/root/testdata/sf0.001"
+    for q in (q_mentions, q_relations):
+        nodes = "\n".join(_outside_caches(_plan(spark, q(spark, sf))))
+        assert "InMemoryRelation" in nodes, q.__name__
+        assert "MapInPandas" not in nodes and "Scan parquet" not in nodes, q.__name__
+
+
 def test_alias_winners_plans_no_window(spark):
     """The alias winners are best_alias_entity's arg-max dictionary as
     a local frame — no second, window-based arg-max spelling."""

@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 
 from dstlr_spark.queries.doc_kg import (
     NEG_PER_TRIPLE,
+    _aliases,
     _documents,
     _gazetteer,
     _linked_entity_pairs,
@@ -39,7 +40,7 @@ def test_attribution_partitions_every_mention(spark):
         .collect()[0][0]
     )
     occurrences = extract_mentions_native(
-        _documents(spark, SF), _gazetteer(spark)
+        _documents(spark, SF), _gazetteer(spark), _aliases(spark)
     ).count()
     assert attributed == occurrences
 
