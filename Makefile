@@ -15,6 +15,7 @@
 #   make extract-parity  # extraction, linking and plan tests + the four extraction oracle queries (not part of gate)
 #   make media-parity    # codec reach guard + codec tests + the 11 mm_* oracle queries (not part of gate)
 #   make kg-parity       # document-KG query tests + every doc_kg oracle query (not part of gate)
+#   make pipeline-parity # ledger, job-composition, golden, metrics and package-reach tests (not part of gate)
 
 SF ?= sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
@@ -26,7 +27,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench selftest perfbench perfbench-trace graph-parity canon-parity extract-parity media-parity kg-parity
+.PHONY: gate oracles test bench selftest perfbench perfbench-trace graph-parity canon-parity extract-parity media-parity kg-parity pipeline-parity
 
 oracles:
 	@mkdir -p $(OUT)
@@ -90,6 +91,10 @@ media-parity:
 kg-parity:
 	python -m pytest -q tests/test_graph_quality.py tests/test_provenance.py tests/test_kg_export.py tests/test_dedup_guard.py tests/test_plans.py
 	python scripts/check_oracles.py /root/testdata/sf0.01 $$(python -c "from dstlr_spark.queries.doc_kg import QUERIES; print(*QUERIES)")
+
+# quick pre-check for a change to plans/pipeline.py, plans/ledger.py or a job
+pipeline-parity:
+	python -m pytest -q tests/test_ledger.py tests/test_jobs_e2e.py tests/test_stage_jobs.py tests/test_golden.py tests/test_metrics.py tests/test_package_reach.py
 
 gate: oracles test bench
 	@echo "gate complete: $(OUT)/oracles_$(SF).log $(OUT)/pytest.log $(OUT)/bench.json"

@@ -18,8 +18,12 @@ Design (SURVEY.md §2.9):
   finished_ts). The data-then-ledger order makes the ledger a
   conservative watermark — a crash between the two re-runs one bucket,
   never skips one.
-- Resume = the ledger read once per run into a ``{bucket: row}`` dict;
-  the pending buckets are the ones missing from it. The triple counts
+- Resume = the ledger read once per run into a ``{bucket: row}`` dict
+  and ONE per-bucket fingerprint aggregate over the input. A committed
+  bucket whose input changed since its commit (backfill, compaction
+  rewrite, late turns) is dropped and re-run, so every resume checks
+  lineage; the pending buckets are the ones missing from the dict. The
+  same aggregate fills every group's ledger rows. The triple counts
   are observed on the write that commits them (the reference likewise
   counts its output with accumulators on the job that does the work,
   ExtractTriples.scala:46-48,140), so the output is never read back.
@@ -49,6 +53,10 @@ def bucket_expr(key: str = "conv_id", n_buckets: int = 16):
     return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
 
 
+#: pending buckets run this many to a job
+GROUP_SIZE = 8
+
+
 def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     if not Path(ledger_dir).exists():
         return spark.createDataFrame([], LEDGER_SCHEMA)
@@ -63,20 +71,18 @@ def _committed(spark: SparkSession, ledger_dir: str) -> dict[int, Row]:
     return {r["bucket"]: r for r in read_ledger(spark, ledger_dir).collect()}
 
 
-def _fingerprints(
-    df: DataFrame, key: str, n_buckets: int
-) -> dict[int, tuple[int, int]]:
-    """Per-bucket lineage of ``df``: ``{bucket: (n_rows, fingerprint)}``,
-    the fingerprint an order-independent xor-fold of the rows' content
-    hashes — exact under any partitioning or order, so a bucket whose
-    input changed upstream (backfill, compaction rewrite, late turns)
-    after its commit is detectable. One grouped aggregate."""
+def _fingerprints(df: DataFrame, n_buckets: int) -> dict[int, tuple[int, int]]:
+    """Per-bucket lineage of the transcripts ``df``:
+    ``{bucket: (n_rows, fingerprint)}``, the fingerprint an
+    order-independent xor-fold of the rows' content hashes — exact under
+    any partitioning or order, so a bucket whose input changed after its
+    commit is detectable. One grouped aggregate."""
     return {
         r["_bucket"]: (r["n"], r["fp"])
-        for r in df.groupBy(bucket_expr(key, n_buckets).alias("_bucket"))
+        for r in df.groupBy(bucket_expr("conv_id", n_buckets).alias("_bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.expr(f"bit_xor(xxhash64({key}, turn_idx, text))").alias("fp"),
+            F.expr("bit_xor(xxhash64(conv_id, turn_idx, text))").alias("fp"),
         )
         .collect()
     }
@@ -87,64 +93,54 @@ def run_with_ledger(
     out_dir: str,
     ledger_dir: str,
     pipeline_fn: Callable[[DataFrame], DataFrame],
-    key: str = "conv_id",
     n_buckets: int = 16,
-    group_size: int = 8,
-    recheck_lineage: bool = False,
 ) -> dict[str, int]:
     """Process every pending bucket; returns {processed, skipped} counts.
 
     ``pipeline_fn`` maps a transcript chunk to its triple DataFrame.
-    Safe to call repeatedly / after a crash: the ledger is read once,
-    committed buckets are skipped and partial buckets are overwritten.
-    With ``recheck_lineage=True`` the committed rows are compared with
-    one fingerprint aggregate over ``transcripts``; buckets whose input
-    changed are dropped from the ledger (the kept rows are written
-    back, nothing is read again) and re-run first.
+    Safe to call repeatedly / after a crash: the ledger is read once and
+    ``transcripts`` fingerprinted once; a committed bucket whose input
+    changed is dropped from the ledger (the kept rows are written back,
+    nothing is read again) and re-run with the pending ones, and partial
+    buckets are overwritten.
 
-    Pending buckets run in GROUPS of ``group_size``: one job per group,
-    not one per bucket — at the documented 4,096-bucket scale per-bucket
-    jobs would mean 4,096 serial driver submissions; grouping keeps the
-    driver loop O(n_buckets / group_size) while the ledger keeps
-    per-bucket rows (resume granularity is unchanged). Within a group
-    the triples write is ONE dynamic-partition-overwrite job
-    (``bucket=<b>`` dirs, only the group's partitions replaced) whose
-    per-bucket triple counts are observed on the write itself, input
-    lineage is ONE grouped aggregate, and the group's ledger rows are
-    appended strictly AFTER the data commit — a crash inside a group
-    re-runs that whole group, never skips a bucket (the conservative-
-    watermark rule, now at group granularity).
+    Pending buckets run in groups of ``GROUP_SIZE``: one job per group,
+    not one per bucket (at 4,096 buckets, 4,096 serial driver
+    submissions), while the ledger keeps per-bucket rows. A group's
+    triples are ONE dynamic-partition-overwrite write (``bucket=<b>``
+    dirs, only the group's partitions replaced) that observes each
+    bucket's triple count, and its ledger rows are appended strictly
+    AFTER that data commit — a crash inside a group re-runs the whole
+    group, never skips a bucket.
     """
     spark = transcripts.sparkSession
     committed = _committed(spark, ledger_dir)
-    if recheck_lineage and committed:
-        current = _fingerprints(transcripts, key, n_buckets)
-        stale = [
-            b
-            for b, r in committed.items()
-            if current.get(b, (0, None)) != (r["n_input_rows"], r["input_fingerprint"])
-        ]
-        if stale:
-            for b in stale:
-                del committed[b]
-            # the kept rows are already collected, so the overwrite reads
-            # nothing it replaces; a crash inside it leaves no ledger and
-            # the next run redoes every bucket — never a skipped one
-            spark.createDataFrame(list(committed.values()), LEDGER_SCHEMA).write.mode(
-                "overwrite"
-            ).parquet(ledger_dir)
-            for b in stale:
-                # a bucket whose input vanished entirely emits no rows on
-                # the re-run, so dynamic overwrite would leave its old dir
-                shutil.rmtree(Path(out_dir) / f"bucket={b}", ignore_errors=True)
+    lineage = _fingerprints(transcripts, n_buckets)
+    stale = [
+        b
+        for b, r in committed.items()
+        if lineage.get(b, (0, None)) != (r["n_input_rows"], r["input_fingerprint"])
+    ]
+    if stale:
+        for b in stale:
+            del committed[b]
+        # the kept rows are already collected, so the overwrite reads
+        # nothing it replaces; a crash inside it leaves no ledger and
+        # the next run redoes every bucket — never a skipped one
+        spark.createDataFrame(list(committed.values()), LEDGER_SCHEMA).write.mode(
+            "overwrite"
+        ).parquet(ledger_dir)
+        for b in stale:
+            # a bucket whose input vanished entirely emits no rows on
+            # the re-run, so dynamic overwrite would leave its old dir
+            shutil.rmtree(Path(out_dir) / f"bucket={b}", ignore_errors=True)
     processed = 0
     pending = [b for b in range(n_buckets) if b not in committed]
 
-    for g in range(0, len(pending), group_size):
-        group = pending[g : g + group_size]
+    for g in range(0, len(pending), GROUP_SIZE):
+        group = pending[g : g + GROUP_SIZE]
         t0 = time.perf_counter()
-        chunk = transcripts.where(bucket_expr(key, n_buckets).isin(group))
-        stats = _fingerprints(chunk, key, n_buckets)
+        chunk = transcripts.where(bucket_expr("conv_id", n_buckets).isin(group))
         # the triple's bucket is re-derived from its provenance key (doc
         # = conv_id by construction), so one partitioned write commits
         # every bucket of the group in a single job, and the same job
@@ -165,7 +161,7 @@ def run_with_ledger(
         # ledger commit strictly after the data commit (watermark rule);
         # one append of the whole group's rows, still one row per bucket
         rows = [
-            (b, *stats.get(b, (0, None)), n_triples[str(b)], wall / len(group), None)
+            (b, *lineage.get(b, (0, None)), n_triples[str(b)], wall / len(group), None)
             for b in group
         ]
         spark.createDataFrame(rows, LEDGER_SCHEMA).withColumn(

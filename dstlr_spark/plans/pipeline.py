@@ -1,11 +1,13 @@
-"""End-to-end KG-construction pipeline wiring (SURVEY.md §7 Stage 1-2).
+"""The transcripts build, composed once (SURVEY.md §7 Stage 1-2).
 
-transcripts → assemble → [salted repartition] → extract → link → enrich
-→ triples bag → graph tables → clean queries.
+transcripts → assemble → salted repartition → extract with fused
+linking → [enrich] → triples bag → graph tables.
 
-Each step is an independent operator; this module only composes them
-(the reference's analog is the four spark-submit jobs chained by
-parquet paths, bin/*.sh).
+Each step is an independent operator; this module only composes them,
+and the jobs (``jobs/extract.py``, ``jobs/load.py``, ``jobs/build_kg.py``)
+and the in-process reference (:func:`build_triples`) run these stages —
+the reference's analog is the spark-submit jobs chained by parquet
+paths, bin/*.sh.
 """
 
 from __future__ import annotations
@@ -19,6 +21,20 @@ from dstlr_spark.operators.extract import (
     DEFAULT_SENT_THRESHOLD,
     extract_triples_pattern,
 )
+from dstlr_spark.operators.graph import materialize_graph
+
+
+def extract_chunk(
+    transcripts: DataFrame,
+    aliases: DataFrame,
+    partitions: int = 8,  # package.scala:30
+    sent_threshold: int = DEFAULT_SENT_THRESHOLD,
+) -> DataFrame:
+    """The extract stage: transcripts → mention, relation and LINKS_TO
+    triples. Linking is fused into the one annotator pass (in-annotator
+    Wikidict lookup, ExtractTriples.scala:105)."""
+    docs = salted_repartition(assemble_documents(transcripts), partitions)
+    return extract_triples_pattern(docs, sent_threshold, aliases)
 
 
 def build_triples(
@@ -26,20 +42,26 @@ def build_triples(
     alias_dict: DataFrame,
     facts: DataFrame,
     property_relation: DataFrame,
-    n_partitions: int | None = None,
     sent_threshold: int = DEFAULT_SENT_THRESHOLD,
 ) -> DataFrame:
     """transcripts → full TripleRow bag (mentions + relations + links + facts)."""
-    docs = assemble_documents(transcripts)
-    if n_partitions:
-        docs = salted_repartition(docs, n_partitions)
-    # Fused in-annotator linking: mentions + relations + LINKS_TO in ONE
-    # annotator pass; persisted because the bag still feeds two consumers
-    # (enrich + the final union) — without it the annotator would run per
-    # consumer.
-    base = extract_triples_pattern(docs, sent_threshold, alias_dict).persist()
+    # persisted because the bag feeds two consumers (enrich + the final
+    # union) — without it the annotator would run per consumer
+    base = extract_chunk(transcripts, alias_dict, sent_threshold=sent_threshold).persist()
     gt = enrich_triples(base, facts, property_relation)
     return base.unionByName(gt)
+
+
+def write_graph(bag: DataFrame, graph_dir: str) -> dict[str, DataFrame]:
+    """The load stage: triple bag → the six graph tables, each written to
+    ``graph_dir/<table>`` and returned as read back from there, so a
+    consumer (FK check, canonicalize) reads what was written instead of
+    re-planning the graph from the bag."""
+    tables = materialize_graph(bag)
+    for name, df in tables.items():
+        df.write.mode("overwrite").parquet(f"{graph_dir}/{name}")
+    spark = bag.sparkSession
+    return {name: spark.read.parquet(f"{graph_dir}/{name}") for name in tables}
 
 
 def observe_metrics(df: DataFrame, name: str = "metrics"):

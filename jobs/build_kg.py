@@ -7,11 +7,13 @@ spark-submit --py-files dist/dstlr_spark.zip jobs/build_kg.py \
     [--n-buckets 64 --partitions 2048]
 
 Composes the four reference-shaped jobs (extract → enrich → load →
-canonicalize) with the resumable ledger in front; re-running resumes
-from the last completed bucket. ``graph/_COMPLETE`` marks a graph whose
-tables and canonical ids were all written: a re-run that processed no
-bucket and finds it skips the graph, FK check and canonicalize steps,
-and a run that crashed mid-graph left no marker, so it rebuilds.
+canonicalize) from the stages of plans/pipeline.py, with the resumable
+ledger in front; re-running resumes from the last completed bucket and
+re-runs a bucket whose input changed. ``graph/_COMPLETE`` marks a graph
+whose tables and canonical ids were all written: a re-run that
+processed no bucket and finds it skips the graph, FK check and
+canonicalize steps, and a run that crashed mid-graph left no marker, so
+it rebuilds.
 """
 
 from __future__ import annotations
@@ -21,12 +23,11 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from dstlr_spark.operators.assembly import assemble_documents, salted_repartition
 from dstlr_spark.operators.canonicalize import canonicalize_mentions
 from dstlr_spark.operators.enrich import enrich_triples
-from dstlr_spark.operators.extract import extract_triples_pattern
-from dstlr_spark.operators.graph import materialize_graph, validate_fk
+from dstlr_spark.operators.graph import validate_fk
 from dstlr_spark.plans.ledger import read_output, run_with_ledger
+from dstlr_spark.plans.pipeline import extract_chunk, write_graph
 from dstlr_spark.schemas import PROPERTY_RELATION_SCHEMA
 from dstlr_spark.session import get_spark
 from dstlr_spark.sources.io import read_table
@@ -54,17 +55,12 @@ def main() -> None:
 
         aliases = alias_dict(spark)
 
-    def pipeline(chunk):
-        docs = salted_repartition(assemble_documents(chunk), args.partitions)
-        # alias_dict → fused in-annotator linking: mentions + relations +
-        # LINKS_TO in ONE annotator pass (the modular
-        # extracted.unionByName(link_mentions(extracted, …)) shape computes
-        # the most expensive stage twice unless persisted)
-        return extract_triples_pattern(docs, args.sent_length_threshold, aliases)
-
     stats = run_with_ledger(
         transcripts, f"{args.output}/triples", f"{args.output}/_progress",
-        pipeline, n_buckets=args.n_buckets,
+        lambda chunk: extract_chunk(
+            chunk, aliases, args.partitions, args.sent_length_threshold
+        ),
+        n_buckets=args.n_buckets,
     )
     print(f"extract: {stats}")
 
@@ -85,12 +81,7 @@ def main() -> None:
         )
         bag = bag.unionByName(enrich_triples(bag, facts, mapping))
 
-    tables = materialize_graph(bag)
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{graph_dir}/{name}")
-    # check and canonicalize what was written: the lazy frames would
-    # re-plan the graph from the bag for every consumer
-    graph = {name: spark.read.parquet(f"{graph_dir}/{name}") for name in tables}
+    graph = write_graph(bag, graph_dir)
     print(f"fk orphans: {validate_fk(graph)}")
 
     # cross-document canonical ids (north rule) — additive table

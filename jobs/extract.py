@@ -7,19 +7,16 @@ spark-submit --py-files dist/dstlr_spark.zip jobs/extract.py \
     --sent-length-threshold 256 --n-buckets 64
 
 Resumable: re-running after an interruption processes only pending
-conv-id buckets (plans/ledger.py).
+conv-id buckets and the ones whose input changed (plans/ledger.py).
 """
 
 from __future__ import annotations
 
 import argparse
 
-from dstlr_spark.operators.assembly import assemble_documents, salted_repartition
-from dstlr_spark.operators.extract import (
-    DEFAULT_SENT_THRESHOLD,
-    extract_triples_pattern,
-)
+from dstlr_spark.operators.extract import DEFAULT_SENT_THRESHOLD
 from dstlr_spark.plans.ledger import run_with_ledger
+from dstlr_spark.plans.pipeline import extract_chunk
 from dstlr_spark.session import get_spark
 from dstlr_spark.sources.io import read_table
 
@@ -62,15 +59,13 @@ def main() -> None:
 
         aliases = alias_dict(spark)
 
-    def pipeline(chunk):
-        docs = salted_repartition(assemble_documents(chunk), args.partitions)
-        # reference parity: the extract job emits LINKS_TO rows too,
-        # looked up inside the one annotator pass (in-annotator
-        # Wikidict lookup, ExtractTriples.scala:105)
-        return extract_triples_pattern(docs, args.sent_length_threshold, aliases)
-
+    # reference parity: the extract job emits LINKS_TO rows too
     stats = run_with_ledger(
-        transcripts, args.output, args.ledger, pipeline, n_buckets=args.n_buckets
+        transcripts, args.output, args.ledger,
+        lambda chunk: extract_chunk(
+            chunk, aliases, args.partitions, args.sent_length_threshold
+        ),
+        n_buckets=args.n_buckets,
     )
     print(f"extract done: {stats}")
     spark.stop()

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import argparse
 
-from dstlr_spark.operators.graph import materialize_graph, validate_fk
+from dstlr_spark.operators.graph import validate_fk
+from dstlr_spark.plans.pipeline import write_graph
 from dstlr_spark.session import get_spark
 from dstlr_spark.sources.io import read_table
 
@@ -29,13 +30,7 @@ def main() -> None:
         bag = bag.drop("bucket")
     if args.ground_truth:
         bag = bag.unionByName(read_table(spark, args.ground_truth))
-    tables = materialize_graph(bag)
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{args.output}/{name}")
-    # check the written tables, not a re-plan of the bag per count
-    orphans = validate_fk(
-        {name: spark.read.parquet(f"{args.output}/{name}") for name in tables}
-    )
+    orphans = validate_fk(write_graph(bag, args.output))
     print(f"load done; fk orphans: {orphans}")
     spark.stop()
 

@@ -17,7 +17,12 @@ from dstlr_spark.plans.ledger import (
 from dstlr_spark.sources.transcripts import generate_transcripts
 
 N_BUCKETS = 4
-GROUP_SIZE = 2  # 2 buckets per job: grouped submissions, per-bucket ledger rows
+
+
+@pytest.fixture
+def pairs(monkeypatch):
+    """2 buckets per job: grouped submissions, per-bucket ledger rows."""
+    monkeypatch.setattr(ledger_mod, "GROUP_SIZE", 2)
 
 
 def _pipeline(chunk):
@@ -31,10 +36,10 @@ def _triple_set(df):
     }
 
 
-def test_one_shot_run_and_metrics(spark, tmp_path):
+def test_one_shot_run_and_metrics(spark, tmp_path, pairs):
     tr = generate_transcripts(spark, n_convs=12)
     out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
-    stats = run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    stats = run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS)
     assert stats == {"processed": N_BUCKETS, "skipped": 0}
 
     ledger = read_ledger(spark, led).collect()
@@ -58,7 +63,7 @@ def test_one_shot_run_and_metrics(spark, tmp_path):
     assert _triple_set(read_output(spark, out)) == _triple_set(direct)
 
 
-def test_crash_resume_equals_one_shot(spark, tmp_path):
+def test_crash_resume_equals_one_shot(spark, tmp_path, pairs):
     """Kill after the first 2-bucket group → rerun → identical to an uninterrupted run."""
     tr = generate_transcripts(spark, n_convs=12)
     out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
@@ -66,7 +71,7 @@ def test_crash_resume_equals_one_shot(spark, tmp_path):
     calls = {"n": 0}
 
     def flaky(chunk):
-        # pipeline_fn runs once per GROUP (group_size=2): crash on the
+        # pipeline_fn runs once per GROUP (of 2 here): crash on the
         # second group, after the first group's 2 buckets committed
         if calls["n"] == 1:
             raise RuntimeError("synthetic crash")
@@ -74,10 +79,10 @@ def test_crash_resume_equals_one_shot(spark, tmp_path):
         return _pipeline(chunk)
 
     with pytest.raises(RuntimeError):
-        run_with_ledger(tr, out, led, flaky, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+        run_with_ledger(tr, out, led, flaky, n_buckets=N_BUCKETS)
     assert read_ledger(spark, led).count() == 2
 
-    stats = run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    stats = run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS)
     assert stats == {"processed": N_BUCKETS - 2, "skipped": 2}
 
     direct = _pipeline(tr)
@@ -87,8 +92,8 @@ def test_crash_resume_equals_one_shot(spark, tmp_path):
 def test_rerun_is_noop(spark, tmp_path):
     tr = generate_transcripts(spark, n_convs=6)
     out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
-    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
-    stats = run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS)
+    stats = run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS)
     assert stats == {"processed": 0, "skipped": N_BUCKETS}
 
 
@@ -97,7 +102,7 @@ def test_bucketing_keeps_conversations_whole(spark, tmp_path):
     a bucket sees every turn (per-turn equality invariant)."""
     tr = generate_transcripts(spark, n_convs=12)
     out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
-    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS)
     # doc ids in output are unique per bucket dir
     per_doc = (
         read_output(spark, out)
@@ -111,7 +116,7 @@ def test_bucketing_keeps_conversations_whole(spark, tmp_path):
     assert per_doc == 0
 
 
-def test_zero_triple_bucket_still_gets_ledger_row(spark, tmp_path):
+def test_zero_triple_bucket_still_gets_ledger_row(spark, tmp_path, pairs):
     """A bucket whose input produces no triples (or no input at all)
     must still commit its ledger row — otherwise resume re-runs it
     forever — with the 0 triples its write observed."""
@@ -121,9 +126,7 @@ def test_zero_triple_bucket_still_gets_ledger_row(spark, tmp_path):
     def empty_pipeline(chunk):
         return _pipeline(chunk).limit(0)
 
-    stats = run_with_ledger(
-        tr, out, led, empty_pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE
-    )
+    stats = run_with_ledger(tr, out, led, empty_pipeline, n_buckets=N_BUCKETS)
     assert stats == {"processed": N_BUCKETS, "skipped": 0}
     ledger = read_ledger(spark, led).collect()
     assert len(ledger) == N_BUCKETS
@@ -155,26 +158,20 @@ def _backfill(tr, conv="smoke-1"):
 
 
 def test_lineage_recheck_reruns_changed_bucket(spark, tmp_path):
-    """Upstream data changes after a bucket commits → recheck_lineage
+    """Upstream data changes after a bucket commits → a plain resume
     re-runs exactly that bucket, the other ledger rows stay as they
     were, and the output and ledger equal a fresh run over the new
     input."""
     tr = generate_transcripts(spark, n_convs=12)
     out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
-    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS)
     # an unchanged input re-runs nothing
-    assert run_with_ledger(
-        tr, out, led, _pipeline,
-        n_buckets=N_BUCKETS, group_size=GROUP_SIZE, recheck_lineage=True,
-    ) == {"processed": 0, "skipped": N_BUCKETS}
+    assert run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS) == {
+        "processed": 0, "skipped": N_BUCKETS,
+    }
     before = {r["bucket"]: r for r in read_ledger(spark, led).collect()}
 
     tr2, changed_bucket = _backfill(tr)
-
-    # plain rerun skips everything (the blind-spot this feature closes)
-    assert run_with_ledger(
-        tr2, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE
-    )["processed"] == 0
 
     ran = []
 
@@ -185,10 +182,9 @@ def test_lineage_recheck_reruns_changed_bucket(spark, tmp_path):
         )
         return _pipeline(chunk)
 
-    stats = run_with_ledger(
-        tr2, out, led, recording,
-        n_buckets=N_BUCKETS, group_size=GROUP_SIZE, recheck_lineage=True,
-    )
+    # every resume checks lineage: the blind spot of a resume that
+    # trusts its ledger and keeps the stale triples is closed
+    stats = run_with_ledger(tr2, out, led, recording, n_buckets=N_BUCKETS)
     assert stats == {"processed": 1, "skipped": N_BUCKETS - 1}
     assert ran == [{changed_bucket}]
     after = {r["bucket"]: r for r in read_ledger(spark, led).collect()}
@@ -202,10 +198,7 @@ def test_lineage_recheck_reruns_changed_bucket(spark, tmp_path):
     )
 
     fresh_out, fresh_led = str(tmp_path / "fresh"), str(tmp_path / "fresh_ledger")
-    run_with_ledger(
-        tr2, fresh_out, fresh_led, _pipeline,
-        n_buckets=N_BUCKETS, group_size=GROUP_SIZE,
-    )
+    run_with_ledger(tr2, fresh_out, fresh_led, _pipeline, n_buckets=N_BUCKETS)
     assert _triple_set(read_output(spark, out)) == _triple_set(
         read_output(spark, fresh_out)
     )
@@ -214,14 +207,14 @@ def test_lineage_recheck_reruns_changed_bucket(spark, tmp_path):
 
 def test_recheck_reads_ledger_once_and_never_reads_output(spark, tmp_path, monkeypatch):
     """The bookkeeping of a run reads the ledger once — the lineage
-    recheck, the invalidation and the resume all work off that one read
+    check, the invalidation and the resume all work off that one read
     — and counts triples on the write, so the output is never read
     back."""
     from pyspark.sql.readwriter import DataFrameReader
 
     tr = generate_transcripts(spark, n_convs=12)
     out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
-    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS, group_size=GROUP_SIZE)
+    run_with_ledger(tr, out, led, _pipeline, n_buckets=N_BUCKETS)
     tr2, _ = _backfill(tr)
 
     reads, paths = [], []
@@ -237,13 +230,37 @@ def test_recheck_reads_ledger_once_and_never_reads_output(spark, tmp_path, monke
 
     monkeypatch.setattr(ledger_mod, "read_ledger", counting_read_ledger)
     monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
-    stats = run_with_ledger(
-        tr2, out, led, _pipeline,
-        n_buckets=N_BUCKETS, group_size=GROUP_SIZE, recheck_lineage=True,
-    )
+    stats = run_with_ledger(tr2, out, led, _pipeline, n_buckets=N_BUCKETS)
     assert stats["processed"] == 1
     assert len(reads) == 1
     assert paths and not [p for p in paths if str(p).startswith(out)]
+
+
+def test_input_fingerprinted_once_per_run(spark, tmp_path, monkeypatch):
+    """16 buckets run as two groups of ``GROUP_SIZE`` = 8, and one
+    fingerprint aggregate over the input serves the lineage check and
+    both groups' ledger rows — not one aggregate per group."""
+    tr = generate_transcripts(spark, n_convs=12)
+    out, led = str(tmp_path / "out"), str(tmp_path / "ledger")
+    calls, groups = [], []
+    real = ledger_mod._fingerprints
+
+    def counting(*args):
+        calls.append(args)
+        return real(*args)
+
+    def recording(chunk):
+        groups.append(chunk)
+        return _pipeline(chunk)
+
+    monkeypatch.setattr(ledger_mod, "_fingerprints", counting)
+    stats = run_with_ledger(tr, out, led, recording, n_buckets=16)
+    assert stats == {"processed": 16, "skipped": 0}
+    assert len(groups) == 2
+    assert len(calls) == 1
+    ledger = read_ledger(spark, led).collect()
+    assert len(ledger) == 16
+    assert sum(r["n_input_rows"] for r in ledger) == tr.count()
 
 
 def test_absent_ledger_runs_no_job(spark, tmp_path):

@@ -9,7 +9,11 @@ module-level statement of the package (the registries' ``QUERIES`` /
 ``__spark_entry__.py``, and the ``TEST_REFERENCES`` below. A reached
 name reaches the body of every package definition with that name;
 docstrings and import statements are not references (an alias
-``from m import a as b`` maps a use of ``b`` to ``a``). The 14 codec
+``from m import a as b`` maps a use of ``b`` to ``a``), and an attribute
+``x.name`` refers to ``name`` only when ``x`` is a package module — a
+name the file binds by ``import dstlr_spark…``, by ``from dstlr_spark…
+import <module>`` or by ``import __spark_entry__`` — so a third-party
+``pq.write_table`` does not reach a package ``write_table``. The 14 codec
 modules are left to ``test_media_reach.py``, which traces them.
 
 A helper that only a test calls fails here: delete it, route a job or a
@@ -69,12 +73,32 @@ def _is_docstring(node: ast.AST) -> bool:
     )
 
 
-class _Refs(ast.NodeVisitor):
-    """Names a piece of code refers to; docstrings are skipped, and an
-    import binds a name without referring to it."""
+def _package_modules(tree: ast.Module) -> set[str]:
+    """Names ``tree`` binds to a package module (or to ``__spark_entry__``)."""
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] in ("dstlr_spark", "__spark_entry__"):
+                    names.add(a.asname or a.name.split(".")[0])
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+            "dstlr_spark"
+        ):
+            base = ROOT.joinpath(*node.module.split("."))
+            for a in node.names:
+                if (base / f"{a.name}.py").exists() or (base / a.name).is_dir():
+                    names.add(a.asname or a.name)
+    return names
 
-    def __init__(self, aliases: dict[str, str]):
+
+class _Refs(ast.NodeVisitor):
+    """Names a piece of code refers to; docstrings are skipped, an import
+    binds a name without referring to it, and an attribute refers to its
+    name only on a package module."""
+
+    def __init__(self, aliases: dict[str, str], modules: set[str]):
         self.aliases = aliases
+        self.modules = modules
         self.names: set[str] = set()
 
     def _add(self, name: str) -> None:
@@ -85,7 +109,11 @@ class _Refs(ast.NodeVisitor):
         self._add(node.id)
 
     def visit_Attribute(self, node: ast.Attribute) -> None:
-        self._add(node.attr)
+        receiver = node.value
+        while isinstance(receiver, ast.Attribute):  # dstlr_spark.a.b.name
+            receiver = receiver.value
+        if isinstance(receiver, ast.Name) and receiver.id in self.modules:
+            self._add(node.attr)
         self.generic_visit(node)
 
     def _body(self, body: list[ast.stmt]) -> None:
@@ -109,8 +137,8 @@ class _Refs(ast.NodeVisitor):
         self._body(node.body)
 
 
-def _refs(nodes, aliases) -> set[str]:
-    v = _Refs(aliases)
+def _refs(nodes, aliases, modules) -> set[str]:
+    v = _Refs(aliases, modules)
     for n in nodes:
         v.visit(n)
     return v.names
@@ -139,22 +167,23 @@ def _reach(roots: set[str] | frozenset = frozenset()):
                         aliases[a.asname] = a.name
 
     defs: dict[str, ast.AST] = {}
-    by_name: dict[str, list[ast.AST]] = {}
+    by_name: dict[str, list[tuple[ast.AST, set[str]]]] = {}
     frontier = set(roots)
     for mod, tree in trees.items():
+        modules = _package_modules(tree)
         for i, node in enumerate(tree.body):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 defs[f"{mod}.{node.name}"] = node
-                by_name.setdefault(node.name, []).append(node)
+                by_name.setdefault(node.name, []).append((node, modules))
                 # decorators, defaults and bases run at import time
                 eager = [*node.decorator_list, *getattr(node, "bases", [])]
                 if hasattr(node, "args"):
                     eager += node.args.defaults + node.args.kw_defaults
-                frontier |= _refs([n for n in eager if n is not None], aliases)
+                frontier |= _refs([n for n in eager if n is not None], aliases, modules)
             elif not (i == 0 and _is_docstring(node)):
-                frontier |= _refs([node], aliases)
+                frontier |= _refs([node], aliases, modules)
     for tree in outside_trees:
-        frontier |= _refs([tree], aliases)
+        frontier |= _refs([tree], aliases, _package_modules(tree))
 
     reached: set[str] = set()
     while frontier:
@@ -162,8 +191,8 @@ def _reach(roots: set[str] | frozenset = frozenset()):
         if name in reached:
             continue
         reached.add(name)
-        for node in by_name.get(name, ()):
-            frontier |= _refs([node], aliases) - reached
+        for node, modules in by_name.get(name, ()):
+            frontier |= _refs([node], aliases, modules) - reached
     return defs, reached
 
 
