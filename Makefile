@@ -14,7 +14,7 @@
 #   make canon-parity    # canonicalization tests + its four oracle queries (not part of gate)
 #   make extract-parity  # extraction, linking and plan tests + the four extraction oracle queries (not part of gate)
 #   make media-parity    # codec reach guard + codec tests + the 11 mm_* oracle queries (not part of gate)
-#   make kg-parity       # document-KG query tests + every doc_kg oracle query (not part of gate)
+#   make kg-parity       # document-KG query and canonicalize tests + every doc_kg oracle query (not part of gate)
 #   make pipeline-parity # ledger, job-composition, golden, metrics and package-reach tests (not part of gate)
 
 SF ?= sf0.01
@@ -87,9 +87,9 @@ media-parity:
 	python -m pytest -q tests/test_media_reach.py tests/test_multimodal.py tests/test_jpeg.py tests/test_new_containers.py tests/test_tiff.py tests/test_webp.py tests/test_flac.py
 	python scripts/check_oracles.py /root/testdata/sf0.01 mm_media_meta mm_media_sniff mm_media_features mm_media_dedup mm_phash_groups mm_audio_vad mm_video_shots mm_frame_schedule mm_media_decode mm_audio_features mm_video_frames
 
-# quick pre-check for a change to queries/doc_kg.py
+# quick pre-check for a change to queries/doc_kg.py or operators/graph.symmetrize
 kg-parity:
-	python -m pytest -q tests/test_graph_quality.py tests/test_provenance.py tests/test_kg_export.py tests/test_dedup_guard.py tests/test_plans.py
+	python -m pytest -q tests/test_graph_quality.py tests/test_provenance.py tests/test_kg_export.py tests/test_dedup_guard.py tests/test_plans.py tests/test_canonicalize.py
 	python scripts/check_oracles.py /root/testdata/sf0.01 $$(python -c "from dstlr_spark.queries.doc_kg import QUERIES; print(*QUERIES)")
 
 # quick pre-check for a change to plans/pipeline.py, plans/ledger.py or a job

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from dstlr_spark.operators.graph import symmetrize
+
 
 def star_edges(df: DataFrame, id_col: str, group_col: str) -> DataFrame:
     """Group members → (src=member, dst=group minimum). O(n) edges."""
@@ -60,11 +62,7 @@ def connected_components(
     rounds, and silently returning a partially merged clustering would
     present non-convergence as a valid result.
     """
-    sym = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .localCheckpoint()
-    )
+    sym = symmetrize(edges).localCheckpoint()
     verts = sym.select(F.col("src").alias("id"))
     if vertices is not None:
         verts = verts.unionByName(vertices.select("id"))

@@ -79,9 +79,12 @@ def graph_tables(
         ["mention_id", "entity_id"]
     )
     fact_edges = facts.dropDuplicates(["entity_id", "relation", "value"])
+    # from the raw inputs, not the two deduped tables: one distinct
+    # instead of re-running the link and fact dedupes beneath it
     entity_nodes = (
-        links_to.select("entity_id")
-        .unionByName(fact_edges.select("entity_id"))
+        links.where(F.col("entity_id").isNotNull())
+        .select("entity_id")
+        .unionByName(facts.select("entity_id"))
         .distinct()
     )
     return {
@@ -92,6 +95,14 @@ def graph_tables(
         "fact_edges": fact_edges,
         "entity_nodes": entity_nodes,
     }
+
+
+def symmetrize(edges: DataFrame) -> DataFrame:
+    """``edges(src, dst)`` ∪ the same edges reversed: the directed form
+    of an undirected edge list, one row per (vertex, neighbor)."""
+    return edges.select("src", "dst").unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
 
 
 def triple_edges(

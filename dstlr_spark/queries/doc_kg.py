@@ -23,6 +23,7 @@ from dstlr_spark.operators.clean import (
     supporting_information,
 )
 from dstlr_spark.operators.extract import best_alias_entity, relation_triples
+from dstlr_spark.operators.graph import symmetrize
 from dstlr_spark.functions.text import (
     PUNCT_RE,
     lemma_token,
@@ -391,35 +392,50 @@ def skipped_comention_docs(ent_docs: DataFrame, cap: int = COMENTION_MAX_ENTITIE
     )
 
 
-def _comention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTINCT undirected co-mention edge set (src, dst) — the
-    keys of `kg_entity_comention`'s pair counts, staged once per
-    (session, sf_dir) so the graph-analytics queries read one
-    checkpoint instead of re-running the doc-level pair join."""
+def _comention_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-mention pair counts (src, dst, n_docs) with src < dst:
+    the doc-level pair join and its aggregate, staged once per
+    (session, sf_dir). `kg_entity_comention`, the edge set, k-core and
+    PMI read this checkpoint instead of re-running the pair join."""
     from dstlr_spark.queries._memo import staged
 
     def build() -> DataFrame:
-        return q_entity_comention(spark, sf_dir).select(
-            F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
+        return (
+            _comention_und(_ent_docs(spark, sf_dir))
+            .groupBy("src", "dst")
+            .agg(F.count(F.lit(1)).alias("n_docs"))
         )
 
-    return staged(spark, ("kg_comention_edges", sf_dir), build)
+    return staged(spark, ("kg_comention_weights", sf_dir), build)
+
+
+def _comention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The DISTINCT undirected co-mention edge set (src, dst): the keys
+    of the staged pair counts."""
+    return _comention_weights(spark, sf_dir).select("src", "dst")
+
+
+def adjacency(edges: DataFrame) -> DataFrame:
+    """A distinct undirected edge list (src, dst) → its adjacency
+    (src, dst, degree): both directions of every edge, each row
+    carrying its ``src``'s degree (distinct neighbors). The input of
+    every co-mention graph kernel."""
+    return symmetrize(edges).withColumn(
+        "degree", F.count(F.lit(1)).over(Window.partitionBy("src"))
+    )
 
 
 def _comention_adj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The co-mention adjacency (src, dst, degree): `_comention_edges`
-    symmetrized, each row carrying its ``src``'s degree (distinct
-    neighbors) — staged once per (session, sf_dir) for every query
-    that needs both edge directions or vertex degrees (adjacency
+    """The co-mention adjacency (src, dst, degree) of
+    `_comention_edges`, staged once per (session, sf_dir) for every
+    query that walks the graph or reads vertex degrees: the adjacency
     export, degree histogram, clustering, assortativity, hub audit,
-    PageRank, label propagation)."""
+    PageRank, label propagation, the distance BFS, WL, neighbor
+    Jaccard, two-hop reach and PPR."""
     from dstlr_spark.queries._memo import staged
 
     def build() -> DataFrame:
-        e = _comention_edges(spark, sf_dir)
-        return e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).withColumn("degree", F.count(F.lit(1)).over(Window.partitionBy("src")))
+        return adjacency(_comention_edges(spark, sf_dir))
 
     return staged(spark, ("kg_comention_adj", sf_dir), build)
 
@@ -539,14 +555,10 @@ def q_entity_comention(spark: SparkSession, sf_dir: str) -> DataFrame:
     same document, weighted by document count — the KG-analytics
     aggregate layered on the linked mention rows (demo.md-style graph queries
     generalized to entity granularity). Per-doc entity cap + audit:
-    see :func:`skipped_comention_docs`."""
-    return (
-        _comention_und(_ent_docs(spark, sf_dir))
-        .groupBy(
-            F.col("src").alias("entity_a"),
-            F.col("dst").alias("entity_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_docs"))
+    see :func:`skipped_comention_docs`. A projection of the staged
+    pair counts (:func:`_comention_weights`)."""
+    return _comention_weights(spark, sf_dir).select(
+        F.col("src").alias("entity_a"), F.col("dst").alias("entity_b"), "n_docs"
     )
 
 
@@ -765,53 +777,54 @@ def q_entity_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern); the truncation is exact whenever the peel cascade is
     ≤ 8 deep, and production iterates the same round body to fixpoint.
 
-    Scale shape: vertices are the entity dictionary; each round is one
-    hash aggregate (degree) plus two semi-joins restricting the edge
-    frame — the peeled vertex set shrinks monotonically, and
-    ``localCheckpoint`` cuts lineage per round exactly as PageRank
-    does. Rounds are bounded by construction, not by convergence
-    luck."""
-    e = q_entity_comention(spark, sf_dir)
-    mx = e.agg(F.max("n_docs").alias("mx"))
+    Scale shape: the strong edges filter the staged pair counts
+    (:func:`_comention_weights`) against their 1-row max; the peel
+    (:func:`kcore_peel`) carries one vertex-state frame, and each
+    round is one degree aggregate over the strong edges between
+    surviving vertices plus one vertex-keyed join, with
+    ``localCheckpoint`` cutting lineage per round as PageRank does.
+    Rounds are bounded by construction, not by convergence luck."""
+    w = _comention_weights(spark, sf_dir)
+    mx = w.agg(F.max("n_docs").alias("mx"))
     strong = (
-        e.crossJoin(F.broadcast(mx))
+        w.crossJoin(F.broadcast(mx))
         .where(F.col("n_docs") * 100 >= F.col("mx") * KCORE_STRONG_PCT)
-        .select("entity_a", "entity_b")
+        .select("src", "dst")
     )
-    edges = (
-        strong.select(F.col("entity_a").alias("u"), F.col("entity_b").alias("v"))
-        .unionByName(
-            strong.select(
-                F.col("entity_b").alias("u"), F.col("entity_a").alias("v")
+    return kcore_peel(strong, KCORE_K, KCORE_ROUNDS)
+
+
+def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
+    """``rounds`` round-synchronous peels of an undirected edge list
+    (src, dst) → (entity_id, peel_round) per vertex with an edge:
+    the round that peeled it, 0 while it is still in the k-core. The
+    q_entity_kcore kernel, factored out so planted-graph tests can
+    drive it with a synthetic edge frame."""
+    sym = symmetrize(edges).localCheckpoint()
+    state = sym.select(
+        F.col("src").alias("entity_id"), F.lit(0).alias("peel_round")
+    ).distinct()
+    for rnd in range(1, rounds + 1):
+        alive = state.where(F.col("peel_round") == 0)
+        deg = (
+            sym.join(alive.select(F.col("entity_id").alias("src")), "src", "left_semi")
+            .join(alive.select(F.col("entity_id").alias("dst")), "dst", "left_semi")
+            .groupBy(F.col("src").alias("entity_id"))
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        peel = (F.col("peel_round") == 0) & (F.coalesce(F.col("d"), F.lit(0)) < k)
+        state = (
+            state.join(deg, "entity_id", "left")
+            .select(
+                "entity_id",
+                F.when(peel, F.lit(rnd))
+                .otherwise(F.col("peel_round"))
+                .cast("int")
+                .alias("peel_round"),
             )
-        )
-        .localCheckpoint()
-    )
-    remaining = edges.select(F.col("u").alias("e")).distinct().localCheckpoint()
-    cur = edges
-    peeled = []
-    for rnd in range(1, KCORE_ROUNDS + 1):
-        deg = cur.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-        drop = (
-            remaining.join(deg, remaining["e"] == deg["u"], "left")
-            .where(F.coalesce(F.col("d"), F.lit(0)) < KCORE_K)
-            .select("e")
             .localCheckpoint()
         )
-        peeled.append(
-            drop.select("e", F.lit(rnd).cast("int").alias("peel_round"))
-        )
-        remaining = remaining.join(drop, "e", "left_anti").localCheckpoint()
-        keep = remaining.select(F.col("e"))
-        cur = (
-            cur.join(keep.withColumnRenamed("e", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("e", "v"), "v", "left_semi")
-            .localCheckpoint()
-        )
-    out = remaining.select("e", F.lit(0).cast("int").alias("peel_round"))
-    for p in peeled:
-        out = out.unionByName(p)
-    return out.select(F.col("e").alias("entity_id"), "peel_round")
+    return state
 
 
 NEG_PER_TRIPLE = 2  # negatives emitted per positive triple
@@ -1336,20 +1349,13 @@ def q_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale. Lineage cut per round with localCheckpoint. Everything
     rides the same COMENTION_MAX_ENTITIES cap every other graph
     operator documents."""
-
-    edges = (
-        _comention_edges(spark, sf_dir)
-        # already localCheckpoint'd by the staging layer — do not re-copy
-    )
-    return _truss_peel(edges, KTRUSS_K, KTRUSS_ROUNDS)
+    return _truss_peel(_comention_edges(spark, sf_dir), KTRUSS_K, KTRUSS_ROUNDS)
 
 
 def _edge_support(e: DataFrame) -> DataFrame:
     """Per-edge triangle support: for each canonical edge (src < dst),
     the number of common neighbors in the symmetrized adjacency."""
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = symmetrize(e)
     xa = sym.select(F.col("src").alias("sa"), F.col("dst").alias("c"))
     xb = sym.select(F.col("src").alias("sb"), F.col("dst").alias("cb"))
     return (
@@ -1433,9 +1439,7 @@ def q_community_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Edges whose endpoints share a community count internal;
     others charge one cut to EACH side's community."""
     labels = _lpa_labels(spark, sf_dir)
-    edges = (
-        _comention_edges(spark, sf_dir)
-    )
+    edges = _comention_edges(spark, sf_dir)
     lab = lambda side: labels.select(  # noqa: E731
         F.col("id").alias(side), F.col("label").alias(f"{side}_c")
     )
@@ -1637,16 +1641,13 @@ def q_entity_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget, bounded to {KHOP_MAX} rounds). Unbounded all-pairs-within-K
     explodes combinatorially on dense graphs; two guards make this the
     100 TB shape: (1) hub pivots are excluded — every expansion joins
-    the frontier against the ≤CAP-degree vertex set first, so per-row
-    fan-out is bounded and a celebrity vertex can't mushroom the
-    frontier (excluded hubs are surfaced by ``kg_distance_hub_audit``,
-    never silently dropped); (2) the ANCHORED twin below pushes a
-    seed predicate into the first frontier scan for point lookups."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-        # already localCheckpoint'd by the staging layer — do not re-copy
-    )
-    return entity_distances(edges, hub_cap=DIST_HUB_DEGREE_CAP)
+    the frontier only with the staged adjacency's rows out of
+    ≤CAP-degree vertices, so per-row fan-out is bounded and a
+    celebrity vertex can't mushroom the frontier (excluded hubs are
+    surfaced by ``kg_distance_hub_audit``, never silently dropped);
+    (2) the ANCHORED twin below pushes a seed predicate into the first
+    frontier scan for point lookups."""
+    return entity_distances(_comention_adj(spark, sf_dir), hub_cap=DIST_HUB_DEGREE_CAP)
 
 
 def q_distance_hub_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,11 +1682,7 @@ def q_entity_distances_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor's k-neighborhood instead of all pairs — the plan a Cypher
     `MATCH (a {{id: $x}})-[*1..{KHOP_MAX}]-(b)` compiles to. Output:
     (entity_b, hops) for everything within KHOP_MAX of the anchor."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-        # already localCheckpoint'd by the staging layer — do not re-copy
-    )
-    return entity_distances(edges, anchor=DIST_ANCHOR).select(
+    return entity_distances(_comention_adj(spark, sf_dir), anchor=DIST_ANCHOR).select(
         "entity_b", "hops"
     )
 
@@ -1709,24 +1706,20 @@ def q_entity_distances_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per hop, one edge-scale equi-join of the seed-rooted
     frontier with the adjacency list; the seed set itself is broadcast
     (query-sized, K rows) so the frontier never shuffles on K."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-        # already localCheckpoint'd by the staging layer — do not re-copy
-    )
     seeds = spark.createDataFrame(
         [(a,) for a in DIST_BATCH_ANCHORS], "id string"
     )
-    return entity_distances(edges, anchors=seeds)
+    return entity_distances(_comention_adj(spark, sf_dir), anchors=seeds)
 
 
 def entity_distances(
-    edges: DataFrame,
+    adj: DataFrame,
     max_hops: int = KHOP_MAX,
     anchor: str | None = None,
     hub_cap: int | None = None,
     anchors: DataFrame | None = None,
 ) -> DataFrame:
-    """Bounded BFS distance table over an undirected edge list — see
+    """Bounded BFS distance table over an :func:`adjacency` — see
     :func:`q_entity_distances`. With ``anchor`` set, the first frontier
     is pre-filtered to the anchor's edges (and every later frontier is
     therefore anchor-rooted) — pair output has entity_a == anchor.
@@ -1740,19 +1733,11 @@ def entity_distances(
     reachable as path ENDPOINTS (hop-1 edges and frontier targets are
     uncapped) but contribute no through-paths, bounding every expansion
     join's per-row fan-out."""
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    if hub_cap is not None:
-        # non-hub pivot whitelist (vertex-sized; broadcast on a cluster)
-        nonhub = (
-            sym.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .where(F.col("_deg") <= hub_cap)
-            .select(F.col("src").alias("dst"))
-            .localCheckpoint()
-        )
-    dist = sym.select("src", "dst", F.lit(1).alias("hops"))
+    # an adjacency row carries its src's degree, and the expansion
+    # pivots through src: a hub's rows never extend a path
+    step = adj if hub_cap is None else adj.where(F.col("degree") <= hub_cap)
+    step = step.select(F.col("src").alias("dst"), F.col("dst").alias("nxt"))
+    dist = adj.select("src", "dst", F.lit(1).alias("hops"))
     if anchor is not None:
         dist = dist.where(F.col("src") == anchor)
     if anchors is not None:
@@ -1761,19 +1746,14 @@ def entity_distances(
         # the frontier is edge-scale — never shuffle the frontier on K
         dist = dist.join(F.broadcast(seed), "src", "semi")
     frontier = dist
+    # no per-round checkpoint: max_hops is a small constant, and each
+    # frontier's copies in the plan run as one reused exchange
     for k in range(2, max_hops + 1):
-        pivotable = (
-            frontier.join(nonhub, "dst", "semi") if hub_cap is not None else frontier
-        )
         frontier = (
-            pivotable.join(
-                sym.select(F.col("src").alias("dst"), F.col("dst").alias("nxt")),
-                "dst",
-            )
+            frontier.join(step, "dst")
             .where(F.col("nxt") != F.col("src"))
             .select("src", F.col("nxt").alias("dst"), F.lit(k).alias("hops"))
             .distinct()
-            .localCheckpoint()
         )
         dist = dist.unionByName(frontier)
     if anchor is not None:
@@ -1805,27 +1785,24 @@ def q_wl_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     topology changes without comparing edge lists. ``orbit_size``
     counts the entities sharing each label.
 
-    Scale shape per round: one edge-scale equi-join to fetch neighbor
+    Scale shape: the round-0 label is the degree carried by the staged
+    adjacency. Per round: one edge-scale equi-join to fetch neighbor
     labels + one vertex-keyed hash aggregate whose per-group list is
     degree-bounded (array_sort of ≤deg elements — never corpus-scale);
     final orbit sizing is one vertex-sized self-aggregate. The md5
     relabel keeps labels constant-width however deep the rounds go."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-        # already localCheckpoint'd by the staging layer — do not re-copy
-    )
-    return wl_signature(edges)
+    return wl_signature(_comention_adj(spark, sf_dir))
 
 
-def wl_signature(edges: DataFrame, rounds: int = WL_ROUNDS) -> DataFrame:
-    """WL refinement over an undirected edge list (src, dst) — see
+def wl_signature(adj: DataFrame, rounds: int = WL_ROUNDS) -> DataFrame:
+    """WL refinement over an :func:`adjacency` — see
     :func:`q_wl_signature`. Vertex set = entities with ≥1 edge."""
-    adj = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = adj.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).cast("string").alias("label")
-    )
+    labels = adj.select(
+        F.col("src").alias("id"), F.col("degree").cast("string").alias("label")
+    ).distinct()
+    # no per-round checkpoint: each round reads the last round's labels
+    # twice, so the plan doubles per round (fine for WL_ROUNDS), and
+    # those copies run as one reused exchange
     for _ in range(rounds):
         nb = (
             adj.join(labels.withColumnRenamed("id", "dst"), "dst")
@@ -1836,15 +1813,9 @@ def wl_signature(edges: DataFrame, rounds: int = WL_ROUNDS) -> DataFrame:
                 ).alias("nbl")
             )
         )
-        labels = (
-            labels.join(nb, "id")
-            .select(
-                "id",
-                F.md5(F.concat(F.col("label"), F.lit("|"), F.col("nbl"))).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint()
+        labels = labels.join(nb, "id").select(
+            "id",
+            F.md5(F.concat(F.col("label"), F.lit("|"), F.col("nbl"))).alias("label"),
         )
     orbits = labels.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("orbit_size")
@@ -1866,42 +1837,36 @@ def wl_signature(edges: DataFrame, rounds: int = WL_ROUNDS) -> DataFrame:
 JACCARD_HUB_CAP = 1_000
 
 
-def neighbor_jaccard(edges: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame:
-    """Common-neighbor Jaccard similarity over an undirected edge list
-    ``(src, dst)`` with ``src < dst`` — the entity-resolution candidate
-    generator: entities whose co-mention neighborhoods overlap are
-    merge/same-as candidates even when their surface forms never match
-    (the structural complement of the lemma/alias linker).
+def neighbor_jaccard(adj: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame:
+    """Common-neighbor Jaccard similarity over an :func:`adjacency` —
+    the entity-resolution candidate generator: entities whose
+    co-mention neighborhoods overlap are merge/same-as candidates even
+    when their surface forms never match (the structural complement of
+    the lemma/alias linker).
 
     Pairs are generated ONLY through shared neighbors (one equi-join of
     the adjacency list with itself on the neighbor key) — never an
     all-pairs cross. Per-neighbor wedge fan is deg², so vertices above
     ``hub_cap`` are excluded from wedge generation (docstring above);
     at 100 TB the wedge join shuffles O(Σ min(deg, cap)²), the same
-    budget as the co-mention pair builder. Degrees and the ppm Jaccard
-    are all-integer — exact in both engines."""
-    adj = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        # consumed 3× (degrees, both wedge sides): cut lineage once
-        .localCheckpoint()
-    )
-    deg = adj.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    hubs = deg.where(F.col("deg") > hub_cap).select(F.col("src").alias("dst"))
+    budget as the co-mention pair builder. Each wedge arm carries its
+    end's degree off the adjacency, so no degree join follows the pair
+    aggregate. Degrees and the ppm Jaccard are all-integer — exact in
+    both engines."""
+    hubs = adj.where(F.col("degree") > hub_cap).select(F.col("src").alias("dst"))
     # heavy hitters are few by definition — broadcast the exclusion set
-    wadj = adj.join(F.broadcast(hubs), "dst", "left_anti")
-    a = wadj.select(F.col("dst").alias("n"), F.col("src").alias("x"))
-    b = wadj.select(F.col("dst").alias("n"), F.col("src").alias("y"))
-    common = (
-        a.join(b, "n")
-        .where(F.col("x") < F.col("y"))
-        .groupBy("x", "y")
-        .agg(F.count(F.lit(1)).cast("long").alias("common_neighbors"))
-    )
+    wadj = adj.join(F.broadcast(hubs.distinct()), "dst", "left_anti")
+    def arm(end: str, deg: str) -> DataFrame:
+        return wadj.select(
+            F.col("dst").alias("n"), F.col("src").alias(end), F.col("degree").alias(deg)
+        )
+
     return (
-        common.join(deg.select(F.col("src").alias("x"), F.col("deg").alias("deg_a")), "x")
-        .join(deg.select(F.col("src").alias("y"), F.col("deg").alias("deg_b")), "y")
+        arm("x", "deg_a")
+        .join(arm("y", "deg_b"), "n")
+        .where(F.col("x") < F.col("y"))
+        .groupBy("x", "y", "deg_a", "deg_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("common_neighbors"))
         .select(
             F.col("x").alias("entity_a"),
             F.col("y").alias("entity_b"),
@@ -1920,13 +1885,12 @@ def q_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighbor-overlap similarity over the co-mention graph (see
     :func:`neighbor_jaccard`): every entity pair sharing ≥ 1 neighbor,
     with common-neighbor count, degrees, and integer-ppm Jaccard."""
-    edges = _comention_edges(spark, sf_dir)
-    return neighbor_jaccard(edges)
+    return neighbor_jaccard(_comention_adj(spark, sf_dir))
 
 
-def two_hop_reach(edges: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame:
+def two_hop_reach(adj: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame:
     """Per-vertex 1-hop degree and exactly-2-hop reachable-set size
-    over an undirected edge list ``(src, dst)`` — the fan-out budget
+    over an :func:`adjacency` — the fan-out budget
     table a GNN neighborhood sampler or a graph-store query planner
     reads before picking per-hop sampling caps (GraphSAGE-style
     fan-out tuning).
@@ -1935,21 +1899,17 @@ def two_hop_reach(edges: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame
     below ``hub_cap`` (the same hub exclusion, same default constant,
     as :func:`neighbor_jaccard` — a celebrity middle emits deg² paths
     and dominates every neighborhood anyway); on the sf corpora max
-    degree is 7, so the output is the exact count. Scale shape: two
-    edge-scale equi-joins (the wedge budget O(Σ min(deg, cap)²)), one
-    distinct, one anti-join against the direct edges (exactly-2 ≠
-    within-2), two vertex-sized hash aggregates."""
-    adj = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    deg = adj.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("n_1hop"))
-    hubs = deg.where(F.col("n_1hop") > hub_cap).select(
-        F.col("src").alias("dst")
+    degree is 7, so the output is the exact count. Scale shape: the
+    degrees ride on the adjacency rows; two edge-scale equi-joins (the
+    wedge budget O(Σ min(deg, cap)²)), one distinct, one anti-join
+    against the direct edges (exactly-2 ≠ within-2), one vertex-sized
+    hash aggregate and one vertex-sized distinct of the degrees."""
+    # the second hop's row carries the middle's degree: hubs never pivot
+    second = adj.where(F.col("degree") <= hub_cap).select(
+        F.col("src").alias("dst"), F.col("dst").alias("z")
     )
-    wadj = adj.join(F.broadcast(hubs), "dst", "left_anti")
-    second = adj.select(F.col("src").alias("dst"), F.col("dst").alias("z"))
     p2 = (
-        wadj.join(second, "dst")
+        adj.join(second, "dst")
         .where(F.col("z") != F.col("src"))
         .select("src", "z")
         .distinct()
@@ -1958,9 +1918,10 @@ def two_hop_reach(edges: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame
         adj.select("src", F.col("dst").alias("z")), ["src", "z"], "left_anti"
     )
     n2 = x2.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("n"))
+    deg = adj.select("src", "degree").distinct()
     return deg.join(n2, "src", "left").select(
         F.col("src").alias("entity_id"),
-        "n_1hop",
+        F.col("degree").alias("n_1hop"),
         F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n_2hop"),
     )
 
@@ -1969,11 +1930,7 @@ def q_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighborhood fan-out budget over the co-mention graph (see
     :func:`two_hop_reach`): per entity, degree and exactly-2-hop
     reachable-set size through non-hub middles."""
-    edges = (
-        _comention_edges(spark, sf_dir)
-        # already localCheckpoint'd by the staging layer — do not re-copy
-    )
-    return two_hop_reach(edges)
+    return two_hop_reach(_comention_adj(spark, sf_dir))
 
 
 #: rule-mining wedge cap: a mid entity whose in-degree × out-degree
@@ -3100,56 +3057,50 @@ def q_ppr_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree bit-for-bit; the oracle unrolls PPR_ITERS rounds as CTEs.
 
     Scale shape: the rank frame is SPARSE — only vertices within k
-    hops of the anchor carry nonzero mass, so each round is a
-    frontier-sized rank⨝deg pre-join and ONE frontier⨝edges join +
-    aggregate (AQE turns the edge join into a runtime broadcast when
+    hops of the anchor carry nonzero mass, so each round is
+    `kg_entity_pagerank`'s round on the staged adjacency restricted to
+    the frontier: ONE frontier⨝adjacency join (each row carries its
+    source degree) + aggregate (AQE turns the edge join into a runtime broadcast when
     the frontier is small and degrades to a shuffle join when a hub
     blows the neighborhood up — no forced driver-side broadcast).
     Lineage stays lazy across the `iters` (3) rounds of
     neighborhood-sized ops; there is no per-round checkpoint. Output
     keeps only nonzero ranks: k-neighborhood-sized, never
     vertex-count-sized."""
-    ed = _ent_docs(spark, sf_dir)
-    und = _comention_edges(spark, sf_dir)
-    verts = ed.select(F.col("entity_id").alias("id")).distinct()
-    return ppr_anchored(und, DIST_ANCHOR, verts=verts)
+    verts = _ent_docs(spark, sf_dir).select(F.col("entity_id").alias("id")).distinct()
+    return ppr_anchored(_comention_adj(spark, sf_dir), DIST_ANCHOR, verts=verts)
 
 
 def ppr_anchored(
-    und_edges: DataFrame,
+    adj: DataFrame,
     anchor: str,
     iters: int = PPR_ITERS,
     verts: DataFrame | None = None,
 ) -> DataFrame:
-    """Personalized-PageRank core over distinct undirected (src, dst)
-    edges (symmetrized here) — see :func:`q_ppr_anchored` for the spec
-    and scale shape. ``verts`` WIDENS the vertex set beyond edge
-    endpoints (isolated vertices; the corpus query passes every linked
-    entity) — an isolated anchor still emits its teleport mass.
+    """Personalized-PageRank core over an :func:`adjacency` — see
+    :func:`q_ppr_anchored` for the spec and scale shape. ``verts``
+    WIDENS the vertex set beyond edge endpoints (isolated vertices; the
+    corpus query passes every linked entity) — an isolated anchor still
+    emits its teleport mass.
     ``verts`` does NOT confine propagation: mass flows over the full
     edge set regardless (every current caller passes a superset of
     the edge endpoints, so the distinction is moot there — but a
     narrower ``verts`` will not mask out-of-set vertices)."""
-    edges = und_edges.select("src", "dst").unionByName(
-        und_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
     if verts is None:
-        verts = edges.select(F.col("src").alias("id")).distinct()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        verts = adj.select(F.col("src").alias("id")).distinct()
 
     # the anchor row carries all teleport mass; it must exist in verts
-    # (an isolated anchor still emits its teleport rank)
-    anchor_row = (
-        verts.where(F.col("id") == anchor)
-        .select("id", F.lit(15 * _PR_SCALE // 100).cast("long").alias("ppr_ppb"))
-        .localCheckpoint()
-    )
+    # (an isolated anchor still emits its teleport rank). Every round
+    # re-reads it, and the rounds' copies plan as one reused exchange.
     ranks = verts.where(F.col("id") == anchor).select(
         "id", F.lit(_PR_SCALE).cast("long").alias("ppr_ppb")
     )
+    anchor_row = ranks.select(
+        "id", F.lit(15 * _PR_SCALE // 100).cast("long").alias("ppr_ppb")
+    )
     for _ in range(iters):
         # the rank frame holds ONLY nonzero-mass vertices (the anchor's
-        # visited neighborhood), so this pre-join is neighborhood-
+        # visited neighborhood), so the join's output is neighborhood-
         # sized, never graph-sized. Vertices the oracle computes as
         # exactly 0 (85·s DIV 100 == 0 for s < 2, or never reached)
         # are absent here and filtered there — same output. The edge
@@ -3160,14 +3111,10 @@ def ppr_anchored(
         # AQE (on in session.py) converts genuinely small frontiers
         # to runtime broadcasts and degrades to a shuffle join
         # gracefully instead of OOMing the driver.
-        per_src = (
-            ranks.join(deg, ranks["id"] == deg["src"])
-            .select("src", F.expr("ppr_ppb DIV deg").alias("c"))
-        )
         contrib = (
-            edges.join(per_src, "src")
+            adj.join(ranks.withColumnRenamed("id", "src"), "src")
             .groupBy("dst")
-            .agg(F.sum("c").alias("s"))
+            .agg(F.sum(F.expr("ppr_ppb DIV degree")).alias("s"))
         )
         # no per-round localCheckpoint: unlike the vertex-sized global
         # PageRank frame, lineage here is `iters` (3) rounds of

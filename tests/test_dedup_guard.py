@@ -188,7 +188,7 @@ def test_neighbor_jaccard_exact_and_hub_excluded(spark):
     """Known 4-vertex graph → exact Jaccard; a planted hub above the
     cap stops generating wedges THROUGH itself but keeps full degrees
     in the denominator."""
-    from dstlr_spark.queries.doc_kg import neighbor_jaccard
+    from dstlr_spark.queries.doc_kg import adjacency, neighbor_jaccard
 
     # path graph A-B, B-C, C-D plus A-C: neighbors A:{B,C} B:{A,C}
     # C:{A,B,D} D:{C}
@@ -197,7 +197,7 @@ def test_neighbor_jaccard_exact_and_hub_excluded(spark):
     )
     out = {
         (r.entity_a, r.entity_b): r
-        for r in neighbor_jaccard(edges, hub_cap=10).collect()
+        for r in neighbor_jaccard(adjacency(edges), hub_cap=10).collect()
     }
     # A and B share neighbor C: J = 1/(2+2-1)
     ab = out[("A", "B")]
@@ -212,7 +212,7 @@ def test_neighbor_jaccard_exact_and_hub_excluded(spark):
     # Remaining shared-neighbor wedges: through A (B,C), through B (A,C).
     capped = {
         (r.entity_a, r.entity_b): r
-        for r in neighbor_jaccard(edges, hub_cap=2).collect()
+        for r in neighbor_jaccard(adjacency(edges), hub_cap=2).collect()
     }
     assert ("A", "D") not in capped and ("B", "D") not in capped
     bc = capped[("B", "C")]  # through shared neighbor A

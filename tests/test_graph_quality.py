@@ -14,6 +14,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from dstlr_spark.queries.doc_kg import (
+    adjacency,
     q_agreement_by_distance,
     q_clustering_coefficient,
     q_entity_degree_hist,
@@ -32,7 +33,7 @@ def test_two_hop_reach_exact_on_hand_graph(spark):
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("C", "D"), ("A", "C")], "src string, dst string"
     )
-    out = {r.entity_id: r for r in two_hop_reach(edges, hub_cap=10).collect()}
+    out = {r.entity_id: r for r in two_hop_reach(adjacency(edges), hub_cap=10).collect()}
     assert out["A"].n_1hop == 2 and out["A"].n_2hop == 1
     assert out["B"].n_1hop == 2 and out["B"].n_2hop == 1
     assert out["C"].n_1hop == 3 and out["C"].n_2hop == 0
@@ -46,7 +47,7 @@ def test_two_hop_reach_hub_cap_blocks_middles_keeps_degrees(spark):
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("C", "D"), ("A", "C")], "src string, dst string"
     )
-    out = {r.entity_id: r for r in two_hop_reach(edges, hub_cap=2).collect()}
+    out = {r.entity_id: r for r in two_hop_reach(adjacency(edges), hub_cap=2).collect()}
     assert out["C"].n_1hop == 3  # degree unaffected by the cap
     assert all(r.n_2hop == 0 for r in out.values())
     # paths through non-hub middles survive: add E-A so D reaches E
@@ -225,26 +226,29 @@ def test_alias_ambiguity_keys_aliases_like_the_linker(spark, monkeypatch):
 def test_entity_distances_exact_on_path_graph(spark):
     """Path A-B-C-D: six unordered pairs with hops 1/1/1/2/2/3; a
     tighter horizon drops only the 3-hop pair."""
-    from dstlr_spark.queries.doc_kg import entity_distances
+    from dstlr_spark.queries.doc_kg import adjacency, entity_distances
 
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("C", "D")], "src string, dst string"
     )
-    out = {(r.entity_a, r.entity_b): r.hops for r in entity_distances(edges).collect()}
+    out = {
+        (r.entity_a, r.entity_b): r.hops
+        for r in entity_distances(adjacency(edges)).collect()
+    }
     assert out == {
         ("A", "B"): 1, ("B", "C"): 1, ("C", "D"): 1,
         ("A", "C"): 2, ("B", "D"): 2, ("A", "D"): 3,
     }
     out2 = {
         (r.entity_a, r.entity_b): r.hops
-        for r in entity_distances(edges, max_hops=2).collect()
+        for r in entity_distances(adjacency(edges), max_hops=2).collect()
     }
     assert ("A", "D") not in out2 and len(out2) == 5
     # anchored: BFS seeded at D — exactly the unordered pairs
     # involving D, now as (anchor, other) with the same hop counts
     anch = {
         r.entity_b: r.hops
-        for r in entity_distances(edges, anchor="D").collect()
+        for r in entity_distances(adjacency(edges), anchor="D").collect()
     }
     assert anch == {"C": 1, "B": 2, "A": 3}
 
@@ -257,14 +261,14 @@ def test_entity_distances_hub_cap_binds_on_star_graph(spark):
     H↔X and leaf↔X paths. Uncapped (or cap ≥ 6) reproduces the full
     all-pairs-within-K table — pinning that the cap changes pivot
     eligibility and nothing else."""
-    from dstlr_spark.queries.doc_kg import entity_distances
+    from dstlr_spark.queries.doc_kg import adjacency, entity_distances
 
     rows = [("H", f"L{i}") for i in range(1, 7)] + [("L1", "X")]
     edges = spark.createDataFrame(rows, "src string, dst string")
 
     capped = {
         (r.entity_a, r.entity_b): r.hops
-        for r in entity_distances(edges, hub_cap=5).collect()
+        for r in entity_distances(adjacency(edges), hub_cap=5).collect()
     }
     # hop-1 edges survive (hubs are endpoints, not pivots)
     assert capped[("H", "L1")] == 1 and capped[("L1", "X")] == 1
@@ -276,11 +280,11 @@ def test_entity_distances_hub_cap_binds_on_star_graph(spark):
 
     uncapped = {
         (r.entity_a, r.entity_b): r.hops
-        for r in entity_distances(edges).collect()
+        for r in entity_distances(adjacency(edges)).collect()
     }
     high_cap = {
         (r.entity_a, r.entity_b): r.hops
-        for r in entity_distances(edges, hub_cap=6).collect()
+        for r in entity_distances(adjacency(edges), hub_cap=6).collect()
     }
     assert high_cap == uncapped
     assert uncapped[("L2", "L3")] == 2
@@ -292,12 +296,12 @@ def test_wl_signature_orbits_on_hand_graphs(spark):
     center B is alone. Adding D-E (a disjoint symmetric pair) gives
     D, E their own shared orbit distinct from the path's leaves
     (different degree-neighborhood structure)."""
-    from dstlr_spark.queries.doc_kg import wl_signature
+    from dstlr_spark.queries.doc_kg import adjacency, wl_signature
 
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("D", "E")], "src string, dst string"
     )
-    out = {r.entity_id: r for r in wl_signature(edges).collect()}
+    out = {r.entity_id: r for r in wl_signature(adjacency(edges)).collect()}
     assert out["A"].wl_label == out["C"].wl_label
     assert out["A"].orbit_size == 2
     assert out["B"].orbit_size == 1
@@ -400,7 +404,7 @@ def test_entity_distances_multi_anchor_batch(spark):
     """Multi-anchor batch BFS (one pass, K seeds) must equal the union
     of per-seed anchored runs — the K-point-lookup shape that pays one
     graph traversal instead of K."""
-    from dstlr_spark.queries.doc_kg import entity_distances
+    from dstlr_spark.queries.doc_kg import adjacency, entity_distances
 
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("C", "D"), ("B", "E")],
@@ -409,11 +413,11 @@ def test_entity_distances_multi_anchor_batch(spark):
     seeds = spark.createDataFrame([("A",), ("D",)], "id string")
     batch = {
         (r.entity_a, r.entity_b): r.hops
-        for r in entity_distances(edges, anchors=seeds).collect()
+        for r in entity_distances(adjacency(edges), anchors=seeds).collect()
     }
     singles = {}
     for s in ("A", "D"):
-        for r in entity_distances(edges, anchor=s).collect():
+        for r in entity_distances(adjacency(edges), anchor=s).collect():
             singles[(s, r.entity_b)] = r.hops
     assert batch == singles
     # sanity: expected content from seed A (hops ≤ 3)
@@ -463,7 +467,7 @@ def test_entity_distances_matches_python_bfs_on_random_graphs(spark):
     min-hops after capped detours, seed rooting) would actually show."""
     import random
 
-    from dstlr_spark.queries.doc_kg import KHOP_MAX, entity_distances
+    from dstlr_spark.queries.doc_kg import KHOP_MAX, adjacency, entity_distances
 
     for seed in (11, 23, 47):
         rng = random.Random(seed)
@@ -483,7 +487,7 @@ def test_entity_distances_matches_python_bfs_on_random_graphs(spark):
         # exact all-pairs-within-K (hub_cap disabled)
         got = {
             (r.entity_a, r.entity_b): r.hops
-            for r in entity_distances(edf).collect()
+            for r in entity_distances(adjacency(edf)).collect()
         }
         ref = _py_bfs_pairs(edges, KHOP_MAX)
         want = {(a, b): d for (a, b), d in ref.items() if a < b}
@@ -499,7 +503,7 @@ def test_entity_distances_matches_python_bfs_on_random_graphs(spark):
         cap = sorted(degc.values())[len(degc) // 2]
         got_c = {
             (r.entity_a, r.entity_b): r.hops
-            for r in entity_distances(edf, hub_cap=cap).collect()
+            for r in entity_distances(adjacency(edf), hub_cap=cap).collect()
         }
         ref_c = _py_bfs_pairs(edges, KHOP_MAX, cap=cap)
         want_c = {(a, b): d for (a, b), d in ref_c.items() if a < b}
@@ -511,7 +515,7 @@ def test_entity_distances_matches_python_bfs_on_random_graphs(spark):
         sdf = spark.createDataFrame([(s,) for s in seeds], "id string")
         got_b = {
             (r.entity_a, r.entity_b): r.hops
-            for r in entity_distances(edf, anchors=sdf).collect()
+            for r in entity_distances(adjacency(edf), anchors=sdf).collect()
         }
         want_b = _py_bfs_pairs(edges, KHOP_MAX, seeds=seeds)
         assert got_b == want_b, f"batch mismatch (seed={seed}, seeds={seeds})"
@@ -535,6 +539,71 @@ def test_ktruss_peel_on_planted_clique_plus_tail(spark):
     got = {(r.src, r.dst): r.support for r in _truss_peel(edges, 4, 3).collect()}
     assert set(got) == set(clique)
     assert all(s == 2 for s in got.values())
+
+
+def _py_kcore(edges, k, rounds):
+    """Pure-Python round-synchronous peel: vertex → the round that
+    peeled it, 0 if it survives every round."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    peel = {v: 0 for v in adj}
+    for rnd in range(1, rounds + 1):
+        alive = {v for v, r in peel.items() if r == 0}
+        for v in [v for v in alive if len(adj[v] & alive) < k]:
+            peel[v] = rnd
+    return peel
+
+
+def test_kcore_peel_matches_python_on_planted_graphs(spark):
+    """k=3 peel of a K4 with a pendant chain: p4 (degree 1) peels
+    first, and each removal drops the next chain vertex below 3, so
+    the chain peels one vertex per round toward the clique, which
+    survives. An isolated strong pair peels in round 1; too few rounds
+    leave the cascade's tail in the core; no edges, no vertices."""
+    from dstlr_spark.queries.doc_kg import kcore_peel
+
+    k4 = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d")]
+    chain = [("a", "p1"), ("b", "p1"), ("p1", "p2"), ("a", "p2"), ("p2", "p3"),
+             ("a", "p3"), ("p3", "p4")]
+    pair = [("s", "t")]
+    rows = k4 + chain + pair
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    for rounds in (8, 2):
+        got = {r.entity_id: r.peel_round for r in kcore_peel(edges, 3, rounds).collect()}
+        assert got == _py_kcore(rows, 3, rounds), rounds
+    assert got == {"a": 0, "b": 0, "c": 0, "d": 0, "p1": 0, "p2": 0,
+                   "p3": 2, "p4": 1, "s": 1, "t": 1}
+    full = {r.entity_id: r.peel_round for r in kcore_peel(edges, 3, 8).collect()}
+    assert [full[v] for v in ("p4", "p3", "p2", "p1")] == [1, 2, 3, 4]
+    empty = spark.createDataFrame([], "src string, dst string")
+    assert kcore_peel(empty, 3, 8).collect() == []
+
+
+def test_kcore_peel_checkpoints_one_frame_per_round(spark, monkeypatch):
+    """The peel carries one vertex-state frame: one checkpoint of the
+    symmetrized edges, then one per round."""
+    from dstlr_spark.queries.doc_kg import kcore_peel
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
+    )
+    frame_cls = type(edges)
+    calls = []
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        calls.append(self)
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
+    out = kcore_peel(edges, 2, 5)
+    monkeypatch.setattr(frame_cls, "localCheckpoint", real_checkpoint)
+    assert len(calls) == 1 + 5
+    assert {r.entity_id: r.peel_round for r in out.collect()} == {
+        "a": 0, "b": 0, "c": 0, "d": 1
+    }
 
 
 def test_allen_case_classifies_all_13_relations(spark):
@@ -618,12 +687,12 @@ def test_ppr_anchored_multipath_beats_single_path(spark):
     from the anchor A) must outrank F (one length-2 path), which plain
     hop counts cannot distinguish — the reason PPR exists next to the
     anchored BFS. Exact values pinned against the pure-Python spec."""
-    from dstlr_spark.queries.doc_kg import ppr_anchored
+    from dstlr_spark.queries.doc_kg import adjacency, ppr_anchored
 
     rows = [("A", "B"), ("A", "C"), ("B", "D"), ("C", "D"),
             ("A", "E"), ("E", "F")]
     edges = spark.createDataFrame(rows, "src string, dst string")
-    got = {r.entity_id: r.ppr_ppb for r in ppr_anchored(edges, "A").collect()}
+    got = {r.entity_id: r.ppr_ppb for r in ppr_anchored(adjacency(edges), "A").collect()}
     verts = sorted({v for e in rows for v in e})
     assert got == _py_ppr(rows, "A", verts)
     assert got["D"] > got["F"]  # two paths absorb more restart mass
@@ -635,7 +704,7 @@ def test_ppr_anchored_matches_python_on_random_graphs(spark):
     an isolated-anchor corner: teleport mass still emitted via verts."""
     import random
 
-    from dstlr_spark.queries.doc_kg import ppr_anchored
+    from dstlr_spark.queries.doc_kg import adjacency, ppr_anchored
 
     for seed in (1, 7):
         rng = random.Random(seed)
@@ -649,7 +718,7 @@ def test_ppr_anchored_matches_python_on_random_graphs(spark):
         edges = spark.createDataFrame(rows, "src string, dst string")
         anchor = verts[0]
         got = {r.entity_id: r.ppr_ppb
-               for r in ppr_anchored(edges, anchor).collect()}
+               for r in ppr_anchored(adjacency(edges), anchor).collect()}
         assert got == _py_ppr(rows, anchor, verts=sorted(
             {v for e in rows for v in e}
         ))
@@ -658,5 +727,5 @@ def test_ppr_anchored_matches_python_on_random_graphs(spark):
     edges = spark.createDataFrame([("A", "B")], "src string, dst string")
     vf = spark.createDataFrame([("A",), ("B",), ("Z",)], "id string")
     got = {r.entity_id: r.ppr_ppb
-           for r in ppr_anchored(edges, "Z", verts=vf).collect()}
+           for r in ppr_anchored(adjacency(edges), "Z", verts=vf).collect()}
     assert got == {"Z": 150_000_000}

@@ -484,17 +484,28 @@ def test_alias_winners_plans_no_window(spark):
     assert "Window" not in _plan(spark, _alias_winners(spark))
 
 
-def test_comention_adjacency_staged_once(spark):
+def test_comention_adjacency_staged_once(spark, monkeypatch):
     """One staged symmetrized co-mention adjacency per session: the
-    degree and adjacency consumers read its checkpoint and none of
-    them unions the edge list with its reverse again."""
+    degree, adjacency and graph-kernel consumers read its checkpoint,
+    and none of them symmetrizes and checkpoints an edge list again.
+    k-core and PMI read the staged pair counts instead of re-running
+    the doc-level pair join."""
     from dstlr_spark.queries import _memo
     from dstlr_spark.queries.doc_kg import (
         _comention_adj,
+        _comention_weights,
+        _ent_docs,
         q_adjacency_list,
+        q_comention_pmi,
         q_degree_assortativity,
         q_distance_hub_audit,
         q_entity_degree_hist,
+        q_entity_distances,
+        q_entity_kcore,
+        q_neighbor_jaccard,
+        q_ppr_anchored,
+        q_two_hop_reach,
+        q_wl_signature,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -503,10 +514,75 @@ def test_comention_adjacency_staged_once(spark):
         del _memo._CACHE[k]
     adj = _comention_adj(spark, sf)
     assert _comention_adj(spark, sf) is adj
+    _ent_docs(spark, sf)
+
+    def scan(df):
+        return re.search(r"\w+RDD\[\d+\]", _plan(spark, df)).group(0)
+
+    # every plan a query runs: the frames it checkpoints while being
+    # built (where a kernel's own symmetrized edge list would show),
+    # then its own
+    checkpointed = []
+    frame_cls = type(adj)
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(_plan(spark, self))
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+
+    def plans(q):
+        checkpointed.clear()
+        final = _plan(spark, q(spark, sf))
+        return checkpointed[:], final
+
+    adj_scan = scan(adj)
     for q in (q_adjacency_list, q_degree_assortativity, q_distance_hub_audit,
-              q_entity_degree_hist):
-        plan = _plan(spark, q(spark, sf))
-        assert "ExistingRDD" in plan and "Union" not in plan, q.__name__
+              q_entity_degree_hist, q_entity_distances, q_wl_signature,
+              q_neighbor_jaccard, q_two_hop_reach, q_ppr_anchored):
+        cut, final = plans(q)
+        assert adj_scan in "\n".join([*cut, final]), q.__name__
+        assert not any("Union" in p for p in cut), q.__name__
+        # the BFS unions its hop layers and PPR its teleport row: their
+        # own per-round frames, never an edge list with its reverse
+        if q not in (q_entity_distances, q_ppr_anchored):
+            assert "Union" not in final, q.__name__
+
+    weights_scan = scan(_comention_weights(spark, sf))
+    for q in (q_entity_kcore, q_comention_pmi):
+        cut, final = plans(q)
+        ran = "\n".join([*cut, final])
+        assert weights_scan in ran, q.__name__
+        # the pair join's residual: a.entity_id < b.entity_id
+        assert not re.search(r"entity_id#\d+ < entity_id#\d+", ran), q.__name__
+
+
+def test_entity_nodes_plans_one_exchange(spark):
+    """entity_nodes is one distinct over the raw link and fact inputs:
+    one hash exchange, not the link and fact dedupes again beneath it."""
+    from dstlr_spark.operators.graph import graph_tables
+
+    mentions = spark.createDataFrame(
+        [("d", "m1", "X", "s", "n", 0, 1)],
+        "doc_id string, mention_id string, entity_class string, span string,"
+        " normalized string, begin int, end int",
+    )
+    links = spark.createDataFrame(
+        [("m1", "E1"), ("m2", None)], "mention_id string, entity_id string"
+    )
+    relations = spark.createDataFrame(
+        [], "doc_id string, subject_mention_id string, type string,"
+        " confidence double, object_mention_id string"
+    )
+    facts = spark.createDataFrame(
+        [("E1", "r", "v"), ("E2", "r", "v")],
+        "entity_id string, relation string, value string",
+    )
+    nodes = graph_tables(mentions, links, relations, facts)["entity_nodes"]
+    exchanges = _exchange_nodes(_plan(spark, nodes))
+    assert len(exchanges) == 1 and "hashpartitioning(entity_id" in exchanges[0]
+    assert sorted(r.entity_id for r in nodes.collect()) == ["E1", "E2"]
 
 
 def test_bucketed_window_pairs_plans_as_equi_join(spark):
@@ -537,14 +613,14 @@ def test_batch_bfs_seed_join_broadcasts(spark):
     """The multi-anchor BFS's seed semi-join must broadcast the seed
     set (K rows, query-sized) — shuffling the edge-scale frontier on K
     would be the wrong plan at any scale."""
-    from dstlr_spark.queries.doc_kg import entity_distances
+    from dstlr_spark.queries.doc_kg import adjacency, entity_distances
 
     edges = spark.range(200).select(
         F.col("id").cast("string").alias("src"),
         ((F.col("id") * 7 + 3) % 200).cast("string").alias("dst"),
     )
     seeds = spark.createDataFrame([("1",), ("50",)], "id string")
-    plan = _plan(spark, entity_distances(edges, anchors=seeds))
+    plan = _plan(spark, entity_distances(adjacency(edges), anchors=seeds))
     assert "BroadcastHashJoin" in plan
     # the semi-join side is the broadcast one
     assert "LeftSemi" in plan
