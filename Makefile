@@ -16,6 +16,7 @@
 #   make media-parity    # codec reach guard + codec tests + the 11 mm_* oracle queries (not part of gate)
 #   make kg-parity       # document-KG query and canonicalize tests + every doc_kg oracle query (not part of gate)
 #   make pipeline-parity # ledger, job-composition, golden, metrics and package-reach tests (not part of gate)
+#   make reach           # the package-reach AST guards: definitions and defaulted parameters, in seconds (not part of gate)
 
 SF ?= sf0.01
 BENCH_SF ?= /root/testdata/sf0.1
@@ -27,7 +28,7 @@ OUT := gate_out
 SHELL := /bin/bash
 .SHELLFLAGS := -o pipefail -ec
 
-.PHONY: gate oracles test bench selftest perfbench perfbench-trace graph-parity canon-parity extract-parity media-parity kg-parity pipeline-parity
+.PHONY: gate oracles test bench selftest perfbench perfbench-trace graph-parity canon-parity extract-parity media-parity kg-parity pipeline-parity reach
 
 oracles:
 	@mkdir -p $(OUT)
@@ -95,6 +96,10 @@ kg-parity:
 # quick pre-check for a change to plans/pipeline.py, plans/ledger.py or a job
 pipeline-parity:
 	python -m pytest -q tests/test_ledger.py tests/test_jobs_e2e.py tests/test_stage_jobs.py tests/test_golden.py tests/test_metrics.py tests/test_package_reach.py
+
+# quick pre-check after changing a signature: pure AST, no Spark
+reach:
+	python -m pytest -q tests/test_package_reach.py
 
 gate: oracles test bench
 	@echo "gate complete: $(OUT)/oracles_$(SF).log $(OUT)/pytest.log $(OUT)/bench.json"

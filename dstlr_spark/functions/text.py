@@ -222,7 +222,7 @@ def strip_html(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
-def ngrams(toks: Column, k: int, sep: str = " ") -> Column:
+def ngrams(toks: Column, k: int) -> Column:
     """Space-joined token k-grams of an array Column, O(n·k) per row.
 
     Built as k-1 ``zip_with`` passes over one-time ``slice`` shifts, so
@@ -243,6 +243,6 @@ def ngrams(toks: Column, k: int, sep: str = " ") -> Column:
         g = F.zip_with(
             g,
             F.slice(toks, j + 1, sz - j),
-            lambda a, b: F.concat(a, F.lit(sep), b),
+            lambda a, b: F.concat(a, F.lit(" "), b),
         )
     return F.slice(g, 1, sz - (k - 1)) if k > 1 else g

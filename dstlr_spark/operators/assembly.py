@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def assemble_documents(transcripts: DataFrame, sep: str = " ") -> DataFrame:
+def assemble_documents(transcripts: DataFrame) -> DataFrame:
     """``groupBy(conv_id)`` → stable-ordered concat of per-turn text.
 
     Filters F1/F2 (null/empty conv_id and text,
@@ -50,21 +50,21 @@ def assemble_documents(transcripts: DataFrame, sep: str = " ") -> DataFrame:
         .select(
             "doc_id",
             F.array_join(
-                F.transform(F.col("turns"), lambda t: t["text"]), sep
+                F.transform(F.col("turns"), lambda t: t["text"]), " "
             ).alias("contents"),
         )
     )
 
 
-def salted_repartition(df: DataFrame, n: int, key: str = "doc_id", salt_buckets: int = 8) -> DataFrame:
+def salted_repartition(df: DataFrame, n: int) -> DataFrame:
     """Salted repartition before the CPU-heavy extraction stage.
 
     The reference load-balances with a blunt round-robin
     ``repartition(conf.partitions())`` (ExtractTriples.scala:63). Pure
-    round-robin destroys key locality; pure hash(key) lets one huge
-    conversation pin a partition. Salting on ``(key, salt)`` keeps
+    round-robin destroys key locality; pure hash(doc_id) lets one huge
+    conversation pin a partition. Salting on ``(doc_id, salt)`` keeps
     documents of one conversation co-located *per salt bucket* while
-    spreading hot keys across ``salt_buckets`` partitions.
+    spreading hot keys across 8 salt buckets.
 
     The salt is derived ONLY from row content (``xxhash64`` over every
     column), never from ``monotonically_increasing_id()`` or ``rand()``:
@@ -85,6 +85,6 @@ def salted_repartition(df: DataFrame, n: int, key: str = "doc_id", salt_buckets:
         raise ValueError("salted_repartition needs at least one non-map column")
     return df.repartition(
         n,
-        F.col(key),
-        F.pmod(F.xxhash64(*cols), F.lit(salt_buckets)),
+        F.col("doc_id"),
+        F.pmod(F.xxhash64(*cols), F.lit(8)),
     )

@@ -48,30 +48,31 @@ def star_edges(df: DataFrame, id_col: str, group_col: str) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, vertices: DataFrame | None = None, max_iter: int = 50
-) -> DataFrame:
+#: round budget of :func:`connected_components`
+CC_MAX_ITER = 50
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """``edges(src, dst)`` → ``(id, component)`` with component = min id.
 
-    ``vertices(id)`` optionally adds isolated vertices (own component).
     Deterministic: the component representative is the lexicographic
-    minimum member id.
+    minimum member id. A self-loop ``(v, v)`` makes ``v`` a vertex.
 
     Raises ``RuntimeError`` if labels are still changing after
-    ``max_iter`` rounds — min-label propagation needs diameter-many
+    CC_MAX_ITER rounds — min-label propagation needs diameter-many
     rounds, and silently returning a partially merged clustering would
     present non-convergence as a valid result.
     """
     sym = symmetrize(edges).localCheckpoint()
-    verts = sym.select(F.col("src").alias("id"))
-    if vertices is not None:
-        verts = verts.unionByName(vertices.select("id"))
     labels = (
-        verts.distinct().select("id", F.col("id").alias("component")).localCheckpoint()
+        sym.select(F.col("src").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("component"))
+        .localCheckpoint()
     )
 
     changed = -1
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         # neighbour minimum: for each dst, min over its neighbours' labels
         nbr = (
             sym.join(labels, sym["src"] == labels["id"], "inner")
@@ -118,16 +119,14 @@ def connected_components(
             break
     if changed != 0:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            f"({changed} labels still changing); raise max_iter — the graph's "
+            f"connected_components did not converge in {CC_MAX_ITER} iterations "
+            f"({changed} labels still changing); raise CC_MAX_ITER — the graph's "
             "diameter exceeds the round budget"
         )
     return labels.select("id", "component")
 
 
-def canonicalize_mentions(
-    mentions: DataFrame, links_to: DataFrame | None = None
-) -> DataFrame:
+def canonicalize_mentions(mentions: DataFrame, links_to: DataFrame) -> DataFrame:
     """→ (mention_id, canonical_id). Additive: never rewrites the
     reference-shape per-doc ids (SURVEY.md §7 Stage 3 invariant).
 
@@ -149,8 +148,6 @@ def canonicalize_mentions(
         .select("mention_id", F.coalesce("rep", "mention_id").alias("rep"))
         .localCheckpoint()
     )
-    if links_to is None:
-        return reps.select("mention_id", F.col("rep").alias("canonical_id"))
     pairs = (
         links_to.where(F.col("entity_id").isNotNull())
         .join(reps, "mention_id", "left")

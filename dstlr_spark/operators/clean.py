@@ -15,6 +15,17 @@ Join-plan notes for scale: the chain is keyed on mention ids (hash
 joins, AQE-broadcast when a side is small); the Fact anchor
 ``{relation: r.type}`` is an equi-key so it joins, never filters
 post-cross. The final span/value predicate is the only residual.
+
+The pattern's ``(d:Document)-->(s:Mention)`` edge is a semijoin of the
+relation edges against ``mentions_edges`` — a mention-scale dedup +
+shuffle. For graphs built by our own materializers
+(``NativeKG.graph()`` / ``materialize_graph``) every relation edge's
+(doc_id, subject_mention_id) is derived FROM the mention frame, so the
+semijoin is an identity by construction (FK integrity is asserted by
+the J4 anti-join tests and measured 0-orphan end-to-end). The chain
+elides it, which removes one mention-scale shuffle from every clean
+query (measured −36% chain wall at sf0.1, row-for-row identical
+output, pinned against the literal plan in tests).
 """
 
 from __future__ import annotations
@@ -24,26 +35,10 @@ from pyspark.sql import functions as F
 
 
 def _matched(
-    graph: dict[str, DataFrame],
-    relation_type: str | None,
-    how: str,
-    assume_fk_integrity: bool = True,
+    graph: dict[str, DataFrame], relation_type: str | None, how: str
 ) -> DataFrame:
-    """The shared 5-way pattern; ``how`` is the facts-join type.
-
-    ``assume_fk_integrity``: the Cypher pattern's
-    ``(d:Document)-->(s:Mention)`` edge is a semijoin against
-    ``mentions_edges`` — a mention-scale dedup + shuffle. For graphs
-    built by our own materializers (``NativeKG.graph()`` /
-    ``materialize_graph``) every relation edge's
-    (doc_id, subject_mention_id) is derived FROM the mention frame, so
-    the semijoin is an identity by construction (FK integrity is
-    separately asserted by the J4 anti-join tests and measured 0-orphan
-    end-to-end); the default elides it, which removes one mention-scale
-    shuffle from every clean query (measured −36% chain wall at sf0.1,
-    row-for-row identical output). Pass ``False`` to run the
-    Cypher-literal plan against a foreign graph whose integrity is not
-    guaranteed."""
+    """The shared pattern, MENTIONS-edge semijoin elided (module
+    docstring); ``how`` is the facts-join type."""
     rels = graph["relation_edges"]
     if relation_type is not None:
         rels = rels.where(F.col("type") == relation_type)
@@ -59,12 +54,6 @@ def _matched(
         "entity_id", F.col("relation").alias("type"), F.col("value").alias("fact_value")
     )
 
-    if not assume_fk_integrity:
-        subj_doc = graph["mentions_edges"].select(
-            F.col("doc_id"), F.col("mention_id").alias("subject_mention_id")
-        ).dropDuplicates()
-        rels = rels.join(subj_doc, ["doc_id", "subject_mention_id"], "inner")
-
     return (
         rels.join(obj_nodes, "object_mention_id", "inner")
         .join(subj_links, "subject_mention_id", "inner")
@@ -73,35 +62,29 @@ def _matched(
 
 
 def supporting_information(
-    graph: dict[str, DataFrame],
-    relation_type: str | None = None,
-    assume_fk_integrity: bool = True,
+    graph: dict[str, DataFrame], relation_type: str | None = None
 ) -> DataFrame:
     """J5: extracted relation corroborated by a ground-truth fact."""
-    return _matched(graph, relation_type, "inner", assume_fk_integrity).where(
+    return _matched(graph, relation_type, "inner").where(
         F.col("object_span") == F.col("fact_value")
     )
 
 
 def inconsistent_information(
-    graph: dict[str, DataFrame],
-    relation_type: str | None = None,
-    assume_fk_integrity: bool = True,
+    graph: dict[str, DataFrame], relation_type: str | None = None
 ) -> DataFrame:
     """J7: extracted relation whose object contradicts the fact
     (CleanTriples' dirty rows, CleanTriples.scala:56,64)."""
-    return _matched(graph, relation_type, "inner", assume_fk_integrity).where(
+    return _matched(graph, relation_type, "inner").where(
         F.col("object_span") != F.col("fact_value")
     )
 
 
 def missing_information(
-    graph: dict[str, DataFrame],
-    relation_type: str | None = None,
-    assume_fk_integrity: bool = True,
+    graph: dict[str, DataFrame], relation_type: str | None = None
 ) -> DataFrame:
     """J6: extracted relation with a linked subject entity but no
     ground-truth fact for that relation — left join + IS NULL ≈ anti."""
-    return _matched(graph, relation_type, "left", assume_fk_integrity).where(
+    return _matched(graph, relation_type, "left").where(
         F.col("fact_value").isNull()
     )

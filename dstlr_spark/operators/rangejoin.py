@@ -31,11 +31,11 @@ def range_join_bucketed(
     ts: str,
     start: str,
     end: str,
-    key: str | None = None,
+    key: str,
     bucket_width: int = 3600,
 ) -> DataFrame:
-    """Inner-join ``points`` to every interval containing them
-    (``start <= ts < end``, epoch seconds), optionally key-scoped.
+    """Inner-join ``points`` to every interval with the same ``key`` that
+    contains them (``start <= ts < end``, epoch seconds).
 
     Returns points columns + intervals columns (names must not collide
     apart from ``key``).
@@ -61,8 +61,7 @@ def range_join_bucketed(
             )
         ),
     )
-    on = ["_bkt", key] if key else ["_bkt"]
-    joined = p.join(iv, on)
+    joined = p.join(iv, ["_bkt", key])
     return joined.where(
         (F.col(start).cast("timestamp").cast("long") <= F.col(ts).cast("timestamp").cast("long"))
         & (F.col(ts).cast("timestamp").cast("long") < F.col(end).cast("timestamp").cast("long"))

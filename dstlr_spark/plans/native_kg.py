@@ -28,7 +28,7 @@ from dstlr_spark.operators.extract import (
 )
 from dstlr_spark.operators.graph import graph_tables, triple_edges
 from dstlr_spark.plans.partitioning import fan_out
-from dstlr_spark.schemas import META_SCHEMA, TRIPLE_SCHEMA
+from dstlr_spark.schemas import META_SCHEMA
 
 
 class NativeKG:
@@ -39,7 +39,7 @@ class NativeKG:
         documents: DataFrame,
         gazetteer: DataFrame,
         aliases: DataFrame,
-        fact_triples: DataFrame | None = None,
+        fact_triples: DataFrame,
         cooccur_window: int = 8,
         sent_threshold: int = DEFAULT_SENT_THRESHOLD,
     ) -> None:
@@ -133,10 +133,11 @@ class NativeKG:
         )
 
     def bag(self) -> DataFrame:
-        out = self.extraction_triples().unionByName(self.links_triples())
-        if self.fact_triples is not None:
-            out = out.unionByName(self.fact_triples)
-        return out
+        return (
+            self.extraction_triples()
+            .unionByName(self.links_triples())
+            .unionByName(self.fact_triples)
+        )
 
     def graph(self) -> dict[str, DataFrame]:
         """Graph tables straight from the mention frame.
@@ -157,9 +158,6 @@ class NativeKG:
         """
         self._ensure_persisted()
         m = self.mentions
-        facts = self.fact_triples
-        if facts is None:
-            facts = m.sparkSession.createDataFrame([], TRIPLE_SCHEMA)
         mentions = m.select(
             "doc_id",
             "mention_id",
@@ -172,7 +170,9 @@ class NativeKG:
         return graph_tables(
             mentions,
             *triple_edges(
-                self.links_triples(), relation_triples(m, self.cooccur_window), facts
+                self.links_triples(),
+                relation_triples(m, self.cooccur_window),
+                self.fact_triples,
             ),
         )
 

@@ -316,14 +316,10 @@ def q_agent_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return detect_cycles(t)
 
 
-def detect_cycles(
-    t: DataFrame,
-    max_period: int = LOOP_MAX_PERIOD,
-    min_repeats: int = LOOP_MIN_REPEATS,
-) -> DataFrame:
+def detect_cycles(t: DataFrame) -> DataFrame:
     """Cycle-detection core over (conv_id, turn_idx, sig) — see
     :func:`q_agent_loops` for semantics and the scale shape."""
-    periods = range(1, max_period + 1)
+    periods = range(1, LOOP_MAX_PERIOD + 1)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     wc = w.rowsBetween(Window.unboundedPreceding, 0)
     ms = t.select(
@@ -372,7 +368,7 @@ def detect_cycles(
             F.col("period").cast("int").alias("period"),
             F.expr("CAST(maxl DIV period + 1 AS BIGINT)").alias("repeats"),
         )
-        .where(F.col("repeats") >= min_repeats)
+        .where(F.col("repeats") >= LOOP_MIN_REPEATS)
     )
 
 

@@ -133,25 +133,20 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       Iceberg stage table on a cluster) — it feeds both join sides and
       the size dimension.
     """
-    return ngram_jaccard_pairs(shingles=_staged_shingles(spark, sf_dir))
+    return ngram_jaccard_pairs(_staged_shingles(spark, sf_dir))
 
 
-def ngram_jaccard_pairs(
-    d: DataFrame = None, hot_cap: int = None, shingles: DataFrame = None
-) -> DataFrame:
-    """Operator form of ``dedup_ngram_jaccard`` (docstring above);
-    ``hot_cap`` overrides HOT_SHINGLE_CAP for tests; pass ``shingles``
-    (a ``_shingles`` frame, ideally staged) to share one shingle scan
-    with sibling consumers."""
-    cap = HOT_SHINGLE_CAP if hot_cap is None else hot_cap
-    raw = _shingles(d) if shingles is None else shingles
+def ngram_jaccard_pairs(shingles: DataFrame) -> DataFrame:
+    """Operator form of ``dedup_ngram_jaccard`` (docstring above) over a
+    ``_shingles`` frame, ideally staged so sibling consumers share one
+    shingle scan."""
     hot = (
-        raw.groupBy("shingle")
+        shingles.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") > cap)
+        .where(F.col("n_docs") > HOT_SHINGLE_CAP)
         .select("shingle")
     )
-    sh = raw.join(F.broadcast(hot), "shingle", "left_anti").localCheckpoint()
+    sh = shingles.join(F.broadcast(hot), "shingle", "left_anti").localCheckpoint()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -233,8 +228,8 @@ def _banded(sh: DataFrame) -> DataFrame:
     )
 
 
-def skipped_band_buckets(banded: DataFrame, max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
-    """Band buckets larger than ``max_bucket`` — the skew guard's audit
+def skipped_band_buckets(banded: DataFrame) -> DataFrame:
+    """Band buckets larger than LSH_MAX_BUCKET — the skew guard's audit
     table (band_idx, band_key, n_docs). A degenerate band key shared by
     10⁵ docs would otherwise explode into 10¹⁰ join rows; the cap makes
     the self-join O(Σ min(bucket, cap)²) and this frame makes the drop
@@ -243,18 +238,13 @@ def skipped_band_buckets(banded: DataFrame, max_bucket: int = LSH_MAX_BUCKET) ->
     return (
         banded.groupBy("band_idx", "band_key")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") > max_bucket)
+        .where(F.col("n_docs") > LSH_MAX_BUCKET)
     )
 
 
-def minhash_candidate_pairs(
-    docs: DataFrame = None,
-    max_bucket: int = LSH_MAX_BUCKET,
-    shingles: DataFrame = None,
-    banded_staged: DataFrame = None,
-) -> DataFrame:
-    """MinHash-LSH candidate pairs: docs agreeing on ALL rows of ≥1
-    surviving band bucket.
+def minhash_candidate_pairs(banded: DataFrame) -> DataFrame:
+    """MinHash-LSH candidate pairs over a staged ``_banded`` frame: docs
+    agreeing on ALL rows of ≥1 surviving band bucket.
 
     Shape: the banded posting list is materialized ONCE
     (``localCheckpoint`` — an Iceberg stage table on a cluster; the
@@ -267,21 +257,9 @@ def minhash_candidate_pairs(
     builds an O(bucket) ``collect_list`` buffer either, which is why
     this is a join over the staged frame rather than a
     collect-and-expand aggregate. Dropped buckets are surfaced loudly by
-    :func:`skipped_band_buckets` / ``dedup_lsh_skipped_buckets``.
-
-    Pass ``shingles`` (a ``_shingles`` frame, ideally already staged) to
-    share one shingle scan with a downstream rescore, or
-    ``banded_staged`` (an already-checkpointed ``_banded`` frame) to
-    share the whole posting list; otherwise derived from ``docs``."""
-    if banded_staged is not None:
-        banded = banded_staged
-    else:
-        sh = _shingles(docs) if shingles is None else shingles
-        banded = _banded(sh).localCheckpoint()
+    :func:`skipped_band_buckets` / ``dedup_lsh_skipped_buckets``."""
     kept = banded.join(
-        F.broadcast(
-            skipped_band_buckets(banded, max_bucket).select("band_idx", "band_key")
-        ),
+        F.broadcast(skipped_band_buckets(banded).select("band_idx", "band_key")),
         ["band_idx", "band_key"],
         "left_anti",
     )
@@ -302,7 +280,7 @@ def minhash_candidate_pairs(
 
 
 def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_candidate_pairs(banded_staged=_staged_banded(spark, sf_dir))
+    return minhash_candidate_pairs(_staged_banded(spark, sf_dir))
 
 
 def q_dedup_lsh_skipped_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,9 +469,7 @@ def q_dedup_minhash_rescored(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r2 derived it twice and checkpointed both — pure waste); both
     staged frames are session-memoized, so gate siblings reuse them."""
     sh = _staged_shingles(spark, sf_dir)
-    cand = minhash_candidate_pairs(
-        banded_staged=_staged_banded(spark, sf_dir)
-    )  # (doc_a, doc_b)
+    cand = minhash_candidate_pairs(_staged_banded(spark, sf_dir))  # (doc_a, doc_b)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle"))
@@ -571,7 +547,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits candidate pairs where either direction ≥ threshold, with both
     directed scores in exact integer ppm."""
     sh = _staged_shingles(spark, sf_dir)
-    cand = minhash_candidate_pairs(banded_staged=_staged_banded(spark, sf_dir))
+    cand = minhash_candidate_pairs(_staged_banded(spark, sf_dir))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -618,7 +594,7 @@ def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``^[\\x00-\\x7F]*$`` admits such text in Spark while RE2-based
     DuckDB rejects it. Distance normalized to ppm of the longer text
     (exact integers)."""
-    cand = minhash_candidate_pairs(banded_staged=_staged_banded(spark, sf_dir))
+    cand = minhash_candidate_pairs(_staged_banded(spark, sf_dir))
     d = _docs(spark, sf_dir)
     ascii_ok = ~F.col("text").rlike(r"[^\x00-\x7F]")
     texts = d.where(ascii_ok).select("doc_id", "text")

@@ -381,14 +381,15 @@ def _ent_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return staged(spark, ("kg_ent_docs", sf_dir), build)
 
 
-def skipped_comention_docs(ent_docs: DataFrame, cap: int = COMENTION_MAX_ENTITIES) -> DataFrame:
-    """Documents linking more than ``cap`` distinct entities — excluded
-    from co-mention edge generation (a 10⁴-entity doc would emit 10⁸
-    pairs) and surfaced LOUDLY here (``kg_comention_skipped_docs``)."""
+def skipped_comention_docs(ent_docs: DataFrame) -> DataFrame:
+    """Documents linking more than COMENTION_MAX_ENTITIES distinct
+    entities — excluded from co-mention edge generation (a 10⁴-entity
+    doc would emit 10⁸ pairs) and surfaced LOUDLY here
+    (``kg_comention_skipped_docs``)."""
     return (
         ent_docs.groupBy("doc")
         .agg(F.count(F.lit(1)).alias("n_entities"))
-        .where(F.col("n_entities") > cap)
+        .where(F.col("n_entities") > COMENTION_MAX_ENTITIES)
     )
 
 
@@ -449,19 +450,19 @@ def _comention_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _capped_ent_docs(ent_docs: DataFrame, cap: int = COMENTION_MAX_ENTITIES) -> DataFrame:
+def _capped_ent_docs(ent_docs: DataFrame) -> DataFrame:
     """``ent_docs`` minus the docs :func:`skipped_comention_docs` excludes."""
     return ent_docs.join(
-        F.broadcast(skipped_comention_docs(ent_docs, cap).select("doc")),
+        F.broadcast(skipped_comention_docs(ent_docs).select("doc")),
         "doc",
         "left_anti",
     )
 
 
-def _comention_und(ent_docs: DataFrame, cap: int = COMENTION_MAX_ENTITIES) -> DataFrame:
+def _comention_und(ent_docs: DataFrame) -> DataFrame:
     """Distinct undirected co-mention edges (src < dst) over docs at or
     below the per-doc entity cap — O(Σ min(doc_entities, cap)²)."""
-    kept = _capped_ent_docs(ent_docs, cap)
+    kept = _capped_ent_docs(ent_docs)
     a = kept.alias("a")
     b = kept.alias("b")
     return (
@@ -1714,7 +1715,6 @@ def q_entity_distances_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entity_distances(
     adj: DataFrame,
-    max_hops: int = KHOP_MAX,
     anchor: str | None = None,
     hub_cap: int | None = None,
     anchors: DataFrame | None = None,
@@ -1746,9 +1746,9 @@ def entity_distances(
         # the frontier is edge-scale — never shuffle the frontier on K
         dist = dist.join(F.broadcast(seed), "src", "semi")
     frontier = dist
-    # no per-round checkpoint: max_hops is a small constant, and each
+    # no per-round checkpoint: KHOP_MAX is a small constant, and each
     # frontier's copies in the plan run as one reused exchange
-    for k in range(2, max_hops + 1):
+    for k in range(2, KHOP_MAX + 1):
         frontier = (
             frontier.join(step, "dst")
             .where(F.col("nxt") != F.col("src"))
@@ -1794,7 +1794,7 @@ def q_wl_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wl_signature(_comention_adj(spark, sf_dir))
 
 
-def wl_signature(adj: DataFrame, rounds: int = WL_ROUNDS) -> DataFrame:
+def wl_signature(adj: DataFrame) -> DataFrame:
     """WL refinement over an :func:`adjacency` — see
     :func:`q_wl_signature`. Vertex set = entities with ≥1 edge."""
     labels = adj.select(
@@ -1803,7 +1803,7 @@ def wl_signature(adj: DataFrame, rounds: int = WL_ROUNDS) -> DataFrame:
     # no per-round checkpoint: each round reads the last round's labels
     # twice, so the plan doubles per round (fine for WL_ROUNDS), and
     # those copies run as one reused exchange
-    for _ in range(rounds):
+    for _ in range(WL_ROUNDS):
         nb = (
             adj.join(labels.withColumnRenamed("id", "dst"), "dst")
             .groupBy(F.col("src").alias("id"))
@@ -1837,7 +1837,7 @@ def wl_signature(adj: DataFrame, rounds: int = WL_ROUNDS) -> DataFrame:
 JACCARD_HUB_CAP = 1_000
 
 
-def neighbor_jaccard(adj: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame:
+def neighbor_jaccard(adj: DataFrame) -> DataFrame:
     """Common-neighbor Jaccard similarity over an :func:`adjacency` —
     the entity-resolution candidate generator: entities whose
     co-mention neighborhoods overlap are merge/same-as candidates even
@@ -1847,13 +1847,15 @@ def neighbor_jaccard(adj: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFram
     Pairs are generated ONLY through shared neighbors (one equi-join of
     the adjacency list with itself on the neighbor key) — never an
     all-pairs cross. Per-neighbor wedge fan is deg², so vertices above
-    ``hub_cap`` are excluded from wedge generation (docstring above);
+    JACCARD_HUB_CAP are excluded from wedge generation (see the cap);
     at 100 TB the wedge join shuffles O(Σ min(deg, cap)²), the same
     budget as the co-mention pair builder. Each wedge arm carries its
     end's degree off the adjacency, so no degree join follows the pair
     aggregate. Degrees and the ppm Jaccard are all-integer — exact in
     both engines."""
-    hubs = adj.where(F.col("degree") > hub_cap).select(F.col("src").alias("dst"))
+    hubs = adj.where(F.col("degree") > JACCARD_HUB_CAP).select(
+        F.col("src").alias("dst")
+    )
     # heavy hitters are few by definition — broadcast the exclusion set
     wadj = adj.join(F.broadcast(hubs.distinct()), "dst", "left_anti")
     def arm(end: str, deg: str) -> DataFrame:
@@ -1888,7 +1890,7 @@ def q_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neighbor_jaccard(_comention_adj(spark, sf_dir))
 
 
-def two_hop_reach(adj: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame:
+def two_hop_reach(adj: DataFrame) -> DataFrame:
     """Per-vertex 1-hop degree and exactly-2-hop reachable-set size
     over an :func:`adjacency` — the fan-out budget
     table a GNN neighborhood sampler or a graph-store query planner
@@ -1896,7 +1898,7 @@ def two_hop_reach(adj: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame:
     fan-out tuning).
 
     Two-hop paths are generated ONLY through middle vertices at or
-    below ``hub_cap`` (the same hub exclusion, same default constant,
+    below JACCARD_HUB_CAP (the same hub exclusion, same constant,
     as :func:`neighbor_jaccard` — a celebrity middle emits deg² paths
     and dominates every neighborhood anyway); on the sf corpora max
     degree is 7, so the output is the exact count. Scale shape: the
@@ -1905,7 +1907,7 @@ def two_hop_reach(adj: DataFrame, hub_cap: int = JACCARD_HUB_CAP) -> DataFrame:
     against the direct edges (exactly-2 ≠ within-2), one vertex-sized
     hash aggregate and one vertex-sized distinct of the degrees."""
     # the second hop's row carries the middle's degree: hubs never pivot
-    second = adj.where(F.col("degree") <= hub_cap).select(
+    second = adj.where(F.col("degree") <= JACCARD_HUB_CAP).select(
         F.col("src").alias("dst"), F.col("dst").alias("z")
     )
     p2 = (
@@ -1940,7 +1942,7 @@ def q_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 RULE_MID_FAN_CAP = 1_000_000
 
 
-def _rule_body(t: DataFrame, fan_cap: int) -> DataFrame:
+def _rule_body(t: DataFrame) -> DataFrame:
     """Distinct 2-hop body paths (r1, r2, a, c) through fan-capped mid
     entities — shared by :func:`mine_rules` and
     :func:`rule_predictions` so the rule table and its application see
@@ -1953,7 +1955,7 @@ def _rule_body(t: DataFrame, fan_cap: int) -> DataFrame:
     )
     okmid = (
         ind.join(outd, "mid")
-        .where(F.col("ind") * F.col("outd") <= fan_cap)
+        .where(F.col("ind") * F.col("outd") <= RULE_MID_FAN_CAP)
         .select("mid")
     )
     b1 = t.select(
@@ -1970,7 +1972,7 @@ def _rule_body(t: DataFrame, fan_cap: int) -> DataFrame:
     )
 
 
-def mine_rules(triples: DataFrame, fan_cap: int = RULE_MID_FAN_CAP) -> DataFrame:
+def mine_rules(triples: DataFrame) -> DataFrame:
     """AMIE-style composition-rule mining over an entity-level triple
     frame ``(subj, relation, obj)``: for every relation pair (r1, r2),
     count the distinct entity pairs (a, c) connected by a 2-hop body
@@ -1985,11 +1987,11 @@ def mine_rules(triples: DataFrame, fan_cap: int = RULE_MID_FAN_CAP) -> DataFrame
     Scale shape: triples meet only through entity equi-joins — the body
     join on the shared mid entity b, the head join on the (a, c) pair
     key. The per-mid fan is in_deg(b)·out_deg(b); mids above
-    ``fan_cap`` are excluded (hub exclusion, see the cap docstring), so
-    the body shuffle is O(Σ min(in·out, cap)). Counts and the ppm
-    confidence are all-integer."""
+    RULE_MID_FAN_CAP are excluded (hub exclusion, see the cap
+    docstring), so the body shuffle is O(Σ min(in·out, cap)). Counts
+    and the ppm confidence are all-integer."""
     t = triples.localCheckpoint()  # consumed 4×: cut lineage once
-    body = _rule_body(t, fan_cap)
+    body = _rule_body(t)
     nb = body.groupBy("r1", "r2").agg(
         F.count(F.lit(1)).cast("long").alias("n_body")
     )
@@ -2021,12 +2023,7 @@ RULE_PRED_MIN_CONF_PPM = 250_000
 RULE_PRED_MIN_BODY = 2
 
 
-def rule_predictions(
-    triples: DataFrame,
-    fan_cap: int = RULE_MID_FAN_CAP,
-    min_conf_ppm: int = RULE_PRED_MIN_CONF_PPM,
-    min_body: int = RULE_PRED_MIN_BODY,
-) -> DataFrame:
+def rule_predictions(triples: DataFrame) -> DataFrame:
     """KB completion by rule application — the link-prediction step
     that turns :func:`mine_rules` output back into candidate triples:
     every body path a -r1-> b -r2-> c matching a confident rule
@@ -2041,7 +2038,7 @@ def rule_predictions(
     rule filtering is relation-dictionary-sized (broadcast); the
     known-triple exclusion is one anti-join on the full triple key."""
     t = triples.localCheckpoint()
-    body = _rule_body(t, fan_cap)
+    body = _rule_body(t)
     nb = body.groupBy("r1", "r2").agg(F.count(F.lit(1)).cast("long").alias("n_body"))
     head = t.select(
         F.col("subj").alias("a"),
@@ -2061,7 +2058,8 @@ def rule_predictions(
             F.expr("support * 1000000 DIV n_body").cast("long").alias("conf_ppm"),
         )
         .where(
-            (F.col("conf_ppm") >= min_conf_ppm) & (F.col("n_body") >= min_body)
+            (F.col("conf_ppm") >= RULE_PRED_MIN_CONF_PPM)
+            & (F.col("n_body") >= RULE_PRED_MIN_BODY)
         )
     )
     cand = body.join(
@@ -3063,32 +3061,18 @@ def q_ppr_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     source degree) + aggregate (AQE turns the edge join into a runtime broadcast when
     the frontier is small and degrades to a shuffle join when a hub
     blows the neighborhood up — no forced driver-side broadcast).
-    Lineage stays lazy across the `iters` (3) rounds of
+    Lineage stays lazy across the PPR_ITERS (3) rounds of
     neighborhood-sized ops; there is no per-round checkpoint. Output
     keeps only nonzero ranks: k-neighborhood-sized, never
     vertex-count-sized."""
     verts = _ent_docs(spark, sf_dir).select(F.col("entity_id").alias("id")).distinct()
-    return ppr_anchored(_comention_adj(spark, sf_dir), DIST_ANCHOR, verts=verts)
+    return ppr_anchored(_comention_adj(spark, sf_dir), DIST_ANCHOR, verts)
 
 
-def ppr_anchored(
-    adj: DataFrame,
-    anchor: str,
-    iters: int = PPR_ITERS,
-    verts: DataFrame | None = None,
-) -> DataFrame:
+def ppr_anchored(adj: DataFrame, anchor: str, verts: DataFrame) -> DataFrame:
     """Personalized-PageRank core over an :func:`adjacency` — see
-    :func:`q_ppr_anchored` for the spec and scale shape. ``verts``
-    WIDENS the vertex set beyond edge endpoints (isolated vertices; the
-    corpus query passes every linked entity) — an isolated anchor still
-    emits its teleport mass.
-    ``verts`` does NOT confine propagation: mass flows over the full
-    edge set regardless (every current caller passes a superset of
-    the edge endpoints, so the distinction is moot there — but a
-    narrower ``verts`` will not mask out-of-set vertices)."""
-    if verts is None:
-        verts = adj.select(F.col("src").alias("id")).distinct()
-
+    :func:`q_ppr_anchored` for the spec and scale shape. ``verts(id)``
+    is the vertex set."""
     # the anchor row carries all teleport mass; it must exist in verts
     # (an isolated anchor still emits its teleport rank). Every round
     # re-reads it, and the rounds' copies plan as one reused exchange.
@@ -3098,7 +3082,7 @@ def ppr_anchored(
     anchor_row = ranks.select(
         "id", F.lit(15 * _PR_SCALE // 100).cast("long").alias("ppr_ppb")
     )
-    for _ in range(iters):
+    for _ in range(PPR_ITERS):
         # the rank frame holds ONLY nonzero-mass vertices (the anchor's
         # visited neighborhood), so the join's output is neighborhood-
         # sized, never graph-sized. Vertices the oracle computes as
@@ -3117,7 +3101,7 @@ def ppr_anchored(
             .agg(F.sum(F.expr("ppr_ppb DIV degree")).alias("s"))
         )
         # no per-round localCheckpoint: unlike the vertex-sized global
-        # PageRank frame, lineage here is `iters` (3) rounds of
+        # PageRank frame, lineage here is PPR_ITERS (3) rounds of
         # neighborhood-sized ops — shallow enough to keep lazy, and the
         # per-round broadcast already materializes the frontier
         ranks = (

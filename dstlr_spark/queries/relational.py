@@ -408,11 +408,11 @@ ZORDER_BUCKET_SHIFT = 6  # keep top 4 z bits → 2 bits per dimension:
 #                          ≤ 8-of-32 block (pinned in tests)
 
 
-def _interleave_sql(x: str, y: str, bits: int = ZORDER_BITS) -> str:
+def _interleave_sql(x: str, y: str) -> str:
     """Bit-interleave expression — valid and identical in Spark SQL and
     DuckDB (both support >> << & | on BIGINT)."""
     terms = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)

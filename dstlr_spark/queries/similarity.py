@@ -560,7 +560,7 @@ NEARDUP_EXACT_MAX_VECS = 250_000  # broadcast cap: N × 64 × 8 B ≈ 128 MB
 _M64 = (1 << 64) - 1
 
 
-def _neardup_plane(t: int, j: int, dim: int = DIM) -> list[int]:
+def _neardup_plane(t: int, j: int) -> list[int]:
     """Deterministic pseudo-random hyperplane (ints in [-9, 9]) for hash
     table ``t``, bit ``j`` — a splitmix64 stream, so every (t, j) plane is
     independent (unlike a shared small-modulus lattice, which would make
@@ -569,7 +569,7 @@ def _neardup_plane(t: int, j: int, dim: int = DIM) -> list[int]:
     ≥2-table margin on all sf corpora."""
     vals = []
     x = (t * 0x9E3779B97F4A7C15 + j * 0xBF58476D1CE4E5B9 + 0x94D049BB133111EB) & _M64
-    for _ in range(dim):
+    for _ in range(DIM):
         x = (x + 0x9E3779B97F4A7C15) & _M64
         z = x
         z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & _M64
@@ -770,12 +770,11 @@ def calibrate_neardup(
     tau_ppm: int,
     bits_options=(2, 4, 6, 8, 12),
     max_tables: int = 64,
-    margin: int = 2,
 ):
     """Offline LSH calibration (numpy twin of the Spark math; run on a
     sample at cluster scale): for each bits option, the smallest table
-    count whose recall of cos ≥ τ pairs is total with ``margin`` + 1
-    table hits per pair, plus its measured per-table candidate volume.
+    count whose recall of cos ≥ τ pairs is total with 3 table hits per
+    pair (a 2-table margin), plus its measured per-table candidate volume.
     Returns a list of dicts sorted by total candidate work; empty where
     no config within ``max_tables`` reaches total recall — which is the
     measured outcome on the synthetic corpora at τ=0.35 for every
@@ -805,7 +804,7 @@ def calibrate_neardup(
             (buckets[:, qual[:, 0]] == buckets[:, qual[:, 1]]) if len(qual) else None
         )
         for tables in range(1, max_tables + 1):
-            if len(qual) and hits[:tables].sum(0).min() < margin + 1:
+            if len(qual) and hits[:tables].sum(0).min() < 3:
                 continue
             frac = []
             for t in range(tables):

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dstlr_spark.queries._memo import staged
+from dstlr_spark.sources.transcripts import TURN_WORDS
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -301,18 +302,18 @@ def q_stream_dedup_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(dd, "append")
 
 
-#: DuckDB twin of sources.transcripts.derive_transcripts (turn_words=8,
+#: DuckDB twin of sources.transcripts.derive_transcripts (TURN_WORDS,
 #: lone-empty-tail fold) ending in turns(conv_id, turn_idx, text) —
 #: DuckDB list slices are 1-based and inclusive.
-_SHRED_SQL = """t AS (
+_SHRED_SQL = f"""t AS (
   SELECT CAST(doc_id AS VARCHAR) AS conv_id,
          string_split(text, ' ') AS toks,
          len(string_split(text, ' ')) AS s
   FROM documents),
 nt AS (
   SELECT conv_id, toks, s,
-         CAST(CEIL(s / 8.0) AS INT)
-           - CASE WHEN s % 8 = 1 AND s > 1 AND toks[s] = ''
+         CAST(CEIL(s / {TURN_WORDS}.0) AS INT)
+           - CASE WHEN s % {TURN_WORDS} = 1 AND s > 1 AND toks[s] = ''
                   THEN 1 ELSE 0 END AS n_turns
   FROM t),
 x AS (
@@ -322,8 +323,8 @@ turns AS (
   SELECT conv_id, CAST(turn_idx AS INT) AS turn_idx,
          array_to_string(
            CASE WHEN turn_idx = n_turns - 1
-                THEN toks[turn_idx * 8 + 1 : turn_idx * 8 + 9]
-                ELSE toks[turn_idx * 8 + 1 : turn_idx * 8 + 8] END,
+                THEN toks[turn_idx * {TURN_WORDS} + 1 : turn_idx * {TURN_WORDS} + {TURN_WORDS + 1}]
+                ELSE toks[turn_idx * {TURN_WORDS} + 1 : turn_idx * {TURN_WORDS} + {TURN_WORDS}] END,
            ' ') AS text
   FROM x)"""
 

@@ -35,9 +35,9 @@ def read_table(spark: SparkSession, location: str) -> DataFrame:
     return spark.read.parquet(location)
 
 
-def write_text_sink(df: DataFrame, location: str, mode: str = "overwrite") -> None:
+def write_text_sink(df: DataFrame, location: str) -> None:
     """K4: dirty-tuple text sink — JSON lines, one object per row (the
     reference dumps clean-query results with ``saveAsTextFile``,
     CleanTriples.scala:65; JSON lines are its structured analog and stay
     a parallel write: one file per partition, no coalesce(1))."""
-    df.write.mode(mode).json(location)
+    df.write.mode("overwrite").json(location)

@@ -113,8 +113,12 @@ def generate_transcripts(
     return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
 
 
-def derive_transcripts(documents: DataFrame, turn_words: int = 8) -> DataFrame:
-    """Shred ``documents(doc_id, text)`` into fixed-width turns.
+#: tokens per derived turn; ``streamgate._SHRED_SQL`` shreds with the same width
+TURN_WORDS = 8
+
+
+def derive_transcripts(documents: DataFrame) -> DataFrame:
+    """Shred ``documents(doc_id, text)`` into TURN_WORDS-token turns.
 
     Pure column expressions (split → sequence → transform → posexplode),
     fully Catalyst-visible, no UDF. Reassembly with
@@ -122,7 +126,7 @@ def derive_transcripts(documents: DataFrame, turn_words: int = 8) -> DataFrame:
     original text byte-for-byte — the round-trip is the per-turn-equality
     invariant check (input_hint).
 
-    Edge case: when the token count is ≡ 1 (mod ``turn_words``) and the
+    Edge case: when the token count is ≡ 1 (mod TURN_WORDS) and the
     final token is the empty string (text ends in a trailing space), the
     final slice would be a lone ``""`` turn — which assembly's F2 filter
     drops, breaking the round-trip. That slice is folded into the
@@ -140,20 +144,20 @@ def derive_transcripts(documents: DataFrame, turn_words: int = 8) -> DataFrame:
     )
     toks = F.col("__toks")
     s = F.size(toks)
-    base = F.ceil(s / F.lit(turn_words)).cast("int")
+    base = F.ceil(s / F.lit(TURN_WORDS)).cast("int")
     lone_empty_tail = (
-        (s % turn_words == 1) & (F.element_at(toks, -1) == "") & (s > 1)
+        (s % TURN_WORDS == 1) & (F.element_at(toks, -1) == "") & (s > 1)
     )
     n_turns = F.when(lone_empty_tail, base - 1).otherwise(base)
     turns = F.transform(
         F.sequence(F.lit(0), n_turns - 1),
         lambda i: F.array_join(
-            # the last turn takes the remainder (at most turn_words + 1
-            # tokens — the folded empty tail), earlier turns exactly w
+            # the last turn takes the remainder (at most TURN_WORDS + 1
+            # tokens — the folded empty tail), earlier turns exactly TURN_WORDS
             F.when(
                 i == n_turns - 1,
-                F.slice(toks, i * turn_words + 1, turn_words + 1),
-            ).otherwise(F.slice(toks, i * turn_words + 1, turn_words)),
+                F.slice(toks, i * TURN_WORDS + 1, TURN_WORDS + 1),
+            ).otherwise(F.slice(toks, i * TURN_WORDS + 1, TURN_WORDS)),
             " ",
         ),
     )

@@ -125,15 +125,15 @@ def turn_triples_stream(
     )
 
 
-def dedup_turns_stream(transcripts: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def dedup_turns_stream(transcripts: DataFrame) -> DataFrame:
     """Streaming exact dedup: drop re-delivered turns (same conv_id,
-    turn_idx, text-hash) within the watermark horizon — the streaming
+    turn_idx, text-hash) within a one-hour watermark horizon — the streaming
     twin of ``dedup_exact``, with state bounded by the watermark so the
     dedup map cannot grow unboundedly at 10^12-turn scale."""
     keyed = transcripts.where(
         F.col("conv_id").isNotNull() & F.col("ts").isNotNull()
     ).withColumn("text_hash", F.md5(F.coalesce(F.col("text"), F.lit(""))))
-    return keyed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return keyed.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["conv_id", "turn_idx", "text_hash"]
     )
 

@@ -57,6 +57,7 @@ def curate(
 ):
     from dstlr_spark.queries.dedup import (
         JACCARD_THRESHOLD,
+        _banded,
         minhash_candidate_pairs,
         _shingles,
     )
@@ -81,7 +82,7 @@ def curate(
     # sides and the size dim — persist the narrow waist ONCE and derive
     # everything (signatures included) from it: one scan of the corpus
     sh = _shingles(exact).persist()
-    cand = minhash_candidate_pairs(shingles=sh)
+    cand = minhash_candidate_pairs(_banded(sh).localCheckpoint())
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         cand.join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")

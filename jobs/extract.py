@@ -37,7 +37,8 @@ def main() -> None:
     )
     p.add_argument(
         "--max-rows", type=int, default=None,
-        help="input row cap (the Solr --max_rows paging analog)",
+        help="input row cap: the first rows in (conv_id, turn_idx, text) "
+             "order (the Solr --max_rows paging analog)",
     )
     p.add_argument("--partitions", type=int, default=8)  # package.scala:30
     p.add_argument(
@@ -51,7 +52,12 @@ def main() -> None:
     if args.where:
         transcripts = transcripts.where(args.where)  # Catalyst pushes to the scan
     if args.max_rows:
-        transcripts = transcripts.limit(args.max_rows)
+        # a top-N, not a bare limit: the ledger reads its input once per
+        # fingerprint and once per group, and an unordered limit may keep
+        # different rows on each read
+        transcripts = transcripts.orderBy("conv_id", "turn_idx", "text").limit(
+            args.max_rows
+        )
     if args.alias_dict:
         aliases = read_table(spark, args.alias_dict)
     else:

@@ -9,6 +9,7 @@ reference publishes its graph to Neo4j and runs demo.md's Cypher
 analytics; this is that surface as partitioned parquet):
 
   comention/    weighted entity co-mention edges (kg_entity_comention)
+  comention_pmi/ co-mention pair association in integer PMI bits (kg_comention_pmi)
   pagerank/     integer-ppb PageRank over the co-mention graph
   hits/         hubs/authorities over the directed triple graph
   kcore/        onion-layer k-core peel rounds

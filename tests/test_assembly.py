@@ -109,13 +109,14 @@ def test_roundtrip_trailing_space_fold(spark):
     assert got == {f"d{i}": t for i, t in enumerate(texts)}
 
 
-def test_roundtrip_property_random_spacing(spark):
+def test_roundtrip_property_random_spacing(spark, monkeypatch):
     """Property: ANY non-empty text round-trips through shred+assemble
     byte-for-byte, including runs of spaces, trailing/leading spaces,
     and token counts landing on every modulus of the turn width."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    from dstlr_spark.sources import transcripts
     from dstlr_spark.sources.transcripts import derive_transcripts
 
     texts_strategy = st.lists(
@@ -131,9 +132,10 @@ def test_roundtrip_property_random_spacing(spark):
             [(f"d{i}", t) for i, t in enumerate(texts)], "doc_id string, text string"
         )
         for w in (3, 8):
+            monkeypatch.setattr(transcripts, "TURN_WORDS", w)
             rebuilt = {
                 r["doc_id"]: r["contents"]
-                for r in assemble_documents(derive_transcripts(docs, turn_words=w)).collect()
+                for r in assemble_documents(derive_transcripts(docs)).collect()
             }
             assert rebuilt == {f"d{i}": t for i, t in enumerate(texts)}
 
@@ -157,4 +159,4 @@ def test_salted_repartition_tolerates_map_columns(spark):
     import pytest
 
     with pytest.raises(ValueError):
-        salted_repartition(only_map, 4, key="meta")
+        salted_repartition(only_map, 4)

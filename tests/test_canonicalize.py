@@ -16,6 +16,10 @@ def _cc_map(labels):
     return {r["id"]: r["component"] for r in labels.collect()}
 
 
+def _no_links(spark):
+    return spark.createDataFrame([], "mention_id string, entity_id string")
+
+
 def test_cc_simple_components(spark):
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "src string, dst string"
@@ -57,9 +61,11 @@ def test_cc_rounds_count_on_the_checkpoint(spark, monkeypatch):
 
 
 def test_cc_isolated_vertices(spark):
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    verts = spark.createDataFrame([("a",), ("b",), ("solo",)], "id string")
-    got = _cc_map(connected_components(edges, verts))
+    # the self-loop makes "solo" a vertex of its own component
+    edges = spark.createDataFrame(
+        [("a", "b"), ("solo", "solo")], "src string, dst string"
+    )
+    got = _cc_map(connected_components(edges))
     assert got == {"a": "a", "b": "a", "solo": "solo"}
 
 
@@ -97,7 +103,7 @@ def test_canonicalize_preserves_reference_ids(spark):
     mentions = spark.createDataFrame(
         [("a", "k1"), ("b", "k1")], "mention_id string, key string"
     )
-    out = canonicalize_mentions(mentions)
+    out = canonicalize_mentions(mentions, _no_links(spark))
     assert set(out.columns) == {"mention_id", "canonical_id"}
     assert {r["mention_id"] for r in out.collect()} == {"a", "b"}
 
@@ -111,7 +117,7 @@ def test_lemma_key_same_doc_and_cross_doc(spark):
     )
     got = {
         r["mention_id"]: r["canonical_id"]
-        for r in canonicalize_mentions(mentions).collect()
+        for r in canonicalize_mentions(mentions, _no_links(spark)).collect()
     }
     assert got == {
         "d1-apple": "d1-apple", "d2-apple": "d1-apple", "d1-paris": "d1-paris"
@@ -175,7 +181,9 @@ def test_canonicalize_matches_mention_level_union_find(spark):
         m_df = spark.createDataFrame(mentions, "mention_id string, key string")
         l_df = spark.createDataFrame(links, "mention_id string, entity_id string")
         for with_links in (True, False):
-            got = canonicalize_mentions(m_df, l_df if with_links else None).collect()
+            got = canonicalize_mentions(
+                m_df, l_df if with_links else _no_links(spark)
+            ).collect()
             want = _canonical_oracle(mentions, links if with_links else [])
             assert len(got) == len(want), f"seed {seed}, links={with_links}"
             assert {r["mention_id"]: r["canonical_id"] for r in got} == want, (
@@ -210,9 +218,9 @@ def test_canonicalize_runs_components_over_keys(spark, monkeypatch):
     assert ends.distinct().count() <= 5
 
 
-def test_cc_raises_on_non_convergence(spark):
-    """A chain of diameter > max_iter must raise, not return a partially
-    merged clustering as if converged."""
+def test_cc_raises_on_non_convergence(spark, monkeypatch):
+    """A chain of diameter > CC_MAX_ITER must raise, not return a
+    partially merged clustering as if converged."""
     import pytest
 
     from dstlr_spark.operators.canonicalize import connected_components
@@ -220,10 +228,12 @@ def test_cc_raises_on_non_convergence(spark):
     chain = spark.createDataFrame(
         [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(8)], "src string, dst string"
     )
+    monkeypatch.setattr(canonicalize, "CC_MAX_ITER", 2)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=2)
+        connected_components(chain)
     # and with enough rounds the same chain converges to one component
-    cc = connected_components(chain, max_iter=20)
+    monkeypatch.setattr(canonicalize, "CC_MAX_ITER", 20)
+    cc = connected_components(chain)
     assert cc.select("component").distinct().count() == 1
 
 
@@ -287,14 +297,13 @@ def test_cc_matches_union_find_on_random_graphs(spark):
         edges += [(v, v) for v in (0, n - 1)]           # self-loops
         edges += [(b, a) for a, b in edges[: m // 3]]   # reversed dups
         edges += edges[: m // 4]                        # exact dups
+        # a self-loop per vertex makes the isolated ones vertices too
         df = spark.createDataFrame(
-            [(f"v{a:03d}", f"v{b:03d}") for a, b in edges],
+            [(f"v{a:03d}", f"v{b:03d}") for a, b in edges]
+            + [(f"v{i:03d}", f"v{i:03d}") for i in range(n)],
             "src string, dst string",
         )
-        verts = spark.createDataFrame(
-            [(f"v{i:03d}",) for i in range(n)], "id string"
-        )
-        got = _cc_map(connected_components(df, verts))
+        got = _cc_map(connected_components(df))
         assert got == oracle(n, edges), f"seed {seed}"
 
 

@@ -141,12 +141,13 @@ def test_assistant_echo_bounds_and_pair_conservation(spark):
     assert total_pairs == q_sft_pairs(spark, SF).count()
 
 
-def test_detect_cycles_on_hand_sequences(spark):
+def test_detect_cycles_on_hand_sequences(spark, monkeypatch):
     """Loop-detector spec pins: AAAA → period-1 ×4; ABABAB → period-2
     ×3 (and period-1 never); ABCABCABC → period-3 ×3; a broken run
     (ABAB X ABAB) maxes at 2 repeats per fragment and is filtered by
     the ≥3 threshold; a fresh conversation with <period+1 turns emits
     nothing."""
+    from dstlr_spark.queries import conv
     from dstlr_spark.queries.conv import detect_cycles
 
     def frame(seqs):
@@ -178,9 +179,10 @@ def test_detect_cycles_on_hand_sequences(spark):
     }
     # sanity on thresholds: broken ABAB|X|ABAB has max period-2 run of
     # length 2 (repeats 2 < 3) on each side of X; tiny has no run
+    monkeypatch.setattr(conv, "LOOP_MIN_REPEATS", 2)
     low = {
         (r.conv_id, r.period): r.repeats
-        for r in detect_cycles(t, min_repeats=2).collect()
+        for r in detect_cycles(t).collect()
     }
     assert low[("broken", 2)] == 2
     assert ("tiny", 1) not in low and ("tiny", 2) not in low

@@ -5,6 +5,7 @@ buckets are dropped from the join and reported LOUDLY via
 
 from __future__ import annotations
 
+from dstlr_spark.queries import dedup, doc_kg
 from dstlr_spark.queries.dedup import (
     _shingles,
     LSH_BANDS,
@@ -26,35 +27,41 @@ def _adversarial_docs(spark, n_identical: int = 40):
     return spark.createDataFrame(rows, "doc_id string, text string")
 
 
-def test_lsh_bucket_guard_skips_degenerate_buckets(spark):
+def test_lsh_bucket_guard_skips_degenerate_buckets(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 10)
     docs = _adversarial_docs(spark)
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in minhash_candidate_pairs(docs, max_bucket=10).collect()
+        for r in minhash_candidate_pairs(
+            _banded(_shingles(docs)).localCheckpoint()
+        ).collect()
     }
     # the 40-identical group is over the cap in every band → no pairs from it
     assert not any(a.startswith("dup") or b.startswith("dup") for a, b in pairs)
     # small buckets still join: the 2-doc group survives
     assert ("pair_a", "pair_b") in pairs
 
-    skipped = skipped_band_buckets(_banded(_shingles(docs)), max_bucket=10).collect()
+    skipped = skipped_band_buckets(_banded(_shingles(docs))).collect()
     # identical docs share ALL band keys → one oversize bucket per band
     assert len(skipped) == LSH_BANDS
     assert all(r["n_docs"] == 40 for r in skipped)
 
 
-def test_lsh_bucket_guard_inactive_below_cap(spark):
+def test_lsh_bucket_guard_inactive_below_cap(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "LSH_MAX_BUCKET", 10)
     docs = _adversarial_docs(spark, n_identical=5)
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in minhash_candidate_pairs(docs, max_bucket=10).collect()
+        for r in minhash_candidate_pairs(
+            _banded(_shingles(docs)).localCheckpoint()
+        ).collect()
     }
     # 5 ≤ cap: the identical group pairs normally (C(5,2) pairs)
     assert sum(a.startswith("dup") and b.startswith("dup") for a, b in pairs) == 10
-    assert skipped_band_buckets(_banded(_shingles(docs)), max_bucket=10).count() == 0
+    assert skipped_band_buckets(_banded(_shingles(docs))).count() == 0
 
 
-def test_ngram_jaccard_stop_shingle_cap(spark):
+def test_ngram_jaccard_stop_shingle_cap(spark, monkeypatch):
     """A viral shingle shared by every doc must not drive O(posting²)
     pair generation: above the cap it drops from the shingle SET (both
     intersection and sizes), below the cap it participates normally."""
@@ -66,9 +73,10 @@ def test_ngram_jaccard_stop_shingle_cap(spark):
              ("twin_b", f"{viral} twin twin twin")]
     docs = spark.createDataFrame(rows, "doc_id string, text string")
 
+    monkeypatch.setattr(dedup, "HOT_SHINGLE_CAP", 5)
     capped = {
         (r["doc_a"], r["doc_b"]): r["jaccard_ppm"]
-        for r in ngram_jaccard_pairs(docs, hot_cap=5).collect()
+        for r in ngram_jaccard_pairs(_shingles(docs)).collect()
     }
     # the viral shingles (22 docs each) are dropped: the d* docs share
     # nothing else, so no d*-d* pair survives the 0.6 threshold
@@ -78,14 +86,15 @@ def test_ngram_jaccard_stop_shingle_cap(spark):
 
     # below the cap the viral shingles count: d-d pairs share 2 of 8
     # shingles → 250000 ppm (under threshold) but twins stay perfect
+    monkeypatch.setattr(dedup, "HOT_SHINGLE_CAP", 1000)
     uncapped = {
         (r["doc_a"], r["doc_b"]): r["jaccard_ppm"]
-        for r in ngram_jaccard_pairs(docs, hot_cap=1000).collect()
+        for r in ngram_jaccard_pairs(_shingles(docs)).collect()
     }
     assert uncapped[("twin_a", "twin_b")] > 900_000
 
 
-def test_comention_entity_cap(spark):
+def test_comention_entity_cap(spark, monkeypatch):
     """A doc linking more entities than the cap contributes NO co-mention
     edges (it would emit O(E²) pairs) and is loudly auditable."""
     from dstlr_spark.queries.doc_kg import _comention_und, skipped_comention_docs
@@ -94,12 +103,13 @@ def test_comention_entity_cap(spark):
     rows += [("ok1", "E001"), ("ok1", "E002"), ("ok2", "E001"), ("ok2", "E003")]
     ent_docs = spark.createDataFrame(rows, "doc string, entity_id string")
 
+    monkeypatch.setattr(doc_kg, "COMENTION_MAX_ENTITIES", 10)
     und = {(r["doc"], r["src"], r["dst"])
-           for r in _comention_und(ent_docs, cap=10).collect()}
+           for r in _comention_und(ent_docs).collect()}
     assert not any(d == "mega" for d, *_ in und)
     assert ("ok1", "E001", "E002") in und and ("ok2", "E001", "E003") in und
 
-    skipped = skipped_comention_docs(ent_docs, cap=10).collect()
+    skipped = skipped_comention_docs(ent_docs).collect()
     assert [(r["doc"], r["n_entities"]) for r in skipped] == [("mega", 30)]
 
 
@@ -184,7 +194,7 @@ def test_substring_coverage_union_of_planted_windows(spark, tmp_path):
     assert rows["1"]["dup_coverage_ppm"] == 500_000  # half the doc
 
 
-def test_neighbor_jaccard_exact_and_hub_excluded(spark):
+def test_neighbor_jaccard_exact_and_hub_excluded(spark, monkeypatch):
     """Known 4-vertex graph → exact Jaccard; a planted hub above the
     cap stops generating wedges THROUGH itself but keeps full degrees
     in the denominator."""
@@ -195,9 +205,10 @@ def test_neighbor_jaccard_exact_and_hub_excluded(spark):
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("C", "D"), ("A", "C")], "src string, dst string"
     )
+    monkeypatch.setattr(doc_kg, "JACCARD_HUB_CAP", 10)
     out = {
         (r.entity_a, r.entity_b): r
-        for r in neighbor_jaccard(adjacency(edges), hub_cap=10).collect()
+        for r in neighbor_jaccard(adjacency(edges)).collect()
     }
     # A and B share neighbor C: J = 1/(2+2-1)
     ab = out[("A", "B")]
@@ -210,9 +221,10 @@ def test_neighbor_jaccard_exact_and_hub_excluded(spark):
     # met only through C, so they all vanish; A-B still meet through... 
     # A's other neighbor is C only for B — wedge x-n-y needs shared n.
     # Remaining shared-neighbor wedges: through A (B,C), through B (A,C).
+    monkeypatch.setattr(doc_kg, "JACCARD_HUB_CAP", 2)
     capped = {
         (r.entity_a, r.entity_b): r
-        for r in neighbor_jaccard(adjacency(edges), hub_cap=2).collect()
+        for r in neighbor_jaccard(adjacency(edges)).collect()
     }
     assert ("A", "D") not in capped and ("B", "D") not in capped
     bc = capped[("B", "C")]  # through shared neighbor A
@@ -220,7 +232,7 @@ def test_neighbor_jaccard_exact_and_hub_excluded(spark):
     assert capped[("A", "C")].common_neighbors == 1  # through B
 
 
-def test_rule_mining_confidence_and_fan_cap(spark):
+def test_rule_mining_confidence_and_fan_cap(spark, monkeypatch):
     """Planted composition rule r1(a,b) ∧ r2(b,c) ⇒ r3(a,c) with known
     support/confidence; a mid entity over the fan cap emits no paths."""
     from dstlr_spark.queries.doc_kg import mine_rules
@@ -233,9 +245,10 @@ def test_rule_mining_confidence_and_fan_cap(spark):
         ("a1", "r3", "c1"),
     ]
     t = spark.createDataFrame(triples, "subj string, relation string, obj string")
+    monkeypatch.setattr(doc_kg, "RULE_MID_FAN_CAP", 1000)
     out = {
         (r.body_r1, r.body_r2, r.head_relation): r
-        for r in mine_rules(t, fan_cap=1000).collect()
+        for r in mine_rules(t).collect()
     }
     rule = out[("r1", "r2", "r3")]
     assert rule.n_body == 2 and rule.support == 1
@@ -245,5 +258,6 @@ def test_rule_mining_confidence_and_fan_cap(spark):
     hub += [("HUB", "r2", f"y{i}") for i in range(4)]
     hub += [("x0", "r3", "y0")]
     th = spark.createDataFrame(hub, "subj string, relation string, obj string")
-    assert mine_rules(th, fan_cap=1000).where("body_r1 = 'r1'").count() > 0
-    assert mine_rules(th, fan_cap=15).count() == 0  # 4×4 = 16 > 15
+    assert mine_rules(th).where("body_r1 = 'r1'").count() > 0
+    monkeypatch.setattr(doc_kg, "RULE_MID_FAN_CAP", 15)
+    assert mine_rules(th).count() == 0  # 4×4 = 16 > 15

@@ -286,8 +286,13 @@ def test_fused_bag_matches_native_kg_bag(spark):
         )
 
     fused = rows(extract_bag_fused(docs, gaz, ali, COOCCUR_WINDOW, 10_000))
+    from dstlr_spark.schemas import TRIPLE_SCHEMA
+
+    # no fact triples: the fused bag carries none
+    no_facts = spark.createDataFrame([], TRIPLE_SCHEMA)
     kg = NativeKG(
-        docs, gaz, ali, cooccur_window=COOCCUR_WINDOW, sent_threshold=10_000
+        docs, gaz, ali, no_facts,
+        cooccur_window=COOCCUR_WINDOW, sent_threshold=10_000,
     )
     try:
         native = rows(kg.bag())

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from dstlr_spark.queries import doc_kg
 from dstlr_spark.queries.doc_kg import (
     adjacency,
     q_agreement_by_distance,
@@ -27,27 +28,29 @@ from dstlr_spark.queries.textstats import q_zipf_fit
 SF = "/root/testdata/sf0.001"
 
 
-def test_two_hop_reach_exact_on_hand_graph(spark):
+def test_two_hop_reach_exact_on_hand_graph(spark, monkeypatch):
     """A-B, B-C, C-D, A-C: exactly-2 sets are A→{D}, B→{D}, C→{},
     D→{A, B} (within-2 minus direct neighbors minus self)."""
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("C", "D"), ("A", "C")], "src string, dst string"
     )
-    out = {r.entity_id: r for r in two_hop_reach(adjacency(edges), hub_cap=10).collect()}
+    monkeypatch.setattr(doc_kg, "JACCARD_HUB_CAP", 10)
+    out = {r.entity_id: r for r in two_hop_reach(adjacency(edges)).collect()}
     assert out["A"].n_1hop == 2 and out["A"].n_2hop == 1
     assert out["B"].n_1hop == 2 and out["B"].n_2hop == 1
     assert out["C"].n_1hop == 3 and out["C"].n_2hop == 0
     assert out["D"].n_1hop == 1 and out["D"].n_2hop == 2
 
 
-def test_two_hop_reach_hub_cap_blocks_middles_keeps_degrees(spark):
-    """hub_cap=2 excludes C (degree 3) as a MIDDLE: every 2-hop path in
+def test_two_hop_reach_hub_cap_blocks_middles_keeps_degrees(spark, monkeypatch):
+    """JACCARD_HUB_CAP=2 excludes C (degree 3) as a MIDDLE: every 2-hop path in
     the hand graph runs through C, so all n_2hop collapse to 0 — but
     full degrees are still reported."""
     edges = spark.createDataFrame(
         [("A", "B"), ("B", "C"), ("C", "D"), ("A", "C")], "src string, dst string"
     )
-    out = {r.entity_id: r for r in two_hop_reach(adjacency(edges), hub_cap=2).collect()}
+    monkeypatch.setattr(doc_kg, "JACCARD_HUB_CAP", 2)
+    out = {r.entity_id: r for r in two_hop_reach(adjacency(edges)).collect()}
     assert out["C"].n_1hop == 3  # degree unaffected by the cap
     assert all(r.n_2hop == 0 for r in out.values())
     # paths through non-hub middles survive: add E-A so D reaches E
@@ -103,7 +106,7 @@ def test_name_variants_share_and_occurrence_consistency(spark):
         assert tl[r.entity_id] == r.n_occurrences
 
 
-def test_rule_predictions_on_hand_kg(spark):
+def test_rule_predictions_on_hand_kg(spark, monkeypatch):
     """Planted rule r1 ∧ r2 ⇒ r with one closed and one open body
     pair: only the open pair is predicted, with the rule's 50%
     confidence; raising the confidence floor silences it."""
@@ -116,12 +119,15 @@ def test_rule_predictions_on_hand_kg(spark):
         ],
         "subj string, relation string, obj string",
     )
-    out = rule_predictions(t, min_conf_ppm=250_000, min_body=2).collect()
+    monkeypatch.setattr(doc_kg, "RULE_PRED_MIN_CONF_PPM", 250_000)
+    monkeypatch.setattr(doc_kg, "RULE_PRED_MIN_BODY", 2)
+    out = rule_predictions(t).collect()
     assert len(out) == 1
     p = out[0]
     assert (p.subj_entity, p.relation, p.obj_entity) == ("d", "r", "f")
     assert p.n_rules == 1 and p.best_conf_ppm == 500_000
-    assert rule_predictions(t, min_conf_ppm=600_000).count() == 0
+    monkeypatch.setattr(doc_kg, "RULE_PRED_MIN_CONF_PPM", 600_000)
+    assert rule_predictions(t).count() == 0
 
 
 def test_blocking_quality_accounts_every_occurrence(spark):
@@ -223,7 +229,7 @@ def test_alias_ambiguity_keys_aliases_like_the_linker(spark, monkeypatch):
     }
 
 
-def test_entity_distances_exact_on_path_graph(spark):
+def test_entity_distances_exact_on_path_graph(spark, monkeypatch):
     """Path A-B-C-D: six unordered pairs with hops 1/1/1/2/2/3; a
     tighter horizon drops only the 3-hop pair."""
     from dstlr_spark.queries.doc_kg import adjacency, entity_distances
@@ -239,10 +245,12 @@ def test_entity_distances_exact_on_path_graph(spark):
         ("A", "B"): 1, ("B", "C"): 1, ("C", "D"): 1,
         ("A", "C"): 2, ("B", "D"): 2, ("A", "D"): 3,
     }
-    out2 = {
-        (r.entity_a, r.entity_b): r.hops
-        for r in entity_distances(adjacency(edges), max_hops=2).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(doc_kg, "KHOP_MAX", 2)
+        out2 = {
+            (r.entity_a, r.entity_b): r.hops
+            for r in entity_distances(adjacency(edges)).collect()
+        }
     assert ("A", "D") not in out2 and len(out2) == 5
     # anchored: BFS seeded at D — exactly the unordered pairs
     # involving D, now as (anchor, other) with the same hop counts
@@ -692,7 +700,9 @@ def test_ppr_anchored_multipath_beats_single_path(spark):
     rows = [("A", "B"), ("A", "C"), ("B", "D"), ("C", "D"),
             ("A", "E"), ("E", "F")]
     edges = spark.createDataFrame(rows, "src string, dst string")
-    got = {r.entity_id: r.ppr_ppb for r in ppr_anchored(adjacency(edges), "A").collect()}
+    adj = adjacency(edges)
+    verts_df = adj.select(F.col("src").alias("id")).distinct()
+    got = {r.entity_id: r.ppr_ppb for r in ppr_anchored(adj, "A", verts_df).collect()}
     verts = sorted({v for e in rows for v in e})
     assert got == _py_ppr(rows, "A", verts)
     assert got["D"] > got["F"]  # two paths absorb more restart mass
@@ -717,8 +727,10 @@ def test_ppr_anchored_matches_python_on_random_graphs(spark):
         )
         edges = spark.createDataFrame(rows, "src string, dst string")
         anchor = verts[0]
+        adj = adjacency(edges)
+        verts_df = adj.select(F.col("src").alias("id")).distinct()
         got = {r.entity_id: r.ppr_ppb
-               for r in ppr_anchored(adjacency(edges), anchor).collect()}
+               for r in ppr_anchored(adj, anchor, verts_df).collect()}
         assert got == _py_ppr(rows, anchor, verts=sorted(
             {v for e in rows for v in e}
         ))
@@ -727,5 +739,5 @@ def test_ppr_anchored_matches_python_on_random_graphs(spark):
     edges = spark.createDataFrame([("A", "B")], "src string, dst string")
     vf = spark.createDataFrame([("A",), ("B",), ("Z",)], "id string")
     got = {r.entity_id: r.ppr_ppb
-           for r in ppr_anchored(adjacency(edges), "Z", verts=vf).collect()}
+           for r in ppr_anchored(adjacency(edges), "Z", vf).collect()}
     assert got == {"Z": 150_000_000}

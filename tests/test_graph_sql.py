@@ -47,9 +47,11 @@ def test_span_capped_at_1024_bytes(spark):
 
 
 def test_fk_elision_equals_cypher_literal_plan(spark):
-    """The default MENTIONS-edge semijoin elision (assume_fk_integrity)
-    is row-for-row identical to the Cypher-literal plan on a graph from
-    our own materializer — for all three clean patterns."""
+    """The clean chain's MENTIONS-edge semijoin elision is row-for-row
+    identical to the Cypher-literal plan on a graph from our own
+    materializer — for all three clean patterns. The literal plan is the
+    same pattern over a graph whose relation edges are first semijoined
+    with ``mentions_edges`` on (doc_id, subject_mention_id)."""
     from dstlr_spark.operators.clean import (
         inconsistent_information,
         missing_information,
@@ -59,12 +61,19 @@ def test_fk_elision_equals_cypher_literal_plan(spark):
     g = materialize_graph(
         build_triples(tr, alias_dict(spark), facts(spark), property_relation(spark))
     )
+    subj_doc = g["mentions_edges"].select(
+        F.col("doc_id"), F.col("mention_id").alias("subject_mention_id")
+    ).dropDuplicates()
+    g_literal = dict(
+        g,
+        relation_edges=g["relation_edges"].join(
+            subj_doc, ["doc_id", "subject_mention_id"], "inner"
+        ),
+    )
     key = ["doc_id", "subject_mention_id", "type", "object_mention_id", "entity_id"]
     for fn in (supporting_information, inconsistent_information, missing_information):
         fast = sorted(map(tuple, fn(g).select(*key).collect()))
-        literal = sorted(
-            map(tuple, fn(g, assume_fk_integrity=False).select(*key).collect())
-        )
+        literal = sorted(map(tuple, fn(g_literal).select(*key).collect()))
         assert fast == literal, fn.__name__
         assert len(fast) > 0 or fn is missing_information, fn.__name__
 

@@ -100,9 +100,10 @@ def test_fan_out_probe_runs_no_job(spark):
     NativeKG, which probes through fan_out, is built job-free as well."""
     from dstlr_spark.plans.native_kg import NativeKG
     from dstlr_spark.plans.partitioning import fan_out
-    from dstlr_spark.queries.doc_kg import _aliases, _gazetteer
+    from dstlr_spark.queries.doc_kg import _aliases, _doc_fact_triples, _gazetteer
 
     sc = spark.sparkContext
+    fact_triples = _doc_fact_triples(spark)
     scan = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("text").alias("contents"),
@@ -114,7 +115,7 @@ def test_fan_out_probe_runs_no_job(spark):
     try:
         before = len(sc.statusTracker().getJobIdsForGroup(group))
         assert fan_out(a) is a
-        NativeKG(a, _gazetteer(spark), _aliases(spark))
+        NativeKG(a, _gazetteer(spark), _aliases(spark), fact_triples)
         after = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -166,12 +167,18 @@ def test_linking_is_single_aggregate_no_sort(spark):
     the scan already resolved each mention's entity, so above the cache
     there is no alias join, no window sort and no lemma-key lambda."""
     from dstlr_spark.plans.native_kg import NativeKG
-    from dstlr_spark.queries.doc_kg import _aliases, _documents, _gazetteer
+    from dstlr_spark.queries.doc_kg import (
+        _aliases,
+        _doc_fact_triples,
+        _documents,
+        _gazetteer,
+    )
 
     kg = NativeKG(
         _documents(spark, "/root/testdata/sf0.001"),
         _gazetteer(spark),
         _aliases(spark),
+        _doc_fact_triples(spark),
         sent_threshold=10_000,
     )
     try:

@@ -67,3 +67,58 @@ def test_stage_jobs_match_build_kg(spark, tmp_path, monkeypatch, capsys):
         got = spark.read.parquet(str(stages / "graph" / name))
         assert want.count() > 0, name
         assert _rows(got.select(*want.columns)) == _rows(want), name
+
+
+def test_extract_max_rows_keeps_the_same_rows_in_any_file_order(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """``--max-rows`` caps the input by a top-N in (conv_id, turn_idx,
+    text) order: the same transcript rows stored in ascending and in
+    descending order give the same ledger lineage."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import SparkSession
+
+    from dstlr_spark.plans.ledger import read_ledger
+    from dstlr_spark.sources.transcripts import SMOKE_SENTENCES
+
+    ts = dt.datetime(2024, 1, 1)
+    # ascending (conv_id, turn_idx) order
+    rows = [
+        {
+            "conv_id": f"c{c}", "turn_idx": t, "role": "user",
+            "text": SMOKE_SENTENCES[(c + t) % len(SMOKE_SENTENCES)],
+            "tool": None, "ts": ts,
+        }
+        for c in range(4) for t in range(3)
+    ]
+    schema = pa.schema([
+        ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
+        ("text", pa.string()), ("tool", pa.string()), ("ts", pa.timestamp("us", tz="UTC")),
+    ])
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+
+    lineage = []
+    for name, order in (("asc", rows), ("desc", rows[::-1])):
+        src = tmp_path / name
+        src.mkdir()
+        pq.write_table(pa.Table.from_pylist(order, schema), src / "part-0.parquet")
+        out = tmp_path / f"{name}_out"
+        _run(
+            monkeypatch, "extract.py", "--input", src,
+            "--output", out / "triples", "--ledger", out / "_progress",
+            "--max-rows", 5, "--n-buckets", 4, "--partitions", 2,
+        )
+        capsys.readouterr()
+        lineage.append(
+            sorted(
+                tuple(r)
+                for r in read_ledger(spark, str(out / "_progress"))
+                .select("bucket", "n_input_rows", "input_fingerprint")
+                .collect()
+            )
+        )
+    assert lineage[0] == lineage[1]
+    assert sum(n for _, n, _ in lineage[0]) == 5
