@@ -10,7 +10,7 @@
 #   make selftest        # perfbench self-test (not part of gate)
 #   make perfbench       # one untraced run per benchmark workload (not part of gate)
 #   make perfbench-trace # one traced seed-31 run per workload: correct, failed and its job counts (not part of gate)
-#   make graph-parity    # graph-builder parity, plan and exact span-cap fuzz tests (not part of gate)
+#   make graph-parity    # graph builder parity, plan and exact span-cap fuzz tests + the graph-consuming oracle queries (not part of gate)
 #   make canon-parity    # canonicalization tests + its four oracle queries (not part of gate)
 #   make extract-parity  # extraction, linking and plan tests + the four extraction oracle queries (not part of gate)
 #   make media-parity    # codec reach guard + codec tests + the 11 mm_* oracle queries (not part of gate)
@@ -69,9 +69,10 @@ perfbench-trace:
 	    sys.exit(not d["correct"])' $$w; \
 	done
 
-# quick pre-check for a change to either graph builder
+# quick pre-check for a change to the graph builder or the bag's routes
 graph-parity:
 	python -m pytest -q tests/test_graph_sql.py tests/test_plans.py tests/test_fuzz_text.py
+	python scripts/check_oracles.py /root/testdata/sf0.01 kg_supporting kg_supporting_anchored kg_supporting_confident kg_inconsistent kg_missing kg_enrich_facts kg_triples_by_relation kg_entity_distances kg_entity_distances_anchored kg_entity_distances_batch
 
 # quick pre-check for a change to canonicalization or connected components
 canon-parity:

@@ -18,8 +18,8 @@ post-cross. The final span/value predicate is the only residual.
 
 The pattern's ``(d:Document)-->(s:Mention)`` edge is a semijoin of the
 relation edges against ``mentions_edges`` — a mention-scale dedup +
-shuffle. For graphs built by our own materializers
-(``NativeKG.graph()`` / ``materialize_graph``) every relation edge's
+shuffle. For graphs built by our one builder, ``materialize_graph``
+(``NativeKG.graph()`` calls it too), every relation edge's
 (doc_id, subject_mention_id) is derived FROM the mention frame, so the
 semijoin is an identity by construction (FK integrity is asserted by
 the J4 anti-join tests and measured 0-orphan end-to-end). The chain

@@ -42,7 +42,11 @@ def linked_entities(triples: DataFrame) -> DataFrame:
     (EnrichTriples.scala:46-50)."""
     return (
         triples.where(
-            (F.col("relation") == "LINKS_TO") & F.col("objectValue").isNotNull()
+            (F.col("relation") == "LINKS_TO")
+            # the LINKS_TO endpoint type: a literal in every producer, so
+            # the filter prunes a bag's relation self-join from the plan
+            & (F.col("objectType") == "Entity")
+            & F.col("objectValue").isNotNull()
         )
         .select(F.col("objectValue").alias("entity_id"))
         .distinct()

@@ -28,31 +28,61 @@ from dstlr_spark.functions.text import span_index_label, utf8_truncate_1024
 
 
 def split_triples(triples: DataFrame) -> dict[str, DataFrame]:
-    """F7/F8 routing: the 4-way disjoint split of LoadTriples.scala:39-146."""
+    """F7/F8 routing: the 4-way disjoint split of LoadTriples.scala:39-146,
+    facts by ``objectType`` and the rest by ``relation``.
+
+    MENTIONS and LINKS_TO also require their endpoint type from the
+    schema above, ``(:Document)-[:MENTIONS]`` and ``[:LINKS_TO]->(:Entity)``,
+    which every producer emits, and relations are the rows neither route
+    takes. The types are literals in each producer's projection, so
+    Catalyst folds every route per union branch: a bag branch that cannot
+    hold a table's rows is pruned from its plan, and the relation
+    self-join, whose ``relation`` is a ``concat_ws``, is read by its own
+    table with no residual filter on that name."""
+    is_mention = (F.col("relation") == "MENTIONS") & (F.col("subjectType") == "Document")
+    is_link = (F.col("relation") == "LINKS_TO") & (F.col("objectType") == "Entity")
     non_fact = triples.where(F.col("objectType") != "Fact")
     return {
-        "mentions": non_fact.where(F.col("relation") == "MENTIONS"),
-        "links": non_fact.where(
-            (F.col("relation") == "LINKS_TO") & F.col("objectValue").isNotNull()
-        ),
-        "relations": non_fact.where(
-            (F.col("relation") != "MENTIONS") & (F.col("relation") != "LINKS_TO")
-        ),
+        "mentions": non_fact.where(is_mention),
+        "links": non_fact.where(is_link & F.col("objectValue").isNotNull()),
+        "relations": non_fact.where(~is_mention & ~is_link),
         "facts": triples.where(F.col("objectType") == "Fact"),
     }
 
 
-def graph_tables(
-    mentions: DataFrame, links: DataFrame, relations: DataFrame, facts: DataFrame
-) -> dict[str, DataFrame]:
-    """The six graph tables, defined once for every builder.
+def symmetrize(edges: DataFrame) -> DataFrame:
+    """``edges(src, dst)`` ∪ the same edges reversed: the directed form
+    of an undirected edge list, one row per (vertex, neighbor)."""
+    return edges.select("src", "dst").unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
 
-    Inputs: ``mentions`` (doc_id, mention_id, entity_class, span,
-    normalized, begin, end), one row per occurrence; ``links``
-    (mention_id, entity_id), entity_id null when unresolved;
-    ``relations`` already in ``relation_edges`` shape; ``facts``
-    (entity_id, relation, value). Keys are deduped (MERGE semantics).
-    """
+
+def materialize_graph(triples: DataFrame) -> dict[str, DataFrame]:
+    """Triple bag → {mention_nodes, mentions_edges, links_to, relation_edges,
+    fact_edges, entity_nodes}, the one graph builder. Keys are deduped
+    (MERGE semantics).
+
+    A MENTIONS row carries its document id in both ``doc`` and
+    ``subjectValue`` (every producer emits them equal), so one
+    ``doc_id`` column serves the edge and the mention-node tie-break."""
+    parts = split_triples(triples)
+    meta = F.col("meta")
+    mentions = parts["mentions"].select(
+        F.col("subjectValue").alias("doc_id"),
+        F.col("objectValue").alias("mention_id"),
+        *(meta[c].alias(c) for c in ("entity_class", "span", "normalized", "begin", "end")),
+    )
+    # the split keeps only resolved links: entity_id is never null
+    links = parts["links"].select(
+        F.col("subjectValue").alias("mention_id"),
+        F.col("objectValue").alias("entity_id"),
+    )
+    facts = parts["facts"].select(
+        F.col("subjectValue").alias("entity_id"),
+        "relation",
+        F.col("objectValue").alias("value"),
+    )
     # Mention node: id + class/span (first wins, as MERGE ON CREATE) +
     # accumulated sorted index list (A4).
     mention_nodes = (
@@ -75,78 +105,24 @@ def graph_tables(
             "index",
         )
     )
-    links_to = links.where(F.col("entity_id").isNotNull()).dropDuplicates(
-        ["mention_id", "entity_id"]
-    )
-    fact_edges = facts.dropDuplicates(["entity_id", "relation", "value"])
-    # from the raw inputs, not the two deduped tables: one distinct
-    # instead of re-running the link and fact dedupes beneath it
-    entity_nodes = (
-        links.where(F.col("entity_id").isNotNull())
-        .select("entity_id")
-        .unionByName(facts.select("entity_id"))
-        .distinct()
-    )
     return {
         "mention_nodes": mention_nodes,
         "mentions_edges": mentions.select("doc_id", "mention_id", "begin", "end"),
-        "links_to": links_to,
-        "relation_edges": relations,
-        "fact_edges": fact_edges,
-        "entity_nodes": entity_nodes,
-    }
-
-
-def symmetrize(edges: DataFrame) -> DataFrame:
-    """``edges(src, dst)`` ∪ the same edges reversed: the directed form
-    of an undirected edge list, one row per (vertex, neighbor)."""
-    return edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-
-
-def triple_edges(
-    links: DataFrame, relations: DataFrame, facts: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """LINKS_TO, relation and Fact triples → the ``links``, ``relations``
-    and ``facts`` inputs of :func:`graph_tables`."""
-    return (
-        links.select(
-            F.col("subjectValue").alias("mention_id"),
-            F.col("objectValue").alias("entity_id"),
-        ),
-        relations.select(
+        "links_to": links.dropDuplicates(["mention_id", "entity_id"]),
+        "relation_edges": parts["relations"].select(
             F.col("doc").alias("doc_id"),
             F.col("subjectValue").alias("subject_mention_id"),
             F.col("relation").alias("type"),
-            F.col("meta")["confidence"].alias("confidence"),
+            meta["confidence"].alias("confidence"),
             F.col("objectValue").alias("object_mention_id"),
         ),
-        facts.select(
-            F.col("subjectValue").alias("entity_id"),
-            "relation",
-            F.col("objectValue").alias("value"),
-        ),
-    )
-
-
-def materialize_graph(triples: DataFrame) -> dict[str, DataFrame]:
-    """Triple bag → {mention_nodes, mentions_edges, links_to, relation_edges,
-    fact_edges, entity_nodes} DataFrames via :func:`graph_tables`.
-
-    A MENTIONS row carries its document id in both ``doc`` and
-    ``subjectValue`` (every producer emits them equal), so one
-    ``doc_id`` column serves the edge and the mention-node tie-break."""
-    parts = split_triples(triples)
-    meta = F.col("meta")
-    mentions = parts["mentions"].select(
-        F.col("subjectValue").alias("doc_id"),
-        F.col("objectValue").alias("mention_id"),
-        *(meta[c].alias(c) for c in ("entity_class", "span", "normalized", "begin", "end")),
-    )
-    return graph_tables(
-        mentions, *triple_edges(parts["links"], parts["relations"], parts["facts"])
-    )
+        "fact_edges": facts.dropDuplicates(["entity_id", "relation", "value"]),
+        # from the raw inputs, not the two deduped tables: one distinct
+        # instead of re-running the link and fact dedupes beneath it
+        "entity_nodes": links.select("entity_id")
+        .unionByName(facts.select("entity_id"))
+        .distinct(),
+    }
 
 
 def validate_fk(graph: dict[str, DataFrame]) -> dict[str, int]:

@@ -26,13 +26,15 @@ from dstlr_spark.operators.extract import (
     mention_triples,
     relation_triples,
 )
-from dstlr_spark.operators.graph import graph_tables, triple_edges
+from dstlr_spark.operators.graph import materialize_graph
 from dstlr_spark.plans.partitioning import fan_out
 from dstlr_spark.schemas import META_SCHEMA
 
 
 class NativeKG:
-    """Builds mentions once, derives triples / links / graph from the cache."""
+    """Builds mentions once and derives the triple bag from the cache;
+    the graph is ``materialize_graph(bag)``, the transcripts path's
+    builder, whose routes Catalyst folds into one-hop derivations."""
 
     def __init__(
         self,
@@ -107,22 +109,18 @@ class NativeKG:
             self.mentions.count()
             self._filled = True
 
-    def extraction_triples(self) -> DataFrame:
+    def bag(self) -> DataFrame:
+        """MENTIONS, co-occurrence and LINKS_TO rows of the mention frame
+        (entity id null when unresolved, as ``link_mentions`` emits
+        them), then the fact rows."""
         self._ensure_persisted()
-        return mention_triples(self.mentions).unionByName(
-            relation_triples(self.mentions, self.cooccur_window)
-        )
-
-    def links_triples(self) -> DataFrame:
-        """One LINKS_TO row per distinct (doc, mention) — entity id null
-        when unresolvable, as ``operators.linking.link_mentions`` emits
-        them — projected from the entity the scan resolved. A mention id
-        stands for one key of one document and the entity is a function
-        of the key, so the distinct (doc, mention, entity) rows are the
-        distinct mentions: a key-only hash aggregate, with no exchange
-        because the cache is hash-partitioned by ``doc_id``."""
-        self._ensure_persisted()
-        return self.mentions.select("doc_id", "mention_id", "entity_id").distinct().select(
+        m = self.mentions
+        # a mention id stands for one key of one document and the entity
+        # is a function of the key, so the distinct (doc, mention,
+        # entity) rows are the distinct mentions: a key-only hash
+        # aggregate, with no exchange because the cache is
+        # hash-partitioned by doc_id
+        links = m.select("doc_id", "mention_id", "entity_id").distinct().select(
             F.col("doc_id").alias("doc"),
             F.lit("Mention").alias("subjectType"),
             F.col("mention_id").alias("subjectValue"),
@@ -131,50 +129,23 @@ class NativeKG:
             F.col("entity_id").alias("objectValue"),
             F.lit(None).cast(META_SCHEMA).alias("meta"),
         )
-
-    def bag(self) -> DataFrame:
         return (
-            self.extraction_triples()
-            .unionByName(self.links_triples())
-            .unionByName(self.fact_triples)
+            mention_triples(m)
+            .unionByName(relation_triples(m, self.cooccur_window))
+            .unionByName(links)
+            # stamped as the literal the F7 route reads: no objectType filter
+            # prunes a Python-backed fact frame's RDD scan, so without the
+            # stamp every non-fact table would plan that scan
+            .unionByName(self.fact_triples.withColumn("objectType", F.lit("Fact")))
         )
 
     def graph(self) -> dict[str, DataFrame]:
-        """Graph tables straight from the mention frame.
-
-        Row-identical to ``materialize_graph(self.bag())`` (pinned by
-        tests/test_graph_sql.py) and built by the same
-        :func:`~dstlr_spark.operators.graph.graph_tables`, but each input
-        derives from the persisted mention frame in one hop instead of
-        re-filtering the bag's union. The bag names its relations with
-        ``concat_ws`` inside the self-join, so a per-table relation
-        filter cannot be pushed below the join, and the self-join would
-        run again under every other table's filter. Links are the
-        entities the scan resolved (:meth:`links_triples`), so no alias
-        join runs and ``links_to`` / ``entity_nodes`` are projections
-        of the cache. The shuffles left are keyed by mention or entity
-        id: the mention-node aggregate, the link and fact dedupes and
-        ``entity_nodes``' distinct.
-        """
-        self._ensure_persisted()
-        m = self.mentions
-        mentions = m.select(
-            "doc_id",
-            "mention_id",
-            "entity_class",
-            "span",
-            F.lit(None).cast("string").alias("normalized"),
-            "begin",
-            "end",
-        )
-        return graph_tables(
-            mentions,
-            *triple_edges(
-                self.links_triples(),
-                relation_triples(m, self.cooccur_window),
-                self.fact_triples,
-            ),
-        )
+        """The six graph tables of :meth:`bag`. Each routes on literal
+        node types and relation names (``operators.graph.split_triples``),
+        so Catalyst prunes every other union branch and each table
+        derives from the persisted mention frame in one hop; links are
+        the entities the scan resolved, so no alias join runs."""
+        return materialize_graph(self.bag())
 
     def unpersist(self) -> None:
         self.mentions.unpersist()

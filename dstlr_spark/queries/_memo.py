@@ -20,23 +20,17 @@ from __future__ import annotations
 
 from typing import Any, Callable, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 T = TypeVar("T")
 
 _CACHE: dict[tuple, Any] = {}
 
 
-def staged(
-    spark: SparkSession,
-    key: tuple,
-    build: Callable[[], T],
-    checkpoint: bool = True,
-) -> T:
-    """Return the memoized staged value for ``key``, building (and
-    ``localCheckpoint``-ing, unless ``checkpoint=False``) on first use.
-    ``build`` returns a DataFrame, or any object holding session-bound
-    frames when ``checkpoint=False``."""
+def staged(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """Return the memoized staged value for ``key``, building it on first
+    use. A DataFrame is ``localCheckpoint``-ed; any other value (an
+    object holding session-bound frames, a directory) is kept as built."""
     app_id = spark.sparkContext.applicationId
     full = (app_id, *key)
     df = _CACHE.get(full)
@@ -44,7 +38,7 @@ def staged(
         for stale in [k for k in _CACHE if k[0] != app_id]:
             del _CACHE[stale]
         df = build()
-        if checkpoint:
+        if isinstance(df, DataFrame):
             df = df.localCheckpoint()
         _CACHE[full] = df
     return df

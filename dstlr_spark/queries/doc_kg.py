@@ -186,7 +186,6 @@ def _kg(spark: SparkSession, sf_dir: str) -> NativeKG:
             cooccur_window=COOCCUR_WINDOW,
             sent_threshold=10_000,
         ),
-        checkpoint=False,
     )
 
 
@@ -265,14 +264,13 @@ def q_enrich_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing, C6 date reformat, ground-truth provenance rows."""
     from dstlr_spark.operators.enrich import enrich_triples
 
-    kg = _kg(spark, sf_dir)
     facts = spark.createDataFrame(
         ENRICH_FACTS, "entity_id string, property string, value string"
     )
     mapping = spark.createDataFrame(
         PROPERTY_RELATION_DOC, "property string, relation string"
     )
-    gt = enrich_triples(kg.links_triples(), facts, mapping)
+    gt = enrich_triples(_kg(spark, sf_dir).bag(), facts, mapping)
     return gt.select(
         F.col("subjectValue").alias("entity_id"),
         "relation",
@@ -333,9 +331,7 @@ def _canonical_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     `kg_canonical_triples` and `kg_provenance_bundle`."""
     cc = _mention_canonical(spark, sf_dir)
     rels = (
-        _kg(spark, sf_dir)
-        .extraction_triples()
-        .where(F.col("relation").startswith("COOCCURS"))
+        relation_triples(_kg(spark, sf_dir).mentions, COOCCUR_WINDOW)
         .select(
             "doc",
             F.col("subjectValue").alias("sm"),
@@ -1683,7 +1679,7 @@ def q_entity_distances_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor's k-neighborhood instead of all pairs — the plan a Cypher
     `MATCH (a {{id: $x}})-[*1..{KHOP_MAX}]-(b)` compiles to. Output:
     (entity_b, hops) for everything within KHOP_MAX of the anchor."""
-    return entity_distances(_comention_adj(spark, sf_dir), anchor=DIST_ANCHOR).select(
+    return entity_distances(_comention_adj(spark, sf_dir), seeds=(DIST_ANCHOR,)).select(
         "entity_b", "hops"
     )
 
@@ -1697,7 +1693,7 @@ DIST_BATCH_ANCHORS: tuple[str, ...] = ("E-spark", "E-customer")
 def q_entity_distances_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-point-lookup form of `kg_entity_distances_anchored`: distances
     from EVERY seed in :data:`DIST_BATCH_ANCHORS` in ONE BFS pass — the
-    seed set semi-joins the hop-1 frontier, so K anchored lookups pay
+    seed set filters the hop-1 frontier, so K anchored lookups pay
     one graph traversal instead of K (each frontier is the UNION of the
     seeds' k-neighborhoods, never all pairs). This is the shape a batch
     of Cypher `MATCH (a {{id: $x}})-[*1..{KHOP_MAX}]-(b)` point queries
@@ -1705,46 +1701,35 @@ def q_entity_distances_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed, entity_b, hops) for everything within KHOP_MAX of each seed.
 
     Scale shape: per hop, one edge-scale equi-join of the seed-rooted
-    frontier with the adjacency list; the seed set itself is broadcast
-    (query-sized, K rows) so the frontier never shuffles on K."""
-    seeds = spark.createDataFrame(
-        [(a,) for a in DIST_BATCH_ANCHORS], "id string"
-    )
-    return entity_distances(_comention_adj(spark, sf_dir), anchors=seeds)
+    frontier with the adjacency list; the seed set is a query-sized
+    ``IN`` list on the first frontier scan, so nothing joins or
+    shuffles on K."""
+    return entity_distances(_comention_adj(spark, sf_dir), seeds=DIST_BATCH_ANCHORS)
 
 
 def entity_distances(
     adj: DataFrame,
-    anchor: str | None = None,
+    seeds: tuple[str, ...] | None = None,
     hub_cap: int | None = None,
-    anchors: DataFrame | None = None,
 ) -> DataFrame:
     """Bounded BFS distance table over an :func:`adjacency` — see
-    :func:`q_entity_distances`. With ``anchor`` set, the first frontier
-    is pre-filtered to the anchor's edges (and every later frontier is
-    therefore anchor-rooted) — pair output has entity_a == anchor.
-    With ``anchors`` set (a 1-column frame of seed entity ids — the
-    MULTI-ANCHOR batch form), the BFS runs from every seed in ONE pass:
-    the seed set semi-joins the first frontier, so frontier volume is
-    Σ per-seed neighborhoods, never all-pairs — the shape for "distances
-    from these K query entities" lookups at 100 TB (K point BFSes would
-    pay K graph scans; this pays one). With ``hub_cap`` set, expansion
-    never pivots THROUGH a vertex of degree > hub_cap: hubs stay
-    reachable as path ENDPOINTS (hop-1 edges and frontier targets are
-    uncapped) but contribute no through-paths, bounding every expansion
-    join's per-row fan-out."""
+    :func:`q_entity_distances`. With ``seeds`` set, the first frontier
+    is pre-filtered to the seeds' edges, so every later frontier is
+    seed-rooted and the output holds the rooted pairs (seed, other):
+    frontier volume is Σ per-seed neighborhoods, never all-pairs — one
+    seed is a point lookup, K seeds pay one graph scan instead of K.
+    Without seeds, the output is every unordered pair (a < b). With
+    ``hub_cap`` set, expansion never pivots THROUGH a vertex of
+    degree > hub_cap: hubs stay reachable as path ENDPOINTS (hop-1
+    edges and frontier targets are uncapped) but contribute no
+    through-paths, bounding every expansion join's per-row fan-out."""
     # an adjacency row carries its src's degree, and the expansion
     # pivots through src: a hub's rows never extend a path
     step = adj if hub_cap is None else adj.where(F.col("degree") <= hub_cap)
     step = step.select(F.col("src").alias("dst"), F.col("dst").alias("nxt"))
     dist = adj.select("src", "dst", F.lit(1).alias("hops"))
-    if anchor is not None:
-        dist = dist.where(F.col("src") == anchor)
-    if anchors is not None:
-        seed = anchors.toDF("src").distinct()
-        # broadcast semi-join: seed sets are query-sized (K entities),
-        # the frontier is edge-scale — never shuffle the frontier on K
-        dist = dist.join(F.broadcast(seed), "src", "semi")
+    if seeds is not None:
+        dist = dist.where(F.col("src").isin(*seeds))
     frontier = dist
     # no per-round checkpoint: KHOP_MAX is a small constant, and each
     # frontier's copies in the plan run as one reused exchange
@@ -1756,9 +1741,7 @@ def entity_distances(
             .distinct()
         )
         dist = dist.unionByName(frontier)
-    if anchor is not None:
-        dist = dist.where(F.col("dst") != F.lit(anchor))
-    elif anchors is not None:
+    if seeds is not None:
         # rooted pairs: keep (seed, other), drop self-distances
         dist = dist.where(F.col("dst") != F.col("src"))
     else:

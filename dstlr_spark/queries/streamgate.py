@@ -68,7 +68,7 @@ def _stream_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
             shutil.copy(src, dst)
         return d
 
-    return staged(spark, ("stream_dir", table, sf_dir), build, checkpoint=False)
+    return staged(spark, ("stream_dir", table, sf_dir), build)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,7 +219,7 @@ def _transcripts_stream_dir(spark: SparkSession, sf_dir: str) -> str:
         derive_transcripts(docs).coalesce(4).write.mode("overwrite").parquet(d)
         return d
 
-    return staged(spark, ("transcripts_stream", sf_dir), build, checkpoint=False)
+    return staged(spark, ("transcripts_stream", sf_dir), build)
 
 
 def _transcripts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -156,11 +156,12 @@ def test_alias_winners_lockstep_with_batch_links(spark):
     invariant that justifies replacing the corpus-scale link join in
     `kg_name_variants` / `stream_entity_links` with a dictionary
     broadcast."""
+    from dstlr_spark.operators.graph import split_triples
     from dstlr_spark.queries.doc_kg import _alias_winners, _kg
 
     kg = _kg(spark, SF)
     links = (
-        kg.links_triples()
+        split_triples(kg.bag())["links"]
         .where(F.col("objectValue").isNotNull())
         .join(
             kg.mentions.select(
@@ -256,7 +257,7 @@ def test_entity_distances_exact_on_path_graph(spark, monkeypatch):
     # involving D, now as (anchor, other) with the same hop counts
     anch = {
         r.entity_b: r.hops
-        for r in entity_distances(adjacency(edges), anchor="D").collect()
+        for r in entity_distances(adjacency(edges), seeds=("D",)).collect()
     }
     assert anch == {"C": 1, "B": 2, "A": 3}
 
@@ -418,14 +419,13 @@ def test_entity_distances_multi_anchor_batch(spark):
         [("A", "B"), ("B", "C"), ("C", "D"), ("B", "E")],
         "src string, dst string",
     )
-    seeds = spark.createDataFrame([("A",), ("D",)], "id string")
     batch = {
         (r.entity_a, r.entity_b): r.hops
-        for r in entity_distances(adjacency(edges), anchors=seeds).collect()
+        for r in entity_distances(adjacency(edges), seeds=("A", "D")).collect()
     }
     singles = {}
     for s in ("A", "D"):
-        for r in entity_distances(adjacency(edges), anchor=s).collect():
+        for r in entity_distances(adjacency(edges), seeds=(s,)).collect():
             singles[(s, r.entity_b)] = r.hops
     assert batch == singles
     # sanity: expected content from seed A (hops ≤ 3)
@@ -520,10 +520,9 @@ def test_entity_distances_matches_python_bfs_on_random_graphs(spark):
 
         # multi-anchor batch: 3 seeds, rooted pairs
         seeds = sorted(rng.sample(sorted(degc), 3))
-        sdf = spark.createDataFrame([(s,) for s in seeds], "id string")
         got_b = {
             (r.entity_a, r.entity_b): r.hops
-            for r in entity_distances(adjacency(edf), anchors=sdf).collect()
+            for r in entity_distances(adjacency(edf), seeds=tuple(seeds)).collect()
         }
         want_b = _py_bfs_pairs(edges, KHOP_MAX, seeds=seeds)
         assert got_b == want_b, f"batch mismatch (seed={seed}, seeds={seeds})"

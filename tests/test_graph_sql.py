@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,8 @@ from dstlr_spark.operators.extract import extract_triples_pattern
 from dstlr_spark.schemas import DOCUMENT_SCHEMA
 from dstlr_spark.sources.fixtures import alias_dict, facts, property_relation
 from dstlr_spark.sources.transcripts import generate_transcripts
+
+SF = "/root/testdata/sf0.001"
 
 
 def test_span_capped_at_1024_bytes(spark):
@@ -96,7 +100,7 @@ def doc_kg(spark):
     )
 
     kg = NativeKG(
-        _documents(spark, "/root/testdata/sf0.001"),
+        _documents(spark, SF),
         _gazetteer(spark),
         _aliases(spark),
         _doc_fact_triples(spark),
@@ -107,16 +111,32 @@ def doc_kg(spark):
     kg.unpersist()
 
 
-def test_native_graph_matches_materialize_graph(doc_kg):
-    """Both builders go through graph_tables: NativeKG's one-hop
-    derivation from the mention frame and materialize_graph over the
-    same KG's triple bag must yield row-identical tables."""
+def test_native_graph_matches_materialize_graph(spark, doc_kg):
+    """NativeKG's graph (the JVM relation self-join over its cached
+    mention frame) and the graph of the fused Arrow bag (the Python
+    co-occurrence loop) plus the same facts are two independent
+    spellings of one KG: the six tables must be row-identical."""
+    from dstlr_spark.operators.extract import extract_bag_fused
+    from dstlr_spark.queries.doc_kg import (
+        COOCCUR_WINDOW,
+        _aliases,
+        _doc_fact_triples,
+        _documents,
+        _gazetteer,
+    )
 
     def rows(df):
         return sorted(map(repr, df.collect()))
 
     native = doc_kg.graph()
-    via_bag = materialize_graph(doc_kg.bag())
+    fused = extract_bag_fused(
+        _documents(spark, SF),
+        _gazetteer(spark),
+        _aliases(spark),
+        COOCCUR_WINDOW,
+        10_000,
+    )
+    via_bag = materialize_graph(fused.unionByName(_doc_fact_triples(spark)))
     for t in GRAPH_TABLES:
         got = rows(native[t])
         assert got == rows(via_bag[t]), t
@@ -125,20 +145,82 @@ def test_native_graph_matches_materialize_graph(doc_kg):
 
 def test_native_graph_derives_from_mention_frame_in_one_hop(spark, doc_kg):
     """The docs-path tables read the persisted mention frame directly:
-    no bag Union and no re-run extraction scan above the cache."""
+    the bag's routes fold per union branch, so no bag Union, no re-run
+    extraction scan and no second cache read (the relation self-join
+    reads it twice) sits above the cache, enrich reads it once, and no
+    route is left as a filter on the self-join's concat_ws name."""
+    from dstlr_spark.queries.doc_kg import q_enrich_facts
+
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
     graph = doc_kg.graph()
-    for t in ("mention_nodes", "mentions_edges", "links_to", "relation_edges"):
-        plan = graph[t]._jdf.queryExecution().explainString(jmode)
+    frames = {
+        t: graph[t]
+        for t in ("mention_nodes", "mentions_edges", "links_to", "relation_edges")
+    }
+    frames["enrich"] = q_enrich_facts(spark, SF)
+    for t, df in frames.items():
+        full = df._jdf.queryExecution().explainString(jmode)
+        assert not re.search(r"^(Join condition|Condition) ?: .*concat_ws", full, re.M), t
+        plan = full.split("\n\n", 1)[0]
         above, cached, _ = plan.partition("InMemoryRelation")
         assert cached, t
         assert "Union" not in above and "MapInPandas" not in above, t
+        want = 2 if t == "relation_edges" else 1
+        assert plan.count("InMemoryRelation") == want, t
+        assert plan.count("InMemoryTableScan") == want, t
+
+
+def test_producers_emit_the_routed_node_types(spark, doc_kg):
+    """split_triples routes MENTIONS on subjectType == "Document" and
+    LINKS_TO on objectType == "Entity": every producer must emit those
+    endpoint types, or its rows would drop out of the graph."""
+    from dstlr_spark.operators.assembly import assemble_documents
+    from dstlr_spark.operators.enrich import enrich_triples
+    from dstlr_spark.operators.extract import extract_bag_fused
+    from dstlr_spark.operators.linking import link_mentions
+    from dstlr_spark.queries.doc_kg import (
+        COOCCUR_WINDOW,
+        _aliases,
+        _documents,
+        _gazetteer,
+    )
+
+    docs = assemble_documents(generate_transcripts(spark, n_convs=8))
+    pattern = extract_triples_pattern(docs, alias_dict=alias_dict(spark))
+    producers = {
+        "pattern": pattern,
+        "fused": extract_bag_fused(
+            _documents(spark, SF),
+            _gazetteer(spark),
+            _aliases(spark),
+            COOCCUR_WINDOW,
+            10_000,
+        ),
+        "native": doc_kg.bag(),
+        "link_mentions": link_mentions(extract_triples_pattern(docs), alias_dict(spark)),
+    }
+    mentions = F.col("relation") == "MENTIONS"
+    links = F.col("relation") == "LINKS_TO"
+    for name, bag in producers.items():
+        counts = bag.agg(
+            F.count_if(mentions).alias("mentions"),
+            F.count_if(links).alias("links"),
+            F.count_if(mentions & ~F.col("subjectType").eqNullSafe("Document")).alias("bad_m"),
+            F.count_if(links & ~F.col("objectType").eqNullSafe("Entity")).alias("bad_l"),
+        ).first()
+        assert counts.links > 0, name
+        assert counts.mentions > 0 or name == "link_mentions", name
+        assert counts.bad_m == counts.bad_l == 0, (name, counts)
+    # enrich emits only facts, routed by objectType == "Fact"
+    facts_rows = enrich_triples(pattern, facts(spark), property_relation(spark)).collect()
+    assert facts_rows
+    assert {(r.subjectType, r.objectType) for r in facts_rows} == {("Entity", "Fact")}
 
 
 def test_graph_plans_run_no_python_udf(spark, doc_kg):
-    """The span cap is a JVM expression: no graph table of either builder
+    """The span cap is a JVM expression: no graph table of either bag
     crosses a scalar Python UDF boundary (the annotators' ``MapInPandas``
     scans are the only Python left, below the tables)."""
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -147,7 +229,6 @@ def test_graph_plans_run_no_python_udf(spark, doc_kg):
     docs = spark.createDataFrame([("d1", "Apple is based in Cupertino.")], DOCUMENT_SCHEMA)
     builders = {
         "native": doc_kg.graph(),
-        "via_bag": materialize_graph(doc_kg.bag()),
         "pattern": materialize_graph(extract_triples_pattern(docs, alias_dict=alias_dict(spark))),
     }
     for b, graph in builders.items():

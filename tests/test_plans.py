@@ -166,6 +166,7 @@ def test_linking_is_single_aggregate_no_sort(spark):
     """NativeKG's links are a projection of its cached mention frame:
     the scan already resolved each mention's entity, so above the cache
     there is no alias join, no window sort and no lemma-key lambda."""
+    from dstlr_spark.operators.graph import split_triples
     from dstlr_spark.plans.native_kg import NativeKG
     from dstlr_spark.queries.doc_kg import (
         _aliases,
@@ -182,7 +183,7 @@ def test_linking_is_single_aggregate_no_sort(spark):
         sent_threshold=10_000,
     )
     try:
-        plan = _plan(spark, kg.links_triples())
+        plan = _plan(spark, split_triples(kg.bag())["links"])
     finally:
         kg.unpersist()
     above, cached, _ = plan.partition("InMemoryRelation")
@@ -444,10 +445,10 @@ def test_link_consumers_read_entity_off_mention_rows(spark, monkeypatch):
     sf = "/root/testdata/sf0.001"
     staged = _memo.staged
 
-    def unstaged(spark, key, build, checkpoint=True):
+    def unstaged(spark, key, build):
         if key[0] == "kg_linked_mention_turns":
             return build()
-        return staged(spark, key, build, checkpoint)
+        return staged(spark, key, build)
 
     monkeypatch.setattr(_memo, "staged", unstaged)
     for build in (q_nil_entities, q_blocking_quality, _linked_mention_turns):
@@ -568,25 +569,21 @@ def test_comention_adjacency_staged_once(spark, monkeypatch):
 def test_entity_nodes_plans_one_exchange(spark):
     """entity_nodes is one distinct over the raw link and fact inputs:
     one hash exchange, not the link and fact dedupes again beneath it."""
-    from dstlr_spark.operators.graph import graph_tables
+    from dstlr_spark.operators.graph import materialize_graph
+    from dstlr_spark.schemas import TRIPLE_SCHEMA
 
-    mentions = spark.createDataFrame(
-        [("d", "m1", "X", "s", "n", 0, 1)],
-        "doc_id string, mention_id string, entity_class string, span string,"
-        " normalized string, begin int, end int",
+    bag = spark.createDataFrame(
+        [
+            ("d", "Document", "d", "MENTIONS", "Mention", "m1",
+             ("X", "s", 0, 1, "n", None)),
+            ("d", "Mention", "m1", "LINKS_TO", "Entity", "E1", None),
+            ("d", "Mention", "m2", "LINKS_TO", "Entity", None, None),
+            ("gt", "Entity", "E1", "r", "Fact", "v", None),
+            ("gt", "Entity", "E2", "r", "Fact", "v", None),
+        ],
+        TRIPLE_SCHEMA,
     )
-    links = spark.createDataFrame(
-        [("m1", "E1"), ("m2", None)], "mention_id string, entity_id string"
-    )
-    relations = spark.createDataFrame(
-        [], "doc_id string, subject_mention_id string, type string,"
-        " confidence double, object_mention_id string"
-    )
-    facts = spark.createDataFrame(
-        [("E1", "r", "v"), ("E2", "r", "v")],
-        "entity_id string, relation string, value string",
-    )
-    nodes = graph_tables(mentions, links, relations, facts)["entity_nodes"]
+    nodes = materialize_graph(bag)["entity_nodes"]
     exchanges = _exchange_nodes(_plan(spark, nodes))
     assert len(exchanges) == 1 and "hashpartitioning(entity_id" in exchanges[0]
     assert sorted(r.entity_id for r in nodes.collect()) == ["E1", "E2"]
@@ -616,19 +613,39 @@ def test_bucketed_window_pairs_plans_as_equi_join(spark):
     assert "_bkt" in plan
 
 
-def test_batch_bfs_seed_join_broadcasts(spark):
-    """The multi-anchor BFS's seed semi-join must broadcast the seed
-    set (K rows, query-sized) — shuffling the edge-scale frontier on K
-    would be the wrong plan at any scale."""
+def test_batch_bfs_seeds_filter_first_frontier(spark):
+    """The multi-anchor BFS's seed set is a query-sized IN list on the
+    first frontier: the seed predicate filters the rows below the first
+    expansion join, and nothing semi-joins or crosses with the edge-scale
+    frontier on K."""
     from dstlr_spark.queries.doc_kg import adjacency, entity_distances
 
     edges = spark.range(200).select(
         F.col("id").cast("string").alias("src"),
         ((F.col("id") * 7 + 3) % 200).cast("string").alias("dst"),
     )
-    seeds = spark.createDataFrame([("1",), ("50",)], "id string")
-    plan = _plan(spark, entity_distances(adjacency(edges), anchors=seeds))
-    assert "BroadcastHashJoin" in plan
-    # the semi-join side is the broadcast one
-    assert "LeftSemi" in plan
+    plan = _plan(spark, entity_distances(adjacency(edges), seeds=("1", "50")))
+    seed_filters = {
+        m.group(1)
+        for m in re.finditer(r"^\((\d+)\) Filter\n.*\nCondition : (.*)$", plan, re.M)
+        if re.search(r" IN \(1,50\)| INSET ", m.group(2))
+    }
+    assert seed_filters, plan
+    # the lowest-numbered join's subtree: the lines after it, deeper than it
+    tree = plan.split("\n\n", 1)[0].splitlines()[1:]
+    nodes = [
+        (re.search(r"[A-Za-z]", line).start(), *re.search(r"(\w+).* \((\d+)\)", line).groups())
+        for line in tree
+    ]
+    first = min(
+        (i for i, (_, name, _) in enumerate(nodes) if "Join" in name),
+        key=lambda i: int(nodes[i][2]),
+    )
+    below = []
+    for depth, name, node_id in nodes[first + 1:]:
+        if depth <= nodes[first][0]:
+            break
+        below.append(node_id)
+    assert seed_filters & set(below), plan
+    assert "LeftSemi" not in plan
     assert "CartesianProduct" not in plan
